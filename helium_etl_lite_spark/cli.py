@@ -44,7 +44,7 @@ import sys
 import time
 import tomllib
 
-from .etl.pipeline import FollowerConfig, IncrementalFollower
+from .etl.pipeline import CursorStore, FollowerConfig, IncrementalFollower, read_cursor
 from .etl.schemas import (
     BLOCK_SCHEMA,
     REWARDS_OUT_SCHEMA,
@@ -132,28 +132,16 @@ def _catch_up(spark, cfg) -> tuple[int, tuple[int, int]]:
     """One catch-up pass via the configured source: live JSON-RPC when
     node_addr is set (reference settings.node_addr, src/settings.rs:33),
     landed block files otherwise. Returns (blocks loaded, cursor)."""
+    config = _follower_config(cfg)
     if "node_addr" in cfg:
-        from .etl.pipeline import CursorStore, rpc_catch_up
+        from .etl.pipeline import rpc_catch_up
         from .sources.block_source import HttpRpcClient
 
         client = HttpRpcClient(str(cfg["node_addr"]))
-        fc = _follower_config(cfg)
-        n = rpc_catch_up(spark, client, fc, filters=_filters(spark, cfg))
-        if fc.atomic:
-            from .etl.snapshot import SnapshotStore
-
-            m = SnapshotStore(fc.out_dir).current()
-            return n, (None if m is None else (m["height"], m["first_block"]))
-        cur = CursorStore(spark, os.path.join(str(cfg["out_dir"]), "_meta", "follower_info")).read()
-        return n, cur
-    f = _follower(spark, cfg)
-    n = f.catch_up()
-    if f.config.atomic:
-        from .etl.snapshot import SnapshotStore
-
-        m = SnapshotStore(f.config.out_dir).current()
-        return n, (None if m is None else (m["height"], m["first_block"]))
-    return n, f.cursor.read()
+        n = rpc_catch_up(spark, client, config, filters=_filters(spark, cfg))
+    else:
+        n = _follower(spark, cfg).catch_up()
+    return n, read_cursor(config.out_dir, config.atomic)
 
 
 def cmd_migrate(spark, cfg, log=None) -> None:
@@ -253,10 +241,8 @@ def cmd_status(cfg, log=None) -> dict:
     follower_info peek, src/follower.rs:123-142, plus the physical
     inventory an operator actually wants): cursor position, sink mode,
     snapshot version, and per-table partition/file/byte counts. Atomic
-    sinks read everything from the manifest; plain sinks read the
-    cursor with pyarrow and walk the table dirs."""
-    import pyarrow.parquet as pq
-
+    sinks read everything from the manifest; plain sinks read the JSON
+    cursor record (CursorStore) and walk the table dirs."""
     from .etl.snapshot import SnapshotStore
 
     out = str(cfg["out_dir"])
@@ -292,22 +278,7 @@ def cmd_status(cfg, log=None) -> dict:
         }
     else:
         status["sink"] = "plain"
-        cursor_dir = os.path.join(out, "_meta", "follower_info")
-        # Mirror CursorStore.read() (etl/pipeline.py): during the
-        # two-rename cursor swap (or after a crash between renames) the
-        # live cursor sits in follower_info.old — falling back there
-        # keeps status truthful instead of reporting null (r7 ADVICE).
-        status["height"] = None
-        status["first_block"] = None
-        for d in (cursor_dir, cursor_dir + ".old"):
-            try:
-                t = pq.read_table(d)
-            except (FileNotFoundError, OSError):
-                continue
-            if t.num_rows:
-                status["height"] = int(t.column("height")[0].as_py())
-                status["first_block"] = int(t.column("first_block")[0].as_py())
-                break
+        status["height"], status["first_block"] = CursorStore(out).read() or (None, None)
         status["tables"] = {}
         for table in ("rewards", "transactions"):
             tdir = os.path.join(out, table)
@@ -342,21 +313,23 @@ def cmd_vacuum(cfg, keep_versions: int, log=None) -> list[str]:
 def cmd_compact(spark, cfg, target_mb: int = 128, log=None) -> dict:
     """Maintenance: merge the small files the append loop accumulates
     (one batch per pass — the parquet analog of the reference's
-    one-INSERT-per-block append, src/reward.rs:38-44). Honors the sink
-    mode: atomic=true compacts via a new snapshot version (committed
-    partitions only, readers never torn, needs a later vacuum);
-    otherwise per-partition in-place rewrite of the plain layout.
-    Single-writer contract either way: don't run concurrently with the
-    follower."""
+    one-INSERT-per-block append, src/reward.rs:38-44). Honors the sink,
+    detected from the store so the config needs only out_dir: a
+    snapshot store (`_snapshots/CURRENT` exists) compacts via a new
+    snapshot version (committed partitions only, readers never torn,
+    needs a later vacuum); otherwise per-partition in-place rewrite of
+    the plain layout. Single-writer contract either way: don't run
+    concurrently with the follower."""
     from .etl.compact import compact_partitioned_table, compact_snapshot
+    from .etl.snapshot import SnapshotStore
 
     log = log or setup_logger(cfg)
     out = str(cfg["out_dir"])
     target = int(target_mb) * 1024 * 1024
-    if bool(cfg.get("atomic", False)):
+    if SnapshotStore(out).current_version() is not None:
         manifest = compact_snapshot(spark, out, target_file_bytes=target)
         if manifest is None:
-            log.info("compact: nothing to compact (or no snapshot store)")
+            log.info("compact: nothing to compact")
             return {}
         log.info(f"compact: published snapshot version {manifest['version']}")
         return manifest

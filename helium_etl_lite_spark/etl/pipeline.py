@@ -15,10 +15,15 @@ Differences by design (Spark-first, not a translation):
   A crash between data and cursor replays the range — idempotent, so
   the result converges. On Delta/Iceberg the same code path becomes a
   single multi-table transaction.
+- The cursor (the reference's one follower_info row) is one JSON record
+  published with one durable rename (CursorStore) — no Spark job, and
+  no instant at which it is missing. read_cursor() answers "where is
+  the follower" for either sink, the one the config selects.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
 
@@ -26,7 +31,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import FOLLOWER_INFO_SCHEMA, REWARDS_V2_FIELDS_SCHEMA
+from .schemas import REWARDS_V2_FIELDS_SCHEMA
+from .snapshot import SnapshotStore, commit_batch_atomic, durable_replace
 from .transforms import build_outputs
 
 # Output tables are partitioned by block: dynamic partition overwrite
@@ -61,7 +67,7 @@ def write_block_range_idempotent(
     reference's per-block BEGIN..COMMIT, src/follower.rs:100, at range
     granularity). Multi-partition overwrite is not atomic on plain
     parquet — a transactional table format (Delta/Iceberg) upgrades that
-    without changing this dataflow; until then read_committed() below
+    without changing this dataflow; until then bound_by_cursor() below
     gives readers the cursor-bounded consistent view.
 
     What counts as "claimed" matters for correctness:
@@ -150,10 +156,11 @@ def write_block_range_idempotent(
         fs.delete(hpath, True)
 
 
-def read_committed(
-    spark: SparkSession, out_dir: str, table: str = "rewards", range_size: int = 1000
+def bound_by_cursor(
+    df: DataFrame, cursor: tuple[int, int] | None, range_size: int = 1000
 ) -> DataFrame:
-    """The consistent-read view: rows at or below the committed cursor.
+    """The consistent-read view: `df`'s rows at or below `cursor`'s
+    height; no rows when there is no cursor.
 
     Data lands BEFORE the cursor advances, so between the two writes a
     raw reader could observe blocks beyond the cursor (the reference's
@@ -161,12 +168,13 @@ def read_committed(
     restores the reference's visibility rule — readers never see a
     block the follower hasn't committed — and the predicate prunes
     `block_range` partitions, so it costs a metadata lookup, not a scan.
+    A caller serving several tables reads the cursor once and bounds
+    every table with it, so no commit landing in between can give the
+    tables different heights.
     """
-    cur = CursorStore(spark, os.path.join(out_dir, "_meta", "follower_info")).read()
-    df = spark.read.parquet(os.path.join(out_dir, table))
-    if cur is None:
+    if cursor is None:
         return df.where(F.lit(False))
-    height = cur[0]
+    height = cursor[0]
     return df.where(F.col("block_range") <= height // range_size).where(
         F.col("block") <= height
     )
@@ -174,50 +182,93 @@ def read_committed(
 
 class CursorStore:
     """follower_info analog (reference migrations/V2, src/follower.rs:115-142):
-    single-row (height, first_block) table, persisted as parquet.
+    the plain sink's single (height, first_block) row, kept as one JSON
+    record at `<out_dir>/_meta/follower_info.json`. Reading and writing
+    it start no Spark job.
 
-    Crash-safe on a local/POSIX filesystem: `overwrite` alone deletes
-    the directory before rewriting it, so a crash mid-write loses the
-    cursor entirely (and a backfill=False restart would silently re-seed
-    at tip, skipping every block in between). Instead the new cursor is
-    written to a `.tmp` directory and published with two renames
-    (current → `.old`, `.tmp` → current); at every instant at least one
-    of current/.old holds a complete previous cursor, and read() falls
-    back to `.old` for the microsecond rename window. (On an object
-    store, swap this for a conditional-put of a single manifest file.)
+    write() publishes through snapshot.durable_replace (tmp file, fsync,
+    os.replace, directory fsync), so at every instant the record holds a
+    complete cursor, old or new, and survives a power cut once write()
+    returns. A crash before the rename leaves a stale `.tmp` beside the
+    previous cursor; the next write() overwrites it. (On an object
+    store, swap the rename for a conditional PUT of the record.)
     """
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def _read_dir(self, path: str) -> tuple[int, int] | None:
-        try:
-            rows = self.spark.read.schema(FOLLOWER_INFO_SCHEMA).parquet(path).collect()
-        except Exception:
-            return None
-        if not rows:
-            return None
-        return rows[0]["height"], rows[0]["first_block"]
+    def __init__(self, out_dir: str):
+        self.path = os.path.join(out_dir, "_meta", "follower_info.json")
 
     def read(self) -> tuple[int, int] | None:
-        got = self._read_dir(self.path)
-        if got is not None:
-            return got
-        return self._read_dir(self.path + ".old")
+        try:
+            with open(self.path) as f:
+                rec = json.load(f)
+        except FileNotFoundError:
+            return None
+        return rec["height"], rec["first_block"]
 
     def write(self, height: int, first_block: int) -> None:
-        import shutil
+        os.makedirs(os.path.dirname(self.path), exist_ok=True)
+        durable_replace(
+            self.path,
+            json.dumps({"height": int(height), "first_block": int(first_block)}),
+        )
 
-        tmp, old = self.path + ".tmp", self.path + ".old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        df = self.spark.createDataFrame([(height, first_block)], FOLLOWER_INFO_SCHEMA)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+
+def read_cursor(out_dir: str, atomic: bool) -> tuple[int, int] | None:
+    """The committed (height, first_block) of the sink `atomic` selects:
+    the snapshot manifest's cursor (atomic) or CursorStore's (plain),
+    never the other sink's, so a follower switched to a new sink on an
+    old store starts that sink afresh instead of continuing from a
+    cursor whose data the new sink does not hold. None when that sink
+    has no cursor yet."""
+    if atomic:
+        m = SnapshotStore(out_dir).current()
+        return None if m is None else (m["height"], m["first_block"])
+    return CursorStore(out_dir).read()
+
+
+def _recover_from_output(spark: SparkSession, out_dir: str) -> tuple[int, int] | None:
+    """(max, min) landed block of a plain store's rewards table; None
+    when nothing landed."""
+    try:
+        landed = spark.read.parquet(os.path.join(out_dir, "rewards"))
+        row = landed.agg(F.max("block").alias("mx"), F.min("block").alias("mn")).collect()[0]
+    except Exception:
+        return None
+    if row["mx"] is None:
+        return None
+    return int(row["mx"]), int(row["mn"])
+
+
+def _open_cursor(spark: SparkSession, config: FollowerConfig, probe_first) -> tuple[int, int]:
+    """The follower's starting cursor (reference src/follower.rs:27-41):
+    the configured sink's committed cursor; else, on the plain sink,
+    the one recovered from landed data; else a new cursor at
+    probe_first()-1, so the first processed block is probe_first()
+    (reference src/follower.rs:37).
+
+    Recovery covers a lost cursor over landed data (a store written
+    before the JSON cursor record, or a deleted _meta): re-seeding at
+    tip instead would silently skip every block between the lost cursor
+    and the tip. Re-deriving can only UNDER-estimate (filters mode drops
+    rewardless blocks), and replay of those blocks is idempotent. The
+    atomic sink has no such path: unpublished data is invisible by
+    construction, so the manifest IS the only truth."""
+    cur = read_cursor(config.out_dir, config.atomic)
+    if cur is not None:
+        return cur
+    if not config.atomic:
+        cur = _recover_from_output(spark, config.out_dir)
+        if cur is not None:
+            CursorStore(config.out_dir).write(*cur)
+            return cur
+    first = probe_first()
+    if config.atomic:
+        SnapshotStore(config.out_dir).publish(
+            {"version": 1, "height": first - 1, "first_block": first, "tables": {}}
+        )
+    else:
+        CursorStore(config.out_dir).write(first - 1, first)
+    return first - 1, first
 
 
 @dataclass
@@ -258,59 +309,16 @@ class IncrementalFollower:
         self.txns = txns
         self.config = config
         self.filters = filters
-        self.cursor = CursorStore(spark, os.path.join(config.out_dir, "_meta", "follower_info"))
+        self.cursor = CursorStore(config.out_dir)
 
     # -- cursor init (reference src/follower.rs:27-41) ------------------
     def init_cursor(self) -> tuple[int, int]:
-        if self.config.atomic:
-            from .snapshot import SnapshotStore
-
-            m = SnapshotStore(self.config.out_dir).current()
-            if m is not None:
-                return m["height"], m["first_block"]
-            # No lost-cursor recovery path: unpublished data is invisible
-            # by construction, so the manifest IS the only truth.
+        def first() -> int:
             if self.config.backfill:
-                first = get_first_block(self.spark, self.blocks, self.txns)
-            else:
-                first = self._tip()
-            SnapshotStore(self.config.out_dir).publish(
-                {"version": 1, "height": first - 1, "first_block": first, "tables": {}}
-            )
-            return first - 1, first
-        existing = self.cursor.read()
-        if existing is not None:
-            return existing
-        # Cursor lost but data landed (e.g. the pre-atomic-write store
-        # died mid-overwrite): re-derive the position from the output
-        # table instead of re-seeding at tip, which would silently skip
-        # every block between the lost cursor and the tip. Re-deriving
-        # can only UNDER-estimate (filters mode drops rewardless
-        # blocks), and replay of those blocks is idempotent.
-        recovered = self._recover_from_output()
-        if recovered is not None:
-            self.cursor.write(*recovered)
-            return recovered
-        if self.config.backfill:
-            first = get_first_block(self.spark, self.blocks, self.txns)
-        else:
-            first = self._tip()
-        # cursor starts at first-1 so the first processed block is
-        # `first` (reference src/follower.rs:37).
-        self.cursor.write(first - 1, first)
-        return first - 1, first
+                return get_first_block(self.spark, self.blocks, self.txns)
+            return self._tip()
 
-    def _recover_from_output(self) -> tuple[int, int] | None:
-        try:
-            landed = self.spark.read.parquet(os.path.join(self.config.out_dir, "rewards"))
-            row = landed.agg(
-                F.max("block").alias("mx"), F.min("block").alias("mn")
-            ).collect()[0]
-        except Exception:
-            return None
-        if row["mx"] is None:
-            return None
-        return int(row["mx"]), int(row["mn"])
+        return _open_cursor(self.spark, self.config, first)
 
     def _tip(self) -> int:
         # E1: chain-tip probe (reference src/follower.rs:76).
@@ -348,8 +356,6 @@ class IncrementalFollower:
     def _commit_range_atomic(self, lo: int, hi: int, first_block: int) -> None:
         # E14-E18 as ONE transaction: every output table and the cursor
         # advance publish together in the manifest swap.
-        from .snapshot import commit_batch_atomic
-
         blocks = self.blocks.where(F.col("height").between(lo, hi))
         out = build_outputs(self.config.mode, blocks, self.txns, self.filters)
         tables = {"rewards": out["rewards"]}
@@ -458,30 +464,11 @@ def rpc_catch_up(
     catching up from far behind."""
     from ..sources.block_source import RpcBlockSource
 
-    if config.atomic:
-        # Cursor truth lives in the snapshot manifest; the per-batch
-        # writes below go through the follower, which commits
-        # data+cursor atomically (run_once → _commit_range_atomic).
-        from .snapshot import SnapshotStore
-
-        sstore = SnapshotStore(config.out_dir)
-        m = sstore.current()
-        if m is None:
-            first = rpc_get_first_block(client) if config.backfill else client.height()
-            sstore.publish(
-                {"version": 1, "height": first - 1, "first_block": first, "tables": {}}
-            )
-            cur = (first - 1, first)
-        else:
-            cur = (m["height"], m["first_block"])
-    else:
-        store = CursorStore(spark, os.path.join(config.out_dir, "_meta", "follower_info"))
-        cur = store.read()
-        if cur is None:
-            first = rpc_get_first_block(client) if config.backfill else client.height()
-            store.write(first - 1, first)  # cursor = first-1 (src/follower.rs:37)
-            cur = (first - 1, first)
-    height, _first = cur
+    height, _first = _open_cursor(
+        spark,
+        config,
+        lambda: rpc_get_first_block(client) if config.backfill else client.height(),
+    )
     total = 0
     tip = client.height()
     while tip > height:

@@ -4,11 +4,13 @@ stretch item): a minimal snapshot-manifest table format.
 The reference gets per-block atomicity from a Postgres transaction that
 writes rewards/transactions AND advances follower_info together
 (src/follower.rs:100, src/block_processor.rs:44-47). The plain-parquet
-sink orders data-write → cursor-write and relies on idempotent replay,
-which leaves a window where a RAW reader sees data ahead of the cursor
-(read_committed() masks it). This module closes that window the way
-modern lakehouse formats do (Delta's _delta_log, Iceberg's metadata
-pointer), scaled down to exactly what the follower needs:
+sink makes two publishes: the data write, then the cursor record
+(etl/pipeline.py CursorStore, one `durable_replace` of a JSON file),
+and relies on idempotent replay, which leaves a window where a RAW
+reader sees data ahead of the cursor (bound_by_cursor() masks it). This
+module closes that window the way modern lakehouse formats do (Delta's
+_delta_log, Iceberg's metadata pointer), scaled down to exactly what
+the follower needs:
 
 - Data files are APPEND-ONLY under versioned partition directories:
       {root}/{table}/v={version}/block_range={r}/part-*.parquet
@@ -20,11 +22,12 @@ pointer), scaled down to exactly what the follower needs:
   owns it, AND carries the cursor:
       {"version": 7, "height": 1099, "first_block": 1000,
        "tables": {"rewards": {"0": 3, "1": 7}, ...}}
-  `_snapshots/CURRENT` names the live version and is published with an
-  atomic `os.replace` — the ONLY mutation in the whole commit. Data and
-  cursor therefore become visible in the same instant: the reference's
-  BEGIN..COMMIT, as one rename. (POSIX/HDFS rename is atomic; on S3
-  swap the pointer swap for a conditional PUT of CURRENT.)
+  `_snapshots/CURRENT` names the live version and is published with
+  `durable_replace` (an fsync'd atomic `os.replace`) — the ONLY
+  mutation in the whole commit. Data and cursor therefore become
+  visible in the same instant: the reference's BEGIN..COMMIT, as one
+  rename. (POSIX/HDFS rename is atomic; on S3 swap the pointer swap for
+  a conditional PUT of CURRENT.)
 
 - Deleting a partition whose blocks were all replayed-away is METADATA
   ONLY: the key leaves the manifest; the files get vacuumed later. The
@@ -55,6 +58,30 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def durable_replace(path: str, text: str) -> None:
+    """Publish `text` as the whole content of `path` in one atomic,
+    durable step: write `path.tmp`, fsync it (the rename must not
+    promote an unflushed file), `os.replace` it over `path`, then fsync
+    the directory (the rename entry itself is not durable until the
+    parent flushes — a power cut could resurrect the old content).
+    Readers see the old or the new content, never a torn one; a crash
+    before the rename leaves only a stale `.tmp` that the next call
+    overwrites. Shared by SnapshotStore's CURRENT swap, the follower
+    cursor (pipeline.CursorStore) and the streaming stores' CURRENT
+    pointers (streaming.mirror.write_pointer_atomic)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
 
 
 class ConcurrentSnapshotWriteError(RuntimeError):
@@ -188,12 +215,8 @@ class SnapshotStore:
             # collide with the real N+1 manifest (review find). The
             # commit is already visible; nothing left to do.
             return
-        cpath = os.path.join(self.dir, "CURRENT")
-        with open(cpath + ".tmp", "w") as f:
-            f.write(str(version))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(cpath + ".tmp", cpath)  # <- the transaction commits here
+        # the transaction commits here
+        durable_replace(os.path.join(self.dir, "CURRENT"), str(version))
 
     def vacuum(self, keep_versions: int = 2) -> list[str]:
         """Delete data directories no version in the keep-window

@@ -12,10 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..etl.schemas import SENTINEL
 from ..registry import query
 from ..tables import load_table
-
-SENTINEL = "1Wh4bh"  # "the hash for null" — reference README.md:111
 
 
 @query(

@@ -14,10 +14,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..etl.schemas import SENTINEL
 from ..registry import query
 from ..tables import Tables
-
-SENTINEL = "1Wh4bh"
 
 
 @query(

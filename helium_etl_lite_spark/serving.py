@@ -15,8 +15,9 @@ patterns each reference index was built for:
 | transactions_pkey (V3:43)         | transaction_by_hash         |
 | transaction_type/block (V3:46-47) | transactions_by_type        |
 
-Consistency: by default views are registered over read_committed(), so
-a query never observes blocks past the follower's cursor — the same
+Consistency: by default every view is bounded by ONE read of the
+follower's committed cursor (pipeline.bound_by_cursor), so a query never
+observes blocks past it and the views never disagree on it — the same
 isolation the reference gets from Postgres transactions. Pass
 committed=False for raw (uncommitted-tail-visible) reads.
 
@@ -32,10 +33,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .etl.pipeline import CursorStore, read_committed
-from .etl.schemas import FOLLOWER_INFO_SCHEMA
-
-SENTINEL = "1Wh4bh"
+from .etl.pipeline import CursorStore, bound_by_cursor
+from .etl.schemas import FOLLOWER_INFO_SCHEMA, SENTINEL
 
 
 def register_views(
@@ -88,6 +87,15 @@ def register_views(
             f"no snapshot version {at_version} at {out_dir} (vacuumed or never committed)"
         )
 
+    # One cursor read per call: the tables and follower_info are all
+    # bounded by it, so a follower commit landing mid-call cannot give
+    # them different heights. An atomic sink's cursor is the served
+    # manifest's own.
+    if snapshot_manifest is not None:
+        cur = (snapshot_manifest["height"], snapshot_manifest["first_block"])
+    else:
+        cur = CursorStore(out_dir).read()
+
     def load(table: str) -> DataFrame:
         if snapshot_manifest is not None:
             # Atomic-sink output: the manifest IS the committed view —
@@ -101,9 +109,8 @@ def register_views(
                     f"[PATH_NOT_FOUND] no committed snapshot entry for table {table}"
                 )
             return df
-        if committed:
-            return read_committed(spark, out_dir, table, range_size)
-        return spark.read.parquet(os.path.join(out_dir, table))
+        df = spark.read.parquet(os.path.join(out_dir, table))
+        return bound_by_cursor(df, cur, range_size) if committed else df
 
     views["rewards"] = load("rewards")
     # Only a missing table path means "mode produced no transactions";
@@ -119,10 +126,6 @@ def register_views(
         if not is_path_not_found(exc):
             raise
         # rewards/filters mode: no transactions table
-    if snapshot_manifest is not None:
-        cur = (snapshot_manifest["height"], snapshot_manifest["first_block"])
-    else:
-        cur = CursorStore(spark, os.path.join(out_dir, "_meta", "follower_info")).read()
     views["follower_info"] = spark.createDataFrame(
         [cur] if cur is not None else [], FOLLOWER_INFO_SCHEMA
     )

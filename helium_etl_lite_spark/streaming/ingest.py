@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..etl.pipeline import CursorStore, FollowerConfig, write_block_range_idempotent
+from ..etl.pipeline import CursorStore, FollowerConfig, read_cursor, write_block_range_idempotent
 from ..etl.schemas import BLOCK_SCHEMA
 from ..etl.transforms import build_outputs
 
@@ -46,8 +46,6 @@ def start_block_stream(
     reference's 10 s tick (src/main.rs:55) maps to
     trigger(processingTime='10 seconds').
     """
-    cursor = CursorStore(spark, os.path.join(config.out_dir, "_meta", "follower_info"))
-
     def process_batch(batch_blocks: DataFrame, batch_id: int) -> None:
         if batch_blocks.isEmpty():
             return
@@ -65,18 +63,20 @@ def start_block_stream(
         # span — a span-delete would wipe blocks another batch already
         # committed. So the idempotent write replaces per height SET.
         heights = batch_blocks.select(F.col("height").alias("block"))
+        # first_block = the first block actually processed (the batch
+        # MIN on the first batch — reference src/follower.rs:35-39),
+        # never the tip. The cursor only moves forward — a replayed old
+        # batch re-lands its data but cannot regress the height.
+        prev = read_cursor(config.out_dir, config.atomic)
+        first_block = prev[1] if prev else lo
+        height = max(tip, prev[0]) if prev else tip
         if config.atomic:
             # Exactly-once via transaction instead of idempotence: the
             # checkpoint replays a failed micro-batch, and the snapshot
             # sink makes the replayed commit a single manifest swap that
-            # lands data + cursor together (etl/snapshot.py). The cursor
-            # only moves forward — a replayed old batch re-lands its
-            # data but cannot regress the height.
-            from ..etl.snapshot import SnapshotStore, commit_batch_atomic
+            # lands data + cursor together (etl/snapshot.py).
+            from ..etl.snapshot import commit_batch_atomic
 
-            m = SnapshotStore(config.out_dir).current()
-            first_block = m["first_block"] if m else lo
-            new_height = max(tip, m["height"]) if m else tip
             tables = {"rewards": out["rewards"]}
             if "transactions" in out:
                 tables["transactions"] = out["transactions"].dropDuplicates(["hash"])
@@ -86,7 +86,7 @@ def start_block_stream(
                 tables,
                 lo,
                 tip,
-                height=new_height,
+                height=height,
                 first_block=first_block,
                 range_size=config.block_range_size,
                 heights=heights,
@@ -111,13 +111,9 @@ def start_block_stream(
                 config.block_range_size,
                 heights=heights,
             )
-        # cursor bump after data is durable (E18). first_block = the
-        # first block actually processed (the batch MIN on the first
-        # batch — reference src/follower.rs:35-39), never the tip.
-        prev = cursor.read()
-        first_block = prev[1] if prev else lo
+        # cursor bump after data is durable (E18)
         if prev is None or tip > prev[0]:
-            cursor.write(tip, first_block)
+            CursorStore(config.out_dir).write(height, first_block)
 
     stream = (
         spark.readStream.schema(BLOCK_SCHEMA)

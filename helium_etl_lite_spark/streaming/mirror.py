@@ -42,6 +42,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..etl.snapshot import durable_replace
+
 #: deltas allowed between full-snapshot compactions (chain length cap).
 COMPACT_EVERY = 8
 
@@ -84,28 +86,13 @@ def write_pointer_atomic(
 ) -> None:
     """Crash-safe CURRENT pointer commit shared by every versioned
     store (mirror, streaming curation): fsync the version's data tree
-    first (pass ``data_dir``), then write tmp, flush + fsync (the
-    rename must not promote an unflushed file — a crash would leave
-    CURRENT empty while the stream checkpoint has advanced, and earlier
-    batch_ids never replay), then atomic os.replace."""
+    first (pass ``data_dir``), then publish the pointer with
+    etl.snapshot.durable_replace — an unflushed or un-synced pointer
+    could come back empty or old after a crash while the stream
+    checkpoint has advanced, and earlier batch_ids never replay."""
     if data_dir is not None:
         _fsync_tree(data_dir)
-    tmp = _pointer_path(store_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _pointer_path(store_dir))
-    # fsync the DIRECTORY too: os.replace is atomic but the rename
-    # entry itself is not durable until the parent dir flushes — a
-    # power-cut after replace could resurrect the OLD pointer while
-    # the checkpoint has advanced (the same lost-batch class the file
-    # fsync closes).
-    dfd = os.open(store_dir, os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
+    durable_replace(_pointer_path(store_dir), str(batch_id))
 
 
 # ---------------------------------------------------------------------------

@@ -265,6 +265,29 @@ def test_compact_snapshot_sink(spark, chain_dirs, tmp_path):
     assert cli.cmd_compact(spark, {"out_dir": out, "atomic": True}, target_mb=128) == {}
 
 
+def test_compact_detects_snapshot_sink_from_store(spark, chain_dirs, tmp_path):
+    # Maintenance verbs need only out_dir: an out_dir-only config
+    # pointed at a snapshot store must run the snapshot compactor (the
+    # plain one finds no block_range dirs there and does nothing).
+    from helium_etl_lite_spark.etl.snapshot import SnapshotStore
+
+    bp, tp, _ = chain_dirs
+    out = str(tmp_path / "out")
+    cfg = cli.load_config(
+        write_config(
+            tmp_path / "s.toml", bp, tp, out, mode="rewards", backfill=True,
+            atomic=True, block_range_size=20,
+        )
+    )
+    cli.cmd_once(spark, cfg)
+    m1 = SnapshotStore(out).current()
+    r, ver = next(iter(m1["tables"]["rewards"].items()))
+    _fragment(os.path.join(out, "rewards", f"v={ver}", f"block_range={r}"))
+    got = cli.cmd_compact(spark, {"out_dir": out}, target_mb=128)
+    assert got["version"] == m1["version"] + 1
+    assert SnapshotStore(out).current_version() == m1["version"] + 1
+
+
 def test_compact_crash_recovery(spark, chain_dirs, tmp_path):
     # plain-mode swap interrupted between the two renames: data sits in
     # .__compact_old and the partition dir is missing. The next run
@@ -393,8 +416,8 @@ def test_sql_changes_since_registers_cdc_views(spark, tmp_path, capsys):
 
 
 def test_status_reports_both_sink_modes(spark, chain_dirs, tmp_path, capsys):
-    # `status` works WITHOUT a SparkSession: plain sinks read the
-    # cursor via pyarrow + walk partition dirs; atomic sinks read
+    # `status` works WITHOUT a SparkSession: plain sinks read the JSON
+    # cursor record + walk partition dirs; atomic sinks read
     # everything from the manifest.
     import logging
 
@@ -418,27 +441,3 @@ def test_status_reports_both_sink_modes(spark, chain_dirs, tmp_path, capsys):
             assert st["snapshot_version"] >= 1
         printed = capsys.readouterr().out
         assert '"height": 1059' in printed
-
-def test_status_falls_back_to_old_cursor_dir(spark, chain_dirs, tmp_path, capsys):
-    # Mid-swap crash window: CursorStore.write renames the live cursor
-    # to follower_info.old before promoting the new one. status must
-    # read the .old cursor instead of reporting null (r7 ADVICE —
-    # mirrors CursorStore.read()).
-    import logging
-    import os
-    import shutil
-
-    bp, tp, _ = chain_dirs
-    out = str(tmp_path / "p")
-    cfg = cli.load_config(
-        write_config(
-            tmp_path / "s.toml", bp, tp, out, mode="rewards",
-            backfill=True, atomic=False, block_range_size=20,
-        )
-    )
-    cli.cmd_once(spark, cfg)
-    cur = os.path.join(out, "_meta", "follower_info")
-    shutil.move(cur, cur + ".old")
-    capsys.readouterr()
-    st = cli.cmd_status({"out_dir": out}, log=logging.getLogger("t"))
-    assert st["height"] == 1059 and st["first_block"] == 1000

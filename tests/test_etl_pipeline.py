@@ -194,7 +194,7 @@ class TestStreamingTwin:
             want.select("block", "account", "gateway", "amount", "type")
         ).count() == 0
         # cursor reached the tip
-        cur = CursorStore(spark, os.path.join(out_dir, "_meta", "follower_info")).read()
+        cur = CursorStore(out_dir).read()
         assert cur[0] == 1119
 
 
@@ -280,35 +280,19 @@ class TestRangeIdempotentWriter:
 
 
 class TestCursorCrashSafety:
-    def test_write_survives_rename_window(self, spark, tmp_path):
-        # After any write, at least one of current/.old is a complete
-        # cursor: simulate the crash between the two renames (current
-        # already moved to .old, tmp not yet published).
-        path = str(tmp_path / "cur")
-        store = CursorStore(spark, path)
-        store.write(100, 1)
-        store.write(200, 1)
-        assert store.read() == (200, 1)
-        os.rename(path, path + ".old")  # crash window: no current dir
-        assert store.read() == (200, 1)  # falls back to .old
-        store.write(300, 1)  # next write recovers cleanly
-        assert store.read() == (300, 1)
-
     def test_lost_cursor_recovers_from_landed_data(self, spark, chain, tmp_path):
-        import shutil
-
         blocks, txns = chain
         out_dir = str(tmp_path / "out")
         cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir)
         f = IncrementalFollower(spark, blocks, txns, cfg)
         f.catch_up()
         before = spark.read.parquet(os.path.join(out_dir, "rewards")).count()
-        # cursor destroyed entirely (the failure mode of a plain
-        # overwrite store): init must re-derive from max(block) of the
+        # cursor record gone (a store written before the JSON cursor,
+        # or a lost _meta): init must re-derive from max(block) of the
         # landed table, NOT re-seed at tip and skip the gap. Recovery
         # may UNDER-estimate (trailing blocks with no rewards rows);
         # the idempotent replay of that tail converges.
-        shutil.rmtree(os.path.join(out_dir, "_meta", "follower_info"))
+        os.remove(CursorStore(out_dir).path)
         f2 = IncrementalFollower(spark, blocks, txns, cfg)
         height, first = f2.init_cursor()
         # both bounds re-derived from landed rows, so approximate: height
@@ -322,30 +306,35 @@ class TestCursorCrashSafety:
 
     def test_readers_never_see_past_cursor(self, spark, chain, tmp_path):
         # Kill-between-writes: data for (cursor, tip] is durable but the
-        # cursor bump never happened. read_committed must keep showing
-        # the pre-crash snapshot; after replay+bump the rows appear.
-        from helium_etl_lite_spark.etl.pipeline import read_committed
+        # cursor bump never happened. The cursor-bounded view must keep
+        # showing the pre-crash snapshot; after replay+bump the rows appear.
+        from helium_etl_lite_spark.etl.pipeline import bound_by_cursor
 
         blocks, txns = chain
         out_dir = str(tmp_path / "out")
         cfg = FollowerConfig(
             mode="rewards", backfill=True, out_dir=out_dir, max_blocks_per_batch=60
         )
+
+        def committed():
+            raw = spark.read.parquet(os.path.join(out_dir, "rewards"))
+            return bound_by_cursor(raw, CursorStore(out_dir).read())
+
         f = IncrementalFollower(spark, blocks, txns, cfg)
         assert f.run_once() == 60  # blocks 1000..1059 committed
-        committed_before = read_committed(spark, out_dir).count()
+        committed_before = committed().count()
         assert committed_before > 0
         # simulate the crash: land the next range's data WITHOUT the
         # cursor write
         f._process_range(1060, 1119)
         raw = spark.read.parquet(os.path.join(out_dir, "rewards"))
         assert raw.where(F.col("block") > 1059).count() > 0  # data visible raw
-        got = read_committed(spark, out_dir)
+        got = committed()
         assert got.count() == committed_before  # but not to committed readers
         assert got.where(F.col("block") > 1059).count() == 0
         # replay converges and publishes
         assert f.catch_up() == 60
-        assert read_committed(spark, out_dir).where(F.col("block") > 1059).count() > 0
+        assert committed().where(F.col("block") > 1059).count() > 0
 
 
 class TestFailStopParity:

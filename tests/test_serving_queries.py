@@ -131,6 +131,29 @@ class TestServingModule:
         got = rv2.select("field").first()
         assert got["field"] is not None and got["field"].isdigit()
 
+    def test_views_share_one_cursor_read(self, spark, served, monkeypatch):
+        # A follower commit landing between cursor reads must not bound
+        # rewards, transactions and follower_info by different heights:
+        # register_views reads the cursor once per call. Each read here
+        # returns a later height, as if a commit had landed before it.
+        from helium_etl_lite_spark import serving
+        from helium_etl_lite_spark.etl.pipeline import CursorStore
+
+        _, _, out_dir = served
+        heights = iter([1059, 1089, 1119])
+        calls = []
+
+        def read(self):
+            calls.append(self)
+            return next(heights), 1000
+
+        monkeypatch.setattr(CursorStore, "read", read)
+        views = serving.register_views(spark, out_dir)
+        assert len(calls) == 1
+        assert [tuple(r) for r in views["follower_info"].collect()] == [(1059, 1000)]
+        for table in ("rewards", "transactions"):
+            assert views[table].agg(F.max("block")).first()[0] <= 1059
+
     def test_committed_views_hide_uncommitted_tail(self, spark, tmp_path):
         from helium_etl_lite_spark import serving
         from helium_etl_lite_spark.etl import fixtures

@@ -161,6 +161,37 @@ class TestHttpRpc:
         finally:
             srv.shutdown()
 
+    def test_rpc_follow_recovers_lost_cursor_from_landed_data(self, spark, tmp_path):
+        # A plain store whose cursor record is gone (written before the
+        # JSON cursor, or a lost _meta) must resume from the landed
+        # height, not re-seed at the tip and skip the blocks in between.
+        from helium_etl_lite_spark.etl.pipeline import (
+            CursorStore,
+            FollowerConfig,
+            IncrementalFollower,
+            rpc_catch_up,
+        )
+
+        blocks, txns, blocks_by_h, txns_by_hash = _chain_as_dicts(spark)
+        out_dir = str(tmp_path / "out")
+        landed = FollowerConfig(
+            mode="rewards", backfill=True, out_dir=out_dir, max_blocks_per_batch=30
+        )
+        IncrementalFollower(spark, blocks, txns, landed).run_once()  # 1000..1029
+        height = spark.read.parquet(os.path.join(out_dir, "rewards")).agg(
+            F.max("block")
+        ).collect()[0][0]
+        assert height <= 1029  # the last landed rewards block
+        os.remove(CursorStore(out_dir).path)
+        client = FakeRpcClient(blocks_by_h, txns_by_hash)
+        cfg = FollowerConfig(mode="rewards", backfill=False, out_dir=out_dir)
+        assert rpc_catch_up(spark, client, cfg) == 1039 - height
+        assert CursorStore(out_dir).read()[0] == 1039
+        want = transforms.build_outputs("rewards", blocks, txns)["rewards"]
+        got = spark.read.parquet(os.path.join(out_dir, "rewards"))
+        assert got.count() == want.count()
+        assert got.select(*want.columns).exceptAll(want).count() == 0
+
     def test_start_survives_rpc_failures(self, spark, tmp_path, caplog):
         # A flaky node must not kill the follow loop: the pass fails,
         # logs, and retries next tick (reference src/follower.rs:86-93).
