@@ -13,6 +13,12 @@ Commands:
             transactions / follower_info — what a reference user does
             with psql against the Postgres tables):
             ... sql --config settings.toml -e "SELECT ..."
+  status    cursor, snapshot version and per-table file counts (no Spark)
+  compact   merge small files into a new snapshot version
+  vacuum    delete data no kept snapshot version references — the
+            follower's disk maintenance: every commit that touches a
+            block range writes a new copy of it and keeps the old one
+            for older-snapshot readers until vacuum runs
 
 Config (TOML, reference settings.toml keys where they translate):
   node_addr                 live blockchain-node JSON-RPC endpoint
@@ -20,7 +26,9 @@ Config (TOML, reference settings.toml keys where they translate):
                             chain via HttpRpcClient when set
   blocks_path / txns_path   parquet or JSON-lines chain source (landed
                             block data; used when node_addr is absent)
-  out_dir                   output tables root (database_url analog)
+  out_dir                   snapshot store root (database_url analog):
+                            data and cursor commit together in one
+                            manifest rename (etl/snapshot.py)
   mode                      rewards | full | filters
   backfill                  true/false (same semantics as reference)
   filters_path              parquet with (type, value) for filters mode
@@ -44,7 +52,7 @@ import sys
 import time
 import tomllib
 
-from .etl.pipeline import CursorStore, FollowerConfig, IncrementalFollower, read_cursor
+from .etl.pipeline import CursorStore, FollowerConfig, IncrementalFollower
 from .etl.schemas import (
     BLOCK_SCHEMA,
     REWARDS_OUT_SCHEMA,
@@ -115,9 +123,6 @@ def _follower_config(cfg) -> FollowerConfig:
         out_dir=str(cfg["out_dir"]),
         max_blocks_per_batch=cfg.get("max_blocks_per_batch"),
         block_range_size=int(cfg.get("block_range_size", 1000)),
-        # atomic = true switches to the snapshot-manifest sink: data +
-        # cursor publish in one rename (etl/snapshot.py).
-        atomic=bool(cfg.get("atomic", False)),
     )
 
 
@@ -141,7 +146,7 @@ def _catch_up(spark, cfg) -> tuple[int, tuple[int, int]]:
         n = rpc_catch_up(spark, client, config, filters=_filters(spark, cfg))
     else:
         n = _follower(spark, cfg).catch_up()
-    return n, read_cursor(config.out_dir, config.atomic)
+    return n, CursorStore(config.out_dir).read()
 
 
 def cmd_migrate(spark, cfg, log=None) -> None:
@@ -214,8 +219,8 @@ def cmd_sql(
     change_key_cols: list[str] | None = None,
 ) -> int:
     """Serving-layer escape hatch: register the output tables under the
-    reference's names (cursor-bounded committed view; --at-version
-    time-travels an atomic sink; --changes-since N adds
+    reference's names (the committed snapshot; --at-version
+    time-travels to an older one; --changes-since N adds
     `<table>_changes` CDC views diffing version N -> the served one;
     --key-cols upgrades those views to the KEYED feed with
     update_preimage/update_postimage pairing) and run one SQL
@@ -239,14 +244,17 @@ def cmd_sql(
 def cmd_status(cfg, log=None) -> dict:
     """Operational status without a SparkSession (the reference's
     follower_info peek, src/follower.rs:123-142, plus the physical
-    inventory an operator actually wants): cursor position, sink mode,
-    snapshot version, and per-table partition/file/byte counts. Atomic
-    sinks read everything from the manifest; plain sinks read the JSON
-    cursor record (CursorStore) and walk the table dirs."""
+    inventory an operator actually wants): cursor position, snapshot
+    version, and per-table partition/file/byte counts, all from the
+    CURRENT manifest. Every field but out_dir is None (tables empty)
+    when out_dir holds no snapshot store."""
     from .etl.snapshot import SnapshotStore
 
     out = str(cfg["out_dir"])
-    status: dict = {"out_dir": out}
+    status: dict = {
+        "out_dir": out, "snapshot_version": None, "height": None,
+        "first_block": None, "tables": {},
+    }
 
     def table_stats(paths: list[str]) -> dict:
         n_files = 0
@@ -260,10 +268,8 @@ def cmd_status(cfg, log=None) -> dict:
                     n_bytes += os.path.getsize(os.path.join(p, f))
         return {"n_partitions": len(paths), "n_files": n_files, "n_bytes": n_bytes}
 
-    store = SnapshotStore(out)
-    m = store.current()
+    m = SnapshotStore(out).current()
     if m is not None:
-        status["sink"] = "atomic"
         status["snapshot_version"] = m["version"]
         status["height"] = m["height"]
         status["first_block"] = m["first_block"]
@@ -276,33 +282,24 @@ def cmd_status(cfg, log=None) -> dict:
             )
             for t, parts in m["tables"].items()
         }
-    else:
-        status["sink"] = "plain"
-        status["height"], status["first_block"] = CursorStore(out).read() or (None, None)
-        status["tables"] = {}
-        for table in ("rewards", "transactions"):
-            tdir = os.path.join(out, table)
-            if os.path.isdir(tdir):
-                parts = [
-                    os.path.join(tdir, d)
-                    for d in os.listdir(tdir)
-                    if d.startswith("block_range=")
-                ]
-                status["tables"][table] = table_stats(parts)
     print(json.dumps(status, indent=1, sort_keys=True))
-    (log or setup_logger(cfg)).info(f"status: {status['sink']} sink at {out}")
+    (log or setup_logger(cfg)).info(
+        f"status: snapshot version {status['snapshot_version']} at {out}"
+    )
     return status
 
 
 def cmd_vacuum(cfg, keep_versions: int, log=None) -> list[str]:
-    """Reclaim snapshot-sink data directories no kept version references
-    (atomic = true sinks only). Needs no SparkSession — pure manifest
-    bookkeeping."""
+    """Reclaim disk: delete the data directories no kept snapshot
+    version references. The follower's commits and `compact` leave each
+    superseded copy of a block range in place for older-snapshot
+    readers, so disk use grows until this runs. Needs no SparkSession —
+    pure manifest bookkeeping."""
     from .etl.snapshot import SnapshotStore
 
     store = SnapshotStore(str(cfg["out_dir"]))
     if store.current_version() is None:
-        raise SystemExit("vacuum: no snapshot store at out_dir (atomic sink only)")
+        raise SystemExit("vacuum: no snapshot store at out_dir")
     removed = store.vacuum(keep_versions=keep_versions)
     (log or setup_logger(cfg)).info(
         f"vacuum: removed {len(removed)} version dirs (kept last {keep_versions})"
@@ -313,36 +310,23 @@ def cmd_vacuum(cfg, keep_versions: int, log=None) -> list[str]:
 def cmd_compact(spark, cfg, target_mb: int = 128, log=None) -> dict:
     """Maintenance: merge the small files the append loop accumulates
     (one batch per pass — the parquet analog of the reference's
-    one-INSERT-per-block append, src/reward.rs:38-44). Honors the sink,
-    detected from the store so the config needs only out_dir: a
-    snapshot store (`_snapshots/CURRENT` exists) compacts via a new
-    snapshot version (committed partitions only, readers never torn,
-    needs a later vacuum); otherwise per-partition in-place rewrite of
-    the plain layout. Single-writer contract either way: don't run
-    concurrently with the follower."""
-    from .etl.compact import compact_partitioned_table, compact_snapshot
-    from .etl.snapshot import SnapshotStore
+    one-INSERT-per-block append, src/reward.rs:38-44) into a new
+    snapshot version (committed partitions only, readers never torn).
+    The superseded files stay until `vacuum` reclaims them. The config
+    needs only out_dir. Single-writer contract: don't run concurrently
+    with the follower. Returns the published manifest, or {} when
+    nothing needed compaction."""
+    from .etl.compact import compact_snapshot
 
     log = log or setup_logger(cfg)
-    out = str(cfg["out_dir"])
-    target = int(target_mb) * 1024 * 1024
-    if SnapshotStore(out).current_version() is not None:
-        manifest = compact_snapshot(spark, out, target_file_bytes=target)
-        if manifest is None:
-            log.info("compact: nothing to compact")
-            return {}
-        log.info(f"compact: published snapshot version {manifest['version']}")
-        return manifest
-    results: dict[str, dict] = {}
-    for table in ("rewards", "transactions"):
-        tdir = os.path.join(out, table)
-        if os.path.isdir(tdir):
-            r = compact_partitioned_table(spark, tdir, target_file_bytes=target)
-            if r:
-                results[table] = r
-    n = sum(len(v) for v in results.values())
-    log.info(f"compact: rewrote {n} partition(s) across {len(results)} table(s)")
-    return results
+    manifest = compact_snapshot(
+        spark, str(cfg["out_dir"]), target_file_bytes=int(target_mb) * 1024 * 1024
+    )
+    if manifest is None:
+        log.info("compact: nothing to compact")
+        return {}
+    log.info(f"compact: published snapshot version {manifest['version']}")
+    return manifest
 
 
 def cmd_dedup_state(spark, state_path: str, action: str, target_mb: int = 128, log=None) -> dict:
@@ -385,12 +369,12 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("-e", "--execute", help="SQL statement (sql command)")
     p.add_argument(
         "--at-version", type=int, default=None,
-        help="sql: time-travel an atomic-sink store to this snapshot version",
+        help="sql: time-travel the store to this snapshot version",
     )
     p.add_argument(
         "--changes-since", type=int, default=None,
         help="sql: register <table>_changes CDC views diffing this "
-        "snapshot version against the served one (atomic sinks only)",
+        "snapshot version against the served one",
     )
     p.add_argument(
         "--key-cols", default=None,

@@ -2,9 +2,9 @@
 
 One place that answers "did this read fail because the path does not
 exist yet?" — the benign first-run case that state readers (dedup
-state, streaming corpus, serving views, ingest audit) may treat as
-empty, while every OTHER failure (corrupt footer, permission, IO) must
-raise.  Centralized because the four call sites previously matched
+state, streaming corpus, count state) may treat as empty, while every
+OTHER failure (corrupt footer, permission, IO) must raise.  Centralized
+because the call sites previously matched
 message substrings independently, and Spark's message text is
 version/locale-dependent (r7 ADVICE).
 """

@@ -91,21 +91,20 @@ def compact_partitioned_table(
     partition_prefix: str = "block_range=",
     distinct_rows: bool = False,
 ) -> dict[str, tuple[int, int]]:
-    """Compact each `{partition_prefix}*` partition directory of a PLAIN
-    (non-atomic) hive-partitioned table in place (follower tables use
-    `block_range=`, dedup state tables use `shard=`); returns
-    {partition: (files_before, files_after)} for the rewritten ones.
+    """Compact each `{partition_prefix}*` partition directory of a plain
+    hive-partitioned table in place (the dedup state tables use
+    `shard=`); returns {partition: (files_before, files_after)} for the
+    rewritten ones.
 
     Per-partition rewrite (never the whole table): cold partitions are
     untouched, so the maintenance cost tracks the append rate, not the
     corpus size — at cluster scale the per-partition rewrites are
     independent jobs. The swap is rewrite-to-tmp → two renames, with
     crash recovery on entry (an interrupted swap leaves
-    `.__compact_old`; the next run restores it). Like the plain sink's
-    own dynamic overwrite, this assumes no concurrent reader of the
-    partition mid-swap — run it like vacuum, between follower passes;
-    the snapshot sink (atomic=true + compact_snapshot) is the
-    no-reader-torn variant.
+    `.__compact_old`; the next run restores it). This assumes no
+    concurrent reader of the partition mid-swap — run it between ingest
+    batches; compact_snapshot is the no-reader-torn variant for
+    snapshot stores such as the follower's.
     """
     # crash recovery BEFORE listing partitions: an interrupted swap
     # leaves the data in `.__compact_old` with the partition dir gone,
@@ -158,8 +157,8 @@ def compact_snapshot(
     root: str,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict | None:
-    """Compact a snapshot-manifest sink (atomic=true) the lakehouse
-    way: rewrite fragmented COMMITTED partitions into a new version
+    """Compact a snapshot-manifest store (the follower's sink) the
+    lakehouse way: rewrite fragmented COMMITTED partitions into a new version
     directory and publish a manifest that remaps them — data files are
     never mutated, so concurrent snapshot readers are never torn, and
     a crash before publish leaves an orphan v-dir exactly like a

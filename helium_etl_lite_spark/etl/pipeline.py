@@ -7,23 +7,19 @@ Differences by design (Spark-first, not a translation):
   (cursor, tip] range as ONE distributed job — partition pruning on the
   height predicate keeps it incremental, executors give parallelism.
 - Exactly-once: Postgres gives the reference a data+cursor transaction
-  (src/follower.rs:100, src/block_processor.rs:44-47). On a filesystem
-  sink we get the same end-to-end guarantee from idempotence + ordering:
-  data writes are keyed/deduped (rewards partitioned by block range,
-  overwritten per-range; transactions deduped on hash, PK analog of
-  migrations/V3:43), and the cursor is committed only AFTER data lands.
-  A crash between data and cursor replays the range — idempotent, so
-  the result converges. On Delta/Iceberg the same code path becomes a
-  single multi-table transaction.
-- The cursor (the reference's one follower_info row) is one JSON record
-  published with one durable rename (CursorStore) — no Spark job, and
-  no instant at which it is missing. read_cursor() answers "where is
-  the follower" for either sink, the one the config selects.
+  (src/follower.rs:100, src/block_processor.rs:44-47). Here every pass
+  is one snapshot-manifest commit (etl/snapshot.py): the rewards and
+  transactions partitions the pass wrote and the advanced cursor become
+  visible in the same `CURRENT` rename, so a reader never sees a block
+  the cursor has not reached, and a crash before the rename leaves the
+  previous snapshot whole. The replay recomputes the same version.
+- The cursor (the reference's one follower_info row) is the manifest's
+  (height, first_block); CursorStore reads and publishes it, with no
+  Spark job.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -32,17 +28,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import REWARDS_V2_FIELDS_SCHEMA
-from .snapshot import SnapshotStore, commit_batch_atomic, durable_replace
+from .snapshot import SnapshotStore, commit_batch_atomic, read_snapshot
 from .transforms import build_outputs
 
-# Output tables are partitioned by block: dynamic partition overwrite
-# then gives per-block replace semantics — the exact analog of the
-# reference's per-block BEGIN..COMMIT atomicity (any replayed range
-# replaces precisely the blocks it contains, never duplicating and
-# never clobbering neighbors). At 100 TB with small blocks, coarsen to
-# block ranges ONLY if batch boundaries are aligned to range boundaries
-# (the replay unit must cover whole partitions), or use a Delta/Iceberg
-# MERGE keyed on (block, hash) instead.
+# Tables keyed by block, written in place: write_block_range_idempotent
+# gives per-block replace semantics on plain partitioned parquet (any
+# replayed range replaces precisely the blocks it contains, never
+# duplicating and never clobbering neighbors). The follower's own tables
+# go through the snapshot sink instead; operators/rollup.py lands its
+# buckets here.
 
 
 def write_block_range_idempotent(
@@ -66,9 +60,9 @@ def write_block_range_idempotent(
     Replaying any slice therefore converges to the same table (the
     reference's per-block BEGIN..COMMIT, src/follower.rs:100, at range
     granularity). Multi-partition overwrite is not atomic on plain
-    parquet — a transactional table format (Delta/Iceberg) upgrades that
-    without changing this dataflow; until then bound_by_cursor() below
-    gives readers the cursor-bounded consistent view.
+    parquet: a reader during the write can see a torn table. The
+    snapshot sink (etl/snapshot.py commit_batch_atomic) is the atomic
+    variant with the same claim semantics.
 
     What counts as "claimed" matters for correctness:
     - heights=None: the batch claims the contiguous span [lo, hi] — old
@@ -156,118 +150,65 @@ def write_block_range_idempotent(
         fs.delete(hpath, True)
 
 
-def bound_by_cursor(
-    df: DataFrame, cursor: tuple[int, int] | None, range_size: int = 1000
-) -> DataFrame:
-    """The consistent-read view: `df`'s rows at or below `cursor`'s
-    height; no rows when there is no cursor.
-
-    Data lands BEFORE the cursor advances, so between the two writes a
-    raw reader could observe blocks beyond the cursor (the reference's
-    Postgres transaction hides that window). Filtering by the cursor
-    restores the reference's visibility rule — readers never see a
-    block the follower hasn't committed — and the predicate prunes
-    `block_range` partitions, so it costs a metadata lookup, not a scan.
-    A caller serving several tables reads the cursor once and bounds
-    every table with it, so no commit landing in between can give the
-    tables different heights.
-    """
-    if cursor is None:
-        return df.where(F.lit(False))
-    height = cursor[0]
-    return df.where(F.col("block_range") <= height // range_size).where(
-        F.col("block") <= height
-    )
-
-
 class CursorStore:
     """follower_info analog (reference migrations/V2, src/follower.rs:115-142):
-    the plain sink's single (height, first_block) row, kept as one JSON
-    record at `<out_dir>/_meta/follower_info.json`. Reading and writing
-    it start no Spark job.
+    the follower's (height, first_block), which lives in the snapshot
+    manifest (etl/snapshot.py) beside the data map, so data and cursor
+    publish together. The one place that knows where the cursor lives.
 
-    write() publishes through snapshot.durable_replace (tmp file, fsync,
-    os.replace, directory fsync), so at every instant the record holds a
-    complete cursor, old or new, and survives a power cut once write()
-    returns. A crash before the rename leaves a stale `.tmp` beside the
-    previous cursor; the next write() overwrites it. (On an object
-    store, swap the rename for a conditional PUT of the record.)
+    read() returns CURRENT's cursor, or None before the first publish.
+    write() publishes the next manifest version carrying the current
+    tables (or none) with the new cursor. Neither starts a Spark job.
     """
 
     def __init__(self, out_dir: str):
-        self.path = os.path.join(out_dir, "_meta", "follower_info.json")
+        self.store = SnapshotStore(out_dir)
 
     def read(self) -> tuple[int, int] | None:
-        try:
-            with open(self.path) as f:
-                rec = json.load(f)
-        except FileNotFoundError:
-            return None
-        return rec["height"], rec["first_block"]
+        m = self.store.current()
+        return None if m is None else (m["height"], m["first_block"])
 
     def write(self, height: int, first_block: int) -> None:
-        os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        durable_replace(
-            self.path,
-            json.dumps({"height": int(height), "first_block": int(first_block)}),
+        m = self.store.current()
+        self.store.publish(
+            {
+                "version": m["version"] + 1 if m else 1,
+                "height": int(height),
+                "first_block": int(first_block),
+                "tables": m["tables"] if m else {},
+            }
         )
 
 
-def read_cursor(out_dir: str, atomic: bool) -> tuple[int, int] | None:
-    """The committed (height, first_block) of the sink `atomic` selects:
-    the snapshot manifest's cursor (atomic) or CursorStore's (plain),
-    never the other sink's, so a follower switched to a new sink on an
-    old store starts that sink afresh instead of continuing from a
-    cursor whose data the new sink does not hold. None when that sink
-    has no cursor yet."""
-    if atomic:
-        m = SnapshotStore(out_dir).current()
-        return None if m is None else (m["height"], m["first_block"])
-    return CursorStore(out_dir).read()
+def _refuse_plain_layout(out_dir: str) -> None:
+    """Raise when `out_dir` holds follower tables but no snapshot
+    manifest: a store written by the former plain-parquet sink. Seeding
+    a new cursor there would, without backfill, skip every landed
+    block."""
+    for table in ("rewards", "transactions"):
+        tdir = os.path.join(out_dir, table)
+        if os.path.isdir(tdir) and any(d.startswith("block_range=") for d in os.listdir(tdir)):
+            raise RuntimeError(
+                f"{out_dir} holds plain-parquet follower tables "
+                f"({table}/block_range=*) but no snapshot manifest "
+                "(_snapshots/CURRENT); this layout is no longer read. "
+                "Follow into a new out_dir with backfill = true."
+            )
 
 
-def _recover_from_output(spark: SparkSession, out_dir: str) -> tuple[int, int] | None:
-    """(max, min) landed block of a plain store's rewards table; None
-    when nothing landed."""
-    try:
-        landed = spark.read.parquet(os.path.join(out_dir, "rewards"))
-        row = landed.agg(F.max("block").alias("mx"), F.min("block").alias("mn")).collect()[0]
-    except Exception:
-        return None
-    if row["mx"] is None:
-        return None
-    return int(row["mx"]), int(row["mn"])
-
-
-def _open_cursor(spark: SparkSession, config: FollowerConfig, probe_first) -> tuple[int, int]:
+def _open_cursor(config: FollowerConfig, probe_first) -> tuple[int, int]:
     """The follower's starting cursor (reference src/follower.rs:27-41):
-    the configured sink's committed cursor; else, on the plain sink,
-    the one recovered from landed data; else a new cursor at
+    the manifest's committed cursor; else a new cursor at
     probe_first()-1, so the first processed block is probe_first()
-    (reference src/follower.rs:37).
-
-    Recovery covers a lost cursor over landed data (a store written
-    before the JSON cursor record, or a deleted _meta): re-seeding at
-    tip instead would silently skip every block between the lost cursor
-    and the tip. Re-deriving can only UNDER-estimate (filters mode drops
-    rewardless blocks), and replay of those blocks is idempotent. The
-    atomic sink has no such path: unpublished data is invisible by
-    construction, so the manifest IS the only truth."""
-    cur = read_cursor(config.out_dir, config.atomic)
+    (reference src/follower.rs:37). A store without a manifest but with
+    landed tables is refused before anything is probed or written."""
+    cursor = CursorStore(config.out_dir)
+    cur = cursor.read()
     if cur is not None:
         return cur
-    if not config.atomic:
-        cur = _recover_from_output(spark, config.out_dir)
-        if cur is not None:
-            CursorStore(config.out_dir).write(*cur)
-            return cur
+    _refuse_plain_layout(config.out_dir)
     first = probe_first()
-    if config.atomic:
-        SnapshotStore(config.out_dir).publish(
-            {"version": 1, "height": first - 1, "first_block": first, "tables": {}}
-        )
-    else:
-        CursorStore(config.out_dir).write(first - 1, first)
+    cursor.write(first - 1, first)
     return first - 1, first
 
 
@@ -280,11 +221,6 @@ class FollowerConfig:
     out_dir: str = "/tmp/helium_out"
     max_blocks_per_batch: int | None = None  # None = whole lag in one job
     block_range_size: int = 1000   # blocks per output partition directory
-    # True = snapshot-manifest sink (etl/snapshot.py): data + cursor
-    # publish in ONE atomic rename, the reference's BEGIN..COMMIT
-    # (src/follower.rs:100) made literal instead of approximated by
-    # write-ordering + idempotent replay.
-    atomic: bool = False
 
 
 class IncrementalFollower:
@@ -318,50 +254,51 @@ class IncrementalFollower:
                 return get_first_block(self.spark, self.blocks, self.txns)
             return self._tip()
 
-        return _open_cursor(self.spark, self.config, first)
+        return _open_cursor(self.config, first)
 
     def _tip(self) -> int:
         # E1: chain-tip probe (reference src/follower.rs:76).
         return self.blocks.agg(F.max("height")).collect()[0][0]
 
-    # -- one catch-up pass (reference src/follower.rs:69-98) ------------
+    # -- catch-up passes (reference src/follower.rs:69-98) --------------
     def run_once(self) -> int:
         """Process (cursor, tip] and return the number of blocks loaded."""
         height, first_block = self.init_cursor()
+        return self._pass(height, first_block, self._tip())
+
+    def catch_up(self) -> int:
+        """Process (cursor, tip] in passes of at most max_blocks_per_batch
+        blocks (bounded-replay E19). The tip is probed once: the source
+        DataFrame's file listing is fixed for the call, so a later probe
+        could find no further block."""
+        height, first_block = self.init_cursor()
         tip = self._tip()
+        total = 0
+        while n := self._pass(height + total, first_block, tip):
+            total += n
+        return total
+
+    def _pass(self, height: int, first_block: int, tip: int | None) -> int:
         if tip is None or tip <= height:
             return 0
         upper = tip
         if self.config.max_blocks_per_batch is not None:
             upper = min(tip, height + self.config.max_blocks_per_batch)
-        if self.config.atomic:
-            self._commit_range_atomic(height + 1, upper, first_block)
-        else:
-            self._process_range(height + 1, upper)
-            # cursor advances only after data is durable (E18; the
-            # ordering that substitutes for the reference's
-            # BEGIN..COMMIT).
-            self.cursor.write(upper, first_block)
+        self._commit_range(height + 1, upper, first_block)
         return upper - height
 
-    def catch_up(self) -> int:
-        """Loop run_once until at tip (bounded-replay E19)."""
-        total = 0
-        while True:
-            n = self.run_once()
-            if n == 0:
-                return total
-            total += n
-
-    def _commit_range_atomic(self, lo: int, hi: int, first_block: int) -> None:
+    def _commit_range(self, lo: int, hi: int, first_block: int) -> None:
         # E14-E18 as ONE transaction: every output table and the cursor
-        # advance publish together in the manifest swap.
+        # advance publish together in the manifest swap. The height
+        # predicate prunes partitions at the source (src/follower.rs:86's
+        # `h > self.height`, vectorized).
         blocks = self.blocks.where(F.col("height").between(lo, hi))
         out = build_outputs(self.config.mode, blocks, self.txns, self.filters)
         tables = {"rewards": out["rewards"]}
         if "transactions" in out:
+            # PK(hash) idempotence (migrations/V3:43)
             tables["transactions"] = out["transactions"].dropDuplicates(["hash"])
-        commit_batch_atomic(
+        manifest = commit_batch_atomic(
             self.spark,
             self.config.out_dir,
             tables,
@@ -371,64 +308,39 @@ class IncrementalFollower:
             first_block=first_block,
             range_size=self.config.block_range_size,
         )
+        self._audit(manifest["version"], lo, hi)
 
-    def _process_range(self, lo: int, hi: int) -> None:
-        # Incremental slice: the height predicate prunes partitions at
-        # the source (src/follower.rs:86's `h > self.height`, vectorized).
-        blocks = self.blocks.where(F.col("height").between(lo, hi))
-        out = build_outputs(self.config.mode, blocks, self.txns, self.filters)
-
-        write_block_range_idempotent(
-            self.spark,
-            out["rewards"],
-            os.path.join(self.config.out_dir, "rewards"),
-            lo,
-            hi,
-            self.config.block_range_size,
-        )
-
-        # Ingest audit: row/amount/sentinel counters for the landed
+    def _audit(self, version: int, lo: int, hi: int) -> None:
+        # Ingest audit: row/amount/sentinel counters for the committed
         # range (the reference has no ingest metrics at all; production
         # followers need them to spot a silently-empty or all-null
-        # upstream). Computed from the JUST-WRITTEN parquet slice — one
-        # cheap columnar scan with the block predicate pushed — instead
-        # of re-running the whole batch build a second time (an agg on
+        # upstream). Computed from the JUST-COMMITTED slice — one cheap
+        # columnar scan with the block predicate pushed — instead of
+        # re-running the whole batch build a second time (an agg on
         # out["rewards"] would re-execute explode/validate/join per
-        # range, ~2x ingest cost). NOT the Observation API: the recovery
-        # paths here deliberately run failing probe reads, and a pending
-        # Observation's listener asserts on ANY failed query in the
-        # session, taking the whole batch down with it.
+        # range, ~2x ingest cost). A version with no rewards rows is an
+        # explicit zero, the signal the audit exists to surface; any
+        # read failure is an audit FAILURE, never masked as zeros.
         from .schemas import SENTINEL
 
         try:
-            landed = (
-                self.spark.read.parquet(os.path.join(self.config.out_dir, "rewards"))
-                .where(F.col("block").between(lo, hi))
-            )
-            audit = landed.agg(
-                F.count(F.lit(1)).alias("n_rewards"),
-                F.coalesce(F.sum("amount"), F.lit(0)).alias("amount_total"),
-                F.coalesce(
-                    F.sum(F.when(F.col("account") == SENTINEL, 1).otherwise(0)),
-                    F.lit(0),
-                ).alias("sentinel_accounts"),
-            ).first()
-            self.last_audit = audit.asDict()
-        except AnalysisException as e:
-            # ONLY the missing-path case is a legitimate zero: a batch
-            # with zero reward rows writes no directory at all on the
-            # very first range — that IS the signal the audit exists to
-            # surface, as an explicit zero. Any other failure (corrupt
-            # footer, permission error, transient IO) must surface as
-            # an audit FAILURE, not be masked as zeros (r6 ADVICE).
-            from ..errors import is_path_not_found
-
-            if is_path_not_found(e):
-                self.last_audit = {
-                    "n_rewards": 0, "amount_total": 0, "sentinel_accounts": 0,
-                }
+            landed = read_snapshot(self.spark, self.config.out_dir, "rewards", version=version)
+            if landed is None:
+                self.last_audit = {"n_rewards": 0, "amount_total": 0, "sentinel_accounts": 0}
             else:
-                self.last_audit = {"error": str(e)}
+                self.last_audit = (
+                    landed.where(F.col("block").between(lo, hi))
+                    .agg(
+                        F.count(F.lit(1)).alias("n_rewards"),
+                        F.coalesce(F.sum("amount"), F.lit(0)).alias("amount_total"),
+                        F.coalesce(
+                            F.sum(F.when(F.col("account") == SENTINEL, 1).otherwise(0)),
+                            F.lit(0),
+                        ).alias("sentinel_accounts"),
+                    )
+                    .first()
+                    .asDict()
+                )
         except Exception as e:  # noqa: BLE001 — audit is advisory; ingest continues
             self.last_audit = {"error": str(e)}
         import logging
@@ -437,17 +349,6 @@ class IncrementalFollower:
             logging.WARNING if "error" in self.last_audit else logging.INFO,
             f"audit [{lo},{hi}]: {self.last_audit}",
         )
-        if "transactions" in out:
-            # PK(hash) idempotence (migrations/V3:43): dedup within the
-            # batch before the idempotent range write.
-            write_block_range_idempotent(
-                self.spark,
-                out["transactions"].dropDuplicates(["hash"]),
-                os.path.join(self.config.out_dir, "transactions"),
-                lo,
-                hi,
-                self.config.block_range_size,
-            )
 
 
 def rpc_catch_up(
@@ -465,7 +366,6 @@ def rpc_catch_up(
     from ..sources.block_source import RpcBlockSource
 
     height, _first = _open_cursor(
-        spark,
         config,
         lambda: rpc_get_first_block(client) if config.backfill else client.height(),
     )

@@ -1189,8 +1189,8 @@ def dedup_state_compact(
     and drop crash-replay duplicate rows (distinct within shard), in
     place, per shard directory — untouched shards cost nothing, so the
     maintenance cost tracks the ingest rate, not the corpus size.
-    Reuses the follower tables' crash-safe per-partition rewrite
-    (etl/compact.py: rewrite-to-tmp + two renames, recovery on entry).
+    Reuses etl/compact.py's crash-safe per-partition rewrite
+    (rewrite-to-tmp + two renames, recovery on entry).
     Probe results are identical before and after (tested): the state is
     read with set semantics, so removing physical duplicates and
     re-bucketing bytes changes no membership answer. Same single-writer

@@ -729,7 +729,7 @@ def phash_band_neardup(
     terminal action, exactly the fan-out case where the lazy mark
     regressed (OPTIMIZATION_r15.md change 3).
     """
-    hashed = hashed.select(id_col, "phash").localCheckpoint()
+    hashed = hashed.select(id_col, "phash").localCheckpoint(eager=True)
     bands = hashed.select(
         id_col,
         "phash",
@@ -1553,13 +1553,13 @@ def pair_dedup(
     # rule).
     hashed = dhash_assets(pairs, id_col=id_col).select(
         id_col, "phash"
-    ).localCheckpoint()
+    ).localCheckpoint(eager=True)
     reps = hashed.groupBy("phash").agg(F.min(id_col).alias("__rep_id"))
     assign = phash_band_neardup(
         reps.select(F.col("__rep_id").alias(id_col), "phash"), k=k,
         id_col=id_col,
     ).select(F.col(id_col).alias("__rep_id"), "keeper_doc_id")
-    members = hashed.select(id_col, "phash").join(reps, "phash").join(
+    members = hashed.join(reps, "phash").join(
         assign, "__rep_id"
     )
     joined = pairs.select(

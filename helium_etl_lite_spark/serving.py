@@ -15,33 +15,30 @@ patterns each reference index was built for:
 | transactions_pkey (V3:43)         | transaction_by_hash         |
 | transaction_type/block (V3:46-47) | transactions_by_type        |
 
-Consistency: by default every view is bounded by ONE read of the
-follower's committed cursor (pipeline.bound_by_cursor), so a query never
-observes blocks past it and the views never disagree on it — the same
-isolation the reference gets from Postgres transactions. Pass
-committed=False for raw (uncommitted-tail-visible) reads.
+Consistency: every view comes from ONE read of the snapshot manifest
+(etl/snapshot.py). The follower publishes data and cursor in the same
+rename, so a query never observes a block past `follower_info`, and a
+commit landing mid-call cannot give the views different versions — the
+same isolation the reference gets from Postgres transactions.
 
-Scale: the views are plain partitioned parquet; block predicates prune
-`block_range` directories, gateway/type predicates push to parquet row
-groups — the B-tree indexes' job, done by layout + pushdown instead.
+Scale: the views are the manifest's partitioned parquet files; block
+predicates prune `block_range` directories, gateway/type predicates push
+to parquet row groups — the B-tree indexes' job, done by layout +
+pushdown instead.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .etl.pipeline import CursorStore, bound_by_cursor
 from .etl.schemas import FOLLOWER_INFO_SCHEMA, SENTINEL
+from .etl.snapshot import SnapshotStore, pair_updates, read_changes, read_snapshot
 
 
 def register_views(
     spark: SparkSession,
     out_dir: str,
-    committed: bool = True,
-    range_size: int = 1000,
     at_version: int | None = None,
     changes_since: int | None = None,
     change_key_cols: list[str] | None = None,
@@ -49,91 +46,40 @@ def register_views(
     """Expose the output tables under the reference's table names.
     `transactions` is registered only when the pipeline mode produced it
     (full mode). Returns the DataFrames keyed by view name.
-    `at_version` time-travels an atomic-sink store to a historical
-    snapshot; requesting it against a plain (non-atomic) sink raises —
-    plain sinks keep no history to travel to. `changes_since` (atomic
-    sinks only) additionally registers `<table>_changes` views holding
-    the CDC diff from that version to the served one (read_changes:
-    '_change_type' insert/delete, partition-pruned by manifest diff).
-    `change_key_cols` upgrades those views to the KEYED feed: in-place
-    changes of a key pair as update_preimage/update_postimage (the
-    Delta-CDF contract; tables missing a key column keep the plain
-    feed — a shared key list serves heterogeneous stores)."""
-    views: dict[str, DataFrame] = {}
-
-    from .etl.snapshot import SnapshotStore, read_changes, read_snapshot
-
+    `at_version` time-travels to a historical snapshot (kept until
+    `vacuum` drops it). `changes_since` additionally registers
+    `<table>_changes` views holding the CDC diff from that version to
+    the served one (read_changes: '_change_type' insert/delete,
+    partition-pruned by manifest diff). `change_key_cols` upgrades those
+    views to the KEYED feed: in-place changes of a key pair as
+    update_preimage/update_postimage (the Delta-CDF contract; tables
+    missing a key column keep the plain feed — a shared key list serves
+    heterogeneous stores)."""
     store = SnapshotStore(out_dir)
-    snapshot_manifest = (
-        store.current() if at_version is None else store.manifest(at_version)
-    )
-    # --changes-since needs a snapshot STORE; check store existence
-    # (current_version), not the resolved manifest — otherwise a
-    # missing --at-version manifest would be misreported as "no
-    # snapshot store" before the accurate at_version diagnostics below
-    # run (review find).
-    if changes_since is not None and store.current_version() is None:
-        raise ValueError(
-            f"--changes-since requires an atomic sink (no snapshot "
-            f"store at {out_dir}; plain sinks keep no history)"
-        )
-    if at_version is not None and snapshot_manifest is None:
-        if store.current_version() is None:
+    manifest = store.current() if at_version is None else store.manifest(at_version)
+    if manifest is None:
+        if at_version is not None and store.current_version() is not None:
             raise ValueError(
-                f"--at-version requires an atomic sink (no snapshot store "
-                f"at {out_dir}; plain sinks keep no history)"
+                f"no snapshot version {at_version} at {out_dir} (vacuumed or never committed)"
             )
-        raise ValueError(
-            f"no snapshot version {at_version} at {out_dir} (vacuumed or never committed)"
-        )
+        raise ValueError(f"no snapshot store at {out_dir}")
 
-    # One cursor read per call: the tables and follower_info are all
-    # bounded by it, so a follower commit landing mid-call cannot give
-    # them different heights. An atomic sink's cursor is the served
-    # manifest's own.
-    if snapshot_manifest is not None:
-        cur = (snapshot_manifest["height"], snapshot_manifest["first_block"])
-    else:
-        cur = CursorStore(out_dir).read()
-
-    def load(table: str) -> DataFrame:
-        if snapshot_manifest is not None:
-            # Atomic-sink output: the manifest IS the committed view —
-            # uncommitted data isn't reachable from it at all, so no
-            # cursor filter is needed (or meaningful).
-            df = read_snapshot(spark, out_dir, table, version=at_version)
-            if df is None:
-                from pyspark.errors import AnalysisException
-
-                raise AnalysisException(
-                    f"[PATH_NOT_FOUND] no committed snapshot entry for table {table}"
-                )
-            return df
-        df = spark.read.parquet(os.path.join(out_dir, table))
-        return bound_by_cursor(df, cur, range_size) if committed else df
-
-    views["rewards"] = load("rewards")
-    # Only a missing table path means "mode produced no transactions";
-    # any other failure (corrupt files, bad out_dir, cursor errors) must
-    # surface, not silently drop the view (ADVICE r2).
-    from pyspark.errors import AnalysisException
-
-    try:
-        views["transactions"] = load("transactions")
-    except AnalysisException as exc:
-        from .errors import is_path_not_found
-
-        if not is_path_not_found(exc):
-            raise
-        # rewards/filters mode: no transactions table
+    # Every table is read at the served manifest's version: re-reading
+    # CURRENT per table could pair one version's tables with another's
+    # cursor if a commit landed mid-call.
+    views: dict[str, DataFrame] = {}
+    for table in ("rewards", "transactions"):
+        df = read_snapshot(spark, out_dir, table, version=manifest["version"])
+        if df is not None:
+            views[table] = df
+    if "rewards" not in views:
+        raise ValueError(f"no committed rewards in snapshot version {manifest['version']} at {out_dir}")
     views["follower_info"] = spark.createDataFrame(
-        [cur] if cur is not None else [], FOLLOWER_INFO_SCHEMA
+        [(manifest["height"], manifest["first_block"])], FOLLOWER_INFO_SCHEMA
     )
     if changes_since is not None:
-        from .etl.snapshot import pair_updates
-
-        v_to = snapshot_manifest["version"]
-        for table in snapshot_manifest["tables"]:
+        v_to = manifest["version"]
+        for table in manifest["tables"]:
             diff = read_changes(spark, out_dir, table, changes_since, v_to)
             if diff is None:
                 continue

@@ -10,13 +10,11 @@ transform functions are the SAME ones the batch follower uses
 (etl/transforms.py) — foreachBatch hands us a batch DataFrame, so batch
 and streaming stay semantically identical by construction.
 
-Exactly-once, two recipes:
-- default: checkpoint offsets + IDEMPOTENT sink (per-height-set
-  replace + hash dedup) — replay converges. The standard Spark recipe.
-- config.atomic: checkpoint offsets + TRANSACTIONAL sink — each
-  micro-batch is one snapshot-manifest swap landing data and cursor
-  together (etl/snapshot.py), the foreachBatch analog of writing to
-  Delta with txnAppId/txnVersion.
+Exactly-once: checkpoint offsets + TRANSACTIONAL sink — each
+micro-batch is one snapshot-manifest swap landing data and cursor
+together (etl/snapshot.py), the foreachBatch analog of writing to
+Delta with txnAppId/txnVersion. A replayed micro-batch re-commits the
+same height set, so the result converges.
 """
 
 from __future__ import annotations
@@ -26,8 +24,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..etl.pipeline import CursorStore, FollowerConfig, read_cursor, write_block_range_idempotent
+from ..etl.pipeline import CursorStore, FollowerConfig, _refuse_plain_layout
 from ..etl.schemas import BLOCK_SCHEMA
+from ..etl.snapshot import commit_batch_atomic
 from ..etl.transforms import build_outputs
 
 
@@ -49,8 +48,8 @@ def start_block_stream(
     def process_batch(batch_blocks: DataFrame, batch_id: int) -> None:
         if batch_blocks.isEmpty():
             return
-        # Re-reading the micro-batch more than once (bounds agg + two
-        # writes + the replace-set) must see one consistent snapshot.
+        # Re-reading the micro-batch more than once (bounds agg, the
+        # commit and its replace-set) must see one consistent snapshot.
         batch_blocks = batch_blocks.localCheckpoint(eager=True)
         out = build_outputs(config.mode, batch_blocks, txns, filters)
         bounds = batch_blocks.agg(
@@ -61,59 +60,31 @@ def start_block_stream(
         # grouped by listing order): a batch holding heights {100, 300}
         # must replace exactly those heights, not the whole [100, 300]
         # span — a span-delete would wipe blocks another batch already
-        # committed. So the idempotent write replaces per height SET.
+        # committed. So the commit claims the height SET.
         heights = batch_blocks.select(F.col("height").alias("block"))
         # first_block = the first block actually processed (the batch
         # MIN on the first batch — reference src/follower.rs:35-39),
         # never the tip. The cursor only moves forward — a replayed old
         # batch re-lands its data but cannot regress the height.
-        prev = read_cursor(config.out_dir, config.atomic)
+        prev = CursorStore(config.out_dir).read()
+        if prev is None:
+            _refuse_plain_layout(config.out_dir)
         first_block = prev[1] if prev else lo
         height = max(tip, prev[0]) if prev else tip
-        if config.atomic:
-            # Exactly-once via transaction instead of idempotence: the
-            # checkpoint replays a failed micro-batch, and the snapshot
-            # sink makes the replayed commit a single manifest swap that
-            # lands data + cursor together (etl/snapshot.py).
-            from ..etl.snapshot import commit_batch_atomic
-
-            tables = {"rewards": out["rewards"]}
-            if "transactions" in out:
-                tables["transactions"] = out["transactions"].dropDuplicates(["hash"])
-            commit_batch_atomic(
-                spark,
-                config.out_dir,
-                tables,
-                lo,
-                tip,
-                height=height,
-                first_block=first_block,
-                range_size=config.block_range_size,
-                heights=heights,
-            )
-            return
-        write_block_range_idempotent(
+        tables = {"rewards": out["rewards"]}
+        if "transactions" in out:
+            tables["transactions"] = out["transactions"].dropDuplicates(["hash"])
+        commit_batch_atomic(
             spark,
-            out["rewards"],
-            os.path.join(config.out_dir, "rewards"),
+            config.out_dir,
+            tables,
             lo,
             tip,
-            config.block_range_size,
+            height=height,
+            first_block=first_block,
+            range_size=config.block_range_size,
             heights=heights,
         )
-        if "transactions" in out:
-            write_block_range_idempotent(
-                spark,
-                out["transactions"].dropDuplicates(["hash"]),
-                os.path.join(config.out_dir, "transactions"),
-                lo,
-                tip,
-                config.block_range_size,
-                heights=heights,
-            )
-        # cursor bump after data is durable (E18)
-        if prev is None or tip > prev[0]:
-            CursorStore(config.out_dir).write(height, first_block)
 
     stream = (
         spark.readStream.schema(BLOCK_SCHEMA)

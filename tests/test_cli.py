@@ -64,8 +64,9 @@ def test_once_catches_up_and_is_idempotent(spark, chain_dirs, tmp_path):
     )
     assert cli.cmd_once(spark, cfg) == 60
     assert cli.cmd_once(spark, cfg) == 0  # already at tip
-    rewards = spark.read.parquet(os.path.join(out, "rewards"))
-    assert rewards.count() > 0
+    from helium_etl_lite_spark.etl.snapshot import read_snapshot
+
+    assert read_snapshot(spark, out, "rewards").count() > 0
 
 
 def test_config_validation_errors(tmp_path, chain_dirs):
@@ -110,15 +111,15 @@ def test_sql_command_over_serving_views(spark, chain_dirs, tmp_path, capsys):
 
 
 def test_atomic_once_and_vacuum(spark, chain_dirs, tmp_path):
-    # once with atomic=true lands through the snapshot sink; a forced
-    # re-commit supersedes v2 and `vacuum --keep-versions 1` reclaims it.
+    # once lands through the snapshot sink; a forced re-commit
+    # supersedes v2 and `vacuum --keep-versions 1` reclaims it.
     from helium_etl_lite_spark.etl.snapshot import SnapshotStore, read_snapshot
 
     bp, tp, _ = chain_dirs
     out = str(tmp_path / "out")
     cfg_path = write_config(
         tmp_path / "s.toml", bp, tp, out, mode="rewards", backfill=True,
-        atomic=True, block_range_size=20,
+        block_range_size=20,
     )
     cfg = cli.load_config(cfg_path)
     cli.cmd_once(spark, cfg)
@@ -127,10 +128,8 @@ def test_atomic_once_and_vacuum(spark, chain_dirs, tmp_path):
     assert m is not None and m["height"] == 1059
     rows_before = read_snapshot(spark, out, "rewards").count()
     # replay the whole span: same data, new version owning every range
-    from helium_etl_lite_spark.etl.pipeline import FollowerConfig, IncrementalFollower
-
     f = cli._follower(spark, cfg)
-    f._commit_range_atomic(1000, 1059, m["first_block"])
+    f._commit_range(1000, 1059, m["first_block"])
     assert store.current()["version"] == m["version"] + 1
     removed = cli.cmd_vacuum({"out_dir": out}, keep_versions=1)
     assert any("v=" in p for p in removed)
@@ -168,19 +167,25 @@ def _fragment(pdir, n_splits=3):
     os.remove(os.path.join(pdir, f))
 
 
-def test_compact_plain_layout(spark, chain_dirs, tmp_path):
-    # `compact` must merge small files per partition, preserving
-    # content exactly and leaving already-compact partitions alone.
+def _plain_rewards(spark, chain_dirs, tdir):
+    # A plain block_range-partitioned table, the layout
+    # compact_partitioned_table rewrites in place.
+    from helium_etl_lite_spark.etl.pipeline import write_block_range_idempotent
+    from helium_etl_lite_spark.etl.transforms import build_outputs
+
     bp, tp, _ = chain_dirs
-    out = str(tmp_path / "out")
-    cfg = cli.load_config(
-        write_config(
-            tmp_path / "s.toml", bp, tp, out, mode="rewards", backfill=True,
-            block_range_size=20,
-        )
-    )
-    cli.cmd_once(spark, cfg)
-    tdir = os.path.join(out, "rewards")
+    rewards = build_outputs("rewards", spark.read.parquet(bp), spark.read.parquet(tp))["rewards"]
+    write_block_range_idempotent(spark, rewards, tdir, 1000, 1059, range_size=20)
+
+
+def test_compact_plain_layout(spark, chain_dirs, tmp_path):
+    # compact_partitioned_table must merge small files per partition,
+    # preserving content exactly and leaving already-compact partitions
+    # alone.
+    from helium_etl_lite_spark.etl.compact import compact_partitioned_table
+
+    tdir = str(tmp_path / "rewards")
+    _plain_rewards(spark, chain_dirs, tdir)
     frag = next(iter(_part_files(tdir)))
     _fragment(os.path.join(tdir, frag))
     before_files = _part_files(tdir)
@@ -189,22 +194,20 @@ def test_compact_plain_layout(spark, chain_dirs, tmp_path):
         map(tuple, spark.read.parquet(tdir).drop("block_range").collect())
     )
 
-    results = cli.cmd_compact(spark, {"out_dir": out}, target_mb=128)
+    results = compact_partitioned_table(spark, tdir)
     after_files = _part_files(tdir)
     assert all(n == 1 for n in after_files.values()), after_files
-    assert set(results["rewards"]) == {
-        p for p, n in before_files.items() if n > 1
-    }
+    assert set(results) == {p for p, n in before_files.items() if n > 1}
     after_rows = sorted(
         map(tuple, spark.read.parquet(tdir).drop("block_range").collect())
     )
     assert after_rows == before_rows
     # idempotent: second run finds nothing to do
-    assert cli.cmd_compact(spark, {"out_dir": out}, target_mb=128) == {}
+    assert compact_partitioned_table(spark, tdir) == {}
 
 
 def test_compact_snapshot_sink(spark, chain_dirs, tmp_path):
-    # atomic mode: compaction publishes a NEW snapshot version mapping
+    # compaction publishes a NEW snapshot version mapping
     # the fragmented partitions to compacted files; committed reads are
     # unchanged, old version dirs survive for older-snapshot readers
     # until vacuum, and uncommitted (orphan) directories are untouched.
@@ -215,7 +218,7 @@ def test_compact_snapshot_sink(spark, chain_dirs, tmp_path):
     cfg = cli.load_config(
         write_config(
             tmp_path / "s.toml", bp, tp, out, mode="rewards", backfill=True,
-            atomic=True, block_range_size=20,
+            block_range_size=20,
         )
     )
     cli.cmd_once(spark, cfg)
@@ -238,7 +241,7 @@ def test_compact_snapshot_sink(spark, chain_dirs, tmp_path):
     os.makedirs(orphan)
     open(os.path.join(orphan, "junk.parquet"), "w").write("not parquet")
 
-    got = cli.cmd_compact(spark, {"out_dir": out, "atomic": True}, target_mb=128)
+    got = cli.cmd_compact(spark, {"out_dir": out}, target_mb=128)
     assert got and got["version"] == m1["version"] + 1
     m2 = store.current()
     assert m2["version"] == m1["version"] + 1
@@ -262,51 +265,22 @@ def test_compact_snapshot_sink(spark, chain_dirs, tmp_path):
         map(tuple, read_snapshot(spark, out, "rewards").collect())
     ) == rows_before
     # nothing left to compact
-    assert cli.cmd_compact(spark, {"out_dir": out, "atomic": True}, target_mb=128) == {}
-
-
-def test_compact_detects_snapshot_sink_from_store(spark, chain_dirs, tmp_path):
-    # Maintenance verbs need only out_dir: an out_dir-only config
-    # pointed at a snapshot store must run the snapshot compactor (the
-    # plain one finds no block_range dirs there and does nothing).
-    from helium_etl_lite_spark.etl.snapshot import SnapshotStore
-
-    bp, tp, _ = chain_dirs
-    out = str(tmp_path / "out")
-    cfg = cli.load_config(
-        write_config(
-            tmp_path / "s.toml", bp, tp, out, mode="rewards", backfill=True,
-            atomic=True, block_range_size=20,
-        )
-    )
-    cli.cmd_once(spark, cfg)
-    m1 = SnapshotStore(out).current()
-    r, ver = next(iter(m1["tables"]["rewards"].items()))
-    _fragment(os.path.join(out, "rewards", f"v={ver}", f"block_range={r}"))
-    got = cli.cmd_compact(spark, {"out_dir": out}, target_mb=128)
-    assert got["version"] == m1["version"] + 1
-    assert SnapshotStore(out).current_version() == m1["version"] + 1
+    assert cli.cmd_compact(spark, {"out_dir": out}, target_mb=128) == {}
 
 
 def test_compact_crash_recovery(spark, chain_dirs, tmp_path):
-    # plain-mode swap interrupted between the two renames: data sits in
-    # .__compact_old and the partition dir is missing. The next run
+    # plain-layout swap interrupted between the two renames: data sits
+    # in .__compact_old and the partition dir is missing. The next run
     # must restore it before compacting.
-    bp, tp, _ = chain_dirs
-    out = str(tmp_path / "out")
-    cfg = cli.load_config(
-        write_config(
-            tmp_path / "s.toml", bp, tp, out, mode="rewards", backfill=True,
-            block_range_size=20, max_blocks_per_batch=7,
-        )
-    )
-    cli.cmd_once(spark, cfg)
-    tdir = os.path.join(out, "rewards")
+    from helium_etl_lite_spark.etl.compact import compact_partitioned_table
+
+    tdir = str(tmp_path / "rewards")
+    _plain_rewards(spark, chain_dirs, tdir)
     rows = spark.read.parquet(tdir).count()
     part = next(iter(_part_files(tdir)))
     pdir = os.path.join(tdir, part)
     os.rename(pdir, pdir + ".__compact_old")  # simulate the crash window
-    cli.cmd_compact(spark, {"out_dir": out}, target_mb=128)
+    compact_partitioned_table(spark, tdir)
     assert os.path.isdir(pdir)
     assert not os.path.isdir(pdir + ".__compact_old")
     assert spark.read.parquet(tdir).count() == rows
@@ -324,14 +298,14 @@ def test_sql_at_version_time_travels_atomic_sink(spark, chain_dirs, tmp_path, ca
     out = str(tmp_path / "out")
     cfg_path = write_config(
         tmp_path / "s.toml", bp, tp, out, mode="rewards", backfill=True,
-        atomic=True, block_range_size=20,
+        block_range_size=20,
     )
     cfg = cli.load_config(cfg_path)
     cli.cmd_once(spark, cfg)
     v1 = SnapshotStore(out).current()["version"]
     n_v1 = cli.cmd_sql(spark, cfg, "SELECT COUNT(*) AS n FROM rewards")
     f = cli._follower(spark, cfg)
-    f._commit_range_atomic(1000, 1059, SnapshotStore(out).current()["first_block"])
+    f._commit_range(1000, 1059, SnapshotStore(out).current()["first_block"])
     capsys.readouterr()
     n_tt = cli.cmd_sql(
         spark, cfg, "SELECT block, gateway FROM rewards ORDER BY block", at_version=v1
@@ -405,39 +379,35 @@ def test_sql_changes_since_registers_cdc_views(spark, tmp_path, capsys):
     printed = capsys.readouterr().out
     assert "update_preimage" not in printed
 
-    # plain (non-atomic) sink: clear error
+    # no snapshot store: clear error
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="atomic sink"):
+    with _pytest.raises(ValueError, match="no snapshot store"):
         cli.cmd_sql(
             spark, {"out_dir": str(tmp_path / "nosnap")}, "SELECT 1",
             log=logging.getLogger("test"), changes_since=1,
         )
 
 
-def test_status_reports_both_sink_modes(spark, chain_dirs, tmp_path, capsys):
-    # `status` works WITHOUT a SparkSession: plain sinks read the JSON
-    # cursor record + walk partition dirs; atomic sinks read
-    # everything from the manifest.
+def test_status_reports_the_snapshot_store(spark, chain_dirs, tmp_path, capsys):
+    # `status` works WITHOUT a SparkSession: everything comes from the
+    # manifest.
     import logging
 
     bp, tp, _ = chain_dirs
-    for atomic in (False, True):
-        out = str(tmp_path / ("a" if atomic else "p"))
-        cfg = cli.load_config(
-            write_config(
-                tmp_path / f"s{atomic}.toml", bp, tp, out, mode="rewards",
-                backfill=True, atomic=atomic, block_range_size=20,
-            )
+    out = str(tmp_path / "out")
+    cfg = cli.load_config(
+        write_config(
+            tmp_path / "s.toml", bp, tp, out, mode="rewards",
+            backfill=True, block_range_size=20,
         )
-        cli.cmd_once(spark, cfg)
-        capsys.readouterr()
-        st = cli.cmd_status({"out_dir": out}, log=logging.getLogger("t"))
-        assert st["sink"] == ("atomic" if atomic else "plain")
-        assert st["height"] == 1059 and st["first_block"] == 1000
-        assert st["tables"]["rewards"]["n_files"] >= 1
-        assert st["tables"]["rewards"]["n_bytes"] > 0
-        if atomic:
-            assert st["snapshot_version"] >= 1
-        printed = capsys.readouterr().out
-        assert '"height": 1059' in printed
+    )
+    cli.cmd_once(spark, cfg)
+    capsys.readouterr()
+    st = cli.cmd_status({"out_dir": out}, log=logging.getLogger("t"))
+    assert st["height"] == 1059 and st["first_block"] == 1000
+    assert st["snapshot_version"] >= 1
+    assert st["tables"]["rewards"]["n_files"] >= 1
+    assert st["tables"]["rewards"]["n_bytes"] > 0
+    printed = capsys.readouterr().out
+    assert '"height": 1059' in printed

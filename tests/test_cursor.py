@@ -1,81 +1,118 @@
-"""The follower cursor without Spark (fast lane): the plain sink's JSON
-cursor record (CursorStore), its crash behaviour, read_cursor()'s
-choice between the two sinks, and `cli status` on a plain store."""
+"""The follower cursor without Spark (fast lane): CursorStore over the
+snapshot manifest, its crash behaviour, cursor seeding, the refusal of a
+plain-parquet store, and `cli status`."""
 
 from __future__ import annotations
 
 import json
 import logging
+import os
+
+import pytest
 
 from helium_etl_lite_spark import cli
-from helium_etl_lite_spark.etl.pipeline import (
-    CursorStore,
-    FollowerConfig,
-    _open_cursor,
-    read_cursor,
-)
+from helium_etl_lite_spark.etl.pipeline import CursorStore, FollowerConfig, _open_cursor
 from helium_etl_lite_spark.etl.snapshot import SnapshotStore
 
 
 def test_cursor_store_round_trip(tmp_path):
-    store = CursorStore(str(tmp_path))
-    assert store.read() is None
-    store.write(1099, 1000)
-    assert store.read() == (1099, 1000)
-    store.write(1129, 1000)
-    assert store.read() == (1129, 1000)
-    assert store.path == str(tmp_path / "_meta" / "follower_info.json")
-    with open(store.path) as f:
-        assert json.load(f) == {"height": 1129, "first_block": 1000}
+    out = str(tmp_path)
+    cursor = CursorStore(out)
+    assert cursor.read() is None
+    cursor.write(1099, 1000)
+    assert cursor.read() == (1099, 1000)
+    assert SnapshotStore(out).current() == {
+        "version": 1, "height": 1099, "first_block": 1000, "tables": {},
+    }
+    # a data commit, then a cursor write: the tables carry over
+    tables = {"rewards": {"1": 2}}
+    SnapshotStore(out).publish(
+        {"version": 2, "height": 1119, "first_block": 1000, "tables": tables}
+    )
+    assert cursor.read() == (1119, 1000)
+    cursor.write(1129, 1000)
+    assert cursor.read() == (1129, 1000)
+    assert SnapshotStore(out).current() == {
+        "version": 3, "height": 1129, "first_block": 1000, "tables": tables,
+    }
 
 
 def test_crash_before_rename_keeps_previous_cursor(tmp_path):
     # A writer killed before its rename leaves a stale, possibly
-    # truncated follower_info.json.tmp beside the live record. The
-    # previous cursor still reads back, and the next write succeeds.
-    store = CursorStore(str(tmp_path))
-    store.write(1099, 1000)
-    with open(store.path + ".tmp", "w") as f:
-        f.write('{"height": 11')
-    assert store.read() == (1099, 1000)
-    store.write(1129, 1000)
-    assert store.read() == (1129, 1000)
-    assert not (tmp_path / "_meta" / "follower_info.json.tmp").exists()
-
-
-def test_read_cursor_reads_only_the_configured_sink(tmp_path):
+    # truncated CURRENT.tmp beside the live CURRENT. The previous
+    # cursor still reads back, and the next publish succeeds.
     out = str(tmp_path)
-    assert read_cursor(out, atomic=False) is None
-    assert read_cursor(out, atomic=True) is None
-    CursorStore(out).write(1099, 1000)
-    assert read_cursor(out, atomic=False) == (1099, 1000)
-    # An atomic follower on a store holding only a plain cursor must not
-    # take it: its first snapshot would then lack every earlier block.
-    assert read_cursor(out, atomic=True) is None
-    SnapshotStore(out).publish(
-        {"version": 1, "height": 2049, "first_block": 2000, "tables": {}}
-    )
-    assert read_cursor(out, atomic=True) == (2049, 2000)
-    assert read_cursor(out, atomic=False) == (1099, 1000)
+    cursor = CursorStore(out)
+    cursor.write(1099, 1000)
+    tmp = tmp_path / "_snapshots" / "CURRENT.tmp"
+    tmp.write_text("")
+    assert cursor.read() == (1099, 1000)
+    cursor.write(1129, 1000)
+    assert cursor.read() == (1129, 1000)
+    assert SnapshotStore(out).current_version() == 2
+    assert not tmp.exists()
 
 
-def test_atomic_follower_on_a_plain_store_starts_a_new_snapshot(tmp_path):
-    # The atomic follower ignores the plain cursor and seeds its own
-    # manifest, so under backfill it re-lands from the first block.
+def test_open_cursor_seeds_version_one(tmp_path):
     out = str(tmp_path)
-    CursorStore(out).write(1099, 1000)
-    cfg = FollowerConfig(out_dir=out, atomic=True, backfill=True)
-    assert _open_cursor(None, cfg, lambda: 1000) == (999, 1000)
+    cfg = FollowerConfig(out_dir=out, backfill=True)
+    assert _open_cursor(cfg, lambda: 1000) == (999, 1000)
     m = SnapshotStore(out).current()
-    assert (m["version"], m["height"], m["first_block"]) == (1, 999, 1000)
-    assert _open_cursor(None, cfg, lambda: 5000) == (999, 1000)  # now read back
+    assert (m["version"], m["height"], m["first_block"], m["tables"]) == (1, 999, 1000, {})
+
+    def no_probe():
+        raise AssertionError("a committed cursor must not be re-probed")
+
+    assert _open_cursor(cfg, no_probe) == (999, 1000)  # read back
+    assert SnapshotStore(out).current_version() == 1
 
 
-def test_status_reads_the_json_cursor(tmp_path, capsys):
+def _tree(root):
+    return {
+        os.path.relpath(os.path.join(d, f), root): open(os.path.join(d, f), "rb").read()
+        for d, _, files in os.walk(root)
+        for f in files
+    }
+
+
+def test_open_cursor_refuses_a_plain_layout_store(tmp_path):
+    # A store the former plain-parquet sink wrote has tables but no
+    # manifest. Seeding a cursor there would skip every landed block
+    # under backfill = false, so the follower refuses it untouched.
+    for table in ("rewards", "transactions"):
+        out = tmp_path / table
+        part = out / table / "block_range=1"
+        part.mkdir(parents=True)
+        (part / "part-00000.parquet").write_bytes(b"PAR1 landed rows PAR1")
+        (out / "_meta").mkdir()
+        (out / "_meta" / "follower_info.json").write_text(
+            json.dumps({"height": 1099, "first_block": 1000})
+        )
+        before = _tree(out)
+        probed = []
+        cfg = FollowerConfig(out_dir=str(out), backfill=False)
+        with pytest.raises(RuntimeError, match="backfill = true") as exc:
+            _open_cursor(cfg, lambda: probed.append(1) or 5000)
+        assert str(out) in str(exc.value)
+        assert probed == []
+        assert _tree(out) == before
+
+
+def test_status_reads_the_manifest(tmp_path, capsys):
     out = str(tmp_path)
-    CursorStore(out).write(1059, 1000)
-    st = cli.cmd_status({"out_dir": out}, log=logging.getLogger("t"))
-    assert st["sink"] == "plain"
-    assert (st["height"], st["first_block"]) == (1059, 1000)
-    assert st["tables"] == {}
+    log = logging.getLogger("t")
+    st = cli.cmd_status({"out_dir": out}, log=log)
+    assert (st["snapshot_version"], st["height"], st["first_block"], st["tables"]) == (
+        None, None, None, {},
+    )
+    part = tmp_path / "rewards" / "v=2" / "block_range=1"
+    part.mkdir(parents=True)
+    (part / "part-00000.parquet").write_bytes(b"x" * 10)
+    SnapshotStore(out).publish(
+        {"version": 2, "height": 1059, "first_block": 1000, "tables": {"rewards": {"1": 2}}}
+    )
+    capsys.readouterr()
+    st = cli.cmd_status({"out_dir": out}, log=log)
+    assert (st["snapshot_version"], st["height"], st["first_block"]) == (2, 1059, 1000)
+    assert st["tables"] == {"rewards": {"n_partitions": 1, "n_files": 1, "n_bytes": 10}}
     assert '"height": 1059' in capsys.readouterr().out

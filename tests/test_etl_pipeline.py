@@ -24,6 +24,7 @@ from helium_etl_lite_spark.etl.pipeline import (
     get_first_block,
 )
 from helium_etl_lite_spark.etl.schemas import SENTINEL
+from helium_etl_lite_spark.etl.snapshot import read_snapshot
 
 
 @pytest.fixture(scope="module")
@@ -138,11 +139,11 @@ class TestFollower:
         cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir)
         f = IncrementalFollower(spark, blocks, txns, cfg)
         f.catch_up()
-        expected = spark.read.parquet(os.path.join(out_dir, "rewards")).count()
-        # simulate crash-after-data-before-cursor: rewind cursor, rerun
+        expected = read_snapshot(spark, out_dir, "rewards").count()
+        # rewind the cursor over committed data, rerun
         f.cursor.write(1059, 1000)
         assert f.catch_up() == 60
-        got = spark.read.parquet(os.path.join(out_dir, "rewards")).count()
+        got = read_snapshot(spark, out_dir, "rewards").count()
         assert got == expected  # replay replaced, never duplicated
 
     def test_bounded_batches(self, spark, chain, tmp_path):
@@ -155,6 +156,19 @@ class TestFollower:
         assert f.run_once() == 50
         assert f.cursor.read()[0] == 1049
         assert f.catch_up() == 70
+
+    def test_catch_up_probes_the_tip_once(self, spark, chain, tmp_path, monkeypatch):
+        # The source's file listing is fixed for the call, so once a
+        # pass reaches the probed tip no further probe can find blocks.
+        blocks, txns = chain
+        probes = []
+        tip = IncrementalFollower._tip
+        monkeypatch.setattr(
+            IncrementalFollower, "_tip", lambda self: probes.append(1) or tip(self)
+        )
+        cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=str(tmp_path / "out"))
+        assert IncrementalFollower(spark, blocks, txns, cfg).catch_up() == 120
+        assert len(probes) == 1
 
     def test_no_backfill_starts_at_tip(self, spark, chain, tmp_path):
         blocks, txns = chain
@@ -187,7 +201,7 @@ class TestStreamingTwin:
         q = start_block_stream(spark, feed_dir, txns, cfg, trigger_once=True)
         q.awaitTermination(120)
 
-        got = spark.read.parquet(os.path.join(out_dir, "rewards"))
+        got = read_snapshot(spark, out_dir, "rewards")
         want = transforms.build_outputs("rewards", blocks, txns)["rewards"]
         assert got.count() == want.count()
         assert got.select("block", "account", "gateway", "amount", "type").exceptAll(
@@ -279,64 +293,6 @@ class TestRangeIdempotentWriter:
         assert got.where(F.col("block") == 4).count() == 0
 
 
-class TestCursorCrashSafety:
-    def test_lost_cursor_recovers_from_landed_data(self, spark, chain, tmp_path):
-        blocks, txns = chain
-        out_dir = str(tmp_path / "out")
-        cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir)
-        f = IncrementalFollower(spark, blocks, txns, cfg)
-        f.catch_up()
-        before = spark.read.parquet(os.path.join(out_dir, "rewards")).count()
-        # cursor record gone (a store written before the JSON cursor,
-        # or a lost _meta): init must re-derive from max(block) of the
-        # landed table, NOT re-seed at tip and skip the gap. Recovery
-        # may UNDER-estimate (trailing blocks with no rewards rows);
-        # the idempotent replay of that tail converges.
-        os.remove(CursorStore(out_dir).path)
-        f2 = IncrementalFollower(spark, blocks, txns, cfg)
-        height, first = f2.init_cursor()
-        # both bounds re-derived from landed rows, so approximate: height
-        # may trail the true cursor (rewardless tail) and first may trail
-        # the true first block (rewardless head) — replay covers the tail.
-        assert 1000 <= height <= 1119 and 1000 <= first <= height
-        assert f2.catch_up() == 1119 - height  # replays only the tail
-        assert f2.cursor.read()[0] == 1119
-        after = spark.read.parquet(os.path.join(out_dir, "rewards")).count()
-        assert after == before  # replay converged, no dupes, no gap
-
-    def test_readers_never_see_past_cursor(self, spark, chain, tmp_path):
-        # Kill-between-writes: data for (cursor, tip] is durable but the
-        # cursor bump never happened. The cursor-bounded view must keep
-        # showing the pre-crash snapshot; after replay+bump the rows appear.
-        from helium_etl_lite_spark.etl.pipeline import bound_by_cursor
-
-        blocks, txns = chain
-        out_dir = str(tmp_path / "out")
-        cfg = FollowerConfig(
-            mode="rewards", backfill=True, out_dir=out_dir, max_blocks_per_batch=60
-        )
-
-        def committed():
-            raw = spark.read.parquet(os.path.join(out_dir, "rewards"))
-            return bound_by_cursor(raw, CursorStore(out_dir).read())
-
-        f = IncrementalFollower(spark, blocks, txns, cfg)
-        assert f.run_once() == 60  # blocks 1000..1059 committed
-        committed_before = committed().count()
-        assert committed_before > 0
-        # simulate the crash: land the next range's data WITHOUT the
-        # cursor write
-        f._process_range(1060, 1119)
-        raw = spark.read.parquet(os.path.join(out_dir, "rewards"))
-        assert raw.where(F.col("block") > 1059).count() > 0  # data visible raw
-        got = committed()
-        assert got.count() == committed_before  # but not to committed readers
-        assert got.where(F.col("block") > 1059).count() == 0
-        # replay converges and publishes
-        assert f.catch_up() == 60
-        assert committed().where(F.col("block") > 1059).count() > 0
-
-
 class TestFailStopParity:
     def test_missing_rewards_payload_aborts_batch(self, spark):
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=120)
@@ -422,7 +378,7 @@ def test_ingest_audit_rides_the_landing_action(spark, tmp_path):
     f = IncrementalFollower(spark, blocks, txns, cfg)
     f.catch_up()
     assert hasattr(f, "last_audit")
-    landed = spark.read.parquet(str(tmp_path / "out" / "rewards"))
+    landed = read_snapshot(spark, str(tmp_path / "out"), "rewards")
     # the whole chain lands as ONE range batch here, so the audit must
     # equal the landed totals exactly
     assert f.last_audit["n_rewards"] == landed.count()

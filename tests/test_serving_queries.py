@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from helium_etl_lite_spark.etl import fixtures
 from helium_etl_lite_spark.etl.pipeline import FollowerConfig, IncrementalFollower
+from helium_etl_lite_spark.etl.snapshot import SnapshotStore, commit_batch_atomic, read_snapshot
 
 SENTINEL = "1Wh4bh"
 
@@ -36,8 +37,8 @@ def served(spark, tmp_path_factory):
         spark, blocks, txns, FollowerConfig(mode="full", backfill=True, out_dir=out_dir)
     )
     f.catch_up()
-    rewards = spark.read.parquet(os.path.join(out_dir, "rewards"))
-    transactions = spark.read.parquet(os.path.join(out_dir, "transactions"))
+    rewards = read_snapshot(spark, out_dir, "rewards")
+    transactions = read_snapshot(spark, out_dir, "transactions")
     rewards.createOrReplaceTempView("srv_rewards")
     transactions.createOrReplaceTempView("srv_transactions")
     return rewards, transactions, out_dir
@@ -131,55 +132,47 @@ class TestServingModule:
         got = rv2.select("field").first()
         assert got["field"] is not None and got["field"].isdigit()
 
-    def test_views_share_one_cursor_read(self, spark, served, monkeypatch):
-        # A follower commit landing between cursor reads must not bound
-        # rewards, transactions and follower_info by different heights:
-        # register_views reads the cursor once per call. Each read here
-        # returns a later height, as if a commit had landed before it.
+    def test_views_read_the_manifest_once(self, spark, tmp_path, monkeypatch):
+        # A commit landing between manifest reads must not give rewards,
+        # transactions and follower_info different versions:
+        # register_views reads CURRENT once and serves every table at
+        # that version. Here a version dropping block range 1 lands
+        # right after the first read.
         from helium_etl_lite_spark import serving
-        from helium_etl_lite_spark.etl.pipeline import CursorStore
 
-        _, _, out_dir = served
-        heights = iter([1059, 1089, 1119])
+        out_dir = str(tmp_path / "out")
+        b = spark.range(0, 40).select(
+            F.col("id").alias("block"), F.lit(1.0).alias("amount")
+        )
+        commit_batch_atomic(
+            spark, out_dir, {"rewards": b, "transactions": b}, 0, 39,
+            height=39, first_block=0, range_size=20,
+        )
+        current = SnapshotStore.current
         calls = []
 
-        def read(self):
-            calls.append(self)
-            return next(heights), 1000
+        def read_then_commit(self):
+            m = current(self)
+            calls.append(m["version"])
+            if len(calls) == 1:
+                later = {t: {"0": v["0"]} for t, v in m["tables"].items()}
+                SnapshotStore(out_dir).publish(
+                    {**m, "version": m["version"] + 1, "height": 19, "tables": later}
+                )
+            return m
 
-        monkeypatch.setattr(CursorStore, "read", read)
+        monkeypatch.setattr(SnapshotStore, "current", read_then_commit)
         views = serving.register_views(spark, out_dir)
-        assert len(calls) == 1
-        assert [tuple(r) for r in views["follower_info"].collect()] == [(1059, 1000)]
+        assert calls == [1]
+        assert [tuple(r) for r in views["follower_info"].collect()] == [(39, 0)]
         for table in ("rewards", "transactions"):
-            assert views[table].agg(F.max("block")).first()[0] <= 1059
-
-    def test_committed_views_hide_uncommitted_tail(self, spark, tmp_path):
-        from helium_etl_lite_spark import serving
-        from helium_etl_lite_spark.etl import fixtures
-
-        blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
-        out_dir = str(tmp_path / "out")
-        f = IncrementalFollower(
-            spark, blocks, txns,
-            FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir,
-                           max_blocks_per_batch=30),
-        )
-        assert f.run_once() == 30  # commits 1000..1029
-        f._process_range(1030, 1059)  # data landed, cursor NOT bumped
-        serving.register_views(spark, out_dir)
-        assert spark.sql(
-            "SELECT COUNT(*) AS n FROM rewards WHERE block > 1029"
-        ).first()["n"] == 0  # committed view: invisible
-        serving.register_views(spark, out_dir, committed=False)
-        assert spark.sql(
-            "SELECT COUNT(*) AS n FROM rewards WHERE block > 1029"
-        ).first()["n"] > 0  # raw view: visible
+            assert views[table].count() == 40
 
 
 def test_register_views_raises_on_corrupt_transactions(spark, tmp_path):
-    # ADVICE r2: only a MISSING transactions table means "mode produced
-    # none" — a corrupt table must raise, not silently drop the view.
+    # ADVICE r2: only a table absent from the manifest means "mode
+    # produced none" — a corrupt committed table must raise, not
+    # silently drop the view.
     from helium_etl_lite_spark import serving
 
     blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
@@ -191,11 +184,17 @@ def test_register_views_raises_on_corrupt_transactions(spark, tmp_path):
     # rewards-only mode: no transactions table -> view quietly absent
     views = serving.register_views(spark, out_dir)
     assert "transactions" not in views
-    # now plant a corrupt transactions table: must propagate, not vanish
-    tdir = os.path.join(out_dir, "transactions")
-    os.makedirs(tdir)
-    with open(os.path.join(tdir, "part-0000.parquet"), "wb") as f:
+    # now commit a corrupt transactions table: must propagate, not vanish
+    store = SnapshotStore(out_dir)
+    m = store.current()
+    version = m["version"] + 1
+    pdir = os.path.join(out_dir, "transactions", f"v={version}", "block_range=1")
+    os.makedirs(pdir)
+    with open(os.path.join(pdir, "part-0000.parquet"), "wb") as f:
         f.write(b"this is not parquet")
+    store.publish(
+        {**m, "version": version, "tables": {**m["tables"], "transactions": {"1": version}}}
+    )
     with pytest.raises(Exception) as exc_info:
         serving.register_views(spark, out_dir)
     assert "PATH_NOT_FOUND" not in str(exc_info.value)

@@ -164,28 +164,23 @@ class TestCommitProtocol:
 
 
 class TestFollowerAtomic:
-    def test_follower_atomic_end_to_end_matches_plain(self, spark, tmp_path):
+    def test_follower_end_to_end_matches_build_outputs(self, spark, tmp_path):
+        from helium_etl_lite_spark.etl.transforms import build_outputs
+
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
-        plain_dir, atomic_dir = str(tmp_path / "plain"), str(tmp_path / "atomic")
+        out_dir = str(tmp_path / "out")
         IncrementalFollower(
-            spark, blocks, txns, FollowerConfig(mode="full", out_dir=plain_dir,
+            spark, blocks, txns, FollowerConfig(mode="full", out_dir=out_dir,
                                                 block_range_size=20, backfill=True)
         ).catch_up()
-        IncrementalFollower(
-            spark, blocks, txns, FollowerConfig(mode="full", out_dir=atomic_dir,
-                                                block_range_size=20, atomic=True,
-                                                backfill=True)
-        ).catch_up()
-        plain_rewards = spark.read.parquet(os.path.join(plain_dir, "rewards"))
-        atomic_rewards = read_snapshot(spark, atomic_dir, "rewards")
+        want = build_outputs("full", blocks, txns)
         key = ["block", "transaction_hash", "gateway", "account", "amount"]
-        assert sorted(map(tuple, plain_rewards.select(*key).collect())) == sorted(
-            map(tuple, atomic_rewards.select(*key).collect())
+        assert sorted(map(tuple, want["rewards"].select(*key).collect())) == sorted(
+            map(tuple, read_snapshot(spark, out_dir, "rewards").select(*key).collect())
         )
-        atomic_txns = read_snapshot(spark, atomic_dir, "transactions")
-        plain_txns = spark.read.parquet(os.path.join(plain_dir, "transactions"))
-        assert atomic_txns.count() == plain_txns.count()
-        m = SnapshotStore(atomic_dir).current()
+        got_txns = read_snapshot(spark, out_dir, "transactions")
+        assert got_txns.count() == want["transactions"].dropDuplicates(["hash"]).count()
+        m = SnapshotStore(out_dir).current()
         assert m["height"] == 1059 and m["first_block"] == 1000
 
     def test_follower_atomic_incremental_batches(self, spark, tmp_path):
@@ -194,7 +189,7 @@ class TestFollowerAtomic:
         f = IncrementalFollower(
             spark, blocks, txns,
             FollowerConfig(mode="rewards", out_dir=out_dir, block_range_size=20,
-                           max_blocks_per_batch=25, atomic=True, backfill=True),
+                           max_blocks_per_batch=25, backfill=True),
         )
         f.catch_up()
         m = SnapshotStore(out_dir).current()
@@ -215,7 +210,7 @@ class TestFollowerAtomic:
         IncrementalFollower(
             spark, blocks, txns,
             FollowerConfig(mode="full", out_dir=out_dir, block_range_size=20,
-                           atomic=True, backfill=True),
+                           backfill=True),
         ).catch_up()
         views = serving.register_views(spark, out_dir)
         assert set(views) == {"rewards", "transactions", "follower_info"}
@@ -237,9 +232,7 @@ class TestStreamingAtomic:
         blocks.coalesce(4).write.mode("overwrite").json(feed_dir)
 
         out_dir = str(tmp_path / "out")
-        cfg = FollowerConfig(
-            mode="full", out_dir=out_dir, block_range_size=20, atomic=True
-        )
+        cfg = FollowerConfig(mode="full", out_dir=out_dir, block_range_size=20)
         q = start_block_stream(spark, feed_dir, txns, cfg, trigger_once=True)
         q.awaitTermination(120)
 
@@ -526,7 +519,7 @@ def test_compaction_produces_empty_change_feed(spark, tmp_path):
 
     for r, ver in store.current()["tables"]["rewards"].items():
         _fragment(f"{root}/rewards/v={ver}/block_range={r}")
-    cli.cmd_compact(spark, {"out_dir": root, "atomic": True}, target_mb=128)
+    cli.cmd_compact(spark, {"out_dir": root}, target_mb=128)
     v2 = SnapshotStore(root).current_version()
     assert v2 == v1 + 1  # compaction published a new version
     feed = read_changes(spark, root, "rewards", v1, v2)

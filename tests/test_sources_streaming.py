@@ -134,63 +134,22 @@ class TestHttpRpc:
             # E20 epoch walk against the live endpoint finds the oldest
             # block the node holds
             assert rpc_get_first_block(client) == 1000
-            # full backfill+catch-up through the same follower pipeline
+            # full backfill+catch-up through the same follower pipeline:
+            # one manifest swap per pass, cursor from the manifest
+            from helium_etl_lite_spark.etl.snapshot import SnapshotStore, read_snapshot
+
             out_dir = str(tmp_path / "rpc_out")
             cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir)
             assert rpc_catch_up(spark, client, cfg) == 40
+            m = SnapshotStore(out_dir).current()
+            assert m["height"] == 1039 and m["first_block"] == 1000
             want = transforms.build_outputs("rewards", blocks, txns)["rewards"]
-            got = spark.read.parquet(os.path.join(out_dir, "rewards"))
+            got = read_snapshot(spark, out_dir, "rewards")
             assert got.count() == want.count()
             assert got.select(*want.columns).exceptAll(want).count() == 0
             assert rpc_catch_up(spark, client, cfg) == 0  # at tip: no-op
-            # same follow through the ATOMIC snapshot sink: one manifest
-            # swap per pass, cursor from the manifest, identical rows
-            from helium_etl_lite_spark.etl.snapshot import SnapshotStore, read_snapshot
-
-            atomic_dir = str(tmp_path / "rpc_atomic")
-            acfg = FollowerConfig(
-                mode="rewards", backfill=True, out_dir=atomic_dir, atomic=True
-            )
-            assert rpc_catch_up(spark, client, acfg) == 40
-            m = SnapshotStore(atomic_dir).current()
-            assert m["height"] == 1039 and m["first_block"] == 1000
-            agot = read_snapshot(spark, atomic_dir, "rewards")
-            assert agot.count() == want.count()
-            assert agot.select(*want.columns).exceptAll(want).count() == 0
-            assert rpc_catch_up(spark, client, acfg) == 0
         finally:
             srv.shutdown()
-
-    def test_rpc_follow_recovers_lost_cursor_from_landed_data(self, spark, tmp_path):
-        # A plain store whose cursor record is gone (written before the
-        # JSON cursor, or a lost _meta) must resume from the landed
-        # height, not re-seed at the tip and skip the blocks in between.
-        from helium_etl_lite_spark.etl.pipeline import (
-            CursorStore,
-            FollowerConfig,
-            IncrementalFollower,
-            rpc_catch_up,
-        )
-
-        blocks, txns, blocks_by_h, txns_by_hash = _chain_as_dicts(spark)
-        out_dir = str(tmp_path / "out")
-        landed = FollowerConfig(
-            mode="rewards", backfill=True, out_dir=out_dir, max_blocks_per_batch=30
-        )
-        IncrementalFollower(spark, blocks, txns, landed).run_once()  # 1000..1029
-        height = spark.read.parquet(os.path.join(out_dir, "rewards")).agg(
-            F.max("block")
-        ).collect()[0][0]
-        assert height <= 1029  # the last landed rewards block
-        os.remove(CursorStore(out_dir).path)
-        client = FakeRpcClient(blocks_by_h, txns_by_hash)
-        cfg = FollowerConfig(mode="rewards", backfill=False, out_dir=out_dir)
-        assert rpc_catch_up(spark, client, cfg) == 1039 - height
-        assert CursorStore(out_dir).read()[0] == 1039
-        want = transforms.build_outputs("rewards", blocks, txns)["rewards"]
-        got = spark.read.parquet(os.path.join(out_dir, "rewards"))
-        assert got.count() == want.count()
-        assert got.select(*want.columns).exceptAll(want).count() == 0
 
     def test_start_survives_rpc_failures(self, spark, tmp_path, caplog):
         # A flaky node must not kill the follow loop: the pass fails,
@@ -235,7 +194,9 @@ class TestHttpRpc:
             )
             cfg = cli.load_config(str(cfg_path))
             assert cli.cmd_once(spark, cfg) == 40
-            assert spark.read.parquet(os.path.join(out_dir, "rewards")).count() > 0
+            from helium_etl_lite_spark.etl.snapshot import read_snapshot
+
+            assert read_snapshot(spark, out_dir, "rewards").count() > 0
         finally:
             srv.shutdown()
 
@@ -342,7 +303,9 @@ class TestStreamingFiltersMode:
         )
         q.awaitTermination(120)
 
-        got = spark.read.parquet(os.path.join(out_dir, "rewards"))
+        from helium_etl_lite_spark.etl.snapshot import read_snapshot
+
+        got = read_snapshot(spark, out_dir, "rewards")
         want = transforms.build_outputs("filters", blocks, txns, filters)["rewards"]
         cols = ["block", "account", "gateway", "amount", "type"]
         assert got.count() == want.count()

@@ -5,8 +5,8 @@ Usage: python3 tools/bench_etl.py [n_blocks] [mode]   (default 20000 full)
 
 Builds a synthetic chain (etl/fixtures.py shapes), lands it as parquet,
 then times IncrementalFollower.catch_up() — cursor init, transform
-(explode/sentinel/enum-validate/semi-join), partitioned sinks, cursor
-advance — and prints ONE JSON line.
+(explode/sentinel/enum-validate/semi-join), the snapshot commit of data
+and cursor — and prints ONE JSON line.
 
 Context for the number: the reference processes one block per loop
 iteration with 1 + N_txn JSON-RPC round trips and 2 Postgres round
@@ -29,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from helium_etl_lite_spark.etl import fixtures
 from helium_etl_lite_spark.etl.pipeline import FollowerConfig, IncrementalFollower
+from helium_etl_lite_spark.etl.snapshot import read_snapshot
 from helium_etl_lite_spark.session import get_spark
 
 
@@ -54,7 +55,7 @@ def main():
         t0 = time.perf_counter()
         n = follower.catch_up()
         elapsed = time.perf_counter() - t0
-        rewards_rows = spark.read.parquet(f"{work}/out/rewards").count()
+        rewards_rows = read_snapshot(spark, f"{work}/out", "rewards").count()
         print(
             json.dumps(
                 {
