@@ -26,6 +26,9 @@ Config (TOML, reference settings.toml keys where they translate):
                             chain via HttpRpcClient when set
   blocks_path / txns_path   parquet or JSON-lines chain source (landed
                             block data; used when node_addr is absent)
+  source_format             "json" reads the landed files as JSON-lines
+                            (also when blocks_path ends in .json/.jsonl);
+                            parquet otherwise
   out_dir                   snapshot store root (database_url analog):
                             data and cursor commit together in one
                             manifest rename (etl/snapshot.py)
@@ -33,7 +36,11 @@ Config (TOML, reference settings.toml keys where they translate):
   backfill                  true/false (same semantics as reference)
   filters_path              parquet with (type, value) for filters mode
   tick_seconds              poll interval for `start` (default 10)
-  block_range_size          output partition granularity (default 1000)
+  max_blocks_per_batch      blocks per commit, a positive integer
+                            (default: the whole lag from landed files,
+                            500 fetched blocks from a node)
+  block_range_size          output partition granularity, a positive
+                            integer (default 1000)
 
 Usage:
   python -m helium_etl_lite_spark.cli migrate --config settings.toml
@@ -60,6 +67,7 @@ from .etl.schemas import (
     TXN_SCHEMA,
 )
 from .session import get_spark
+from .sources.block_source import HttpRpcClient, LandedBlockSource, RpcBlockSource
 
 
 def load_config(path: str) -> dict:
@@ -74,6 +82,10 @@ def load_config(path: str) -> dict:
             raise SystemExit(f"config missing required key: {key}")
     if str(cfg.get("mode", "rewards")) not in ("rewards", "full", "filters"):
         raise SystemExit(f"invalid mode: {cfg.get('mode')!r}")
+    for key in ("max_blocks_per_batch", "block_range_size"):
+        v = cfg.get(key)
+        if v is not None and (type(v) is not int or v <= 0):
+            raise SystemExit(f"invalid {key}: {v!r} (expected a positive integer)")
     return cfg
 
 
@@ -97,17 +109,6 @@ def setup_logger(cfg) -> logging.Logger:
     return logger
 
 
-def _sources(spark, cfg):
-    fmt = "json" if str(cfg["blocks_path"]).endswith((".json", ".jsonl")) or cfg.get(
-        "source_format"
-    ) == "json" else "parquet"
-    reader_b = spark.read.schema(BLOCK_SCHEMA)
-    reader_t = spark.read.schema(TXN_SCHEMA)
-    if fmt == "json":
-        return reader_b.json(cfg["blocks_path"]), reader_t.json(cfg["txns_path"])
-    return reader_b.parquet(cfg["blocks_path"]), reader_t.parquet(cfg["txns_path"])
-
-
 def _filters(spark, cfg):
     if cfg.get("mode") != "filters":
         return None
@@ -127,26 +128,33 @@ def _follower_config(cfg) -> FollowerConfig:
 
 
 def _follower(spark, cfg) -> IncrementalFollower:
-    blocks, txns = _sources(spark, cfg)
+    """The follower over the configured source: a live node when
+    node_addr is set (reference settings.node_addr, src/settings.rs:33),
+    landed block files otherwise."""
+    if "node_addr" in cfg:
+        source = RpcBlockSource(spark, HttpRpcClient(str(cfg["node_addr"])))
+    else:
+        as_json = str(cfg["blocks_path"]).endswith((".json", ".jsonl")) or (
+            cfg.get("source_format") == "json"
+        )
+
+        def read(schema, path):
+            reader = spark.read.schema(schema)
+            return reader.json(path) if as_json else reader.parquet(path)
+
+        source = LandedBlockSource(
+            read(BLOCK_SCHEMA, cfg["blocks_path"]), read(TXN_SCHEMA, cfg["txns_path"])
+        )
     return IncrementalFollower(
-        spark, blocks, txns, _follower_config(cfg), filters=_filters(spark, cfg)
+        spark, source, _follower_config(cfg), filters=_filters(spark, cfg)
     )
 
 
 def _catch_up(spark, cfg) -> tuple[int, tuple[int, int]]:
-    """One catch-up pass via the configured source: live JSON-RPC when
-    node_addr is set (reference settings.node_addr, src/settings.rs:33),
-    landed block files otherwise. Returns (blocks loaded, cursor)."""
-    config = _follower_config(cfg)
-    if "node_addr" in cfg:
-        from .etl.pipeline import rpc_catch_up
-        from .sources.block_source import HttpRpcClient
-
-        client = HttpRpcClient(str(cfg["node_addr"]))
-        n = rpc_catch_up(spark, client, config, filters=_filters(spark, cfg))
-    else:
-        n = _follower(spark, cfg).catch_up()
-    return n, CursorStore(config.out_dir).read()
+    """Catch up to the configured source's tip. Returns (blocks loaded,
+    cursor)."""
+    n = _follower(spark, cfg).catch_up()
+    return n, CursorStore(str(cfg["out_dir"])).read()
 
 
 def cmd_migrate(spark, cfg, log=None) -> None:

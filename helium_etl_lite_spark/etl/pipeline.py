@@ -1,6 +1,13 @@
 """Batch-incremental follower: the reference's poll/catch-up/commit loop
 (SURVEY §2.1 E16-E20) on Spark.
 
+One loop, one source interface: IncrementalFollower follows a block
+source (sources/block_source.py) — landed files or a live JSON-RPC
+node — that answers tip(), first() and range(lo, hi). catch_up opens
+the cursor, probes the tip once and commits (cursor, tip] in passes
+(reference src/follower.rs:69-98); blocks that arrive meanwhile wait
+for the next call, as they wait for the reference's next 10 s tick.
+
 Differences by design (Spark-first, not a translation):
 - The reference processes ONE block per transaction
   (src/follower.rs:99-112). Here a catch-up pass processes the whole
@@ -219,18 +226,20 @@ class FollowerConfig:
     mode: str = "rewards"          # rewards | full | filters
     backfill: bool = False
     out_dir: str = "/tmp/helium_out"
-    max_blocks_per_batch: int | None = None  # None = whole lag in one job
+    # blocks per pass; None = the source's PASS_LIMIT (landed files:
+    # the whole lag in one job; a live node: 500 fetched blocks)
+    max_blocks_per_batch: int | None = None
     block_range_size: int = 1000   # blocks per output partition directory
 
 
 class IncrementalFollower:
-    """E17-E19: cursor init, catch-up loop, cursor advance."""
+    """E17-E19: cursor init, catch-up loop, cursor advance over a block
+    source (sources/block_source.py: tip, first, range, PASS_LIMIT)."""
 
     def __init__(
         self,
         spark: SparkSession,
-        blocks: DataFrame,
-        txns: DataFrame,
+        source,
         config: FollowerConfig,
         filters: DataFrame | None = None,
     ):
@@ -241,8 +250,7 @@ class IncrementalFollower:
         if config.mode == "filters" and filters is None:
             raise ValueError("filters mode requires the filters table")
         self.spark = spark
-        self.blocks = blocks
-        self.txns = txns
+        self.source = source
         self.config = config
         self.filters = filters
         self.cursor = CursorStore(config.out_dir)
@@ -250,29 +258,18 @@ class IncrementalFollower:
     # -- cursor init (reference src/follower.rs:27-41) ------------------
     def init_cursor(self) -> tuple[int, int]:
         def first() -> int:
-            if self.config.backfill:
-                return get_first_block(self.spark, self.blocks, self.txns)
-            return self._tip()
+            return self.source.first() if self.config.backfill else self.source.tip()
 
         return _open_cursor(self.config, first)
 
-    def _tip(self) -> int:
-        # E1: chain-tip probe (reference src/follower.rs:76).
-        return self.blocks.agg(F.max("height")).collect()[0][0]
-
     # -- catch-up passes (reference src/follower.rs:69-98) --------------
-    def run_once(self) -> int:
-        """Process (cursor, tip] and return the number of blocks loaded."""
-        height, first_block = self.init_cursor()
-        return self._pass(height, first_block, self._tip())
-
     def catch_up(self) -> int:
         """Process (cursor, tip] in passes of at most max_blocks_per_batch
-        blocks (bounded-replay E19). The tip is probed once: the source
-        DataFrame's file listing is fixed for the call, so a later probe
-        could find no further block."""
+        blocks, or the source's PASS_LIMIT when unset (bounded-replay
+        E19), and return the number of blocks loaded. The tip is probed
+        once; newer blocks are left to the next call."""
         height, first_block = self.init_cursor()
-        tip = self._tip()
+        tip = self.source.tip()
         total = 0
         while n := self._pass(height + total, first_block, tip):
             total += n
@@ -281,19 +278,16 @@ class IncrementalFollower:
     def _pass(self, height: int, first_block: int, tip: int | None) -> int:
         if tip is None or tip <= height:
             return 0
-        upper = tip
-        if self.config.max_blocks_per_batch is not None:
-            upper = min(tip, height + self.config.max_blocks_per_batch)
+        limit = self.config.max_blocks_per_batch or self.source.PASS_LIMIT
+        upper = tip if limit is None else min(tip, height + limit)
         self._commit_range(height + 1, upper, first_block)
         return upper - height
 
     def _commit_range(self, lo: int, hi: int, first_block: int) -> None:
         # E14-E18 as ONE transaction: every output table and the cursor
-        # advance publish together in the manifest swap. The height
-        # predicate prunes partitions at the source (src/follower.rs:86's
-        # `h > self.height`, vectorized).
-        blocks = self.blocks.where(F.col("height").between(lo, hi))
-        out = build_outputs(self.config.mode, blocks, self.txns, self.filters)
+        # advance publish together in the manifest swap.
+        blocks, txns = self.source.range(lo, hi)
+        out = build_outputs(self.config.mode, blocks, txns, self.filters)
         tables = {"rewards": out["rewards"]}
         if "transactions" in out:
             # PK(hash) idempotence (migrations/V3:43)
@@ -349,90 +343,6 @@ class IncrementalFollower:
             logging.WARNING if "error" in self.last_audit else logging.INFO,
             f"audit [{lo},{hi}]: {self.last_audit}",
         )
-
-
-def rpc_catch_up(
-    spark: SparkSession,
-    client,
-    config: FollowerConfig,
-    filters: DataFrame | None = None,
-    max_fetch_per_pass: int = 500,
-) -> int:
-    """Catch up against a live JSON-RPC node (the reference's main loop,
-    src/follower.rs:69-98): probe the tip, fetch the lagging range via
-    RpcBlockSource, and run the same follower over it. Returns blocks
-    loaded. The per-pass fetch bound keeps driver memory flat while
-    catching up from far behind."""
-    from ..sources.block_source import RpcBlockSource
-
-    height, _first = _open_cursor(
-        config,
-        lambda: rpc_get_first_block(client) if config.backfill else client.height(),
-    )
-    total = 0
-    tip = client.height()
-    while tip > height:
-        bound = config.max_blocks_per_batch or max_fetch_per_pass
-        hi = min(tip, height + bound)
-        src = RpcBlockSource(spark, client, height + 1, hi)
-        follower = IncrementalFollower(spark, src.blocks(), src.txns(), config, filters=filters)
-        n = follower.run_once()
-        if n == 0:
-            break
-        total += n
-        height += n
-        tip = client.height()  # the chain may have advanced meanwhile
-    return total
-
-
-def rpc_get_first_block(client, max_hops: int = 100_000) -> int:
-    """E20 against a live node: the literal backward epoch walk
-    (reference src/follower.rs:144-194) — hop rewards_v2.start_epoch
-    pointers from the tip; on a fetch failure outside the last epoch,
-    re-enter at last_safe-1 and walk block-by-block; on a failure inside
-    it, the last safe height is the oldest block the node holds."""
-    height = client.height()
-    last_safe = height
-    in_last_epoch = False
-    for _ in range(max_hops):
-        try:
-            block = client.get_block_raw(height)
-        except Exception:
-            if in_last_epoch:
-                return last_safe  # src/follower.rs:159
-            in_last_epoch = True  # src/follower.rs:160-167
-            height = last_safe - 1
-            if height < 1:
-                return last_safe
-            continue
-        hop = None
-        if not in_last_epoch:
-            for t in block["transactions"]:
-                if t["type"] == "rewards_v2":
-                    payload = client.get_transaction(t["hash"])
-                    epoch = payload.get("start_epoch")
-                    if epoch is not None:
-                        hop = epoch if hop is None else min(hop, epoch)
-        last_safe = height
-        height = hop if hop is not None else height - 1  # src/follower.rs:176,189-190
-        if height < 1:
-            return last_safe
-    return last_safe
-
-
-def get_first_block(spark: SparkSession, blocks: DataFrame, txns: DataFrame) -> int:
-    """E20: backfill boundary discovery (reference src/follower.rs:144-194).
-
-    The reference walks backward block-by-block, hopping whole epochs via
-    rewards_v2.start_epoch pointers, because its source only supports
-    point lookups. Our source supports aggregation, so the common case is
-    one metadata-only query: min(height). The epoch-hop remains available
-    as a driver-side loop for sources where old blocks fail to fetch
-    (reference :158-167); it issues tiny point queries, exactly like the
-    reference, and falls back to the last safe height on a gap.
-    """
-    row = blocks.agg(F.min("height").alias("mn")).collect()[0]
-    return int(row["mn"])
 
 
 def backfill_epoch_walk(blocks: DataFrame, txns: DataFrame, tip: int, max_hops: int = 1000) -> int:

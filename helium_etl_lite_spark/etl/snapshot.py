@@ -88,21 +88,23 @@ class ConcurrentSnapshotWriteError(RuntimeError):
     different content; the loser must re-read CURRENT and recommit."""
 
 
-class SnapshotStore:
-    """Manifest bookkeeping: read CURRENT, publish a new version."""
+# How long an unreferenced manifest must sit before a replay may
+# overwrite it (see SnapshotStore.publish). The orphan-age test trusts
+# filesystem mtime: on NFS or object-store gateways mtime can be coarse
+# (whole seconds) or clock-skewed, which narrows the protection — there
+# the grace must sit WELL above the worst expected skew (minutes, not
+# this local-disk 60 s).
+ORPHAN_GRACE_SECONDS = 60.0
 
-    def __init__(self, root: str, orphan_grace_seconds: float = 60.0):
+
+class SnapshotStore:
+    """Manifest bookkeeping: read CURRENT, publish a new version. The
+    one module that knows the `_snapshots/` layout (`snap-<version>.json`
+    manifests, the `CURRENT` pointer)."""
+
+    def __init__(self, root: str):
         self.root = root
         self.dir = os.path.join(root, "_snapshots")
-        # How long an unreferenced manifest must sit before a replay may
-        # overwrite it (see publish() — closes the r6 ADVICE TOCTOU).
-        # The orphan-age test trusts filesystem mtime: on NFS or
-        # object-store gateways mtime can be coarse (whole seconds) or
-        # clock-skewed, which narrows the protection — size the grace
-        # WELL above the worst skew you expect there (minutes, not the
-        # 60 s local-disk default); callers tune it through
-        # commit_batch_atomic(orphan_grace_seconds=) (r7 ADVICE).
-        self.orphan_grace_seconds = orphan_grace_seconds
 
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.dir, f"snap-{version:012d}.json")
@@ -153,7 +155,7 @@ class SnapshotStore:
           crash-replay after the tip advanced (true orphan, never
           reader-visible) OR a live writer mid-commit-window. The two
           are indistinguishable at a point in time, so the overwrite is
-          gated on `orphan_grace_seconds`: a manifest older than the
+          gated on ORPHAN_GRACE_SECONDS: a manifest older than the
           grace whose CURRENT never arrived is a proven orphan (a live
           writer swaps CURRENT within its commit window); a younger one
           raises ConcurrentSnapshotWriteError and the caller retries —
@@ -182,7 +184,7 @@ class SnapshotStore:
             else:
                 cur = self.current_version()
                 age = time.time() - os.path.getmtime(mpath)
-                if (cur is None or cur < version) and age >= self.orphan_grace_seconds:
+                if (cur is None or cur < version) and age >= ORPHAN_GRACE_SECONDS:
                     # proven orphan: linked >= grace ago and CURRENT
                     # never reached it — no reader ever saw it; the
                     # replay may carry different content (tip advanced
@@ -199,7 +201,7 @@ class SnapshotStore:
                             "on top of it)"
                             if cur is not None and cur >= version
                             else "(claim is younger than "
-                            f"{self.orphan_grace_seconds}s — possibly a "
+                            f"{ORPHAN_GRACE_SECONDS}s — possibly a "
                             "live writer mid-commit; retry after the "
                             "grace period)"
                         )
@@ -478,17 +480,12 @@ def commit_batch_atomic(
     first_block: int,
     range_size: int = 1000,
     heights: DataFrame | None = None,
-    orphan_grace_seconds: float = 60.0,
     touched_ranges: set[int] | None = None,
 ) -> dict:
     """Land a batch into every output table AND advance the cursor as
     ONE atomic commit. Claim semantics match
     write_block_range_idempotent: heights=None claims the whole span
     [lo, hi]; heights=<df> claims exactly that block set.
-
-    ``orphan_grace_seconds`` tunes the publish() orphan-reclaim window
-    (see SnapshotStore.__init__ for the mtime-resolution caveat on
-    network filesystems).
 
     ``touched_ranges`` (r15, guide §1.2): when the caller already
     knows the claimed block-range set — it MUST equal the distinct
@@ -498,7 +495,7 @@ def commit_batch_atomic(
     set in one aggregation pass instead of one driver job per commit.
 
     Returns the published manifest."""
-    store = SnapshotStore(root, orphan_grace_seconds=orphan_grace_seconds)
+    store = SnapshotStore(root)
     cur = store.current()
     version = (cur["version"] + 1) if cur else 1
     cur_tables: dict[str, dict] = dict(cur["tables"]) if cur else {}

@@ -1,20 +1,31 @@
-"""Block/transaction sources (SURVEY §2.1 E1-E3).
+"""Block/transaction sources (SURVEY §2.1 E1-E3): what the follower
+follows.
 
 The reference pulls blocks over JSON-RPC: a tip probe
 (src/follower.rs:76), a raw-block fetch per height
 (src/block_processor.rs:29) and an N+1 typed-txn fetch per hash
-(:58, :130). In Spark the source's job is to expose the same data as
-DataFrames so the rest of the pipeline is declarative; three shapes:
+(:58, :130). A source here answers the three questions the follower's
+one catch-up loop asks (etl/pipeline.py IncrementalFollower), so landed
+files and a live node run through the same loop:
 
-- ParquetBlockSource: columnar tables (the at-scale path; heights
-  partition-prune).
-- JsonBlockSource: directory of BlockRaw JSON documents (the wire-format
-  analog; also what the streaming twin reads).
-- RpcBlockSource: driver-side point-fetch loop over an RpcClient
-  protocol — the literal reference topology, for near-tip following
-  where only a handful of new blocks exist per tick. Batch-fetches the
-  (cursor, tip] range then parallelizes it as a DataFrame, replacing
-  the reference's per-txn round trips with one createDataFrame.
+  tip()          the newest height (None when there is no block)
+  first()        the backfill start (reference get_first_block,
+                 src/follower.rs:144-194)
+  range(lo, hi)  the (blocks, txns) DataFrames for one pass over [lo, hi]
+  PASS_LIMIT     blocks per pass when max_blocks_per_batch is unset
+                 (None: the whole lag in one pass)
+
+Two implementations:
+
+- LandedBlockSource: block and transaction DataFrames over landed
+  parquet or JSON-lines files (cli.py picks the reader). tip() and
+  first() are one aggregate each; range() is a height predicate that
+  partition-prunes, so the whole lag runs as one distributed job.
+- RpcBlockSource: driver-side point fetches over an RpcClient — the
+  literal reference topology, for near-tip following where only a
+  handful of new blocks exist per tick. A pass fetches each block and
+  each transaction once, then hands them to Spark with one
+  createDataFrame per table instead of the reference's per-row INSERTs.
 
 RpcClient is a protocol with two implementations: HttpRpcClient (a
 stdlib-urllib JSON-RPC 2.0 client speaking the blockchain-node API the
@@ -30,53 +41,39 @@ import urllib.request
 from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..etl.schemas import BLOCK_SCHEMA, TXN_SCHEMA
 
 
-class BlockSource(Protocol):
-    def tip(self) -> int: ...
-    def blocks(self) -> DataFrame: ...
-    def txns(self) -> DataFrame: ...
+class LandedBlockSource:
+    """Blocks and transactions already landed on storage, as DataFrames
+    (cli.py reads them with an explicit schema: no inference pass)."""
 
+    PASS_LIMIT = None
 
-class ParquetBlockSource:
-    def __init__(self, spark: SparkSession, blocks_path: str, txns_path: str):
-        self.spark = spark
-        self.blocks_path = blocks_path
-        self.txns_path = txns_path
+    def __init__(self, blocks: DataFrame, txns: DataFrame):
+        self.blocks = blocks
+        self.txns = txns
 
-    def tip(self) -> int:
-        from pyspark.sql import functions as F
+    def tip(self) -> int | None:
+        # E1: chain-tip probe (reference src/follower.rs:76).
+        return self.blocks.agg(F.max("height")).collect()[0][0]
 
-        return self.blocks().agg(F.max("height")).collect()[0][0]
+    def first(self) -> int:
+        """E20: backfill boundary. The reference walks backward, hopping
+        whole epochs via rewards_v2.start_epoch pointers, because its
+        source only supports point lookups; landed files support
+        aggregation, so the start is one min(height) aggregate.
+        The literal walk stays as the parity reference
+        (etl/pipeline.py backfill_epoch_walk)."""
+        return int(self.blocks.agg(F.min("height")).collect()[0][0])
 
-    def blocks(self) -> DataFrame:
-        return self.spark.read.schema(BLOCK_SCHEMA).parquet(self.blocks_path)
-
-    def txns(self) -> DataFrame:
-        return self.spark.read.schema(TXN_SCHEMA).parquet(self.txns_path)
-
-
-class JsonBlockSource:
-    """BlockRaw documents as JSON-lines files — the wire format landed
-    on storage. Explicit schema: no inference pass over 100 TB."""
-
-    def __init__(self, spark: SparkSession, blocks_dir: str, txns_dir: str):
-        self.spark = spark
-        self.blocks_dir = blocks_dir
-        self.txns_dir = txns_dir
-
-    def tip(self) -> int:
-        from pyspark.sql import functions as F
-
-        return self.blocks().agg(F.max("height")).collect()[0][0]
-
-    def blocks(self) -> DataFrame:
-        return self.spark.read.schema(BLOCK_SCHEMA).json(self.blocks_dir)
-
-    def txns(self) -> DataFrame:
-        return self.spark.read.schema(TXN_SCHEMA).json(self.txns_dir)
+    def range(self, lo: int, hi: int) -> tuple[DataFrame, DataFrame]:
+        # The height predicate prunes partitions at the source
+        # (src/follower.rs:86's `h > self.height`, vectorized); the
+        # transforms join the transactions the range's blocks name.
+        return self.blocks.where(F.col("height").between(lo, hi)), self.txns
 
 
 class RpcClient(Protocol):
@@ -158,40 +155,67 @@ class FakeRpcClient:
 
 
 class RpcBlockSource:
-    """Near-tip follower source: fetch the lagging range via point RPCs
-    (driver-side, tiny), then hand the pipeline DataFrames. One
-    createDataFrame replaces the reference's per-row INSERT path; the
-    N+1 txn fetches collapse to one pass over the hashes in range."""
+    """Near-tip follower source over a live node: point RPCs on the
+    driver, then DataFrames for the pipeline."""
 
-    def __init__(self, spark: SparkSession, client: RpcClient, lo: int, hi: int):
+    # Blocks fetched per pass when max_blocks_per_batch is unset: keeps
+    # driver memory flat while catching up from far behind.
+    PASS_LIMIT = 500
+
+    def __init__(self, spark: SparkSession, client: RpcClient):
         self.spark = spark
         self.client = client
-        self.lo = lo
-        self.hi = hi
 
     def tip(self) -> int:
         return self.client.height()
 
-    def blocks(self) -> DataFrame:
-        rows = []
-        for h in range(self.lo, self.hi + 1):
+    def first(self) -> int:
+        """E20 against a live node: the literal backward epoch walk
+        (reference src/follower.rs:144-194) — hop rewards_v2.start_epoch
+        pointers from the tip; on a fetch failure outside the last epoch,
+        re-enter at last_safe-1 and walk block-by-block; on a failure inside
+        it, the last safe height is the oldest block the node holds."""
+        height = self.client.height()
+        last_safe = height
+        in_last_epoch = False
+        for _ in range(100_000):  # hop bound: never spin on a broken node
+            try:
+                block = self.client.get_block_raw(height)
+            except Exception:
+                if in_last_epoch:
+                    return last_safe  # src/follower.rs:159
+                in_last_epoch = True  # src/follower.rs:160-167
+                height = last_safe - 1
+                if height < 1:
+                    return last_safe
+                continue
+            hop = None
+            if not in_last_epoch:
+                for t in block["transactions"]:
+                    if t["type"] == "rewards_v2":
+                        payload = self.client.get_transaction(t["hash"])
+                        epoch = payload.get("start_epoch")
+                        if epoch is not None:
+                            hop = epoch if hop is None else min(hop, epoch)
+            last_safe = height
+            height = hop if hop is not None else height - 1  # src/follower.rs:176,189-190
+            if height < 1:
+                return last_safe
+        return last_safe
+
+    def range(self, lo: int, hi: int) -> tuple[DataFrame, DataFrame]:
+        # One get_block_raw per height and one get_transaction per hash;
+        # the N+1 txn fetches of the reference collapse into this pass.
+        blocks, txns = [], {}
+        for h in range(lo, hi + 1):
             b = self.client.get_block_raw(h)
-            rows.append(
-                (
-                    b["height"],
-                    b["time"],
-                    b["hash"],
-                    [{"type": t["type"], "hash": t["hash"]} for t in b["transactions"]],
-                )
-            )
-        return self.spark.createDataFrame(rows, BLOCK_SCHEMA)
-
-    def txns(self) -> DataFrame:
-        import json as _json
-
-        rows = []
-        for h in range(self.lo, self.hi + 1):
-            for t in self.client.get_block_raw(h)["transactions"]:
-                payload = self.client.get_transaction(t["hash"])
-                rows.append((t["hash"], t["type"], _json.dumps(payload)))
-        return self.spark.createDataFrame(rows, TXN_SCHEMA)
+            refs = [{"type": t["type"], "hash": t["hash"]} for t in b["transactions"]]
+            blocks.append((b["height"], b["time"], b["hash"], refs))
+            for t in refs:
+                if t["hash"] not in txns:
+                    payload = self.client.get_transaction(t["hash"])
+                    txns[t["hash"]] = (t["hash"], t["type"], _json.dumps(payload))
+        return (
+            self.spark.createDataFrame(blocks, BLOCK_SCHEMA),
+            self.spark.createDataFrame(list(txns.values()), TXN_SCHEMA),
+        )

@@ -24,6 +24,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from ..etl.snapshot import SnapshotStore
+
 BLOCK_SCHEMA = "height long, block_hash string, block_date string, n_txns long"
 
 
@@ -154,28 +156,6 @@ def register(spark) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _read_manifest(root: str, version: int) -> dict | None:
-    import json
-    import os
-
-    p = os.path.join(root, "_snapshots", f"snap-{version:012d}.json")
-    try:
-        with open(p) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-def _current_version(root: str) -> int | None:
-    import os
-
-    try:
-        with open(os.path.join(root, "_snapshots", "CURRENT")) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        return None
-
-
 def _changes_rows(root: str, table: str, v_from: int, v_to: int, columns):
     """Net row-level changes between two manifests, computed WITHOUT a
     SparkSession (this runs inside the data source): manifest diff
@@ -188,8 +168,10 @@ def _changes_rows(root: str, table: str, v_from: int, v_to: int, columns):
     import pandas as pd
     import pyarrow.parquet as pq
 
-    m_from = _read_manifest(root, v_from) if v_from > 0 else {"tables": {}}
-    m_to = _read_manifest(root, v_to)
+    store = SnapshotStore(root)
+    # version 0 is the empty store before the first commit
+    m_from = store.manifest(v_from) if v_from > 0 else {"tables": {}}
+    m_to = store.manifest(v_to)
     if m_from is None or m_to is None:
         missing = v_from if m_from is None else v_to
         raise ValueError(
@@ -245,7 +227,7 @@ class SnapshotChangesStreamReader(SimpleDataSourceStreamReader):
         return {"version": 0}
 
     def read(self, start):
-        cur = _current_version(self._root)
+        cur = SnapshotStore(self._root).current_version()
         v0 = start["version"]
         if cur is None or cur <= v0:
             return iter([]), {"version": v0}
@@ -283,13 +265,14 @@ class SnapshotChangesDataSource(DataSource):
 
         root = self.options.get("root")
         table = self.options.get("table", "rewards")
-        cur = _current_version(root)
-        if cur is None:
+        manifest = SnapshotStore(root).current()
+        if manifest is None:
             raise ValueError(f"snapshot_changes: no snapshot store at {root}")
-        manifest = _read_manifest(root, cur)
         parts = manifest["tables"].get(table, {})
         if not parts:
-            raise ValueError(f"snapshot_changes: no table {table} in snapshot {cur}")
+            raise ValueError(
+                f"snapshot_changes: no table {table} in snapshot {manifest['version']}"
+            )
         r, v = next(iter(sorted(parts.items(), key=lambda kv: int(kv[0]))))
         d = os.path.join(root, table, f"v={v}", f"block_range={r}")
         leaf = next(

@@ -1,6 +1,6 @@
 """The follower cursor without Spark (fast lane): CursorStore over the
 snapshot manifest, its crash behaviour, cursor seeding, the refusal of a
-plain-parquet store, and `cli status`."""
+plain-parquet store, `cli status` and the config size checks."""
 
 from __future__ import annotations
 
@@ -116,3 +116,17 @@ def test_status_reads_the_manifest(tmp_path, capsys):
     assert (st["snapshot_version"], st["height"], st["first_block"]) == (2, 1059, 1000)
     assert st["tables"] == {"rewards": {"n_partitions": 1, "n_files": 1, "n_bytes": 10}}
     assert '"height": 1059' in capsys.readouterr().out
+
+
+@pytest.mark.parametrize("value", [0, -5, "10"])
+def test_load_config_rejects_non_positive_sizes(tmp_path, value):
+    # 0 would commit an empty range every pass and never advance the
+    # cursor; a negative size would loop forever committing it backwards.
+    base = 'blocks_path = "b"\ntxns_path = "t"\nout_dir = "o"\n'
+    path = tmp_path / "settings.toml"
+    for key in ("max_blocks_per_batch", "block_range_size"):
+        path.write_text(base + f"{key} = {json.dumps(value)}\n")
+        with pytest.raises(SystemExit, match=f"invalid {key}"):
+            cli.load_config(str(path))
+        path.write_text(base + f"{key} = 25\n")
+        assert cli.load_config(str(path))[key] == 25

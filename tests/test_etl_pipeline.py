@@ -21,10 +21,10 @@ from helium_etl_lite_spark.etl.pipeline import (
     FollowerConfig,
     IncrementalFollower,
     backfill_epoch_walk,
-    get_first_block,
 )
 from helium_etl_lite_spark.etl.schemas import SENTINEL
-from helium_etl_lite_spark.etl.snapshot import read_snapshot
+from helium_etl_lite_spark.etl.snapshot import SnapshotStore, read_snapshot
+from helium_etl_lite_spark.sources.block_source import LandedBlockSource
 
 
 @pytest.fixture(scope="module")
@@ -124,7 +124,7 @@ class TestFollower:
     def test_catch_up_and_cursor(self, spark, chain, tmp_path):
         blocks, txns = chain
         cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=str(tmp_path / "out"))
-        f = IncrementalFollower(spark, blocks, txns, cfg)
+        f = IncrementalFollower(spark, LandedBlockSource(blocks, txns), cfg)
         n = f.catch_up()
         assert n == 120
         height, first = f.cursor.read()
@@ -137,7 +137,7 @@ class TestFollower:
         blocks, txns = chain
         out_dir = str(tmp_path / "out")
         cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir)
-        f = IncrementalFollower(spark, blocks, txns, cfg)
+        f = IncrementalFollower(spark, LandedBlockSource(blocks, txns), cfg)
         f.catch_up()
         expected = read_snapshot(spark, out_dir, "rewards").count()
         # rewind the cursor over committed data, rerun
@@ -152,34 +152,34 @@ class TestFollower:
             mode="rewards", backfill=True, out_dir=str(tmp_path / "out"),
             max_blocks_per_batch=50,
         )
-        f = IncrementalFollower(spark, blocks, txns, cfg)
-        assert f.run_once() == 50
-        assert f.cursor.read()[0] == 1049
-        assert f.catch_up() == 70
+        f = IncrementalFollower(spark, LandedBlockSource(blocks, txns), cfg)
+        assert f.catch_up() == 120
+        assert f.cursor.read()[0] == 1119
+        # one seed publish + ceil(120/50)=3 pass commits
+        assert SnapshotStore(cfg.out_dir).current()["version"] == 4
 
-    def test_catch_up_probes_the_tip_once(self, spark, chain, tmp_path, monkeypatch):
+    def test_catch_up_probes_the_tip_once(self, spark, chain, tmp_path):
         # The source's file listing is fixed for the call, so once a
         # pass reaches the probed tip no further probe can find blocks.
         blocks, txns = chain
+        source = LandedBlockSource(blocks, txns)
         probes = []
-        tip = IncrementalFollower._tip
-        monkeypatch.setattr(
-            IncrementalFollower, "_tip", lambda self: probes.append(1) or tip(self)
-        )
+        tip = source.tip
+        source.tip = lambda: probes.append(1) or tip()
         cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=str(tmp_path / "out"))
-        assert IncrementalFollower(spark, blocks, txns, cfg).catch_up() == 120
+        assert IncrementalFollower(spark, source, cfg).catch_up() == 120
         assert len(probes) == 1
 
     def test_no_backfill_starts_at_tip(self, spark, chain, tmp_path):
         blocks, txns = chain
         cfg = FollowerConfig(mode="rewards", backfill=False, out_dir=str(tmp_path / "out"))
-        f = IncrementalFollower(spark, blocks, txns, cfg)
+        f = IncrementalFollower(spark, LandedBlockSource(blocks, txns), cfg)
         height, first = f.init_cursor()
         assert first == 1119 and height == 1118  # cursor = first-1
 
     def test_backfill_discovery(self, spark, chain):
         blocks, txns = chain
-        assert get_first_block(spark, blocks, txns) == 1000
+        assert LandedBlockSource(blocks, txns).first() == 1000
         # the literal epoch-hop walk lands at (or before) the first
         # epoch boundary reachable from the tip
         oldest = backfill_epoch_walk(blocks, txns, tip=1119)
@@ -375,7 +375,7 @@ def test_ingest_audit_rides_the_landing_action(spark, tmp_path):
         mode="rewards", backfill=True, out_dir=str(tmp_path / "out"),
         block_range_size=20,
     )
-    f = IncrementalFollower(spark, blocks, txns, cfg)
+    f = IncrementalFollower(spark, LandedBlockSource(blocks, txns), cfg)
     f.catch_up()
     assert hasattr(f, "last_audit")
     landed = read_snapshot(spark, str(tmp_path / "out"), "rewards")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from helium_etl_lite_spark.etl import fixtures
 from helium_etl_lite_spark.etl.pipeline import FollowerConfig, IncrementalFollower
 from helium_etl_lite_spark.etl.snapshot import SnapshotStore, commit_batch_atomic, read_snapshot
+from helium_etl_lite_spark.sources.block_source import LandedBlockSource
 
 SENTINEL = "1Wh4bh"
 
@@ -34,7 +35,8 @@ def served(spark, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("serving") / "out")
     blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=120)
     f = IncrementalFollower(
-        spark, blocks, txns, FollowerConfig(mode="full", backfill=True, out_dir=out_dir)
+        spark, LandedBlockSource(blocks, txns),
+        FollowerConfig(mode="full", backfill=True, out_dir=out_dir),
     )
     f.catch_up()
     rewards = read_snapshot(spark, out_dir, "rewards")
@@ -178,7 +180,7 @@ def test_register_views_raises_on_corrupt_transactions(spark, tmp_path):
     blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
     out_dir = str(tmp_path / "out")
     IncrementalFollower(
-        spark, blocks, txns,
+        spark, LandedBlockSource(blocks, txns),
         FollowerConfig(mode="rewards", out_dir=out_dir, backfill=True),
     ).catch_up()
     # rewards-only mode: no transactions table -> view quietly absent

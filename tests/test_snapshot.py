@@ -24,6 +24,7 @@ from helium_etl_lite_spark.etl.snapshot import (
     commit_batch_atomic,
     read_snapshot,
 )
+from helium_etl_lite_spark.sources.block_source import LandedBlockSource
 
 
 def _df(spark, blocks, v=None):
@@ -170,8 +171,8 @@ class TestFollowerAtomic:
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
         out_dir = str(tmp_path / "out")
         IncrementalFollower(
-            spark, blocks, txns, FollowerConfig(mode="full", out_dir=out_dir,
-                                                block_range_size=20, backfill=True)
+            spark, LandedBlockSource(blocks, txns),
+            FollowerConfig(mode="full", out_dir=out_dir, block_range_size=20, backfill=True),
         ).catch_up()
         want = build_outputs("full", blocks, txns)
         key = ["block", "transaction_hash", "gateway", "account", "amount"]
@@ -187,7 +188,7 @@ class TestFollowerAtomic:
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
         out_dir = str(tmp_path / "inc")
         f = IncrementalFollower(
-            spark, blocks, txns,
+            spark, LandedBlockSource(blocks, txns),
             FollowerConfig(mode="rewards", out_dir=out_dir, block_range_size=20,
                            max_blocks_per_batch=25, backfill=True),
         )
@@ -208,7 +209,7 @@ class TestFollowerAtomic:
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=40)
         out_dir = str(tmp_path / "serve")
         IncrementalFollower(
-            spark, blocks, txns,
+            spark, LandedBlockSource(blocks, txns),
             FollowerConfig(mode="full", out_dir=out_dir, block_range_size=20,
                            backfill=True),
         ).catch_up()
@@ -340,7 +341,7 @@ def test_publish_recovers_orphan_manifest_beyond_current(spark, tmp_path):
     with open(store._manifest_path(2), "w") as f:
         _json.dump(orphan, f)
     # age the orphan past the grace window (a real crash-restart takes
-    # longer than orphan_grace_seconds; see the TOCTOU test below for
+    # longer than ORPHAN_GRACE_SECONDS; see the TOCTOU test below for
     # the young-claim case)
     old = os.path.getmtime(store._manifest_path(2)) - 3600
     os.utime(store._manifest_path(2), (old, old))

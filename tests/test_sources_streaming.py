@@ -15,12 +15,8 @@ import os
 from pyspark.sql import functions as F
 
 from helium_etl_lite_spark.etl import fixtures, transforms
-from helium_etl_lite_spark.sources.block_source import (
-    FakeRpcClient,
-    JsonBlockSource,
-    ParquetBlockSource,
-    RpcBlockSource,
-)
+from helium_etl_lite_spark.etl.pipeline import CursorStore, FollowerConfig, IncrementalFollower
+from helium_etl_lite_spark.sources.block_source import FakeRpcClient, RpcBlockSource
 
 
 def _chain_as_dicts(spark):
@@ -38,36 +34,82 @@ def _chain_as_dicts(spark):
     return blocks, txns, blocks_by_h, txns_by_hash
 
 
+class _CountingRpcClient(FakeRpcClient):
+    def __init__(self, *args):
+        super().__init__(*args)
+        self.calls = {"height": 0, "get_block_raw": 0, "get_transaction": 0}
+
+    def height(self) -> int:
+        self.calls["height"] += 1
+        return super().height()
+
+    def get_block_raw(self, height: int) -> dict:
+        self.calls["get_block_raw"] += 1
+        return super().get_block_raw(height)
+
+    def get_transaction(self, hash: str) -> dict:
+        self.calls["get_transaction"] += 1
+        return super().get_transaction(hash)
+
+
 class TestSources:
     def test_parquet_and_json_sources_roundtrip(self, spark, tmp_path):
+        # The landed source as the CLI builds it: parquet by default,
+        # JSON-lines when source_format = "json".
+        from helium_etl_lite_spark import cli
+
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=40)
         bp, tp = str(tmp_path / "b"), str(tmp_path / "t")
         blocks.write.mode("overwrite").parquet(bp)
         txns.write.mode("overwrite").parquet(tp)
-        src = ParquetBlockSource(spark, bp, tp)
-        assert src.tip() == 1039
-        assert src.blocks().count() == 40
-
         bj, tj = str(tmp_path / "bj"), str(tmp_path / "tj")
         blocks.write.mode("overwrite").json(bj)
         txns.write.mode("overwrite").json(tj)
-        jsrc = JsonBlockSource(spark, bj, tj)
-        assert jsrc.tip() == 1039
+        out = str(tmp_path / "out")
+        src = cli._follower(spark, {"blocks_path": bp, "txns_path": tp, "out_dir": out}).source
+        jsrc = cli._follower(
+            spark,
+            {"blocks_path": bj, "txns_path": tj, "out_dir": out, "source_format": "json"},
+        ).source
+        for s in (src, jsrc):
+            assert s.tip() == 1039 and s.first() == 1000
+            assert s.range(1010, 1019)[0].count() == 10
         # identical pipeline output from either source
-        out_p = transforms.build_outputs("rewards", src.blocks(), src.txns())["rewards"]
-        out_j = transforms.build_outputs("rewards", jsrc.blocks(), jsrc.txns())["rewards"]
+        out_p = transforms.build_outputs("rewards", *src.range(1000, 1039))["rewards"]
+        out_j = transforms.build_outputs("rewards", *jsrc.range(1000, 1039))["rewards"]
         assert out_p.exceptAll(out_j).count() == 0
         assert out_p.count() == out_j.count()
 
     def test_rpc_source_matches_dataframe_path(self, spark):
         blocks, txns, blocks_by_h, txns_by_hash = _chain_as_dicts(spark)
-        client = FakeRpcClient(blocks_by_h, txns_by_hash)
-        src = RpcBlockSource(spark, client, lo=1000, hi=client.height())
+        src = RpcBlockSource(spark, FakeRpcClient(blocks_by_h, txns_by_hash))
         assert src.tip() == 1039
-        got = transforms.build_outputs("rewards", src.blocks(), src.txns())["rewards"]
+        got = transforms.build_outputs("rewards", *src.range(1000, 1039))["rewards"]
         want = transforms.build_outputs("rewards", blocks, txns)["rewards"]
         assert got.count() == want.count()
         assert got.exceptAll(want).count() == 0
+
+    def test_rpc_range_fetches_each_block_and_txn_once(self, spark):
+        _, _, blocks_by_h, txns_by_hash = _chain_as_dicts(spark)
+        client = _CountingRpcClient(blocks_by_h, txns_by_hash)
+        blocks, txns = RpcBlockSource(spark, client).range(1000, 1039)
+        assert blocks.count() == 40
+        assert txns.count() == len(txns_by_hash)
+        assert client.calls["get_block_raw"] == 40
+        assert client.calls["get_transaction"] == len(txns_by_hash)
+
+    def test_rpc_catch_up_probes_the_tip_once(self, spark, tmp_path):
+        # With a committed cursor, one catch_up asks the node for its
+        # height once; blocks landing meanwhile wait for the next call.
+        _, _, blocks_by_h, txns_by_hash = _chain_as_dicts(spark)
+        client = _CountingRpcClient(blocks_by_h, txns_by_hash)
+        out_dir = str(tmp_path / "out")
+        CursorStore(out_dir).write(1019, 1000)
+        cfg = FollowerConfig(mode="rewards", out_dir=out_dir, max_blocks_per_batch=8)
+        assert IncrementalFollower(spark, RpcBlockSource(spark, client), cfg).catch_up() == 20
+        assert CursorStore(out_dir).read() == (1039, 1000)
+        assert client.calls["height"] == 1
+        assert client.calls["get_block_raw"] == 20
 
 
 def _serve_jsonrpc(blocks_by_h, txns_by_hash):
@@ -115,11 +157,6 @@ class TestHttpRpc:
     def test_http_client_and_rpc_follow(self, spark, tmp_path):
         import pytest
 
-        from helium_etl_lite_spark.etl.pipeline import (
-            FollowerConfig,
-            rpc_catch_up,
-            rpc_get_first_block,
-        )
         from helium_etl_lite_spark.sources.block_source import HttpRpcClient, RpcError
 
         blocks, txns, blocks_by_h, txns_by_hash = _chain_as_dicts(spark)
@@ -133,21 +170,22 @@ class TestHttpRpc:
                 client.get_block_raw(999_999)
             # E20 epoch walk against the live endpoint finds the oldest
             # block the node holds
-            assert rpc_get_first_block(client) == 1000
+            source = RpcBlockSource(spark, client)
+            assert source.first() == 1000
             # full backfill+catch-up through the same follower pipeline:
             # one manifest swap per pass, cursor from the manifest
             from helium_etl_lite_spark.etl.snapshot import SnapshotStore, read_snapshot
 
             out_dir = str(tmp_path / "rpc_out")
             cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir)
-            assert rpc_catch_up(spark, client, cfg) == 40
+            assert IncrementalFollower(spark, source, cfg).catch_up() == 40
             m = SnapshotStore(out_dir).current()
             assert m["height"] == 1039 and m["first_block"] == 1000
             want = transforms.build_outputs("rewards", blocks, txns)["rewards"]
             got = read_snapshot(spark, out_dir, "rewards")
             assert got.count() == want.count()
             assert got.select(*want.columns).exceptAll(want).count() == 0
-            assert rpc_catch_up(spark, client, cfg) == 0  # at tip: no-op
+            assert IncrementalFollower(spark, source, cfg).catch_up() == 0  # at tip: no-op
         finally:
             srv.shutdown()
 

@@ -31,6 +31,7 @@ from helium_etl_lite_spark.etl import fixtures
 from helium_etl_lite_spark.etl.pipeline import FollowerConfig, IncrementalFollower
 from helium_etl_lite_spark.etl.snapshot import read_snapshot
 from helium_etl_lite_spark.session import get_spark
+from helium_etl_lite_spark.sources.block_source import LandedBlockSource
 
 
 def main():
@@ -51,7 +52,9 @@ def main():
             mode=mode, out_dir=f"{work}/out", backfill=True, max_blocks_per_batch=None
         )
         filters = fixtures.make_filters(spark) if mode == "filters" else None
-        follower = IncrementalFollower(spark, blocks, txns, cfg, filters=filters)
+        follower = IncrementalFollower(
+            spark, LandedBlockSource(blocks, txns), cfg, filters=filters
+        )
         t0 = time.perf_counter()
         n = follower.catch_up()
         elapsed = time.perf_counter() - t0
