@@ -13,12 +13,14 @@ Commands:
             transactions / follower_info — what a reference user does
             with psql against the Postgres tables):
             ... sql --config settings.toml -e "SELECT ..."
-  status    cursor, snapshot version and per-table file counts (no Spark)
-  compact   merge small files into a new snapshot version
+  status    cursor, snapshot version and per-table partition, fragment
+            and file counts (no Spark)
+  compact   merge each block range's fragments (one per tick) and
+            small files into one fragment of a new snapshot version
   vacuum    delete data no kept snapshot version references — the
-            follower's disk maintenance: every commit that touches a
-            block range writes a new copy of it and keeps the old one
-            for older-snapshot readers until vacuum runs
+            follower's disk maintenance: a replay or a compaction
+            writes new fragments and keeps the superseded ones for
+            older-snapshot readers until vacuum runs
 
 Config (TOML, reference settings.toml keys where they translate):
   node_addr                 live blockchain-node JSON-RPC endpoint
@@ -150,9 +152,9 @@ def _follower(spark, cfg) -> IncrementalFollower:
     )
 
 
-def _catch_up(spark, cfg) -> tuple[int, tuple[int, int]]:
+def _catch_up(spark, cfg) -> tuple[int, tuple[int, int] | None]:
     """Catch up to the configured source's tip. Returns (blocks loaded,
-    cursor)."""
+    cursor); the cursor is None while the source has no block."""
     n = _follower(spark, cfg).catch_up()
     return n, CursorStore(str(cfg["out_dir"])).read()
 
@@ -174,9 +176,11 @@ def cmd_migrate(spark, cfg, log=None) -> None:
 
 
 def cmd_once(spark, cfg, log=None) -> int:
-    n, (height, first) = _catch_up(spark, cfg)
+    n, cursor = _catch_up(spark, cfg)
     (log or setup_logger(cfg)).info(
-        f"once: loaded {n} blocks; cursor at {height} (first_block {first})"
+        f"once: loaded {n} blocks; "
+        + ("no block at the source yet" if cursor is None
+           else f"cursor at {cursor[0]} (first_block {cursor[1]})")
     )
     return n
 
@@ -253,10 +257,11 @@ def cmd_status(cfg, log=None) -> dict:
     """Operational status without a SparkSession (the reference's
     follower_info peek, src/follower.rs:123-142, plus the physical
     inventory an operator actually wants): cursor position, snapshot
-    version, and per-table partition/file/byte counts, all from the
-    CURRENT manifest. Every field but out_dir is None (tables empty)
-    when out_dir holds no snapshot store."""
-    from .etl.snapshot import SnapshotStore
+    version, and per-table block-range (partition), fragment, file and
+    byte counts, all from the CURRENT manifest. `compact` brings the
+    fragment count back to one per range. Every field but out_dir is
+    None (tables empty) when out_dir holds no snapshot store."""
+    from .etl.snapshot import SnapshotStore, fragment_dir, fragments, require_fragments
 
     out = str(cfg["out_dir"])
     status: dict = {
@@ -264,32 +269,29 @@ def cmd_status(cfg, log=None) -> dict:
         "first_block": None, "tables": {},
     }
 
-    def table_stats(paths: list[str]) -> dict:
+    def table_stats(m: dict, t: str) -> dict:
         n_files = 0
         n_bytes = 0
-        for p in paths:
+        dirs = [fragment_dir(out, t, r, frag[0]) for r, frag in fragments(m, t)]
+        for p in dirs:
             if not os.path.isdir(p):
                 continue
             for f in os.listdir(p):
                 if f.endswith(".parquet"):
                     n_files += 1
                     n_bytes += os.path.getsize(os.path.join(p, f))
-        return {"n_partitions": len(paths), "n_files": n_files, "n_bytes": n_bytes}
+        return {
+            "n_partitions": len(m["tables"][t]), "n_fragments": len(dirs),
+            "n_files": n_files, "n_bytes": n_bytes,
+        }
 
     m = SnapshotStore(out).current()
     if m is not None:
+        require_fragments(m, out)
         status["snapshot_version"] = m["version"]
         status["height"] = m["height"]
         status["first_block"] = m["first_block"]
-        status["tables"] = {
-            t: table_stats(
-                [
-                    os.path.join(out, t, f"v={v}", f"block_range={r}")
-                    for r, v in parts.items()
-                ]
-            )
-            for t, parts in m["tables"].items()
-        }
+        status["tables"] = {t: table_stats(m, t) for t in m["tables"]}
     print(json.dumps(status, indent=1, sort_keys=True))
     (log or setup_logger(cfg)).info(
         f"status: snapshot version {status['snapshot_version']} at {out}"
@@ -299,10 +301,10 @@ def cmd_status(cfg, log=None) -> dict:
 
 def cmd_vacuum(cfg, keep_versions: int, log=None) -> list[str]:
     """Reclaim disk: delete the data directories no kept snapshot
-    version references. The follower's commits and `compact` leave each
-    superseded copy of a block range in place for older-snapshot
-    readers, so disk use grows until this runs. Needs no SparkSession —
-    pure manifest bookkeeping."""
+    version references. A replay and `compact` leave each superseded
+    fragment in place for older-snapshot readers, so disk use grows
+    until this runs. Needs no SparkSession — pure manifest
+    bookkeeping."""
     from .etl.snapshot import SnapshotStore
 
     store = SnapshotStore(str(cfg["out_dir"]))
@@ -316,10 +318,11 @@ def cmd_vacuum(cfg, keep_versions: int, log=None) -> list[str]:
 
 
 def cmd_compact(spark, cfg, target_mb: int = 128, log=None) -> dict:
-    """Maintenance: merge the small files the append loop accumulates
-    (one batch per pass — the parquet analog of the reference's
-    one-INSERT-per-block append, src/reward.rs:38-44) into a new
-    snapshot version (committed partitions only, readers never torn).
+    """Maintenance: merge the fragments the append loop accumulates
+    (one per pass and block range — the parquet analog of the
+    reference's one-INSERT-per-block append, src/reward.rs:38-44) into
+    one fragment per range of a new snapshot version (committed
+    fragments only, readers never torn).
     The superseded files stay until `vacuum` reclaims them. The config
     needs only out_dir. Single-writer contract: don't run concurrently
     with the follower. Returns the published manifest, or {} when

@@ -158,13 +158,15 @@ def compact_snapshot(
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict | None:
     """Compact a snapshot-manifest store (the follower's sink) the
-    lakehouse way: rewrite fragmented COMMITTED partitions into a new version
-    directory and publish a manifest that remaps them — data files are
-    never mutated, so concurrent snapshot readers are never torn, and
-    a crash before publish leaves an orphan v-dir exactly like a
-    crashed batch (invisible, overwritten by the next commit).
+    lakehouse way: merge each block range's fragments (one per tick
+    that landed in it), or a lone fragment holding more files than its
+    size needs, into one fragment of a new version directory, and
+    publish a manifest that remaps them — data files are never mutated,
+    so concurrent snapshot readers are never torn, and a crash before
+    publish leaves an orphan v-dir exactly like a crashed batch
+    (invisible, overwritten by the next commit).
 
-    Only partitions listed in the CURRENT manifest are read or
+    Only fragments listed in the CURRENT manifest are read or
     rewritten: uncommitted/orphaned directories (a crashed writer's
     half batch) are never compacted into the corpus. Old version dirs
     linger for older-snapshot readers until `vacuum` reclaims them.
@@ -174,47 +176,47 @@ def compact_snapshot(
     Returns the published manifest, or None if nothing needed
     compaction (no new version is published).
     """
-    from .snapshot import SnapshotStore, _read_version_ranges
+    from .snapshot import SnapshotStore, fragment_dir, _read_fragments, require_fragments
 
     store = SnapshotStore(root)
     m = store.current()
     if m is None:
         return None
+    require_fragments(m, root)
     version = m["version"] + 1
     new_tables: dict[str, dict] = {}
-    any_compacted = False
     for table, parts in m["tables"].items():
         new_parts = dict(parts)
-        by_version: dict[int, list[int]] = {}
-        for r, ver in parts.items():
-            pdir = os.path.join(
-                root, table, f"v={ver}", f"block_range={r}"
+        merge: dict[int, list] = {}
+        for r, frags in parts.items():
+            if len(frags) == 1:
+                pdir = fragment_dir(root, table, int(r), frags[0][0])
+                total = sum(
+                    os.path.getsize(os.path.join(pdir, f))
+                    for f in os.listdir(pdir)
+                    if f.endswith(".parquet")
+                )
+                if _n_data_files(pdir) <= max(1, math.ceil(total / target_file_bytes)):
+                    continue
+            merge[int(r)] = frags
+        if merge:
+            df = _read_fragments(
+                spark, root, table,
+                [(r, frag[0]) for r, frags in merge.items() for frag in frags],
             )
-            total = sum(
-                os.path.getsize(os.path.join(pdir, f))
-                for f in os.listdir(pdir)
-                if f.endswith(".parquet")
+            vdir = os.path.join(root, table, f"v={version}")
+            (
+                df.repartition("block_range")
+                .write.mode("overwrite")
+                .partitionBy("block_range")
+                .parquet(vdir)
             )
-            want = max(1, math.ceil(total / target_file_bytes))
-            if _n_data_files(pdir) > want:
-                by_version.setdefault(int(ver), []).append(int(r))
-        if not by_version:
-            new_tables[table] = new_parts
-            continue
-        any_compacted = True
-        df = _read_version_ranges(spark, root, table, by_version)
-        vdir = os.path.join(root, table, f"v={version}")
-        (
-            df.repartition("block_range")
-            .write.mode("overwrite")
-            .partitionBy("block_range")
-            .parquet(vdir)
-        )
-        for ranges in by_version.values():
-            for r in ranges:
-                new_parts[str(r)] = version
+            for r, frags in merge.items():
+                new_parts[str(r)] = [
+                    [version, min(f[1] for f in frags), max(f[2] for f in frags)]
+                ]
         new_tables[table] = new_parts
-    if not any_compacted:
+    if new_tables == m["tables"]:
         return None
     manifest = dict(m)
     manifest["version"] = version

@@ -16,7 +16,7 @@ Differences by design (Spark-first, not a translation):
 - Exactly-once: Postgres gives the reference a data+cursor transaction
   (src/follower.rs:100, src/block_processor.rs:44-47). Here every pass
   is one snapshot-manifest commit (etl/snapshot.py): the rewards and
-  transactions partitions the pass wrote and the advanced cursor become
+  transactions fragments the pass wrote and the advanced cursor become
   visible in the same `CURRENT` rename, so a reader never sees a block
   the cursor has not reached, and a crash before the rename leaves the
   previous snapshot whole. The replay recomputes the same version.
@@ -27,23 +27,27 @@ Differences by design (Spark-first, not a translation):
 
 from __future__ import annotations
 
+import logging
 import os
 from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .schemas import REWARDS_V2_FIELDS_SCHEMA
-from .snapshot import SnapshotStore, commit_batch_atomic, read_snapshot
+from .schemas import REWARDS_V2_FIELDS_SCHEMA, SENTINEL
+from .snapshot import SnapshotStore, commit_batch_atomic, require_fragments
 from .transforms import build_outputs
 
 # Tables keyed by block, written in place: write_block_range_idempotent
 # gives per-block replace semantics on plain partitioned parquet (any
 # replayed range replaces precisely the blocks it contains, never
-# duplicating and never clobbering neighbors). The follower's own tables
-# go through the snapshot sink instead; operators/rollup.py lands its
-# buckets here.
+# duplicating and never clobbering neighbors) by reading back and
+# rewriting every range a batch touches; operators/rollup.py lands its
+# buckets here. The follower's own tables go through the snapshot sink
+# instead (etl/snapshot.py commit_batch_atomic), which has the same
+# claim semantics but appends a fragment holding only the batch's rows
+# and reads back only fragments a replay partly overlaps.
 
 
 def write_block_range_idempotent(
@@ -203,19 +207,24 @@ def _refuse_plain_layout(out_dir: str) -> None:
             )
 
 
-def _open_cursor(config: FollowerConfig, probe_first) -> tuple[int, int]:
+def _open_cursor(config: FollowerConfig, probe_first) -> tuple[int, int] | None:
     """The follower's starting cursor (reference src/follower.rs:27-41):
     the manifest's committed cursor; else a new cursor at
     probe_first()-1, so the first processed block is probe_first()
-    (reference src/follower.rs:37). A store without a manifest but with
-    landed tables is refused before anything is probed or written."""
-    cursor = CursorStore(config.out_dir)
-    cur = cursor.read()
-    if cur is not None:
-        return cur
+    (reference src/follower.rs:37). None, with nothing written, while
+    the source has no block: the first real block decides where the
+    cursor starts. A store without a manifest but with landed tables,
+    or whose manifest predates fragment commits, is refused before
+    anything is probed or written."""
+    m = SnapshotStore(config.out_dir).current()
+    if m is not None:
+        require_fragments(m, config.out_dir)
+        return m["height"], m["first_block"]
     _refuse_plain_layout(config.out_dir)
     first = probe_first()
-    cursor.write(first - 1, first)
+    if first is None:
+        return None
+    CursorStore(config.out_dir).write(first - 1, first)
     return first - 1, first
 
 
@@ -256,8 +265,8 @@ class IncrementalFollower:
         self.cursor = CursorStore(config.out_dir)
 
     # -- cursor init (reference src/follower.rs:27-41) ------------------
-    def init_cursor(self) -> tuple[int, int]:
-        def first() -> int:
+    def init_cursor(self) -> tuple[int, int] | None:
+        def first() -> int | None:
             return self.source.first() if self.config.backfill else self.source.tip()
 
         return _open_cursor(self.config, first)
@@ -267,8 +276,12 @@ class IncrementalFollower:
         """Process (cursor, tip] in passes of at most max_blocks_per_batch
         blocks, or the source's PASS_LIMIT when unset (bounded-replay
         E19), and return the number of blocks loaded. The tip is probed
-        once; newer blocks are left to the next call."""
-        height, first_block = self.init_cursor()
+        once; newer blocks are left to the next call. Loads nothing
+        while the source has no block."""
+        cursor = self.init_cursor()
+        if cursor is None:
+            return 0
+        height, first_block = cursor
         tip = self.source.tip()
         total = 0
         while n := self._pass(height + total, first_block, tip):
@@ -288,11 +301,27 @@ class IncrementalFollower:
         # advance publish together in the manifest swap.
         blocks, txns = self.source.range(lo, hi)
         out = build_outputs(self.config.mode, blocks, txns, self.filters)
-        tables = {"rewards": out["rewards"]}
+        # Ingest audit: row/amount/sentinel counters of the pass's
+        # rewards (the reference has no ingest metrics at all;
+        # production followers need them to spot a silently-empty or
+        # all-null upstream), observed on the rewards write itself: no
+        # read-back, no extra job. A pass with no reward rows is an
+        # explicit zero, the signal the audit exists to surface.
+        audit = Observation(f"audit-{lo}-{hi}")
+        tables = {
+            "rewards": out["rewards"].observe(
+                audit,
+                F.count(F.lit(1)).alias("n_rewards"),
+                F.coalesce(F.sum("amount"), F.lit(0)).alias("amount_total"),
+                F.coalesce(
+                    F.sum(F.when(F.col("account") == SENTINEL, 1).otherwise(0)), F.lit(0)
+                ).alias("sentinel_accounts"),
+            )
+        }
         if "transactions" in out:
             # PK(hash) idempotence (migrations/V3:43)
             tables["transactions"] = out["transactions"].dropDuplicates(["hash"])
-        manifest = commit_batch_atomic(
+        commit_batch_atomic(
             self.spark,
             self.config.out_dir,
             tables,
@@ -302,47 +331,8 @@ class IncrementalFollower:
             first_block=first_block,
             range_size=self.config.block_range_size,
         )
-        self._audit(manifest["version"], lo, hi)
-
-    def _audit(self, version: int, lo: int, hi: int) -> None:
-        # Ingest audit: row/amount/sentinel counters for the committed
-        # range (the reference has no ingest metrics at all; production
-        # followers need them to spot a silently-empty or all-null
-        # upstream). Computed from the JUST-COMMITTED slice — one cheap
-        # columnar scan with the block predicate pushed — instead of
-        # re-running the whole batch build a second time (an agg on
-        # out["rewards"] would re-execute explode/validate/join per
-        # range, ~2x ingest cost). A version with no rewards rows is an
-        # explicit zero, the signal the audit exists to surface; any
-        # read failure is an audit FAILURE, never masked as zeros.
-        from .schemas import SENTINEL
-
-        try:
-            landed = read_snapshot(self.spark, self.config.out_dir, "rewards", version=version)
-            if landed is None:
-                self.last_audit = {"n_rewards": 0, "amount_total": 0, "sentinel_accounts": 0}
-            else:
-                self.last_audit = (
-                    landed.where(F.col("block").between(lo, hi))
-                    .agg(
-                        F.count(F.lit(1)).alias("n_rewards"),
-                        F.coalesce(F.sum("amount"), F.lit(0)).alias("amount_total"),
-                        F.coalesce(
-                            F.sum(F.when(F.col("account") == SENTINEL, 1).otherwise(0)),
-                            F.lit(0),
-                        ).alias("sentinel_accounts"),
-                    )
-                    .first()
-                    .asDict()
-                )
-        except Exception as e:  # noqa: BLE001 — audit is advisory; ingest continues
-            self.last_audit = {"error": str(e)}
-        import logging
-
-        logging.getLogger("helium_etl_lite_spark").log(
-            logging.WARNING if "error" in self.last_audit else logging.INFO,
-            f"audit [{lo},{hi}]: {self.last_audit}",
-        )
+        self.last_audit = audit.get
+        logging.getLogger("helium_etl_lite_spark").info(f"audit [{lo},{hi}]: {self.last_audit}")
 
 
 def backfill_epoch_walk(blocks: DataFrame, txns: DataFrame, tip: int, max_hops: int = 1000) -> int:

@@ -5,19 +5,25 @@ The reference gets per-block atomicity from a Postgres transaction that
 writes rewards/transactions AND advances follower_info together
 (src/follower.rs:100, src/block_processor.rs:44-47). This module gives
 the same guarantee the way modern lakehouse formats do (Delta's
-_delta_log, Iceberg's metadata pointer), scaled down to exactly what
-the follower needs:
+_delta_log add-file/remove-file actions, Iceberg's metadata pointer),
+scaled down to exactly what the follower needs:
 
-- Data files are APPEND-ONLY under versioned partition directories:
+- Data files are APPEND-ONLY fragments under versioned partition
+  directories:
       {root}/{table}/v={version}/block_range={r}/part-*.parquet
-  A writer never deletes or rewrites a published file, so there is no
-  write-into-own-source hazard and readers of the previous snapshot are
-  never torn.
+  A commit writes at most one fragment per (table, block_range) into its
+  own version directory. A writer never deletes or rewrites a published
+  file, so there is no write-into-own-source hazard and readers of the
+  previous snapshot are never torn.
 
-- One manifest JSON per version maps each partition to the version that
-  owns it, AND carries the cursor:
+- One manifest JSON per version maps each block_range of each table to
+  its list of fragments `[version, block_lo, block_hi]` (the fragment's
+  directory, and the block span it holds rows for), AND carries the
+  cursor:
       {"version": 7, "height": 1099, "first_block": 1000,
-       "tables": {"rewards": {"0": 3, "1": 7}, ...}}
+       "tables": {"rewards": {"0": [[3, 0, 999]],
+                              "1": [[5, 1000, 1029], [7, 1030, 1099]]},
+                  ...}}
   `_snapshots/CURRENT` names the live version and is published with
   `durable_replace` (an fsync'd atomic `os.replace`) — the ONLY
   mutation in the whole commit. Data and cursor therefore become
@@ -26,26 +32,33 @@ the follower needs:
   a conditional PUT of CURRENT.) A reader therefore needs no cursor
   filter: data ahead of the cursor is not in the manifest.
 
-- Deleting a partition whose blocks were all replayed-away is METADATA
-  ONLY: the key leaves the manifest; the files get vacuumed later.
+- A commit decides per fragment of the ranges its claim touches. The
+  steady-state tick's claim lies wholly above every fragment, so it
+  APPENDS a fragment holding only its own rows: nothing is read back.
+  On a replay, a fragment wholly inside a contiguous claim leaves the
+  manifest unread (a METADATA-ONLY delete; the files get vacuumed
+  later); only fragments that partly overlap the claim are read, and
+  their surviving rows merge with the batch into the new fragment.
 
 - Crash anywhere before the CURRENT swap leaves the previous snapshot
   (data + cursor together) fully intact; the half-written v-dir is
   orphaned, invisible, and overwritten by the replay, which recomputes
   the same version number. Crash after the swap is a completed commit.
 
-Replay convergence, crash atomicity and metadata-deletes are pinned by
-tests/test_snapshot.py.
+Replay convergence, crash atomicity, append-without-reads and
+metadata-deletes are pinned by tests/test_snapshot.py.
 
-Scale posture: the manifest is O(#partitions) (= chain height /
-range_size; ~1e3-1e5 entries), read/written driver-side once per batch
-— control plane, like Delta's log replay. A commit rewrites only the
-block ranges it touches, with the same partition layout and pushdown as
-a plain partitioned table. Disk: each commit writes a new copy of every
-range it touches and keeps the superseded copy for older-snapshot
-readers, so disk use grows with commits until vacuum() drops the
-versions outside its keep window (`cli vacuum`, the follower's disk
-maintenance beside `cli compact`).
+Scale posture: the manifest is O(#fragments) (about chain height /
+range_size times the ticks per range; compact_snapshot folds a range's
+fragments back into one), read/written driver-side once per batch —
+control plane, like Delta's log replay. A tick costs O(new blocks): it
+writes only its own rows, with the same partition layout and pushdown as
+a plain partitioned table, and a read lists only the manifest's fragment
+directories. Disk: a tick adds only its own rows; a replay or a
+compaction writes new fragments and keeps the superseded ones for
+older-snapshot readers until vacuum() drops the versions outside its
+keep window (`cli vacuum`, the follower's disk maintenance beside
+`cli compact`, which also merges each range's fragments into one).
 """
 
 from __future__ import annotations
@@ -54,9 +67,17 @@ import json
 import os
 import shutil
 import time
+from functools import reduce
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# Footer key under which Spark's parquet writer stores the exact Spark
+# schema of the rows.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def durable_replace(path: str, text: str) -> None:
@@ -220,8 +241,8 @@ class SnapshotStore:
         durable_replace(os.path.join(self.dir, "CURRENT"), str(version))
 
     def vacuum(self, keep_versions: int = 2) -> list[str]:
-        """Delete data directories no version in the keep-window
-        references. Safe once no reader holds a snapshot older than the
+        """Delete the version directories no fragment of a manifest in the
+        keep-window references. Safe once no reader holds a snapshot older than the
         window (same contract as Delta VACUUM). Returns removed paths."""
         cur = self.current_version()
         if cur is None:
@@ -234,10 +255,11 @@ class SnapshotStore:
                     m = json.load(f)
             except FileNotFoundError:
                 continue
+            require_fragments(m, self.root)
             kept_manifests.append(v)
             for table, parts in m["tables"].items():
-                for owner in parts.values():
-                    keep.add((table, int(owner)))
+                for frags in parts.values():
+                    keep.update((table, frag[0]) for frag in frags)
         removed = []
         for table in os.listdir(self.root):
             tdir = os.path.join(self.root, table)
@@ -259,44 +281,92 @@ class SnapshotStore:
         return removed
 
 
-def _read_version_ranges(
-    spark: SparkSession, root: str, table: str, by_version: dict[int, list[int]]
+def require_fragments(manifest: dict, root: str) -> None:
+    """Raise when `manifest` maps a block_range to one owning version
+    instead of a fragment list: a store written before fragment commits.
+    Its layout is no longer read; there is no converter."""
+    for parts in manifest["tables"].values():
+        if any(not isinstance(frags, list) for frags in parts.values()):
+            raise RuntimeError(
+                f"{root} holds a snapshot store whose manifest maps each "
+                "block_range to one version (the layout before fragment "
+                "commits); this layout is no longer read. Follow into a "
+                "new out_dir with backfill = true."
+            )
+
+
+def fragments(manifest: dict, table: str) -> list[tuple[int, list[int]]]:
+    """(block_range, [version, block_lo, block_hi]) for every fragment
+    of `table` in `manifest`."""
+    return [
+        (int(r), frag)
+        for r, frags in manifest["tables"].get(table, {}).items()
+        for frag in frags
+    ]
+
+
+def fragment_dir(root: str, table: str, r: int, version: int) -> str:
+    return os.path.join(root, table, f"v={version}", f"block_range={r}")
+
+
+def _footer(path: str) -> pa.Schema:
+    leaf = next(f for f in sorted(os.listdir(path)) if f.endswith(".parquet"))
+    return pq.read_schema(os.path.join(path, leaf))
+
+
+def _read_fragments(
+    spark: SparkSession, root: str, table: str, frags: list[tuple[int, int]]
 ) -> DataFrame | None:
-    """Union the listed (version → ranges) partition dirs; basePath
-    recovers block_range as a column from the directory names."""
-    dfs = []
-    for ver, ranges in sorted(by_version.items()):
-        base = os.path.join(root, table, f"v={ver}")
-        paths = [os.path.join(base, f"block_range={r}") for r in sorted(ranges)]
-        dfs.append(spark.read.option("basePath", base).parquet(*paths))
-    if not dfs:
+    """One read of the listed (block_range, version) fragment dirs, with
+    the table dir as basePath: block_range is recovered as a column from
+    the directory names and the `v` directory key is dropped. The Spark
+    schema stored in one fragment's parquet footer is handed to the
+    reader, which then runs no schema-inference job. A table with its
+    own column named `v` would have it overwritten by the directory
+    key, so such a table is read one version at a time instead."""
+    if not frags:
         return None
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+    frags = sorted(set(frags))
+    footer = _footer(fragment_dir(root, table, *frags[0]))
+    stored = (footer.metadata or {}).get(_SPARK_SCHEMA_KEY)
+
+    def reader(base: str):
+        r = spark.read.option("basePath", base)
+        return r if stored is None else r.schema(StructType.fromJson(json.loads(stored)))
+
+    if "v" not in (n.lower() for n in footer.names):
+        paths = [fragment_dir(root, table, r, v) for r, v in frags]
+        return reader(os.path.join(root, table)).parquet(*paths).drop("v")
+    by_version: dict[int, list[str]] = {}
+    for r, v in frags:
+        by_version.setdefault(v, []).append(fragment_dir(root, table, r, v))
+    return reduce(
+        DataFrame.unionByName,
+        (
+            reader(os.path.join(root, table, f"v={v}")).parquet(*paths)
+            for v, paths in sorted(by_version.items())
+        ),
+    )
 
 
 def read_snapshot(
     spark: SparkSession, root: str, table: str, version: int | None = None
 ) -> DataFrame | None:
-    """The committed-read view: exactly the given manifest's files
+    """The committed-read view: exactly the given manifest's fragments
     (CURRENT when version is None — pass an older version for time
     travel; append-only storage keeps its file list valid until
-    vacuum). Returns None when no snapshot (or no such table) exists.
-    There is nothing to filter by cursor — data ahead of the cursor is
-    not in the manifest, so it does not exist for readers."""
+    vacuum), in one read. Returns None when no snapshot (or no such
+    table) exists. There is nothing to filter by cursor — data ahead of
+    the cursor is not in the manifest, so it does not exist for
+    readers."""
     store = SnapshotStore(root)
     manifest = store.current() if version is None else store.manifest(version)
-    if manifest is None or table not in manifest["tables"]:
+    if manifest is None:
         return None
-    parts = manifest["tables"][table]
-    if not parts:
-        return None
-    by_version: dict[int, list[int]] = {}
-    for r, ver in parts.items():
-        by_version.setdefault(int(ver), []).append(int(r))
-    return _read_version_ranges(spark, root, table, by_version)
+    require_fragments(manifest, root)
+    return _read_fragments(
+        spark, root, table, [(r, f[0]) for r, f in fragments(manifest, table)]
+    )
 
 
 def read_changes(
@@ -327,14 +397,17 @@ def read_changes(
     Default (None) is byte-identical to the historical feed, so the
     mirror/curation consumers are untouched.
 
-    Metadata-first: the two manifests' partition->owner maps identify
-    exactly which block_ranges changed (owner version differs, or the
-    partition was added/removed) — UNCHANGED partitions are never read,
-    so the IO is O(churned partitions), not O(table). Only the changed
-    partitions' rows are then diffed with exceptAll in both directions
-    (multiset semantics: duplicate rows count). At 100 TB a steady-state
-    follower touches a handful of ranges per commit, so the diff reads
-    a few partition dirs regardless of table size.
+    Metadata-first: the two manifests' fragment lists identify exactly
+    which fragments were removed (in v_from only) and added (in v_to
+    only) — UNCHANGED fragments are never read, so the IO is
+    O(churned fragments), not O(table). A steady-state append adds one
+    fragment and removes none: its rows are the inserts, with no diff.
+    Only when both sides are non-empty (a replay or a compaction) are
+    they diffed with exceptAll in both directions (multiset semantics:
+    duplicate rows count), so a rewritten row that did not change
+    cancels out. At 100 TB a steady-state follower adds a handful of
+    fragments per commit, so the feed reads a few directories
+    regardless of table size.
 
     Returns None when the table exists in neither manifest; an empty
     (schema-stable) DataFrame when nothing changed. Raises on missing
@@ -355,60 +428,52 @@ def read_changes(
         )
     if v_from > v_to:
         raise ValueError(f"v_from={v_from} is newer than v_to={v_to}")
-    parts_from = m_from["tables"].get(table, {})
-    parts_to = m_to["tables"].get(table, {})
-    if not parts_from and not parts_to:
+    require_fragments(m_from, root)
+    require_fragments(m_to, root)
+    frags_from = {(r, tuple(f)) for r, f in fragments(m_from, table)}
+    frags_to = {(r, tuple(f)) for r, f in fragments(m_to, table)}
+    if not frags_from and not frags_to:
         return None
-
-    changed = {
-        r
-        for r in set(parts_from) | set(parts_to)
-        if parts_from.get(r) != parts_to.get(r)
-    }
-
-    def read_side(parts: dict) -> DataFrame | None:
-        by_version: dict[int, list[int]] = {}
-        for r in changed:
-            ver = parts.get(r)
-            if ver is not None:
-                by_version.setdefault(int(ver), []).append(int(r))
-        return _read_version_ranges(spark, root, table, by_version)
-
-    side_from = read_side(parts_from)
-    side_to = read_side(parts_to)
+    side_from = _read_fragments(
+        spark, root, table, [(r, f[0]) for r, f in frags_from - frags_to]
+    )
+    side_to = _read_fragments(
+        spark, root, table, [(r, f[0]) for r, f in frags_to - frags_from]
+    )
     if side_from is None and side_to is None:
         # nothing churned: empty result with the table's schema
         base = read_snapshot(spark, root, table, version=v_to) or read_snapshot(
             spark, root, table, version=v_from
         )
         return base.limit(0).withColumn("_change_type", F.lit("insert"))
-    if side_from is None:
-        side_from = side_to.limit(0)
-    if side_to is None:
-        side_to = side_from.limit(0)
-    if sorted(side_from.columns) != sorted(side_to.columns):
-        # a silent one-sided projection here would drop an evolved
-        # column from the feed (review find) — schema change between
-        # the endpoints needs an explicit migration read, so fail loud
-        raise ValueError(
-            f"read_changes: schema changed between v{v_from} "
-            f"({sorted(side_from.columns)}) and v{v_to} "
-            f"({sorted(side_to.columns)}); diff the versions separately "
-            "across the migration boundary"
+    if side_from is None or side_to is None:
+        # one-sided: an append (inserts only) or a metadata delete
+        side, tag = (side_to, "insert") if side_from is None else (side_from, "delete")
+        plain = side.select(sorted(side.columns)).withColumn("_change_type", F.lit(tag))
+    else:
+        if sorted(side_from.columns) != sorted(side_to.columns):
+            # a silent one-sided projection here would drop an evolved
+            # column from the feed (review find) — schema change between
+            # the endpoints needs an explicit migration read, so fail loud
+            raise ValueError(
+                f"read_changes: schema changed between v{v_from} "
+                f"({sorted(side_from.columns)}) and v{v_to} "
+                f"({sorted(side_to.columns)}); diff the versions separately "
+                "across the migration boundary"
+            )
+        side_from = side_from.select(sorted(side_from.columns))
+        side_to = side_to.select(sorted(side_to.columns))
+        inserts = side_to.exceptAll(side_from)
+        deletes = side_from.exceptAll(side_to)
+        plain = inserts.withColumn("_change_type", F.lit("insert")).unionByName(
+            deletes.withColumn("_change_type", F.lit("delete"))
         )
-    side_from = side_from.select(sorted(side_from.columns))
-    side_to = side_to.select(sorted(side_to.columns))
-    inserts = side_to.exceptAll(side_from)
-    deletes = side_from.exceptAll(side_to)
-    plain = inserts.withColumn("_change_type", F.lit("insert")).unionByName(
-        deletes.withColumn("_change_type", F.lit("delete"))
-    )
     if key_cols is None:
         return plain
     # r15 (guide §5 cache-when-reused, §7.2): pair_updates references
     # the feed from four branches and derives its update-key intersect
     # from it again per branch — Catalyst performs no cross-branch CSE,
-    # so the churned-partition exceptAll diff (itself two reads per
+    # so the churned-fragment exceptAll diff (itself two reads per
     # side) was re-planned per branch: the keyed feed's physical plan
     # carried 48 parquet scans of the churned dirs (measured,
     # plans/r15). The diff is O(churn)-bounded by
@@ -485,55 +550,83 @@ def commit_batch_atomic(
     """Land a batch into every output table AND advance the cursor as
     ONE atomic commit. Claim semantics match
     write_block_range_idempotent: heights=None claims the whole span
-    [lo, hi]; heights=<df> claims exactly that block set.
+    [lo, hi]; heights=<df> claims exactly that block set (which must lie
+    inside [lo, hi]).
+
+    Per touched block_range the claim covers a span: [lo, hi] clipped to
+    the range, or for a height set the range's lowest to highest claimed
+    height. Each fragment of the range is then
+    - kept as it is when its span misses the claim span (the append
+      case: nothing is read);
+    - dropped unread when it lies wholly inside a contiguous claim;
+    - otherwise read, and its rows the claim does not cover merged with
+      the batch into the new fragment, whose span covers both.
 
     ``touched_ranges`` (r15, guide §1.2): when the caller already
     knows the claimed block-range set — it MUST equal the distinct
     ``floor(block / range_size)`` of ``heights`` — passing it skips
-    the collect job this function otherwise runs to derive it. A
-    caller batching several commits can compute every commit's range
-    set in one aggregation pass instead of one driver job per commit.
+    the collect job this function otherwise runs to derive it; the
+    claim spans are then [lo, hi] clipped to each range.
 
     Returns the published manifest."""
     store = SnapshotStore(root)
     cur = store.current()
+    if cur is not None:
+        require_fragments(cur, root)
     version = (cur["version"] + 1) if cur else 1
     cur_tables: dict[str, dict] = dict(cur["tables"]) if cur else {}
 
+    def clip(r: int) -> tuple[int, int]:
+        return max(lo, r * range_size), min(hi, (r + 1) * range_size - 1)
+
     claimed = None
-    if heights is not None:
+    if heights is None:
+        spans = {r: clip(r) for r in range(lo // range_size, hi // range_size + 1)}
+    else:
         claimed = heights.select(
             F.col(heights.columns[0]).cast("long").alias("__claimed_block")
         ).distinct()
         if touched_ranges is None:
-            touched_ranges = {
-                int(r["__r"])
-                for r in claimed.select(
+            spans = {
+                int(row["__r"]): (int(row["__lo"]), int(row["__hi"]))
+                for row in claimed.groupBy(
                     F.floor(F.col("__claimed_block") / F.lit(range_size))
                     .cast("long")
                     .alias("__r")
                 )
-                .distinct()
+                .agg(
+                    F.min("__claimed_block").alias("__lo"),
+                    F.max("__claimed_block").alias("__hi"),
+                )
                 .collect()
             }
-    elif touched_ranges is None:
-        touched_ranges = set(range(lo // range_size, hi // range_size + 1))
+        else:
+            spans = {r: clip(r) for r in touched_ranges}
 
-    new_tables: dict[str, dict] = {}
+    new_tables: dict[str, dict] = dict(cur_tables)
     for table, df in tables.items():
-        parts = dict(cur_tables.get(table, {}))
+        parts = {r: list(frags) for r, frags in cur_tables.get(table, {}).items()}
+        merged_spans: dict[int, tuple[int, int]] = {}
+        to_read: list[tuple[int, int]] = []
+        for r, (c_lo, c_hi) in spans.items():
+            kept = []
+            span = (c_lo, c_hi)
+            for frag in parts.get(str(r), []):
+                _, f_lo, f_hi = frag
+                if f_hi < c_lo or f_lo > c_hi:
+                    kept.append(frag)
+                elif claimed is not None or f_lo < c_lo or f_hi > c_hi:
+                    to_read.append((r, frag[0]))
+                    span = (min(span[0], f_lo), max(span[1], f_hi))
+            parts[str(r)] = kept
+            merged_spans[r] = span
         new = df.withColumn(
             "block_range", F.floor(F.col("block") / F.lit(range_size)).cast("long")
         )
-        # Carry-over: current rows of the touched ranges that the batch
-        # does NOT claim. Read straight from the owning version dirs —
+        # Carry-over: rows of the partly overlapped fragments that the
+        # batch does NOT claim. Read straight from their version dirs —
         # append-only storage means this never races the write below.
-        by_version: dict[int, list[int]] = {}
-        for r in touched_ranges:
-            ver = parts.get(str(r))
-            if ver is not None:
-                by_version.setdefault(int(ver), []).append(r)
-        old = _read_version_ranges(spark, root, table, by_version)
+        old = _read_fragments(spark, root, table, to_read)
         if old is not None:
             if claimed is None:
                 survivors = old.where(~F.col("block").between(lo, hi))
@@ -543,33 +636,22 @@ def commit_batch_atomic(
                     F.col("block") == F.col("__claimed_block"),
                     "left_anti",
                 )
-            merged = new.unionByName(survivors.select(*new.columns))
-        else:
-            merged = new
+            new = new.unionByName(survivors.select(*new.columns))
+        # One range: one file with no shuffle. Several (a backfill
+        # pass): one file set per range.
+        out = new.coalesce(1) if len(spans) == 1 else new.repartition("block_range")
         vdir = os.path.join(root, table, f"v={version}")
         # overwrite: a replay after a crash-before-publish recomputes
         # the same version number and rewrites its orphan directory.
-        (
-            merged.repartition("block_range")
-            .write.mode("overwrite")
-            .partitionBy("block_range")
-            .parquet(vdir)
-        )
+        out.write.mode("overwrite").partitionBy("block_range").parquet(vdir)
         # Which ranges did the write actually produce? Directory names
-        # are authoritative (and an empty merged batch yields none).
-        present = {
-            int(d[len("block_range="):])
-            for d in os.listdir(vdir)
-            if d.startswith("block_range=")
-        }
-        for r in touched_ranges:
-            parts.pop(str(r), None)
-        for r in present:
-            parts[str(r)] = version
-        new_tables[table] = parts
-    for table, parts in cur_tables.items():
-        if table not in new_tables:
-            new_tables[table] = parts
+        # are authoritative (and an empty batch yields none).
+        for d in os.listdir(vdir):
+            if d.startswith("block_range="):
+                r = int(d[len("block_range="):])
+                f_lo, f_hi = merged_spans.get(r, (r * range_size, (r + 1) * range_size - 1))
+                parts.setdefault(str(r), []).append([version, f_lo, f_hi])
+        new_tables[table] = {r: frags for r, frags in parts.items() if frags}
 
     manifest = {
         "version": version,

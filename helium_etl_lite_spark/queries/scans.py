@@ -488,11 +488,11 @@ def sink_snapshot_changes(spark, sf_dir):
     dropped rows as deletes}, stated independently by the oracle.
 
     Scale shape (etl/snapshot.py read_changes): the manifests'
-    partition->owner maps are diffed DRIVER-SIDE (control plane,
-    O(#partitions) like Delta's log replay); only churned partitions
-    are read at all, then exceptAll in both directions — multiset
-    semantics — yields the row-level feed. A steady-state follower
-    touches a handful of ranges per commit, so the diff IO is
+    fragment lists are diffed DRIVER-SIDE (control plane,
+    O(#fragments) like Delta's log replay); only removed and added
+    fragments are read at all, then exceptAll in both directions —
+    multiset semantics — yields the row-level feed. A steady-state
+    follower adds a handful of fragments per commit, so the diff IO is
     O(churn), not O(table); row-level arithmetic (value+1.0) is
     FP-exact on both engines."""
     from ..etl.snapshot import read_changes

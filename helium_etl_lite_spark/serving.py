@@ -21,10 +21,10 @@ rename, so a query never observes a block past `follower_info`, and a
 commit landing mid-call cannot give the views different versions — the
 same isolation the reference gets from Postgres transactions.
 
-Scale: the views are the manifest's partitioned parquet files; block
-predicates prune `block_range` directories, gateway/type predicates push
-to parquet row groups — the B-tree indexes' job, done by layout +
-pushdown instead.
+Scale: each view is one read of the manifest's fragment directories
+(`block_range` stays a partition column); block_range predicates prune
+directories, block/gateway/type predicates push to parquet row groups —
+the B-tree indexes' job, done by layout + pushdown instead.
 """
 
 from __future__ import annotations
@@ -33,7 +33,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .etl.schemas import FOLLOWER_INFO_SCHEMA, SENTINEL
-from .etl.snapshot import SnapshotStore, pair_updates, read_changes, read_snapshot
+from .etl.snapshot import (
+    SnapshotStore,
+    pair_updates,
+    read_changes,
+    read_snapshot,
+    require_fragments,
+)
 
 
 def register_views(
@@ -49,12 +55,12 @@ def register_views(
     `at_version` time-travels to a historical snapshot (kept until
     `vacuum` drops it). `changes_since` additionally registers
     `<table>_changes` views holding the CDC diff from that version to
-    the served one (read_changes: '_change_type' insert/delete,
-    partition-pruned by manifest diff). `change_key_cols` upgrades those
-    views to the KEYED feed: in-place changes of a key pair as
-    update_preimage/update_postimage (the Delta-CDF contract; tables
-    missing a key column keep the plain feed — a shared key list serves
-    heterogeneous stores)."""
+    the served one (read_changes: '_change_type' insert/delete, reading
+    only the fragments the two manifests do not share).
+    `change_key_cols` upgrades those views to the KEYED feed: in-place
+    changes of a key pair as update_preimage/update_postimage (the
+    Delta-CDF contract; tables missing a key column keep the plain
+    feed — a shared key list serves heterogeneous stores)."""
     store = SnapshotStore(out_dir)
     manifest = store.current() if at_version is None else store.manifest(at_version)
     if manifest is None:
@@ -63,6 +69,7 @@ def register_views(
                 f"no snapshot version {at_version} at {out_dir} (vacuumed or never committed)"
             )
         raise ValueError(f"no snapshot store at {out_dir}")
+    require_fragments(manifest, out_dir)
 
     # Every table is read at the served manifest's version: re-reading
     # CURRENT per table could pair one version's tables with another's

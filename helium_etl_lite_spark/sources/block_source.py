@@ -10,7 +10,7 @@ files and a live node run through the same loop:
 
   tip()          the newest height (None when there is no block)
   first()        the backfill start (reference get_first_block,
-                 src/follower.rs:144-194)
+                 src/follower.rs:144-194; None when there is no block)
   range(lo, hi)  the (blocks, txns) DataFrames for one pass over [lo, hi]
   PASS_LIMIT     blocks per pass when max_blocks_per_batch is unset
                  (None: the whole lag in one pass)
@@ -60,14 +60,15 @@ class LandedBlockSource:
         # E1: chain-tip probe (reference src/follower.rs:76).
         return self.blocks.agg(F.max("height")).collect()[0][0]
 
-    def first(self) -> int:
+    def first(self) -> int | None:
         """E20: backfill boundary. The reference walks backward, hopping
         whole epochs via rewards_v2.start_epoch pointers, because its
         source only supports point lookups; landed files support
-        aggregation, so the start is one min(height) aggregate.
+        aggregation, so the start is one min(height) aggregate (None
+        when no block has landed yet).
         The literal walk stays as the parity reference
         (etl/pipeline.py backfill_epoch_walk)."""
-        return int(self.blocks.agg(F.min("height")).collect()[0][0])
+        return self.blocks.agg(F.min("height")).collect()[0][0]
 
     def range(self, lo: int, hi: int) -> tuple[DataFrame, DataFrame]:
         # The height predicate prunes partitions at the source

@@ -24,7 +24,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-from ..etl.snapshot import SnapshotStore
+from ..etl.snapshot import SnapshotStore, fragment_dir, fragments, require_fragments
 
 BLOCK_SCHEMA = "height long, block_hash string, block_date string, n_txns long"
 
@@ -158,14 +158,17 @@ def register(spark) -> None:
 
 def _changes_rows(root: str, table: str, v_from: int, v_to: int, columns):
     """Net row-level changes between two manifests, computed WITHOUT a
-    SparkSession (this runs inside the data source): manifest diff
-    picks the churned partitions, pyarrow reads only those dirs, and a
-    pandas multiset diff (count by full row) yields insert/delete rows
-    with multiplicity. Mirrors etl/snapshot.py read_changes exactly —
-    the batch/stream twin discipline of the rest of sources/."""
+    SparkSession (this runs inside the data source): the manifests'
+    fragment sets give the removed and added fragments, pyarrow reads
+    only those dirs, and — only when both sides hold rows — a pandas
+    multiset diff (count by full row) yields insert/delete rows with
+    multiplicity; a one-sided change (an append) is its rows as they
+    are. Mirrors etl/snapshot.py read_changes exactly — the batch/stream
+    twin discipline of the rest of sources/."""
     import os
 
     import pandas as pd
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     store = SnapshotStore(root)
@@ -178,29 +181,25 @@ def _changes_rows(root: str, table: str, v_from: int, v_to: int, columns):
             f"snapshot_changes: manifest {missing} missing at {root} "
             "(vacuumed or never committed)"
         )
-    parts_from = m_from["tables"].get(table, {})
-    parts_to = m_to["tables"].get(table, {})
-    changed = {
-        r
-        for r in set(parts_from) | set(parts_to)
-        if parts_from.get(r) != parts_to.get(r)
-    }
+    require_fragments(m_from, root)
+    require_fragments(m_to, root)
+    frags_from = {(r, tuple(f)) for r, f in fragments(m_from, table)}
+    frags_to = {(r, tuple(f)) for r, f in fragments(m_to, table)}
 
-    def side(parts):
-        frames = []
-        for r in sorted(changed):
-            v = parts.get(r)
-            if v is None:
-                continue
-            d = os.path.join(root, table, f"v={v}", f"block_range={r}")
+    def side(frags) -> pa.Table | None:
+        parts = []
+        for r, f in sorted(frags):
+            d = fragment_dir(root, table, r, f[0])
             if os.path.isdir(d):
-                frames.append(pq.read_table(d).to_pandas())
-        if not frames:
-            return pd.DataFrame(columns=columns)
-        return pd.concat(frames, ignore_index=True)[list(columns)]
+                parts.append(pq.read_table(d).select(list(columns)))
+        return pa.concat_tables(parts) if parts else None
 
-    f_cnt = side(parts_from).groupby(list(columns), dropna=False).size()
-    t_cnt = side(parts_to).groupby(list(columns), dropna=False).size()
+    removed, added = side(frags_from - frags_to), side(frags_to - frags_from)
+    if removed is None or added is None:
+        one, tag = (added, "insert") if removed is None else (removed, "delete")
+        return [] if one is None else [(*r.values(), tag) for r in one.to_pylist()]
+    f_cnt = removed.to_pandas().groupby(list(columns), dropna=False).size()
+    t_cnt = added.to_pandas().groupby(list(columns), dropna=False).size()
     diff = t_cnt.subtract(f_cnt, fill_value=0).astype(int)
     rows = []
     for key, delta in diff.items():
@@ -268,13 +267,14 @@ class SnapshotChangesDataSource(DataSource):
         manifest = SnapshotStore(root).current()
         if manifest is None:
             raise ValueError(f"snapshot_changes: no snapshot store at {root}")
-        parts = manifest["tables"].get(table, {})
-        if not parts:
+        require_fragments(manifest, root)
+        frags = sorted(fragments(manifest, table))
+        if not frags:
             raise ValueError(
                 f"snapshot_changes: no table {table} in snapshot {manifest['version']}"
             )
-        r, v = next(iter(sorted(parts.items(), key=lambda kv: int(kv[0]))))
-        d = os.path.join(root, table, f"v={v}", f"block_range={r}")
+        r, frag = frags[0]
+        d = fragment_dir(root, table, r, frag[0])
         leaf = next(
             f for f in sorted(os.listdir(d)) if f.endswith(".parquet")
         )

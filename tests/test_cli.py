@@ -226,12 +226,13 @@ def test_compact_snapshot_sink(spark, chain_dirs, tmp_path):
     m1 = store.current()
     # fragment every committed partition (bulk-import debris) so the
     # compaction version supersedes v1 entirely and vacuum can reclaim
-    for frag_range, frag_ver in m1["tables"]["rewards"].items():
-        _fragment(
-            os.path.join(
-                out, "rewards", f"v={frag_ver}", f"block_range={frag_range}"
+    for frag_range, frags in m1["tables"]["rewards"].items():
+        for frag_ver, _, _ in frags:
+            _fragment(
+                os.path.join(
+                    out, "rewards", f"v={frag_ver}", f"block_range={frag_range}"
+                )
             )
-        )
     rows_before = sorted(
         map(tuple, read_snapshot(spark, out, "rewards").collect())
     )
@@ -266,6 +267,39 @@ def test_compact_snapshot_sink(spark, chain_dirs, tmp_path):
     ) == rows_before
     # nothing left to compact
     assert cli.cmd_compact(spark, {"out_dir": out}, target_mb=128) == {}
+
+
+def test_compact_merges_fragments_to_one_per_range(spark, chain_dirs, tmp_path):
+    # Passes of 10 blocks append two fragments to each 20-block range;
+    # `status` counts them and `compact` folds each range back into one
+    # fragment without changing the committed rows.
+    import logging
+
+    from helium_etl_lite_spark.etl.snapshot import read_snapshot
+
+    bp, tp, _ = chain_dirs
+    out = str(tmp_path / "out")
+    cfg = cli.load_config(
+        write_config(
+            tmp_path / "s.toml", bp, tp, out, mode="full", backfill=True,
+            block_range_size=20, max_blocks_per_batch=10,
+        )
+    )
+    assert cli.cmd_once(spark, cfg) == 60
+    log = logging.getLogger("t")
+    before = cli.cmd_status({"out_dir": out}, log=log)["tables"]
+    # payments land in every pass; rewards only at the epoch blocks
+    assert (before["transactions"]["n_partitions"], before["transactions"]["n_fragments"]) == (3, 6)
+    rows = {
+        t: sorted(map(tuple, read_snapshot(spark, out, t).collect()))
+        for t in ("rewards", "transactions")
+    }
+    assert cli.cmd_compact(spark, {"out_dir": out}, target_mb=128)
+    after = cli.cmd_status({"out_dir": out}, log=log)["tables"]
+    assert (after["transactions"]["n_partitions"], after["transactions"]["n_fragments"]) == (3, 3)
+    for table in ("rewards", "transactions"):
+        assert after[table]["n_fragments"] == after[table]["n_partitions"]
+        assert sorted(map(tuple, read_snapshot(spark, out, table).collect())) == rows[table]
 
 
 def test_compact_crash_recovery(spark, chain_dirs, tmp_path):

@@ -1,6 +1,8 @@
-"""The follower cursor without Spark (fast lane): CursorStore over the
-snapshot manifest, its crash behaviour, cursor seeding, the refusal of a
-plain-parquet store, `cli status` and the config size checks."""
+"""The follower cursor (fast lane): CursorStore over the snapshot
+manifest, its crash behaviour, cursor seeding, the refusal of a
+plain-parquet store and of a manifest from before fragment commits,
+`cli status` and the config size checks — all without Spark — and the
+follower over a landed source with no block yet."""
 
 from __future__ import annotations
 
@@ -105,17 +107,72 @@ def test_status_reads_the_manifest(tmp_path, capsys):
     assert (st["snapshot_version"], st["height"], st["first_block"], st["tables"]) == (
         None, None, None, {},
     )
-    part = tmp_path / "rewards" / "v=2" / "block_range=1"
-    part.mkdir(parents=True)
-    (part / "part-00000.parquet").write_bytes(b"x" * 10)
+    for v in (1, 2):
+        part = tmp_path / "rewards" / f"v={v}" / "block_range=1"
+        part.mkdir(parents=True)
+        (part / "part-00000.parquet").write_bytes(b"x" * 10)
     SnapshotStore(out).publish(
-        {"version": 2, "height": 1059, "first_block": 1000, "tables": {"rewards": {"1": 2}}}
+        {"version": 2, "height": 1059, "first_block": 1000,
+         "tables": {"rewards": {"1": [[1, 1000, 1029], [2, 1030, 1059]]}}}
     )
     capsys.readouterr()
     st = cli.cmd_status({"out_dir": out}, log=log)
     assert (st["snapshot_version"], st["height"], st["first_block"]) == (2, 1059, 1000)
-    assert st["tables"] == {"rewards": {"n_partitions": 1, "n_files": 1, "n_bytes": 10}}
+    assert st["tables"] == {
+        "rewards": {"n_partitions": 1, "n_fragments": 2, "n_files": 2, "n_bytes": 20}
+    }
     assert '"height": 1059' in capsys.readouterr().out
+
+
+def test_manifest_from_before_fragment_commits_is_refused(tmp_path):
+    # A manifest mapping block_range -> version is a store from before
+    # fragment commits: the follower, the serving views and `status`
+    # refuse it, naming out_dir, before anything is probed or written.
+    from helium_etl_lite_spark import serving
+    from helium_etl_lite_spark.etl.pipeline import IncrementalFollower
+
+    out = str(tmp_path)
+    SnapshotStore(out).publish(
+        {"version": 2, "height": 1059, "first_block": 1000, "tables": {"rewards": {"1": 2}}}
+    )
+    before = _tree(out)
+
+    class NoSource:
+        def tip(self):
+            raise AssertionError("the source must not be probed")
+
+        first = tip
+
+    follower = IncrementalFollower(None, NoSource(), FollowerConfig(out_dir=out, backfill=True))
+    for call in (
+        follower.catch_up,
+        lambda: serving.register_views(None, out),
+        lambda: cli.cmd_status({"out_dir": out}, log=logging.getLogger("t")),
+    ):
+        with pytest.raises(RuntimeError, match="before fragment commits") as exc:
+            call()
+        assert out in str(exc.value)
+    assert _tree(out) == before
+
+
+@pytest.mark.parametrize("backfill", [True, False])
+def test_once_over_an_empty_landed_source(spark, tmp_path, backfill):
+    # No block has landed yet: `once` loads nothing and seeds no
+    # cursor, so the first real block decides where the cursor starts.
+    from helium_etl_lite_spark.etl import fixtures
+
+    bp, tp, out = (str(tmp_path / d) for d in ("blocks", "txns", "out"))
+    os.makedirs(bp)
+    os.makedirs(tp)
+    cfg = {"blocks_path": bp, "txns_path": tp, "out_dir": out, "backfill": backfill}
+    log = logging.getLogger("t")
+    assert cli.cmd_once(spark, cfg, log=log) == 0
+    assert SnapshotStore(out).current() is None
+    blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=3)
+    blocks.write.mode("overwrite").parquet(bp)
+    txns.write.mode("overwrite").parquet(tp)
+    assert cli.cmd_once(spark, cfg, log=log) == (3 if backfill else 1)
+    assert CursorStore(out).read() == (1002, 1000 if backfill else 1002)
 
 
 @pytest.mark.parametrize("value", [0, -5, "10"])

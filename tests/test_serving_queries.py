@@ -195,7 +195,7 @@ def test_register_views_raises_on_corrupt_transactions(spark, tmp_path):
     with open(os.path.join(pdir, "part-0000.parquet"), "wb") as f:
         f.write(b"this is not parquet")
     store.publish(
-        {**m, "version": version, "tables": {**m["tables"], "transactions": {"1": version}}}
+        {**m, "version": version, "tables": {**m["tables"], "transactions": {"1": [[version, 1000, 1059]]}}}
     )
     with pytest.raises(Exception) as exc_info:
         serving.register_views(spark, out_dir)

@@ -47,8 +47,8 @@ class TestCommitProtocol:
         assert m["version"] == 2 and m["height"] == 24
         got = read_snapshot(spark, root, "t")
         assert got.count() == 25
-        # untouched ranges still owned by v1, new range by v2
-        assert m["tables"]["t"]["0"] == 1 and m["tables"]["t"]["2"] == 2
+        # untouched ranges keep v1's fragments, the new range gets v2's
+        assert m["tables"]["t"]["0"] == [[1, 0, 9]] and m["tables"]["t"]["2"] == [[2, 20, 24]]
 
     def test_replay_overwrites_claimed_blocks(self, spark, tmp_path):
         root = str(tmp_path / "s2")
@@ -164,6 +164,63 @@ class TestCommitProtocol:
         assert got.count() == 20
 
 
+    def test_append_opens_no_earlier_data(self, spark, tmp_path):
+        # The steady-state tick: a claim wholly above every fragment of
+        # its range appends a fragment of its own rows without opening
+        # an earlier one — it commits with the earlier v-dirs gone.
+        root = str(tmp_path / "s8")
+        aside = tmp_path / "aside"
+        aside.mkdir()
+        commit_batch_atomic(
+            spark, root, {"t": _df(spark, range(20))}, 0, 19, height=19, first_block=0,
+            range_size=100,
+        )
+        os.rename(os.path.join(root, "t", "v=1"), aside / "v=1")
+        m = commit_batch_atomic(
+            spark, root, {"t": _df(spark, range(20, 25))}, 20, 24, height=24,
+            first_block=0, range_size=100,
+        )
+        assert m["tables"]["t"] == {"0": [[1, 0, 19], [2, 20, 24]]}
+        os.rename(aside / "v=1", os.path.join(root, "t", "v=1"))
+        got = read_snapshot(spark, root, "t")
+        assert sorted(r["block"] for r in got.collect()) == list(range(25))
+
+        # A contiguous replay wholly covering a fragment drops it from
+        # the manifest unread; the disjoint fragment stays unread too.
+        for v in ("v=1", "v=2"):
+            os.rename(os.path.join(root, "t", v), aside / v)
+        m = commit_batch_atomic(
+            spark, root, {"t": _df(spark, range(20, 25), v=-1.0)}, 20, 24, height=24,
+            first_block=0, range_size=100,
+        )
+        assert m["tables"]["t"] == {"0": [[1, 0, 19], [3, 20, 24]]}
+        for v in ("v=1", "v=2"):
+            os.rename(aside / v, os.path.join(root, "t", v))
+        got = read_snapshot(spark, root, "t")
+        assert got.count() == 25
+        assert sorted(r["block"] for r in got.where(F.col("v") == -1.0).collect()) == list(
+            range(20, 25)
+        )
+
+    def test_partial_replay_merges_survivors_into_one_fragment(self, spark, tmp_path):
+        root = str(tmp_path / "s9")
+        for a, b in ((0, 9), (10, 19)):
+            commit_batch_atomic(
+                spark, root, {"t": _df(spark, range(a, b + 1))}, a, b, height=b,
+                first_block=0, range_size=100,
+            )
+        m = commit_batch_atomic(
+            spark, root, {"t": _df(spark, range(5, 10), v=-1.0)}, 5, 9, height=19,
+            first_block=0, range_size=100,
+        )
+        # [0, 9] is partly overlapped: read, its blocks 0-4 carried into
+        # the new fragment; [10, 19] misses the claim and stays
+        assert m["tables"]["t"] == {"0": [[2, 10, 19], [3, 0, 9]]}
+        got = read_snapshot(spark, root, "t")
+        assert got.count() == 20
+        assert got.where(F.col("v") == -1.0).count() == 5
+
+
 class TestFollowerAtomic:
     def test_follower_end_to_end_matches_build_outputs(self, spark, tmp_path):
         from helium_etl_lite_spark.etl.transforms import build_outputs
@@ -202,6 +259,40 @@ class TestFollowerAtomic:
 
         expected = build_outputs("rewards", blocks, txns)["rewards"].count()
         assert got.count() == expected
+
+    def test_audit_observed_on_the_write_matches_read_back(self, spark, tmp_path):
+        # The audit counters come from the rewards write itself; they
+        # equal a read-back of the committed slice, and a pass with no
+        # reward rows reports explicit zeros.
+        from helium_etl_lite_spark.etl.schemas import SENTINEL
+
+        blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=90)
+        out_dir = str(tmp_path / "audit")
+        f = IncrementalFollower(
+            spark, LandedBlockSource(blocks, txns),
+            FollowerConfig(mode="full", out_dir=out_dir, block_range_size=20,
+                           backfill=True),
+        )
+        f.init_cursor()
+        f._commit_range(1001, 1019, 1000)  # rewards land only on epoch blocks
+        assert f.last_audit == {"n_rewards": 0, "amount_total": 0, "sentinel_accounts": 0}
+        for lo, hi in ((1020, 1049), (1050, 1089)):
+            f._commit_range(lo, hi, 1000)
+            want = (
+                read_snapshot(spark, out_dir, "rewards")
+                .where(F.col("block").between(lo, hi))
+                .agg(
+                    F.count(F.lit(1)).alias("n_rewards"),
+                    F.coalesce(F.sum("amount"), F.lit(0)).alias("amount_total"),
+                    F.coalesce(
+                        F.sum(F.when(F.col("account") == SENTINEL, 1).otherwise(0)), F.lit(0)
+                    ).alias("sentinel_accounts"),
+                )
+                .first()
+                .asDict()
+            )
+            assert want["n_rewards"] > 0
+            assert f.last_audit == want
 
     def test_serving_views_read_snapshot(self, spark, tmp_path):
         from helium_etl_lite_spark import serving
@@ -518,8 +609,9 @@ def test_compaction_produces_empty_change_feed(spark, tmp_path):
     # itself writes one file per partition)
     from tests.test_cli import _fragment
 
-    for r, ver in store.current()["tables"]["rewards"].items():
-        _fragment(f"{root}/rewards/v={ver}/block_range={r}")
+    for r, frags in store.current()["tables"]["rewards"].items():
+        for ver, _, _ in frags:
+            _fragment(f"{root}/rewards/v={ver}/block_range={r}")
     cli.cmd_compact(spark, {"out_dir": root}, target_mb=128)
     v2 = SnapshotStore(root).current_version()
     assert v2 == v1 + 1  # compaction published a new version
