@@ -15,9 +15,10 @@ Layout:
   queries/      SURVEY.md §2.4 declared operator inventory (A..J)
   operators/    reusable operator implementations (as-of join, dedup,
                 knn, text analysis, multimodal plumbing)
-  etl/          reference-pipeline parity: sources, transforms, modes,
-                cursor/exactly-once sinks, backfill (SURVEY §2.1)
-  streaming/    Structured Streaming twin of the ingest pipeline
+  etl/          reference-pipeline parity: transforms, modes, the
+                follower and its snapshot sink, backfill (SURVEY §2.1)
+  sources/      the follower's block sources (landed files, JSON-RPC)
+  streaming/    foreachBatch consumers behind the stream_* queries
 """
 
 __version__ = "0.1.0"

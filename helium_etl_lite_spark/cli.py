@@ -91,6 +91,13 @@ def load_config(path: str) -> dict:
     return cfg
 
 
+def _positive_int(text: str) -> int:
+    """argparse type for a count or size that must be at least 1."""
+    if not text.isdecimal() or int(text) < 1:
+        raise argparse.ArgumentTypeError(f"{text!r} is not a positive integer")
+    return int(text)
+
+
 def setup_logger(cfg) -> logging.Logger:
     """File logger when [log].log_dir is configured (the reference's
     flexi_logger-to-file setup, src/main.rs:70-89); stderr otherwise."""
@@ -394,11 +401,11 @@ def main(argv: list[str] | None = None) -> int:
         "pair as update_preimage/update_postimage)",
     )
     p.add_argument(
-        "--keep-versions", type=int, default=2,
+        "--keep-versions", type=_positive_int, default=2,
         help="vacuum: snapshot versions to keep (default 2)",
     )
     p.add_argument(
-        "--target-mb", type=int, default=128,
+        "--target-mb", type=_positive_int, default=128,
         help="compact: target output file size in MiB (default 128)",
     )
     args = p.parse_args(argv)

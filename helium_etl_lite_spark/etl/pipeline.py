@@ -82,9 +82,8 @@ def write_block_range_idempotent(
       `where(height between lo, hi)` does).
     - heights=<DataFrame of block heights>: the batch claims exactly
       that height SET — old rows are anti-joined against it. Required
-      for micro-batches with no contiguity guarantee (a file-stream
-      batch holding heights {100, 300} must not delete blocks 101-299
-      that a previous batch landed).
+      for a batch with no contiguity guarantee (one holding heights
+      {100, 300} must not delete blocks 101-299 a previous batch landed).
     """
     new = df.withColumn(
         "block_range", F.floor(F.col("block") / F.lit(range_size)).cast("long")

@@ -243,7 +243,10 @@ class SnapshotStore:
     def vacuum(self, keep_versions: int = 2) -> list[str]:
         """Delete the version directories no fragment of a manifest in the
         keep-window references. Safe once no reader holds a snapshot older than the
-        window (same contract as Delta VACUUM). Returns removed paths."""
+        window (same contract as Delta VACUUM). Returns removed paths.
+        The window always holds CURRENT: keep_versions < 1 raises."""
+        if keep_versions < 1:
+            raise ValueError(f"keep_versions must be at least 1, got {keep_versions}")
         cur = self.current_version()
         if cur is None:
             return []

@@ -1,6 +1,5 @@
 """Pure DataFrame transforms mirroring the reference's per-block logic
-(SURVEY §2.1 E4-E13), shared by the batch-incremental follower and the
-Structured Streaming twin.
+(SURVEY §2.1 E4-E13), run by the incremental follower.
 
 The reference walks txns row-by-row with per-row INSERTs
 (src/block_processor.rs:55-147); here the whole block RANGE is one

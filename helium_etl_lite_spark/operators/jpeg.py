@@ -468,15 +468,6 @@ def _window16_list(seg: bytes) -> list:
     return win
 
 
-def _extend(bits: int, size: int) -> int:
-    # F.2.2.1 EXTEND
-    if size == 0:
-        return 0
-    if bits < (1 << (size - 1)):
-        return bits - (1 << size) + 1
-    return bits
-
-
 def decode_jpeg(data: bytes) -> dict:
     """Baseline sequential DCT decode → pixel stats dict (same contract
     as decode_png / decode_netpbm). Supports SOF0, 8-bit, 1 or 3

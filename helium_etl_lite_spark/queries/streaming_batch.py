@@ -197,8 +197,6 @@ def stream_cursor_incremental(spark, sf_dir):
     """,
 )
 def stream_stateful_running_count(spark, sf_dir):
-    # Per-key running state; the live twin is mapGroupsWithState /
-    # applyInPandasWithState in streaming/stateful.py.
     t = Tables(spark, sf_dir)
     return t.events.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),

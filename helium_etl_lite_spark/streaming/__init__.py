@@ -1,1 +1,1 @@
-"""Structured Streaming twin of the ingest pipeline."""
+"""foreachBatch consumers behind the registry's stream_* queries."""

@@ -1,8 +1,9 @@
 """The follower cursor (fast lane): CursorStore over the snapshot
 manifest, its crash behaviour, cursor seeding, the refusal of a
 plain-parquet store and of a manifest from before fragment commits,
-`cli status` and the config size checks — all without Spark — and the
-follower over a landed source with no block yet."""
+`cli status`, the config size checks and the maintenance verbs'
+argument checks — all without Spark — and the follower over a landed
+source with no block yet."""
 
 from __future__ import annotations
 
@@ -187,3 +188,64 @@ def test_load_config_rejects_non_positive_sizes(tmp_path, value):
             cli.load_config(str(path))
         path.write_text(base + f"{key} = 25\n")
         assert cli.load_config(str(path))[key] == 25
+
+
+def _two_version_store(tmp_path):
+    """A store whose CURRENT (version 2) still serves version 1's
+    fragment of range 0 beside its own fragment of range 1."""
+    out = str(tmp_path / "store")
+    for v, r in ((1, 0), (2, 1)):
+        part = tmp_path / "store" / "rewards" / f"v={v}" / f"block_range={r}"
+        part.mkdir(parents=True)
+        (part / "part-00000.parquet").write_bytes(b"x" * 10)
+    SnapshotStore(out).publish(
+        {"version": 1, "height": 999, "first_block": 0,
+         "tables": {"rewards": {"0": [[1, 0, 999]]}}}
+    )
+    SnapshotStore(out).publish(
+        {"version": 2, "height": 1029, "first_block": 0,
+         "tables": {"rewards": {"0": [[1, 0, 999]], "1": [[2, 1000, 1029]]}}}
+    )
+    cfg = tmp_path / "settings.toml"
+    cfg.write_text(f"out_dir = {json.dumps(out)}\n")
+    return out, str(cfg)
+
+
+@pytest.mark.parametrize("keep", ["0", "-1"])
+def test_vacuum_keeps_the_live_snapshot(tmp_path, capsys, keep):
+    # An empty keep-window would delete every version dir older than
+    # CURRENT, including the fragments CURRENT still serves. Both the
+    # store and the CLI refuse it and leave the store byte-for-byte
+    # unchanged.
+    out, cfg = _two_version_store(tmp_path)
+    before = _tree(out)
+    with pytest.raises(ValueError, match="keep_versions"):
+        SnapshotStore(out).vacuum(keep_versions=int(keep))
+    assert _tree(out) == before
+    with pytest.raises(SystemExit) as exc:
+        cli.main(["vacuum", "--config", cfg, "--keep-versions", keep])
+    assert exc.value.code == 2
+    assert "not a positive integer" in capsys.readouterr().err
+    assert _tree(out) == before
+    # keeping one version keeps every fragment CURRENT serves; only the
+    # older manifest goes
+    assert cli.main(["vacuum", "--config", cfg, "--keep-versions", "1"]) == 0
+    del before[os.path.join("_snapshots", "snap-000000000001.json")]
+    assert _tree(out) == before
+
+
+@pytest.mark.parametrize("command", ["compact", "dedup-state"])
+def test_target_mb_must_be_positive(tmp_path, monkeypatch, capsys, command):
+    # --target-mb 0 divides by zero when the file count is planned;
+    # argparse refuses it before any Spark session starts.
+    def no_spark(*args, **kwargs):
+        raise AssertionError("a rejected argument must not start Spark")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    _, cfg = _two_version_store(tmp_path)
+    argv = [command, "--config", cfg, "--state-path", str(tmp_path / "state")]
+    for bad in ("0", "-3", "ten"):
+        with pytest.raises(SystemExit) as exc:
+            cli.main(argv + ["--target-mb", bad])
+        assert exc.value.code == 2
+        assert "not a positive integer" in capsys.readouterr().err

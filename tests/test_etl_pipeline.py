@@ -1,6 +1,6 @@
 """Pipeline-parity tests (SURVEY §5.3): fixture chain → all three modes
 → golden semantics; kill-and-resume idempotence; cursor monotonicity;
-backfill epoch walk; streaming twin equivalence."""
+backfill epoch walk."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from helium_etl_lite_spark.etl import fixtures, transforms
 from helium_etl_lite_spark.etl.pipeline import (
-    CursorStore,
     FollowerConfig,
     IncrementalFollower,
     backfill_epoch_walk,
@@ -185,31 +184,6 @@ class TestFollower:
         oldest = backfill_epoch_walk(blocks, txns, tip=1119)
         assert oldest <= 1020  # hops rew-1110 → start_epoch 1080 → ... → 1000-ish
         assert oldest >= 1000
-
-
-class TestStreamingTwin:
-    def test_stream_matches_batch(self, spark, chain, tmp_path):
-        from helium_etl_lite_spark.streaming.ingest import start_block_stream
-
-        blocks, txns = chain
-        # write the block feed as JSON files (the RPC-source analog)
-        feed_dir = str(tmp_path / "feed")
-        blocks.coalesce(4).write.mode("overwrite").json(feed_dir)
-
-        out_dir = str(tmp_path / "stream_out")
-        cfg = FollowerConfig(mode="rewards", out_dir=out_dir)
-        q = start_block_stream(spark, feed_dir, txns, cfg, trigger_once=True)
-        q.awaitTermination(120)
-
-        got = read_snapshot(spark, out_dir, "rewards")
-        want = transforms.build_outputs("rewards", blocks, txns)["rewards"]
-        assert got.count() == want.count()
-        assert got.select("block", "account", "gateway", "amount", "type").exceptAll(
-            want.select("block", "account", "gateway", "amount", "type")
-        ).count() == 0
-        # cursor reached the tip
-        cur = CursorStore(out_dir).read()
-        assert cur[0] == 1119
 
 
 class TestRangeIdempotentWriter:

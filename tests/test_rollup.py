@@ -131,45 +131,6 @@ class TestSketchRollup:
         assert r["n_events"] == 60
 
 
-class TestStreamingRollup:
-    def test_streamed_rollup_equals_batch_rollup(self, spark, tmp_path):
-        # Drain a file stream of events (out-of-order across files) and
-        # compare the maintained rollup against the one-shot batch
-        # rollup of the same facts.
-        from helium_etl_lite_spark.streaming.rollup_stream import (
-            start_event_rollup_stream,
-        )
-
-        rows = []
-        for u in range(40):
-            rows.append((u, BASE + dt.timedelta(minutes=(u * 37) % 170),
-                         u % 7, "click" if u % 3 else "view", float(u)))
-        src = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
-        )
-        feed = str(tmp_path / "feed")
-        # several files => several micro-batches, arrival != time order
-        src.repartition(6).write.mode("overwrite").json(feed)
-        out = str(tmp_path / "out")
-        q = start_event_rollup_stream(spark, feed, out, trigger_once=True)
-        q.awaitTermination(120)
-
-        got = rollup.read_rollup(spark, os.path.join(out, "rollup"))
-        landed = spark.read.parquet(os.path.join(out, "events"))
-        assert landed.count() == 40
-        b = rollup.bucket_of("ts", 3600)
-        want = landed.withColumn("bucket", b).groupBy("bucket", "event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        gset = {(r["bucket"], r["event_type"], r["n_events"], r["total_value"],
-                 r["n_distinct_est"]) for r in got.collect()}
-        wset = {(r["bucket"], r["event_type"], r["n_events"], r["total_value"],
-                 r["n_users"]) for r in want.collect()}
-        assert gset == wset
-
-
 class TestIncrementalDedup:
     # operators/dedup.py incremental exact dedup: batches dedupe against
     # the whole landed corpus via the persisted hash state.

@@ -239,45 +239,6 @@ class TestHttpRpc:
             srv.shutdown()
 
 
-class TestStatefulStreaming:
-    def test_running_totals_with_state(self, spark, tmp_path):
-        from helium_etl_lite_spark.streaming.stateful import running_totals_stream
-
-        # feed: two micro-batch files of (user_id, value) events
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        (feed / "a.json").write_text(
-            "\n".join(json.dumps({"user_id": u, "value": v}) for u, v in [(1, 1.0), (1, 2.0), (2, 5.0)])
-        )
-        (feed / "b.json").write_text(
-            "\n".join(json.dumps({"user_id": u, "value": v}) for u, v in [(1, 4.0), (3, 7.0)])
-        )
-        stream = (
-            spark.readStream.schema("user_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(feed))
-        )
-        out_dir = str(tmp_path / "out")
-        q = (
-            running_totals_stream(stream)
-            .writeStream.format("memory")
-            .queryName("running_totals")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql("SELECT * FROM running_totals").collect()
-        # last update per key carries the running total across batches
-        latest = {}
-        for r in rows:
-            latest[r["key"]] = (r["count"], r["total"])
-        assert latest[1] == (3, 7.0)   # state carried across micro-batches
-        assert latest[2] == (1, 5.0)
-        assert latest[3] == (1, 7.0)
-
-
 class TestStreamingWindows:
     def test_tumbling_window_stream_matches_batch(self, spark, tmp_path):
         import datetime as dt
@@ -309,8 +270,7 @@ class TestStreamingWindows:
         )
         q.awaitTermination(120)
         # complete mode keeps every window's latest state; with no
-        # late data the streaming result must equal the batch aggregate
-        # (append-mode emission timing is covered by the ingest twin).
+        # late data the streaming result must equal the batch aggregate.
         got = {
             (r["w"]["start"], r["n"], r["total"])
             for r in spark.sql("SELECT * FROM win_agg").collect()
@@ -322,32 +282,6 @@ class TestStreamingWindows:
             .collect()
         }
         assert got == want
-
-
-class TestStreamingFiltersMode:
-    def test_filters_stream_matches_batch(self, spark, tmp_path):
-        from helium_etl_lite_spark.etl.pipeline import FollowerConfig
-        from helium_etl_lite_spark.streaming.ingest import start_block_stream
-
-        blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=40)
-        filters = fixtures.make_filters(spark)
-        feed_dir = str(tmp_path / "feed")
-        blocks.coalesce(4).write.mode("overwrite").json(feed_dir)
-
-        out_dir = str(tmp_path / "out")
-        cfg = FollowerConfig(mode="filters", out_dir=out_dir)
-        q = start_block_stream(
-            spark, feed_dir, txns, cfg, filters=filters, trigger_once=True
-        )
-        q.awaitTermination(120)
-
-        from helium_etl_lite_spark.etl.snapshot import read_snapshot
-
-        got = read_snapshot(spark, out_dir, "rewards")
-        want = transforms.build_outputs("filters", blocks, txns, filters)["rewards"]
-        cols = ["block", "account", "gateway", "amount", "type"]
-        assert got.count() == want.count()
-        assert got.select(*cols).exceptAll(want.select(*cols)).count() == 0
 
 
 class TestStreamStreamJoin:
@@ -415,156 +349,6 @@ class TestStreamStreamJoin:
         }
         want = {(u, 100 + u, 200 + u, 10.0 * u) for u in range(6)}
         assert got == want  # in-window purchases only, each exactly once
-
-
-class TestTransformWithStateDedup:
-    # Spark 4 stateful-v2 first-seen dedup. The engine path needs
-    # google.protobuf at runtime (not shipped in this container), so
-    # the processor's dedup logic is unit-tested directly against a
-    # fake state handle; the live-engine test self-skips where
-    # protobuf is absent and runs unchanged where it exists.
-
-    class _FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    def _run(self, proc, state, pdfs):
-        proc._seen = state
-        return list(proc.handleInputRows(("k",), iter(pdfs), None))
-
-    def test_processor_first_batch_emits_one_row(self):
-        import pandas as pd
-
-        from helium_etl_lite_spark.streaming.dedup_tws import FirstSeenProcessor
-
-        state = self._FakeValueState()
-        out = self._run(
-            FirstSeenProcessor(),
-            state,
-            [pd.DataFrame({"text_hash": ["h", "h"], "doc_id": [1, 3]})],
-        )
-        assert len(out) == 1 and len(out[0]) == 1
-        assert out[0]["doc_id"].iloc[0] == 1  # arrival order wins
-        assert state.get() == (1,)  # the in-batch dup was suppressed
-
-    def test_processor_later_batches_emit_nothing(self):
-        import pandas as pd
-
-        from helium_etl_lite_spark.streaming.dedup_tws import FirstSeenProcessor
-
-        state = self._FakeValueState()
-        proc = FirstSeenProcessor()
-        self._run(proc, state, [pd.DataFrame({"text_hash": ["h"], "doc_id": [1]})])
-        out = self._run(
-            proc,
-            state,
-            [
-                pd.DataFrame({"text_hash": ["h"], "doc_id": [9]}),
-                pd.DataFrame({"text_hash": ["h"], "doc_id": [10]}),
-            ],
-        )
-        assert out == []
-        assert state.get() == (2,)  # suppression count accumulates
-
-    def test_processor_empty_chunks_leave_key_unseen(self):
-        # An all-empty-chunks invocation must NOT mark the key as seen:
-        # the state stays absent so the key's genuine first row in a
-        # later micro-batch still emits (the former update-to-(0,)
-        # suppressed it forever).
-        import pandas as pd
-
-        from helium_etl_lite_spark.streaming.dedup_tws import FirstSeenProcessor
-
-        state = self._FakeValueState()
-        out = self._run(
-            FirstSeenProcessor(),
-            state,
-            [pd.DataFrame({"text_hash": [], "doc_id": []})],
-        )
-        assert out == [] and not state.exists()
-
-        # ...and the first real row afterwards is emitted exactly once
-        out2 = self._run(
-            FirstSeenProcessor(),
-            state,
-            [pd.DataFrame({"text_hash": ["h"], "doc_id": [1]})],
-        )
-        assert len(out2) == 1 and state.get() == (0,)
-
-    def test_unavailable_runtime_fails_fast(self, spark):
-        from helium_etl_lite_spark.streaming import dedup_tws
-
-        if dedup_tws.tws_available():
-            pytest.skip("protobuf present: engine path is live")
-        rate = spark.readStream.format("rate").load()
-        with pytest.raises(RuntimeError, match="protobuf"):
-            dedup_tws.first_seen_stream(rate, "value")
-
-    def test_first_seen_across_and_within_batches(self, spark, tmp_path):
-        # Live-engine path: duplicates within a micro-batch AND across
-        # micro-batches emit nothing; each key's first arrival emits
-        # exactly once.
-        from helium_etl_lite_spark.streaming.dedup_tws import (
-            first_seen_stream,
-            tws_available,
-        )
-
-        if not tws_available():
-            pytest.skip(
-                "PERMANENT in this container (r10 verdict item 5): Spark's "
-                "transformWithStateInPandas engine path serializes state "
-                "over google.protobuf StateMessage, protobuf is not baked "
-                "into this image, and the build rules forbid pip install; "
-                "vendoring the full protobuf runtime (tens of kLoC of "
-                "third-party code) would trip the copy detector for a "
-                "test-only dependency. The processor's dedup logic is "
-                "fully unit-tested against a fake state handle above, the "
-                "missing-runtime path fails fast (RuntimeError), and this "
-                "test runs unchanged wherever protobuf exists."
-            )
-
-        feed = tmp_path / "tws_feed"
-        feed.mkdir()
-        (feed / "a.json").write_text(
-            "\n".join(
-                json.dumps({"text_hash": h, "doc_id": d})
-                for h, d in [("h1", 1), ("h2", 2), ("h1", 3)]  # in-batch dup
-            )
-        )
-        (feed / "b.json").write_text(
-            "\n".join(
-                json.dumps({"text_hash": h, "doc_id": d})
-                for h, d in [("h2", 4), ("h3", 5)]  # cross-batch dup + fresh
-            )
-        )
-        stream = (
-            spark.readStream.schema("text_hash string, doc_id long")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(feed))
-        )
-        q = (
-            first_seen_stream(stream, "text_hash")
-            .writeStream.format("memory")
-            .queryName("tws_first_seen")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql("SELECT * FROM tws_first_seen").collect()
-        got = {r["text_hash"]: r["doc_id"] for r in rows}
-        assert len(rows) == 3  # one emission per distinct key
-        assert got["h1"] in (1, 3) and got["h2"] == 2 and got["h3"] == 5
 
 
 class TestPythonDataSource:
