@@ -35,9 +35,11 @@ Config (TOML, reference settings.toml keys where they translate):
                             data and cursor commit together in one
                             manifest rename (etl/snapshot.py)
   mode                      rewards | full | filters
-  backfill                  true/false (same semantics as reference)
+  backfill                  a TOML boolean, true or false (same
+                            semantics as reference)
   filters_path              parquet with (type, value) for filters mode
-  tick_seconds              poll interval for `start` (default 10)
+  tick_seconds              poll interval for `start`, a positive
+                            number (default 10)
   max_blocks_per_batch      blocks per commit, a positive integer
                             (default: the whole lag from landed files,
                             500 fetched blocks from a node)
@@ -88,6 +90,13 @@ def load_config(path: str) -> dict:
         v = cfg.get(key)
         if v is not None and (type(v) is not int or v <= 0):
             raise SystemExit(f"invalid {key}: {v!r} (expected a positive integer)")
+    # bool("false") is True: a quoted value would silently backfill
+    if type(cfg.get("backfill", False)) is not bool:
+        raise SystemExit(f"invalid backfill: {cfg['backfill']!r} (expected true or false)")
+    # 0 would make `start` poll without sleeping
+    tick = cfg.get("tick_seconds", 10)
+    if type(tick) not in (int, float) or not 0 < tick < float("inf"):
+        raise SystemExit(f"invalid tick_seconds: {tick!r} (expected a positive number)")
     return cfg
 
 

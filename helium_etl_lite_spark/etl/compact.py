@@ -11,9 +11,7 @@ pays the parquet footer+dictionary open cost for a few KB of rows.
 `compact_parquet` rewrites a directory to ~`target_file_bytes` files:
 it sizes the output from the ACTUAL input bytes (not a guessed row
 count), rewrites with a single narrow repartition, and keeps content
-exactly (proven by the `sink_compact_files` oracle). Sort columns are
-optional — sorting within files restores min/max zone-map pruning that
-append order destroyed.
+exactly (proven by the `sink_compact_files` oracle).
 """
 
 from __future__ import annotations
@@ -23,7 +21,7 @@ import os
 import shutil
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def _local_path(uri: str) -> str:
@@ -45,24 +43,19 @@ def compact_parquet(
     in_path: str,
     out_path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    sort_within_by: list[str] | None = None,
 ) -> int:
     """Rewrite `in_path` to `out_path` with ~target-sized files;
     returns the number of output files requested.
 
-    Uses `repartition(n)` (round-robin) for even output sizes; with
-    `sort_within_by`, `sortWithinPartitions` restores zone-map
-    (min/max) locality without a global sort. At cluster scale the
-    same routine runs per partition directory so compaction
-    parallelizes across partitions and never rewrites cold data.
+    Uses `repartition(n)` (round-robin) for even output sizes. At
+    cluster scale the same routine runs per partition directory so
+    compaction parallelizes across partitions and never rewrites cold
+    data.
     """
     total, _ = dir_bytes(spark, in_path)
     n = max(1, math.ceil(total / target_file_bytes))
-    df: DataFrame = spark.read.parquet(in_path)
-    out = df.repartition(n)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    out.write.mode("overwrite").parquet(out_path)
+    df = spark.read.parquet(in_path)
+    df.repartition(n).write.mode("overwrite").parquet(out_path)
     return n
 
 
@@ -87,7 +80,6 @@ def compact_partitioned_table(
     spark: SparkSession,
     table_dir: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    sort_within_by: list[str] | None = None,
     partition_prefix: str = "block_range=",
     distinct_rows: bool = False,
 ) -> dict[str, tuple[int, int]]:
@@ -141,10 +133,7 @@ def compact_partitioned_table(
         df = spark.read.parquet(pdir)
         if distinct_rows:
             df = df.distinct()
-        df = df.repartition(after)
-        if sort_within_by:
-            df = df.sortWithinPartitions(*sort_within_by)
-        df.write.mode("overwrite").parquet(tmp)
+        df.repartition(after).write.mode("overwrite").parquet(tmp)
         os.rename(pdir, old_dir)
         os.rename(tmp, pdir)
         shutil.rmtree(old_dir)

@@ -97,11 +97,29 @@ def durable_replace(path: str, text: str) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
-    dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    _fsync_path(os.path.dirname(path) or ".")
+
+
+def _fsync_path(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
     try:
-        os.fsync(dfd)
+        os.fsync(fd)
     finally:
-        os.close(dfd)
+        os.close(fd)
+
+
+def fsync_tree(path: str) -> None:
+    """fsync every file under `path` plus the directories themselves —
+    the data half of a durable pointer commit: a pointer made durable
+    before its parquet pages flush would name a missing/truncated
+    version after a power cut (the batch never replays; the store is
+    permanently broken). Spark's parquet writer does not fsync. Cost is
+    the size of the tree passed, so callers pass only what the commit
+    wrote (a snapshot commit's new fragments, a mirror delta)."""
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            _fsync_path(os.path.join(root, name))
+        _fsync_path(root)
 
 
 class ConcurrentSnapshotWriteError(RuntimeError):
@@ -156,7 +174,9 @@ class SnapshotStore:
 
     def publish(self, manifest: dict) -> None:
         """The commit point. Everything before the final os.replace is
-        invisible to readers; the replace itself is atomic.
+        invisible to readers; the replace itself is atomic. The new
+        fragments are fsynced before the manifest is written, so a
+        durable CURRENT never names data that a power cut lost.
 
         Optimistic concurrency: the version file is claimed with an
         atomic hard link (fails if it exists), so two writers that both
@@ -186,6 +206,7 @@ class SnapshotStore:
           restart-after-crash, where the manifest is minutes old."""
         os.makedirs(self.dir, exist_ok=True)
         version = manifest["version"]
+        self._fsync_fragments(manifest)
         mpath = self._manifest_path(version)
         tmp = mpath + ".tmp"
         with open(tmp, "w") as f:
@@ -239,6 +260,27 @@ class SnapshotStore:
             return
         # the transaction commits here
         durable_replace(os.path.join(self.dir, "CURRENT"), str(version))
+
+    def _fsync_fragments(self, manifest: dict) -> None:
+        """Make the fragments `manifest` adds durable before the manifest
+        names them: fsync each fragment directory of the manifest's own
+        version (its files and itself), then the directories holding
+        their entries — `<table>/v=<version>/`, `<table>/` and the root
+        (a new table's entry, and `_snapshots/`'s)."""
+        version = manifest["version"]
+        for table, parts in manifest["tables"].items():
+            # a manifest from before fragment commits (which every reader
+            # refuses) maps a range to an int and names no fragment
+            new = [
+                int(r) for r, frags in parts.items()
+                if isinstance(frags, list) and any(f[0] == version for f in frags)
+            ]
+            for r in new:
+                fsync_tree(fragment_dir(self.root, table, r, version))
+            if new:
+                _fsync_path(os.path.join(self.root, table, f"v={version}"))
+                _fsync_path(os.path.join(self.root, table))
+        _fsync_path(self.root)
 
     def vacuum(self, keep_versions: int = 2) -> list[str]:
         """Delete the version directories no fragment of a manifest in the

@@ -2,10 +2,10 @@
 
 - exact_dedup: hash-groupBy on normalized text (two-phase hash agg;
   linear at 100 TB).
-- minhash_lsh_pairs: shingle → minhash signature → banding → bucket
-  equi-join for candidates → exact Jaccard verify. The only join is on
-  (band, signature) — hash-partitioned, no cross product.
-- simhash_pairs: 64-bit simhash by token-hash bit voting, candidates by
+- minhash_dedup_assign: shingle → minhash signature → banding → per-
+  bucket min keeper → exact Jaccard verify of each doc against its
+  keeper. The only shuffle key is (band, bucket) — no cross product.
+- simhash_near_pairs: 64-bit simhash by token-hash bit voting, candidates by
   band equality on hash prefixes, verified by hamming distance
   (bit_count(xor)).
 - ngram_jaccard_pairs: exact token-set Jaccard within a blocking key
@@ -147,49 +147,6 @@ def _band_rows(
             )
         ).alias("bb"),
     ).select(id_col, *(["sig"] if keep_sig else []), "bb.band", "bb.bucket")
-
-
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    num_perm: int = 16,
-    bands: int = 8,
-    jaccard_threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Candidate pairs via banding, then exact Jaccard verification.
-
-    bands=8 over 16 perms → rows/band=2; P(candidate) = 1-(1-j^2)^8,
-    ~0.97 at j=0.5. Verification joins token sets back on and computes
-    exact Jaccard with array_intersect/array_union (JVM-side).
-    """
-    sig = minhash_signatures(docs, num_perm, text_col, id_col)
-    band_rows = _band_rows(sig, num_perm, bands, id_col)
-
-    left = band_rows.alias("l")
-    right = band_rows.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("doc_a"), F.col(f"r.{id_col}").alias("doc_b"))
-        .distinct()
-    )
-
-    toksets = docs.select(F.col(id_col), _token_set(text_col).alias("toks"))
-    a = toksets.select(F.col(id_col).alias("doc_a"), F.col("toks").alias("toks_a"))
-    b = toksets.select(F.col(id_col).alias("doc_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
-    union = F.size(F.array_union("toks_a", "toks_b")).cast("double")
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= jaccard_threshold)
-    )
 
 
 def containment_screened_pairs(
@@ -473,7 +430,7 @@ def ngram_jaccard_pairs(
     text_col: str = "text", id_col: str = "doc_id",
 ) -> DataFrame:
     """Exact token-set Jaccard for all same-block pairs. The block key
-    bounds the quadratic term; at scale use minhash_lsh_pairs instead.
+    bounds the quadratic term; at scale use minhash_dedup_assign instead.
 
     Parallelism note: a plain self-join on `block` gives one reduce
     partition per block — a handful of CPU-heavy straggler tasks when
@@ -553,7 +510,7 @@ def ngram_jaccard_pairs_blas(
     never sit on a 6-decimal rounding boundary, so numpy's rounding
     matches SQL ROUND bit-for-bit here. Scope: dense incidence needs a
     bounded per-block vocab — for open-vocabulary corpora use the JVM
-    form or minhash_lsh_pairs.
+    form or minhash_dedup_assign.
     """
     import numpy as np
     import pandas as pd

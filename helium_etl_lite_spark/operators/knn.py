@@ -118,24 +118,6 @@ def _plane_coeff(p: int, d: int) -> float:
     return (x % (1 << 32)) / float(1 << 31) - 1.0
 
 
-def hyperplane_lsh_buckets(
-    vectors: DataFrame, n_planes: int = 16, dim: int = 64, vec_col: str = "embedding"
-) -> DataFrame:
-    """Random-hyperplane LSH: bucket id = sign-bit string of `n_planes`
-    pseudo-random hyperplanes (deterministic coefficients from
-    `_plane_coeff` — no driver-side randomness, no data shipped to
-    executors).
-    """
-    coeff = _plane_coeff
-
-    planes = [
-        F.array(*[F.lit(coeff(p, d)) for d in range(dim)]) for p in range(n_planes)
-    ]
-    v = vectors.withColumn("e", _as_double(F.col(vec_col)))
-    bits = [F.when(dot(F.col("e"), planes[p]) >= 0, F.lit("1")).otherwise(F.lit("0")) for p in range(n_planes)]
-    return v.withColumn("bucket", F.concat(*bits)).drop("e")
-
-
 def cosine_pairs_blocked(
     vectors: DataFrame,
     threshold: float,
@@ -168,7 +150,7 @@ def cosine_pairs_blocked(
       replication, not once per pair.
 
     For real near-dup thresholds (>= ~0.8) use ann_topk_lsh /
-    minhash_lsh_pairs, which are genuinely subquadratic.
+    semantic_dedup_pairs, which are genuinely subquadratic.
     """
     B = n_blocks
     v = vectors.select(
@@ -308,9 +290,9 @@ def lsh_table_buckets(
     `bits_per_table` hyperplanes. Fewer bits per table = wider buckets;
     more tables = more chances to collide — the standard recall/cost
     knobs (recall ≈ 1-(1-p^b)^L for per-plane agreement p). Plane
-    coefficients come from the same deterministic avalanche hash as
-    `hyperplane_lsh_buckets` (plane index offset by table), so buckets
-    are reproducible with no RNG state.
+    coefficients come from the deterministic avalanche hash
+    `_plane_coeff` (plane index offset by table), so buckets are
+    reproducible with no RNG state.
 
     Codegen shape: the planes enter the plan as ONE literal
     array<array<double>> walked with transform/aggregate — not as

@@ -516,40 +516,6 @@ def extract_features(assets: DataFrame) -> DataFrame:
     return assets.select("doc_id", "payload").mapInPandas(features, schema=FEATURES_SCHEMA)
 
 
-def extract_features_arrow(assets: DataFrame) -> DataFrame:
-    """Same features as extract_features, but via mapInArrow: the
-    kernel consumes pyarrow RecordBatches directly — no pandas
-    conversion layer at either edge of the Python boundary. For wide
-    binary payloads this is the cheapest Python path Spark offers;
-    numerics are identical to the pandas variant (tested)."""
-    import numpy as np
-    import pyarrow as pa
-
-    def features(batches):
-        for batch in batches:
-            payloads = batch.column("payload")
-            arrs = [np.frombuffer(payloads[i].as_py(), dtype=np.uint8)
-                    for i in range(len(payloads))]
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "doc_id": batch.column("doc_id"),
-                    "n_bytes": pa.array([a.size for a in arrs], pa.int64()),
-                    "mean_byte": pa.array(
-                        [round(float(a.mean()), 6) if a.size else 0.0 for a in arrs],
-                        pa.float64(),
-                    ),
-                    "max_byte": pa.array(
-                        [int(a.max()) if a.size else 0 for a in arrs], pa.int64()
-                    ),
-                    "n_distinct_bytes": pa.array(
-                        [int(np.unique(a).size) for a in arrs], pa.int64()
-                    ),
-                }
-            )
-
-    return assets.select("doc_id", "payload").mapInArrow(features, schema=FEATURES_SCHEMA)
-
-
 def resize_assets(decoded: DataFrame, max_w: int = 320, max_h: int = 240) -> DataFrame:
     """Fit-in-box resize of the decoded dimensions: pure column
     arithmetic (no UDF — the geometry math is JVM-side and codegen'd;

@@ -96,8 +96,8 @@ def project(
 
 
 def _moments_of(df: DataFrame, vec_col: str):
-    """(n, sum, flattened X^T X) of a batch — the sufficient statistics
-    of PCA. d is taken from the first row."""
+    """(n, sum, X^T X) of `df` — the sufficient statistics of PCA. d is
+    taken from the first row."""
     head = df.select(vec_col).first()
     if head is None or head[0] is None:
         raise ValueError("moments: input has no rows (or a NULL first vector)")
@@ -121,57 +121,3 @@ def _moments_of(df: DataFrame, vec_col: str):
         flat[r["i"]] = r["v"]
     return n_total, flat[:d], flat[d:].reshape(d, d)
 
-
-def moments_update(spark, batch: DataFrame, state_path: str, vec_col: str = "embedding") -> dict:
-    """Incremental PCA, write side: fold a batch's moment statistics
-    (n, sum vector, X^T X) into a persisted JSON state. Moments are
-    ADDITIVE, so the fold-in is exact — refitting from the folded state
-    equals a from-scratch fit over the union corpus (tested to 1e-9) —
-    and costs one pass over the BATCH, never the corpus. State size is
-    O(d^2) (~32 KB at d=64) regardless of corpus size: the same
-    sufficient-statistics discipline as the dedup hash state, for the
-    embedding column. Idempotence is the caller's job (land the batch,
-    then fold, like dedup_state_add)."""
-    import json
-    import os
-
-    n, s, xtx = _moments_of(batch, vec_col)
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            st = json.load(f)
-        if len(st["s"]) != len(s):
-            raise ValueError(
-                f"moment state dimension {len(st['s'])} != batch {len(s)}"
-            )
-        n += st["n"]
-        s = s + np.array(st["s"])
-        xtx = xtx + np.array(st["xtx"]).reshape(xtx.shape)
-    st = {"n": int(n), "s": list(map(float, s)), "xtx": list(map(float, xtx.ravel()))}
-    tmp = state_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(st, f)
-    os.replace(tmp, state_path)
-    return st
-
-
-def fit_pca_from_state(state_path: str, k: int = 8):
-    """Incremental PCA, read side: eigensolve straight from the folded
-    moment state — no data pass at all. Same output contract as
-    fit_pca (mean, sign-canonicalized components, explained var)."""
-    import json
-
-    with open(state_path) as f:
-        st = json.load(f)
-    n, s = st["n"], np.array(st["s"])
-    d = len(s)
-    xtx = np.array(st["xtx"]).reshape(d, d)
-    mean = s / n
-    cov = xtx / n - np.outer(mean, mean)
-    evals, evecs = np.linalg.eigh(cov)
-    order = np.argsort(evals)[::-1][:k]
-    comps = evecs[:, order].T
-    for i in range(comps.shape[0]):
-        j = int(np.argmax(np.abs(comps[i])))
-        if comps[i, j] < 0:
-            comps[i] = -comps[i]
-    return mean, comps, evals[order]

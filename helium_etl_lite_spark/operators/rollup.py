@@ -66,9 +66,7 @@ def refresh_rollup(
 
     `distinct_col` adds a `distinct_sketch` column: an HLL sketch
     (binary, Apache DataSketches via hll_sketch_agg) instead of an exact
-    COUNT DISTINCT — the sketch is mergeable, so downstream re-rollups
-    (hour → day) union sketches instead of rescanning facts, which exact
-    distinct counts cannot do. read_rollup() exposes the estimate.
+    COUNT DISTINCT. read_rollup() exposes the estimate.
     """
     bucket = bucket_of(time_col, bucket_width_sec)
     touched_rows = batch.select(bucket.alias("bucket")).distinct().collect()
@@ -122,24 +120,3 @@ def read_rollup(spark: SparkSession, path: str) -> DataFrame:
         )
     return df
 
-
-def merge_rollup(df: DataFrame, keys: tuple[str, ...] = ("event_type",)) -> DataFrame:
-    """Re-rollup to a coarser grain WITHOUT touching the fact table —
-    the payoff of keeping only mergeable aggregates: counts/sums add,
-    mins/maxes fold, HLL sketches union. `df` must carry a `bucket`
-    column plus the rollup columns; group however the caller bucketed
-    it (e.g. floor(bucket/86400)*86400 for hour → day)."""
-    aggs = [
-        F.sum("n_events").alias("n_events"),
-        F.sum("total_value").alias("total_value"),
-        F.min("min_value").alias("min_value"),
-        F.max("max_value").alias("max_value"),
-    ]
-    if "distinct_sketch" in df.columns:
-        aggs.append(F.hll_union_agg("distinct_sketch").alias("distinct_sketch"))
-    out = df.groupBy("bucket", *keys).agg(*aggs)
-    if "distinct_sketch" in df.columns:
-        out = out.withColumn(
-            "n_distinct_est", F.hll_sketch_estimate("distinct_sketch")
-        )
-    return out

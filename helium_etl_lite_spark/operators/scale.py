@@ -562,9 +562,8 @@ def binned_range_join(
     right_lo: str,
     right_hi: str,
     bin_width: float,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join left rows to right intervals with
+    """Inner-join left rows to right intervals with
     `right_lo <= left_point <= right_hi`, as an equi-join on bin ids.
 
     Each interval is exploded over the bins it overlaps
@@ -577,7 +576,7 @@ def binned_range_join(
     `left_point`, `right_lo`, `right_hi` must be numeric (cast
     timestamps to epoch seconds first).
 
-    Inner joins only: the residual BETWEEN runs as a post-join filter,
+    Inner join only: the residual BETWEEN runs as a post-join filter,
     which for any outer variant evaluates to NULL on the null-extended
     rows and silently drops them (outer degenerates to inner), and a
     left row matching several bins without a residual hit would be
@@ -586,8 +585,6 @@ def binned_range_join(
     row — not worth it while every caller is inner (same stance as
     salted_join).
     """
-    if how != "inner":
-        raise ValueError(f"binned_range_join supports how='inner' only, got {how!r}")
     lbin = F.floor(F.col(left_point) / F.lit(bin_width))
     rbins = F.sequence(
         F.floor(F.col(right_lo) / F.lit(bin_width)),
@@ -595,7 +592,7 @@ def binned_range_join(
     )
     lf = left.withColumn("__bin", lbin)
     rf = right.withColumn("__bin", F.explode(rbins))
-    out = lf.join(rf, "__bin", how).where(
+    out = lf.join(rf, "__bin").where(
         F.col(left_point).between(F.col(right_lo), F.col(right_hi))
     )
     return out.drop("__bin")
@@ -609,9 +606,8 @@ def binned_interval_overlap_join(
     right_lo: str,
     right_hi: str,
     bin_width: float,
-    how: str = "inner",
 ) -> DataFrame:
-    """Interval-INTERVAL overlap join (`l_lo <= r_hi AND r_lo <= l_hi`)
+    """Interval-INTERVAL overlap inner join (`l_lo <= r_hi AND r_lo <= l_hi`)
     as an equi-join on bin ids — the two-sided sibling of
     :func:`binned_range_join` (point-in-interval). Both sides explode
     over the bins their interval covers; overlapping intervals share at
@@ -626,10 +622,6 @@ def binned_interval_overlap_join(
 
     Inner only, numeric bounds, same rationale as binned_range_join.
     """
-    if how != "inner":
-        raise ValueError(
-            f"binned_interval_overlap_join supports how='inner' only, got {how!r}"
-        )
     lbins = F.sequence(
         F.floor(F.col(left_lo) / F.lit(bin_width)),
         F.floor(F.col(left_hi) / F.lit(bin_width)),
@@ -645,7 +637,7 @@ def binned_interval_overlap_join(
         F.floor(F.col(right_lo) / F.lit(bin_width)),
     )
     out = (
-        lf.join(rf, "__bin", how)
+        lf.join(rf, "__bin")
         .where(
             (F.col(left_lo) <= F.col(right_hi))
             & (F.col(right_lo) <= F.col(left_hi))

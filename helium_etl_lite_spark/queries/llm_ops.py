@@ -3319,8 +3319,8 @@ def _lshp_sign(b: int, i: int) -> int:
     dimension ``i``: bit 13 of a Knuth multiplicative hash of the
     flattened index. A module-level pure function of constants, so the
     Spark expression and the generated DuckDB oracle inline IDENTICAL
-    sign matrices — the portable twin of the np.random hyperplanes in
-    operators/knn.py hyperplane_lsh_buckets."""
+    sign matrices — the portable twin of the `_plane_coeff` hyperplanes
+    in operators/knn.py."""
     return 1 if (((b * _LSHP_DIM + i + 1) * 2654435761) >> 13) & 1 else -1
 
 

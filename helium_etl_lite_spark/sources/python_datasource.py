@@ -64,69 +64,6 @@ class BlocksJsonlReader(DataSourceReader):
                 yield (d["height"], d["block_hash"], d["block_date"], d["n_txns"])
 
 
-class BlocksJsonlStreamReader(SimpleDataSourceStreamReader):
-    """Streaming twin: the offset is the SET of consumed file names
-    (stored sorted), the same seen-files discipline as Spark's own
-    FileStreamSource log. A count- or watermark-shaped offset would
-    silently skip a late-landing file whose name sorts before an
-    already-consumed one (and re-emit the latter); the explicit set
-    loses nothing and duplicates nothing regardless of producer naming
-    order. Offset size grows with total file count — the same growth
-    FileStreamSource manages with log compaction; for a block feed the
-    file count is bounded by heights/batch."""
-
-    def __init__(self, options):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("blocks_jsonl requires option 'path'")
-
-    def _files(self):
-        import glob
-        import os
-
-        return sorted(glob.glob(os.path.join(self._path, "*.json")))
-
-    @staticmethod
-    def _rows_of(paths):
-        import json
-
-        rows = []
-        for path in paths:
-            with open(path) as f:
-                for line in f:
-                    line = line.strip()
-                    if line:
-                        d = json.loads(line)
-                        rows.append(
-                            (d["height"], d["block_hash"], d["block_date"], d["n_txns"])
-                        )
-        return rows
-
-    def initialOffset(self):
-        return {"seen": []}
-
-    def read(self, start):
-        import os
-
-        seen = set(start["seen"])
-        fresh = [p for p in self._files() if os.path.basename(p) not in seen]
-        rows = self._rows_of(fresh)
-        new_seen = sorted(seen | {os.path.basename(p) for p in fresh})
-        return iter(rows), {"seen": new_seen}
-
-    def readBetweenOffsets(self, start, end):
-        # deterministic replay for recovery: exactly the files the
-        # original batch consumed (end.seen minus start.seen)
-        import os
-
-        want = set(end["seen"]) - set(start["seen"])
-        paths = [p for p in self._files() if os.path.basename(p) in want]
-        return iter(self._rows_of(paths))
-
-    def commit(self, end):
-        pass
-
-
 class BlocksJsonlDataSource(DataSource):
     @classmethod
     def name(cls):
@@ -137,9 +74,6 @@ class BlocksJsonlDataSource(DataSource):
 
     def reader(self, schema):
         return BlocksJsonlReader(self.options)
-
-    def simpleStreamReader(self, schema):
-        return BlocksJsonlStreamReader(self.options)
 
 
 def register(spark) -> None:
@@ -163,8 +97,7 @@ def _changes_rows(root: str, table: str, v_from: int, v_to: int, columns):
     only those dirs, and — only when both sides hold rows — a pandas
     multiset diff (count by full row) yields insert/delete rows with
     multiplicity; a one-sided change (an append) is its rows as they
-    are. Mirrors etl/snapshot.py read_changes exactly — the batch/stream
-    twin discipline of the rest of sources/."""
+    are. Mirrors etl/snapshot.py read_changes exactly."""
     import os
 
     import pandas as pd

@@ -40,11 +40,12 @@ def start_dsir_count_stream(
     spark: SparkSession,
     docs_dir: str,
     out_dir: str,
-    trigger_once: bool = True,
 ):
-    """Start the stream; returns the StreamingQuery. Bucket-count
-    state lands under `{out_dir}/dsir_state` (read it back with
-    operators/dsir.py dsir_state_counts)."""
+    """Start the stream; returns the StreamingQuery, which drains the
+    files present, then stops (an availableNow trigger); a later call
+    resumes from the checkpoint. Bucket-count state lands under
+    `{out_dir}/dsir_state` (read it back with operators/dsir.py
+    dsir_state_counts)."""
     from ..operators.count_state import count_state_add
 
     state_path = os.path.join(out_dir, "dsir_state")
@@ -72,6 +73,4 @@ def start_dsir_count_stream(
         reader.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -36,9 +36,7 @@ from .mirror import (
     commit_batch_version,
     compose_version,
     mirror_version,
-    prune_versions,  # noqa: F401  (re-export: historical import point)
     read_mirror,
-    write_pointer_atomic,  # noqa: F401  (re-export)
 )
 
 CURATED_COLS = ["doc_id", "lang", "text_hash"]
@@ -119,12 +117,10 @@ def start_curation_stream(
     table: str,
     curated_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    keep: int = 2,
 ):
     """Subscribe the curation loop to a snapshot table's change feed
-    (one microbatch per snapshot-version delta; availableNow drains
-    pending commits then stops — restartable from the checkpoint)."""
+    (one microbatch per snapshot-version delta; the query drains the
+    pending commits, then stops — restartable from the checkpoint)."""
     from ..sources.python_datasource import register_snapshot_changes
 
     register_snapshot_changes(spark)
@@ -136,11 +132,9 @@ def start_curation_stream(
         .load()
     )
     writer = feed.writeStream.foreachBatch(
-        lambda df, bid: curate_changes_batch(df, bid, curated_dir, keep=keep)
+        lambda df, bid: curate_changes_batch(df, bid, curated_dir)
     ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 # ---------------------------------------------------------------------------
@@ -231,13 +225,11 @@ def start_substring_dedup_stream(
     table: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    keep: int = 2,
 ):
     """Subscribe the substring-dedup ingest loop to a snapshot table's
-    change feed (one microbatch per snapshot-version delta;
-    availableNow drains pending commits then stops — restartable from
-    the checkpoint)."""
+    change feed (one microbatch per snapshot-version delta; the query
+    drains the pending commits, then stops — restartable from the
+    checkpoint)."""
     from ..sources.python_datasource import register_snapshot_changes
 
     register_snapshot_changes(spark)
@@ -249,8 +241,6 @@ def start_substring_dedup_stream(
         .load()
     )
     writer = feed.writeStream.foreachBatch(
-        lambda df, bid: substring_changes_batch(df, bid, out_dir, keep=keep)
+        lambda df, bid: substring_changes_batch(df, bid, out_dir)
     ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

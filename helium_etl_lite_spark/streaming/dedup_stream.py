@@ -1,38 +1,6 @@
-"""Streaming near-dup-free corpus ingest: a file stream of document
-batches lands only docs that are near-dup-free against EVERYTHING
-landed so far — the streaming twin of the incremental MinHash pattern
-(operators/dedup.py minhash_filter_new/minhash_state_add), the shape a
-continuously-crawling training-data pipeline runs.
-
-Per micro-batch (foreachBatch):
-1. minhash_filter_new: collapse in-batch near-dups to their keeper
-   (exact-Jaccard verified), then probe the persisted LSH band-bucket
-   state — one (band, bucket) equi-join, state reads pruned to the
-   batch's shards;
-2. append the survivors to the corpus table (data BEFORE state — the
-   same cursor-after-data discipline as the block follower);
-3. minhash_state_add: fold the survivors' band rows + signatures into
-   the sharded state (dynamic partition overwrite, set-union
-   semantics).
-
-Exactly-once: the checkpoint replays a failed micro-batch. A replay
-after step 2 re-appends the same survivors — `dedup_corpus` dedupes on
-doc_id at read time (the keyed-sink slot; the snapshot sink is the
-production variant) — and step 3 is a set union, so replay converges.
-A crash between 2 and 3 replays the SAME batch before any new one
-runs (checkpoint semantics): the re-probe re-selects the same
-survivors (state still does not know them), the re-append collapses
-at read time, and the state add re-runs. A crash after 3 but before
-the checkpoint commit replays a batch whose docs now collide with
-themselves in state — fresh comes out empty and the replay is a
-no-op. No per-batch scan of the landed corpus is needed for any of
-this (r13 ADVICE: the former doc_id anti-join against the full
-corpus was an O(corpus)-per-batch read that replay idempotence
-makes redundant).
-
-Scale posture: every step is the batch operators' own dataflow — no
-driver loops over rows, state updates rewrite only touched shards, and
-the corpus append is an O(batch) write.
+"""Streaming URL-recrawl collapse over a file stream of (doc_id, url)
+batches (start_url_dedup_stream), and the read view of the corpus it
+lands (url_corpus).
 """
 
 from __future__ import annotations
@@ -42,13 +10,11 @@ import os
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.dedup import minhash_filter_new, minhash_state_add
-
-DOC_SCHEMA = "doc_id long, text string"
+URL_SCHEMA = "doc_id long, url string"
 
 
-def dedup_corpus(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The landed near-dup-free corpus (doc_id-deduped read view: a
+def url_corpus(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The landed recrawl-free URL corpus (doc_id-deduped read view: a
     replayed micro-batch may have appended twice; first-writer wins and
     both writers carry identical rows)."""
     path = os.path.join(out_dir, "corpus")
@@ -63,64 +29,10 @@ def dedup_corpus(spark: SparkSession, out_dir: str) -> DataFrame | None:
         raise
 
 
-def start_dedup_ingest_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    out_dir: str,
-    jaccard_threshold: float = 0.5,
-    trigger_once: bool = True,
-):
-    """Start the stream; returns the StreamingQuery. Corpus lands under
-    `{out_dir}/corpus`, LSH state under `{out_dir}/minhash_state`."""
-    corpus_path = os.path.join(out_dir, "corpus")
-    state_path = os.path.join(out_dir, "minhash_state")
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch = batch.localCheckpoint(eager=True)
-        fresh = minhash_filter_new(
-            spark, batch, state_path, jaccard_threshold=jaccard_threshold
-        ).localCheckpoint(eager=True)
-        fresh.select("doc_id", "text").write.mode("append").parquet(corpus_path)
-        minhash_state_add(spark, fresh, state_path)
-
-    reader = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(docs_dir)
-    )
-    writer = (
-        reader.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-URL_SCHEMA = "doc_id long, url string"
-
-
-def url_corpus(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The landed recrawl-free URL corpus (doc_id-deduped read view —
-    same replay semantics as dedup_corpus)."""
-    path = os.path.join(out_dir, "corpus")
-    try:
-        return spark.read.parquet(path).dropDuplicates(["doc_id"])
-    except AnalysisException as exc:
-        from ..errors import is_path_not_found
-
-        if is_path_not_found(exc):
-            return None
-        raise
-
-
 def start_url_dedup_stream(
     spark: SparkSession,
     urls_dir: str,
     out_dir: str,
-    trigger_once: bool = True,
 ):
     """Streaming URL-recrawl collapse — the foreachBatch twin of
     url_dedup_canonical_incremental (r13), the loop a continuous
@@ -134,13 +46,14 @@ def start_url_dedup_stream(
     then folds their hashes into the sharded state (O(batch) append,
     replay-idempotent set semantics).
 
-    Exactly-once: identical argument to start_dedup_ingest_stream
-    above — a replayed micro-batch re-appends identical rows that the
-    doc_id-deduped read view collapses, the state fold-in is a set
-    union, and a post-fold replay probes its own hashes out of state
-    into a no-op; no per-batch landed-corpus scan is needed (r13
-    ADVICE). Corpus lands under `{out_dir}/corpus`, hash state under
-    `{out_dir}/url_state`."""
+    Exactly-once: the checkpoint replays a failed micro-batch. A replayed
+    micro-batch re-appends identical rows that the doc_id-deduped read
+    view collapses, the state fold-in is a set union, and a post-fold
+    replay probes its own hashes out of state into a no-op; no
+    per-batch landed-corpus scan is needed (r13 ADVICE). The query
+    drains the files present, then stops (an availableNow trigger); a
+    later call resumes from the checkpoint. Corpus lands under
+    `{out_dir}/corpus`, hash state under `{out_dir}/url_state`."""
     from pyspark.sql import functions as F
 
     from ..operators.dedup import dedup_filter_new, dedup_state_add
@@ -172,6 +85,4 @@ def start_url_dedup_stream(
         reader.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -42,7 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..etl.snapshot import durable_replace
+from ..etl.snapshot import durable_replace, fsync_tree
 
 #: deltas allowed between full-snapshot compactions (chain length cap).
 COMPACT_EVERY = 8
@@ -58,29 +58,6 @@ def _version_dir(store_dir: str, version: int) -> str:
     return os.path.join(store_dir, f"v={version}")
 
 
-def _fsync_tree(path: str) -> None:
-    """fsync every file under `path` plus the directories themselves —
-    the data half of a durable pointer commit: a pointer made durable
-    before its parquet pages flush would name a missing/truncated
-    version after a power cut (batch never replays; the store is
-    permanently broken). Cost is the size of the tree PASSED; with the
-    append-only delta layout that tree is the batch's OWN delta files
-    for ordinary commits — O(batch) — and the full snapshot only at
-    compaction commits."""
-    for root, _dirs, files in os.walk(path):
-        for name in files:
-            fd = os.open(os.path.join(root, name), os.O_RDONLY)
-            try:
-                os.fsync(fd)
-            finally:
-                os.close(fd)
-        fd = os.open(root, os.O_RDONLY)
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-
-
 def write_pointer_atomic(
     store_dir: str, batch_id: int, data_dir: str | None = None
 ) -> None:
@@ -91,7 +68,7 @@ def write_pointer_atomic(
     could come back empty or old after a crash while the stream
     checkpoint has advanced, and earlier batch_ids never replay."""
     if data_dir is not None:
-        _fsync_tree(data_dir)
+        fsync_tree(data_dir)
     durable_replace(_pointer_path(store_dir), str(batch_id))
 
 
@@ -101,7 +78,7 @@ def write_pointer_atomic(
 
 def _write_manifest(vdir: str, manifest: dict) -> None:
     # written AFTER the parquet payload (mode=overwrite clears the dir)
-    # and BEFORE the pointer flip; _fsync_tree covers it.
+    # and BEFORE the pointer flip; fsync_tree covers it.
     with open(os.path.join(vdir, _MANIFEST), "w") as f:
         json.dump(manifest, f)
 
@@ -429,16 +406,13 @@ def start_mirror_stream(
     table: str,
     mirror_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    keep: int = 2,
 ):
     """Subscribe the mirror to a snapshot table's change feed.
 
     One microbatch per snapshot-version delta (the source's offset is
-    the version number); `available_now=True` drains pending commits
-    then stops — the batch-shaped way to drive a long-lived consumer in
-    tests and catch-up jobs. ``keep`` = retention width (versions whose
-    chains stay readable)."""
+    the version number). The query drains the pending commits, then
+    stops (an availableNow trigger); a later call resumes from the
+    checkpoint."""
     from ..sources.python_datasource import register_snapshot_changes
 
     register_snapshot_changes(spark)
@@ -450,11 +424,9 @@ def start_mirror_stream(
         .load()
     )
     writer = feed.writeStream.foreachBatch(
-        lambda df, bid: apply_changes_batch(df, bid, mirror_dir, keep=keep)
+        lambda df, bid: apply_changes_batch(df, bid, mirror_dir)
     ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def start_keyed_mirror_stream(
@@ -464,12 +436,10 @@ def start_keyed_mirror_stream(
     mirror_dir: str,
     checkpoint_dir: str,
     key_cols: list[str],
-    available_now: bool = True,
-    keep: int = 2,
 ):
     """The keyed (upsert-by-key) twin of start_mirror_stream — same
-    source, same checkpoint/restart discipline, apply routed through
-    apply_changes_batch_keyed."""
+    source, trigger and checkpoint/restart discipline, apply routed
+    through apply_changes_batch_keyed."""
     from ..sources.python_datasource import register_snapshot_changes
 
     register_snapshot_changes(spark)
@@ -481,10 +451,6 @@ def start_keyed_mirror_stream(
         .load()
     )
     writer = feed.writeStream.foreachBatch(
-        lambda df, bid: apply_changes_batch_keyed(
-            df, bid, mirror_dir, key_cols, keep=keep
-        )
+        lambda df, bid: apply_changes_batch_keyed(df, bid, mirror_dir, key_cols)
     ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -1,9 +1,9 @@
 """The follower cursor (fast lane): CursorStore over the snapshot
 manifest, its crash behaviour, cursor seeding, the refusal of a
 plain-parquet store and of a manifest from before fragment commits,
-`cli status`, the config size checks and the maintenance verbs'
-argument checks — all without Spark — and the follower over a landed
-source with no block yet."""
+`cli status`, the durable order of a publish, the config checks and the
+maintenance verbs' argument checks — all without Spark — and the
+follower over a landed source with no block yet."""
 
 from __future__ import annotations
 
@@ -190,6 +190,28 @@ def test_load_config_rejects_non_positive_sizes(tmp_path, value):
         assert cli.load_config(str(path))[key] == 25
 
 
+@pytest.mark.parametrize(
+    "line",
+    [
+        'backfill = "false"', 'backfill = "true"', "backfill = 0",
+        "tick_seconds = 0", "tick_seconds = -1.5", 'tick_seconds = "10"',
+        "tick_seconds = true", "tick_seconds = inf", "tick_seconds = nan",
+    ],
+)
+def test_load_config_rejects_mistyped_backfill_and_tick(tmp_path, line):
+    # bool("false") is True, so a quoted false used to backfill from the
+    # first block; a tick of 0 or less made `start` poll without sleeping.
+    base = 'blocks_path = "b"\ntxns_path = "t"\nout_dir = "o"\n'
+    path = tmp_path / "settings.toml"
+    key = line.split(" = ")[0]
+    path.write_text(base + line + "\n")
+    with pytest.raises(SystemExit, match=f"invalid {key}"):
+        cli.load_config(str(path))
+    path.write_text(base + "backfill = false\ntick_seconds = 0.5\n")
+    cfg = cli.load_config(str(path))
+    assert (cfg["backfill"], cfg["tick_seconds"]) == (False, 0.5)
+
+
 def _two_version_store(tmp_path):
     """A store whose CURRENT (version 2) still serves version 1's
     fragment of range 0 beside its own fragment of range 1."""
@@ -249,3 +271,59 @@ def test_target_mb_must_be_positive(tmp_path, monkeypatch, capsys, command):
             cli.main(argv + ["--target-mb", bad])
         assert exc.value.code == 2
         assert "not a positive integer" in capsys.readouterr().err
+
+
+def test_publish_syncs_new_fragments_before_the_manifest(tmp_path, monkeypatch):
+    # Spark's parquet writer does not fsync. Unless publish syncs the
+    # fragments a version adds (files, their directories and the
+    # entries leading to them) before it writes the manifest, a power
+    # cut can leave a durable CURRENT naming files that never reached
+    # disk.
+    out = str(tmp_path)
+    for table, v, r in (("rewards", 1, 0), ("rewards", 2, 0), ("rewards", 2, 1),
+                        ("transactions", 2, 1)):
+        part = tmp_path / table / f"v={v}" / f"block_range={r}"
+        part.mkdir(parents=True, exist_ok=True)
+        (part / "part-00000.parquet").write_bytes(b"x")
+        (part / ".part-00000.parquet.crc").write_bytes(b"c")
+    store = SnapshotStore(out)
+    store.publish(
+        {"version": 1, "height": 999, "first_block": 0,
+         "tables": {"rewards": {"0": [[1, 0, 999]]}}}
+    )
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        st = os.fstat(fd)
+        events.append(("fsync", (st.st_dev, st.st_ino)))
+        real_fsync(fd)
+
+    def replace(src, dst, **kw):
+        events.append(("replace", dst))
+        real_replace(src, dst, **kw)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    store.publish(
+        {"version": 2, "height": 1029, "first_block": 0,
+         "tables": {"rewards": {"0": [[1, 0, 999], [2, 1000, 1029]],
+                                "1": [[2, 1000, 1029]]},
+                    "transactions": {"1": [[2, 1000, 1029]]}}}
+    )
+
+    def ino(*parts):
+        st = os.stat(os.path.join(out, *parts))
+        return ("fsync", (st.st_dev, st.st_ino))
+
+    first_meta = events.index(ino("_snapshots", "snap-000000000002.json"))
+    assert events.index(("replace", os.path.join(out, "_snapshots", "CURRENT"))) > first_meta
+    before = events[:first_meta]
+    for table, r in (("rewards", 0), ("rewards", 1), ("transactions", 1)):
+        frag = (table, "v=2", f"block_range={r}")
+        for name in ("part-00000.parquet", ".part-00000.parquet.crc", ""):
+            assert ino(*frag, name) in before, (frag, name)
+        assert ino(table, "v=2") in before and ino(table) in before
+    assert ino() in before  # the root holds the new transactions table
+    # version 1's fragment is not this commit's data
+    assert ino("rewards", "v=1", "block_range=0", "part-00000.parquet") not in events

@@ -59,13 +59,6 @@ class TestDedup:
         assert by_keeper[1] == 2          # docs 1,2 collapse
         assert len(out) == 4              # 5 docs → 4 distinct texts
 
-    def test_minhash_lsh_finds_planted_near_dup(self, spark, docs):
-        pairs = dedup.minhash_lsh_pairs(docs, num_perm=16, bands=8, jaccard_threshold=0.5)
-        got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
-        assert (1, 2) in got              # exact dup always survives
-        assert (1, 3) in got or (2, 3) in got  # near dup (jaccard 0.6)
-        assert all(a < b for a, b in got)
-
     def test_simhash_hamming_zero_for_identical(self, spark, docs):
         pairs = dedup.simhash_near_pairs(docs, max_hamming=8)
         got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in pairs.collect()}
@@ -110,9 +103,6 @@ class TestDedup:
         )
         out = dedup.minhash_signatures(docs, 4).collect()
         assert {r["doc_id"] for r in out} == {1}
-        # and the downstream pair generator never emits NULL-doc collisions
-        pairs = dedup.minhash_lsh_pairs(docs, 8, 4, 0.1).collect()
-        assert not any(2 in (r["doc_a"], r["doc_b"]) or 3 in (r["doc_a"], r["doc_b"]) for r in pairs)
 
     def test_ngram_jaccard_respects_blocking(self, spark, docs):
         pairs = dedup.ngram_jaccard_pairs(docs, block_col="lang", threshold=0.1)
@@ -142,12 +132,6 @@ class TestKnn:
         got = {r["vec_id"]: r["centroid_id"] for r in out.collect()}
         assert got[0] == 0 and got[1] == 1
         assert got[2] in (0, 1) and got[3] == 1  # 3 is closer to 1 than to 0
-
-    def test_lsh_buckets_deterministic(self, spark, vecs):
-        b1 = {r["vec_id"]: r["bucket"] for r in knn.hyperplane_lsh_buckets(vecs, 8, 3).collect()}
-        b2 = {r["vec_id"]: r["bucket"] for r in knn.hyperplane_lsh_buckets(vecs, 8, 3).collect()}
-        assert b1 == b2
-        assert all(len(v) == 8 for v in b1.values())
 
     def test_lloyd_refine_moves_centroid_to_member_mean(self, spark, vecs):
         # seed = vec 0 only → every vector assigns to it → refined
@@ -382,6 +366,7 @@ class TestMultimodal:
         feats = {r["doc_id"]: r for r in
                  multimodal.extract_features(multimodal.to_binary_assets(docs)).collect()}
         text = "the quick brown fox"
+        assert len(feats) == 5
         assert feats[1]["n_bytes"] == len(text)
         assert feats[1]["mean_byte"] == round(sum(text.encode()) / len(text), 6)
         assert feats[1]["max_byte"] == max(text.encode())
@@ -476,14 +461,6 @@ class TestAsofJoinUnion:
             left_ts="ts", right_ts="ts", right_tiebreak="val",
         ).collect()
         assert len(out) == 1 and out[0]["val"] == 2
-
-
-class TestArrowFeatureParity:
-    def test_arrow_and_pandas_kernels_agree(self, spark, docs):
-        assets = multimodal.to_binary_assets(docs)
-        via_pandas = {tuple(r) for r in multimodal.extract_features(assets).collect()}
-        via_arrow = {tuple(r) for r in multimodal.extract_features_arrow(assets).collect()}
-        assert via_arrow == via_pandas and len(via_arrow) == 5
 
 
 class TestJaccardBlasKernel:
@@ -967,41 +944,6 @@ def test_dhash_short_images_keep_full_bit_entropy():
     # ALL 64 bits must be 1 — the NaN bug forced 56 of them to 0
     assert ha == (1 << 64) - 1
     assert hb == 0  # descending gradient: the exact mirror
-
-
-class TestIncrementalPCA:
-    def test_folded_moments_equal_full_fit(self, spark, sf_dir, tmp_path):
-        # Fold two disjoint batches into the moment state; the refit
-        # must equal the from-scratch fit over the whole table.
-        import numpy as np
-        import pyspark.sql.functions as F
-
-        from helium_etl_lite_spark.operators import pca
-        from helium_etl_lite_spark.tables import Tables
-
-        v = Tables(spark, sf_dir).embeddings.select(
-            "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
-        )
-        state = str(tmp_path / "pca_state.json")
-        pca.moments_update(spark, v.where(F.col("vec_id") % 2 == 0), state, "e")
-        pca.moments_update(spark, v.where(F.col("vec_id") % 2 == 1), state, "e")
-        m_inc, c_inc, e_inc = pca.fit_pca_from_state(state, k=6)
-        m_full, c_full, e_full = pca.fit_pca(v, vec_col="e", k=6)
-        np.testing.assert_allclose(m_inc, m_full, atol=1e-9)
-        np.testing.assert_allclose(e_inc, e_full, rtol=1e-9)
-        np.testing.assert_allclose(c_inc, c_full, atol=1e-7)
-
-    def test_dimension_mismatch_fails_fast(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from helium_etl_lite_spark.operators import pca
-
-        a = spark.createDataFrame([(1, [1.0, 2.0])], "id long, e array<double>")
-        b = spark.createDataFrame([(2, [1.0, 2.0, 3.0])], "id long, e array<double>")
-        state = str(tmp_path / "s.json")
-        pca.moments_update(spark, a, state, "e")
-        with _pytest.raises(ValueError, match="dimension"):
-            pca.moments_update(spark, b, state, "e")
 
 
 class TestContainmentScreened:

@@ -1,6 +1,8 @@
 """Every module under helium_etl_lite_spark/ is reachable from a program
-entry point (fast lane, no Spark): a module that only tests import is
-code the program never runs, and it should go rather than grow.
+entry point, and every top-level definition in it is referenced from
+program code or listed, with its reason, in TEST_ONLY (fast lane, no
+Spark): a module or definition that only tests use is code the program
+never runs, and it should go rather than grow.
 
 The walk reads `import` and `from ... import` nodes with `ast`,
 including imports inside functions (registry.load_all imports the
@@ -65,7 +67,9 @@ def _imported(path: str, module: str | None, is_package: bool) -> set[str]:
     return names
 
 
-def _unreachable() -> list[str]:
+def _walk() -> tuple[dict[str, str], list[str], set[str]]:
+    """(every package module, the entry-point files, the package modules
+    they reach)."""
     modules = _package_modules()
     entry_files = []
     for entry in ENTRY_POINTS:
@@ -99,6 +103,11 @@ def _unreachable() -> list[str]:
         mod = todo.pop()
         path = modules[mod]
         visit(_imported(path, mod, path.endswith("__init__.py")))
+    return modules, entry_files, seen
+
+
+def _unreachable() -> list[str]:
+    modules, _, seen = _walk()
     return sorted(set(modules) - seen)
 
 
@@ -107,4 +116,84 @@ def test_every_package_module_is_reachable_from_an_entry_point():
     assert unreachable == [], (
         "modules no entry point imports (delete them, or import them from "
         f"program code): {unreachable}"
+    )
+
+
+# Top-level definitions that only tests reference, kept on purpose. Each
+# entry must still exist and still have no program reference, so the list
+# cannot go stale: a deleted entry or one that gains a program caller
+# fails the check until it is taken off.
+TEST_ONLY = {
+    "operators.dedup.ngram_jaccard_pairs": "reference for ngram_jaccard_pairs_blas",
+    "operators.knn.cosine_pairs_blocked": "reference for cosine_pairs_blocked_np",
+    "operators.knn.lsh_table_buckets": "reference for _lsh_table_buckets_np",
+    "etl.pipeline.backfill_epoch_walk": "reference for LandedBlockSource.first",
+    "sources.block_source.FakeRpcClient": "test double for RpcBlockSource's client",
+    "scratch.scratch_path": "test helper: where a query left its scratch output",
+    "plans.explain_tools.assert_pushed_filter": "test helper: plan assertion",
+    "plans.explain_tools.assert_read_schema_only": "test helper: plan assertion",
+    "plans.explain_tools.assert_broadcast_join": "test helper: plan assertion",
+    "plans.explain_tools.assert_partial_aggregate": "test helper: plan assertion",
+    "plans.explain_tools.assert_whole_stage_codegen": "test helper: plan assertion",
+    "plans.explain_tools.count_shuffles": "test helper: plan shuffle count",
+    "plans.explain_tools.count_key_shuffles": "test helper: plan shuffle count",
+}
+
+
+def _referenced_names(path: str) -> set[str]:
+    """Every bare name, attribute name and imported name in `path`."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names.update(alias.name.rsplit(".", 1)[-1] for alias in node.names)
+    return names
+
+
+def _test_only_definitions() -> list[str]:
+    """Top-level functions and classes of the package whose name no
+    program file (entry point or reachable module) references. Methods
+    are out of scope.
+
+    Matching is by name, so a definition sharing its name with anything
+    the program references counts as used: the check can miss an unused
+    definition but never flags a used one. A decorated definition counts
+    as used, since its decorator (the registry's @query) references it."""
+    modules, entry_files, seen = _walk()
+    referenced = set()
+    for path in entry_files + [modules[m] for m in seen]:
+        referenced |= _referenced_names(path)
+    prefix = PACKAGE + "."
+    found = []
+    for mod, path in modules.items():
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in tree.body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not node.decorator_list
+                and node.name not in referenced
+            ):
+                found.append(f"{mod.removeprefix(prefix)}.{node.name}")
+    return sorted(found)
+
+
+def test_every_package_definition_has_a_program_reference():
+    unlisted = sorted(set(_test_only_definitions()) - set(TEST_ONLY))
+    assert unlisted == [], (
+        "top-level definitions only tests reference (delete them, or list "
+        f"them in TEST_ONLY with the reason they stay): {unlisted}"
+    )
+
+
+def test_test_only_list_is_current():
+    stale = sorted(set(TEST_ONLY) - set(_test_only_definitions()))
+    assert stale == [], (
+        "TEST_ONLY entries that no longer exist or now have a program "
+        f"reference (take them off the list): {stale}"
     )

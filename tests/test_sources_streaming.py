@@ -372,100 +372,6 @@ class TestPythonDataSource:
         assert df.rdd.getNumPartitions() == 3  # one InputPartition per file
         assert {r["height"] for r in df.collect()} == set(range(30))
 
-    def test_stream_reader_advances_offset_across_batches(self, spark, tmp_path):
-        import json
-        import time
-
-        from helium_etl_lite_spark.sources import python_datasource
-
-        src = tmp_path / "blocks"
-        out = tmp_path / "out"
-        ckpt = tmp_path / "ckpt"
-        src.mkdir()
-
-        def write_file(i):
-            with open(src / f"part-{i}.json", "w") as f:
-                for h in range(i * 5, i * 5 + 5):
-                    f.write(json.dumps({
-                        "height": h, "block_hash": f"h{h}",
-                        "block_date": "2024-01-01", "n_txns": 1,
-                    }) + "\n")
-
-        write_file(0)
-        python_datasource.register(spark)
-        stream = (
-            spark.readStream.format("blocks_jsonl").option("path", str(src)).load()
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert spark.read.parquet(str(out)).count() == 5
-
-        # a second file lands; restart consumes ONLY the new file
-        write_file(1)
-        q = (
-            spark.readStream.format("blocks_jsonl").option("path", str(src)).load()
-            .writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = spark.read.parquet(str(out))
-        assert got.count() == 10  # no double-read of file 0
-        assert {r["height"] for r in got.collect()} == set(range(10))
-
-    def test_stream_reader_handles_out_of_order_file_names(self, spark, tmp_path):
-        # part-10 sorts BEFORE part-2 lexicographically; a count/
-        # watermark offset would skip or duplicate — the seen-set offset
-        # must consume every file exactly once.
-        import json
-
-        from helium_etl_lite_spark.sources import python_datasource
-
-        src = tmp_path / "blocks"
-        out = tmp_path / "out"
-        ckpt = tmp_path / "ckpt"
-        src.mkdir()
-
-        def write_file(name, heights):
-            with open(src / name, "w") as f:
-                for h in heights:
-                    f.write(json.dumps({
-                        "height": h, "block_hash": f"h{h}",
-                        "block_date": "2024-01-01", "n_txns": 1,
-                    }) + "\n")
-
-        write_file("part-2.json", [0, 1])
-        python_datasource.register(spark)
-
-        def run_batch():
-            q = (
-                spark.readStream.format("blocks_jsonl")
-                .option("path", str(src)).load()
-                .writeStream.format("parquet")
-                .option("path", str(out))
-                .option("checkpointLocation", str(ckpt))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        run_batch()
-        # lands two files, one sorting BEFORE the consumed part-2
-        write_file("part-10.json", [2, 3])
-        write_file("part-0.json", [4, 5])
-        run_batch()
-        got = spark.read.parquet(str(out))
-        assert got.count() == 6
-        assert {r["height"] for r in got.collect()} == set(range(6))
-
 
 class TestSnapshotChangesStream:
     """Streaming CDC over the snapshot sink (sources/python_datasource
