@@ -30,7 +30,7 @@ Config (TOML, reference settings.toml keys where they translate):
                             block data; used when node_addr is absent)
   source_format             "json" reads the landed files as JSON-lines
                             (also when blocks_path ends in .json/.jsonl);
-                            parquet otherwise
+                            "parquet" (the default) otherwise
   out_dir                   snapshot store root (database_url analog):
                             data and cursor commit together in one
                             manifest rename (etl/snapshot.py)
@@ -86,6 +86,11 @@ def load_config(path: str) -> dict:
             raise SystemExit(f"config missing required key: {key}")
     if str(cfg.get("mode", "rewards")) not in ("rewards", "full", "filters"):
         raise SystemExit(f"invalid mode: {cfg.get('mode')!r}")
+    # any other value would pick the parquet reader and fail inside Spark
+    if cfg.get("source_format", "parquet") not in ("json", "parquet"):
+        raise SystemExit(
+            f"invalid source_format: {cfg['source_format']!r} (expected \"json\" or \"parquet\")"
+        )
     for key in ("max_blocks_per_batch", "block_range_size"):
         v = cfg.get(key)
         if v is not None and (type(v) is not int or v <= 0):

@@ -146,14 +146,15 @@ def compact_snapshot(
     root: str,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict | None:
-    """Compact a snapshot-manifest store (the follower's sink) the
-    lakehouse way: merge each block range's fragments (one per tick
-    that landed in it), or a lone fragment holding more files than its
-    size needs, into one fragment of a new version directory, and
-    publish a manifest that remaps them — data files are never mutated,
-    so concurrent snapshot readers are never torn, and a crash before
-    publish leaves an orphan v-dir exactly like a crashed batch
-    (invisible, overwritten by the next commit).
+    """Compact a snapshot-manifest store (the follower's sink, and each
+    streaming consumer's store) the lakehouse way: merge each block
+    range's fragments (one per tick or apply that landed in it), or a
+    lone fragment holding more files than its size needs, into one
+    fragment of a new version directory, and publish a manifest that
+    remaps them — data files are never mutated, so concurrent snapshot
+    readers are never torn, and a crash before publish leaves an orphan
+    v-dir exactly like a crashed batch (invisible, overwritten by the
+    next commit).
 
     Only fragments listed in the CURRENT manifest are read or
     rewritten: uncommitted/orphaned directories (a crashed writer's

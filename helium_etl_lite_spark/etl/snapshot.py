@@ -88,9 +88,7 @@ def durable_replace(path: str, text: str) -> None:
     parent flushes — a power cut could resurrect the old content).
     Readers see the old or the new content, never a torn one; a crash
     before the rename leaves only a stale `.tmp` that the next call
-    overwrites. Shared by SnapshotStore's CURRENT swap (which also
-    publishes the follower cursor) and the streaming stores' CURRENT
-    pointers (streaming.mirror.write_pointer_atomic)."""
+    overwrites."""
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         f.write(text)
@@ -108,14 +106,13 @@ def _fsync_path(path: str) -> None:
         os.close(fd)
 
 
-def fsync_tree(path: str) -> None:
+def _fsync_tree(path: str) -> None:
     """fsync every file under `path` plus the directories themselves —
-    the data half of a durable pointer commit: a pointer made durable
-    before its parquet pages flush would name a missing/truncated
-    version after a power cut (the batch never replays; the store is
-    permanently broken). Spark's parquet writer does not fsync. Cost is
-    the size of the tree passed, so callers pass only what the commit
-    wrote (a snapshot commit's new fragments, a mirror delta)."""
+    the data half of a durable CURRENT swap: a manifest made durable
+    before its fragments' parquet pages flush would name missing or
+    truncated files after a power cut. Spark's parquet writer does not
+    fsync. Cost is the size of the tree passed, so publish passes only
+    the fragments its version adds."""
     for root, _dirs, files in os.walk(path):
         for name in files:
             _fsync_path(os.path.join(root, name))
@@ -276,7 +273,7 @@ class SnapshotStore:
                 if isinstance(frags, list) and any(f[0] == version for f in frags)
             ]
             for r in new:
-                fsync_tree(fragment_dir(self.root, table, r, version))
+                _fsync_tree(fragment_dir(self.root, table, r, version))
             if new:
                 _fsync_path(os.path.join(self.root, table, f"v={version}"))
                 _fsync_path(os.path.join(self.root, table))
@@ -439,8 +436,6 @@ def read_changes(
     an unrelated delete+insert. Pairing is one semi/anti-join set on
     the (already O(churn)-bounded) diff keyed by `key_cols`; rows whose
     key appears on only one side keep their plain insert/delete tags.
-    Default (None) is byte-identical to the historical feed, so the
-    mirror/curation consumers are untouched.
 
     Metadata-first: the two manifests' fragment lists identify exactly
     which fragments were removed (in v_from only) and added (in v_to

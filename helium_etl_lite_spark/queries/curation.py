@@ -1413,9 +1413,10 @@ def stream_incremental_curation(spark, sf_dir):
     land exactly the from-scratch fixed point — the strongest
     convergence statement in the registry, mirroring the
     sink_snapshot_changes_apply / stream_cdc_mirror pairing."""
-    from ..etl.snapshot import commit_batch_atomic
+    from ..etl.snapshot import commit_batch_atomic, read_snapshot
     from ..scratch import scratch_dir
-    from ..streaming.curation_stream import start_curation_stream
+    from ..streaming.curation_stream import CURATED, curate_changes_batch
+    from ..streaming.mirror import start_changes_stream
 
     t = Tables(spark, sf_dir)
     docs = t.documents.select(
@@ -1431,19 +1432,21 @@ def stream_incremental_curation(spark, sf_dir):
         spark, root, {"docs": b1}, lo=0, hi=hi, height=hi,
         first_block=0, heights=b1.select("block"),
     )
-    q1 = start_curation_stream(spark, root, "docs", curated, ckpt)
+    q1 = start_changes_stream(
+        spark, root, "docs", curated, ckpt, curate_changes_batch
+    )
     q1.awaitTermination(300)
 
     commit_batch_atomic(
         spark, root, {"docs": docs}, lo=0, hi=hi, height=hi,
         first_block=0, heights=docs.select("block"),
     )
-    q2 = start_curation_stream(spark, root, "docs", curated, ckpt)
+    q2 = start_changes_stream(
+        spark, root, "docs", curated, ckpt, curate_changes_batch
+    )
     q2.awaitTermination(300)
 
-    from ..streaming.curation_stream import read_mirror
-
-    return read_mirror(spark, curated).select("doc_id", "lang").orderBy(
+    return read_snapshot(spark, curated, CURATED).select("doc_id", "lang").orderBy(
         "doc_id"
     )
 

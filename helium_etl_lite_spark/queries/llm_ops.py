@@ -4553,21 +4553,19 @@ def stream_substring_dedup(spark, sf_dir):
     # (batch state loop) and text_dedup_substring_anchor (one-shot):
     # batch 1 (even doc_ids) commits to a snapshot table and the
     # change-feed consumer (streaming/curation_stream.py
-    # start_substring_dedup_stream) folds it; batch 2 (odds) commits
+    # substring_changes_batch) folds it; batch 2 (odds) commits
     # and a SECOND stream RESTARTED from the checkpoint drains the
-    # delta — the kill/catch-up cycle. Each published version carries
-    # the cumulative deduped data AND the cumulative span-hash set in
-    # ONE atomically-pointered directory (no split-store crash
-    # window). The oracle states the two-phase rule over the union
-    # (evens dedup among themselves in (doc_id, p) order; odds drop
-    # against even spans or earlier odds), so the hash match proves
-    # the streaming execution lands exactly the two-batch semantics.
-    from ..etl.snapshot import commit_batch_atomic
+    # delta — the kill/catch-up cycle. Each apply publishes its
+    # deduped data AND its span hashes in ONE snapshot commit (no
+    # split-store crash window). The oracle states the two-phase rule
+    # over the union (evens dedup among themselves in (doc_id, p)
+    # order; odds drop against even spans or earlier odds), so the hash
+    # match proves the streaming execution lands exactly the two-batch
+    # semantics.
+    from ..etl.snapshot import commit_batch_atomic, read_snapshot
     from ..scratch import scratch_dir
-    from ..streaming.curation_stream import (
-        _substring_version_part,
-        start_substring_dedup_stream,
-    )
+    from ..streaming.curation_stream import substring_changes_batch
+    from ..streaming.mirror import start_changes_stream
 
     t = Tables(spark, sf_dir)
     docs = t.documents.select(
@@ -4583,18 +4581,22 @@ def stream_substring_dedup(spark, sf_dir):
         spark, root, {"docs": b1}, lo=0, hi=hi, height=hi,
         first_block=0, heights=b1.select("block"),
     )
-    q1 = start_substring_dedup_stream(spark, root, "docs", out, ckpt)
+    q1 = start_changes_stream(
+        spark, root, "docs", out, ckpt, substring_changes_batch
+    )
     q1.awaitTermination(300)
 
     commit_batch_atomic(
         spark, root, {"docs": docs}, lo=0, hi=hi, height=hi,
         first_block=0, heights=docs.select("block"),
     )
-    q2 = start_substring_dedup_stream(spark, root, "docs", out, ckpt)
+    q2 = start_changes_stream(
+        spark, root, "docs", out, ckpt, substring_changes_batch
+    )
     q2.awaitTermination(300)
 
     return (
-        _substring_version_part(spark, out, "data")
+        read_snapshot(spark, out, "data")
         .select("doc_id", "n_tokens_kept", "text_dedup")
         .orderBy("doc_id")
     )

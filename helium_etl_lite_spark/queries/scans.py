@@ -612,10 +612,11 @@ def stream_cdc_mirror(spark, sf_dir):
     mdir = scratch_dir("stream_cdc_mirror_dst")
     ckpt = scratch_dir("stream_cdc_mirror_ckpt")
     ev, hi, r5 = _cdc_fixture_commit1(spark, sf_dir, root)
-    q1 = mirror.start_mirror_stream(spark, root, "rewards", mdir, ckpt)
+    apply = mirror.apply_changes_batch
+    q1 = mirror.start_changes_stream(spark, root, "rewards", mdir, ckpt, apply)
     q1.awaitTermination(300)
     _cdc_fixture_commit2(spark, ev, root, hi, r5)
-    q2 = mirror.start_mirror_stream(spark, root, "rewards", mdir, ckpt)
+    q2 = mirror.start_changes_stream(spark, root, "rewards", mdir, ckpt, apply)
     q2.awaitTermination(300)
     return mirror.read_mirror(spark, mdir).select("block", "value")
 
@@ -634,8 +635,8 @@ def stream_cdc_mirror_keyed(spark, sf_dir):
     """The KEYED (upsert-by-key) streaming CDC consumer — third
     consumer proving the same v2 fixed point as stream_cdc_mirror and
     sink_snapshot_changes_apply, through a genuinely different apply:
-    every key the feed touches is replaced wholesale (null-safe
-    anti-join on the feed's key set) instead of multiset exceptAll on
+    every block the feed touches is replaced wholesale (the snapshot
+    commit claims the feed's blocks) instead of multiset exceptAll on
     row images. Same two-commit fixture, two availableNow drains with a
     checkpoint restart between (the kill/catch-up cycle), same
     independent oracle. Why it earns a row: keyed apply reconverges to
@@ -648,14 +649,11 @@ def stream_cdc_mirror_keyed(spark, sf_dir):
     mdir = scratch_dir("stream_cdc_keyed_dst")
     ckpt = scratch_dir("stream_cdc_keyed_ckpt")
     ev, hi, r5 = _cdc_fixture_commit1(spark, sf_dir, root)
-    q1 = mirror.start_keyed_mirror_stream(
-        spark, root, "rewards", mdir, ckpt, key_cols=["block"]
-    )
+    apply = mirror.apply_changes_batch_keyed
+    q1 = mirror.start_changes_stream(spark, root, "rewards", mdir, ckpt, apply)
     q1.awaitTermination(300)
     _cdc_fixture_commit2(spark, ev, root, hi, r5)
-    q2 = mirror.start_keyed_mirror_stream(
-        spark, root, "rewards", mdir, ckpt, key_cols=["block"]
-    )
+    q2 = mirror.start_changes_stream(spark, root, "rewards", mdir, ckpt, apply)
     q2.awaitTermination(300)
     return mirror.read_mirror(spark, mdir).select("block", "value")
 

@@ -7,15 +7,15 @@ kill/restart without double-landing or losing a batch.
 Exactly-once differs from the batch loop in one important way: the
 batch loop's dedup state and curated sink are two separate stores, so
 a crash between the two writes needs the state's set-semantics to
-swallow the replay. Here the curated store IS the state — each
-version carries (doc_id, lang, text_hash), so one atomic pointer flip
-publishes the data AND the dedup state together, and a replayed batch
-(stable batch_id, the standard foreachBatch recipe) skips wholesale.
-The pointer/versioning machinery is mirror.py's, and since the store
-is APPEND-ONLY its deltas are simply the batch's fresh rows (r10
-verdict item 2): an ordinary commit writes and fsyncs O(batch);
-readers union the chain; compaction every COMPACT_EVERY commits
-rewrites one full base so chains stay bounded and retention reclaims.
+swallow the replay. Here the curated store IS the state — each row
+carries (doc_id, lang, text_hash), so one snapshot commit publishes the
+data, the dedup state and the batch id (the manifest's cursor)
+together, and a replayed batch (stable batch_id, the standard
+foreachBatch recipe) skips wholesale. The store is a snapshot store
+written through mirror.py's commit_batch. It is APPEND-ONLY: each row
+carries its batch id in the `block` column the store keys on, so an
+apply appends one fragment holding only the batch's fresh rows and
+reads nothing back; compaction and retention are commit_batch's.
 
 Probe shape at scale: the curated store never shuffles — the batch's
 distinct hash fingerprints broadcast into a semi-join against the
@@ -26,38 +26,22 @@ the batch.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .mirror import (
-    COMPACT_EVERY,
-    commit_batch_version,
-    compose_version,
-    mirror_version,
-    read_mirror,
-)
+from ..etl.snapshot import read_snapshot
+from .mirror import commit_batch, is_applied
 
 CURATED_COLS = ["doc_id", "lang", "text_hash"]
+CURATED = "curated"
 
 
-def curate_changes_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    curated_dir: str,
-    keep: int = 2,
-    compact_every: int = COMPACT_EVERY,
-) -> bool:
-    """Idempotently curate one change-feed microbatch into the
-    versioned curated store. Returns False on replay (batch_id already
-    published) or an empty/no-op batch. Ordinary commits append only
-    the batch's FRESH rows as a delta; every compact_every-th commit
-    rewrites the full base."""
-    done = mirror_version(curated_dir)
-    if done is not None and done >= batch_id:
-        return False
-    if batch_df.isEmpty():
+def curate_changes_batch(batch_df: DataFrame, batch_id: int, curated_dir: str) -> bool:
+    """Idempotently curate one change-feed microbatch into the curated
+    store (table `curated`). Returns False on replay (batch_id already
+    published) or an empty/no-op batch. An apply appends only the
+    batch's FRESH rows."""
+    if is_applied(curated_dir, batch_id) or batch_df.isEmpty():
         return False
     spark = batch_df.sparkSession
     # lazy import: queries.* registers against the registry at import
@@ -78,7 +62,7 @@ def curate_changes_batch(
         .where(F.col("__rn") == 1)
         .select(*CURATED_COLS)
     )
-    prev = read_mirror(spark, curated_dir)
+    prev = read_snapshot(spark, curated_dir, CURATED)
     if prev is not None:
         fps = batch_first.select(
             F.xxhash64("text_hash").alias("__fp")
@@ -100,41 +84,12 @@ def curate_changes_batch(
         # same no-op, so skipping keeps the version history meaningful
         # (mirror.py's empty-batch contract).
         return False
-    commit_batch_version(
-        curated_dir, batch_id, done, "append",
-        write_delta=lambda vdir: fresh.write.mode("overwrite").parquet(vdir),
-        write_base=lambda vdir: (
-            prev.unionByName(fresh) if prev is not None else fresh
-        ).write.mode("overwrite").parquet(vdir),
-        keep=keep, compact_every=compact_every,
+    commit_batch(
+        spark, curated_dir,
+        {CURATED: fresh.withColumn("block", F.lit(batch_id).cast("long"))},
+        batch_id, batch_id, batch_id,
     )
     return True
-
-
-def start_curation_stream(
-    spark: SparkSession,
-    root: str,
-    table: str,
-    curated_dir: str,
-    checkpoint_dir: str,
-):
-    """Subscribe the curation loop to a snapshot table's change feed
-    (one microbatch per snapshot-version delta; the query drains the
-    pending commits, then stops — restartable from the checkpoint)."""
-    from ..sources.python_datasource import register_snapshot_changes
-
-    register_snapshot_changes(spark)
-    os.makedirs(curated_dir, exist_ok=True)
-    feed = (
-        spark.readStream.format("snapshot_changes")
-        .option("root", root)
-        .option("table", table)
-        .load()
-    )
-    writer = feed.writeStream.foreachBatch(
-        lambda df, bid: curate_changes_batch(df, bid, curated_dir)
-    ).option("checkpointLocation", checkpoint_dir)
-    return writer.trigger(availableNow=True).start()
 
 
 # ---------------------------------------------------------------------------
@@ -142,44 +97,23 @@ def start_curation_stream(
 # Structured Streaming consumer of the snapshot change feed.
 
 
-def _substring_version_part(spark: SparkSession, out_dir: str, part: str):
-    """Read one part (data | spans) of the current published version —
-    the chain composed lazily — or None before the first publish."""
-    done = mirror_version(out_dir)
-    if done is None:
-        return None
-    return compose_version(spark, out_dir, done, part=part)
-
-
-def substring_changes_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    out_dir: str,
-    keep: int = 2,
-    compact_every: int = COMPACT_EVERY,
-) -> bool:
+def substring_changes_batch(batch_df: DataFrame, batch_id: int, out_dir: str) -> bool:
     """Idempotently fold one change-feed microbatch through the
-    substring-dedup ingest loop into a versioned store. Each published
-    version carries the cumulative deduped DATA **and** the cumulative
-    span-hash SET behind one atomically-flipped pointer — the same
-    no-split-store discipline as the curation loop: a replayed
-    batch_id skips wholesale (pointer check), and a crash between the
-    data write and the pointer leaves the previous version fully
-    intact, spans included, so the replay re-derives the identical
-    result.
+    substring-dedup ingest loop into a snapshot store with two tables:
+    `data` (the deduped documents) and `spans` (the span-hash SET). One
+    commit publishes both and the batch id — the same no-split-store
+    discipline as the curation loop: a replayed batch_id skips
+    wholesale, and a crash before the commit leaves the previous
+    version fully intact, spans included, so the replay re-derives the
+    identical result.
 
-    Both parts are APPEND-ONLY, so ordinary commits are deltas holding
-    only the batch's own deduped rows and span hashes (r10 verdict
-    item 2 — O(batch) write+fsync per commit; the old layout rewrote
-    the full cumulative corpus+state every microbatch). Span hashes
-    may repeat across deltas (a batch can re-emit a hash an earlier
-    batch owns); that is harmless — the span set is only ever PROBED
-    via semi-joins with distinct on the hit side — and compaction
-    distincts them into the next base."""
-    done = mirror_version(out_dir)
-    if done is not None and done >= batch_id:
-        return False
-    if batch_df.isEmpty():
+    Both tables are APPEND-ONLY: each apply appends one fragment per
+    table holding only the batch's own deduped rows and span hashes,
+    with the batch id in `block`. Span hashes may repeat across
+    fragments (a batch can re-emit a hash an earlier batch owns); that
+    is harmless — the span set is only ever PROBED via semi-joins with
+    distinct on the hit side."""
+    if is_applied(out_dir, batch_id) or batch_df.isEmpty():
         return False
     spark = batch_df.sparkSession
     from ..operators.dedup import (
@@ -192,55 +126,17 @@ def substring_changes_batch(
     )
     if docs.isEmpty():
         return False
-    prev_spans = _substring_version_part(spark, out_dir, "spans")
-    deduped = substring_anchor_dedup_incremental_df(docs, prev_spans)
+    deduped = substring_anchor_dedup_incremental_df(
+        docs, read_snapshot(spark, out_dir, "spans")
+    )
     batch_spans = anchored_span_table(docs).select("h").distinct()
-
-    def _write_parts(vdir: str, data, spans) -> None:
-        data.write.mode("overwrite").parquet(os.path.join(vdir, "data"))
-        spans.write.mode("overwrite").parquet(os.path.join(vdir, "spans"))
-
-    def write_base(vdir: str) -> None:
-        prev_data = _substring_version_part(spark, out_dir, "data")
-        _write_parts(
-            vdir,
-            prev_data.unionByName(deduped) if prev_data is not None else deduped,
-            prev_spans.select("h").unionByName(batch_spans).distinct()
-            if prev_spans is not None
-            else batch_spans,
-        )
-
-    commit_batch_version(
-        out_dir, batch_id, done, "append",
-        write_delta=lambda vdir: _write_parts(vdir, deduped, batch_spans),
-        write_base=write_base,
-        keep=keep, compact_every=compact_every,
+    block = F.lit(batch_id).cast("long")
+    commit_batch(
+        spark, out_dir,
+        {
+            "data": deduped.withColumn("block", block),
+            "spans": batch_spans.withColumn("block", block),
+        },
+        batch_id, batch_id, batch_id,
     )
     return True
-
-
-def start_substring_dedup_stream(
-    spark: SparkSession,
-    root: str,
-    table: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Subscribe the substring-dedup ingest loop to a snapshot table's
-    change feed (one microbatch per snapshot-version delta; the query
-    drains the pending commits, then stops — restartable from the
-    checkpoint)."""
-    from ..sources.python_datasource import register_snapshot_changes
-
-    register_snapshot_changes(spark)
-    os.makedirs(out_dir, exist_ok=True)
-    feed = (
-        spark.readStream.format("snapshot_changes")
-        .option("root", root)
-        .option("table", table)
-        .load()
-    )
-    writer = feed.writeStream.foreachBatch(
-        lambda df, bid: substring_changes_batch(df, bid, out_dir)
-    ).option("checkpointLocation", checkpoint_dir)
-    return writer.trigger(availableNow=True).start()

@@ -1,379 +1,169 @@
 """Streaming CDC consumer: maintain a downstream MIRROR of a snapshot
-table from its change feed.
+table from its change feed, and the store and subscription every
+change-feed consumer shares (the curation consumers in
+curation_stream.py use them too).
 
 The batch query `sink_snapshot_changes_apply` proves v1 + feed == v2;
-this is the same contract in true streaming form (r7 verdict missing
-item #4): a foreachBatch consumer subscribes to the
-`snapshot_changes` source (sources/python_datasource.py — the snapshot
-version IS the offset), applies each microbatch's inserts/deletes to a
-local mirror, and survives kill/restart without double-applying.
+this is the same contract in streaming form: a foreachBatch consumer
+subscribes to the `snapshot_changes` source (sources/python_datasource.py
+— the snapshot version IS the offset), applies each microbatch's
+inserts/deletes to a local mirror, and survives kill/restart without
+double-applying.
 
-Exactly-once is the standard foreachBatch recipe: Structured Streaming
-replays at-least-once with a STABLE batch_id, so the apply is made
-idempotent by versioning the mirror by batch_id — a replayed batch sees
-its version already published and skips.
+Every consumer store is a snapshot store (etl/snapshot.py), written
+through commit_batch_atomic: block-range fragments, a manifest, one
+durable CURRENT swap. The manifest's cursor (`height`) holds the last
+applied batch id, so the data and the batch id publish in one rename.
+Structured Streaming replays at-least-once with a STABLE batch_id, so a
+batch id at or below the cursor is a replay and is skipped; an empty
+batch publishes nothing.
 
-Store layout (r10 verdict item 2 — APPEND-ONLY DELTA): each committed
-version directory ``v=<batch_id>`` holds either
+The mirror's claim is the batch's blocks (both applies key on `block`):
+- the keyed apply replaces every claimed block with the batch's
+  insert/postimage rows, and reads nothing itself;
+- the multiset apply reads the mirror's fragments whose span meets the
+  claim, in the block ranges it touches, and writes
+  `old.exceptAll(deletes) ∪ inserts` for the claimed blocks.
+commit_batch_atomic keeps every other fragment as it is: a batch of new
+blocks above every fragment (a follower's change feed) appends only its
+own rows, and a batch that rewrites old blocks rewrites the fragments
+it overlaps.
 
-- a BASE: the full snapshot as parquet (the first publish, every
-  ``compact_every``-th commit, and any directory WITHOUT a manifest —
-  which keeps pre-delta stores and hand-seeded fixtures readable), or
-- a DELTA: only the microbatch's own change rows, plus a
-  ``_MANIFEST.json`` naming its apply kind and the chain
-  (base version + ordered delta versions) that reconstructs it.
-
-Readers compose the chain lazily (fold each delta onto the base with
-the same apply the writer used), so a version is still ONE atomic
-pointer flip — data and state publish together — but a non-compaction
-commit writes and fsyncs O(batch), not O(store). Compaction bounds the
-chain (read-plan depth and replay cost) at ``compact_every`` and lets
-retention reclaim superseded chains; per-batch IO is O(batch) amortized
-O(store / compact_every). At 100 TB the same consumer shape lands on a
-transactional table format (whose delta-log + checkpoint design this
-mirrors), but the idempotence contract is identical.
+After each apply the store stays bounded: a block range holding more
+than COMPACT_EVERY fragments is compacted (compact_snapshot), and
+vacuum keeps the fragments of the two newest versions.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..etl.snapshot import durable_replace, fsync_tree
+from ..etl.compact import compact_snapshot
+from ..etl.snapshot import (
+    SnapshotStore,
+    _read_fragments,
+    commit_batch_atomic,
+    fragments,
+    read_snapshot,
+)
 
-#: deltas allowed between full-snapshot compactions (chain length cap).
+#: fragments a block range may hold before an apply compacts the store.
 COMPACT_EVERY = 8
 
-_MANIFEST = "_MANIFEST.json"  # leading underscore: parquet readers skip it
+#: block-range width of every consumer store (commit_batch_atomic's).
+RANGE_SIZE = 1000
+
+TABLE = "mirror"
 
 
-def _pointer_path(mirror_dir: str) -> str:
-    return os.path.join(mirror_dir, "CURRENT")
-
-
-def _version_dir(store_dir: str, version: int) -> str:
-    return os.path.join(store_dir, f"v={version}")
-
-
-def write_pointer_atomic(
-    store_dir: str, batch_id: int, data_dir: str | None = None
-) -> None:
-    """Crash-safe CURRENT pointer commit shared by every versioned
-    store (mirror, streaming curation): fsync the version's data tree
-    first (pass ``data_dir``), then publish the pointer with
-    etl.snapshot.durable_replace — an unflushed or un-synced pointer
-    could come back empty or old after a crash while the stream
-    checkpoint has advanced, and earlier batch_ids never replay."""
-    if data_dir is not None:
-        fsync_tree(data_dir)
-    durable_replace(_pointer_path(store_dir), str(batch_id))
-
-
-# ---------------------------------------------------------------------------
-# Manifest + chain plumbing
-
-
-def _write_manifest(vdir: str, manifest: dict) -> None:
-    # written AFTER the parquet payload (mode=overwrite clears the dir)
-    # and BEFORE the pointer flip; fsync_tree covers it.
-    with open(os.path.join(vdir, _MANIFEST), "w") as f:
-        json.dump(manifest, f)
-
-
-def manifest_of(store_dir: str, version: int) -> dict:
-    """The version's manifest; a directory without one is a BASE (the
-    pre-delta cumulative layout and hand-seeded test fixtures)."""
-    try:
-        with open(os.path.join(_version_dir(store_dir, version), _MANIFEST)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {"kind": "base"}
-
-
-def chain_of(store_dir: str, version: int) -> list[int]:
-    """Every version directory needed to reconstruct ``version``
-    (itself, its base, and the deltas between), oldest first."""
-    man = manifest_of(store_dir, version)
-    if man["kind"] == "base":
-        return [version]
-    chain = [] if man["base"] is None else [man["base"]]
-    return chain + list(man["deltas"])
-
-
-def _read_payload(
-    spark: SparkSession, store_dir: str, version: int, part: str | None
-) -> DataFrame:
-    p = _version_dir(store_dir, version)
-    return spark.read.parquet(os.path.join(p, part) if part else p)
-
-
-def _fold_multiset(
-    cur: DataFrame | None, batch: DataFrame, has_deletes: bool = True
-) -> DataFrame:
-    """One multiset change-batch applied: deletes are exceptAll (a
-    duplicate row deleted once survives once — the read_changes
-    semantics), inserts append.
-
-    ``has_deletes=False`` is the writer-recorded fast path (r12, from
-    the bench_delta_chain datapoint: the exceptAll fold costs ~0.5 s
-    per chain link at 2M rows even when the delta holds zero deletes,
-    because the reader can't know without scanning): an insert-only
-    delta composes as a plain union — the append-heavy CDC shape pays
-    no fold at all. The flag comes from the delta's own manifest,
-    stamped at commit time when the writer has the batch in hand;
-    manifests without the key (pre-r12 stores) default to True, the
-    always-correct path."""
-    cols = [c for c in batch.columns if c != "_change_type"]
-    inserts = batch.where(F.col("_change_type") == "insert").select(*cols)
-    base = cur if cur is not None else inserts.limit(0)
-    if not has_deletes:
-        return base.unionByName(inserts)
-    deletes = batch.where(F.col("_change_type") == "delete").select(*cols)
-    return base.exceptAll(deletes).unionByName(inserts)
-
-
-def _fold_keyed(
-    cur: DataFrame | None, batch: DataFrame, key_cols: list[str]
-) -> DataFrame:
-    """One keyed change-batch applied: every key the feed touches is
-    REPLACED wholesale (null-safe anti-join), then the feed's new
-    images land. Accepts BOTH feed dialects: plain insert/delete and
-    the keyed read_changes(key_cols=) feed whose in-place changes
-    arrive as update_pre/postimage."""
-    cols = [c for c in batch.columns if c != "_change_type"]
-    inserts = batch.where(
-        F.col("_change_type").isin("insert", "update_postimage")
-    ).select(*cols)
-    if cur is None:
-        return inserts
-    touched = batch.select(
-        *[F.col(k).alias(f"__k_{k}") for k in key_cols]
-    ).distinct()
-    cond = None
-    for k in key_cols:
-        c = cur[k].eqNullSafe(F.col(f"__k_{k}"))
-        cond = c if cond is None else (cond & c)
-    survivors = cur.join(touched, cond, "left_anti")
-    return survivors.select(*cols).unionByName(inserts)
-
-
-def _fold_delta(
-    cur: DataFrame | None, batch: DataFrame, manifest: dict
-) -> DataFrame:
-    apply = manifest.get("apply", "append")
-    if apply == "multiset":
-        return _fold_multiset(cur, batch, manifest.get("has_deletes", True))
-    if apply == "keyed":
-        return _fold_keyed(cur, batch, manifest["key_cols"])
-    # append-only stores (curation, substring data/spans)
-    return batch if cur is None else cur.unionByName(batch)
-
-
-def compose_version(
-    spark: SparkSession, store_dir: str, version: int, part: str | None = None
-) -> DataFrame:
-    """Reconstruct one committed version: read its base, then fold each
-    delta in chain order with the apply the WRITER recorded in that
-    delta's own manifest. Lazy — the composition is a DataFrame plan
-    whose depth is bounded by ``compact_every``."""
-    man = manifest_of(store_dir, version)
-    if man["kind"] == "base":
-        return _read_payload(spark, store_dir, version, part)
-    cur = (
-        _read_payload(spark, store_dir, man["base"], part)
-        if man["base"] is not None
-        else None
-    )
-    for d in man["deltas"]:
-        dman = manifest_of(store_dir, d)
-        batch = _read_payload(spark, store_dir, d, part)
-        cur = _fold_delta(cur, batch, dman)
-    assert cur is not None, f"empty chain for v={version}"
-    return cur
-
-
-def _commit_version(
-    store_dir: str,
-    batch_id: int,
-    write_payload,
-    manifest: dict,
-    keep: int,
-) -> None:
-    """Shared commit tail: payload -> manifest -> fsync'd pointer flip
-    -> retention. ``write_payload`` writes parquet into the version
-    dir (overwrite mode clears it, so the manifest lands after)."""
-    vdir = _version_dir(store_dir, batch_id)
-    write_payload(vdir)
-    _write_manifest(vdir, manifest)
-    write_pointer_atomic(store_dir, batch_id, data_dir=vdir)
-    prune_versions(store_dir, keep=keep)
-
-
-def commit_batch_version(
-    store_dir: str,
-    batch_id: int,
-    prev_version: int | None,
-    apply: str,
-    write_delta,
-    write_base,
-    keep: int,
-    compact_every: int,
-    **manifest_extra,
-) -> None:
-    """The one commit sequence every versioned-store apply shares
-    (review find: the base-vs-delta branch was copy-pasted across four
-    apply functions): decide base-vs-delta, run the matching payload
-    writer (both callables take the version dir; write_base is only
-    invoked at first-publish/compaction commits, so its possibly-
-    expensive chain composition stays lazy), then manifest + fsync'd
-    pointer flip + retention."""
-    man = _next_manifest(
-        store_dir, prev_version, batch_id, apply, compact_every,
-        **manifest_extra,
-    )
-    _commit_version(
-        store_dir,
-        batch_id,
-        write_base if man["kind"] == "base" else write_delta,
-        man,
-        keep,
-    )
-
-
-def _next_manifest(
-    store_dir: str,
-    prev_version: int | None,
-    batch_id: int,
-    apply: str,
-    compact_every: int,
-    **extra,
-) -> dict:
-    """Decide base-vs-delta for the next commit: the first publish and
-    every commit that would push the chain past ``compact_every`` are
-    BASES (full snapshot); everything else extends the chain."""
-    if prev_version is None:
-        return {"kind": "base"}
-    prev = manifest_of(store_dir, prev_version)
-    deltas = [] if prev["kind"] == "base" else list(prev["deltas"])
-    if len(deltas) + 1 >= compact_every:
-        return {"kind": "base"}
-    base = prev_version if prev["kind"] == "base" else prev["base"]
-    return {
-        "kind": "delta",
-        "base": base,
-        "deltas": deltas + [batch_id],
-        "apply": apply,
-        **extra,
-    }
-
-
-def prune_versions(store_dir: str, keep: int = 2) -> list[int]:
-    """Retention for the versioned stores (r9 ADVICE item 2): keep the
-    ``keep`` newest COMMITTED versions readable — i.e. keep every
-    directory their chains reference — and delete committed directories
-    no kept chain needs (chain-aware since the delta layout: a delta
-    dir referenced by the current manifest must survive even when its
-    own version number is old). Never touches directories NEWER than
-    the pointer (an in-flight writer's tree) and is a no-op before the
-    first publish. Returns the pruned version numbers."""
-    import shutil
-
-    done = mirror_version(store_dir)
-    if done is None:
-        return []
-    versions = []
-    for name in os.listdir(store_dir):
-        if name.startswith("v="):
-            try:
-                versions.append(int(name[2:]))
-            except ValueError:
-                continue
-    committed = sorted(v for v in versions if v <= done)
-    referenced: set[int] = set()
-    for head in committed[-keep:] if keep > 0 else []:
-        referenced.update(chain_of(store_dir, head))
-    pruned = [v for v in committed if v not in referenced]
-    for v in pruned:
-        shutil.rmtree(_version_dir(store_dir, v), ignore_errors=True)
-    return pruned
-
-
-def mirror_version(mirror_dir: str) -> int | None:
+def mirror_version(store_dir: str) -> int | None:
     """The last applied batch_id, or None before the first apply."""
-    try:
-        with open(_pointer_path(mirror_dir)) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        return None
+    m = SnapshotStore(store_dir).current()
+    return None if m is None else m["height"]
+
+
+def is_applied(store_dir: str, batch_id: int) -> bool:
+    """True when `batch_id` is at or below the store's cursor: a replay."""
+    done = mirror_version(store_dir)
+    return done is not None and done >= batch_id
+
+
+def commit_batch(
+    spark: SparkSession,
+    store_dir: str,
+    tables: dict[str, DataFrame],
+    batch_id: int,
+    lo: int,
+    hi: int,
+    heights: DataFrame | None = None,
+) -> None:
+    """Publish `tables` and `batch_id` as the store's cursor in one
+    snapshot version (claim arguments as commit_batch_atomic's), then
+    compact when a block range holds more than COMPACT_EVERY fragments
+    and vacuum the fragments the two newest versions do not name. The
+    manifest's first_block carries nothing for these stores (0)."""
+    m = commit_batch_atomic(
+        spark, store_dir, tables, lo, hi, height=batch_id, first_block=0,
+        range_size=RANGE_SIZE, heights=heights,
+    )
+    if any(
+        len(frags) > COMPACT_EVERY
+        for parts in m["tables"].values()
+        for frags in parts.values()
+    ):
+        compact_snapshot(spark, store_dir)
+    SnapshotStore(store_dir).vacuum(keep_versions=2)
 
 
 def read_mirror(spark: SparkSession, mirror_dir: str) -> DataFrame | None:
-    """The committed mirror contents (None before the first apply) —
-    the current version's chain, composed lazily."""
-    v = mirror_version(mirror_dir)
-    if v is None:
+    """The committed mirror contents (None before the first apply)."""
+    return read_snapshot(spark, mirror_dir, TABLE)
+
+
+def _claim(batch_df: DataFrame) -> tuple[int, int, set[int]] | None:
+    """The lowest and highest block of the batch and the block ranges
+    its blocks fall in; None for an empty batch."""
+    lo, hi, ranges = batch_df.agg(
+        F.min("block"),
+        F.max("block"),
+        F.collect_set(F.floor(F.col("block") / RANGE_SIZE)),
+    ).first()
+    if lo is None:
         return None
-    return compose_version(spark, mirror_dir, v)
+    return int(lo), int(hi), {int(r) for r in ranges}
 
 
-def apply_changes_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    mirror_dir: str,
-    keep: int = 2,
-    compact_every: int = COMPACT_EVERY,
-) -> bool:
+def _split(batch_df: DataFrame, insert_types: tuple[str, ...]):
+    cols = [c for c in batch_df.columns if c != "_change_type"]
+    change = F.col("_change_type")
+    inserts = batch_df.where(change.isin(*insert_types)).select(*cols)
+    deletes = batch_df.where(change == "delete").select(*cols)
+    return cols, inserts, deletes
+
+
+def apply_changes_batch(batch_df: DataFrame, batch_id: int, mirror_dir: str) -> bool:
     """Idempotently fold one change-feed microbatch into the mirror.
 
     Returns False (no-op) when `batch_id` was already applied — the
     restart-replay case — or the batch is empty; True after publishing
-    mirror version `batch_id`.  Deletes are multiset (exceptAll), the
-    read_changes semantics: a duplicate row deleted once survives once.
-
-    Ordinary commits write the batch's OWN rows as a delta (O(batch)
-    IO); the fold happens lazily at read. ``keep`` (r10 ADVICE item 4)
-    is the retention width — raise it when out-of-band consumers diff
-    further back than one version."""
-    done = mirror_version(mirror_dir)
-    if done is not None and done >= batch_id:
+    it. Deletes are multiset (exceptAll), the read_changes semantics: a
+    duplicate row deleted once survives once."""
+    if is_applied(mirror_dir, batch_id):
         return False
-    if batch_df.isEmpty():
+    claim = _claim(batch_df)
+    if claim is None:
         return False
+    lo, hi, ranges = claim
     spark = batch_df.sparkSession
-    # stamped into the delta manifest so readers skip the exceptAll
-    # fold for insert-only batches (the bench_delta_chain datapoint);
-    # one O(batch) probe with an early-out limit, paid once at commit.
-    has_deletes = not batch_df.where(
-        F.col("_change_type") == "delete"
-    ).isEmpty()
-    commit_batch_version(
-        mirror_dir, batch_id, done, "multiset",
-        write_delta=lambda vdir: batch_df.write.mode("overwrite").parquet(vdir),
-        write_base=lambda vdir: _fold_multiset(
-            read_mirror(spark, mirror_dir), batch_df, has_deletes
-        ).write.mode("overwrite").parquet(vdir),
-        keep=keep, compact_every=compact_every, has_deletes=has_deletes,
+    cols, new, deletes = _split(batch_df, ("insert",))
+    cur = SnapshotStore(mirror_dir).current()
+    old = _read_fragments(
+        spark, mirror_dir, TABLE,
+        [
+            (r, f[0]) for r, f in (fragments(cur, TABLE) if cur else [])
+            if r in ranges and f[1] <= hi and f[2] >= lo
+        ],
+    )
+    if old is not None:
+        claimed = old.join(
+            F.broadcast(batch_df.select("block").distinct()), "block", "left_semi"
+        )
+        new = claimed.select(*cols).exceptAll(deletes).unionByName(new)
+    commit_batch(
+        spark, mirror_dir, {TABLE: new}, batch_id, lo, hi,
+        heights=batch_df.select("block"),
     )
     return True
 
 
 def apply_changes_batch_keyed(
-    batch_df: DataFrame,
-    batch_id: int,
-    mirror_dir: str,
-    key_cols: list[str],
-    keep: int = 2,
-    compact_every: int = COMPACT_EVERY,
+    batch_df: DataFrame, batch_id: int, mirror_dir: str
 ) -> bool:
-    """KEYED idempotent apply — the upsert consumer for tables whose
-    rows are uniquely keyed (r10, the read_changes(key_cols=)
-    counterpart): every key the feed touches is REPLACED wholesale
-    (prev anti-join on the feed's key set, null-safe), then the feed's
-    inserts land. Same pointer/replay/retention/delta discipline as the
-    multiset apply.
+    """KEYED idempotent apply — the upsert consumer, keyed on `block`
+    (the read_changes(key_cols=) counterpart): every block the feed
+    touches is REPLACED wholesale by the feed's insert/postimage rows.
+    Same replay/empty-batch contract as the multiset apply.
 
     Why a second consumer exists: the multiset apply (exceptAll)
     removes a delete only if its row image byte-matches the mirror —
@@ -383,74 +173,45 @@ def apply_changes_batch_keyed(
     apply removes BY KEY, so it reconverges to the source regardless of
     image drift — the reason production CDC mirrors key their applies
     (pytest pins exactly this divergence)."""
-    done = mirror_version(mirror_dir)
-    if done is not None and done >= batch_id:
+    if is_applied(mirror_dir, batch_id):
         return False
-    if batch_df.isEmpty():
+    claim = _claim(batch_df)
+    if claim is None:
         return False
-    spark = batch_df.sparkSession
-    commit_batch_version(
-        mirror_dir, batch_id, done, "keyed",
-        write_delta=lambda vdir: batch_df.write.mode("overwrite").parquet(vdir),
-        write_base=lambda vdir: _fold_keyed(
-            read_mirror(spark, mirror_dir), batch_df, key_cols
-        ).write.mode("overwrite").parquet(vdir),
-        keep=keep, compact_every=compact_every, key_cols=key_cols,
+    lo, hi, _ = claim
+    _, inserts, _ = _split(batch_df, ("insert", "update_postimage"))
+    commit_batch(
+        batch_df.sparkSession, mirror_dir, {TABLE: inserts}, batch_id, lo, hi,
+        heights=batch_df.select("block"),
     )
     return True
 
 
-def start_mirror_stream(
+def start_changes_stream(
     spark: SparkSession,
     root: str,
     table: str,
-    mirror_dir: str,
+    store_dir: str,
     checkpoint_dir: str,
+    apply,
 ):
-    """Subscribe the mirror to a snapshot table's change feed.
-
-    One microbatch per snapshot-version delta (the source's offset is
-    the version number). The query drains the pending commits, then
-    stops (an availableNow trigger); a later call resumes from the
-    checkpoint."""
+    """Subscribe a consumer to a snapshot table's change feed: each
+    microbatch (one per snapshot-version delta; the source's offset is
+    the version number) goes to `apply(batch_df, batch_id, store_dir)`.
+    The query drains the pending commits, then stops (an availableNow
+    trigger); a later call resumes from the checkpoint."""
     from ..sources.python_datasource import register_snapshot_changes
 
     register_snapshot_changes(spark)
-    os.makedirs(mirror_dir, exist_ok=True)
     feed = (
         spark.readStream.format("snapshot_changes")
         .option("root", root)
         .option("table", table)
         .load()
     )
-    writer = feed.writeStream.foreachBatch(
-        lambda df, bid: apply_changes_batch(df, bid, mirror_dir)
-    ).option("checkpointLocation", checkpoint_dir)
-    return writer.trigger(availableNow=True).start()
-
-
-def start_keyed_mirror_stream(
-    spark: SparkSession,
-    root: str,
-    table: str,
-    mirror_dir: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-):
-    """The keyed (upsert-by-key) twin of start_mirror_stream — same
-    source, trigger and checkpoint/restart discipline, apply routed
-    through apply_changes_batch_keyed."""
-    from ..sources.python_datasource import register_snapshot_changes
-
-    register_snapshot_changes(spark)
-    os.makedirs(mirror_dir, exist_ok=True)
-    feed = (
-        spark.readStream.format("snapshot_changes")
-        .option("root", root)
-        .option("table", table)
-        .load()
+    return (
+        feed.writeStream.foreachBatch(lambda df, bid: apply(df, bid, store_dir))
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    writer = feed.writeStream.foreachBatch(
-        lambda df, bid: apply_changes_batch_keyed(df, bid, mirror_dir, key_cols)
-    ).option("checkpointLocation", checkpoint_dir)
-    return writer.trigger(availableNow=True).start()

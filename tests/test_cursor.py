@@ -196,11 +196,13 @@ def test_load_config_rejects_non_positive_sizes(tmp_path, value):
         'backfill = "false"', 'backfill = "true"', "backfill = 0",
         "tick_seconds = 0", "tick_seconds = -1.5", 'tick_seconds = "10"',
         "tick_seconds = true", "tick_seconds = inf", "tick_seconds = nan",
+        'source_format = "jsonl"',
     ],
 )
 def test_load_config_rejects_mistyped_backfill_and_tick(tmp_path, line):
     # bool("false") is True, so a quoted false used to backfill from the
-    # first block; a tick of 0 or less made `start` poll without sleeping.
+    # first block; a tick of 0 or less made `start` poll without sleeping;
+    # a mistyped source_format picked the parquet reader.
     base = 'blocks_path = "b"\ntxns_path = "t"\nout_dir = "o"\n'
     path = tmp_path / "settings.toml"
     key = line.split(" = ")[0]

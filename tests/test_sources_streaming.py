@@ -476,6 +476,23 @@ class TestSnapshotChangesStream:
         assert stream_rows == batch_rows
 
 
+def _feed(spark, rows, schema="block long, v double"):
+    """A change-feed-shaped microbatch: `rows` plus their change type."""
+    return spark.createDataFrame(rows, schema + ", _change_type string")
+
+
+def _mirror_rows(spark, mdir):
+    from helium_etl_lite_spark.streaming import mirror
+
+    return {(r["block"], r["v"]) for r in mirror.read_mirror(spark, mdir).collect()}
+
+
+def _mirror_parts(mdir):
+    from helium_etl_lite_spark.etl.snapshot import SnapshotStore
+
+    return SnapshotStore(mdir).current()["tables"]["mirror"]
+
+
 class TestSnapshotMirrorConsumer:
     """r7 verdict missing #4: the streaming twin of
     sink_snapshot_changes_apply — a foreachBatch consumer keeps a
@@ -504,7 +521,9 @@ class TestSnapshotMirrorConsumer:
         ckpt = str(tmp_path / "ckpt")
 
         def drain():
-            q = mirror.start_mirror_stream(spark, root, "rewards", mdir, ckpt)
+            q = mirror.start_changes_stream(
+                spark, root, "rewards", mdir, ckpt, mirror.apply_changes_batch
+            )
             q.awaitTermination(120)
 
         # v1 -> bootstrap batch materializes the whole table
@@ -541,19 +560,16 @@ class TestSnapshotMirrorConsumer:
         assert self._rows(mirror.read_mirror(spark, mdir)) == want
 
     def test_replayed_batch_is_not_double_applied(self, spark, tmp_path):
-        import pyspark.sql.functions as F
-
         from helium_etl_lite_spark.streaming import mirror
 
         mdir = str(tmp_path / "mirror")
-        os.makedirs(mdir, exist_ok=True)
         batch = spark.createDataFrame(
             [(1, 10.0, "insert"), (2, 20.0, "insert")],
             "block long, amount double, _change_type string",
         )
         assert mirror.apply_changes_batch(batch, 0, mdir) is True
         # crash-replay of the SAME batch_id: foreachBatch redelivers
-        # at-least-once; the versioned pointer makes it exactly-once
+        # at-least-once; the manifest's cursor makes it exactly-once
         assert mirror.apply_changes_batch(batch, 0, mdir) is False
         assert self._rows(mirror.read_mirror(spark, mdir)) == [
             (1, 10.0), (2, 20.0)
@@ -590,9 +606,16 @@ class TestStreamingCuration:
     def test_replay_skips_and_dedup_carries_across_batches(
         self, spark, tmp_path
     ):
+        from helium_etl_lite_spark.etl.snapshot import read_snapshot
         from helium_etl_lite_spark.streaming import curation_stream as cs
 
         cdir = str(tmp_path / "curated")
+
+        def curated():
+            return sorted(
+                r["doc_id"] for r in read_snapshot(spark, cdir, cs.CURATED).collect()
+            )
+
         t_a, t_b = self._passing_text("a"), self._passing_text("b")
         b0 = self._batch(
             spark,
@@ -603,10 +626,7 @@ class TestStreamingCuration:
             ],
         )
         assert cs.curate_changes_batch(b0, 0, cdir) is True
-        got0 = sorted(
-            r["doc_id"] for r in cs.read_mirror(spark, cdir).collect()
-        )
-        assert got0 == [1, 2]
+        assert curated() == [1, 2]
         # replay of the same batch_id is a wholesale no-op
         assert cs.curate_changes_batch(b0, 0, cdir) is False
         # next batch: a cross-batch dup (t_a again) is dropped by the
@@ -619,10 +639,7 @@ class TestStreamingCuration:
             ],
         )
         assert cs.curate_changes_batch(b1, 1, cdir) is True
-        got1 = sorted(
-            r["doc_id"] for r in cs.read_mirror(spark, cdir).collect()
-        )
-        assert got1 == [1, 2, 4]
+        assert curated() == [1, 2, 4]
         # a gate-failing doc never lands
         b2 = self._batch(spark, [(5, "en", "too short", "insert")])
         assert cs.curate_changes_batch(b2, 2, cdir) is False
@@ -635,14 +652,9 @@ def test_substring_stream_replay_is_noop_and_restart_resumes(spark, tmp_path):
     # new commit publishes nothing (replay no-op), and the final data
     # matches the batch-incremental semantics (state hit drops the
     # re-quoted passage).
-    from pyspark.sql import functions as F
-
-    from helium_etl_lite_spark.etl.snapshot import commit_batch_atomic
-    from helium_etl_lite_spark.streaming.curation_stream import (
-        _substring_version_part,
-        mirror_version,
-        start_substring_dedup_stream,
-    )
+    from helium_etl_lite_spark.etl.snapshot import commit_batch_atomic, read_snapshot
+    from helium_etl_lite_spark.streaming.curation_stream import substring_changes_batch
+    from helium_etl_lite_spark.streaming.mirror import mirror_version, start_changes_stream
 
     passage = " ".join(f"p{i}" for i in range(60))
     docs1 = spark.createDataFrame(
@@ -659,11 +671,16 @@ def test_substring_stream_replay_is_noop_and_restart_resumes(spark, tmp_path):
     )
     root, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
 
+    def drain():
+        start_changes_stream(
+            spark, root, "docs", out, ckpt, substring_changes_batch
+        ).awaitTermination(300)
+
     commit_batch_atomic(
         spark, root, {"docs": docs1}, lo=0, hi=1, height=1,
         first_block=0, heights=docs1.select("block"),
     )
-    start_substring_dedup_stream(spark, root, "docs", out, ckpt).awaitTermination(300)
+    drain()
     v1 = mirror_version(out)
     assert v1 is not None
 
@@ -671,18 +688,15 @@ def test_substring_stream_replay_is_noop_and_restart_resumes(spark, tmp_path):
         spark, root, {"docs": docs2}, lo=0, hi=1, height=1,
         first_block=0, heights=docs2.select("block"),
     )
-    start_substring_dedup_stream(spark, root, "docs", out, ckpt).awaitTermination(300)
+    drain()
     v2 = mirror_version(out)
     assert v2 > v1
 
     # no new commit: a third drain must publish nothing
-    start_substring_dedup_stream(spark, root, "docs", out, ckpt).awaitTermination(300)
+    drain()
     assert mirror_version(out) == v2
 
-    rows = {
-        r["doc_id"]: r
-        for r in _substring_version_part(spark, out, "data").collect()
-    }
+    rows = {r["doc_id"]: r for r in read_snapshot(spark, out, "data").collect()}
     assert rows[0]["n_tokens_kept"] == 75  # first copy intact
     assert rows[1]["n_tokens_kept"] <= 65 - 50  # quoted passage dropped
 
@@ -692,139 +706,66 @@ def test_keyed_apply_reconverges_after_image_drift(spark, tmp_path):
     # (hand-patch, lossy rewrite); the multiset apply strands the stale
     # image AND lands the replacement (key duplicated), the keyed apply
     # replaces BY KEY and reconverges.
-    import os
-
-    import pyspark.sql.functions as F
-
     from helium_etl_lite_spark.streaming import mirror
 
-    def seed(mdir, rows):
-        df = spark.createDataFrame(rows, "block long, v double")
-        vdir = os.path.join(mdir, "v=0")
-        df.write.mode("overwrite").parquet(vdir)
-        mirror.write_pointer_atomic(mdir, 0, data_dir=vdir)
-
-    feed = spark.createDataFrame(
-        [(10, 999.0, "delete"), (10, 2.0, "insert")],
-        "block long, v double, _change_type string",
+    seed = _feed(spark, [(10, 1.0, "insert"), (11, 5.0, "insert")])
+    feed = _feed(
+        spark, [(10, 999.0, "delete"), (10, 2.0, "insert")]
     )  # delete image 999.0 does NOT match the drifted mirror's 1.0
 
     m1 = str(tmp_path / "multiset")
-    os.makedirs(m1)
-    seed(m1, [(10, 1.0), (11, 5.0)])
+    assert mirror.apply_changes_batch(seed, 0, m1)
     assert mirror.apply_changes_batch(feed, 1, m1)
-    multiset = {
-        (r["block"], r["v"]) for r in mirror.read_mirror(spark, m1).collect()
-    }
-    assert multiset == {(10, 1.0), (10, 2.0), (11, 5.0)}  # key 10 duplicated
+    assert _mirror_rows(spark, m1) == {(10, 1.0), (10, 2.0), (11, 5.0)}  # key 10 duplicated
 
     m2 = str(tmp_path / "keyed")
-    os.makedirs(m2)
-    seed(m2, [(10, 1.0), (11, 5.0)])
-    assert mirror.apply_changes_batch_keyed(feed, 1, m2, key_cols=["block"])
-    keyed = {
-        (r["block"], r["v"]) for r in mirror.read_mirror(spark, m2).collect()
-    }
+    assert mirror.apply_changes_batch(seed, 0, m2)
+    assert mirror.apply_changes_batch_keyed(feed, 1, m2)
+    keyed = _mirror_rows(spark, m2)
     assert keyed == {(10, 2.0), (11, 5.0)}  # reconverged
 
     # replay no-op + untouched-key survival
-    assert not mirror.apply_changes_batch_keyed(feed, 1, m2, key_cols=["block"])
-    assert {
-        (r["block"], r["v"]) for r in mirror.read_mirror(spark, m2).collect()
-    } == keyed
+    assert not mirror.apply_changes_batch_keyed(feed, 1, m2)
+    assert _mirror_rows(spark, m2) == keyed
 
 
 def test_keyed_apply_accepts_keyed_feed_dialect(spark, tmp_path):
     # review find: the keyed apply must land update_postimage rows —
     # it is documented as the read_changes(key_cols=) counterpart, and
     # that feed tags in-place changes pre/postimage, not insert/delete.
-    import os
-
     from helium_etl_lite_spark.streaming import mirror
 
     mdir = str(tmp_path / "m")
-    os.makedirs(mdir)
-    seed = spark.createDataFrame([(10, 1.0), (11, 5.0)], "block long, v double")
-    vdir = os.path.join(mdir, "v=0")
-    seed.write.mode("overwrite").parquet(vdir)
-    mirror.write_pointer_atomic(mdir, 0, data_dir=vdir)
-    keyed_feed = spark.createDataFrame(
+    seed = _feed(spark, [(10, 1.0, "insert"), (11, 5.0, "insert")])
+    assert mirror.apply_changes_batch_keyed(seed, 0, mdir)
+    keyed_feed = _feed(
+        spark,
         [
             (10, 1.0, "update_preimage"),
             (10, 2.0, "update_postimage"),
             (11, 5.0, "delete"),
             (12, 9.0, "insert"),
         ],
-        "block long, v double, _change_type string",
     )
-    assert mirror.apply_changes_batch_keyed(keyed_feed, 1, mdir, ["block"])
-    got = {
-        (r["block"], r["v"]) for r in mirror.read_mirror(spark, mdir).collect()
-    }
-    assert got == {(10, 2.0), (12, 9.0)}
-
-
-def test_prune_versions_chain_aware_and_ignores_inflight(spark, tmp_path):
-    # retention (r9 ADVICE item 2, chain-aware since the r11 delta
-    # layout): pruning keeps every directory the newest two committed
-    # versions' CHAINS reference — a delta dir named by the current
-    # manifest survives even when its version number is old — and
-    # deletes superseded chains once compaction re-bases; a directory
-    # NEWER than the pointer (an in-flight writer) is never touched;
-    # no-op pre-publish.
-    import os
-
-    import pyspark.sql.functions as F
-
-    from helium_etl_lite_spark.streaming import mirror
-
-    def feed_for(bid):
-        return spark.createDataFrame(
-            [(bid, float(bid), "insert")],
-            "block long, v double, _change_type string",
-        )
-
-    # default compact_every: v1 base + v2..v4 deltas — ALL referenced
-    # by the kept chains, so nothing is prunable yet.
-    m1 = str(tmp_path / "m1")
-    os.makedirs(m1)
-    assert mirror.prune_versions(m1) == []  # before any publish
-    for bid in (1, 2, 3, 4):
-        assert mirror.apply_changes_batch(feed_for(bid), bid, m1)
-    assert mirror.prune_versions(m1) == []
-    assert sorted(d for d in os.listdir(m1) if d.startswith("v=")) == [
-        "v=1", "v=2", "v=3", "v=4",
-    ]
-    assert mirror.read_mirror(spark, m1).count() == 4
-
-    # compact_every=2 forces a re-base at v3 (chains: v4 -> {3,4},
-    # v3 -> {3}), so the superseded v1/v2 chain is reclaimed.
-    m2 = str(tmp_path / "m2")
-    os.makedirs(m2)
-    for bid in (1, 2, 3, 4):
-        assert mirror.apply_changes_batch(feed_for(bid), bid, m2, compact_every=2)
-    os.makedirs(os.path.join(m2, "v=99"))  # in-flight dir beyond pointer
-    pruned = mirror.prune_versions(m2)
-    assert pruned == []  # apply already pruned; idempotent
-    dirs = sorted(d for d in os.listdir(m2) if d.startswith("v="))
-    assert dirs == ["v=3", "v=4", "v=99"], dirs
-    # the mirror still reads: all four rows accumulated
-    assert mirror.read_mirror(spark, m2).count() == 4
+    assert mirror.apply_changes_batch_keyed(keyed_feed, 1, mdir)
+    assert _mirror_rows(spark, mdir) == {(10, 2.0), (12, 9.0)}
 
 
 def test_delta_commit_io_is_o_batch(spark, tmp_path):
-    # r10 verdict item 2's DONE criterion: an ordinary (non-compaction)
-    # commit writes O(batch) bytes, not O(store) — a small batch landing
+    # r10 verdict item 2's DONE criterion: an ordinary (insert-only)
+    # apply writes O(batch) bytes, not O(store) — a small batch landing
     # on a large mirror must produce a version dir a small fraction of
-    # the base's size, and constant-size batches must produce
-    # constant-size deltas regardless of store growth.
+    # the first one's size, and constant-size batches must produce
+    # constant-size version dirs regardless of store growth.
     import os
 
     from pyspark.sql import functions as F
 
+    from helium_etl_lite_spark.etl.snapshot import SnapshotStore
     from helium_etl_lite_spark.streaming import mirror
 
-    def dir_bytes(p):
+    def version_bytes(mdir):
+        p = os.path.join(mdir, "mirror", f"v={SnapshotStore(mdir).current_version()}")
         return sum(
             os.path.getsize(os.path.join(r, f))
             for r, _, fs in os.walk(p)
@@ -832,14 +773,13 @@ def test_delta_commit_io_is_o_batch(spark, tmp_path):
         )
 
     mdir = str(tmp_path / "m")
-    os.makedirs(mdir)
     big = spark.range(20000).select(
         F.col("id").alias("block"),
         (F.col("id") * 2).cast("double").alias("v"),
         F.lit("insert").alias("_change_type"),
     )
     assert mirror.apply_changes_batch(big, 1, mdir)
-    base_bytes = dir_bytes(os.path.join(mdir, "v=1"))
+    base_bytes = version_bytes(mdir)
     delta_bytes = []
     for bid in (2, 3, 4):
         small = spark.range(10).select(
@@ -848,120 +788,113 @@ def test_delta_commit_io_is_o_batch(spark, tmp_path):
             F.lit("insert").alias("_change_type"),
         )
         assert mirror.apply_changes_batch(small, bid, mdir)
-        delta_bytes.append(dir_bytes(os.path.join(mdir, f"v={bid}")))
-    # each delta is a small fraction of the base and does not grow as
-    # the store accumulates
+        delta_bytes.append(version_bytes(mdir))
+    # each apply's version dir is a small fraction of the first and
+    # does not grow as the store accumulates
     assert all(b < base_bytes / 5 for b in delta_bytes), (
         base_bytes, delta_bytes,
     )
     assert max(delta_bytes) < 2 * min(delta_bytes), delta_bytes
-    # and the composed read still sees everything
+    # and the read still sees everything
     assert mirror.read_mirror(spark, mdir).count() == 20000 + 30
 
 
-def test_compaction_triggers_at_cap_and_read_touches_only_base(spark, tmp_path):
-    # r11 verdict item 4 (the read-side half of the delta layout):
-    # drive COMPACT_EVERY+1 commits at the DEFAULT cap and pin that
-    # (a) the chain never exceeds the cap, (b) the commit that would
-    # is a BASE (compaction actually triggers), and (c) the
-    # post-compaction read PLANS only the compacted base's files —
-    # inputFiles() must name nothing from the superseded chain.
+@pytest.mark.parametrize("apply", ["apply_changes_batch", "apply_changes_batch_keyed"])
+def test_delete_in_one_range_leaves_other_ranges_fragments(spark, tmp_path, apply):
+    # A delete-bearing batch rewrites only the block range it touches:
+    # every other range keeps its fragments in the manifest as they were.
+    from helium_etl_lite_spark.streaming import mirror
+
+    apply = getattr(mirror, apply)
+    mdir = str(tmp_path / "m")
+    seed = [(b, float(b), "insert") for b in (0, 1, 1000, 1001, 2000, 2001)]
+    assert apply(_feed(spark, seed), 0, mdir)
+    # a second fragment in every range
+    more = [(b, float(b), "insert") for b in (500, 1500, 2500)]
+    assert apply(_feed(spark, more), 1, mdir)
+    before = _mirror_parts(mdir)
+    assert all(len(before[r]) == 2 for r in ("0", "1", "2")), before
+    assert apply(
+        _feed(spark, [(1001, 1001.0, "delete"), (1002, 1002.0, "insert")]), 2, mdir
+    )
+    after = _mirror_parts(mdir)
+    assert after["0"] == before["0"] and after["2"] == before["2"]
+    assert after["1"] != before["1"]
+    assert _mirror_rows(spark, mdir) == {
+        (b, float(b)) for b in (0, 1, 500, 1000, 1002, 1500, 2000, 2001, 2500)
+    }
+
+
+@pytest.mark.parametrize("apply", ["apply_changes_batch", "apply_changes_batch_keyed"])
+def test_applies_past_the_cap_compact_and_read_every_row(spark, tmp_path, apply):
+    # COMPACT_EVERY + 1 insert applies append one fragment each to block
+    # range 0, while every other apply also deletes a row of range 1 (a
+    # delete-bearing apply). The apply that would leave range 0 above
+    # the cap compacts the store: no range is ever above the cap, the
+    # read sees every row the feed leaves, and vacuum keeps only the
+    # version dirs the two newest manifests name, plus a dir newer than
+    # CURRENT (an in-flight writer's).
     import os
 
-    from pyspark.sql import functions as F
+    from helium_etl_lite_spark.etl.snapshot import SnapshotStore
+    from helium_etl_lite_spark.streaming import mirror
 
+    apply = getattr(mirror, apply)
+    mdir = str(tmp_path / "m")
+    cap = mirror.COMPACT_EVERY
+    want = {(b, float(b)) for b in range(1000, 1020)}
+    assert apply(_feed(spark, [(b, v, "insert") for b, v in sorted(want)]), 0, mdir)
+    in_flight = os.path.join(mdir, "mirror", "v=99")
+    os.makedirs(in_flight)
+    for bid in range(1, cap + 2):
+        rows = [(bid * 10, float(bid), "insert")]
+        want.add((bid * 10, float(bid)))
+        if bid % 2 == 0:
+            rows.append((1000 + bid, float(1000 + bid), "delete"))
+            want.discard((1000 + bid, float(1000 + bid)))
+        assert apply(_feed(spark, rows), bid, mdir)
+        parts = _mirror_parts(mdir)
+        assert max(len(frags) for frags in parts.values()) <= cap, parts
+    assert len(parts["0"]) == 1  # the last apply compacted range 0
+    assert mirror.mirror_version(mdir) == cap + 1
+    assert _mirror_rows(spark, mdir) == want
+    store = SnapshotStore(mdir)
+    cur = store.current_version()
+    named = {
+        f"v={f[0]}"
+        for v in (cur - 1, cur)
+        for frags in store.manifest(v)["tables"]["mirror"].values()
+        for f in frags
+    }
+    assert set(os.listdir(os.path.join(mdir, "mirror"))) == named | {"v=99"}
+
+
+def test_cli_status_reports_the_last_batch_id(spark, tmp_path):
+    from helium_etl_lite_spark import cli
     from helium_etl_lite_spark.streaming import mirror
 
     mdir = str(tmp_path / "m")
-    os.makedirs(mdir)
-    cap = mirror.COMPACT_EVERY
-
-    def feed(bid):
-        return spark.range(5).select(
-            (F.col("id") + bid * 1000).alias("block"),
-            F.col("id").cast("double").alias("v"),
-            F.lit("insert").alias("_change_type"),
-        )
-
-    for bid in range(1, cap + 2):
-        assert mirror.apply_changes_batch(feed(bid), bid, mdir)
-        assert len(mirror.chain_of(mdir, bid)) <= cap
-    # v1 base, v2..v_cap deltas (chain reaches exactly the cap), then
-    # the next commit re-bases
-    assert mirror.manifest_of(mdir, 1)["kind"] == "base"
-    for bid in range(2, cap + 1):
-        assert mirror.manifest_of(mdir, bid)["kind"] == "delta"
-    assert len(mirror.chain_of(mdir, cap)) == cap
-    assert mirror.manifest_of(mdir, cap + 1)["kind"] == "base"
-    # read-side: the composed plan of the compacted head touches ONLY
-    # the base version's files, and still sees every row
-    df = mirror.read_mirror(spark, mdir)
-    vdir = os.path.join(mdir, f"v={cap + 1}")
-    assert all(f"v={cap + 1}" in p for p in df.inputFiles()), df.inputFiles()
-    assert os.path.isdir(vdir)
-    assert df.count() == 5 * (cap + 1)
-
-
-def test_delta_apply_survives_compaction_boundary(spark, tmp_path):
-    # folding across a compaction re-base must be invisible to readers:
-    # run the SAME keyed feed sequence against compact_every=2 and the
-    # no-compaction default; final mirrors must match row-for-row.
-    import os
-
-    from helium_etl_lite_spark.streaming import mirror
-
-    feeds = [
-        [(1, 1.0, "insert"), (2, 2.0, "insert")],
-        [(1, 1.0, "update_preimage"), (1, 9.0, "update_postimage")],
-        [(2, 2.0, "delete"), (3, 3.0, "insert")],
-        [(3, 3.0, "update_preimage"), (3, 7.0, "update_postimage")],
-        [(4, 4.0, "insert")],
-    ]
-    stores = {}
-    for name, ce in (("compact", 2), ("plain", 100)):
-        mdir = str(tmp_path / name)
-        os.makedirs(mdir)
-        for bid, rows in enumerate(feeds, start=1):
-            feed = spark.createDataFrame(
-                rows, "block long, v double, _change_type string"
-            )
-            assert mirror.apply_changes_batch_keyed(
-                feed, bid, mdir, ["block"], compact_every=ce
-            )
-        stores[name] = {
-            (r["block"], r["v"])
-            for r in mirror.read_mirror(spark, mdir).collect()
-        }
-    assert stores["compact"] == stores["plain"] == {
-        (1, 9.0), (3, 7.0), (4, 4.0),
-    }
+    assert mirror.apply_changes_batch(_feed(spark, [(1, 1.0, "insert")]), 0, mdir)
+    assert mirror.apply_changes_batch(_feed(spark, [(2, 2.0, "insert")]), 3, mdir)
+    status = cli.cmd_status({"out_dir": mdir})
+    assert status["height"] == 3
+    assert status["tables"]["mirror"]["n_fragments"] == 2
 
 
 def test_keyed_and_multiset_apply_agree_on_consistent_feeds(spark, tmp_path):
     # when the mirror's images are consistent with the feed (the normal
     # case), the keyed and multiset applies must produce the same
     # mirror — randomized over keyed insert/delete/update batches.
-    import os
     import random
-
-    import pyspark.sql.functions as F
 
     from helium_etl_lite_spark.streaming import mirror
 
     rng = random.Random(910)
     state = {k: float(k) for k in range(20)}
-    rows = [(k, v) for k, v in state.items()]
-
-    def seed(mdir):
-        os.makedirs(mdir)
-        df = spark.createDataFrame(rows, "block long, v double")
-        vdir = os.path.join(mdir, "v=0")
-        df.write.mode("overwrite").parquet(vdir)
-        mirror.write_pointer_atomic(mdir, 0, data_dir=vdir)
-
+    seed = _feed(spark, [(k, v, "insert") for k, v in state.items()])
     m1, m2 = str(tmp_path / "multiset"), str(tmp_path / "keyed")
-    seed(m1)
-    seed(m2)
+    assert mirror.apply_changes_batch(seed, 0, m1)
+    assert mirror.apply_changes_batch_keyed(seed, 0, m2)
     for bid in (1, 2, 3):
         feed_rows = []
         keys = rng.sample(sorted(state), 6)
@@ -975,13 +908,9 @@ def test_keyed_and_multiset_apply_agree_on_consistent_feeds(spark, tmp_path):
             nk = 100 * bid + i
             state[nk] = float(nk)
             feed_rows.append((nk, state[nk], "insert"))
-        feed = spark.createDataFrame(
-            feed_rows, "block long, v double, _change_type string"
-        )
+        feed = _feed(spark, feed_rows)
         assert mirror.apply_changes_batch(feed, bid, m1)
-        assert mirror.apply_changes_batch_keyed(feed, bid, m2, ["block"])
-    got1 = {(r["block"], r["v"]) for r in mirror.read_mirror(spark, m1).collect()}
-    got2 = {(r["block"], r["v"]) for r in mirror.read_mirror(spark, m2).collect()}
+        assert mirror.apply_changes_batch_keyed(feed, bid, m2)
     want = set(state.items())
-    assert got1 == want
-    assert got2 == want
+    assert _mirror_rows(spark, m1) == want
+    assert _mirror_rows(spark, m2) == want

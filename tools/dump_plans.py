@@ -138,7 +138,7 @@ HEADLINE_NOTES = {
     "text_fingerprint_winnow": "row-local gram keys; ONE doc_id Exchange shared by rolling-min window and final agg",
     "text_dedup_winnow": "fingerprint sets equi-join on fp_hash + pair hash agg; no cross product",
     "agg_bloom_filter_probe": "bloom build = explode(3)+bit_or two-phase agg (8 rows out); probe joins the BROADCAST 8-word sketch; counts are 1-row aggs",
-    "stream_cdc_mirror": "mirror read-back after two availableNow drains is a bare parquet scan — the apply work happened inside foreachBatch, versioned + idempotent",
+    "stream_cdc_mirror": "mirror read-back after two availableNow drains is a bare parquet scan of the manifest's fragments — the apply work happened inside foreachBatch, idempotent by the manifest's batch-id cursor",
     "text_dedup_minhash_portable": "same linear LSH dataflow as production (row-local sigs, (band,bucket) window min, per-doc min, verify-keeper-only) with portable hashes — no all-pairs join",
     "agg_hll_sketch_portable": "register build = two-phase MAX hash agg on 64 buckets (map-side combinable); split/merge and one-pass branches both end in 1-row checksum aggs",
     "text_dedup_simhash_portable": "token explode + 32 conditional sums in ONE two-phase agg; 4-row band explode + two MIN aggs + 1:1 verify join — no pair join anywhere",
@@ -208,7 +208,7 @@ HEADLINE_NOTES = {
     "sink_snapshot_changes_updates": "manifest-pruned O(churn) diff; update pairing = one intersect + four semi/anti joins on the bounded diff keys",
     "dedup_cluster_components_star": "per phase: groupBy-min + join-back (large-star), reorient + groupBy-min + join-back (small-star); lineage truncated per phase; NO broadcast in the loop (the min-label twin's 10x OOM)",
     "multimodal_audio_spectrogram": "two narrow Arrow kernels (encode WAV, decode+integer DFT); only exchange is the r11 tiny-input round-robin fan-out (absent at production split counts) — no KEY shuffle",
-    "stream_cdc_mirror_keyed": "foreachBatch keyed apply: null-safe anti-join on the feed's key set + union of inserts; one atomic pointer flip per batch",
+    "stream_cdc_mirror_keyed": "foreachBatch keyed apply: the feed's blocks are the snapshot commit's claim, replaced by its insert/postimage rows; the read-back is a bare parquet scan of the manifest's fragments",
     "text_tokenize_unigram_portable": "explode + distinct to the bounded word table, narrow mapInPandas integer Viterbi, broadcast join back, one hash agg",
     "text_quality_classifier_eval": "trainer plan + one pushed doc_id%10 filter on the gradient branches; held-out confusion = single agg over the scored complement",
     "multimodal_audio_fingerprint": "narrow Arrow kernel (decode + integer DFT + sign-delta bits), no KEY shuffle (plus the r11 tiny-input round-robin fan-out, absent at production split counts)",
