@@ -22,6 +22,11 @@ Commands:
             writes new fragments and keeps the superseded ones for
             older-snapshot readers until vacuum runs
 
+status, compact and vacuum read only out_dir, so they serve every
+snapshot store: the follower's, and each batch-id store (a streaming
+consumer's store or an incremental operator's state, etl/snapshot.py),
+whose cursor is its last batch id.
+
 Config (TOML, reference settings.toml keys where they translate):
   node_addr                 live blockchain-node JSON-RPC endpoint
                             (reference src/settings.rs:33) — follows the
@@ -361,43 +366,13 @@ def cmd_compact(spark, cfg, target_mb: int = 128, log=None) -> dict:
     return manifest
 
 
-def cmd_dedup_state(spark, state_path: str, action: str, target_mb: int = 128, log=None) -> dict:
-    """Maintenance for the incremental-dedup state tables
-    (operators/dedup.py dedup_state_add / minhash_state_add): `stats`
-    reports physical rows/shards/files/bytes (append-only fold-ins mean
-    replayed appends inflate `rows` until compaction); `compact` merges
-    the one-file-per-fold-in accumulation and drops replay-duplicate
-    rows, per shard, without changing probe results (the state is a
-    set — tested)."""
-    from .operators.dedup import dedup_state_compact, dedup_state_stats
-
-    if action == "stats":
-        out = dedup_state_stats(spark, state_path)
-        print(json.dumps(out))
-        return out
-    rewritten = dedup_state_compact(spark, state_path, int(target_mb) * 1024 * 1024)
-    out = {shard: {"files_before": b, "files_after": a} for shard, (b, a) in rewritten.items()}
-    print(json.dumps({"rewritten_shards": len(out), "detail": out}))
-    return out
-
-
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="helium_etl_lite_spark")
     p.add_argument(
         "command",
-        choices=[
-            "migrate", "once", "start", "sql", "vacuum", "compact",
-            "dedup-state", "status",
-        ],
+        choices=["migrate", "once", "start", "sql", "vacuum", "compact", "status"],
     )
     p.add_argument("--config", help="TOML config path")
-    p.add_argument(
-        "--state-path", help="dedup-state: path of the persisted state table"
-    )
-    p.add_argument(
-        "--action", choices=["stats", "compact"], default="stats",
-        help="dedup-state: stats (default) or compact",
-    )
     p.add_argument("-e", "--execute", help="SQL statement (sql command)")
     p.add_argument(
         "--at-version", type=int, default=None,
@@ -423,15 +398,6 @@ def main(argv: list[str] | None = None) -> int:
         help="compact: target output file size in MiB (default 128)",
     )
     args = p.parse_args(argv)
-    if args.command == "dedup-state":
-        if not args.state_path:
-            raise SystemExit("dedup-state requires --state-path")
-        spark = get_spark("helium-cli-dedup-state")
-        try:
-            cmd_dedup_state(spark, args.state_path, args.action, args.target_mb)
-        finally:
-            spark.stop()
-        return 0
     if not args.config:
         raise SystemExit(f"{args.command} requires --config")
     if args.command in ("vacuum", "compact", "status"):

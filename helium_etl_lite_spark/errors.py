@@ -1,12 +1,12 @@
 """Shared Spark error classification.
 
 One place that answers "did this read fail because the path does not
-exist yet?" — the benign first-run case that state readers (dedup
-state, streaming corpus, count state) may treat as empty, while every
-OTHER failure (corrupt footer, permission, IO) must raise.  Centralized
-because the call sites previously matched
-message substrings independently, and Spark's message text is
-version/locale-dependent (r7 ADVICE).
+exist yet?" — the benign first-write case that a plain-parquet writer
+(etl/pipeline.py write_block_range_idempotent, the rollup's store) may
+treat as empty, while every OTHER failure (corrupt footer, permission,
+IO) must raise. Spark's message text is version/locale-dependent (r7
+ADVICE), so the error class leads. Snapshot stores need no such
+check: their readers go by the manifest.
 """
 
 from __future__ import annotations

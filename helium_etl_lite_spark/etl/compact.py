@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
@@ -59,15 +58,6 @@ def compact_parquet(
     return n
 
 
-def _partition_dirs(table_dir: str, prefix: str = "block_range=") -> list[str]:
-    return sorted(
-        d
-        for d in os.listdir(table_dir)
-        if d.startswith(prefix)
-        and os.path.isdir(os.path.join(table_dir, d))
-    )
-
-
 def _n_data_files(pdir: str) -> int:
     return sum(
         1
@@ -76,79 +66,15 @@ def _n_data_files(pdir: str) -> int:
     )
 
 
-def compact_partitioned_table(
-    spark: SparkSession,
-    table_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_prefix: str = "block_range=",
-    distinct_rows: bool = False,
-) -> dict[str, tuple[int, int]]:
-    """Compact each `{partition_prefix}*` partition directory of a plain
-    hive-partitioned table in place (the dedup state tables use
-    `shard=`); returns {partition: (files_before, files_after)} for the
-    rewritten ones.
-
-    Per-partition rewrite (never the whole table): cold partitions are
-    untouched, so the maintenance cost tracks the append rate, not the
-    corpus size — at cluster scale the per-partition rewrites are
-    independent jobs. The swap is rewrite-to-tmp → two renames, with
-    crash recovery on entry (an interrupted swap leaves
-    `.__compact_old`; the next run restores it). This assumes no
-    concurrent reader of the partition mid-swap — run it between ingest
-    batches; compact_snapshot is the no-reader-torn variant for
-    snapshot stores such as the follower's.
-    """
-    # crash recovery BEFORE listing partitions: an interrupted swap
-    # leaves the data in `.__compact_old` with the partition dir gone,
-    # so scanning only live partition dirs would never see it.
-    for d in os.listdir(table_dir):
-        path = os.path.join(table_dir, d)
-        if d.endswith(".__compact_old"):
-            orig = path[: -len(".__compact_old")]
-            if os.path.isdir(orig):
-                shutil.rmtree(path)  # swap completed; leftover garbage
-            else:
-                os.rename(path, orig)  # restore the moved-aside data
-        elif d.endswith(".__compact_tmp"):
-            shutil.rmtree(path, ignore_errors=True)
-
-    results: dict[str, tuple[int, int]] = {}
-    for part in _partition_dirs(table_dir, partition_prefix):
-        pdir = os.path.join(table_dir, part)
-        old_dir = pdir + ".__compact_old"
-        before = _n_data_files(pdir)
-        total = sum(
-            os.path.getsize(os.path.join(pdir, f))
-            for f in os.listdir(pdir)
-            if f.endswith(".parquet")
-        )
-        after = max(1, math.ceil(total / target_file_bytes))
-        # distinct_rows (set-semantics state tables): a replay's
-        # duplicate rows can only live in a SECOND file of the shard
-        # (each append is internally distinct), so any multi-file shard
-        # gets rewritten even when already under the size target.
-        if before <= after and not (distinct_rows and before > 1):
-            continue  # already compact
-        tmp = pdir + ".__compact_tmp"
-        df = spark.read.parquet(pdir)
-        if distinct_rows:
-            df = df.distinct()
-        df.repartition(after).write.mode("overwrite").parquet(tmp)
-        os.rename(pdir, old_dir)
-        os.rename(tmp, pdir)
-        shutil.rmtree(old_dir)
-        results[part] = (before, after)
-    return results
-
-
 def compact_snapshot(
     spark: SparkSession,
     root: str,
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict | None:
     """Compact a snapshot-manifest store (the follower's sink, and each
-    streaming consumer's store) the lakehouse way: merge each block
-    range's fragments (one per tick or apply that landed in it), or a
+    batch-id store: a streaming consumer's store or an operator state)
+    the lakehouse way: merge each block range's fragments (one per
+    tick, apply or fold-in that landed in it), or a
     lone fragment holding more files than its size needs, into one
     fragment of a new version directory, and publish a manifest that
     remaps them — data files are never mutated, so concurrent snapshot

@@ -28,7 +28,6 @@ Differences by design (Spark-first, not a translation):
 from __future__ import annotations
 
 import logging
-import os
 from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
@@ -36,7 +35,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .schemas import REWARDS_V2_FIELDS_SCHEMA, SENTINEL
-from .snapshot import SnapshotStore, commit_batch_atomic, require_fragments
+from ..errors import is_path_not_found
+from .snapshot import (
+    SnapshotStore,
+    commit_batch_atomic,
+    refuse_old_layout,
+    require_fragments,
+)
 from .transforms import build_outputs
 
 # Tables keyed by block, written in place: write_block_range_idempotent
@@ -137,7 +142,11 @@ def write_block_range_idempotent(
             r["block_range"] for r in merged.select("block_range").distinct().collect()
         }
         stale_ranges = sorted(touched_ranges - present_ranges)
-    except AnalysisException:
+    except AnalysisException as exc:
+        # only a missing table is the first write: a read failing for
+        # any other reason must not drop the touched ranges' carried rows
+        if not is_path_not_found(exc):
+            raise
         merged = new  # first write; nothing to merge, nothing stale
         stale_ranges = []
     try:
@@ -190,22 +199,6 @@ class CursorStore:
         )
 
 
-def _refuse_plain_layout(out_dir: str) -> None:
-    """Raise when `out_dir` holds follower tables but no snapshot
-    manifest: a store written by the former plain-parquet sink. Seeding
-    a new cursor there would, without backfill, skip every landed
-    block."""
-    for table in ("rewards", "transactions"):
-        tdir = os.path.join(out_dir, table)
-        if os.path.isdir(tdir) and any(d.startswith("block_range=") for d in os.listdir(tdir)):
-            raise RuntimeError(
-                f"{out_dir} holds plain-parquet follower tables "
-                f"({table}/block_range=*) but no snapshot manifest "
-                "(_snapshots/CURRENT); this layout is no longer read. "
-                "Follow into a new out_dir with backfill = true."
-            )
-
-
 def _open_cursor(config: FollowerConfig, probe_first) -> tuple[int, int] | None:
     """The follower's starting cursor (reference src/follower.rs:27-41):
     the manifest's committed cursor; else a new cursor at
@@ -219,7 +212,7 @@ def _open_cursor(config: FollowerConfig, probe_first) -> tuple[int, int] | None:
     if m is not None:
         require_fragments(m, config.out_dir)
         return m["height"], m["first_block"]
-    _refuse_plain_layout(config.out_dir)
+    refuse_old_layout(config.out_dir)
     first = probe_first()
     if first is None:
         return None

@@ -1,5 +1,8 @@
 """Single-transaction atomic commit for data + cursor: a minimal
-snapshot-manifest table format, and the follower's only sink.
+snapshot-manifest table format, and the format of every persisted table
+but the rollup's: the follower's sink, and the batch-id stores (end of
+this module) of the streaming consumers and the incremental operators'
+states.
 
 The reference gets per-block atomicity from a Postgres transaction that
 writes rewards/transactions AND advances follower_info together
@@ -337,6 +340,37 @@ def require_fragments(manifest: dict, root: str) -> None:
             )
 
 
+# Directory prefixes of the layouts from before snapshot stores:
+# plain-parquet follower tables (`<table>/block_range=*`), the
+# hash-sharded operator set states (`shard=*`) and the batch-partitioned
+# count states (`batch=*`).
+_OLD_LAYOUTS = ("block_range=", "shard=", "batch=")
+
+
+def refuse_old_layout(root: str) -> None:
+    """Raise when `root` holds data in a layout from before snapshot
+    stores but no snapshot manifest. Read as a snapshot store it would
+    be empty: a dedup probe would pass every document of the next batch
+    as new, and a follower without backfill would skip every landed
+    block. There is no converter."""
+    if not os.path.isdir(root) or SnapshotStore(root).current_version() is not None:
+        return
+    dirs = [root] + [
+        os.path.join(root, d) for d in sorted(os.listdir(root))
+        if not d.startswith(("_", ".")) and os.path.isdir(os.path.join(root, d))
+    ]
+    for d in dirs:
+        old = [e for e in sorted(os.listdir(d)) if e.startswith(_OLD_LAYOUTS)]
+        if old:
+            raise RuntimeError(
+                f"{root} holds data in a layout that is no longer read "
+                f"({os.path.relpath(os.path.join(d, old[0]), root)}) but no "
+                "snapshot manifest (_snapshots/CURRENT). Rebuild it in a new "
+                "directory (a follower store: follow into a new out_dir "
+                "with backfill = true)."
+            )
+
+
 def fragments(manifest: dict, table: str) -> list[tuple[int, list[int]]]:
     """(block_range, [version, block_lo, block_hi]) for every fragment
     of `table` in `manifest`."""
@@ -404,6 +438,8 @@ def read_snapshot(
     store = SnapshotStore(root)
     manifest = store.current() if version is None else store.manifest(version)
     if manifest is None:
+        if version is None:
+            refuse_old_layout(root)
         return None
     require_fragments(manifest, root)
     return _read_fragments(
@@ -613,6 +649,8 @@ def commit_batch_atomic(
     cur = store.current()
     if cur is not None:
         require_fragments(cur, root)
+    else:
+        refuse_old_layout(root)
     version = (cur["version"] + 1) if cur else 1
     cur_tables: dict[str, dict] = dict(cur["tables"]) if cur else {}
 
@@ -701,3 +739,104 @@ def commit_batch_atomic(
     }
     store.publish(manifest)
     return manifest
+
+
+# ---------------------------------------------------------------------------
+# Batch-id stores: the store of every streaming consumer and every
+# incremental operator state. The manifest's cursor (`height`) holds the
+# last applied batch id, so the data and the batch id publish in one
+# rename, and a batch id at or below the cursor is a replay.
+
+#: fragments a block range may hold before a commit compacts the store.
+COMPACT_EVERY = 8
+
+#: block-range width of every batch-id store.
+RANGE_SIZE = 1000
+
+#: the table an incremental operator keeps its state rows in.
+STATE = "state"
+
+#: file, beside the manifest, naming the algorithm a state's rows were
+#: built with (see check_construction).
+CONSTRUCTION = "_construction"
+
+
+def is_applied(store_dir: str, batch_id: int) -> bool:
+    """True when `batch_id` is at or below the store's cursor: a replay."""
+    m = SnapshotStore(store_dir).current()
+    return m is not None and m["height"] >= batch_id
+
+
+def commit_batch(
+    spark: SparkSession,
+    store_dir: str,
+    tables: dict[str, DataFrame],
+    batch_id: int,
+    lo: int,
+    hi: int,
+    heights: DataFrame | None = None,
+) -> None:
+    """Publish `tables` and `batch_id` as the store's cursor in one
+    snapshot version (claim arguments as commit_batch_atomic's), then
+    compact when a block range holds more than COMPACT_EVERY fragments
+    and vacuum the fragments the two newest versions do not name. The
+    manifest's first_block carries nothing for these stores (0)."""
+    from .compact import compact_snapshot
+
+    m = commit_batch_atomic(
+        spark, store_dir, tables, lo, hi, height=batch_id, first_block=0,
+        range_size=RANGE_SIZE, heights=heights,
+    )
+    if any(
+        len(frags) > COMPACT_EVERY
+        for parts in m["tables"].values()
+        for frags in parts.values()
+    ):
+        compact_snapshot(spark, store_dir)
+    SnapshotStore(store_dir).vacuum(keep_versions=2)
+
+
+def commit_state(
+    spark: SparkSession, state_path: str, rows: DataFrame, batch_id: int
+) -> None:
+    """Fold one batch's rows into the operator state at `state_path`:
+    one fragment of table STATE holding the rows, with the batch id in
+    `block`, published with the batch id as the cursor. A replayed batch
+    id is skipped, so the state holds exactly the rows of one fold."""
+    if is_applied(state_path, batch_id):
+        return
+    block = F.lit(int(batch_id)).cast("long")
+    commit_batch(
+        spark, state_path, {STATE: rows.withColumn("block", block)},
+        batch_id, batch_id, batch_id,
+    )
+
+
+def check_construction(state_path: str, version: str, stamp: bool) -> None:
+    """Guard a state whose rows are pure functions of their input only
+    under one algorithm (MinHash signatures, hyperplane-LSH buckets): a
+    state built under another would silently match no probe. Raise when
+    the CONSTRUCTION marker names another `version`, or when the store
+    holds data but no marker (its construction is unknown). With
+    `stamp`, a store with neither gets the marker, written through
+    durable_replace; a crash before the first fold-in commits leaves a
+    marker-only directory, which reads as the empty state."""
+    path = os.path.join(state_path, CONSTRUCTION)
+    try:
+        with open(path) as f:
+            found = f.read().strip()
+    except FileNotFoundError:
+        if SnapshotStore(state_path).current_version() is not None:
+            raise ValueError(
+                f"the state at {state_path} holds data but no construction "
+                "marker, so its construction is unknown: rebuild the state"
+            ) from None
+        if stamp:
+            os.makedirs(state_path, exist_ok=True)
+            durable_replace(path, version)
+        return
+    if found != version:
+        raise ValueError(
+            f"the state at {state_path} was built under {found!r}, this "
+            f"build uses {version!r}: rebuild the state"
+        )

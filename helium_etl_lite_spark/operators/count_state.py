@@ -1,36 +1,30 @@
 """Generic persisted ADDITIVE-COUNT state — the shared substrate for
 every scorer whose sufficient statistics are integer count tables
-(DSIR's hashed-bucket counts, the n-gram LM count tables): per-batch
-count DELTAS land as one partition each, totals re-derive by per-key
+(DSIR's hashed-bucket counts, the n-gram LM count tables): each batch's
+count DELTA lands as one fragment, totals re-derive by per-key
 addition.
 
-Why a separate discipline from the dedup states: dedup state is a SET
-(append-only + read-as-set is replay-idempotent for free), but counts
-are not — a replayed append would double-count. So the fold-in here
-REPLACES the replaying batch's own partition (dynamic partition
-overwrite keyed on the caller's batch_id) with identical content, a
-no-op: replay-idempotent without set semantics, and fold order
-commutes because integer addition does.
+The state is a batch-id store (etl/snapshot.py commit_state), the same
+format as the dedup states: the fold-in commits the delta with the
+caller's batch id as the manifest cursor, and a batch id at or below
+the cursor is a replay and is skipped. That matters more here than for
+a set: a replayed append would double-count. Fold order commutes
+because integer addition does.
 
 100 TB posture: each batch is scanned once to count; state reads are
 O(distinct keys x n_batches) rows of integers (for hashed-bucket
 scorers the key domain is BOUNDED by construction; for n-gram LMs it
 scales with vocab, sublinear in corpus); the landed corpus is never
-re-read. Compaction onto a single merged partition rides the same
-maintenance schedule as the dedup states if n_batches grows large.
+re-read. commit_state's automatic compaction merges a block range's
+fragments once it holds more than COMPACT_EVERY of them.
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _path_missing(exc: AnalysisException) -> bool:
-    from ..errors import is_path_not_found
-
-    return is_path_not_found(exc)
+from ..etl.snapshot import STATE, commit_state, read_snapshot
 
 
 def count_state_add(
@@ -40,31 +34,12 @@ def count_state_add(
     batch_id: int,
     key_cols: list[str],
     count_cols: list[str],
-    n_files: int = 1,
 ) -> None:
     """Fold one batch's count delta (one row per touched key) into the
-    persisted state by REPLACING the `batch=batch_id` partition. The
-    delta is a pure function of the batch, so a crash-replay converges.
-    `n_files=1` is right for bounded key domains (a single small file
-    per batch); vocab-scaled callers can raise it.
-
-    The dynamic-overwrite mode rides the WRITE OPTION, not the session
-    conf: inside foreachBatch the micro-batch DataFrame is bound to a
-    CLONED SparkSession with isolated conf, so a conf set on the
-    caller's session never reaches the write and a static overwrite
-    silently wipes every other batch's partition (found live by the
-    streaming twin: only the last batch's delta survived). The
-    per-write option binds to this write regardless of which session
-    owns the frame, and mutates no shared state."""
-    (
-        delta.select(*key_cols, *count_cols)
-        .withColumn("batch", F.lit(int(batch_id)))
-        .coalesce(n_files)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(state_path)
-    )
+    persisted state as one fragment committed under `batch_id`. A
+    replayed batch id is skipped, so a crash-replay cannot
+    double-count."""
+    commit_state(spark, state_path, delta.select(*key_cols, *count_cols), batch_id)
 
 
 def count_state_totals(
@@ -73,16 +48,13 @@ def count_state_totals(
     key_cols: list[str],
     count_cols: list[str],
 ) -> DataFrame | None:
-    """Accumulated counts: per-key SUM over every batch partition's
-    delta — the same shape a full one-shot scan would produce, derived
-    from the stored deltas instead (integer addition is lossless, so
-    downstream consumers are bit-identical to the one-shot path). None
-    if no batch has ever been folded in."""
-    try:
-        state = spark.read.parquet(state_path)
-    except AnalysisException as exc:
-        if not _path_missing(exc):
-            raise
+    """Accumulated counts: per-key SUM over every folded batch's delta
+    (one read_snapshot of the state) — the same shape a full one-shot
+    scan would produce, derived from the stored deltas instead (integer
+    addition is lossless, so downstream consumers are bit-identical to
+    the one-shot path). None if no batch has ever been folded in."""
+    state = read_snapshot(spark, state_path, STATE)
+    if state is None:
         return None
     return state.groupBy(*key_cols).agg(
         *[F.sum(c).alias(c) for c in count_cols]

@@ -17,19 +17,10 @@ bit_count) — no Python UDFs anywhere.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _path_missing(exc: AnalysisException) -> bool:
-    # Only the state-not-yet-created case may fall back to "empty
-    # state" — a CORRUPT state file must raise, not silently wave every
-    # duplicate through (same masking class as the r6 ingest-audit
-    # advice).
-    from ..errors import is_path_not_found
-
-    return is_path_not_found(exc)
+from ..etl.snapshot import STATE, check_construction, commit_state, read_snapshot
 
 
 def normalize_text(col):
@@ -839,22 +830,23 @@ def dedup_filter_new(
     larger than the guard fall back to the shuffled anti-join, which is
     the right plan when the batch is itself corpus-sized.
 
-    Ordering contract (cursor-after-data discipline): land this
-    function's output FIRST, then call dedup_state_add with it. A crash
-    in between replays to the same output (state unchanged), and the
-    landed output's sink idempotence absorbs the double write.
+    The state is a batch-id store (etl/snapshot.py): one read_snapshot
+    of its STATE table. A missing store is the first ingest.
+
+    Ordering contract: fold this function's output into the state with
+    dedup_state_add under the same batch id as the landed output — or
+    commit both in one version of one store, as the streaming loops and
+    pipeline_incremental_curation do. A replayed batch id is skipped.
     """
     key = normalize_text(F.col(text_col)) if normalize else F.col(text_col)
     h = F.sha2(key, 256)
     b = batch.withColumn("text_hash", h)
     w = Window.partitionBy("text_hash").orderBy(F.col(id_col).asc())
     b = b.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
-    try:
-        seen = spark.read.parquet(state_path).select("text_hash")
-    except AnalysisException as exc:
-        if not _path_missing(exc):
-            raise
+    seen = read_snapshot(spark, state_path, STATE)
+    if seen is None:
         return b
+    seen = seen.select("text_hash")
     # materialize the (small, guarded) fingerprint set ONCE: without the
     # checkpoint the guard count and the broadcast each re-derive the
     # whole batch-side hash+window subplan (review finding: ~3x batch
@@ -881,33 +873,15 @@ def dedup_state_add(
     spark,
     fresh: DataFrame,
     state_path: str,
-    n_shards: int = 64,
+    batch_id: int,
 ) -> None:
     """Incremental exact dedup, write side: fold the landed batch's
-    content hashes into the persisted hash-set state.
+    content hashes into the persisted hash-set state — one fragment
+    holding the batch's distinct hashes (O(batch) written bytes),
+    committed under `batch_id` (etl/snapshot.py commit_state: a replayed
+    batch id is skipped, so a replay adds no row)."""
+    commit_state(spark, state_path, fresh.select("text_hash").distinct(), batch_id)
 
-    State is a parquet table of text_hash partitioned into `n_shards`
-    stable shards (pmod of xxhash64). The fold-in APPENDS the batch's
-    distinct hashes to their shard directories — O(batch) written
-    bytes. (The former form rewrote every touched shard with the
-    distinct union of old + new: a decent-size batch touches all
-    shards, so each fold-in re-wrote the whole state — O(corpus) per
-    batch.) The state is read as a SET everywhere (anti-join
-    membership), so a crash-replay's duplicate appends change no probe
-    result; `dedup_state_compact` restores physical set-minimality and
-    merges the per-batch files on the maintenance schedule.
-    """
-    shard = F.pmod(F.xxhash64("text_hash"), F.lit(n_shards)).cast("int")
-    new_hashes = fresh.select("text_hash").distinct().withColumn("shard", shard)
-    (
-        new_hashes.repartition("shard")
-        .write.mode("append")
-        .partitionBy("shard")
-        .parquet(state_path)
-    )
-
-
-_MINHASH_STATE_SHARDS = 64
 
 # Signature algorithm fingerprint, persisted with LSH state. Signatures
 # are pure functions of the text ONLY under a fixed algorithm; a state
@@ -915,64 +889,6 @@ _MINHASH_STATE_SHARDS = 64
 # xxhash64(token, p) form) would silently produce zero band collisions
 # against new probes — fail fast instead.
 SIG_VERSION = "minhash-uhash-mersenne31-v2"
-
-
-def _sig_version_path(state_path: str) -> str:
-    import os
-
-    return os.path.join(state_path, "_sig_version")
-
-
-def _write_sig_version(state_path: str) -> None:
-    import os
-
-    os.makedirs(state_path, exist_ok=True)
-    p = _sig_version_path(state_path)
-    if not os.path.exists(p):
-        with open(p + ".tmp", "w") as f:
-            f.write(SIG_VERSION)
-        os.replace(p + ".tmp", p)
-
-
-def _check_sig_version_for_append(state_path: str) -> None:
-    """Write-side guard: appending v2 rows into a MARKERLESS state that
-    already holds shard data would stamp the current version onto
-    legacy-signature rows, silently masking exactly the incompatibility
-    the marker exists to catch. Refuse; a fresh/empty state is fine."""
-    import os
-
-    if os.path.exists(_sig_version_path(state_path)):
-        _check_sig_version(state_path)
-        return
-    if os.path.isdir(state_path) and any(
-        d.startswith("shard=") for d in os.listdir(state_path)
-    ):
-        raise ValueError(
-            f"minhash state at {state_path} holds data but no "
-            "signature-version marker (built before "
-            f"{SIG_VERSION}) — appending current-construction rows would "
-            "mix incompatible signatures; rebuild the state from the "
-            "corpus texts"
-        )
-
-
-def _check_sig_version(state_path: str) -> None:
-    try:
-        with open(_sig_version_path(state_path)) as f:
-            got = f.read().strip()
-    except FileNotFoundError:
-        raise ValueError(
-            f"minhash state at {state_path} has no signature-version "
-            f"marker (built before {SIG_VERSION}); its signatures do not "
-            "match the current construction — rebuild the state from the "
-            "corpus texts"
-        )
-    if got != SIG_VERSION:
-        raise ValueError(
-            f"minhash state at {state_path} was built with signature "
-            f"version {got!r}, current is {SIG_VERSION!r} — rebuild the "
-            "state from the corpus texts"
-        )
 
 
 def minhash_filter_new(
@@ -997,14 +913,13 @@ def minhash_filter_new(
     is a dup when it shares a band bucket with a state doc AND the
     signature match fraction — an unbiased estimator of Jaccard with
     variance J(1-J)/num_perm — clears `jaccard_threshold`. The bucket
-    probe is one equi-join on (band, bucket); state reads prune to the
-    batch's shards via partition filters.
+    probe is one equi-join on (band, bucket) against one read_snapshot
+    of the state.
 
     Output carries a `sig` column so minhash_state_add folds the batch
     in without recomputing signatures. Same ordering contract as
-    dedup_filter_new: land this output first, then call
-    minhash_state_add with it; replay converges because the state union
-    is a set union.
+    dedup_filter_new: fold this output in with minhash_state_add under
+    the landed batch's id.
     """
     sig = minhash_signatures(batch, num_perm, text_col, id_col)
     assigned = minhash_dedup_assign(
@@ -1020,24 +935,13 @@ def minhash_filter_new(
     no_sig = batch.join(sig.select(id_col), id_col, "left_anti").withColumn(
         "sig", F.lit(None).cast("array<bigint>")
     )
-    try:
-        state = spark.read.parquet(state_path)
-    except AnalysisException as exc:
-        if not _path_missing(exc):
-            raise
+    check_construction(state_path, SIG_VERSION, stamp=False)
+    state = read_snapshot(spark, state_path, STATE)
+    if state is None:
         return kept.unionByName(no_sig)
-    _check_sig_version(state_path)
     probe = _band_rows(
         kept.select(id_col, "sig"), num_perm, bands, id_col, keep_sig=True
     )
-    # partition pruning: only the batch's shards can hold a colliding
-    # bucket; `touched` is bounded by n_shards (control-plane small).
-    shard = F.pmod(F.xxhash64("bucket"), F.lit(_MINHASH_STATE_SHARDS)).cast("int")
-    touched = [
-        r["shard"]
-        for r in probe.select(shard.alias("shard")).distinct().collect()
-    ]
-    state = state.where(F.col("shard").isin(touched))
     # The state must never shuffle (same posture as dedup_filter_new):
     # when the batch's distinct (band, bucket) keys fit the guard,
     # semi-join the state against their broadcast — one streaming scan
@@ -1075,25 +979,18 @@ def minhash_state_add(
     spark,
     fresh: DataFrame,
     state_path: str,
+    batch_id: int,
     num_perm: int = 16,
     bands: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> None:
     """Incremental near-dup dedup, write side: fold the landed batch's
-    LSH band rows (+signatures) into the persisted state.
-
-    Same shard discipline as dedup_state_add: parquet partitioned into
-    stable shards (pmod of xxhash64(bucket) — co-located with the probe
-    join's pruning key), and the same APPEND-only fold-in: O(batch)
-    written bytes, versus the former rewrite-touched-shards-with-union
-    form whose cost was O(state) once a batch touched most shards. Rows
-    are fully determined by the doc (signature is a pure function of
-    the text), so replayed appends only duplicate rows — the probe's
-    candidate `.distinct()` already absorbs that, and
-    `dedup_state_compact` restores set-minimality out of band.
-    """
-    _check_sig_version_for_append(state_path)
+    LSH band rows (+signatures) into the persisted state — one fragment
+    committed under `batch_id` (commit_state: O(batch) written bytes, a
+    replayed batch id is skipped). The state's construction marker is
+    stamped before its first fold-in and checked on every later one."""
+    check_construction(state_path, SIG_VERSION, stamp=True)
     if "sig" in fresh.columns:
         # NULL sigs are the pass-through NULL-text survivors from
         # minhash_filter_new — they have no LSH rows to fold in (and an
@@ -1101,64 +998,8 @@ def minhash_state_add(
         sig = fresh.select(F.col(id_col), "sig").where(F.col("sig").isNotNull())
     else:
         sig = minhash_signatures(fresh, num_perm, text_col, id_col)
-    rows = _band_rows(sig, num_perm, bands, id_col, keep_sig=True).withColumn(
-        "shard",
-        F.pmod(F.xxhash64("bucket"), F.lit(_MINHASH_STATE_SHARDS)).cast("int"),
-    )
-    (
-        rows.repartition("shard")
-        .write.mode("append")
-        .partitionBy("shard")
-        .parquet(state_path)
-    )
-    _write_sig_version(state_path)
-
-
-def dedup_state_stats(spark, state_path: str) -> dict:
-    """Size/health report for a persisted dedup state table (the exact
-    hash set or the minhash band-row store — both are `shard=`-
-    partitioned parquet). Fold-ins are APPEND-ONLY (O(batch) written
-    bytes), so `rows` counts PHYSICAL rows including any crash-replay
-    duplicate appends — probes are unaffected (set semantics) but the
-    count is an upper bound on distinct entries until
-    `dedup_state_compact` restores set-minimality. Files also
-    accumulate one batch per fold-in; `avg_file_bytes` trending down is
-    the compact-needed signal."""
-    from ..etl.compact import dir_bytes
-
-    df = spark.read.parquet(state_path)
-    n_rows = df.count()
-    n_shards = df.select("shard").distinct().count()
-    total_bytes, n_files = dir_bytes(spark, state_path)
-    return {
-        "rows": n_rows,
-        "shards": n_shards,
-        "files": n_files,
-        "bytes": total_bytes,
-        "avg_file_bytes": (total_bytes // n_files) if n_files else 0,
-    }
-
-
-def dedup_state_compact(
-    spark, state_path: str, target_file_bytes: int = 128 * 1024 * 1024
-) -> dict[str, tuple[int, int]]:
-    """Merge the one-file-per-fold-in accumulation in each state shard
-    and drop crash-replay duplicate rows (distinct within shard), in
-    place, per shard directory — untouched shards cost nothing, so the
-    maintenance cost tracks the ingest rate, not the corpus size.
-    Reuses etl/compact.py's crash-safe per-partition rewrite
-    (rewrite-to-tmp + two renames, recovery on entry).
-    Probe results are identical before and after (tested): the state is
-    read with set semantics, so removing physical duplicates and
-    re-bucketing bytes changes no membership answer. Same single-writer
-    contract as the fold-ins: don't run concurrently with an ingest
-    batch."""
-    from ..etl.compact import compact_partitioned_table
-
-    return compact_partitioned_table(
-        spark, state_path, target_file_bytes, partition_prefix="shard=",
-        distinct_rows=True,
-    )
+    rows = _band_rows(sig, num_perm, bands, id_col, keep_sig=True)
+    commit_state(spark, state_path, rows, batch_id)
 
 
 def span_dedup_overlap(
@@ -1956,35 +1797,28 @@ def span_state_add(
     spark,
     docs: DataFrame,
     state_path: str,
+    batch_id: int,
     span_len: int = 50,
     k: int = 4,
     w: int = 5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_shards: int = 64,
 ) -> None:
     """Incremental substring dedup, write side: fold a LANDED batch's
     anchored span hashes into the persisted span-hash state — the
-    substring-grade sibling of dedup_state_add. Same state discipline:
-    parquet sharded by pmod(h), O(batch) appended bytes per fold-in,
-    read everywhere as a SET (semi-join membership) so crash-replay
-    duplicate appends change no probe result. Spans are hashed from
-    the ORIGINAL text (before any token dropping), so the state
-    describes what the corpus contained — the same convention as
-    hashing original content in the exact-dedup state."""
+    substring-grade sibling of dedup_state_add, with the same state
+    discipline (one O(batch) fragment committed under `batch_id`, a
+    replayed batch id skipped). Hashes may repeat across fragments; the
+    probe reads the state as a set. Spans are hashed from the ORIGINAL
+    text (before any token dropping), so the state describes what the
+    corpus contained — the same convention as hashing original content
+    in the exact-dedup state."""
     spans = (
         anchored_span_table(docs, span_len, k, w, text_col, id_col)
         .select("h")
         .distinct()
     )
-    shard = F.pmod(F.col("h"), F.lit(n_shards)).cast("int")
-    (
-        spans.withColumn("shard", shard)
-        .repartition("shard")
-        .write.mode("append")
-        .partitionBy("shard")
-        .parquet(state_path)
-    )
+    commit_state(spark, state_path, spans, batch_id)
 
 
 def substring_anchor_dedup_incremental(
@@ -2000,8 +1834,9 @@ def substring_anchor_dedup_incremental(
 ) -> DataFrame:
     """Incremental substring dedup, read side: drop every batch token
     covered by a span whose content already exists in the landed
-    corpus (persisted span state) OR earlier in the batch itself
-    (first (doc_id, p) occurrence wins — the batch-form rule).
+    corpus (the span state at `state_path`, one read_snapshot) OR
+    earlier in the batch itself (first (doc_id, p) occurrence wins —
+    the batch-form rule).
 
     Probe shape (the dedup_filter_new discipline): the state must
     never shuffle. The batch's distinct span hashes are broadcast and
@@ -2014,39 +1849,6 @@ def substring_anchor_dedup_incremental(
     batch is itself corpus-sized). Missing state = first ingest: only
     within-batch dedup applies.
     """
-    try:
-        state = spark.read.parquet(state_path).select("h")
-    except AnalysisException as exc:
-        if not _path_missing(exc):
-            raise
-        state = None
-    return substring_anchor_dedup_incremental_df(
-        batch,
-        state,
-        span_len=span_len,
-        k=k,
-        w=w,
-        text_col=text_col,
-        id_col=id_col,
-        max_broadcast_rows=max_broadcast_rows,
-    )
-
-
-def substring_anchor_dedup_incremental_df(
-    batch: DataFrame,
-    state,
-    span_len: int = 50,
-    k: int = 4,
-    w: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_broadcast_rows: int = 4_000_000,
-) -> DataFrame:
-    """DataFrame-state twin of substring_anchor_dedup_incremental for
-    callers that carry the span set inside a versioned store (the
-    streaming loop publishes data AND cumulative spans in one atomic
-    version, so there is no split-store crash window). ``state`` is a
-    DataFrame with column ``h`` or None (first ingest)."""
     ex = anchored_span_table(
         batch, span_len=span_len, k=k, w=w, text_col=text_col, id_col=id_col
     ).localCheckpoint(eager=False)  # probed twice (state hits + window);
@@ -2058,6 +1860,7 @@ def substring_anchor_dedup_incremental_df(
         .where(F.col("rn") > 1)
         .select(id_col, "p")
     )
+    state = read_snapshot(spark, state_path, STATE)
     if state is None:
         dup_starts = batch_dups
     else:

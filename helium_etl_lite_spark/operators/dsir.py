@@ -13,16 +13,14 @@ merge by per-bucket addition, so a continuously-crawling pipeline folds
 each batch's delta in O(batch) and re-derives the (bounded, broadcast)
 log-ratio table from state instead of re-scanning the landed corpus.
 
-State layout: parquet table (b, c_raw, c_tgt) partitioned by `batch`
-(one partition per ingest batch, each holding that batch's count
-DELTA). The fold-in writes with DYNAMIC partition overwrite keyed on
-the caller's batch_id, so a crash-replay of the same batch REPLACES
-its own partition with identical content — replay-idempotent without
-set semantics (integer counts cannot use the append-only discipline of
-dedup_state_add: a double append would double-count). Reading the
-current totals is a sum over all partitions — at most
-65536 x n_batches rows of (long, long, long), compacted by the same
-maintenance schedule as the dedup states if n_batches grows large.
+State layout: (b, c_raw, c_tgt) rows in a batch-id store
+(operators/count_state.py, etl/snapshot.py): each ingest batch's count
+DELTA is one fragment, committed with the caller's batch_id as the
+manifest cursor, so a crash-replay of the same batch id is skipped —
+replay-idempotent without set semantics (a double append would
+double-count). Reading the current totals is a sum over all fragments —
+at most 65536 x n_batches rows of (long, long, long); the store's
+automatic compaction merges their fragments as they accumulate.
 
 100 TB posture: the corpus is never re-read — each batch is scanned
 once to count and once to score; everything else (state read, totals,
@@ -47,9 +45,8 @@ def dsir_state_add(
 
     `counts` must be a (b, c_raw, c_tgt) table (one row per touched
     bucket — the output of the shared bucket agg). Delegates to the
-    generic additive-count state (operators/count_state.py): the write
-    replaces ONLY the `batch=batch_id` partition, so replaying a
-    crashed fold-in converges; one file per batch is right because the
+    generic additive-count state (operators/count_state.py): one
+    fragment per batch id, and a replayed batch id is skipped; the
     delta is bounded at 65536 rows by the bucket space."""
     count_state_add(
         spark, counts, state_path, batch_id,
@@ -61,7 +58,7 @@ def dsir_state_counts(
     spark: SparkSession, state_path: str
 ) -> DataFrame | None:
     """Current accumulated bucket counts: per-bucket SUM over every
-    batch partition's delta — the same (b, c_raw, c_tgt) shape the
+    folded batch's delta — the same (b, c_raw, c_tgt) shape the
     batch scorer computes from a full corpus scan, derived here from
     O(65536 x n_batches) stored rows instead. None if no batch has
     ever been folded in."""

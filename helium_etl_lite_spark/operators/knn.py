@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..etl.snapshot import STATE, check_construction, commit_state, read_snapshot
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -1606,72 +1608,15 @@ def ann_topk_ivfpq_portable(
 # ingest loop, completing the incremental-dedup symmetry (exact:
 # dedup_filter_new; MinHash: minhash_filter_new; substring spans:
 # span_state_add — semantic was the one family without one). Same
-# discipline throughout: land the filtered batch FIRST, then fold it
-# into the state; the state never shuffles on a probe; fold-in appends
-# O(batch) bytes into stable shards.
-
-SEM_STATE_SHARDS = 64
+# discipline throughout: the state is a batch-id store (etl/snapshot.py)
+# folded in under the landed batch's id; the state never shuffles on a
+# probe; a fold-in appends one O(batch) fragment.
 
 # State-layout fingerprint, persisted with the state (the minhash
 # SIG_VERSION lesson): buckets are pure functions of the vector ONLY
 # under a fixed plane construction + banding — probing a state built
 # under different parameters would silently produce zero collisions.
 SEM_STATE_VERSION = "semdedup-hyperplane-splitmix-b6xL10-v1"
-
-
-def _sem_version_path(state_path: str) -> str:
-    import os
-
-    return os.path.join(state_path, "_sem_version")
-
-
-def _sem_write_version(state_path: str) -> None:
-    """Stamp (or verify) the state-layout marker BEFORE appending. A
-    marker-less directory that already holds shard data is refused —
-    stamping the current version onto data of unknown construction
-    would silently legitimize exactly the incompatibility the marker
-    exists to catch (the minhash _check_sig_version_for_append
-    lesson, review find)."""
-    import os
-
-    os.makedirs(state_path, exist_ok=True)
-    p = _sem_version_path(state_path)
-    if os.path.exists(p):
-        _sem_check_version(state_path)
-        return
-    if any(n.startswith("shard=") for n in os.listdir(state_path)):
-        raise ValueError(
-            f"semantic dedup state at {state_path} holds shard data but "
-            "no _sem_version marker; refusing to stamp it with "
-            f"{SEM_STATE_VERSION!r} — rebuild the state"
-        )
-    with open(p + ".tmp", "w") as f:
-        f.write(SEM_STATE_VERSION)
-    os.replace(p + ".tmp", p)
-
-
-def _sem_check_version(state_path: str) -> None:
-    """Probe-side guard: a state with data but no marker is as
-    incompatible as a wrong marker — zero bucket collisions would let
-    every duplicate through silently, so fail fast (review find: the
-    earlier silent-accept branch diverged from the minhash pattern
-    this family cites)."""
-    p = _sem_version_path(state_path)
-    try:
-        with open(p) as f:
-            found = f.read().strip()
-    except FileNotFoundError:
-        raise ValueError(
-            f"semantic dedup state at {state_path} carries no "
-            "_sem_version marker; refusing to probe a state of unknown "
-            "bucket construction"
-        ) from None
-    if found != SEM_STATE_VERSION:
-        raise ValueError(
-            f"semantic dedup state at {state_path} was built under "
-            f"{found!r}; this build probes {SEM_STATE_VERSION!r} — "
-            "rebuild the state (bucket constructions are incompatible)"
-        )
 
 
 def _sem_bucket_rows(
@@ -1764,20 +1709,21 @@ def semantic_filter_new(
     before it can drop anything.
 
     Probe shape (the dedup_filter_new / minhash_filter_new posture):
-    the state never shuffles — shard partition-pruning on the batch's
-    touched buckets, then a left-semi against a BROADCAST of the
-    batch's distinct (band, bucket) keys (guarded; corpus-sized batches
-    fall back to the shuffled equi-join), then the cosine verify join
-    on the surviving candidates. Zero-norm vectors have no buckets and
-    PASS THROUGH as survivors (the minhash NULL-text lesson).
+    the state (one read_snapshot) never shuffles — a left-semi against
+    a BROADCAST of the batch's distinct (band, bucket) keys (guarded;
+    corpus-sized batches fall back to the shuffled equi-join), then the
+    cosine verify join on the surviving candidates. Zero-norm vectors
+    have no buckets and PASS THROUGH as survivors (the minhash
+    NULL-text lesson).
 
-    Ordering contract unchanged: land this output first, then
-    semantic_state_add — replay converges because the state fold-in is
-    a set union and probes read it as a set (and a marker-only state
-    dir from a crash mid-first-append reads as empty, see below)."""
+    Ordering contract: fold this output in with semantic_state_add
+    under the landed batch's id (a replayed batch id is skipped). A
+    store with no data — missing, or only the construction marker a
+    crash before the first fold-in left — reads as the empty state; a
+    marker naming another construction is refused."""
     rows = _sem_bucket_rows(batch, n_bands, band_planes, dim, id_col, vec_col)
-    # reused >=3 times below; lazy (r15): the first consumer (the
-    # touched-shards collect) materializes it in its own job
+    # reused >=3 times below; lazy (r15): the first consumer
+    # materializes it in its own job
     rows = rows.localCheckpoint(eager=False)
     # ---- in-batch keeper assignment (min-id representative) ----
     a = rows.select(
@@ -1805,33 +1751,13 @@ def semantic_filter_new(
     kept = batch.join(dominated, id_col, "left_anti")
     # zero-norm rows never appear in `rows`; they are already inside
     # `kept` (nothing can dominate them) and must skip the state probe.
-    import os
-
-    has_shards = os.path.isdir(state_path) and any(
-        n.startswith("shard=") for n in os.listdir(state_path)
-    )
-    if not has_shards:
-        # Missing dir, or a MARKER-ONLY dir left by a crash between
-        # _sem_write_version and the first append (r11 ADVICE item 2:
-        # spark.read.parquet on that dir raises UNABLE_TO_INFER_SCHEMA,
-        # which _path_missing re-raised — the ingest loop wedged until
-        # manual cleanup, contradicting the replay-converges contract).
-        # Both shapes ARE the empty state: nothing kept yet, so nothing
-        # can dominate the batch. A wrong-VERSION marker still fails
-        # fast — the incompatibility guard outranks replay convenience.
-        if os.path.exists(_sem_version_path(state_path)):
-            _sem_check_version(state_path)
+    check_construction(state_path, SEM_STATE_VERSION, stamp=False)
+    state = read_snapshot(spark, state_path, STATE)
+    if state is None:
         return kept
-    _sem_check_version(state_path)
-    state = spark.read.parquet(state_path)
     # no broadcast hint on `dominated` (review find): a duplicate-heavy
     # corpus-sized batch makes it unbounded — let AQE pick the strategy.
     probe = rows.join(dominated, id_col, "left_anti")
-    shard = F.pmod(F.xxhash64("bucket"), F.lit(SEM_STATE_SHARDS)).cast("int")
-    touched = [
-        r["shard"] for r in probe.select(shard.alias("shard")).distinct().collect()
-    ]
-    state = state.where(F.col("shard").isin(touched))
     # lazy (r15): the unconditional guard count materializes it
     bb = probe.select("band", "bucket").distinct().localCheckpoint(eager=False)
     if bb.count() <= max_broadcast_rows:
@@ -1858,6 +1784,7 @@ def semantic_state_add(
     spark,
     fresh: DataFrame,
     state_path: str,
+    batch_id: int,
     n_bands: int = 10,
     band_planes: int = 6,
     dim: int = 64,
@@ -1867,18 +1794,10 @@ def semantic_state_add(
     """Incremental SemDeDup, write side: fold the landed batch's bucket
     rows (+vectors — representatives must be retained, cosine needs
     them; unlike the hash families the state is O(kept * d), which IS
-    the SemDeDup state lower bound) into the persisted state. Same
-    shard discipline as minhash_state_add: stable pmod(xxhash64(bucket))
-    shards co-located with the probe's pruning key, APPEND-only O(batch)
-    bytes; duplicate appends from a crash replay only duplicate rows
-    and the probe's `.distinct()` on dup ids absorbs that."""
-    _sem_write_version(state_path)
+    the SemDeDup state lower bound) into the persisted state — one
+    O(batch) fragment committed under `batch_id` (commit_state: a
+    replayed batch id is skipped). The construction marker is stamped
+    before the first fold-in and checked on every later one."""
+    check_construction(state_path, SEM_STATE_VERSION, stamp=True)
     rows = _sem_bucket_rows(fresh, n_bands, band_planes, dim, id_col, vec_col)
-    shard = F.pmod(F.xxhash64("bucket"), F.lit(SEM_STATE_SHARDS)).cast("int")
-    (
-        rows.withColumn("shard", shard)
-        .repartition("shard")
-        .write.mode("append")
-        .partitionBy("shard")
-        .parquet(state_path)
-    )
+    commit_state(spark, state_path, rows, batch_id)

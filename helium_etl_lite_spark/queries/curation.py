@@ -988,13 +988,12 @@ def text_dsir_importance_incremental(spark, sf_dir):
     """The DSIR importance scorer with PERSISTED bucket-count state,
     hash-EXACT (r13 verdict item 3 — the one scorer family without an
     ingest twin): batch 1 (even doc_ids) folds its per-bucket (c_raw,
-    c_tgt) count delta into the sharded parquet state
-    (operators/dsir.py dsir_state_add — a dynamic-partition-overwrite
-    write keyed on batch id, replay-idempotent because replacing a
-    partition with identical content is a no-op; integer counts CANNOT
-    use dedup_state_add's append-only set discipline, a double append
-    would double-count). Batch 2 (odds) folds its own delta the same
-    way, then the accumulated counts are re-derived from state by
+    c_tgt) count delta into the persisted batch-id state
+    (operators/dsir.py dsir_state_add — one fragment committed under
+    the batch id, replay-idempotent because a replayed batch id is
+    skipped; integer counts need that, a double append would
+    double-count). Batch 2 (odds) folds its own delta the same way,
+    then the accumulated counts are re-derived from state by
     per-bucket addition (dsir_state_counts), the bounded log-ratio
     broadcast is rebuilt from them, and ONLY the new batch is scored —
     the landed corpus is never re-read.
@@ -1046,10 +1045,10 @@ def stream_dsir_importance(spark, sf_dir):
     the stream's own batch_id; batch 2 (odds) lands as a second file
     and a SECOND stream RESTARTED from the checkpoint drains the delta
     — the kill/catch-up cycle, continuing the batch_id sequence so
-    each delta folds exactly once (the partition-overwrite replay
-    discipline integer counts REQUIRE; a replayed append would
-    double-count where the dedup streams' set fold-ins shrug). The new
-    batch then scores against the log-ratio broadcast re-derived from
+    each delta folds exactly once (the state's cursor skips a replayed
+    batch id, which integer counts REQUIRE: a replayed append would
+    double-count). The new batch then scores against the log-ratio
+    broadcast re-derived from
     the full accumulated state, through the same
     _dsir_feats/_dsir_logratio/_dsir_score path as every other DSIR
     entry point. The hash match proves the streaming execution lands
@@ -1340,59 +1339,46 @@ def pipeline_incremental_curation(spark, sf_dir):
     the two-cycle incremental loop lands exactly what a from-scratch
     batch curation of the full corpus would land — the IVM convergence
     claim (view_incremental_join_refresh) lifted to the whole curation
-    pipeline. Scale: feed is ingest-bounded, the dedup state never
-    shuffles (broadcast fingerprint probe, operators/dedup.py:666),
-    the gate is row-local codegen, and the curated sink is
-    append-only."""
+    pipeline. Each cycle is streaming/curation_stream.py's
+    curate_changes_batch — the apply stream_incremental_curation runs
+    per microbatch — so the curated rows and the dedup state commit
+    together in one version of one batch-id store, and a replayed
+    cycle is skipped. Scale: feed is ingest-bounded, the dedup state
+    never shuffles (broadcast fingerprint probe, operators/dedup.py
+    dedup_filter_new), the gate is row-local codegen, and the curated
+    store is append-only."""
     from ..etl.snapshot import commit_batch_atomic, read_changes, read_snapshot
-    from ..operators import dedup
     from ..scratch import scratch_dir
+    from ..streaming.curation_stream import CURATED, curate_changes_batch
 
     t = Tables(spark, sf_dir)
     docs = t.documents.select(
         "doc_id", "lang", "text", F.col("doc_id").cast("long").alias("block")
     )
     root = scratch_dir("incr_curation_src")
-    state = scratch_dir("incr_curation_state") + "/state"
-    curated = scratch_dir("incr_curation_out") + "/curated"
+    curated = scratch_dir("incr_curation_out")
     hi = int(docs.agg(F.max("block")).first()[0])
-
-    def curate(batch_df, first: bool) -> None:
-        gated = batch_df.select("doc_id", "lang", "text").where(
-            gopher_keep_condition()
-        )
-        # Cursor-after-data discipline (dedup_filter_new docstring):
-        # land the curated output FIRST, then fold the state. A crash
-        # in between replays to the same fresh set (state unchanged)
-        # and the append is absorbed by downstream idempotence; the
-        # inverted order would permanently drop the batch. persist()
-        # also pins `fresh` so the state fold-in can't trigger a
-        # re-evaluation that anti-joins the batch against its own
-        # just-appended hashes.
-        fresh = dedup.dedup_filter_new(spark, gated, state).persist()
-        try:
-            fresh.select("doc_id", "lang").write.mode(
-                "overwrite" if first else "append"
-            ).parquet(curated)
-            dedup.dedup_state_add(spark, fresh, state)
-        finally:
-            fresh.unpersist()
 
     b1 = docs.where(F.col("doc_id") % 3 != 0)
     commit_batch_atomic(
         spark, root, {"docs": b1}, lo=0, hi=hi, height=hi,
         first_block=0, heights=b1.select("block"),
     )
-    curate(read_snapshot(spark, root, "docs", version=1), first=True)
+    bootstrap = read_snapshot(spark, root, "docs", version=1)
+    curate_changes_batch(
+        bootstrap.withColumn("_change_type", F.lit("insert")), 0, curated
+    )
 
     commit_batch_atomic(
         spark, root, {"docs": docs}, lo=0, hi=hi, height=hi,
         first_block=0, heights=docs.select("block"),
     )
     feed = read_changes(spark, root, "docs", v_from=1, v_to=2)
-    curate(feed.where(F.col("_change_type") == "insert"), first=False)
+    curate_changes_batch(feed, 1, curated)
 
-    return spark.read.parquet(curated).orderBy("doc_id")
+    return read_snapshot(spark, curated, CURATED).select("doc_id", "lang").orderBy(
+        "doc_id"
+    )
 
 
 @query("stream_incremental_curation", oracle=_INCR_CURATION_ORACLE)
@@ -1406,7 +1392,7 @@ def stream_incremental_curation(spark, sf_dir):
     TWO availableNow drains (bootstrap after commit 1, incremental
     after commit 2) RESTARTING from the checkpoint in between — the
     kill/catch-up cycle. Exactly-once: each published curated version
-    carries the data AND the dedup state (the hash column), so a
+    carries the data AND the dedup state (its state table), so a
     replayed batch_id skips wholesale — no split-store crash window
     (curation_stream.py docstring). The identical oracle hash-match
     across the batch and streaming forms proves both execution models
@@ -2214,7 +2200,7 @@ def corpus_shard_manifest(spark, sf_dir):
     every product is < 2^63, so DuckDB (which raises on BIGINT overflow
     where Spark wraps) computes the identical value — and the shard is
     taken from the HIGH bits (h >> 27), where multiplicative mixing is
-    strongest.  Measured: ~1/16 shard==doc_id%16 coincidence, 15.5/31
+    strongest.  Measured: ~1/16 shard == doc_id%16 coincidence, 15.5/31
     avalanche bits per flipped input bit, zero +2^20/+2^31 collisions.
     No global sort anywhere: the shard key is row-local, the only
     window is partitioned BY shard, and the manifest is one hash
@@ -2415,9 +2401,10 @@ def url_dedup_canonical_incremental(spark, sf_dir):
     verdict item 4 — the one dedup class that lacked an ingest twin,
     and the one a production recrawl needs most): batch 1 (even
     doc_ids) canonicalizes and folds its canonical-URL hashes into the
-    sharded parquet state (operators/dedup.py dedup_state_add — O(batch)
-    appended bytes, replay-idempotent), batch 2 (odd) canonicalizes and
-    probes it via dedup_filter_new's broadcast fingerprint semi-join —
+    persisted batch-id state (operators/dedup.py dedup_state_add —
+    O(batch) appended bytes, a replayed batch id skipped), batch 2
+    (odd) canonicalizes and probes it via dedup_filter_new's broadcast
+    fingerprint semi-join —
     the state never shuffles — and only URLs never crawled before
     survive, with in-batch recrawls collapsed to the min doc_id.
 
@@ -2441,7 +2428,7 @@ def url_dedup_canonical_incremental(spark, sf_dir):
     f1 = dedup.dedup_filter_new(
         spark, b1, state, text_col="canonical_url", normalize=False
     )
-    dedup.dedup_state_add(spark, f1, state)
+    dedup.dedup_state_add(spark, f1, state, 0)
     f2 = dedup.dedup_filter_new(
         spark, b2, state, text_col="canonical_url", normalize=False
     )

@@ -79,7 +79,7 @@ def text_dedup_minhash_incremental(spark, sf_dir):
     b1 = t.documents.where(F.col("doc_id") % 2 == 0)
     b2 = t.documents.where(F.col("doc_id") % 2 == 1)
     f1 = dedup.minhash_filter_new(spark, b1, state, jaccard_threshold=0.7)
-    dedup.minhash_state_add(spark, f1, state)
+    dedup.minhash_state_add(spark, f1, state, 0)
     f2 = dedup.minhash_filter_new(spark, b2, state, jaccard_threshold=0.7)
     return f2.select("doc_id").orderBy("doc_id")
 
@@ -1668,7 +1668,7 @@ def text_dedup_exact_incremental(spark, sf_dir):
     b1 = t.documents.where(F.col("doc_id") % 2 == 0)
     b2 = t.documents.where(F.col("doc_id") % 2 == 1)
     f1 = dedup.dedup_filter_new(spark, b1, state)
-    dedup.dedup_state_add(spark, f1, state)
+    dedup.dedup_state_add(spark, f1, state, 0)
     f2 = dedup.dedup_filter_new(spark, b2, state)
     return f2.select("doc_id")
 
@@ -4500,7 +4500,7 @@ def text_dedup_substring_anchor_incremental(spark, sf_dir):
     # The substring-dedup INGEST LOOP driver-verified end to end — the
     # anchored-span sibling of text_dedup_exact_incremental: batch 1
     # (even doc_ids) lands and folds its anchored span hashes into the
-    # persisted sharded span state (operators/dedup.py span_state_add,
+    # persisted batch-id span state (operators/dedup.py span_state_add,
     # O(batch) appended bytes); batch 2 (odd) probes it via the
     # broadcast-fingerprint semi-join — ONE streaming scan of the
     # state, which never shuffles — and every batch-2 token covered by
@@ -4515,7 +4515,7 @@ def text_dedup_substring_anchor_incremental(spark, sf_dir):
     state = scratch_dir("substr_incremental") + "/state"
     b1 = t.documents.where(F.col("doc_id") % 2 == 0)
     b2 = t.documents.where(F.col("doc_id") % 2 == 1)
-    dedup.span_state_add(spark, b1, state)
+    dedup.span_state_add(spark, b1, state, 0)
     return dedup.substring_anchor_dedup_incremental(spark, b2, state)
 
 
@@ -5441,12 +5441,11 @@ def text_perplexity_modified_kn_incremental(spark, sf_dir):
     hash-EXACT against the SAME oracle as the one-shot form — the
     LM-statistics ingest loop a continuously-growing corpus runs:
     batch 1 (training docs with even doc_id) folds its trigram-count
-    delta into the state (operators/count_state.py — one partition per
-    batch, dynamic-overwrite keyed on batch id, so a crash-replay
-    REPLACES identical content; integer counts cannot use append-only
-    set semantics), batch 2 (odd training doc_ids) folds its own, then
-    the accumulated trigram table is re-derived by per-key addition
-    and the held-out 10% scores through the IDENTICAL
+    delta into the state (operators/count_state.py — one fragment per
+    batch id, and a crash-replay of the batch id is skipped, which
+    integer counts need), batch 2 (odd training doc_ids) folds its
+    own, then the accumulated trigram table is re-derived by per-key
+    addition and the held-out 10% scores through the IDENTICAL
     _mkn_score_from_big3 path as text_perplexity_modified_kn. Integer
     addition is lossless, so the oracle string is literally the same:
     counts-from-state == counts-from-one-scan, bit for bit, down
@@ -5457,7 +5456,7 @@ def text_perplexity_modified_kn_incremental(spark, sf_dir):
     scorer families now fold batches in O(batch) and never re-read the
     landed corpus. Unlike DSIR's 65536-bounded bucket table, the
     trigram key domain scales with VOCAB — still sublinear in corpus,
-    and the per-batch delta partition keeps fold-in cost proportional
+    and the per-batch delta fragment keeps fold-in cost proportional
     to the batch's own type count.
 
     Scale shape: identical to the one-shot scorer downstream of the
@@ -5470,16 +5469,11 @@ def text_perplexity_modified_kn_incremental(spark, sf_dir):
     train = t.documents.where(F.col("doc_id") % 10 != 0)
     b1 = _mkn_train_trigrams(train.where(F.col("doc_id") % 2 == 0))
     b2 = _mkn_train_trigrams(train.where(F.col("doc_id") % 2 == 1))
-    # n_files=16: the trigram delta scales with vocab (unlike DSIR's
-    # 65536-bounded buckets), so the partition write must not funnel
-    # through one task
     count_state_add(
-        spark, b1, state, 0,
-        key_cols=["w1", "w2", "w3"], count_cols=["c123"], n_files=16,
+        spark, b1, state, 0, key_cols=["w1", "w2", "w3"], count_cols=["c123"]
     )
     count_state_add(
-        spark, b2, state, 1,
-        key_cols=["w1", "w2", "w3"], count_cols=["c123"], n_files=16,
+        spark, b2, state, 1, key_cols=["w1", "w2", "w3"], count_cols=["c123"]
     )
     big3 = count_state_totals(
         spark, state, key_cols=["w1", "w2", "w3"], count_cols=["c123"]
@@ -5753,19 +5747,19 @@ def vec_dedup_semantic_incremental(spark, sf_dir):
     symmetry: exact / MinHash / substring-span each had a persisted-
     state twin, semantic did not): batch 1 (even vec_ids) lands and
     folds its banded hyperplane-LSH bucket rows + vectors into a
-    persisted sharded state; batch 2 (odd vec_ids) probes that state
+    persisted batch-id state; batch 2 (odd vec_ids) probes that state
     and only vectors with no kept near-dup (verified cosine >= 0.35)
     against the WHOLE landed corpus survive. Deterministic (fixed
     avalanche planes, parity split); rows-only BY DESIGN (float cosine
-    + engine-specific xxhash shard routing); the family's driver-exact
+    + engine-specific LSH buckets); the family's oracle-exact
     evidence is vec_dedup_semantic_portable, and the mutual-freeness /
     planted-near-copy / replay gates live in
     tests/test_operators.py::TestSemanticIncremental.
 
-    Scale posture: the state never shuffles on a probe (shard pruning +
-    broadcast bucket-key semi-join, the minhash_filter_new posture);
-    fold-in appends O(batch); state size O(kept * d) — the SemDeDup
-    lower bound, representatives must be retained."""
+    Scale posture: the state never shuffles on a probe (broadcast
+    bucket-key semi-join, the minhash_filter_new posture); fold-in
+    appends O(batch); state size O(kept * d) — the SemDeDup lower
+    bound, representatives must be retained."""
     from ..scratch import scratch_dir
 
     t = Tables(spark, sf_dir)
@@ -5774,7 +5768,7 @@ def vec_dedup_semantic_incremental(spark, sf_dir):
     b1 = emb.where(F.col("vec_id") % 2 == 0)
     b2 = emb.where(F.col("vec_id") % 2 == 1)
     f1 = knn.semantic_filter_new(spark, b1, state, threshold=0.35)
-    knn.semantic_state_add(spark, f1, state)
+    knn.semantic_state_add(spark, f1, state, 0)
     f2 = knn.semantic_filter_new(spark, b2, state, threshold=0.35)
     return f2.select("vec_id").orderBy("vec_id")
 

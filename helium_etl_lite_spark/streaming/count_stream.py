@@ -13,16 +13,14 @@ features through the shared 16-bit bucket, ONE bucket agg for the
 batch_id.
 
 Exactly-once: a failed micro-batch REPLAYS under the SAME batch_id,
-and the fold-in overwrites that batch's own state partition with
-identical content — a no-op. This partition-overwrite discipline is
-load-bearing here in a way it is not for the dedup streams: integer
-counts cannot survive a replayed APPEND (double-count), while a set
-fold-in can; the count-state design exists exactly for this failure
-mode. Restarting the stream from its checkpoint continues the batch_id
-sequence, so a kill/catch-up cycle folds each delta exactly once.
+which the count state's cursor (etl/snapshot.py commit_state) skips.
+This is load-bearing here in a way it is not for a set state: integer
+counts cannot survive a replayed append (double-count). Restarting the
+stream from its checkpoint continues the batch_id sequence, so a
+kill/catch-up cycle folds each delta exactly once.
 
 Scale posture: each batch tokenized once, delta bounded at 65536 rows
-by the bucket space (one small file per batch), state never read on
+by the bucket space (one small fragment per batch), state never read on
 the write path — O(batch) per micro-batch, independent of corpus and
 state size.
 """

@@ -1,32 +1,32 @@
 """Streaming URL-recrawl collapse over a file stream of (doc_id, url)
 batches (start_url_dedup_stream), and the read view of the corpus it
 lands (url_corpus).
+
+The stream's out_dir is one batch-id store (etl/snapshot.py) with two
+tables: `corpus` (the landed doc_id, canonical_url rows) and the
+canonical-hash state that operators/dedup.py dedup_filter_new probes.
+One commit publishes a micro-batch's corpus rows, their hashes and the
+batch id together, so a replayed micro-batch is skipped whole and the
+corpus never holds a row twice.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+from ..etl.snapshot import STATE, commit_batch, is_applied, read_snapshot
 
 URL_SCHEMA = "doc_id long, url string"
 
+CORPUS = "corpus"
+
 
 def url_corpus(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The landed recrawl-free URL corpus (doc_id-deduped read view: a
-    replayed micro-batch may have appended twice; first-writer wins and
-    both writers carry identical rows)."""
-    path = os.path.join(out_dir, "corpus")
-    try:
-        return spark.read.parquet(path).dropDuplicates(["doc_id"])
-    except AnalysisException as exc:
-        # only not-yet-created is "no corpus"; corrupt files must raise
-        from ..errors import is_path_not_found
-
-        if is_path_not_found(exc):
-            return None
-        raise
+    """The landed recrawl-free URL corpus (None before the first
+    micro-batch)."""
+    return read_snapshot(spark, out_dir, CORPUS)
 
 
 def start_url_dedup_stream(
@@ -41,40 +41,37 @@ def start_url_dedup_stream(
     recrawls to the min-id keeper, probes the persisted canonical-hash
     state via dedup_filter_new's broadcast fingerprint semi-join with
     ``normalize=False`` (canonical paths are case-SENSITIVE — the
-    lower(trim()) default would merge /Page and /page), lands the
-    survivors (data BEFORE state, the cursor-after-data discipline),
-    then folds their hashes into the sharded state (O(batch) append,
-    replay-idempotent set semantics).
+    lower(trim()) default would merge /Page and /page), then commits the
+    survivors and their hashes in one version (O(batch) appended rows).
 
-    Exactly-once: the checkpoint replays a failed micro-batch. A replayed
-    micro-batch re-appends identical rows that the doc_id-deduped read
-    view collapses, the state fold-in is a set union, and a post-fold
-    replay probes its own hashes out of state into a no-op; no
-    per-batch landed-corpus scan is needed (r13 ADVICE). The query
-    drains the files present, then stops (an availableNow trigger); a
-    later call resumes from the checkpoint. Corpus lands under
-    `{out_dir}/corpus`, hash state under `{out_dir}/url_state`."""
+    Exactly-once: the checkpoint replays a failed micro-batch under the
+    same batch id, which the store's cursor skips; no per-batch
+    landed-corpus scan is needed (r13 ADVICE). The query drains the
+    files present, then stops (an availableNow trigger); a later call
+    resumes from the checkpoint, kept under `{out_dir}/_checkpoint`."""
     from pyspark.sql import functions as F
 
-    from ..operators.dedup import dedup_filter_new, dedup_state_add
+    from ..operators.dedup import dedup_filter_new
     from ..operators.url import canonical_url
 
-    corpus_path = os.path.join(out_dir, "corpus")
-    state_path = os.path.join(out_dir, "url_state")
-
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
+        if is_applied(out_dir, batch_id) or batch.isEmpty():
             return
         b = batch.select(
             "doc_id", canonical_url(F.col("url")).alias("canonical_url")
         ).localCheckpoint(eager=True)
         fresh = dedup_filter_new(
-            spark, b, state_path, text_col="canonical_url", normalize=False
+            spark, b, out_dir, text_col="canonical_url", normalize=False
         ).localCheckpoint(eager=True)
-        fresh.select("doc_id", "canonical_url").write.mode("append").parquet(
-            corpus_path
+        block = F.lit(batch_id).cast("long")
+        commit_batch(
+            spark, out_dir,
+            {
+                CORPUS: fresh.select("doc_id", "canonical_url").withColumn("block", block),
+                STATE: fresh.select("text_hash").withColumn("block", block),
+            },
+            batch_id, batch_id, batch_id,
         )
-        dedup_state_add(spark, fresh, state_path)
 
     reader = (
         spark.readStream.schema(URL_SCHEMA)

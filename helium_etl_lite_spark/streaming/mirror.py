@@ -1,7 +1,7 @@
 """Streaming CDC consumer: maintain a downstream MIRROR of a snapshot
-table from its change feed, and the store and subscription every
-change-feed consumer shares (the curation consumers in
-curation_stream.py use them too).
+table from its change feed, and the subscription every change-feed
+consumer shares (the curation consumers in curation_stream.py use it
+too).
 
 The batch query `sink_snapshot_changes_apply` proves v1 + feed == v2;
 this is the same contract in streaming form: a foreachBatch consumer
@@ -10,10 +10,10 @@ subscribes to the `snapshot_changes` source (sources/python_datasource.py
 inserts/deletes to a local mirror, and survives kill/restart without
 double-applying.
 
-Every consumer store is a snapshot store (etl/snapshot.py), written
-through commit_batch_atomic: block-range fragments, a manifest, one
-durable CURRENT swap. The manifest's cursor (`height`) holds the last
-applied batch id, so the data and the batch id publish in one rename.
+Every consumer store is a batch-id store (etl/snapshot.py), written
+through commit_batch: block-range fragments, a manifest, one durable
+CURRENT swap. The manifest's cursor (`height`) holds the last applied
+batch id, so the data and the batch id publish in one rename.
 Structured Streaming replays at-least-once with a STABLE batch_id, so a
 batch id at or below the cursor is a replay and is skipped; an empty
 batch publishes nothing.
@@ -29,9 +29,9 @@ blocks above every fragment (a follower's change feed) appends only its
 own rows, and a batch that rewrites old blocks rewrites the fragments
 it overlaps.
 
-After each apply the store stays bounded: a block range holding more
-than COMPACT_EVERY fragments is compacted (compact_snapshot), and
-vacuum keeps the fragments of the two newest versions.
+After each apply the store stays bounded: commit_batch compacts a block
+range holding more than COMPACT_EVERY fragments, and vacuum keeps the
+fragments of the two newest versions.
 """
 
 from __future__ import annotations
@@ -39,61 +39,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..etl.compact import compact_snapshot
 from ..etl.snapshot import (
+    RANGE_SIZE,
     SnapshotStore,
     _read_fragments,
-    commit_batch_atomic,
+    commit_batch,
     fragments,
+    is_applied,
     read_snapshot,
 )
 
-#: fragments a block range may hold before an apply compacts the store.
-COMPACT_EVERY = 8
-
-#: block-range width of every consumer store (commit_batch_atomic's).
-RANGE_SIZE = 1000
-
 TABLE = "mirror"
-
-
-def mirror_version(store_dir: str) -> int | None:
-    """The last applied batch_id, or None before the first apply."""
-    m = SnapshotStore(store_dir).current()
-    return None if m is None else m["height"]
-
-
-def is_applied(store_dir: str, batch_id: int) -> bool:
-    """True when `batch_id` is at or below the store's cursor: a replay."""
-    done = mirror_version(store_dir)
-    return done is not None and done >= batch_id
-
-
-def commit_batch(
-    spark: SparkSession,
-    store_dir: str,
-    tables: dict[str, DataFrame],
-    batch_id: int,
-    lo: int,
-    hi: int,
-    heights: DataFrame | None = None,
-) -> None:
-    """Publish `tables` and `batch_id` as the store's cursor in one
-    snapshot version (claim arguments as commit_batch_atomic's), then
-    compact when a block range holds more than COMPACT_EVERY fragments
-    and vacuum the fragments the two newest versions do not name. The
-    manifest's first_block carries nothing for these stores (0)."""
-    m = commit_batch_atomic(
-        spark, store_dir, tables, lo, hi, height=batch_id, first_block=0,
-        range_size=RANGE_SIZE, heights=heights,
-    )
-    if any(
-        len(frags) > COMPACT_EVERY
-        for parts in m["tables"].values()
-        for frags in parts.values()
-    ):
-        compact_snapshot(spark, store_dir)
-    SnapshotStore(store_dir).vacuum(keep_versions=2)
 
 
 def read_mirror(spark: SparkSession, mirror_dir: str) -> DataFrame | None:

@@ -167,45 +167,6 @@ def _fragment(pdir, n_splits=3):
     os.remove(os.path.join(pdir, f))
 
 
-def _plain_rewards(spark, chain_dirs, tdir):
-    # A plain block_range-partitioned table, the layout
-    # compact_partitioned_table rewrites in place.
-    from helium_etl_lite_spark.etl.pipeline import write_block_range_idempotent
-    from helium_etl_lite_spark.etl.transforms import build_outputs
-
-    bp, tp, _ = chain_dirs
-    rewards = build_outputs("rewards", spark.read.parquet(bp), spark.read.parquet(tp))["rewards"]
-    write_block_range_idempotent(spark, rewards, tdir, 1000, 1059, range_size=20)
-
-
-def test_compact_plain_layout(spark, chain_dirs, tmp_path):
-    # compact_partitioned_table must merge small files per partition,
-    # preserving content exactly and leaving already-compact partitions
-    # alone.
-    from helium_etl_lite_spark.etl.compact import compact_partitioned_table
-
-    tdir = str(tmp_path / "rewards")
-    _plain_rewards(spark, chain_dirs, tdir)
-    frag = next(iter(_part_files(tdir)))
-    _fragment(os.path.join(tdir, frag))
-    before_files = _part_files(tdir)
-    assert before_files[frag] > 1, before_files
-    before_rows = sorted(
-        map(tuple, spark.read.parquet(tdir).drop("block_range").collect())
-    )
-
-    results = compact_partitioned_table(spark, tdir)
-    after_files = _part_files(tdir)
-    assert all(n == 1 for n in after_files.values()), after_files
-    assert set(results) == {p for p, n in before_files.items() if n > 1}
-    after_rows = sorted(
-        map(tuple, spark.read.parquet(tdir).drop("block_range").collect())
-    )
-    assert after_rows == before_rows
-    # idempotent: second run finds nothing to do
-    assert compact_partitioned_table(spark, tdir) == {}
-
-
 def test_compact_snapshot_sink(spark, chain_dirs, tmp_path):
     # compaction publishes a NEW snapshot version mapping
     # the fragmented partitions to compacted files; committed reads are
@@ -300,24 +261,6 @@ def test_compact_merges_fragments_to_one_per_range(spark, chain_dirs, tmp_path):
     for table in ("rewards", "transactions"):
         assert after[table]["n_fragments"] == after[table]["n_partitions"]
         assert sorted(map(tuple, read_snapshot(spark, out, table).collect())) == rows[table]
-
-
-def test_compact_crash_recovery(spark, chain_dirs, tmp_path):
-    # plain-layout swap interrupted between the two renames: data sits
-    # in .__compact_old and the partition dir is missing. The next run
-    # must restore it before compacting.
-    from helium_etl_lite_spark.etl.compact import compact_partitioned_table
-
-    tdir = str(tmp_path / "rewards")
-    _plain_rewards(spark, chain_dirs, tdir)
-    rows = spark.read.parquet(tdir).count()
-    part = next(iter(_part_files(tdir)))
-    pdir = os.path.join(tdir, part)
-    os.rename(pdir, pdir + ".__compact_old")  # simulate the crash window
-    compact_partitioned_table(spark, tdir)
-    assert os.path.isdir(pdir)
-    assert not os.path.isdir(pdir + ".__compact_old")
-    assert spark.read.parquet(tdir).count() == rows
 
 
 def test_sql_at_version_time_travels_atomic_sink(spark, chain_dirs, tmp_path, capsys):

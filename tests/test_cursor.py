@@ -258,7 +258,7 @@ def test_vacuum_keeps_the_live_snapshot(tmp_path, capsys, keep):
     assert _tree(out) == before
 
 
-@pytest.mark.parametrize("command", ["compact", "dedup-state"])
+@pytest.mark.parametrize("command", ["compact"])
 def test_target_mb_must_be_positive(tmp_path, monkeypatch, capsys, command):
     # --target-mb 0 divides by zero when the file count is planned;
     # argparse refuses it before any Spark session starts.
@@ -267,7 +267,7 @@ def test_target_mb_must_be_positive(tmp_path, monkeypatch, capsys, command):
 
     monkeypatch.setattr(cli, "get_spark", no_spark)
     _, cfg = _two_version_store(tmp_path)
-    argv = [command, "--config", cfg, "--state-path", str(tmp_path / "state")]
+    argv = [command, "--config", cfg]
     for bad in ("0", "-3", "ten"):
         with pytest.raises(SystemExit) as exc:
             cli.main(argv + ["--target-mb", bad])

@@ -893,6 +893,8 @@ def test_hll_sketch_union_matches_exact_within_error(spark, sf_dir):
 def test_minhash_state_sig_version_fail_fast(spark, tmp_path):
     # A persisted LSH state from a different signature construction must
     # refuse to serve probes instead of silently missing every near-dup.
+    import os
+
     import pytest as _pytest
 
     from helium_etl_lite_spark.operators import dedup
@@ -902,22 +904,95 @@ def test_minhash_state_sig_version_fail_fast(spark, tmp_path):
     )
     state = str(tmp_path / "state")
     fresh = dedup.minhash_filter_new(spark, docs, state)
-    dedup.minhash_state_add(spark, fresh, state)
+    dedup.minhash_state_add(spark, fresh, state, 0)
     # normal probe works
     assert dedup.minhash_filter_new(spark, docs, state).count() >= 0
 
     # tamper: wrong version marker
-    with open(state + "/_sig_version", "w") as f:
+    from helium_etl_lite_spark.etl.snapshot import CONSTRUCTION
+
+    with open(os.path.join(state, CONSTRUCTION), "w") as f:
         f.write("minhash-xxhash64-perm-v1")
     with _pytest.raises(ValueError, match="rebuild the state"):
         dedup.minhash_filter_new(spark, docs, state).count()
+    # ... and the fold-in refuses it too
+    with _pytest.raises(ValueError, match="rebuild the state"):
+        dedup.minhash_state_add(spark, fresh, state, 1)
 
     # tamper: missing marker (pre-versioning state)
-    import os
-
-    os.remove(state + "/_sig_version")
-    with _pytest.raises(ValueError, match="no signature-version"):
+    os.remove(os.path.join(state, CONSTRUCTION))
+    with _pytest.raises(ValueError, match="no construction marker"):
         dedup.minhash_filter_new(spark, docs, state).count()
+
+
+def _fold_exact(spark, state, batch_id):
+    from helium_etl_lite_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "alpha"), (2, "beta"), (3, "alpha")], "doc_id long, text string"
+    )
+    dedup.dedup_state_add(spark, dedup.dedup_filter_new(spark, docs, state), state, batch_id)
+
+
+def _fold_minhash(spark, state, batch_id):
+    from helium_etl_lite_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "p q r s"), (2, "m n o t u")], "doc_id long, text string"
+    )
+    dedup.minhash_state_add(spark, docs, state, batch_id)
+
+
+def _fold_span(spark, state, batch_id):
+    from helium_etl_lite_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [(1, " ".join(f"p{i}" for i in range(70)))], "doc_id long, text string"
+    )
+    dedup.span_state_add(spark, docs, state, batch_id)
+
+
+def _fold_semantic(spark, state, batch_id):
+    from helium_etl_lite_spark.operators import knn
+
+    vecs = spark.createDataFrame(
+        [(i, [float((i * 7 + d) % 5 - 2) for d in range(64)]) for i in range(4)],
+        "vec_id long, embedding array<float>",
+    )
+    knn.semantic_state_add(spark, vecs, state, batch_id)
+
+
+def _fold_count(spark, state, batch_id):
+    from helium_etl_lite_spark.operators.count_state import count_state_add
+
+    delta = spark.createDataFrame([(1, 3), (2, 5)], "k long, c long")
+    count_state_add(spark, delta, state, batch_id, key_cols=["k"], count_cols=["c"])
+
+
+@pytest.mark.parametrize(
+    "fold", [_fold_exact, _fold_minhash, _fold_span, _fold_semantic, _fold_count],
+    ids=["exact", "minhash", "span", "semantic", "count"],
+)
+def test_state_fold_replay_is_skipped(spark, tmp_path, fold):
+    # Every operator state is a batch-id store: folding the same batch
+    # id twice leaves the rows of one fold and publishes no version.
+    from helium_etl_lite_spark.etl.snapshot import STATE, SnapshotStore, read_snapshot
+
+    state = str(tmp_path / "state")
+
+    def rows():
+        return sorted(repr(tuple(r)) for r in read_snapshot(spark, state, STATE).collect())
+
+    fold(spark, state, 0)
+    version = SnapshotStore(state).current_version()
+    once = rows()
+    assert once
+    fold(spark, state, 0)
+    assert SnapshotStore(state).current_version() == version
+    assert rows() == once
+    # a later batch id folds in: the cursor advances to it
+    fold(spark, state, 1)
+    assert SnapshotStore(state).current()["height"] == 1
 
 
 def test_dhash_short_images_keep_full_bit_entropy():
@@ -2935,7 +3010,7 @@ class TestSubstringAnchorIncremental:
             "doc_id long, text string",
         )
         state = str(tmp_path / "state")
-        span_state_add(spark, landed, state)
+        span_state_add(spark, landed, state, 0)
         # batch: one doc re-quoting the landed passage at offset 4, one
         # fresh doc
         batch = spark.createDataFrame(
@@ -2952,8 +3027,8 @@ class TestSubstringAnchorIncremental:
         assert out[3]["n_tokens_kept"] == 76       # fresh doc untouched
 
     def test_replayed_fold_in_changes_nothing(self, spark, tmp_path):
-        # crash-replay idempotence: appending the same batch's span
-        # hashes twice is a set-union no-op for every probe
+        # crash-replay idempotence: folding the same batch's span hashes
+        # in again under its batch id is skipped, so no probe changes
         from helium_etl_lite_spark.operators.dedup import (
             span_state_add,
             substring_anchor_dedup_incremental,
@@ -2964,7 +3039,7 @@ class TestSubstringAnchorIncremental:
             "doc_id long, text string",
         )
         state = str(tmp_path / "state")
-        span_state_add(spark, landed, state)
+        span_state_add(spark, landed, state, 0)
         batch = spark.createDataFrame(
             [(2, " ".join(f"p{i}" for i in range(70)))],
             "doc_id long, text string",
@@ -2972,7 +3047,7 @@ class TestSubstringAnchorIncremental:
         once = sorted(
             substring_anchor_dedup_incremental(spark, batch, state).collect()
         )
-        span_state_add(spark, landed, state)  # replayed fold-in
+        span_state_add(spark, landed, state, 0)  # replayed fold-in
         twice = sorted(
             substring_anchor_dedup_incremental(spark, batch, state).collect()
         )
@@ -3507,7 +3582,7 @@ class TestSemanticIncremental:
         f1 = knn.semantic_filter_new(spark, b1, state, threshold=0.8)
         kept1 = sorted(r["vec_id"] for r in f1.select("vec_id").collect())
         assert kept1 == list(range(10))  # random unit vectors: no dups
-        knn.semantic_state_add(spark, f1, state)
+        knn.semantic_state_add(spark, f1, state, 0)
         # batch 2: a near-copy of kept vector 3 (cos ~ 0.999) + a fresh one
         near = self._rand(3) + 0.02 * self._rand(99)
         near = near / np.linalg.norm(near)
@@ -3535,33 +3610,35 @@ class TestSemanticIncremental:
         state = str(tmp_path / "sem_state3")
         b1 = self._mkvecs(spark, [(i, self._rand(i)) for i in range(5)])
         f1 = knn.semantic_filter_new(spark, b1, state, threshold=0.8)
-        knn.semantic_state_add(spark, f1, state)
-        # crash replay: the same batch probed again folds in duplicate
-        # rows; the probe must still drop ALL of batch 1 (each vector is
-        # its own near-dup at cos = 1) and keep a zero-norm row (no
-        # bucket, cosine undefined -> pass-through survivor).
+        knn.semantic_state_add(spark, f1, state, 0)
+        knn.semantic_state_add(spark, f1, state, 0)  # replayed fold-in
+        # crash replay: the same batch probed again must drop ALL of
+        # batch 1 (each vector is its own near-dup at cos = 1) and keep
+        # a zero-norm row (no bucket, cosine undefined -> pass-through
+        # survivor).
         b1z = self._mkvecs(spark, [(i, self._rand(i)) for i in range(5)] + [(50, [0.0] * 64)])
         f_replay = knn.semantic_filter_new(spark, b1z, state, threshold=0.8)
         assert sorted(r["vec_id"] for r in f_replay.collect()) == [50]
 
     def test_marker_only_state_dir_reads_as_empty(self, spark, tmp_path):
-        """r11 ADVICE item 2: a crash between _sem_write_version and the
-        first parquet append leaves a MARKER-ONLY directory; the next
-        probe must treat it as empty state (not wedge the ingest loop
-        on UNABLE_TO_INFER_SCHEMA) so replay converges as the docstring
+        """r11 ADVICE item 2: a crash between stamping the construction
+        marker and the first fold-in's commit leaves a MARKER-ONLY
+        directory; the next probe must treat it as empty state (not
+        wedge the ingest loop) so replay converges as the docstring
         promises — while a WRONG-version marker still fails fast."""
         import pytest
 
+        from helium_etl_lite_spark.etl.snapshot import CONSTRUCTION, check_construction
         from helium_etl_lite_spark.operators import knn
 
         state = str(tmp_path / "sem_state_crash")
-        # simulate the crash window: marker stamped, no shard data
-        knn._sem_write_version(state)
+        # simulate the crash window: marker stamped, nothing committed
+        check_construction(state, knn.SEM_STATE_VERSION, stamp=True)
         b1 = self._mkvecs(spark, [(i, self._rand(i)) for i in range(5)])
         f1 = knn.semantic_filter_new(spark, b1, state, threshold=0.8)
         assert sorted(r["vec_id"] for r in f1.collect()) == list(range(5))
         # the replay then folds in and the loop proceeds normally
-        knn.semantic_state_add(spark, f1, state)
+        knn.semantic_state_add(spark, f1, state, 0)
         f2 = knn.semantic_filter_new(spark, b1, state, threshold=0.8)
         assert f2.count() == 0
         # wrong-version marker-only dir: the incompatibility guard
@@ -3570,7 +3647,7 @@ class TestSemanticIncremental:
         import os
 
         os.makedirs(bad)
-        with open(knn._sem_version_path(bad), "w") as fh:
+        with open(os.path.join(bad, CONSTRUCTION), "w") as fh:
             fh.write("semdedup-other-construction-v0")
         with pytest.raises(ValueError, match="built under"):
             knn.semantic_filter_new(spark, b1, bad, threshold=0.8)

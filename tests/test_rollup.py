@@ -137,14 +137,14 @@ class TestIncrementalDedup:
         f1 = dedup.dedup_filter_new(spark, b1, state)
         got1 = sorted(r["doc_id"] for r in f1.collect())
         assert got1 == [1, 2]  # in-batch dup of "alpha" collapsed to min id
-        dedup.dedup_state_add(spark, f1, state)
+        dedup.dedup_state_add(spark, f1, state, 0)
 
         b2 = self._docs(spark, [(4, "beta"), (5, "gamma"), (6, "ALPHA  ")])
         f2 = dedup.dedup_filter_new(spark, b2, state)
         got2 = sorted(r["doc_id"] for r in f2.collect())
         # "beta" seen in batch 1; "ALPHA  " normalizes to seen "alpha"
         assert got2 == [5]
-        dedup.dedup_state_add(spark, f2, state)
+        dedup.dedup_state_add(spark, f2, state, 1)
 
         # corpus-equivalence: surviving ids across batches == one-shot
         # exact dedup keepers over the concatenated corpus
@@ -165,7 +165,7 @@ class TestIncrementalDedup:
             spark, [(i, f"doc {i % 37}") for i in range(100)]
         )
         f1 = dedup.dedup_filter_new(spark, b1, state)
-        dedup.dedup_state_add(spark, f1, state)
+        dedup.dedup_state_add(spark, f1, state, 0)
         b2 = self._docs(
             spark,
             [(1000 + i, f"doc {i % 61}") for i in range(100)]
@@ -191,26 +191,23 @@ class TestIncrementalDedup:
         state = str(tmp_path / "state")
         b1 = self._docs(spark, [(1, "x"), (2, "y")])
         f1 = dedup.dedup_filter_new(spark, b1, state)
-        dedup.dedup_state_add(spark, f1, state)
+        dedup.dedup_state_add(spark, f1, state, 0)
         probe = dedup.dedup_filter_new(spark, self._docs(spark, [(3, "x"), (4, "z")]), state)
         plan = probe._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
     def test_replay_converges(self, spark, tmp_path):
+        from helium_etl_lite_spark.etl.snapshot import STATE, read_snapshot
         from helium_etl_lite_spark.operators import dedup
 
         state = str(tmp_path / "state")
         b1 = self._docs(spark, [(1, "x"), (2, "y")])
         f1 = dedup.dedup_filter_new(spark, b1, state)
-        dedup.dedup_state_add(spark, f1, state)
-        # crash-replay: state_add again with the same fresh rows. The
-        # append-only fold-in duplicates physical rows, but the state is
-        # read with set semantics — no probe result changes...
-        dedup.dedup_state_add(spark, f1, state)
-        assert dedup.dedup_filter_new(spark, b1, state).count() == 0
-        # ...and compaction restores physical set-minimality.
-        dedup.dedup_state_compact(spark, state)
-        assert spark.read.parquet(state).count() == 2
+        dedup.dedup_state_add(spark, f1, state, 0)
+        # crash-replay: state_add again with the same fresh rows under
+        # the same batch id is skipped — the state keeps one row per hash
+        dedup.dedup_state_add(spark, f1, state, 0)
+        assert read_snapshot(spark, state, STATE).count() == 2
         assert dedup.dedup_filter_new(spark, b1, state).count() == 0
 
 
@@ -222,6 +219,7 @@ class TestUrlDedupIncremental:
         return spark.createDataFrame(rows, "doc_id long, canonical_url string")
 
     def test_case_sensitive_keys_and_replay_idempotence(self, spark, tmp_path):
+        from helium_etl_lite_spark.etl.snapshot import STATE, read_snapshot
         from helium_etl_lite_spark.operators import dedup
 
         state = str(tmp_path / "state")
@@ -234,11 +232,10 @@ class TestUrlDedupIncremental:
             spark, b1, state, text_col="canonical_url", normalize=False
         )
         assert sorted(r["doc_id"] for r in f1.collect()) == [1, 2]
-        dedup.dedup_state_add(spark, f1, state)
+        dedup.dedup_state_add(spark, f1, state, 0)
 
-        # crash-replay of the fold-in: duplicate appended rows change no
-        # probe result (set semantics), compaction restores minimality
-        dedup.dedup_state_add(spark, f1, state)
+        # crash-replay of the fold-in under the same batch id is skipped
+        dedup.dedup_state_add(spark, f1, state, 0)
         b2 = self._urls(spark, [
             (10, "http://a.com/page"),  # recrawl of the landed lowercase
             (11, "http://a.com/PAGE"),  # case-distinct: genuinely new
@@ -251,9 +248,7 @@ class TestUrlDedupIncremental:
             ).collect()
         )
         assert probe() == [11, 12]
-        dedup.dedup_state_compact(spark, state)
-        assert spark.read.parquet(state).count() == 2
-        assert probe() == [11, 12]
+        assert read_snapshot(spark, state, STATE).count() == 2
 
     def test_registered_query_matches_oneshot(self, spark, sf_dir):
         # the two-batch loop's survivors == the canonical-URL groups of
@@ -284,7 +279,7 @@ class TestUrlDedupIncremental:
 
 class TestDsirIncremental:
     # r13 verdict item 3: DSIR's bucket-count state — per-batch integer
-    # count deltas folded in by dynamic partition overwrite, totals
+    # count deltas folded in as one fragment per batch id, totals
     # re-derived by per-bucket addition.
 
     def _docs(self, spark, rows):
@@ -324,8 +319,9 @@ class TestDsirIncremental:
         dsir.dsir_state_add(spark, self._counts(b2), state, batch_id=1)
         merged = self._totals(spark, state)
 
-        # crash-replay of either fold-in: the partition is REPLACED with
-        # identical content, so totals cannot double-count
+        # crash-replay of either fold-in: the batch id is at or below
+        # the state's cursor, so it is skipped and totals cannot
+        # double-count
         dsir.dsir_state_add(spark, self._counts(b2), state, batch_id=1)
         assert self._totals(spark, state) == merged
         dsir.dsir_state_add(spark, self._counts(b1), state, batch_id=0)
@@ -343,11 +339,10 @@ class TestDsirIncremental:
         self, spark, tmp_path
     ):
         # foreachBatch binds micro-batch frames to a CLONED session
-        # with isolated conf, so the dynamic-overwrite must ride the
-        # WRITE OPTION — a session-conf approach never reaches the
-        # clone and the static overwrite silently wipes every other
-        # batch's partition (found live by stream_dsir_importance:
-        # only the last delta survived).
+        # with isolated conf; a fold-in from the clone must keep every
+        # other batch's delta (a former dynamic-overwrite form lost them
+        # when its mode rode the session conf: found live by
+        # stream_dsir_importance, only the last delta survived).
         from helium_etl_lite_spark.operators import dsir
 
         state = str(tmp_path / "state")
@@ -427,7 +422,7 @@ class TestIncrementalMinhashDedup:
         f1 = dedup.minhash_filter_new(spark, b1, state, jaccard_threshold=0.5)
         assert sorted(r["doc_id"] for r in f1.collect()) == [1, 2]
         assert "sig" in f1.columns  # state_add reuses the signatures
-        dedup.minhash_state_add(spark, f1, state)
+        dedup.minhash_state_add(spark, f1, state, 0)
 
         b2 = self._docs(
             spark,
@@ -453,7 +448,7 @@ class TestIncrementalMinhashDedup:
             [(i, " ".join(vocab[i % 7 : i % 7 + 8])) for i in range(40)],
         )
         f1 = dedup.minhash_filter_new(spark, b1, state, jaccard_threshold=0.6)
-        dedup.minhash_state_add(spark, f1, state)
+        dedup.minhash_state_add(spark, f1, state, 0)
         b2 = self._docs(
             spark,
             [(100 + i, " ".join(vocab[i % 11 : i % 11 + 9])) for i in range(40)],
@@ -473,89 +468,20 @@ class TestIncrementalMinhashDedup:
         assert bc == sh
 
     def test_replay_converges(self, spark, tmp_path):
+        from helium_etl_lite_spark.etl.snapshot import STATE, read_snapshot
         from helium_etl_lite_spark.operators import dedup
 
         state = str(tmp_path / "mh_state")
         b1 = self._docs(spark, [(1, "p q r s"), (2, "m n o t u")])
         f1 = dedup.minhash_filter_new(spark, b1, state)
-        dedup.minhash_state_add(spark, f1, state)
-        n1 = spark.read.parquet(state).count()
+        dedup.minhash_state_add(spark, f1, state, 0)
+        n1 = read_snapshot(spark, state, STATE).count()
         assert n1 == 2 * 8  # one band row per doc per band (bands=8)
-        # crash-replay: folding the same landed batch in again appends
-        # duplicate physical rows; probes are unchanged (set semantics)
-        dedup.minhash_state_add(spark, f1, state)
+        # crash-replay: folding the same landed batch in again under the
+        # same batch id is skipped; the probe drops the whole batch
+        dedup.minhash_state_add(spark, f1, state, 0)
+        assert read_snapshot(spark, state, STATE).count() == n1
         assert dedup.minhash_filter_new(spark, b1, state).count() == 0
-        # compaction drops the replay's duplicates per shard
-        dedup.dedup_state_compact(spark, state)
-        assert spark.read.parquet(state).count() == n1
-        assert dedup.minhash_filter_new(spark, b1, state).count() == 0
-
-
-class TestDedupStateMaintenance:
-    # r5 verdict item 3: the persisted LSH/hash state grows small files
-    # monotonically (each fold-in's dynamic overwrite re-splits touched
-    # shards). stats reports it; compact merges it WITHOUT changing
-    # probe results.
-
-    def _docs(self, spark, rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    def test_minhash_probe_identical_pre_post_compaction(self, spark, tmp_path):
-        from helium_etl_lite_spark.operators import dedup
-
-        state = str(tmp_path / "mh_state")
-        # several fold-ins → several files per touched shard
-        for i in range(4):
-            b = self._docs(
-                spark,
-                [(10 * i + j, f"tok{10 * i + j} alpha beta gamma") for j in range(3)],
-            )
-            f = dedup.minhash_filter_new(spark, b, state, jaccard_threshold=0.9)
-            dedup.minhash_state_add(spark, f, state)
-
-        probe = self._docs(
-            spark,
-            [(900, "tok0 alpha beta gamma"), (901, "brand new unseen words")],
-        )
-        before = sorted(
-            r["doc_id"]
-            for r in dedup.minhash_filter_new(spark, probe, state, jaccard_threshold=0.9)
-            .select("doc_id").collect()
-        )
-        s0 = dedup.dedup_state_stats(spark, state)
-        rewritten = dedup.dedup_state_compact(spark, state)
-        s1 = dedup.dedup_state_stats(spark, state)
-        after = sorted(
-            r["doc_id"]
-            for r in dedup.minhash_filter_new(spark, probe, state, jaccard_threshold=0.9)
-            .select("doc_id").collect()
-        )
-        assert before == after  # pure layout maintenance
-        assert s1["rows"] == s0["rows"] and s1["shards"] == s0["shards"]
-        assert rewritten, "nothing compacted — fixture no longer fragments shards"
-        assert s1["files"] < s0["files"]
-
-    def test_exact_state_compaction_and_cli(self, spark, tmp_path):
-        from helium_etl_lite_spark import cli
-        from helium_etl_lite_spark.operators import dedup
-
-        state = str(tmp_path / "hash_state")
-        for i in range(4):
-            b = self._docs(spark, [(10 * i + j, f"text {10 * i + j}") for j in range(3)])
-            f = dedup.dedup_filter_new(spark, b, state)
-            dedup.dedup_state_add(spark, f, state)
-        probe = self._docs(spark, [(900, "text 0"), (901, "never seen")])
-        before = sorted(
-            r["doc_id"] for r in dedup.dedup_filter_new(spark, probe, state).collect()
-        )
-        stats = cli.cmd_dedup_state(spark, state, "stats")
-        assert stats["rows"] == 12
-        cli.cmd_dedup_state(spark, state, "compact")
-        after = sorted(
-            r["doc_id"] for r in dedup.dedup_filter_new(spark, probe, state).collect()
-        )
-        assert before == after == [901]
-        assert dedup.dedup_state_stats(spark, state)["rows"] == 12
 
 
 class TestStreamingUrlDedup:
@@ -601,11 +527,12 @@ class TestStreamingUrlDedup:
             3: "https://b.com/y",
             5: "https://c.com/z",
         }, got
-        # state: one hash per distinct canonical landed
-        import os as _os
+        # one store: the corpus and one hash per distinct canonical
+        # landed, each held once
+        from helium_etl_lite_spark.etl.snapshot import STATE, read_snapshot
 
-        state = spark.read.parquet(_os.path.join(out, "url_state"))
-        assert state.select("text_hash").distinct().count() == 4
+        assert landed.count() == 4
+        assert read_snapshot(spark, out, STATE).count() == 4
 
 
 class TestIncrementalJoinView:
@@ -654,8 +581,8 @@ class TestIncrementalCuration:
     """pipeline_incremental_curation: the exact-oracle sweep pins the
     two-cycle fixed point; here we pin the CRASH-REPLAY property the
     loop leans on — re-curating the same CDC feed is a no-op because
-    the dedup state already holds every landed hash (set-semantics
-    appends, operators/dedup.py dedup_state_add)."""
+    the dedup state already holds every landed hash (operators/dedup.py
+    dedup_state_add skips the replayed batch id)."""
 
     def test_replayed_feed_lands_nothing(self, spark, sf_dir, tmp_path):
         import pyspark.sql.functions as F
@@ -670,26 +597,26 @@ class TestIncrementalCuration:
         curated = str(tmp_path / "curated")
         docs = Tables(spark, sf_dir).documents.select("doc_id", "lang", "text")
 
-        def curate(batch_df, first):
+        def curate(batch_df, batch_id):
             gated = batch_df.where(gopher_keep_condition())
             fresh = dedup.dedup_filter_new(spark, gated, state)
-            dedup.dedup_state_add(spark, fresh, state)
+            dedup.dedup_state_add(spark, fresh, state, batch_id)
             fresh.select("doc_id").write.mode(
-                "overwrite" if first else "append"
+                "append" if batch_id else "overwrite"
             ).parquet(curated)
 
         b1 = docs.where(F.col("doc_id") % 3 != 0)
         b2 = docs.where(F.col("doc_id") % 3 == 0)
-        curate(b1, first=True)
+        curate(b1, 0)
         n1 = spark.read.parquet(curated).count()
-        curate(b2, first=False)
+        curate(b2, 1)
         landed = sorted(
             r[0] for r in spark.read.parquet(curated).collect()
         )
         assert len(landed) > n1  # cycle 2 added something
         # crash between sink-append and cursor advance -> the same feed
         # replays; the state must swallow it whole.
-        curate(b2, first=False)
+        curate(b2, 1)
         replayed = sorted(
             r[0] for r in spark.read.parquet(curated).collect()
         )

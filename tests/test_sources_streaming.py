@@ -487,10 +487,19 @@ def _mirror_rows(spark, mdir):
     return {(r["block"], r["v"]) for r in mirror.read_mirror(spark, mdir).collect()}
 
 
-def _mirror_parts(mdir):
+def _mirror_parts(mdir, table="mirror"):
     from helium_etl_lite_spark.etl.snapshot import SnapshotStore
 
-    return SnapshotStore(mdir).current()["tables"]["mirror"]
+    return SnapshotStore(mdir).current()["tables"][table]
+
+
+def _batch_id(store_dir):
+    """A batch-id store's cursor: the last applied batch id (None before
+    the first apply)."""
+    from helium_etl_lite_spark.etl.snapshot import SnapshotStore
+
+    m = SnapshotStore(store_dir).current()
+    return None if m is None else m["height"]
 
 
 class TestSnapshotMirrorConsumer:
@@ -554,9 +563,9 @@ class TestSnapshotMirrorConsumer:
         assert all(b != 8 for b, _ in got)
 
         # idle restart: nothing new, mirror untouched
-        v_before = mirror.mirror_version(mdir)
+        v_before = _batch_id(mdir)
         drain()
-        assert mirror.mirror_version(mdir) == v_before
+        assert _batch_id(mdir) == v_before
         assert self._rows(mirror.read_mirror(spark, mdir)) == want
 
     def test_replayed_batch_is_not_double_applied(self, spark, tmp_path):
@@ -654,7 +663,7 @@ def test_substring_stream_replay_is_noop_and_restart_resumes(spark, tmp_path):
     # re-quoted passage).
     from helium_etl_lite_spark.etl.snapshot import commit_batch_atomic, read_snapshot
     from helium_etl_lite_spark.streaming.curation_stream import substring_changes_batch
-    from helium_etl_lite_spark.streaming.mirror import mirror_version, start_changes_stream
+    from helium_etl_lite_spark.streaming.mirror import start_changes_stream
 
     passage = " ".join(f"p{i}" for i in range(60))
     docs1 = spark.createDataFrame(
@@ -681,7 +690,7 @@ def test_substring_stream_replay_is_noop_and_restart_resumes(spark, tmp_path):
         first_block=0, heights=docs1.select("block"),
     )
     drain()
-    v1 = mirror_version(out)
+    v1 = _batch_id(out)
     assert v1 is not None
 
     commit_batch_atomic(
@@ -689,12 +698,12 @@ def test_substring_stream_replay_is_noop_and_restart_resumes(spark, tmp_path):
         first_block=0, heights=docs2.select("block"),
     )
     drain()
-    v2 = mirror_version(out)
+    v2 = _batch_id(out)
     assert v2 > v1
 
     # no new commit: a third drain must publish nothing
     drain()
-    assert mirror_version(out) == v2
+    assert _batch_id(out) == v2
 
     rows = {r["doc_id"]: r for r in read_snapshot(spark, out, "data").collect()}
     assert rows[0]["n_tokens_kept"] == 75  # first copy intact
@@ -825,48 +834,92 @@ def test_delete_in_one_range_leaves_other_ranges_fragments(spark, tmp_path, appl
     }
 
 
-@pytest.mark.parametrize("apply", ["apply_changes_batch", "apply_changes_batch_keyed"])
+def _fold_dedup_state(batch_df, batch_id, state_dir):
+    """The exact-dedup state as a change-feed consumer: a batch's
+    inserted rows fold in as documents (`v` as the text). A set state
+    applies no deletes."""
+    from pyspark.sql import functions as F
+
+    from helium_etl_lite_spark.operators import dedup
+
+    spark = batch_df.sparkSession
+    docs = batch_df.where(F.col("_change_type") == "insert").select(
+        F.col("block").alias("doc_id"), F.col("v").cast("string").alias("text")
+    )
+    dedup.dedup_state_add(
+        spark, dedup.dedup_filter_new(spark, docs, state_dir), state_dir, batch_id
+    )
+    return True
+
+
+@pytest.mark.parametrize(
+    "apply", ["apply_changes_batch", "apply_changes_batch_keyed", "dedup_state_add"]
+)
 def test_applies_past_the_cap_compact_and_read_every_row(spark, tmp_path, apply):
-    # COMPACT_EVERY + 1 insert applies append one fragment each to block
-    # range 0, while every other apply also deletes a row of range 1 (a
-    # delete-bearing apply). The apply that would leave range 0 above
-    # the cap compacts the store: no range is ever above the cap, the
-    # read sees every row the feed leaves, and vacuum keeps only the
-    # version dirs the two newest manifests name, plus a dir newer than
-    # CURRENT (an in-flight writer's).
+    # COMPACT_EVERY + 1 applies append one fragment each to block range 0
+    # (a mirror's rows carry their blocks; an operator state's carry the
+    # batch id), while every other apply also deletes a row of range 1 (a
+    # delete-bearing apply; the set state applies no deletes). The apply
+    # that would leave range 0 above the cap compacts the store: no range
+    # is ever above the cap, the read sees every row the feed leaves,
+    # and vacuum keeps only the version dirs the two newest manifests
+    # name, plus a dir newer than CURRENT (an in-flight writer's).
+    import hashlib
     import os
 
-    from helium_etl_lite_spark.etl.snapshot import SnapshotStore
+    from helium_etl_lite_spark.etl.snapshot import (
+        COMPACT_EVERY,
+        STATE,
+        SnapshotStore,
+        read_snapshot,
+    )
     from helium_etl_lite_spark.streaming import mirror
 
-    apply = getattr(mirror, apply)
+    is_state = apply == "dedup_state_add"
+    apply = _fold_dedup_state if is_state else getattr(mirror, apply)
+    table = STATE if is_state else mirror.TABLE
     mdir = str(tmp_path / "m")
-    cap = mirror.COMPACT_EVERY
+    cap = COMPACT_EVERY
     want = {(b, float(b)) for b in range(1000, 1020)}
+    inserted = set(want)
     assert apply(_feed(spark, [(b, v, "insert") for b, v in sorted(want)]), 0, mdir)
-    in_flight = os.path.join(mdir, "mirror", "v=99")
+    in_flight = os.path.join(mdir, table, "v=99")
     os.makedirs(in_flight)
+    # range 0's fragment count after each apply: the state's first apply
+    # already landed in range 0 (its block is batch id 0)
+    n_frags = 1 if is_state else 0
     for bid in range(1, cap + 2):
         rows = [(bid * 10, float(bid), "insert")]
         want.add((bid * 10, float(bid)))
+        inserted.add((bid * 10, float(bid)))
         if bid % 2 == 0:
             rows.append((1000 + bid, float(1000 + bid), "delete"))
             want.discard((1000 + bid, float(1000 + bid)))
         assert apply(_feed(spark, rows), bid, mdir)
-        parts = _mirror_parts(mdir)
+        parts = _mirror_parts(mdir, table)
         assert max(len(frags) for frags in parts.values()) <= cap, parts
-    assert len(parts["0"]) == 1  # the last apply compacted range 0
-    assert mirror.mirror_version(mdir) == cap + 1
-    assert _mirror_rows(spark, mdir) == want
+        n_frags = 1 if n_frags == cap else n_frags + 1
+        assert len(parts["0"]) == n_frags, (bid, parts)
+    assert _batch_id(mdir) == cap + 1
+    if is_state:
+        hashes = {
+            r["text_hash"] for r in read_snapshot(spark, mdir, STATE).collect()
+        }
+        assert read_snapshot(spark, mdir, STATE).count() == len(inserted)
+        assert hashes == {
+            hashlib.sha256(str(v).encode()).hexdigest() for _, v in inserted
+        }
+    else:
+        assert _mirror_rows(spark, mdir) == want
     store = SnapshotStore(mdir)
     cur = store.current_version()
     named = {
         f"v={f[0]}"
         for v in (cur - 1, cur)
-        for frags in store.manifest(v)["tables"]["mirror"].values()
+        for frags in store.manifest(v)["tables"][table].values()
         for f in frags
     }
-    assert set(os.listdir(os.path.join(mdir, "mirror"))) == named | {"v=99"}
+    assert set(os.listdir(os.path.join(mdir, table))) == named | {"v=99"}
 
 
 def test_cli_status_reports_the_last_batch_id(spark, tmp_path):

@@ -67,7 +67,7 @@ HEADLINE_NOTES = {
     "vec_dedup_semantic": "cluster-then-pair: sqrt(N) clusters, numpy assignment in a narrow mapInPandas (no shuffle), sub-blocked in-cluster pair kernel — ONE applyInPandas exchange, no BNLJ/CartesianProduct",
     "source_schema_evolution": "mergeSchema read-back is a bare union-schema scan, no Exchange",
     "sample_reservoir_per_group": "salted-sha256 rank via grouped_row_number: (lang, hash-prefix-bucket) windows + bounded offset control plane — no bare-lang partition, no RNG, no SinglePartition",
-    "text_dedup_minhash_incremental": "probe = (band,bucket) equi-join vs partition-pruned state; no BNLJ; fold-in appends O(batch)",
+    "text_dedup_minhash_incremental": "probe = (band,bucket) equi-join vs one snapshot read of the state, semi-joined against the broadcast batch keys; no BNLJ; fold-in commits one O(batch) fragment under the batch id",
     # r6 queries
     "join_theta_range": "band rides the __bin equi-key (r5 fix): no forced part broadcast, no BNLJ",
     "text_fuzzy_levenshtein": "vocab self-join on the (first_char, length-band) equi-key (b side explodes 5 offsets), NO broadcast hint; AQE may broadcast a measured-small vocab",
@@ -160,7 +160,7 @@ HEADLINE_NOTES = {
     "agg_quantile_sketch_portable": "1-row bounds glue + two map-side-combinable hash aggs; windows only over the <=32-row bin table — sketch merge is a bin-key SUM",
     "view_incremental_join_refresh": "delta-rule IVM: three O(|Δ|) equi-joins appended to the materialized store — the base join is built once and never recomputed on refresh",
     "sink_bloom_skipping_index": "one distributed bit_or pass builds per-file blooms; probe = 30-row broadcast vs the index; the data read is a pruned explicit file list",
-    "pipeline_incremental_curation": "per cycle: row-local gopher gate + broadcast-fingerprint dedup probe (state never shuffles) + append — feed-bounded work, CDC read is O(churn)",
+    "pipeline_incremental_curation": "per cycle (curate_changes_batch): row-local gopher gate + broadcast-fingerprint dedup probe (state never shuffles) + ONE commit of curated rows AND state — feed-bounded work, CDC read is O(churn); the read-back is a bare parquet scan of the curated fragments",
     "text_dedup_source_priority": "keeper choice AND copy count ride ONE window exchange on the 32-byte content hash — high-cardinality partitions, no skew risk",
     "vec_knn_classify": "cosine_topk's bounded query broadcast + one tiny vote hash agg + top-1 window on q_id — classification adds no new shuffle shape",
     "table_analyze_stats": "every column's count/nulls/NDV/min/max in ONE scan (EXPAND + partial agg); 1-row result exploded to per-column rows driver-free",
@@ -168,7 +168,7 @@ HEADLINE_NOTES = {
     "vec_ann_pq_portable": "4 subspace codebooks broadcast; codes = N*4 narrow rows; ADC = broadcast LUT join + partial-aggregable (q,vec) SUM — no cross join",
     "graph_pagerank_portable": "per round ONE src equi-join + ONE dst hash agg on BIGINT mass — the float twin's plan economics with zero FP anywhere",
     "vec_ann_ivfpq_portable": "coarse+PQ codebooks broadcast; ADC candidates from the (list,m,code) equi-join (probed fraction only); rerank joins a 50-id bounded shortlist",
-    "stream_incremental_curation": "foreachBatch over the snapshot_changes source; per batch: row-local gate + broadcast-fingerprint probe vs the store + ONE atomic version publish carrying data AND dedup state",
+    "stream_incremental_curation": "foreachBatch over the snapshot_changes source; per batch: row-local gate + dedup_filter_new's broadcast-fingerprint probe vs the store's state table + ONE atomic version publish carrying data AND dedup state",
     "agg_quantile_sketch_grouped": "two map-side-combinable hash aggs (per-group bounds, (group,bin) counts); windows partition per group over <=32-row bin tables — bounded control plane",
     "join_spatial_grid": "radius predicate rides the (cx, cy) cell equi-join (probe side explodes 3x3 neighborhood, build side home-cell only — pairs meet exactly once, no distinct); integer residual filter; no BNLJ/Cartesian",
     "ts_ewma_portable": "recurrence folds row-local inside aggregate() after ONE ObjectHashAggregate collect per user — no Python node, no extra shuffle; the window-inexpressible dependency class",
@@ -196,7 +196,7 @@ HEADLINE_NOTES = {
     "text_dedup_substring_anchor": "winnow gram keys row-local (ONE doc_id exchange for the rolling-min window); anchor positions fold to one array row per doc before the text join (no text replication per anchor); span hashes row-local slice+md5; one window exchange on the span hash; token filter row-local — no BNLJ, no token explode carrying text",
     "retrieval_rrf_hybrid": "BM25 arm ends in TakeOrderedAndProject(20); dense arm = 1-row query broadcast + per-q_id window; fusion full-outer join on two <=20-row sides; rank windows partition 20-row inputs — bounded by construction",
     "text_contamination_substring": "one shared anchored-span build (one doc_id exchange + row-local spans) split into bench/corpus arms; probe = LEFT SEMI on the span hash against the DISTINCT bench set (AQE broadcasts the small eval side) + one hash agg — no BNLJ",
-    "text_dedup_substring_anchor_incremental": "batch span table checkpointed once; state scan semi-joined against the BROADCAST batch-hash probe (state never shuffles); within-batch window on the span hash; token filter row-local",
+    "text_dedup_substring_anchor_incremental": "batch span table checkpointed once; one snapshot read of the state semi-joined against the BROADCAST batch-hash probe (state never shuffles); within-batch window on the span hash; token filter row-local",
     "agg_kmv_theta_sketch_portable": "one scan feeding both set filters, one (sid, hash) distinct, per-set k-smallest via ranked window with MAP-SIDE WindowGroupLimit pruning; union/intersection algebra on two 64-element arrays in a 1-row broadcast-scalar frame",
     "sample_weighted_reservoir": "one scan, row-local E-S key, TakeOrderedAndProject top-50 (never a global sort); rank window on the bounded result",
     "stream_substring_dedup": "foreachBatch over the snapshot_changes source; per batch: span-table build + broadcast probe vs the published span set + ONE atomic version publish carrying data AND spans",
@@ -226,7 +226,7 @@ HEADLINE_NOTES = {
     "vec_contamination_semantic": "DELIBERATE BroadcastNestedLoopJoin (bounded eval side broadcast, BuildRight) + map-side partial_max: the corpus is never key-shuffled",
     "text_blocklist_filter": "array_intersect vs a literal list: ONE row-local projection, zero Exchange",
     "text_repetition_scrub": "run-length token dedup + md5 of the scrubbed reassembly: ONE row-local projection, zero Exchange",
-    "vec_dedup_semantic_incremental": "banded hyperplane-LSH bucket equi-joins + true-cosine verify; state probe = shard-pruned scan semi-joined against broadcast bucket keys, no BNLJ",
+    "vec_dedup_semantic_incremental": "banded hyperplane-LSH bucket equi-joins + true-cosine verify; state probe = one snapshot read semi-joined against broadcast bucket keys, no BNLJ",
     "multimodal_video_frames": "two narrow Arrow kernels (AVI encode, chunk-walk decode + frame explode); only the tiny-input round-robin fan-out, no KEY shuffle",
     "multimodal_video_neardup": "per-frame dHash kernel -> pigeonhole band equi-join -> keeper hash aggs; no all-pairs, no BNLJ",
     "multimodal_video_keyframes": "two narrow Arrow kernels (AVI encode, intra-payload temporal delta); only the tiny-input round-robin fan-out, no KEY shuffle",
@@ -234,13 +234,13 @@ HEADLINE_NOTES = {
     "text_dsir_importance": "one tokenize+explode pass -> ONE bucket hash agg carrying raw AND target counts together; totals = 1-row agg over the persisted bucket table via broadcast crossJoin; log-ratio table bounded at 65536 rows -> TRUE broadcast join back; corpus shuffles only on doc_id",
     "sample_dsir_token_budget": "DSIR scorer plan + select_token_budget's two-level control plane for the running total — no partition-less SUM OVER (ORDER BY score) global sort",
     "text_perplexity_kneser_ney": "row-local bigram extraction; ONE persisted bigram table feeds count join, context agg, continuation agg AND the 1-row totals broadcast crossJoin (no re-tokenize per statistic); unhinted LM joins (AQE broadcasts while small); per-doc agg is the only corpus shuffle",
-    "url_dedup_canonical_incremental": "two-batch recrawl loop: row-local canonicalization, state probe = broadcast fingerprint semi-join (state parquet never shuffles), fold-in = O(batch) sharded append; normalize=False keeps canonical paths case-sensitive",
-    "stream_url_dedup_canonical": "foreachBatch twin of the URL recrawl loop: per-micro-batch row-local canonicalize -> min-id collapse -> broadcast fingerprint state probe -> O(batch) land + fold-in; checkpoint-restarted second drain proves catch-up",
+    "url_dedup_canonical_incremental": "two-batch recrawl loop: row-local canonicalization, state probe = broadcast fingerprint semi-join (state parquet never shuffles), fold-in = one O(batch) fragment under the batch id; normalize=False keeps canonical paths case-sensitive",
+    "stream_url_dedup_canonical": "foreachBatch twin of the URL recrawl loop: per-micro-batch row-local canonicalize -> min-id collapse -> broadcast fingerprint state probe -> ONE commit of the corpus rows AND their hashes; checkpoint-restarted second drain proves catch-up",
     # r14 additions
-    "text_dsir_importance_incremental": "bucket-count deltas folded per batch (dynamic partition overwrite, O(batch)); totals re-derived from state by per-bucket addition; log-ratio rebuilt bounded -> broadcast join to the NEW batch only — the landed corpus is never re-read",
-    "stream_dsir_importance": "foreachBatch count-state ingest: per micro-batch ONE bucket agg -> partition-overwrite fold under the stream's batch_id (write-OPTION dynamic mode — session conf does not reach the foreachBatch clone); checkpoint-restarted second drain continues the id sequence",
+    "text_dsir_importance_incremental": "bucket-count deltas folded per batch (one fragment per batch id, O(batch); a replayed id is skipped); totals re-derived from state by per-bucket addition; log-ratio rebuilt bounded -> broadcast join to the NEW batch only — the landed corpus is never re-read",
+    "stream_dsir_importance": "foreachBatch count-state ingest: per micro-batch ONE bucket agg -> one-fragment fold under the stream's batch_id (a replayed id is skipped); checkpoint-restarted second drain continues the id sequence",
     "text_perplexity_modified_kn": "row-local trigram extraction; ONE persisted trigram table feeds count join, context agg, the continuation table (also persisted, feeding ITS context agg + histogram + unigram-continuation base) and both counts-of-counts histograms; discount triples ride 1-row broadcast crossJoins; per-doc agg is the only corpus shuffle",
-    "text_perplexity_modified_kn_incremental": "trigram-count deltas folded per batch (n_files=16 — vocab-scaled deltas must not one-task the write); totals by per-key addition feed the IDENTICAL scorer plan as the one-shot form",
+    "text_perplexity_modified_kn_incremental": "trigram-count deltas folded per batch (one fragment per batch id, written by one task); totals by per-key addition feed the IDENTICAL scorer plan as the one-shot form",
     "pipeline_cluster_balanced_select": "portable-kmeans training loop (K-row centroid broadcasts, narrow re-center aggs); assignment = K-row broadcast map pass; per-cluster top-Q on the grouped control plane ((centroid_id, token-bin) windows, bounded offsets) — never a bare K=8-partition window",
 }
 
