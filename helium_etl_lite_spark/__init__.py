@@ -18,7 +18,8 @@ Layout:
   etl/          reference-pipeline parity: transforms, modes, the
                 follower and its snapshot sink, backfill (SURVEY §2.1)
   sources/      the follower's block sources (landed files, JSON-RPC)
-  streaming/    foreachBatch consumers behind the stream_* queries
+  streaming/    change-feed followers and foreachBatch consumers behind
+                the stream_* queries
 """
 
 __version__ = "0.1.0"

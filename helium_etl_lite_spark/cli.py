@@ -23,9 +23,10 @@ Commands:
             older-snapshot readers until vacuum runs
 
 status, compact and vacuum read only out_dir, so they serve every
-snapshot store: the follower's, and each batch-id store (a streaming
-consumer's store or an incremental operator's state, etl/snapshot.py),
-whose cursor is its last batch id.
+snapshot store: the follower's, and each batch-id store
+(etl/snapshot.py): a change-feed consumer's store, whose cursor is the
+source snapshot version it has applied, or an incremental operator's
+state, whose cursor is its last batch id.
 
 Config (TOML, reference settings.toml keys where they translate):
   node_addr                 live blockchain-node JSON-RPC endpoint
@@ -375,7 +376,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--config", help="TOML config path")
     p.add_argument("-e", "--execute", help="SQL statement (sql command)")
     p.add_argument(
-        "--at-version", type=int, default=None,
+        "--at-version", type=_positive_int, default=None,
         help="sql: time-travel the store to this snapshot version",
     )
     p.add_argument(

@@ -485,6 +485,9 @@ def read_changes(
     fragments per commit, so the feed reads a few directories
     regardless of table size.
 
+    `v_from=0` is the empty store before the first commit: the feed is
+    the whole of `v_to` as inserts (a new consumer's bootstrap).
+
     Returns None when the table exists in neither manifest; an empty
     (schema-stable) DataFrame when nothing changed. Raises on missing
     manifests or v_from > v_to.
@@ -494,7 +497,7 @@ def read_changes(
         v_to = store.current_version()
         if v_to is None:
             raise ValueError(f"no snapshot store at {root}")
-    m_from = store.manifest(v_from)
+    m_from = store.manifest(v_from) if v_from else {"tables": {}}
     m_to = store.manifest(v_to)
     if m_from is None or m_to is None:
         missing = v_from if m_from is None else v_to

@@ -1341,9 +1341,9 @@ def pipeline_incremental_curation(spark, sf_dir):
     claim (view_incremental_join_refresh) lifted to the whole curation
     pipeline. Each cycle is streaming/curation_stream.py's
     curate_changes_batch — the apply stream_incremental_curation runs
-    per microbatch — so the curated rows and the dedup state commit
-    together in one version of one batch-id store, and a replayed
-    cycle is skipped. Scale: feed is ingest-bounded, the dedup state
+    per follow_changes call — so the curated rows and the dedup state
+    commit together in one version of one batch-id store, and a
+    replayed cycle is skipped. Scale: feed is ingest-bounded, the dedup state
     never shuffles (broadcast fingerprint probe, operators/dedup.py
     dedup_filter_new), the gate is row-local codegen, and the curated
     store is append-only."""
@@ -1383,26 +1383,27 @@ def pipeline_incremental_curation(spark, sf_dir):
 
 @query("stream_incremental_curation", oracle=_INCR_CURATION_ORACLE)
 def stream_incremental_curation(spark, sf_dir):
-    """The incremental curation loop in TRUE STREAMING form — the
+    """The incremental curation loop as a change-feed FOLLOWER — the
     twin of pipeline_incremental_curation above with the SAME
-    fixed-point oracle, but the cycles run through the real
-    Structured Streaming path: snapshot_changes source (offset =
-    snapshot version) -> foreachBatch ->
-    streaming/curation_stream.py's versioned curate-and-publish, with
-    TWO availableNow drains (bootstrap after commit 1, incremental
-    after commit 2) RESTARTING from the checkpoint in between — the
-    kill/catch-up cycle. Exactly-once: each published curated version
-    carries the data AND the dedup state (its state table), so a
-    replayed batch_id skips wholesale — no split-store crash window
-    (curation_stream.py docstring). The identical oracle hash-match
-    across the batch and streaming forms proves both execution models
-    land exactly the from-scratch fixed point — the strongest
-    convergence statement in the registry, mirroring the
-    sink_snapshot_changes_apply / stream_cdc_mirror pairing."""
+    fixed-point oracle, but the cycles run through the consumer loop:
+    streaming/mirror.py follow_changes reads the feed from the source
+    version the curated store last applied (its manifest cursor) and
+    hands it to streaming/curation_stream.py's versioned
+    curate-and-publish. It runs TWICE (bootstrap after commit 1,
+    incremental after commit 2), the second call resuming from the
+    store's cursor alone — the kill/catch-up cycle. Exactly-once: each
+    published curated version carries the data AND the dedup state
+    (its state table) AND the source version, so a replayed batch
+    skips wholesale — no split-store crash window (curation_stream.py
+    docstring). The identical oracle hash-match across the batch loop
+    and the follower proves both land exactly the from-scratch fixed
+    point — the strongest convergence statement in the registry,
+    mirroring the sink_snapshot_changes_apply / stream_cdc_mirror
+    pairing."""
     from ..etl.snapshot import commit_batch_atomic, read_snapshot
     from ..scratch import scratch_dir
     from ..streaming.curation_stream import CURATED, curate_changes_batch
-    from ..streaming.mirror import start_changes_stream
+    from ..streaming.mirror import follow_changes
 
     t = Tables(spark, sf_dir)
     docs = t.documents.select(
@@ -1410,7 +1411,6 @@ def stream_incremental_curation(spark, sf_dir):
     )
     root = scratch_dir("stream_incr_curation_src")
     curated = scratch_dir("stream_incr_curation_out")
-    ckpt = scratch_dir("stream_incr_curation_ckpt")
     hi = int(docs.agg(F.max("block")).first()[0])
 
     b1 = docs.where(F.col("doc_id") % 3 != 0)
@@ -1418,19 +1418,13 @@ def stream_incremental_curation(spark, sf_dir):
         spark, root, {"docs": b1}, lo=0, hi=hi, height=hi,
         first_block=0, heights=b1.select("block"),
     )
-    q1 = start_changes_stream(
-        spark, root, "docs", curated, ckpt, curate_changes_batch
-    )
-    q1.awaitTermination(300)
+    follow_changes(spark, root, "docs", curated, curate_changes_batch)
 
     commit_batch_atomic(
         spark, root, {"docs": docs}, lo=0, hi=hi, height=hi,
         first_block=0, heights=docs.select("block"),
     )
-    q2 = start_changes_stream(
-        spark, root, "docs", curated, ckpt, curate_changes_batch
-    )
-    q2.awaitTermination(300)
+    follow_changes(spark, root, "docs", curated, curate_changes_batch)
 
     return read_snapshot(spark, curated, CURATED).select("doc_id", "lang").orderBy(
         "doc_id"

@@ -4548,24 +4548,24 @@ def text_dedup_substring_anchor_incremental(spark, sf_dir):
     """,
 )
 def stream_substring_dedup(spark, sf_dir):
-    # The substring-dedup ingest loop in TRUE STREAMING form — the
+    # The substring-dedup ingest loop as a change-feed FOLLOWER — the
     # triplet-closing twin of text_dedup_substring_anchor_incremental
     # (batch state loop) and text_dedup_substring_anchor (one-shot):
-    # batch 1 (even doc_ids) commits to a snapshot table and the
-    # change-feed consumer (streaming/curation_stream.py
-    # substring_changes_batch) folds it; batch 2 (odds) commits
-    # and a SECOND stream RESTARTED from the checkpoint drains the
-    # delta — the kill/catch-up cycle. Each apply publishes its
-    # deduped data AND its span hashes in ONE snapshot commit (no
-    # split-store crash window). The oracle states the two-phase rule
-    # over the union (evens dedup among themselves in (doc_id, p)
-    # order; odds drop against even spans or earlier odds), so the hash
-    # match proves the streaming execution lands exactly the two-batch
-    # semantics.
+    # batch 1 (even doc_ids) commits to a snapshot table and
+    # streaming/mirror.py follow_changes hands its feed to
+    # streaming/curation_stream.py substring_changes_batch; batch 2
+    # (odds) commits and a SECOND call resumes from the output store's
+    # cursor (the source version it applied) and folds the delta — the
+    # kill/catch-up cycle. Each apply publishes its deduped data AND
+    # its span hashes in ONE snapshot commit (no split-store crash
+    # window). The oracle states the two-phase rule over the union
+    # (evens dedup among themselves in (doc_id, p) order; odds drop
+    # against even spans or earlier odds), so the hash match proves
+    # the follower lands exactly the two-batch semantics.
     from ..etl.snapshot import commit_batch_atomic, read_snapshot
     from ..scratch import scratch_dir
     from ..streaming.curation_stream import substring_changes_batch
-    from ..streaming.mirror import start_changes_stream
+    from ..streaming.mirror import follow_changes
 
     t = Tables(spark, sf_dir)
     docs = t.documents.select(
@@ -4573,7 +4573,6 @@ def stream_substring_dedup(spark, sf_dir):
     )
     root = scratch_dir("stream_substr_src")
     out = scratch_dir("stream_substr_out")
-    ckpt = scratch_dir("stream_substr_ckpt")
     hi = int(docs.agg(F.max("block")).first()[0])
 
     b1 = docs.where(F.col("doc_id") % 2 == 0)
@@ -4581,19 +4580,13 @@ def stream_substring_dedup(spark, sf_dir):
         spark, root, {"docs": b1}, lo=0, hi=hi, height=hi,
         first_block=0, heights=b1.select("block"),
     )
-    q1 = start_changes_stream(
-        spark, root, "docs", out, ckpt, substring_changes_batch
-    )
-    q1.awaitTermination(300)
+    follow_changes(spark, root, "docs", out, substring_changes_batch)
 
     commit_batch_atomic(
         spark, root, {"docs": docs}, lo=0, hi=hi, height=hi,
         first_block=0, heights=docs.select("block"),
     )
-    q2 = start_changes_stream(
-        spark, root, "docs", out, ckpt, substring_changes_batch
-    )
-    q2.awaitTermination(300)
+    follow_changes(spark, root, "docs", out, substring_changes_batch)
 
     return (
         read_snapshot(spark, out, "data")

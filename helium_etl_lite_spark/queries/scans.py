@@ -594,30 +594,28 @@ def sink_snapshot_changes_updates(spark, sf_dir):
     """,
 )
 def stream_cdc_mirror(spark, sf_dir):
-    """The STREAMING consumer of the change feed, driver-checked end to
+    """The FOLLOWING consumer of the change feed, driver-checked end to
     end: same two-commit fixture as sink_snapshot_changes_apply, but
-    the apply runs through the real Structured Streaming path —
-    snapshot_changes source (offset = snapshot version) → foreachBatch
-    → streaming/mirror.py's idempotent versioned apply — with TWO
-    separate availableNow drains (bootstrap after commit 1, incremental
-    after commit 2, restarting from the checkpoint in between, i.e. the
-    kill/catch-up cycle). The oracle states v2's content INDEPENDENTLY
-    from `events`, so a consumer that double-applied a replayed batch,
-    missed a delta, or mis-folded deletes hash-mismatches. The batch
-    twin proves feed correctness; this proves the CONSUMER — together
-    they close the subscribe-apply contract in both execution models."""
+    the apply runs through the consumer loop — streaming/mirror.py
+    follow_changes reads the feed from the source version the mirror
+    store last applied (its manifest cursor) and hands it to the
+    idempotent versioned apply. It runs TWICE: a bootstrap after
+    commit 1, then, after commit 2, a restart that resumes from the
+    store's cursor alone (the kill/catch-up cycle). The oracle states
+    v2's content INDEPENDENTLY from `events`, so a consumer that
+    double-applied a replayed batch, missed a delta, or mis-folded
+    deletes hash-mismatches. The batch twin proves feed correctness;
+    this proves the CONSUMER — together they close the subscribe-apply
+    contract."""
     from ..streaming import mirror
 
     root = scratch_dir("stream_cdc_mirror_src")
     mdir = scratch_dir("stream_cdc_mirror_dst")
-    ckpt = scratch_dir("stream_cdc_mirror_ckpt")
     ev, hi, r5 = _cdc_fixture_commit1(spark, sf_dir, root)
     apply = mirror.apply_changes_batch
-    q1 = mirror.start_changes_stream(spark, root, "rewards", mdir, ckpt, apply)
-    q1.awaitTermination(300)
+    mirror.follow_changes(spark, root, "rewards", mdir, apply)
     _cdc_fixture_commit2(spark, ev, root, hi, r5)
-    q2 = mirror.start_changes_stream(spark, root, "rewards", mdir, ckpt, apply)
-    q2.awaitTermination(300)
+    mirror.follow_changes(spark, root, "rewards", mdir, apply)
     return mirror.read_mirror(spark, mdir).select("block", "value")
 
 
@@ -632,29 +630,27 @@ def stream_cdc_mirror(spark, sf_dir):
     """,
 )
 def stream_cdc_mirror_keyed(spark, sf_dir):
-    """The KEYED (upsert-by-key) streaming CDC consumer — third
-    consumer proving the same v2 fixed point as stream_cdc_mirror and
+    """The KEYED (upsert-by-key) CDC consumer — third consumer proving
+    the same v2 fixed point as stream_cdc_mirror and
     sink_snapshot_changes_apply, through a genuinely different apply:
     every block the feed touches is replaced wholesale (the snapshot
     commit claims the feed's blocks) instead of multiset exceptAll on
-    row images. Same two-commit fixture, two availableNow drains with a
-    checkpoint restart between (the kill/catch-up cycle), same
-    independent oracle. Why it earns a row: keyed apply reconverges to
-    the source even when the mirror's row images drifted (multiset
-    apply would strand the stale image AND duplicate the key —
-    tests/test_sources_streaming.py pins exactly that divergence)."""
+    row images. Same two-commit fixture, two follow_changes calls with
+    a restart from the store's cursor between (the kill/catch-up
+    cycle), same independent oracle. Why it earns a row: keyed apply
+    reconverges to the source even when the mirror's row images
+    drifted (multiset apply would strand the stale image AND duplicate
+    the key — tests/test_sources_streaming.py pins exactly that
+    divergence)."""
     from ..streaming import mirror
 
     root = scratch_dir("stream_cdc_keyed_src")
     mdir = scratch_dir("stream_cdc_keyed_dst")
-    ckpt = scratch_dir("stream_cdc_keyed_ckpt")
     ev, hi, r5 = _cdc_fixture_commit1(spark, sf_dir, root)
     apply = mirror.apply_changes_batch_keyed
-    q1 = mirror.start_changes_stream(spark, root, "rewards", mdir, ckpt, apply)
-    q1.awaitTermination(300)
+    mirror.follow_changes(spark, root, "rewards", mdir, apply)
     _cdc_fixture_commit2(spark, ev, root, hi, r5)
-    q2 = mirror.start_changes_stream(spark, root, "rewards", mdir, ckpt, apply)
-    q2.awaitTermination(300)
+    mirror.follow_changes(spark, root, "rewards", mdir, apply)
     return mirror.read_mirror(spark, mdir).select("block", "value")
 
 

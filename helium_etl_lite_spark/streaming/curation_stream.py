@@ -1,16 +1,17 @@
-"""Streaming incremental curation: the STREAMING twin of
-pipeline_incremental_curation (queries/curation.py) — subscribe to a
-snapshot table's change feed, curate each microbatch (gopher gate ->
-exact dedup against everything curated so far -> publish), survive
-kill/restart without double-landing or losing a batch. The batch loop
-runs the same apply, curate_changes_batch, over read_changes feeds.
+"""Incremental curation as a change-feed consumer: the following twin
+of pipeline_incremental_curation (queries/curation.py) — catch up with
+a snapshot table's change feed (streaming/mirror.py follow_changes),
+curate each batch (gopher gate -> exact dedup against everything
+curated so far -> publish), survive kill/restart without
+double-landing or losing a batch. The batch loop runs the same apply,
+curate_changes_batch, over read_changes feeds.
 
 Exactly-once: the curated rows and the dedup state are two tables of
 ONE batch-id store (etl/snapshot.py) — `curated` (doc_id, lang) and
 the state table (text_hash) that operators/dedup.py dedup_filter_new
 probes — so one commit publishes the data, the dedup state and the
-batch id (the manifest's cursor) together, and a replayed batch
-(stable batch_id, the standard foreachBatch recipe) skips wholesale.
+batch id (the source version applied, the manifest's cursor) together,
+and a replayed batch (the same source version) skips wholesale.
 Both tables are APPEND-ONLY: each row carries its batch id in the
 `block` column the store keys on, so an apply appends one fragment per
 table holding only the batch's fresh rows and reads nothing back;
@@ -32,7 +33,7 @@ CURATED = "curated"
 
 
 def curate_changes_batch(batch_df: DataFrame, batch_id: int, curated_dir: str) -> bool:
-    """Idempotently curate one change-feed microbatch into the curated
+    """Idempotently curate one change-feed batch into the curated
     store. Returns False on replay (batch_id already published) or an
     empty/no-op batch. An apply appends only the batch's FRESH rows."""
     if is_applied(curated_dir, batch_id) or batch_df.isEmpty():
@@ -53,9 +54,8 @@ def curate_changes_batch(batch_df: DataFrame, batch_id: int, curated_dir: str) -
     fresh = dedup_filter_new(spark, gated, curated_dir).localCheckpoint(eager=True)
     if fresh.isEmpty():
         # content no-op (everything gated out or already curated):
-        # don't publish an identical version — a replay re-derives the
-        # same no-op, so skipping keeps the version history meaningful
-        # (mirror.py's empty-batch contract).
+        # publish no data (mirror.py's empty-batch contract);
+        # follow_changes moves the cursor alone.
         return False
     block = F.lit(batch_id).cast("long")
     commit_batch(
@@ -70,12 +70,12 @@ def curate_changes_batch(batch_df: DataFrame, batch_id: int, curated_dir: str) -
 
 
 # ---------------------------------------------------------------------------
-# Streaming substring dedup — the anchored-span ingest loop as a TRUE
-# Structured Streaming consumer of the snapshot change feed.
+# Substring dedup — the anchored-span ingest loop as a consumer of the
+# snapshot change feed.
 
 
 def substring_changes_batch(batch_df: DataFrame, batch_id: int, out_dir: str) -> bool:
-    """Idempotently fold one change-feed microbatch through the
+    """Idempotently fold one change-feed batch through the
     substring-dedup ingest loop into a batch-id store with two tables:
     `data` (the deduped documents) and the span-hash state that
     operators/dedup.py substring_anchor_dedup_incremental probes. One

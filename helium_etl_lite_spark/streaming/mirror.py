@@ -1,22 +1,24 @@
-"""Streaming CDC consumer: maintain a downstream MIRROR of a snapshot
-table from its change feed, and the subscription every change-feed
+"""Change-feed consumers: maintain a downstream MIRROR of a snapshot
+table from its change feed, and the catch-up loop every change-feed
 consumer shares (the curation consumers in curation_stream.py use it
 too).
 
 The batch query `sink_snapshot_changes_apply` proves v1 + feed == v2;
-this is the same contract in streaming form: a foreachBatch consumer
-subscribes to the `snapshot_changes` source (sources/python_datasource.py
-— the snapshot version IS the offset), applies each microbatch's
-inserts/deletes to a local mirror, and survives kill/restart without
-double-applying.
+this is the same contract run as a follower: follow_changes reads the
+source's change feed (etl/snapshot.py read_changes) from the source
+version the consumer store last applied to the source's CURRENT, hands
+it to an apply, and survives kill/restart without double-applying.
 
 Every consumer store is a batch-id store (etl/snapshot.py), written
 through commit_batch: block-range fragments, a manifest, one durable
-CURRENT swap. The manifest's cursor (`height`) holds the last applied
-batch id, so the data and the batch id publish in one rename.
-Structured Streaming replays at-least-once with a STABLE batch_id, so a
-batch id at or below the cursor is a replay and is skipped; an empty
-batch publishes nothing.
+CURRENT swap. The manifest's cursor (`height`) holds the SOURCE
+SNAPSHOT VERSION the store has applied through, so the data and the
+position publish in one rename, and the store is the consumer's only
+state (the reference's follower_info row, kept in the same transaction
+as the rows). An apply whose batch id is at or below the cursor is a
+replay and is skipped. A store whose cursor counts something else
+(micro-batches of an earlier streaming consumer) is rebuilt by
+following into a new directory.
 
 The mirror's claim is the batch's blocks (both applies key on `block`):
 - the keyed apply replaces every claimed block with the batch's
@@ -39,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..etl.pipeline import CursorStore
 from ..etl.snapshot import (
     RANGE_SIZE,
     SnapshotStore,
@@ -46,6 +49,7 @@ from ..etl.snapshot import (
     commit_batch,
     fragments,
     is_applied,
+    read_changes,
     read_snapshot,
 )
 
@@ -79,7 +83,7 @@ def _split(batch_df: DataFrame, insert_types: tuple[str, ...]):
 
 
 def apply_changes_batch(batch_df: DataFrame, batch_id: int, mirror_dir: str) -> bool:
-    """Idempotently fold one change-feed microbatch into the mirror.
+    """Idempotently fold one change-feed batch into the mirror.
 
     Returns False (no-op) when `batch_id` was already applied — the
     restart-replay case — or the batch is empty; True after publishing
@@ -143,31 +147,37 @@ def apply_changes_batch_keyed(
     return True
 
 
-def start_changes_stream(
-    spark: SparkSession,
-    root: str,
-    table: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    apply,
-):
-    """Subscribe a consumer to a snapshot table's change feed: each
-    microbatch (one per snapshot-version delta; the source's offset is
-    the version number) goes to `apply(batch_df, batch_id, store_dir)`.
-    The query drains the pending commits, then stops (an availableNow
-    trigger); a later call resumes from the checkpoint."""
-    from ..sources.python_datasource import register_snapshot_changes
+def follow_changes(
+    spark: SparkSession, root: str, table: str, store_dir: str, apply
+) -> bool:
+    """Catch the consumer store at `store_dir` up with the change feed of
+    `table` in the snapshot store at `root`: one
+    `apply(feed, version, store_dir)` over every change between the
+    source version the store has applied through (its cursor; 0 for a
+    new store, so the first call bootstraps the whole table as inserts)
+    and the source's CURRENT `version`. A feed the apply publishes
+    nothing for (empty, or no rows left after its own filtering) still
+    moves the cursor, through a manifest-only publish: a later call must
+    not start from a source version that compaction superseded and
+    vacuum deleted. The feed's rows carry the source's data columns
+    only: its `block_range` directory key is dropped, because the
+    consumer store keys its own ranges and a multiset delete matches
+    rows on their data.
 
-    register_snapshot_changes(spark)
-    feed = (
-        spark.readStream.format("snapshot_changes")
-        .option("root", root)
-        .option("table", table)
-        .load()
-    )
-    return (
-        feed.writeStream.foreachBatch(lambda df, bid: apply(df, bid, store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    Returns False when the store had already caught up, True after
+    moving its cursor. Raises when the store's cursor is ahead of the
+    source: it follows another source, or the source was rebuilt."""
+    cursor = CursorStore(store_dir).read()
+    applied = 0 if cursor is None else cursor[0]
+    version = SnapshotStore(root).current_version() or 0
+    if applied == version:
+        return False
+    if applied > version:
+        raise ValueError(
+            f"{store_dir} has applied source version {applied}, but {root} "
+            f"is at version {version}; follow into a new directory"
+        )
+    feed = read_changes(spark, root, table, applied, version)
+    if feed is None or not apply(feed.drop("block_range"), version, store_dir):
+        CursorStore(store_dir).write(version, 0)
+    return True

@@ -258,10 +258,15 @@ def test_vacuum_keeps_the_live_snapshot(tmp_path, capsys, keep):
     assert _tree(out) == before
 
 
-@pytest.mark.parametrize("command", ["compact"])
-def test_target_mb_must_be_positive(tmp_path, monkeypatch, capsys, command):
-    # --target-mb 0 divides by zero when the file count is planned;
-    # argparse refuses it before any Spark session starts.
+@pytest.mark.parametrize(
+    "command,flag",
+    [("compact", "--target-mb"), ("sql", "--at-version")],
+    ids=["compact", "sql"],
+)
+def test_target_mb_must_be_positive(tmp_path, monkeypatch, capsys, command, flag):
+    # --target-mb 0 divides by zero when the file count is planned, and
+    # manifest versions start at 1, so --at-version 0 names nothing;
+    # argparse refuses either before any Spark session starts.
     def no_spark(*args, **kwargs):
         raise AssertionError("a rejected argument must not start Spark")
 
@@ -270,7 +275,7 @@ def test_target_mb_must_be_positive(tmp_path, monkeypatch, capsys, command):
     argv = [command, "--config", cfg]
     for bad in ("0", "-3", "ten"):
         with pytest.raises(SystemExit) as exc:
-            cli.main(argv + ["--target-mb", bad])
+            cli.main(argv + [flag, bad])
         assert exc.value.code == 2
         assert "not a positive integer" in capsys.readouterr().err
 

@@ -530,6 +530,41 @@ def test_read_changes_empty_and_error_cases(spark, tmp_path):
         read_changes(spark, root, "t", 2, 1)
 
 
+def test_read_changes_from_version_zero_is_the_snapshot_as_inserts(spark, tmp_path):
+    # Version 0 is the empty store before the first commit: the feed
+    # from it is the whole table at v_to, every row an insert — a new
+    # consumer's bootstrap — and register_views(changes_since=0) serves
+    # it as <table>_changes.
+    from helium_etl_lite_spark import serving
+    from helium_etl_lite_spark.etl.snapshot import read_changes
+
+    root = str(tmp_path / "snap")
+    b1 = spark.range(0, 30).select(
+        F.col("id").alias("block"), (F.col("id") % 7 * 1.0).alias("amount")
+    )
+    commit_batch_atomic(
+        spark, root, {"rewards": b1}, 0, 29, 29, 0, heights=b1.select("block")
+    )
+    claimed = spark.createDataFrame([(5,), (6,), (40,)], "block long")
+    b2 = spark.createDataFrame([(5, 99.0), (40, 1.0)], "block long, amount double")
+    commit_batch_atomic(spark, root, {"rewards": b2}, 0, 40, 40, 0, heights=claimed)
+
+    def rows(df):
+        return sorted((r["block"], r["amount"]) for r in df.collect())
+
+    for v in (1, 2):
+        feed = read_changes(spark, root, "rewards", 0, v)
+        assert {r["_change_type"] for r in feed.collect()} == {"insert"}
+        want = read_snapshot(spark, root, "rewards", version=v)
+        assert rows(feed) == rows(want)
+    views = serving.register_views(spark, root, changes_since=0)
+    assert rows(views["rewards_changes"]) == rows(views["rewards"])
+    served = spark.sql(
+        "SELECT DISTINCT _change_type FROM rewards_changes"
+    ).collect()
+    assert [r["_change_type"] for r in served] == ["insert"]
+
+
 def test_publish_replay_of_old_version_never_rolls_current_back(spark, tmp_path):
     # Review find: an identical-content replay of manifest N arriving
     # AFTER the store advanced to N+1 must be a no-op — not rewind

@@ -138,7 +138,7 @@ HEADLINE_NOTES = {
     "text_fingerprint_winnow": "row-local gram keys; ONE doc_id Exchange shared by rolling-min window and final agg",
     "text_dedup_winnow": "fingerprint sets equi-join on fp_hash + pair hash agg; no cross product",
     "agg_bloom_filter_probe": "bloom build = explode(3)+bit_or two-phase agg (8 rows out); probe joins the BROADCAST 8-word sketch; counts are 1-row aggs",
-    "stream_cdc_mirror": "mirror read-back after two availableNow drains is a bare parquet scan of the manifest's fragments — the apply work happened inside foreachBatch, idempotent by the manifest's batch-id cursor",
+    "stream_cdc_mirror": "mirror read-back after two follow_changes calls is a bare parquet scan of the manifest's fragments — the apply work happened inside the calls, idempotent by the manifest's source-version cursor",
     "text_dedup_minhash_portable": "same linear LSH dataflow as production (row-local sigs, (band,bucket) window min, per-doc min, verify-keeper-only) with portable hashes — no all-pairs join",
     "agg_hll_sketch_portable": "register build = two-phase MAX hash agg on 64 buckets (map-side combinable); split/merge and one-pass branches both end in 1-row checksum aggs",
     "text_dedup_simhash_portable": "token explode + 32 conditional sums in ONE two-phase agg; 4-row band explode + two MIN aggs + 1:1 verify join — no pair join anywhere",
@@ -168,7 +168,7 @@ HEADLINE_NOTES = {
     "vec_ann_pq_portable": "4 subspace codebooks broadcast; codes = N*4 narrow rows; ADC = broadcast LUT join + partial-aggregable (q,vec) SUM — no cross join",
     "graph_pagerank_portable": "per round ONE src equi-join + ONE dst hash agg on BIGINT mass — the float twin's plan economics with zero FP anywhere",
     "vec_ann_ivfpq_portable": "coarse+PQ codebooks broadcast; ADC candidates from the (list,m,code) equi-join (probed fraction only); rerank joins a 50-id bounded shortlist",
-    "stream_incremental_curation": "foreachBatch over the snapshot_changes source; per batch: row-local gate + dedup_filter_new's broadcast-fingerprint probe vs the store's state table + ONE atomic version publish carrying data AND dedup state",
+    "stream_incremental_curation": "follow_changes over read_changes; per call: row-local gate + dedup_filter_new's broadcast-fingerprint probe vs the store's state table + ONE atomic version publish carrying data, dedup state AND the source version; the read-back is a bare parquet scan",
     "agg_quantile_sketch_grouped": "two map-side-combinable hash aggs (per-group bounds, (group,bin) counts); windows partition per group over <=32-row bin tables — bounded control plane",
     "join_spatial_grid": "radius predicate rides the (cx, cy) cell equi-join (probe side explodes 3x3 neighborhood, build side home-cell only — pairs meet exactly once, no distinct); integer residual filter; no BNLJ/Cartesian",
     "ts_ewma_portable": "recurrence folds row-local inside aggregate() after ONE ObjectHashAggregate collect per user — no Python node, no extra shuffle; the window-inexpressible dependency class",
@@ -199,7 +199,7 @@ HEADLINE_NOTES = {
     "text_dedup_substring_anchor_incremental": "batch span table checkpointed once; one snapshot read of the state semi-joined against the BROADCAST batch-hash probe (state never shuffles); within-batch window on the span hash; token filter row-local",
     "agg_kmv_theta_sketch_portable": "one scan feeding both set filters, one (sid, hash) distinct, per-set k-smallest via ranked window with MAP-SIDE WindowGroupLimit pruning; union/intersection algebra on two 64-element arrays in a 1-row broadcast-scalar frame",
     "sample_weighted_reservoir": "one scan, row-local E-S key, TakeOrderedAndProject top-50 (never a global sort); rank window on the bounded result",
-    "stream_substring_dedup": "foreachBatch over the snapshot_changes source; per batch: span-table build + broadcast probe vs the published span set + ONE atomic version publish carrying data AND spans",
+    "stream_substring_dedup": "follow_changes over read_changes; per call: span-table build + broadcast probe vs the published span set + ONE atomic version publish carrying data, spans AND the source version; the read-back is a bare parquet scan",
     "agg_kmv_theta_anotb_portable": "same sketch build as the union/intersection query (map-side-pruned per-set k-smallest); difference algebra = one list_filter over two 64-element arrays in a 1-row frame",
     # r10 additions
     "text_quality_classifier_train": "six gradient epochs: per-doc logit agg + per-bucket gradient agg per epoch, weight table BROADCAST both directions; feature table checkpointed once (cached design matrix) — no SinglePartition, no driver-side matrix",
@@ -208,7 +208,7 @@ HEADLINE_NOTES = {
     "sink_snapshot_changes_updates": "manifest-pruned O(churn) diff; update pairing = one intersect + four semi/anti joins on the bounded diff keys",
     "dedup_cluster_components_star": "per phase: groupBy-min + join-back (large-star), reorient + groupBy-min + join-back (small-star); lineage truncated per phase; NO broadcast in the loop (the min-label twin's 10x OOM)",
     "multimodal_audio_spectrogram": "two narrow Arrow kernels (encode WAV, decode+integer DFT); only exchange is the r11 tiny-input round-robin fan-out (absent at production split counts) — no KEY shuffle",
-    "stream_cdc_mirror_keyed": "foreachBatch keyed apply: the feed's blocks are the snapshot commit's claim, replaced by its insert/postimage rows; the read-back is a bare parquet scan of the manifest's fragments",
+    "stream_cdc_mirror_keyed": "follow_changes keyed apply: the feed's blocks are the snapshot commit's claim, replaced by its insert/postimage rows; the read-back is a bare parquet scan of the manifest's fragments",
     "text_tokenize_unigram_portable": "explode + distinct to the bounded word table, narrow mapInPandas integer Viterbi, broadcast join back, one hash agg",
     "text_quality_classifier_eval": "trainer plan + one pushed doc_id%10 filter on the gradient branches; held-out confusion = single agg over the scored complement",
     "multimodal_audio_fingerprint": "narrow Arrow kernel (decode + integer DFT + sign-delta bits), no KEY shuffle (plus the r11 tiny-input round-robin fan-out, absent at production split counts)",
