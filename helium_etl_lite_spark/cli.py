@@ -76,6 +76,7 @@ from .etl.schemas import (
     TRANSACTIONS_OUT_SCHEMA,
     TXN_SCHEMA,
 )
+from .etl.snapshot import RANGE_SIZE
 from .session import get_spark
 from .sources.block_source import HttpRpcClient, LandedBlockSource, RpcBlockSource
 
@@ -118,6 +119,14 @@ def _positive_int(text: str) -> int:
     return int(text)
 
 
+def _non_negative_int(text: str) -> int:
+    """argparse type for a snapshot version where 0 names the empty
+    store before the first commit."""
+    if not text.isdecimal():
+        raise argparse.ArgumentTypeError(f"{text!r} is not a non-negative integer")
+    return int(text)
+
+
 def setup_logger(cfg) -> logging.Logger:
     """File logger when [log].log_dir is configured (the reference's
     flexi_logger-to-file setup, src/main.rs:70-89); stderr otherwise."""
@@ -152,7 +161,7 @@ def _follower_config(cfg) -> FollowerConfig:
         backfill=bool(cfg.get("backfill", False)),
         out_dir=str(cfg["out_dir"]),
         max_blocks_per_batch=cfg.get("max_blocks_per_batch"),
-        block_range_size=int(cfg.get("block_range_size", 1000)),
+        block_range_size=int(cfg.get("block_range_size", RANGE_SIZE)),
     )
 
 
@@ -186,7 +195,7 @@ def _catch_up(spark, cfg) -> tuple[int, tuple[int, int] | None]:
     return n, CursorStore(str(cfg["out_dir"])).read()
 
 
-def cmd_migrate(spark, cfg, log=None) -> None:
+def cmd_migrate(spark, cfg) -> None:
     """Create the output layout + a schema manifest — idempotent, like
     re-running refinery migrations."""
     out = str(cfg["out_dir"])
@@ -195,11 +204,11 @@ def cmd_migrate(spark, cfg, log=None) -> None:
         "rewards": REWARDS_OUT_SCHEMA.simpleString(),
         "transactions": TRANSACTIONS_OUT_SCHEMA.simpleString(),
         "follower_info": "struct<height:bigint,first_block:bigint>",
-        "partitioning": f"block_range = block div {cfg.get('block_range_size', 1000)}",
+        "partitioning": f"block_range = block div {cfg.get('block_range_size', RANGE_SIZE)}",
     }
     with open(os.path.join(out, "_schema_manifest.json"), "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
-    (log or setup_logger(cfg)).info(f"migrate: layout ready at {out}")
+    setup_logger(cfg).info(f"migrate: layout ready at {out}")
 
 
 def cmd_once(spark, cfg, log=None) -> int:
@@ -222,29 +231,33 @@ def cmd_start(spark, cfg, log=None, max_ticks: int | None = None) -> None:
         stop["flag"] = True
         log.info("start: shutdown requested; finishing current pass")
 
-    signal.signal(signal.SIGINT, on_sigint)
+    previous = signal.signal(signal.SIGINT, on_sigint)
     tick = float(cfg.get("tick_seconds", 10))
-    while not stop["flag"]:
-        try:
-            n, cur = _catch_up(spark, cfg)
-        except Exception as exc:
-            # fail-stop per pass, retry next tick (reference logs the
-            # block error and re-polls, src/follower.rs:86-93) — a
-            # flaky node or a bad batch must not kill the follower;
-            # the idempotent sink makes the retry converge.
-            log.error(f"start: pass failed ({exc}); retrying next tick")
-            n = 0
-        else:
-            if n:
-                log.info(f"start: +{n} blocks, cursor {cur[0]}")
-        if max_ticks is not None:
-            max_ticks -= 1
-            if max_ticks <= 0:
-                break
-        # sleep in small slices so ctrl-c is responsive
-        deadline = time.monotonic() + tick
-        while not stop["flag"] and time.monotonic() < deadline:
-            time.sleep(0.2)
+    try:
+        while not stop["flag"]:
+            try:
+                n, cur = _catch_up(spark, cfg)
+            except Exception as exc:
+                # fail-stop per pass, retry next tick (reference logs the
+                # block error and re-polls, src/follower.rs:86-93) — a
+                # flaky node or a bad batch must not kill the follower;
+                # the idempotent sink makes the retry converge.
+                log.error(f"start: pass failed ({exc}); retrying next tick")
+                n = 0
+            else:
+                if n:
+                    log.info(f"start: +{n} blocks, cursor {cur[0]}")
+            if max_ticks is not None:
+                max_ticks -= 1
+                if max_ticks <= 0:
+                    break
+            # sleep in small slices so ctrl-c is responsive
+            deadline = time.monotonic() + tick
+            while not stop["flag"] and time.monotonic() < deadline:
+                time.sleep(0.2)
+    finally:
+        # a later ctrl-c must reach whoever called us, not a finished loop
+        signal.signal(signal.SIGINT, previous)
     log.info("start: stopped")
 
 
@@ -326,7 +339,7 @@ def cmd_status(cfg, log=None) -> dict:
     return status
 
 
-def cmd_vacuum(cfg, keep_versions: int, log=None) -> list[str]:
+def cmd_vacuum(cfg, keep_versions: int) -> list[str]:
     """Reclaim disk: delete the data directories no kept snapshot
     version references. A replay and `compact` leave each superseded
     fragment in place for older-snapshot readers, so disk use grows
@@ -338,13 +351,13 @@ def cmd_vacuum(cfg, keep_versions: int, log=None) -> list[str]:
     if store.current_version() is None:
         raise SystemExit("vacuum: no snapshot store at out_dir")
     removed = store.vacuum(keep_versions=keep_versions)
-    (log or setup_logger(cfg)).info(
+    setup_logger(cfg).info(
         f"vacuum: removed {len(removed)} version dirs (kept last {keep_versions})"
     )
     return removed
 
 
-def cmd_compact(spark, cfg, target_mb: int = 128, log=None) -> dict:
+def cmd_compact(spark, cfg, target_mb: int = 128) -> dict:
     """Maintenance: merge the fragments the append loop accumulates
     (one per pass and block range — the parquet analog of the
     reference's one-INSERT-per-block append, src/reward.rs:38-44) into
@@ -356,7 +369,7 @@ def cmd_compact(spark, cfg, target_mb: int = 128, log=None) -> dict:
     nothing needed compaction."""
     from .etl.compact import compact_snapshot
 
-    log = log or setup_logger(cfg)
+    log = setup_logger(cfg)
     manifest = compact_snapshot(
         spark, str(cfg["out_dir"]), target_file_bytes=int(target_mb) * 1024 * 1024
     )
@@ -380,9 +393,10 @@ def main(argv: list[str] | None = None) -> int:
         help="sql: time-travel the store to this snapshot version",
     )
     p.add_argument(
-        "--changes-since", type=int, default=None,
+        "--changes-since", type=_non_negative_int, default=None,
         help="sql: register <table>_changes CDC views diffing this "
-        "snapshot version against the served one",
+        "snapshot version against the served one (0: the empty store "
+        "before the first commit, so every row is an insert)",
     )
     p.add_argument(
         "--key-cols", default=None,

@@ -8,7 +8,7 @@ files a year. Small files poison a 100 TB deployment twice: the
 driver's file listing / split planning grows linearly, and each task
 pays the parquet footer+dictionary open cost for a few KB of rows.
 
-`compact_parquet` rewrites a directory to ~`target_file_bytes` files:
+`compact_parquet` rewrites a directory to ~`PACKED_FILE_BYTES` files:
 it sizes the output from the ACTUAL input bytes (not a guessed row
 count), rewrites with a single narrow repartition, and keeps content
 exactly (proven by the `sink_compact_files` oracle).
@@ -37,12 +37,10 @@ def dir_bytes(spark: SparkSession, path: str) -> tuple[int, int]:
     return total, len(files)
 
 
-def compact_parquet(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
+PACKED_FILE_BYTES = 4 * 1024 * 1024
+
+
+def compact_parquet(spark: SparkSession, in_path: str, out_path: str) -> int:
     """Rewrite `in_path` to `out_path` with ~target-sized files;
     returns the number of output files requested.
 
@@ -52,7 +50,7 @@ def compact_parquet(
     data.
     """
     total, _ = dir_bytes(spark, in_path)
-    n = max(1, math.ceil(total / target_file_bytes))
+    n = max(1, math.ceil(total / PACKED_FILE_BYTES))
     df = spark.read.parquet(in_path)
     df.repartition(n).write.mode("overwrite").parquet(out_path)
     return n

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from .schemas import REWARDS_V2_FIELDS_SCHEMA, SENTINEL
 from ..errors import is_path_not_found
 from .snapshot import (
+    RANGE_SIZE,
     SnapshotStore,
     commit_batch_atomic,
     refuse_old_layout,
@@ -230,7 +231,7 @@ class FollowerConfig:
     # blocks per pass; None = the source's PASS_LIMIT (landed files:
     # the whole lag in one job; a live node: 500 fetched blocks)
     max_blocks_per_batch: int | None = None
-    block_range_size: int = 1000   # blocks per output partition directory
+    block_range_size: int = RANGE_SIZE   # blocks per output partition directory
 
 
 class IncrementalFollower:
@@ -327,7 +328,10 @@ class IncrementalFollower:
         logging.getLogger("helium_etl_lite_spark").info(f"audit [{lo},{hi}]: {self.last_audit}")
 
 
-def backfill_epoch_walk(blocks: DataFrame, txns: DataFrame, tip: int, max_hops: int = 1000) -> int:
+MAX_HOPS = 1000
+
+
+def backfill_epoch_walk(blocks: DataFrame, txns: DataFrame, tip: int) -> int:
     """The literal epoch-hop walk (reference src/follower.rs:144-194),
     for parity testing: from `tip`, follow rewards_v2.start_epoch
     pointers backward until a block is missing; return the oldest
@@ -337,7 +341,7 @@ def backfill_epoch_walk(blocks: DataFrame, txns: DataFrame, tip: int, max_hops: 
     ).select("hash", F.col("f.start_epoch").alias("start_epoch"))
     height = tip
     last_safe = tip
-    for _ in range(max_hops):
+    for _ in range(MAX_HOPS):
         blk = blocks.where(F.col("height") == height).select("height", "transactions").collect()
         if not blk:
             # fetch failure → step back one from last safe height

@@ -79,31 +79,23 @@ def build_minmax_index(spark: SparkSession, path: str, col: str) -> DataFrame:
     )
 
 
-def prune_files(
-    index: DataFrame, lo, hi, value_type: str = "string"
-) -> list[str]:
+def prune_files(index: DataFrame, lo, hi) -> list[str]:
     """Files whose [min_val, max_val] range intersects [lo, hi] —
     stats-less files (NULL range) are conservatively kept.  Returns a
     driver-side path list: bounded by matching FILE count (the same
     contract as Spark's own PartitioningAwareFileIndex listing).
 
-    ``value_type`` is the Spark type the stringified stats are cast
-    back to before comparing (the index stores strings so one schema
-    serves every column type). It MUST be set for numeric cluster
-    columns: the default string compare is only correct for types
-    whose string form sorts like the value (ISO timestamps/dates,
-    plain strings) — lexicographically, '100' < '95', so a numeric
-    range pruned as strings silently drops matching files."""
+    The index stores the stats as strings (one schema serves every
+    column type) and the bounds compare as strings, which is correct
+    only for types whose string form sorts like the value (ISO
+    timestamps/dates, plain strings) — lexicographically, '100' < '95',
+    so a numeric range pruned this way would silently drop matching
+    files."""
     from pyspark.sql import functions as F
 
-    mn = F.col("min_val").cast(value_type)
-    mx = F.col("max_val").cast(value_type)
     kept = index.where(
         F.col("min_val").isNull()
-        | (
-            (mx >= F.lit(lo).cast(value_type))
-            & (mn <= F.lit(hi).cast(value_type))
-        )
+        | ((F.col("max_val") >= F.lit(lo)) & (F.col("min_val") <= F.lit(hi)))
     )
     return [r["file"] for r in kept.select("file").collect()]
 
@@ -132,12 +124,15 @@ def _bloom_pos(key_col, j: int, m_bits: int):
     )
 
 
-def bloom_bits_for(n_rows: int, n_files: int, bits_per_key: int = 16) -> int:
+BITS_PER_KEY = 16
+
+
+def bloom_bits_for(n_rows: int, n_files: int) -> int:
     """Power-of-two bloom width sized from measured rows-per-file —
     the knob Delta exposes as fpp/numItems. 16 bits/key at k=3 gives
     ~0.4% per-file false-positive rate."""
     per_file = max(n_rows, 1) // max(n_files, 1)
-    return 1 << max(12, (bits_per_key * max(per_file, 1)).bit_length())
+    return 1 << max(12, (BITS_PER_KEY * max(per_file, 1)).bit_length())
 
 
 def build_bloom_index(df, key: str, m_bits: int):

@@ -82,6 +82,10 @@ from pyspark.sql.types import StructType
 # schema of the rows.
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
+#: block-range width: the follower's default block_range_size and the
+#: range of every batch-id store.
+RANGE_SIZE = 1000
+
 
 def durable_replace(path: str, text: str) -> None:
     """Publish `text` as the whole content of `path` in one atomic,
@@ -622,7 +626,7 @@ def commit_batch_atomic(
     hi: int,
     height: int,
     first_block: int,
-    range_size: int = 1000,
+    range_size: int = RANGE_SIZE,
     heights: DataFrame | None = None,
     touched_ranges: set[int] | None = None,
 ) -> dict:
@@ -753,9 +757,6 @@ def commit_batch_atomic(
 #: fragments a block range may hold before a commit compacts the store.
 COMPACT_EVERY = 8
 
-#: block-range width of every batch-id store.
-RANGE_SIZE = 1000
-
 #: the table an incremental operator keeps its state rows in.
 STATE = "state"
 
@@ -788,7 +789,7 @@ def commit_batch(
 
     m = commit_batch_atomic(
         spark, store_dir, tables, lo, hi, height=batch_id, first_block=0,
-        range_size=RANGE_SIZE, heights=heights,
+        heights=heights,
     )
     if any(
         len(frags) > COMPACT_EVERY

@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+JOIN_HOW = "left"
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -32,14 +35,13 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_tiebreak: str,
-    how: str = "left",
     tolerance=None,
 ) -> DataFrame:
     """``left_id`` must uniquely identify left rows (e.g. event_id)."""
     cond = (left[left_on] == right[right_on]) & (right[right_ts] <= left[left_ts])
     if tolerance is not None:
         cond = cond & (right[right_ts] >= left[left_ts] - tolerance)
-    joined = left.join(right, cond, how)
+    joined = left.join(right, cond, JOIN_HOW)
     w = Window.partitionBy(left[left_id]).orderBy(
         right[right_ts].desc_nulls_last(), right[right_tiebreak].desc_nulls_last()
     )

@@ -99,14 +99,12 @@ def train_merges(word_counts: Iterable[tuple], num_merges: int) -> list:
     return merges
 
 
-def train_bpe(
-    df: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 200,
-    vocab_limit: int = 100_000,
-) -> list:
+TEXT_COL = "text"
+
+
+def train_bpe(df: DataFrame, num_merges: int = 200, vocab_limit: int = 100_000) -> list:
     """Distributed word counts -> driver-side merge learning."""
-    return train_merges(word_frequencies(df, text_col, vocab_limit), num_merges)
+    return train_merges(word_frequencies(df, TEXT_COL, vocab_limit), num_merges)
 
 
 # --------------------------------------------------------------- encode
@@ -130,13 +128,11 @@ def encode_word(word: str, ranks: dict) -> list:
     return sym
 
 
-def bpe_token_counts(
-    df: DataFrame,
-    merges: list,
-    text_col: str = "text",
-    out_col: str = "n_tokens_bpe",
-) -> DataFrame:
-    """Append the exact BPE token count of `text_col` under `merges`.
+OUT_COL = "n_tokens_bpe"
+
+
+def bpe_token_counts(df: DataFrame, merges: list) -> DataFrame:
+    """Append the exact BPE token count of `TEXT_COL` under `merges`.
 
     mapInPandas keeps the plan narrow (no shuffle); the merge table
     rides the serialized closure (num_merges entries — constant-sized,
@@ -145,7 +141,7 @@ def bpe_token_counts(
     word -> len(tokens) memo turns Zipfian repetition into dict hits.
     """
     ranks = {tuple(p): i for i, p in enumerate(merges)}
-    fields = df.schema.fields + [T.StructField(out_col, T.LongType())]
+    fields = df.schema.fields + [T.StructField(OUT_COL, T.LongType())]
     out_schema = T.StructType(fields)
 
     def encode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -165,8 +161,8 @@ def bpe_token_counts(
 
         for pdf in batches:
             pdf = pdf.copy()
-            pdf[out_col] = [count_tokens(t) for t in pdf[text_col]]
-            pdf[out_col] = pdf[out_col].astype("int64")
+            pdf[OUT_COL] = [count_tokens(t) for t in pdf[TEXT_COL]]
+            pdf[OUT_COL] = pdf[OUT_COL].astype("int64")
             yield pdf
 
     return df.mapInPandas(encode_batches, schema=out_schema)

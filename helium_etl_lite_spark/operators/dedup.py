@@ -21,20 +21,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..etl.snapshot import STATE, check_construction, commit_state, read_snapshot
+from .text import WINNOW_K, WINNOW_W
 
 
 def normalize_text(col):
     return F.lower(F.trim(col))
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+TEXT_COL = "text"
+ID_COL = "doc_id"
+
+
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Group by sha256 of normalized text; keeper = min id per group."""
-    h = F.sha2(normalize_text(F.col(text_col)), 256)
+    h = F.sha2(normalize_text(F.col(TEXT_COL)), 256)
     return (
-        docs.select(F.col(id_col), h.alias("text_hash"))
+        docs.select(F.col(ID_COL), h.alias("text_hash"))
         .groupBy("text_hash")
         .agg(
-            F.min(id_col).alias("keeper_doc_id"),
+            F.min(ID_COL).alias("keeper_doc_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
@@ -73,9 +78,7 @@ def _perm_min(base_hashes, p: int):
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, num_perm: int = 16, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_perm: int = 16) -> DataFrame:
     """MinHash over the distinct-token set, computed ROW-LOCAL with
     array higher-order functions: each token is hashed once
     (xxhash64 mod 2^31-1), permutation p maps that base hash through a
@@ -102,19 +105,16 @@ def minhash_signatures(
             f"num_perm must be <= {len(_PERM_AB)} (precomputed universal-hash "
             f"permutation constants), got {num_perm}"
         )
-    toks = _token_set(text_col)
+    toks = _token_set(TEXT_COL)
     base = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(_MERSENNE)))
     d = docs.where(toks.isNotNull() & (F.size(toks) > 0)).select(
-        F.col(id_col), base.alias("__bh")
+        F.col(ID_COL), base.alias("__bh")
     )
     mins = [_perm_min(F.col("__bh"), p) for p in range(num_perm)]
-    return d.select(F.col(id_col), F.array(*mins).alias("sig"))
+    return d.select(F.col(ID_COL), F.array(*mins).alias("sig"))
 
 
-def _band_rows(
-    sig: DataFrame, num_perm: int, bands: int, id_col: str = "doc_id",
-    keep_sig: bool = False,
-) -> DataFrame:
+def _band_rows(sig: DataFrame, num_perm: int, bands: int, keep_sig: bool = False) -> DataFrame:
     """Explode a signature table into LSH band rows
     (id, band, bucket[, sig]): bucket = hash of the band's signature
     slice. One row per doc per band; the only downstream join key is
@@ -122,7 +122,7 @@ def _band_rows(
     rows_per_band = num_perm // bands
     extra = [F.col("sig")] if keep_sig else []
     return sig.select(
-        F.col(id_col),
+        F.col(ID_COL),
         *extra,
         F.explode(
             F.array(
@@ -137,18 +137,18 @@ def _band_rows(
                 ]
             )
         ).alias("bb"),
-    ).select(id_col, *(["sig"] if keep_sig else []), "bb.band", "bb.bucket")
+    ).select(ID_COL, *(["sig"] if keep_sig else []), "bb.band", "bb.bucket")
 
 
-def containment_screened_pairs(
-    docs: DataFrame,
-    num_perm: int = 16,
-    bands: int = 8,
-    containment_threshold: float = 0.95,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bucket_cap: int = 256,
-) -> DataFrame:
+NUM_PERM = 16
+BANDS = 8
+JACCARD_THRESHOLD = 0.7
+CONTAINMENT_THRESHOLD = 0.95
+BUCKET_CAP = 256
+MAX_BROADCAST_ROWS = 4_000_000
+
+
+def containment_screened_pairs(docs: DataFrame, bucket_cap: int = BUCKET_CAP) -> DataFrame:
     """The production near-dup path in ONE plan: MinHash band SCREEN →
     exact containment VERIFY. At 100 TB nobody runs the exact O(N²)
     verifier unscreened (dedup_containment's docstring promise) — the
@@ -171,14 +171,14 @@ def containment_screened_pairs(
     hot-bucket treatment. Buckets at or under the cap are unaffected —
     pytest pins capped == uncapped output when no bucket overflows.
 
-    Directed pairs (doc_src, doc_sup): ≥ `containment_threshold` of
+    Directed pairs (doc_src, doc_sup): ≥ `CONTAINMENT_THRESHOLD` of
     doc_src's distinct tokens appear in doc_sup, computed EXACTLY over
     xxhash64'd token sets (8-byte longs, same result modulo a 2^-64
     collision — the minhash_dedup_assign argument). Both directions are
     emitted, because containment is asymmetric while the screen is
     symmetric.
 
-    Recall contract: the screen is tuned for JACCARD (bands=8 over 16
+    Recall contract: the screen is tuned for JACCARD (BANDS=8 over 16
     perms → P(candidate) ≈ 1-(1-j²)^8), so high-containment pairs with
     LOW Jaccard — a tiny doc quoted inside a huge one — can be missed;
     that tradeoff is inherent to minhash banding (the
@@ -198,7 +198,7 @@ def containment_screened_pairs(
     banding earns its complexity only when the size histogram is
     long-tailed; register it with a corpus that has one.
     """
-    sig = minhash_signatures(docs, num_perm, text_col, id_col)
+    sig = minhash_signatures(docs, NUM_PERM)
     # Materialized ONCE (eager localCheckpoint) because the stats
     # action below executes this pipeline and the returned plan reads
     # it twice more (tagged + sizes) — without it the corpus-wide
@@ -206,12 +206,12 @@ def containment_screened_pairs(
     # persist(): a persist here is never unpersisted (the returned
     # plan is lazy) and would leak one cache per call for the session
     # lifetime; checkpointed blocks free with the DataFrame reference.
-    # band_rows is ~`bands` 24-byte rows per doc. eager=False (r14):
+    # band_rows is ~`BANDS` 24-byte rows per doc. eager=False (r14):
     # the unconditional stats action below materializes the checkpoint
     # anyway — one job instead of two.
-    band_rows = _band_rows(sig, num_perm, bands, id_col).localCheckpoint(eager=False)
+    band_rows = _band_rows(sig, NUM_PERM, BANDS).localCheckpoint(eager=False)
     sizes = band_rows.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("__bsz"), F.min(id_col).alias("__bmin")
+        F.count(F.lit(1)).alias("__bsz"), F.min(ID_COL).alias("__bmin")
     )
     over = sizes.where(F.col("__bsz") > bucket_cap)
     # Control-plane: ONE bounded 1-row aggregate over the bucket-size
@@ -246,28 +246,28 @@ def containment_screened_pairs(
             right,
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") != F.col(f"r.{id_col}")),
+            & (F.col(f"l.{ID_COL}") != F.col(f"r.{ID_COL}")),
         )
         .select(
-            F.col(f"l.{id_col}").alias("doc_src"),
-            F.col(f"r.{id_col}").alias("doc_sup"),
+            F.col(f"l.{ID_COL}").alias("doc_src"),
+            F.col(f"r.{ID_COL}").alias("doc_sup"),
         )
     )
     hot = tagged.where(
-        (F.col("__bsz") > bucket_cap) & (F.col(id_col) != F.col("__bmin"))
+        (F.col("__bsz") > bucket_cap) & (F.col(ID_COL) != F.col("__bmin"))
     )
     routed = hot.select(
-        F.col(id_col).alias("doc_src"), F.col("__bmin").alias("doc_sup")
+        F.col(ID_COL).alias("doc_src"), F.col("__bmin").alias("doc_sup")
     ).unionByName(
-        hot.select(F.col("__bmin").alias("doc_src"), F.col(id_col).alias("doc_sup"))
+        hot.select(F.col("__bmin").alias("doc_src"), F.col(ID_COL).alias("doc_sup"))
     )
     cand = allpairs.unionByName(routed).distinct()
     toksets = docs.select(
-        F.col(id_col),
-        F.transform(_token_set(text_col), lambda t: F.xxhash64(t)).alias("toks"),
+        F.col(ID_COL),
+        F.transform(_token_set(TEXT_COL), lambda t: F.xxhash64(t)).alias("toks"),
     )
-    a = toksets.select(F.col(id_col).alias("doc_src"), F.col("toks").alias("toks_a"))
-    b = toksets.select(F.col(id_col).alias("doc_sup"), F.col("toks").alias("toks_b"))
+    a = toksets.select(F.col(ID_COL).alias("doc_src"), F.col("toks").alias("toks_a"))
+    b = toksets.select(F.col(ID_COL).alias("doc_sup"), F.col("toks").alias("toks_b"))
     cont = F.round(
         F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
         / F.size("toks_a").cast("double"),
@@ -277,17 +277,12 @@ def containment_screened_pairs(
         cand.join(a, "doc_src")
         .join(b, "doc_sup")
         .select("doc_src", "doc_sup", cont.alias("containment"))
-        .where(F.col("containment") >= containment_threshold)
+        .where(F.col("containment") >= CONTAINMENT_THRESHOLD)
     )
 
 
 def minhash_dedup_assign(
-    docs: DataFrame,
-    num_perm: int = 16,
-    bands: int = 8,
-    jaccard_threshold: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    docs: DataFrame, jaccard_threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
     """Scalable LSH dedup: assign every doc a keeper (min doc_id sharing
     any LSH band bucket, verified by exact Jaccard) WITHOUT materializing
@@ -298,8 +293,8 @@ def minhash_dedup_assign(
     N² pairs). On a self-similar 100 TB corpus the all-pairs form blows
     up quadratically; this stays O(N).
     """
-    sig = minhash_signatures(docs, num_perm, text_col, id_col)
-    band_rows = _band_rows(sig, num_perm, bands, id_col)
+    sig = minhash_signatures(docs, NUM_PERM)
+    band_rows = _band_rows(sig, NUM_PERM, BANDS)
 
     # Per-bucket min as a window, not agg+self-join: the self-join form
     # recomputes the whole signature subtree for both sides; the window
@@ -307,8 +302,8 @@ def minhash_dedup_assign(
     # (band, bucket).
     wb = Window.partitionBy("band", "bucket")
     candidate_keeper = (
-        band_rows.withColumn("bucket_min", F.min(id_col).over(wb))
-        .groupBy(id_col)
+        band_rows.withColumn("bucket_min", F.min(ID_COL).over(wb))
+        .groupBy(ID_COL)
         .agg(F.min("bucket_min").alias("cand_keeper"))
     )
 
@@ -317,39 +312,39 @@ def minhash_dedup_assign(
     # collision — the ngram_jaccard_pairs exactness argument), measured
     # ~35% off the whole-query wall clock at sf0.1.
     toksets = docs.select(
-        F.col(id_col),
-        F.transform(_token_set(text_col), lambda t: F.xxhash64(t)).alias("toks"),
+        F.col(ID_COL),
+        F.transform(_token_set(TEXT_COL), lambda t: F.xxhash64(t)).alias("toks"),
     )
-    a = toksets.select(F.col(id_col), F.col("toks").alias("toks_self"))
-    b = toksets.select(F.col(id_col).alias("cand_keeper"), F.col("toks").alias("toks_keeper"))
+    a = toksets.select(F.col(ID_COL), F.col("toks").alias("toks_self"))
+    b = toksets.select(F.col(ID_COL).alias("cand_keeper"), F.col("toks").alias("toks_keeper"))
     inter = F.size(F.array_intersect("toks_self", "toks_keeper")).cast("double")
     union = F.size(F.array_union("toks_self", "toks_keeper")).cast("double")
     verified = (
-        candidate_keeper.join(a, id_col)
+        candidate_keeper.join(a, ID_COL)
         .join(b, "cand_keeper")
         .select(
-            F.col(id_col),
+            F.col(ID_COL),
             F.col("cand_keeper"),
             F.round(inter / union, 6).alias("jaccard"),
         )
     )
     return verified.select(
-        id_col,
+        ID_COL,
         F.when(
-            (F.col("cand_keeper") < F.col(id_col)) & (F.col("jaccard") >= jaccard_threshold),
+            (F.col("cand_keeper") < F.col(ID_COL)) & (F.col("jaccard") >= jaccard_threshold),
             F.col("cand_keeper"),
         )
-        .otherwise(F.col(id_col))
+        .otherwise(F.col(ID_COL))
         .alias("keeper_doc_id"),
         F.col("jaccard").alias("keeper_jaccard"),
     )
 
 
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """64-bit SimHash: per token take xxhash64, vote each bit ±1, sign of
     the vote sum is the output bit. Expressed as explode + 64 conditional
     sums in one hash aggregate (no Python)."""
-    toks = docs.select(F.col(id_col), F.explode(_token_set(text_col)).alias("tok"))
+    toks = docs.select(F.col(ID_COL), F.explode(_token_set(TEXT_COL)).alias("tok"))
     toks = toks.withColumn("th", F.xxhash64("tok"))
     votes = [
         F.sum(
@@ -359,7 +354,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         ).alias(f"v{b}")
         for b in range(64)
     ]
-    agg = toks.groupBy(id_col).agg(*votes)
+    agg = toks.groupBy(ID_COL).agg(*votes)
     bit_terms = [
         F.when(F.col(f"v{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
             F.lit(0).cast("long")
@@ -367,30 +362,30 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         for b in range(64)
     ]
     out = agg.withColumn("simhash", sum(bit_terms[1:], bit_terms[0]))
-    return out.select(id_col, "simhash")
+    return out.select(ID_COL, "simhash")
 
 
-def simhash_near_pairs(
-    docs: DataFrame, max_hamming: int = 8, prefix_bits: int = 16,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
+PREFIX_BITS = 16
+
+
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8) -> DataFrame:
     """Near-dup pairs: block on 4 disjoint 16-bit chunks of the simhash
     (a pair within hamming<=3 shares at least one chunk exactly when
     hamming < 4 chunks), verify with bit_count(xor)."""
-    sh = simhash(docs, text_col, id_col)
+    sh = simhash(docs)
     chunks = F.array(
         *[
             F.struct(
                 F.lit(c).alias("chunk"),
-                F.shiftrightunsigned(F.col("simhash"), c * prefix_bits)
-                .bitwiseAND(F.lit((1 << prefix_bits) - 1).cast("long"))
+                F.shiftrightunsigned(F.col("simhash"), c * PREFIX_BITS)
+                .bitwiseAND(F.lit((1 << PREFIX_BITS) - 1).cast("long"))
                 .alias("key"),
             )
-            for c in range(64 // prefix_bits)
+            for c in range(64 // PREFIX_BITS)
         ]
     )
-    blocked = sh.select(F.col(id_col), F.col("simhash"), F.explode(chunks).alias("cc")).select(
-        id_col, "simhash", "cc.chunk", "cc.key"
+    blocked = sh.select(F.col(ID_COL), F.col("simhash"), F.explode(chunks).alias("cc")).select(
+        ID_COL, "simhash", "cc.chunk", "cc.key"
     )
     l, r = blocked.alias("l"), blocked.alias("r")
     # Verify (bit_count of xor — a few cycles) BEFORE the distinct: a
@@ -404,22 +399,22 @@ def simhash_near_pairs(
             r,
             (F.col("l.chunk") == F.col("r.chunk"))
             & (F.col("l.key") == F.col("r.key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
+            & (F.col(f"l.{ID_COL}") < F.col(f"r.{ID_COL}")),
         )
         .where(ham <= max_hamming)
         .select(
-            F.col(f"l.{id_col}").alias("doc_a"),
-            F.col(f"r.{id_col}").alias("doc_b"),
+            F.col(f"l.{ID_COL}").alias("doc_a"),
+            F.col(f"r.{ID_COL}").alias("doc_b"),
             ham.alias("hamming"),
         )
         .distinct()
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, block_col: str = "lang", threshold: float = 0.4,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
+BLOCK_COL = "lang"
+
+
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.4) -> DataFrame:
     """Exact token-set Jaccard for all same-block pairs. The block key
     bounds the quadratic term; at scale use minhash_dedup_assign instead.
 
@@ -437,12 +432,12 @@ def ngram_jaccard_pairs(
     # derived as |A|+|B|−|A∩B| from per-doc sizes, halving the per-pair
     # array work.
     toksets = docs.select(
-        F.col(id_col),
-        F.col(block_col).alias("block"),
-        F.transform(_token_set(text_col), lambda t: F.xxhash64(t)).alias("toks"),
-        F.size(_token_set(text_col)).alias("n_toks"),
+        F.col(ID_COL),
+        F.col(BLOCK_COL).alias("block"),
+        F.transform(_token_set(TEXT_COL), lambda t: F.xxhash64(t)).alias("toks"),
+        F.size(_token_set(TEXT_COL)).alias("n_toks"),
     )
-    a = toksets.withColumn("salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)))
+    a = toksets.withColumn("salt", F.pmod(F.xxhash64(F.col(ID_COL)), F.lit(n_salts)))
     b = toksets.withColumn(
         "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
@@ -464,12 +459,12 @@ def ngram_jaccard_pairs(
             b,
             (F.col("a.block") == F.col("b.block"))
             & (F.col("a.salt") == F.col("b.salt"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            & (F.col(f"a.{ID_COL}") < F.col(f"b.{ID_COL}"))
             & size_ok,
         )
         .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
+            F.col(f"a.{ID_COL}").alias("doc_a"),
+            F.col(f"b.{ID_COL}").alias("doc_b"),
             F.col("a.block").alias("block"),
             F.round(inter / union, 6).alias("jaccard"),
         )
@@ -477,10 +472,11 @@ def ngram_jaccard_pairs(
     )
 
 
-def ngram_jaccard_pairs_blas(
-    docs: DataFrame, block_col: str = "lang", threshold: float = 0.4,
-    text_col: str = "text", id_col: str = "doc_id", n_sub: int = 4,
-) -> DataFrame:
+BLAS_JACCARD_THRESHOLD = 0.85
+BLAS_N_SUB = 4
+
+
+def ngram_jaccard_pairs_blas(docs: DataFrame) -> DataFrame:
     """Same output as ngram_jaccard_pairs, computed as per-task
     incidence-matrix multiplications instead of per-pair array
     intersects.
@@ -488,7 +484,7 @@ def ngram_jaccard_pairs_blas(
     Within a (block, sub-block-pair) task the docs become a 0/1
     doc x local-vocab matrix; A @ B.T yields EVERY pairwise
     intersection size in one BLAS call, |A∪B| = |A|+|B|−|A∩B| follows
-    from row sums, and only pairs >= threshold are emitted. On this
+    from row sums, and only pairs >= BLAS_JACCARD_THRESHOLD are emitted. On this
     corpus (31-token vocab, ~25 tokens/doc) that turns ~2.5M codegen'd
     array_intersect calls into a few dense matmuls — measured ~10x.
     The sub-block pairing (same scheme as cosine_pairs_blocked: left
@@ -507,15 +503,15 @@ def ngram_jaccard_pairs_blas(
     import pandas as pd
 
     toksets = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(block_col).alias("block"),
-        F.transform(_token_set(text_col), lambda t: F.xxhash64(t)).alias("toks"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sub)).cast("int").alias("sub"),
+        F.col(ID_COL).alias("doc_id"),
+        F.col(BLOCK_COL).alias("block"),
+        F.transform(_token_set(TEXT_COL), lambda t: F.xxhash64(t)).alias("toks"),
+        F.pmod(F.xxhash64(F.col(ID_COL)), F.lit(BLAS_N_SUB)).cast("int").alias("sub"),
     )
     left = toksets.select(
         "doc_id", "block", "toks",
         F.col("sub").alias("blk_a"),
-        F.explode(F.sequence(F.col("sub"), F.lit(n_sub - 1))).alias("blk_b"),
+        F.explode(F.sequence(F.col("sub"), F.lit(BLAS_N_SUB - 1))).alias("blk_b"),
         F.lit(0).alias("side"),
     )
     right = toksets.select(
@@ -526,7 +522,7 @@ def ngram_jaccard_pairs_blas(
     )
     both = left.unionByName(right)
     out_schema = "doc_a long, doc_b long, block string, jaccard double"
-    thr = float(threshold)
+    thr = float(BLAS_JACCARD_THRESHOLD)
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
         _block, blk_a, blk_b = key
@@ -577,11 +573,13 @@ def ngram_jaccard_pairs_blas(
     return both.groupBy("block", "blk_a", "blk_b").applyInPandas(kernel, out_schema)
 
 
+CC_MAX_ITER = 25
+
+
 def connected_components(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation:
     every node's label converges to the smallest node id reachable from
@@ -620,7 +618,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         # each node proposes its label to every neighbor; keep the min
         # of (own label, best proposal)
         proposals = (
@@ -656,18 +654,20 @@ def connected_components(
         # fail-stop (r10 ADVICE item 2, shared with the star twin):
         # labels mid-propagation are not component labels.
         raise RuntimeError(
-            f"connected_components did not converge within {max_iter} "
+            f"connected_components did not converge within {CC_MAX_ITER} "
             "rounds (rounds needed = component diameter); raise "
-            "max_iter or use connected_components_star"
+            "CC_MAX_ITER or use connected_components_star"
         )
     return labels
+
+
+STAR_MAX_ITER = 50
 
 
 def connected_components_star(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al. 2014, "Connected Components in
@@ -694,7 +694,7 @@ def connected_components_star(
     Convergence = the canonical edge SET stops changing, probed with
     one carried count per phase plus a single one-sided exceptAll at
     the count-equal phase (r10 verdict item 6; distinct sets of equal
-    size are equal iff new-minus-old is empty). Exhausting max_iter
+    size are equal iff new-minus-old is empty). Exhausting STAR_MAX_ITER
     without converging RAISES — never silently-wrong labels (r10
     ADVICE item 2). Lineage truncates per phase with eager
     localCheckpoint (the iterative-operator discipline; at 100 TB swap
@@ -756,7 +756,7 @@ def connected_components_star(
     # two O(E) exceptAll shuffles every phase).
     prev_cnt = e.count()
     converged = prev_cnt == 0  # edgeless graph: nothing to contract
-    for _ in range(max_iter):
+    for _ in range(STAR_MAX_ITER):
         if converged:
             break
         # EAGER deliberately (r15 measured): the lazy fold-into-count
@@ -775,8 +775,8 @@ def connected_components_star(
         # component labels.
         raise RuntimeError(
             f"connected_components_star did not converge within "
-            f"{max_iter} phases ({prev_cnt} frontier edges remain); "
-            "raise max_iter — O(log n) phases suffice on any topology"
+            f"{STAR_MAX_ITER} phases ({prev_cnt} frontier edges remain); "
+            "raise STAR_MAX_ITER — O(log n) phases suffice on any topology"
         )
     # converged: e is a set of (child, root) star edges; roots and
     # isolated-after-contraction nodes label themselves.
@@ -792,8 +792,7 @@ def dedup_filter_new(
     batch: DataFrame,
     state_path: str,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    max_broadcast_rows: int = 4_000_000,
+    max_broadcast_rows: int = MAX_BROADCAST_ROWS,
     normalize: bool = True,
 ) -> DataFrame:
     """Incremental exact dedup, read side: the batch rows whose content
@@ -841,7 +840,7 @@ def dedup_filter_new(
     key = normalize_text(F.col(text_col)) if normalize else F.col(text_col)
     h = F.sha2(key, 256)
     b = batch.withColumn("text_hash", h)
-    w = Window.partitionBy("text_hash").orderBy(F.col(id_col).asc())
+    w = Window.partitionBy("text_hash").orderBy(F.col(ID_COL).asc())
     b = b.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
     seen = read_snapshot(spark, state_path, STATE)
     if seen is None:
@@ -895,12 +894,8 @@ def minhash_filter_new(
     spark,
     batch: DataFrame,
     state_path: str,
-    num_perm: int = 16,
-    bands: int = 8,
-    jaccard_threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_broadcast_rows: int = 4_000_000,
+    jaccard_threshold: float = JACCARD_THRESHOLD,
+    max_broadcast_rows: int = MAX_BROADCAST_ROWS,
 ) -> DataFrame:
     """Incremental NEAR-dup dedup, read side: batch docs that are not
     near-duplicates of anything already in the persisted corpus state,
@@ -912,7 +907,7 @@ def minhash_filter_new(
     longs per doc, ~1 KB; ~1% of raw text at corpus scale). A batch doc
     is a dup when it shares a band bucket with a state doc AND the
     signature match fraction — an unbiased estimator of Jaccard with
-    variance J(1-J)/num_perm — clears `jaccard_threshold`. The bucket
+    variance J(1-J)/NUM_PERM — clears `jaccard_threshold`. The bucket
     probe is one equi-join on (band, bucket) against one read_snapshot
     of the state.
 
@@ -921,18 +916,16 @@ def minhash_filter_new(
     dedup_filter_new: fold this output in with minhash_state_add under
     the landed batch's id.
     """
-    sig = minhash_signatures(batch, num_perm, text_col, id_col)
-    assigned = minhash_dedup_assign(
-        batch, num_perm, bands, jaccard_threshold, text_col, id_col
-    )
-    keepers = assigned.where(F.col("keeper_doc_id") == F.col(id_col)).select(id_col)
-    kept = batch.join(keepers, id_col, "left_semi").join(sig, id_col)
+    sig = minhash_signatures(batch, NUM_PERM)
+    assigned = minhash_dedup_assign(batch, jaccard_threshold)
+    keepers = assigned.where(F.col("keeper_doc_id") == F.col(ID_COL)).select(ID_COL)
+    kept = batch.join(keepers, ID_COL, "left_semi").join(sig, ID_COL)
     # Docs with a NULL/empty token set have no signature and can never
     # verify as near-dups — they must PASS THROUGH as survivors (sig
     # NULL), matching the exact-dedup path, not silently vanish in the
     # inner join above (review finding: the ingest loop was deleting
     # NULL-text rows).
-    no_sig = batch.join(sig.select(id_col), id_col, "left_anti").withColumn(
+    no_sig = batch.join(sig.select(ID_COL), ID_COL, "left_anti").withColumn(
         "sig", F.lit(None).cast("array<bigint>")
     )
     check_construction(state_path, SIG_VERSION, stamp=False)
@@ -940,7 +933,7 @@ def minhash_filter_new(
     if state is None:
         return kept.unionByName(no_sig)
     probe = _band_rows(
-        kept.select(id_col, "sig"), num_perm, bands, id_col, keep_sig=True
+        kept.select(ID_COL, "sig"), NUM_PERM, BANDS, keep_sig=True
     )
     # The state must never shuffle (same posture as dedup_filter_new):
     # when the batch's distinct (band, bucket) keys fit the guard,
@@ -968,23 +961,14 @@ def minhash_filter_new(
             ),
             ["band", "bucket"],
         )
-        .where(matches >= F.lit(int(round(jaccard_threshold * num_perm))))
-        .select(id_col)
+        .where(matches >= F.lit(int(round(jaccard_threshold * NUM_PERM))))
+        .select(ID_COL)
         .distinct()
     )
-    return kept.join(dup_ids, id_col, "left_anti").unionByName(no_sig)
+    return kept.join(dup_ids, ID_COL, "left_anti").unionByName(no_sig)
 
 
-def minhash_state_add(
-    spark,
-    fresh: DataFrame,
-    state_path: str,
-    batch_id: int,
-    num_perm: int = 16,
-    bands: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
+def minhash_state_add(spark, fresh: DataFrame, state_path: str, batch_id: int) -> None:
     """Incremental near-dup dedup, write side: fold the landed batch's
     LSH band rows (+signatures) into the persisted state — one fragment
     committed under `batch_id` (commit_state: O(batch) written bytes, a
@@ -995,31 +979,29 @@ def minhash_state_add(
         # NULL sigs are the pass-through NULL-text survivors from
         # minhash_filter_new — they have no LSH rows to fold in (and an
         # all-NULL band slice would hash to one hot bucket).
-        sig = fresh.select(F.col(id_col), "sig").where(F.col("sig").isNotNull())
+        sig = fresh.select(F.col(ID_COL), "sig").where(F.col("sig").isNotNull())
     else:
-        sig = minhash_signatures(fresh, num_perm, text_col, id_col)
-    rows = _band_rows(sig, num_perm, bands, id_col, keep_sig=True)
+        sig = minhash_signatures(fresh, NUM_PERM)
+    rows = _band_rows(sig, NUM_PERM, BANDS, keep_sig=True)
     commit_state(spark, state_path, rows, batch_id)
 
 
-def span_dedup_overlap(
-    docs: DataFrame,
-    span_len: int = 20,
-    stride: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+OVERLAP_SPAN_LEN = 20
+OVERLAP_STRIDE = 10
+
+
+def span_dedup_overlap(docs: DataFrame) -> DataFrame:
     """Alignment-robust intra-corpus span dedup — the overlapping-span
     upgrade of the C4-style form (llm_ops text_paragraph_dedup): spans
-    of `span_len` tokens start every `stride` tokens (plus one
-    tail-covering span at n - span_len), every span content keeps only
+    of `OVERLAP_SPAN_LEN` tokens start every `OVERLAP_STRIDE` tokens (plus one
+    tail-covering span at n - OVERLAP_SPAN_LEN), every span content keeps only
     its FIRST corpus-wide occurrence ((doc_id, start) order), and a
     token is DROPPED iff ANY duplicate span covers it. Non-overlapping
-    spans only catch passages duplicated at offsets ≡ 0 (mod span_len)
-    between the two documents; the stride grid tightens that to
-    (mod stride) — stride=1 is fully alignment-free (the published
+    spans only catch passages duplicated at offsets ≡ 0 (mod OVERLAP_SPAN_LEN)
+    between the two documents; the OVERLAP_STRIDE grid tightens that to
+    (mod OVERLAP_STRIDE) — a stride of 1 is fully alignment-free (the published
     exact-substring-dedup standard, Lee 2022) at one hash per token.
-    stride=10 halves the blindspot at a tenth of that cost.
+    OVERLAP_STRIDE = 10 halves the blindspot at a tenth of that cost.
 
     The "each duplicated region removed once" contract falls out of the
     token-level rule: overlapping duplicate spans claim overlapping
@@ -1029,22 +1011,22 @@ def span_dedup_overlap(
 
     Scale shape: span hashes are built ROW-LOCALLY (slice + xxhash64
     inside a transform — no token explode, no text carried through the
-    explode; ~n/stride 8-byte keys per doc); one window exchange on the
+    explode; ~n/OVERLAP_STRIDE 8-byte keys per doc); one window exchange on the
     span hash; duplicate starts fold back to one array row per doc;
     the final token filter is row-local again (exists() over the
     per-doc duplicate-start list). Two shuffles end to end, both on
-    high-cardinality keys, payload ~= token count * 8 bytes / stride.
+    high-cardinality keys, payload ~= token count * 8 bytes / OVERLAP_STRIDE.
     """
-    ws = F.split(F.col(text_col), " ")
+    ws = F.split(F.col(TEXT_COL), " ")
     n = F.size(ws)
-    last = F.greatest(n - F.lit(span_len), F.lit(0))
+    last = F.greatest(n - F.lit(OVERLAP_SPAN_LEN), F.lit(0))
     starts = F.array_distinct(
         F.concat(
-            F.sequence(F.lit(0), last, F.lit(stride)).cast("array<int>"),
+            F.sequence(F.lit(0), last, F.lit(OVERLAP_STRIDE)).cast("array<int>"),
             F.array(last.cast("int")),
         )
     )
-    span_at = lambda p: F.array_join(F.slice(ws, p + 1, span_len), " ")  # noqa: E731
+    span_at = lambda p: F.array_join(F.slice(ws, p + 1, OVERLAP_SPAN_LEN), " ")  # noqa: E731
     spans = F.transform(
         starts,
         lambda p: F.struct(
@@ -1059,22 +1041,22 @@ def span_dedup_overlap(
     # the array is only null for null text; the isNotNull filter keeps
     # the output identical.
     ex = docs.withColumn("__spans", spans).select(
-        id_col, F.explode_outer("__spans").alias("s")
+        ID_COL, F.explode_outer("__spans").alias("s")
     ).where(F.col("s").isNotNull()).select(
-        id_col, F.col("s.p").alias("p"), F.col("s.h").alias("h")
+        ID_COL, F.col("s.p").alias("p"), F.col("s.h").alias("h")
     )
-    w_first = Window.partitionBy("h").orderBy(F.col(id_col).asc(), F.col("p").asc())
+    w_first = Window.partitionBy("h").orderBy(F.col(ID_COL).asc(), F.col("p").asc())
     dups = (
         ex.withColumn("rn", F.row_number().over(w_first))
         .where(F.col("rn") > 1)
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(F.collect_list("p").alias("__dup_starts"))
     )
-    joined = docs.select(id_col, text_col).join(dups, id_col, "left").withColumn(
+    joined = docs.select(ID_COL, TEXT_COL).join(dups, ID_COL, "left").withColumn(
         "__dup_starts",
         F.coalesce(F.col("__dup_starts"), F.array().cast("array<long>")),
     )
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col(TEXT_COL), " ")
     indexed = F.transform(
         toks, lambda tk, i: F.struct(i.cast("long").alias("q"), tk.alias("tk"))
     )
@@ -1082,10 +1064,10 @@ def span_dedup_overlap(
         indexed,
         lambda s: ~F.exists(
             F.col("__dup_starts"),
-            lambda p: (p <= s["q"]) & (s["q"] < p + F.lit(span_len)),
+            lambda p: (p <= s["q"]) & (s["q"] < p + F.lit(OVERLAP_SPAN_LEN)),
         ),
     )
-    return _project_kept_tokens(joined, kept, id_col)
+    return _project_kept_tokens(joined, kept, ID_COL)
 
 
 def _project_kept_tokens(joined: DataFrame, kept, id_col: str) -> DataFrame:
@@ -1130,14 +1112,7 @@ def _md5_32(col):
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def minhash_dedup_assign_portable(
-    docs: DataFrame,
-    num_perm: int = 16,
-    bands: int = 8,
-    jaccard_threshold: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_dedup_assign_portable(docs: DataFrame) -> DataFrame:
     """ENGINE-PORTABLE twin of minhash_dedup_assign: identical linear
     dataflow (row-local signatures → band rows → per-bucket min →
     per-doc min → verify doc→keeper only), but every engine-specific
@@ -1162,61 +1137,59 @@ def minhash_dedup_assign_portable(
     production form's pytest-only gates — and it doubles as the
     cross-engine spec of the algorithm.
     """
-    band_rows = _portable_band_rows(docs, num_perm, bands, text_col, id_col)
+    band_rows = _portable_band_rows(docs, NUM_PERM, BANDS, TEXT_COL, ID_COL)
     wb = Window.partitionBy("band", "bucket")
     candidate_keeper = (
-        band_rows.withColumn("bucket_min", F.min(id_col).over(wb))
-        .groupBy(id_col)
+        band_rows.withColumn("bucket_min", F.min(ID_COL).over(wb))
+        .groupBy(ID_COL)
         .agg(F.min("bucket_min").alias("cand_keeper"))
     )
     toksets = docs.select(
-        F.col(id_col),
+        F.col(ID_COL),
         # distinct AFTER hashing: an md5-32 collision between two
         # distinct tokens must collapse identically on both engines
         F.array_distinct(
-            F.transform(_token_set(text_col), lambda t: _md5_32(t))
+            F.transform(_token_set(TEXT_COL), lambda t: _md5_32(t))
         ).alias("toks"),
     )
-    a = toksets.select(F.col(id_col), F.col("toks").alias("toks_self"))
+    a = toksets.select(F.col(ID_COL), F.col("toks").alias("toks_self"))
     b2 = toksets.select(
-        F.col(id_col).alias("cand_keeper"), F.col("toks").alias("toks_keeper")
+        F.col(ID_COL).alias("cand_keeper"), F.col("toks").alias("toks_keeper")
     )
     inter = F.size(F.array_intersect("toks_self", "toks_keeper")).cast("double")
     union = F.size(F.array_union("toks_self", "toks_keeper")).cast("double")
     verified = (
-        candidate_keeper.join(a, id_col)
+        candidate_keeper.join(a, ID_COL)
         .join(b2, "cand_keeper")
         .select(
-            F.col(id_col),
+            F.col(ID_COL),
             F.col("cand_keeper"),
             F.round(inter / union, 6).alias("jaccard"),
         )
     )
     return verified.select(
-        id_col,
+        ID_COL,
         F.when(
-            (F.col("cand_keeper") < F.col(id_col))
-            & (F.col("jaccard") >= jaccard_threshold),
+            (F.col("cand_keeper") < F.col(ID_COL))
+            & (F.col("jaccard") >= JACCARD_THRESHOLD),
             F.col("cand_keeper"),
         )
-        .otherwise(F.col(id_col))
+        .otherwise(F.col(ID_COL))
         .alias("keeper_doc_id"),
         F.col("jaccard").alias("keeper_jaccard"),
     )
 
 
-def portable_minhash_oracle_sql(
-    num_perm: int = 16, bands: int = 8, jaccard_threshold: float = 0.7
-) -> str:
+def portable_minhash_oracle_sql() -> str:
     """DuckDB oracle for minhash_dedup_assign_portable — generated from
     the SAME _PERM_AB constants the Spark form uses, so the two are one
     spec in two dialects."""
-    rows_per_band = num_perm // bands
+    rows_per_band = NUM_PERM // BANDS
     assert rows_per_band == 2
     m = _MERSENNE
     mins = ",\n             ".join(
         f"list_min(list_transform(bh, h -> ({a}*h + {b}) % {m}))"
-        for a, b in _PERM_AB[:num_perm]
+        for a, b in _PERM_AB[:NUM_PERM]
     )
     return f"""
     WITH t AS (SELECT doc_id,
@@ -1232,7 +1205,7 @@ def portable_minhash_oracle_sql(
             FROM base),
     bands AS (SELECT doc_id, b.band,
                      sig[2*b.band + 1] * {m} + sig[2*b.band + 2] AS bucket
-              FROM sig, (SELECT unnest(range({bands})) AS band) b),
+              FROM sig, (SELECT unnest(range({BANDS})) AS band) b),
     wb AS (SELECT doc_id,
                   MIN(doc_id) OVER (PARTITION BY band, bucket) AS bucket_min
            FROM bands),
@@ -1250,7 +1223,7 @@ def portable_minhash_oracle_sql(
             JOIN hs a ON a.doc_id = c.doc_id
             JOIN hs b ON b.doc_id = c.cand_keeper)
     SELECT doc_id,
-           CASE WHEN cand_keeper < doc_id AND jaccard >= {jaccard_threshold}
+           CASE WHEN cand_keeper < doc_id AND jaccard >= {JACCARD_THRESHOLD}
                 THEN cand_keeper ELSE doc_id END AS keeper_doc_id,
            jaccard AS keeper_jaccard
     FROM ver
@@ -1297,12 +1270,8 @@ def _portable_band_rows(docs, num_perm, bands, text_col, id_col):
 
 def containment_screened_pairs_portable(
     docs: DataFrame,
-    num_perm: int = 16,
-    bands: int = 8,
-    containment_threshold: float = 0.95,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bucket_cap: int = 256,
+    containment_threshold: float = CONTAINMENT_THRESHOLD,
+    bucket_cap: int = BUCKET_CAP,
 ) -> DataFrame:
     """ENGINE-PORTABLE twin of containment_screened_pairs — the FULL
     production near-dup composition (MinHash band screen -> hot-bucket
@@ -1326,10 +1295,10 @@ def containment_screened_pairs_portable(
     # eager=False (r15): the unconditional stats .first() below
     # materializes it in the same job (guide §1.2)
     band_rows = _portable_band_rows(
-        docs, num_perm, bands, text_col, id_col
+        docs, NUM_PERM, BANDS, TEXT_COL, ID_COL
     ).localCheckpoint(eager=False)
     sizes = band_rows.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("__bsz"), F.min(id_col).alias("__bmin")
+        F.count(F.lit(1)).alias("__bsz"), F.min(ID_COL).alias("__bmin")
     )
     over = sizes.where(F.col("__bsz") > bucket_cap)
     stats = over.agg(
@@ -1356,28 +1325,28 @@ def containment_screened_pairs_portable(
         right,
         (F.col("l.band") == F.col("r.band"))
         & (F.col("l.bucket") == F.col("r.bucket"))
-        & (F.col(f"l.{id_col}") != F.col(f"r.{id_col}")),
+        & (F.col(f"l.{ID_COL}") != F.col(f"r.{ID_COL}")),
     ).select(
-        F.col(f"l.{id_col}").alias("doc_src"),
-        F.col(f"r.{id_col}").alias("doc_sup"),
+        F.col(f"l.{ID_COL}").alias("doc_src"),
+        F.col(f"r.{ID_COL}").alias("doc_sup"),
     )
     hot = tagged.where(
-        (F.col("__bsz") > bucket_cap) & (F.col(id_col) != F.col("__bmin"))
+        (F.col("__bsz") > bucket_cap) & (F.col(ID_COL) != F.col("__bmin"))
     )
     routed = hot.select(
-        F.col(id_col).alias("doc_src"), F.col("__bmin").alias("doc_sup")
+        F.col(ID_COL).alias("doc_src"), F.col("__bmin").alias("doc_sup")
     ).unionByName(
-        hot.select(F.col("__bmin").alias("doc_src"), F.col(id_col).alias("doc_sup"))
+        hot.select(F.col("__bmin").alias("doc_src"), F.col(ID_COL).alias("doc_sup"))
     )
     cand = allpairs.unionByName(routed).distinct()
     toksets = docs.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.array_distinct(
-            F.transform(_token_set(text_col), lambda t: _md5_32(t))
+            F.transform(_token_set(TEXT_COL), lambda t: _md5_32(t))
         ).alias("toks"),
     )
-    a = toksets.select(F.col(id_col).alias("doc_src"), F.col("toks").alias("toks_a"))
-    b = toksets.select(F.col(id_col).alias("doc_sup"), F.col("toks").alias("toks_b"))
+    a = toksets.select(F.col(ID_COL).alias("doc_src"), F.col("toks").alias("toks_a"))
+    b = toksets.select(F.col(ID_COL).alias("doc_sup"), F.col("toks").alias("toks_b"))
     cont = F.round(
         F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
         / F.size("toks_a"),
@@ -1392,21 +1361,16 @@ def containment_screened_pairs_portable(
     )
 
 
-def portable_screened_oracle_sql(
-    num_perm: int = 16,
-    bands: int = 8,
-    containment_threshold: float = 0.95,
-    bucket_cap: int = 256,
-) -> str:
+def portable_screened_oracle_sql() -> str:
     """DuckDB oracle for containment_screened_pairs_portable, generated
     from the SAME _PERM_AB / cap constants — screen, cap, routing and
     verify restated in one statement."""
-    rows_per_band = num_perm // bands
+    rows_per_band = NUM_PERM // BANDS
     assert rows_per_band == 2
     m = _MERSENNE
     mins = ",\n             ".join(
         f"list_min(list_transform(bh, h -> ({a}*h + {b}) % {m}))"
-        for a, b in _PERM_AB[:num_perm]
+        for a, b in _PERM_AB[:NUM_PERM]
     )
     return f"""
     WITH t AS (SELECT doc_id,
@@ -1422,7 +1386,7 @@ def portable_screened_oracle_sql(
             FROM base),
     bands AS (SELECT doc_id, b.band,
                      sig[2*b.band + 1] * {m} + sig[2*b.band + 2] AS bucket
-              FROM sig, (SELECT unnest(range({bands})) AS band) b),
+              FROM sig, (SELECT unnest(range({BANDS})) AS band) b),
     sizes AS (SELECT band, bucket, COUNT(*) AS bsz, MIN(doc_id) AS bmin
               FROM bands GROUP BY band, bucket),
     tagged AS (SELECT b.doc_id, b.band, b.bucket, s.bsz, s.bmin
@@ -1433,9 +1397,9 @@ def portable_screened_oracle_sql(
       FROM tagged l JOIN tagged r
         ON l.band = r.band AND l.bucket = r.bucket
        AND l.doc_id <> r.doc_id
-      WHERE l.bsz <= {bucket_cap} AND r.bsz <= {bucket_cap}),
+      WHERE l.bsz <= {BUCKET_CAP} AND r.bsz <= {BUCKET_CAP}),
     hot AS (SELECT doc_id, bmin FROM tagged
-            WHERE bsz > {bucket_cap} AND doc_id <> bmin),
+            WHERE bsz > {BUCKET_CAP} AND doc_id <> bmin),
     routed AS (SELECT doc_id AS doc_src, bmin AS doc_sup FROM hot
                UNION ALL
                SELECT bmin AS doc_src, doc_id AS doc_sup FROM hot),
@@ -1453,17 +1417,15 @@ def portable_screened_oracle_sql(
             JOIN hs a ON a.doc_id = c.doc_src
             JOIN hs b ON b.doc_id = c.doc_sup)
     SELECT doc_src, doc_sup, containment
-    FROM ver WHERE containment >= {containment_threshold}
+    FROM ver WHERE containment >= {CONTAINMENT_THRESHOLD}
     ORDER BY doc_src, doc_sup
     """
 
 
-def simhash_assign_portable(
-    docs: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+SIMHASH_K = 3
+
+
+def simhash_assign_portable(docs: DataFrame) -> DataFrame:
     """ENGINE-PORTABLE SimHash near-dup keeper assignment — the SimHash
     sibling of minhash_dedup_assign_portable, closing the last
     engine-opaque member of the text near-dup family: a 32-bit SimHash
@@ -1471,7 +1433,7 @@ def simhash_assign_portable(
     round to 1, deterministically on both engines), pigeonholed into
     4 x 8-bit bands, per-bucket/per-doc MIN keeper fold (the
     phash_band_neardup dataflow — no pair materialization), verified
-    by exact bit_count(xor) <= k. Every step is integer-only, so the
+    by exact bit_count(xor) <= SIMHASH_K. Every step is integer-only, so the
     FULL pipeline hash-matches the generated SQL oracle
     (simhash_portable_oracle_sql). Production text_dedup_simhash keeps
     the 64-bit xxhash64 form.
@@ -1482,7 +1444,7 @@ def simhash_assign_portable(
     simhash votes over the single '' token, matching the oracle.
     """
     toks = docs.select(
-        F.col(id_col), F.explode(_token_set(text_col)).alias("tok")
+        F.col(ID_COL), F.explode(_token_set(TEXT_COL)).alias("tok")
     )
     th = _md5_32(F.col("tok"))
     votes = [
@@ -1493,9 +1455,9 @@ def simhash_assign_portable(
         ).alias(f"v{b}")
         for b in range(32)
     ]
-    agg = toks.withColumn("__th", th).groupBy(id_col).agg(*votes)
+    agg = toks.withColumn("__th", th).groupBy(ID_COL).agg(*votes)
     sh = agg.select(
-        F.col(id_col),
+        F.col(ID_COL),
         sum(
             [
                 F.when(F.col(f"v{b}") >= 0, F.lit(1 << b)).otherwise(0)
@@ -1507,7 +1469,7 @@ def simhash_assign_portable(
         .alias("simhash"),
     )
     bands = sh.select(
-        id_col,
+        ID_COL,
         "simhash",
         F.explode(
             F.array(
@@ -1522,37 +1484,37 @@ def simhash_assign_portable(
                 ]
             )
         ).alias("bb"),
-    ).select(id_col, "simhash", "bb.band", "bb.bval")
+    ).select(ID_COL, "simhash", "bb.band", "bb.bval")
     bucket_min = bands.groupBy("band", "bval").agg(
-        F.min(id_col).alias("__bucket_keeper")
+        F.min(ID_COL).alias("__bucket_keeper")
     )
     cand = (
         bands.join(bucket_min, ["band", "bval"])
-        .groupBy(id_col, "simhash")
+        .groupBy(ID_COL, "simhash")
         .agg(F.min("__bucket_keeper").alias("__cand"))
     )
     keeper_hash = sh.select(
-        F.col(id_col).alias("__cand"), F.col("simhash").alias("__cand_sh")
+        F.col(ID_COL).alias("__cand"), F.col("simhash").alias("__cand_sh")
     )
     ham = F.bit_count(
         F.col("simhash").bitwiseXOR(F.col("__cand_sh"))
     ).cast("long")
     return cand.join(keeper_hash, "__cand").select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.when(
-            (ham <= k) & (F.col("__cand") != F.col(id_col)), F.col("__cand")
+            (ham <= SIMHASH_K) & (F.col("__cand") != F.col(ID_COL)), F.col("__cand")
         )
-        .otherwise(F.col(id_col))
+        .otherwise(F.col(ID_COL))
         .cast("long")
         .alias("keeper_doc_id"),
-        F.when((ham <= k) & (F.col("__cand") != F.col(id_col)), ham)
+        F.when((ham <= SIMHASH_K) & (F.col("__cand") != F.col(ID_COL)), ham)
         .otherwise(F.lit(0))
         .cast("long")
         .alias("hamming"),
     )
 
 
-def simhash_portable_oracle_sql(k: int = 3) -> str:
+def simhash_portable_oracle_sql() -> str:
     """DuckDB twin of simhash_assign_portable, generated so the 32
     vote sums and band folds stay one spec in two dialects."""
     votes = ",\n             ".join(
@@ -1586,19 +1548,22 @@ def simhash_portable_oracle_sql(k: int = 3) -> str:
                    bit_count(xor(cand.simhash, s2.simhash)) AS ham
             FROM cand JOIN sh s2 ON s2.doc_id = cand.c)
     SELECT doc_id,
-           CAST(CASE WHEN ham <= {k} AND c <> doc_id
+           CAST(CASE WHEN ham <= {SIMHASH_K} AND c <> doc_id
                      THEN c ELSE doc_id END AS BIGINT) AS keeper_doc_id,
-           CAST(CASE WHEN ham <= {k} AND c <> doc_id
+           CAST(CASE WHEN ham <= {SIMHASH_K} AND c <> doc_id
                      THEN ham ELSE 0 END AS BIGINT) AS hamming
     FROM ver
     """
 
 
-def anchored_span_oracle_cte(span_len: int = 50, k: int = 4, w: int = 5) -> str:
+ANCHOR_SPAN_LEN = 50
+
+
+def anchored_span_oracle_cte() -> str:
     """The DuckDB CTE chain restating anchored_span_table — winnow
     gram keys, rolling-min selection (full-window rule + short-doc
     fallback), anchor position decode, anchored span hash — generated
-    from the SAME (span_len, k, w) constants the Spark operator takes,
+    from the SAME (ANCHOR_SPAN_LEN, WINNOW_K, WINNOW_W) constants the Spark operator reads,
     and SHARED by every oracle over this machinery
     (text_dedup_substring_anchor, text_contamination_substring) so the
     restatement has one source of truth. Yields CTEs: st(doc_id, ws,
@@ -1606,48 +1571,41 @@ def anchored_span_oracle_cte(span_len: int = 50, k: int = 4, w: int = 5) -> str:
     return f"""w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
     st AS (SELECT doc_id, ws, len(ws) AS n FROM w),
     g AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
-                 array_to_string(ws[i+1 : i+{k}], ' ') AS gram
-          FROM st, unnest(generate_series(0, GREATEST(n-{k}, 0))) AS t(i)),
+                 array_to_string(ws[i+1 : i+{WINNOW_K}], ' ') AS gram
+          FROM st, unnest(generate_series(0, GREATEST(n-{WINNOW_K}, 0))) AS t(i)),
     h AS (SELECT doc_id, i,
                  CAST(('0x' || substr(md5(gram), 1, 8)) AS BIGINT) * 1048576
                  + i AS key
           FROM g),
     r AS (SELECT doc_id, i, key,
                  MIN(key) OVER (PARTITION BY doc_id ORDER BY i
-                                ROWS BETWEEN {w - 1} PRECEDING
+                                ROWS BETWEEN {WINNOW_W - 1} PRECEDING
                                          AND CURRENT ROW) AS wmin
           FROM h),
     counts AS (SELECT doc_id, COUNT(*) AS ng, MIN(key) AS min_key
                FROM r GROUP BY doc_id),
     fp AS (SELECT DISTINCT r.doc_id, r.wmin AS fp_key
            FROM r JOIN counts USING (doc_id)
-           WHERE counts.ng >= {w} AND r.i >= {w - 1}
+           WHERE counts.ng >= {WINNOW_W} AND r.i >= {WINNOW_W - 1}
            UNION ALL
-           SELECT doc_id, min_key AS fp_key FROM counts WHERE ng < {w}),
+           SELECT doc_id, min_key AS fp_key FROM counts WHERE ng < {WINNOW_W}),
     anch AS (SELECT DISTINCT doc_id,
                     CAST(fp_key % 1048576 AS BIGINT) AS p
              FROM fp),
     sp AS (SELECT a.doc_id, a.p,
                   CAST(('0x' || substr(md5(
-                      array_to_string(st.ws[a.p+1 : a.p+{span_len}], ' ')
+                      array_to_string(st.ws[a.p+1 : a.p+{ANCHOR_SPAN_LEN}], ' ')
                   ), 1, 8)) AS BIGINT) AS sh
            FROM anch a JOIN st USING (doc_id)
-           WHERE a.p + {span_len} <= st.n)"""
+           WHERE a.p + {ANCHOR_SPAN_LEN} <= st.n)"""
 
 
-def anchored_span_table(
-    docs: DataFrame,
-    span_len: int = 50,
-    k: int = 4,
-    w: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def anchored_span_table(docs: DataFrame) -> DataFrame:
     """The (doc_id, p, h) table of winnow-anchored span hashes shared
     by substring_anchor_dedup (intra-corpus removal) and the
     train-vs-benchmark contamination screen: anchors = winnowing
     window minima (content-defined, so alignment-free — Schleimer
-    2003), h = md5-prefix hash of the span_len tokens from each anchor
+    2003), h = md5-prefix hash of the ANCHOR_SPAN_LEN tokens from each anchor
     with the span fully inside the doc. Anchor positions fold to ONE
     array row per doc before the text join (no text replication per
     anchor); span hashing is row-local slice + md5 inside a transform.
@@ -1665,18 +1623,18 @@ def anchored_span_table(
     from .text import winnow_fingerprints
 
     anchors = (
-        winnow_fingerprints(docs, k=k, w=w, text_col=text_col, id_col=id_col)
-        .select(id_col, "pos")
+        winnow_fingerprints(docs)
+        .select(ID_COL, "pos")
         .distinct()
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(F.sort_array(F.collect_list("pos")).alias("__anchors"))
     )
-    j = docs.select(id_col, text_col).join(anchors, id_col, "inner")
-    ws = F.split(F.col(text_col), " ")
+    j = docs.select(ID_COL, TEXT_COL).join(anchors, ID_COL, "inner")
+    ws = F.split(F.col(TEXT_COL), " ")
     n = F.size(ws)
-    valid = F.filter(F.col("__anchors"), lambda p: p + span_len <= n.cast("long"))
+    valid = F.filter(F.col("__anchors"), lambda p: p + ANCHOR_SPAN_LEN <= n.cast("long"))
     span_at = lambda p: F.array_join(  # noqa: E731
-        F.slice(ws, p.cast("int") + 1, span_len), " "
+        F.slice(ws, p.cast("int") + 1, ANCHOR_SPAN_LEN), " "
     )
     spans = F.transform(
         valid,
@@ -1689,19 +1647,12 @@ def anchored_span_table(
     )
     return (
         j.withColumn("__spans", spans)
-        .select(id_col, F.explode("__spans").alias("s"))
-        .select(id_col, F.col("s.p").alias("p"), F.col("s.h").alias("h"))
+        .select(ID_COL, F.explode("__spans").alias("s"))
+        .select(ID_COL, F.col("s.p").alias("p"), F.col("s.h").alias("h"))
     )
 
 
-def substring_anchor_dedup(
-    docs: DataFrame,
-    span_len: int = 50,
-    k: int = 4,
-    w: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def substring_anchor_dedup(docs: DataFrame) -> DataFrame:
     """Suffix-array-GRADE exact-substring dedup (Lee 2022's "remove
     every substring of length >= L duplicated anywhere in the corpus")
     as a distributed anchor + span composition with a PROVABLE,
@@ -1719,28 +1670,28 @@ def substring_anchor_dedup(
 
     Pipeline: winnow anchors (k-gram md5 hashes, w-window min,
     leftmost tie-break) -> at every anchor position p with
-    p + span_len <= n, hash the span of span_len tokens starting at p
+    p + ANCHOR_SPAN_LEN <= n, hash the span of ANCHOR_SPAN_LEN tokens starting at p
     -> corpus-wide first occurrence of each span content (ordered by
     (doc_id, p)) survives; every token covered by a later occurrence
     is dropped (same token-interval rule as span_dedup_overlap, so
     overlapping duplicate spans remove each region once).
 
-    GUARANTEE: any substring of length >= span_len + w - 1 tokens
-    duplicated at ANY pair of offsets loses >= span_len tokens from
+    GUARANTEE: any substring of length >= ANCHOR_SPAN_LEN + w - 1 tokens
+    duplicated at ANY pair of offsets loses >= ANCHOR_SPAN_LEN tokens from
     every copy after the first. Proof: the first w-gram window fully
     inside the duplicated region selects an anchor at some region
     gram-offset a <= w-1; the selection compares keys
     hash*2^20 + abs_pos whose ordering is content-determined (hash
     dominates; equal hashes pick the leftmost gram, the same RELATIVE
     gram in both copies), so BOTH copies anchor at the same content
-    position; the span of span_len tokens from that anchor lies inside
-    the region in both copies (region length >= a + span_len), so the
+    position; the span of ANCHOR_SPAN_LEN tokens from that anchor lies inside
+    the region in both copies (region length >= a + ANCHOR_SPAN_LEN), so the
     two span hashes collide and the later copy's interval is dropped.
     Approximation vs a true suffix array: removal granularity is the
     anchored spans (density 2/(w+1) per token), not the maximal
-    duplicated extent — tails shorter than span_len past the last
+    duplicated extent — tails shorter than ANCHOR_SPAN_LEN past the last
     in-region anchor survive; detection is exact above the length
-    bound, never below span_len.
+    bound, never below ANCHOR_SPAN_LEN.
 
     Scale shape: anchors are built with ONE exchange on doc_id
     (winnow_gram_table's ordered window) + one hash agg; anchor
@@ -1751,14 +1702,10 @@ def substring_anchor_dedup(
     No token explode ever carries text; payload on the span exchange
     is ~anchors_per_doc 8-byte keys.
     """
-    ex = anchored_span_table(
-        docs, span_len=span_len, k=k, w=w, text_col=text_col, id_col=id_col
-    )
-    w_first = Window.partitionBy("h").orderBy(F.col(id_col).asc(), F.col("p").asc())
-    dup_starts = ex.withColumn("rn", F.row_number().over(w_first)).where(
-        F.col("rn") > 1
-    )
-    return _drop_covered_tokens(docs, dup_starts, span_len, text_col, id_col)
+    ex = anchored_span_table(docs)
+    w_first = Window.partitionBy("h").orderBy(F.col(ID_COL).asc(), F.col("p").asc())
+    dup_starts = ex.withColumn("rn", F.row_number().over(w_first)).where(F.col("rn") > 1)
+    return _drop_covered_tokens(docs, dup_starts, ANCHOR_SPAN_LEN, TEXT_COL, ID_COL)
 
 
 def _drop_covered_tokens(
@@ -1793,17 +1740,7 @@ def _drop_covered_tokens(
     return _project_kept_tokens(joined, kept, id_col)
 
 
-def span_state_add(
-    spark,
-    docs: DataFrame,
-    state_path: str,
-    batch_id: int,
-    span_len: int = 50,
-    k: int = 4,
-    w: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
+def span_state_add(spark, docs: DataFrame, state_path: str, batch_id: int) -> None:
     """Incremental substring dedup, write side: fold a LANDED batch's
     anchored span hashes into the persisted span-hash state — the
     substring-grade sibling of dedup_state_add, with the same state
@@ -1814,24 +1751,14 @@ def span_state_add(
     corpus contained — the same convention as hashing original content
     in the exact-dedup state."""
     spans = (
-        anchored_span_table(docs, span_len, k, w, text_col, id_col)
+        anchored_span_table(docs)
         .select("h")
         .distinct()
     )
     commit_state(spark, state_path, spans, batch_id)
 
 
-def substring_anchor_dedup_incremental(
-    spark,
-    batch: DataFrame,
-    state_path: str,
-    span_len: int = 50,
-    k: int = 4,
-    w: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_broadcast_rows: int = 4_000_000,
-) -> DataFrame:
+def substring_anchor_dedup_incremental(spark, batch: DataFrame, state_path: str) -> DataFrame:
     """Incremental substring dedup, read side: drop every batch token
     covered by a span whose content already exists in the landed
     corpus (the span state at `state_path`, one read_snapshot) OR
@@ -1844,21 +1771,20 @@ def substring_anchor_dedup_incremental(
     state, no exchange on it, output only the hashes the batch
     actually probes; the (small) hit set then broadcast-joins back to
     the batch spans. O(batch) shuffled/broadcast bytes regardless of
-    corpus size. Batches above `max_broadcast_rows` distinct spans
+    corpus size. Batches above `MAX_BROADCAST_ROWS` distinct spans
     fall back to the shuffled semi-join (the right plan when the
     batch is itself corpus-sized). Missing state = first ingest: only
     within-batch dedup applies.
     """
     ex = anchored_span_table(
-        batch, span_len=span_len, k=k, w=w, text_col=text_col, id_col=id_col
-    ).localCheckpoint(eager=False)  # probed twice (state hits + window);
+        batch).localCheckpoint(eager=False)  # probed twice (state hits + window);
     # lazy (r15): the state-probe count (or the caller's single action)
     # materializes it — blocks are computed once either way (guide §1.2)
-    w_first = Window.partitionBy("h").orderBy(F.col(id_col).asc(), F.col("p").asc())
+    w_first = Window.partitionBy("h").orderBy(F.col(ID_COL).asc(), F.col("p").asc())
     batch_dups = (
         ex.withColumn("rn", F.row_number().over(w_first))
         .where(F.col("rn") > 1)
-        .select(id_col, "p")
+        .select(ID_COL, "p")
     )
     state = read_snapshot(spark, state_path, STATE)
     if state is None:
@@ -1866,12 +1792,12 @@ def substring_anchor_dedup_incremental(
     else:
         state = state.select("h")
         probe = ex.select("h").distinct()
-        if probe.count() <= max_broadcast_rows:
+        if probe.count() <= MAX_BROADCAST_ROWS:
             hits = state.join(F.broadcast(probe), "h", "left_semi").distinct()
             state_dups = ex.join(F.broadcast(hits), "h", "left_semi").select(
-                id_col, "p"
+                ID_COL, "p"
             )
         else:
-            state_dups = ex.join(state, "h", "left_semi").select(id_col, "p")
+            state_dups = ex.join(state, "h", "left_semi").select(ID_COL, "p")
         dup_starts = batch_dups.unionByName(state_dups).distinct()
-    return _drop_covered_tokens(batch, dup_starts, span_len, text_col, id_col)
+    return _drop_covered_tokens(batch, dup_starts, ANCHOR_SPAN_LEN, TEXT_COL, ID_COL)

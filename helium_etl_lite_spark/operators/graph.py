@@ -25,13 +25,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pagerank(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    damping: float = 0.85,
-    iterations: int = 8,
-) -> DataFrame:
+SRC_COL = "src"
+DST_COL = "dst"
+DAMPING = 0.85
+
+
+def pagerank(edges: DataFrame, iterations: int = 8) -> DataFrame:
     """Ranks after `iterations` rounds of the damped power iteration
     on the directed graph `edges`. Returns (node, rank); ranks sum to
     1 (dangling nodes redistribute uniformly). Deterministic up to FP
@@ -58,8 +57,8 @@ def pagerank(
     arithmetic, identical plan per round, linear total work.
     """
     nodes = (
-        edges.select(F.col(src_col).alias("node"))
-        .unionByName(edges.select(F.col(dst_col).alias("node")))
+        edges.select(F.col(SRC_COL).alias("node"))
+        .unionByName(edges.select(F.col(DST_COL).alias("node")))
         .distinct()
         .persist()
     )
@@ -67,11 +66,11 @@ def pagerank(
     if n == 0:
         nodes.unpersist()
         return nodes.withColumn("rank", F.lit(0.0))
-    out_deg = edges.groupBy(F.col(src_col).alias("__src")).agg(
+    out_deg = edges.groupBy(F.col(SRC_COL).alias("__src")).agg(
         F.count(F.lit(1)).alias("__out_deg")
     )
     e = (
-        edges.select(F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst"))
+        edges.select(F.col(SRC_COL).alias("__src"), F.col(DST_COL).alias("__dst"))
         .join(out_deg, "__src")
         .persist()
     )
@@ -106,8 +105,8 @@ def pagerank(
                 "node",
                 "__dangling",
                 (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
+                    F.lit((1.0 - DAMPING) / n)
+                    + F.lit(DAMPING)
                     * (
                         F.coalesce(F.col("__contrib"), F.lit(0.0))
                         + F.col("__dm") / F.lit(float(n))
@@ -310,21 +309,18 @@ def kcore_peel(
     return out
 
 
-def pagerank_portable_quantized(
-    edges: DataFrame,
-    rounds: int = 4,
-    scale: int = 10**12,
-    damping_pct: int = 85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+PORTABLE_SCALE = 10**12
+PORTABLE_DAMPING_PCT = 85
+
+
+def pagerank_portable_quantized(edges: DataFrame, rounds: int = 4) -> DataFrame:
     """Power iteration on INTEGER mass — the portable-quantized twin of
     `pagerank` above (the kcore/kmeans/PQ trick applied to the
-    registry's last iterative float algorithm): total mass `scale`
-    splits as r0 = scale div N per node; each round every node sends
+    registry's last iterative float algorithm): total mass `PORTABLE_SCALE`
+    splits as r0 = PORTABLE_SCALE div N per node; each round every node sends
     r div out_deg along each out-edge and re-ranks as
-        r' = (15 * (scale div N)) div 100 + (85 * in_sum) div 100.
-    Every operation is BIGINT `div`/sum (in_sum <= scale = 1e12, the
+        r' = (15 * (PORTABLE_SCALE div N)) div 100 + (85 * in_sum) div 100.
+    Every operation is BIGINT `div`/sum (in_sum <= PORTABLE_SCALE = 1e12, the
     85x product <= 8.5e13 — far below both int64 and 2^53), so the
     whole iteration is bit-identical across engines and an unrolled
     SQL oracle can verify it EXACTLY — unlike the float operator,
@@ -339,15 +335,15 @@ def pagerank_portable_quantized(
     on dst, identical economics to the float twin; no driver traffic
     except the bounded N count.
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select(F.col(SRC_COL).alias("src"), F.col(DST_COL).alias("dst"))
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     nodes = e.select(F.col("src").alias("node")).distinct().persist()
     n = nodes.count()
     if n == 0:
         nodes.unpersist()
         return nodes.withColumn("rank_q", F.lit(0).cast("long"))
-    r0 = scale // n
-    base = (100 - damping_pct) * r0 // 100
+    r0 = PORTABLE_SCALE // n
+    base = (100 - PORTABLE_DAMPING_PCT) * r0 // 100
     ed = e.join(deg, "src").persist()
     ranks = nodes.withColumn("r", F.lit(r0).cast("long"))
     for i in range(rounds):
@@ -363,7 +359,7 @@ def pagerank_portable_quantized(
                 "node",
                 (
                     F.lit(base)
-                    + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
+                    + F.expr(f"({PORTABLE_DAMPING_PCT} * coalesce(s, 0L)) div 100")
                 ).cast("long").alias("r"),
             )
         )

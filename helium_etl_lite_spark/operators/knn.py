@@ -40,14 +40,12 @@ def cosine(a, b):
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def cosine_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tasks: int = 32,
-) -> DataFrame:
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+N_TASKS = 32
+
+
+def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Exact top-k cosine neighbors of each query among `vectors`.
 
     Queries are broadcast (Q is small) so the O(N·Q) scoring never
@@ -56,16 +54,16 @@ def cosine_topk(
     ONE split, so without an explicit repartition the whole cross
     product runs in a single task (r2's +85% bench regression; the same
     defect fixed in vec_dedup in round 1 was never ported here).
-    The explicit-count `repartition(n_tasks)` is a round-robin shuffle
+    The explicit-count `repartition(N_TASKS)` is a round-robin shuffle
     of just N vector rows — O(N), tiny next to O(N·Q) scoring — and an
     explicit count keeps AQE from coalescing the byte-small but
     CPU-heavy partitions back into one task.
     The final per-query top-k is a window over q_id — Q partitions,
     each tiny.
     """
-    v = vectors.select(F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("e"))
-    v = v.repartition(n_tasks)
-    q = queries.select(F.col(id_col).alias("q_id"), _as_double(F.col(vec_col)).alias("qe"))
+    v = vectors.select(F.col(ID_COL).alias("vec_id"), _as_double(F.col(VEC_COL)).alias("e"))
+    v = v.repartition(N_TASKS)
+    q = queries.select(F.col(ID_COL).alias("q_id"), _as_double(F.col(VEC_COL)).alias("qe"))
     pairs = v.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
     scored = pairs.select(
         "q_id",
@@ -76,22 +74,16 @@ def cosine_topk(
     return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
 
 
-def assign_nearest_centroid(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tasks: int = 32,
-) -> DataFrame:
+def assign_nearest_centroid(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """Nearest-centroid assignment by squared L2 (broadcast centroids).
 
     Same single-split hazard as `cosine_topk`: the broadcast join's
     parallelism is the stream side's split count, so repartition the
     vectors before fanning out O(N·C) distance evaluations.
     """
-    v = vectors.select(F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("e"))
-    v = v.repartition(n_tasks)
-    c = centroids.select(F.col(id_col).alias("centroid_id"), _as_double(F.col(vec_col)).alias("ce"))
+    v = vectors.select(F.col(ID_COL).alias("vec_id"), _as_double(F.col(VEC_COL)).alias("e"))
+    v = v.repartition(N_TASKS)
+    c = centroids.select(F.col(ID_COL).alias("centroid_id"), _as_double(F.col(VEC_COL)).alias("ce"))
     sq_dist = F.aggregate(
         F.zip_with(F.col("e"), F.col("ce"), lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
@@ -125,8 +117,6 @@ def cosine_pairs_blocked(
     threshold: float,
     n_blocks: int = 16,
     n_tasks: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine-similarity self-join (all pairs >= threshold) as a
     balanced block-pair equi-join — no nested-loop join anywhere.
@@ -156,9 +146,9 @@ def cosine_pairs_blocked(
     """
     B = n_blocks
     v = vectors.select(
-        F.col(id_col).alias("vid"),
-        _as_double(F.col(vec_col)).alias("e"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("blk"),
+        F.col(ID_COL).alias("vid"),
+        _as_double(F.col(VEC_COL)).alias("e"),
+        F.pmod(F.xxhash64(F.col(ID_COL)), F.lit(B)).cast("int").alias("blk"),
     ).withColumn("nrm", l2_norm(F.col("e")))
     left = v.select(
         F.col("vid").alias("id_l"), F.col("e").alias("e_l"), F.col("nrm").alias("n_l"),
@@ -193,9 +183,7 @@ def cosine_pairs_blocked(
     return scored.where(F.col("cos_sim") >= threshold)
 
 
-def lloyd_refine(
-    vectors: DataFrame, centroids: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def lloyd_refine(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """One distributed Lloyd iteration: assign every vector to its
     nearest centroid, then recompute each centroid as the element-wise
     mean of its members.
@@ -205,8 +193,8 @@ def lloyd_refine(
     driver-side math, so a 100 TB corpus refines with one shuffle of
     (n_centroids × dim) partial sums. Returns (centroid_id, embedding).
     """
-    assigned = assign_nearest_centroid(vectors, centroids, id_col, vec_col)
-    v = vectors.select(F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("e"))
+    assigned = assign_nearest_centroid(vectors, centroids)
+    v = vectors.select(F.col(ID_COL).alias("vec_id"), _as_double(F.col(VEC_COL)).alias("e"))
     members = assigned.select("vec_id", "centroid_id").join(v, "vec_id")
     # posexplode_outer (r14): a plain posexplode on the `e` attribute
     # makes InferFiltersFromGenerate re-evaluate the cast transform per
@@ -226,9 +214,7 @@ def lloyd_refine(
     )
 
 
-def ivf_build(
-    vectors: DataFrame, n_lists: int = 8, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> tuple[DataFrame, DataFrame]:
+def ivf_build(vectors: DataFrame, n_lists: int = 8) -> tuple[DataFrame, DataFrame]:
     """IVF index: centroids (seeded deterministically from the first
     `n_lists` ids, refined by one Lloyd pass) + inverted lists — every
     vector tagged with its `list_id`.
@@ -237,13 +223,11 @@ def ivf_build(
     `list_id`, so a probe touches only nprobe/n_lists of the data and
     candidate generation is an equi-join on the partition key.
     """
-    seeds = vectors.where(F.col(id_col) < n_lists)
-    cents = lloyd_refine(vectors, seeds, id_col, vec_col)
+    seeds = vectors.where(F.col(ID_COL) < n_lists)
+    cents = lloyd_refine(vectors, seeds)
     inv = assign_nearest_centroid(
         vectors,
-        cents.select(F.col("centroid_id").alias(id_col), F.col("embedding").alias(vec_col)),
-        id_col,
-        vec_col,
+        cents.select(F.col("centroid_id").alias(ID_COL), F.col("embedding").alias(VEC_COL)),
     )
     lists = inv.select("vec_id", F.col("centroid_id").alias("list_id"))
     return cents, lists
@@ -251,7 +235,6 @@ def ivf_build(
 
 def ann_topk_ivf(
     vectors: DataFrame, queries: DataFrame, k: int, n_lists: int = 8, nprobe: int = 2,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via IVF probe: score only vectors whose
     inverted list is among the query's `nprobe` nearest centroids.
@@ -260,8 +243,8 @@ def ann_topk_ivf(
     an equi-join on list_id against a list_id-partitioned table — the
     cross join of brute force never materializes.
     """
-    cents, lists = ivf_build(vectors, n_lists, id_col, vec_col)
-    q = queries.select(F.col(id_col).alias("q_id"), _as_double(F.col(vec_col)).alias("qe"))
+    cents, lists = ivf_build(vectors, n_lists)
+    q = queries.select(F.col(ID_COL).alias("q_id"), _as_double(F.col(VEC_COL)).alias("qe"))
     qc = q.join(F.broadcast(cents.select("centroid_id", _as_double("embedding").alias("ce"))))
     sq_dist = F.aggregate(
         F.zip_with(F.col("qe"), F.col("ce"), lambda x, y: (x - y) * (x - y)),
@@ -274,7 +257,7 @@ def ann_topk_ivf(
         .where(F.col("rn") <= nprobe)
         .select("q_id", "qe", F.col("centroid_id").alias("list_id"))
     )
-    v = vectors.select(F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("e"))
+    v = vectors.select(F.col(ID_COL).alias("vec_id"), _as_double(F.col(VEC_COL)).alias("e"))
     cand = lists.join(F.broadcast(probes), "list_id").where(F.col("vec_id") != F.col("q_id"))
     scored = cand.join(v, "vec_id").select(
         "q_id", "vec_id", F.round(cosine(F.col("qe"), F.col("e")), 6).alias("cos_sim")
@@ -283,10 +266,10 @@ def ann_topk_ivf(
     return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
 
 
-def lsh_table_buckets(
-    vectors: DataFrame, n_tables: int = 8, bits_per_table: int = 8,
-    dim: int = 64, vec_col: str = "embedding",
-) -> DataFrame:
+DIM = 64
+
+
+def lsh_table_buckets(vectors: DataFrame, n_tables: int = 8, bits_per_table: int = 8) -> DataFrame:
     """Multi-table hyperplane LSH: one (table, bucket) row per vector
     per table, each bucket the sign-bit string of that table's own
     `bits_per_table` hyperplanes. Fewer bits per table = wider buckets;
@@ -305,7 +288,7 @@ def lsh_table_buckets(
     n_planes = n_tables * bits_per_table
     mat_sql = "array(%s)" % ",".join(
         "array(%s)"
-        % ",".join(repr(coeff(p, d)) + "D" for d in range(dim))
+        % ",".join(repr(coeff(p, d)) + "D" for d in range(DIM))
         for p in range(n_planes)
     )
     bits = F.transform(
@@ -320,7 +303,7 @@ def lsh_table_buckets(
             F.lit("1"),
         ).otherwise(F.lit("0")),
     )
-    v = vectors.withColumn("e", _as_double(F.col(vec_col))).withColumn(
+    v = vectors.withColumn("e", _as_double(F.col(VEC_COL))).withColumn(
         "__bits", bits
     )
     tables = [
@@ -342,7 +325,6 @@ def lsh_table_buckets(
 
 def _lsh_table_buckets_np(
     vectors: DataFrame, n_tables: int, bits_per_table: int, dim: int,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Arrow/numpy twin of `lsh_table_buckets` for the hot path: all
     L·b plane dots per batch are ONE sign(E @ P.T) matmul (the same
@@ -361,13 +343,13 @@ def _lsh_table_buckets_np(
             for p in range(n_tables * bits_per_table)
         ]
     )
-    out_schema = f"{id_col} long, {vec_col} array<float>, table int, bucket string"
+    out_schema = f"{ID_COL} long, {VEC_COL} array<float>, table int, bucket string"
 
     def kernel(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            E = np.vstack([np.asarray(e, dtype=np.float64) for e in pdf[vec_col]])
+            E = np.vstack([np.asarray(e, dtype=np.float64) for e in pdf[VEC_COL]])
             S = (E @ P.T) >= 0.0
             frames = []
             for t in range(n_tables):
@@ -378,8 +360,8 @@ def _lsh_table_buckets_np(
                 frames.append(
                     pd.DataFrame(
                         {
-                            id_col: pdf[id_col].to_numpy(),
-                            vec_col: pdf[vec_col],
+                            ID_COL: pdf[ID_COL].to_numpy(),
+                            VEC_COL: pdf[VEC_COL],
                             "table": t,
                             "bucket": buckets,
                         }
@@ -387,14 +369,13 @@ def _lsh_table_buckets_np(
                 )
             yield pd.concat(frames)
 
-    return vectors.select(id_col, vec_col).mapInPandas(kernel, out_schema)
+    return vectors.select(ID_COL, VEC_COL).mapInPandas(kernel, out_schema)
 
 
-def ann_topk_lsh(
-    vectors: DataFrame, queries: DataFrame, k: int,
-    n_tables: int = 24, bits_per_table: int = 6, dim: int = 64,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
+LSH_BITS_PER_TABLE = 6
+
+
+def ann_topk_lsh(vectors: DataFrame, queries: DataFrame, k: int, n_tables: int = 24) -> DataFrame:
     """Approximate top-k: candidates are vectors sharing ANY table's
     bucket with the query (multi-table union; the old single-table
     12-bit form measured recall@10 = 0.14 on the sf0.001 embeddings).
@@ -414,16 +395,12 @@ def ann_topk_lsh(
     give recall ≈ 1-(1-0.53)^24 ≈ 1.0 at a few percent scored. On
     genuinely unclustered data prefer `ann_topk_ivf` (measured
     recall@10 = 0.92 at n_lists=8, nprobe=2 on the same vectors)."""
-    vb = _lsh_table_buckets_np(
-        vectors, n_tables, bits_per_table, dim, id_col, vec_col
-    ).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("e_raw"),
+    vb = _lsh_table_buckets_np(vectors, n_tables, LSH_BITS_PER_TABLE, DIM).select(
+        F.col(ID_COL).alias("vec_id"), F.col(VEC_COL).alias("e_raw"),
         "table", "bucket",
     )
-    qb = _lsh_table_buckets_np(
-        queries, n_tables, bits_per_table, dim, id_col, vec_col
-    ).select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_raw"),
+    qb = _lsh_table_buckets_np(queries, n_tables, LSH_BITS_PER_TABLE, DIM).select(
+        F.col(ID_COL).alias("q_id"), F.col(VEC_COL).alias("q_raw"),
         F.col("table").alias("qtable"), F.col("bucket").alias("qbucket"),
     )
     cand = (
@@ -445,13 +422,7 @@ def ann_topk_lsh(
     return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
 
 
-def cosine_pairs_blocked_np(
-    vectors: DataFrame,
-    threshold: float,
-    n_blocks: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_pairs_blocked_np(vectors: DataFrame, threshold: float, n_blocks: int = 8) -> DataFrame:
     """BIT-IDENTICAL twin of cosine_pairs_blocked that scores each block
     pair with a vectorized numpy kernel (applyInPandas) instead of
     per-pair JVM array aggregates — same blocking scheme, same results,
@@ -485,9 +456,9 @@ def cosine_pairs_blocked_np(
 
     B = n_blocks
     v = vectors.select(
-        F.col(id_col).alias("vid"),
-        _as_double(F.col(vec_col)).alias("e"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int").alias("blk"),
+        F.col(ID_COL).alias("vid"),
+        _as_double(F.col(VEC_COL)).alias("e"),
+        F.pmod(F.xxhash64(F.col(ID_COL)), F.lit(B)).cast("int").alias("blk"),
     ).withColumn("nrm", l2_norm(F.col("e")))
     left = v.select(
         "vid", "e", "nrm",
@@ -552,8 +523,6 @@ def cosine_pairs_blocked_np(
 def semantic_dedup_pairs(
     vectors: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_lists: int = 0,
     block_target: int = 1024,
     max_centroid_rows: int = 500_000,
@@ -599,7 +568,7 @@ def semantic_dedup_pairs(
         )
 
     v = vectors.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("e")
+        F.col(ID_COL).alias("vid"), _as_double(F.col(VEC_COL)).alias("e")
     )
 
     # deterministic seeds: the L smallest ids (TakeOrdered — no global sort)
@@ -716,15 +685,11 @@ def semantic_dedup_pairs(
     ).where(F.col("cos_sim") >= threshold)
 
 
-def pq_train(
-    vectors: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    train_limit: int = 65_536,
-    n_iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
+PQ_TRAIN_LIMIT = 65536
+PQ_N_ITERS = 5
+
+
+def pq_train(vectors: DataFrame, m: int = 8, k: int = 16):
     """Train product-quantization codebooks: the vector dimension is
     split into `m` subspaces, each clustered into `k` centroids; a
     vector then encodes as m sub-centroid ids — 8 bytes at (m=8, k<=256)
@@ -735,8 +700,8 @@ def pq_train(
     Training is control-plane by design — production PQ (e.g. FAISS)
     trains codebooks on a bounded sample because k-means over m tiny
     subspaces needs thousands of rows, not the corpus: the
-    `train_limit` lowest ids (deterministic, TakeOrdered) come to the
-    driver and each subspace runs `n_iters` Lloyd iterations in numpy
+    `PQ_TRAIN_LIMIT` lowest ids (deterministic, TakeOrdered) come to the
+    driver and each subspace runs `PQ_N_ITERS` Lloyd iterations in numpy
     with first-k-rows seeding and lowest-index tie-breaks, so the same
     corpus always yields the same codebooks. Returns an
     (m, k, dim/m) float64 array.
@@ -744,9 +709,9 @@ def pq_train(
     import numpy as np
 
     rows = (
-        vectors.select(F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("e"))
+        vectors.select(F.col(ID_COL).alias("vid"), _as_double(F.col(VEC_COL)).alias("e"))
         .orderBy("vid")
-        .limit(train_limit)
+        .limit(PQ_TRAIN_LIMIT)
         .collect()
     )
     if not rows:
@@ -760,7 +725,7 @@ def pq_train(
     for s in range(m):
         Xs = X[:, s * dsub : (s + 1) * dsub]
         C = Xs[:k].copy()  # deterministic seeding
-        for _ in range(n_iters):
+        for _ in range(PQ_N_ITERS):
             d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             assign = np.argmin(d2, axis=1)  # first minimum: lowest id
             for j in range(k):
@@ -771,12 +736,7 @@ def pq_train(
     return books
 
 
-def pq_encode(
-    vectors: DataFrame,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(vectors: DataFrame, codebooks) -> DataFrame:
     """Encode every vector as its m sub-centroid ids (array<int>, one
     byte of information each at k<=256). Narrow mapInPandas — the
     codebooks ride the closure (m*k*dsub doubles, constant), nothing
@@ -792,7 +752,7 @@ def pq_encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
+            X = np.stack([np.asarray(x, dtype=np.float64) for x in pdf[VEC_COL]])
             codes = np.empty((len(X), m), dtype=np.int32)
             for s in range(m):
                 Xs = X[:, s * dsub : (s + 1) * dsub]
@@ -801,11 +761,11 @@ def pq_encode(
                     - 2.0 * (Xs @ books[s].T)
                 )
                 codes[:, s] = np.argmin(d2, axis=1)
-            out = pd.DataFrame({"vec_id": pdf[id_col].to_numpy()})
+            out = pd.DataFrame({"vec_id": pdf[ID_COL].to_numpy()})
             out["codes"] = list(codes)
             yield out
 
-    return vectors.select(id_col, vec_col).mapInPandas(
+    return vectors.select(ID_COL, VEC_COL).mapInPandas(
         encode, schema="vec_id long, codes array<int>"
     )
 
@@ -815,8 +775,6 @@ def pq_ann_topk(
     queries: DataFrame,
     codebooks,
     k_neighbors: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k by asymmetric distance computation (ADC): each
     query precomputes an (m, k) table of exact sub-distances to every
@@ -835,7 +793,7 @@ def pq_ann_topk(
     books = codebooks
     m, k, dsub = books.shape
     q_rows = (
-        queries.select(F.col(id_col).alias("qid"), _as_double(F.col(vec_col)).alias("qe"))
+        queries.select(F.col(ID_COL).alias("qid"), _as_double(F.col(VEC_COL)).alias("qe"))
         .orderBy("qid")
         .collect()
     )
@@ -853,7 +811,7 @@ def pq_ann_topk(
             + (Qs ** 2).sum(axis=1)[:, None]
         )
 
-    encoded = pq_encode(vectors, books, id_col, vec_col)
+    encoded = pq_encode(vectors, books)
 
     def score(batches):
         for pdf in batches:
@@ -887,15 +845,15 @@ def pq_ann_topk(
     )
 
 
+K_NEIGHBORS = 10
+
+
 def pq_ann_topk_ivf(
     vectors: DataFrame,
     queries: DataFrame,
     codebooks,
     n_lists: int = 8,
     nprobe: int = 2,
-    k_neighbors: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF+PQ — the composition FAISS ships as its production index
     (IndexIVFPQ): IVF inverted lists prune WHICH vectors are scored
@@ -917,13 +875,13 @@ def pq_ann_topk_ivf(
 
     books = codebooks
     m, k, dsub = books.shape
-    cents, lists = ivf_build(vectors, n_lists=n_lists, id_col=id_col, vec_col=vec_col)
+    cents, lists = ivf_build(vectors, n_lists=n_lists)
     cent_rows = cents.orderBy("centroid_id").collect()
     C = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows])
     cent_ids = np.array([r["centroid_id"] for r in cent_rows])
 
     q_rows = (
-        queries.select(F.col(id_col).alias("qid"), _as_double(F.col(vec_col)).alias("qe"))
+        queries.select(F.col(ID_COL).alias("qid"), _as_double(F.col(VEC_COL)).alias("qe"))
         .orderBy("qid")
         .collect()
     )
@@ -951,7 +909,7 @@ def pq_ann_topk_ivf(
         )
     tbl_by_q = {int(q_ids[i]): tables[i] for i in range(len(q_ids))}
 
-    encoded = pq_encode(vectors, books, id_col, vec_col).join(
+    encoded = pq_encode(vectors, books).join(
         lists.select(F.col("vec_id"), F.col("list_id").cast("long")), "vec_id"
     )
     cand = encoded.join(F.broadcast(probes), "list_id").where(
@@ -984,30 +942,25 @@ def pq_ann_topk_ivf(
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k_neighbors)
+        .where(F.col("rn") <= K_NEIGHBORS)
         .select("q_id", "vec_id", F.round("adc_dist", 6).alias("adc_dist"), "rn")
     )
 
 
-def pq_ann_rerank(
-    vectors: DataFrame,
-    queries: DataFrame,
-    codebooks,
-    k_neighbors: int = 10,
-    oversample: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+PQ_OVERSAMPLE = 4
+
+
+def pq_ann_rerank(vectors: DataFrame, queries: DataFrame, codebooks) -> DataFrame:
     """Two-stage retrieve-and-refine — the production ANN serving shape
     (FAISS IndexRefineFlat): the PQ-ADC stage screens a shortlist of
-    k*oversample candidates from 32x-compressed codes WITHOUT touching
+    k*PQ_OVERSAMPLE candidates from 32x-compressed codes WITHOUT touching
     the full-precision corpus, then ONLY the shortlist's true vectors
     are read back and re-scored with exact L2, and the final top-k is
     taken from the exact scores. Fixes the quantization-error ranking
     inversions PQ alone makes, at the cost of reading
-    Q x k x oversample full vectors instead of zero.
+    Q x k x PQ_OVERSAMPLE full vectors instead of zero.
 
-    Scale shape: the shortlist is Q*k*oversample rows — bounded by the
+    Scale shape: the shortlist is Q*k*PQ_OVERSAMPLE rows — bounded by the
     query set, so its join back to `vectors` is the
     AQE-broadcasts-the-small-side case; the exact re-score is row-local
     zip_with/aggregate (JVM codegen); the final top-k window partitions
@@ -1016,14 +969,13 @@ def pq_ann_rerank(
     """
     shortlist = pq_ann_topk(
         vectors, queries, codebooks,
-        k_neighbors=k_neighbors * oversample,
-        id_col=id_col, vec_col=vec_col,
+        k_neighbors=K_NEIGHBORS * PQ_OVERSAMPLE,
     ).select("q_id", "vec_id")
     v = vectors.select(
-        F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("__ve")
+        F.col(ID_COL).alias("vec_id"), _as_double(F.col(VEC_COL)).alias("__ve")
     )
     q = queries.select(
-        F.col(id_col).alias("q_id"), _as_double(F.col(vec_col)).alias("__qe")
+        F.col(ID_COL).alias("q_id"), _as_double(F.col(VEC_COL)).alias("__qe")
     )
     l2 = F.aggregate(
         F.zip_with("__qe", "__ve", lambda a, b: (a - b) * (a - b)),
@@ -1040,7 +992,7 @@ def pq_ann_rerank(
     )
     return (
         joined.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k_neighbors)
+        .where(F.col("rn") <= K_NEIGHBORS)
         .select("q_id", "vec_id", "l2_dist", "rn")
     )
 
@@ -1071,24 +1023,21 @@ def _portable_assign_quantized(points: DataFrame, cs: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_portable_assign(
-    vectors: DataFrame,
-    cents: DataFrame,
-    scale: int = 10000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+KMP_SCALE = 10000
+
+
+def kmeans_portable_assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
     """Assign raw vectors to a trained portable-kmeans codebook:
-    quantize exactly as training did (round(x*scale), the one IEEE
+    quantize exactly as training did (round(x*KMP_SCALE), the one IEEE
     multiply + half-away round), then the shared broadcast assignment
     pass. Returns (vec_id, centroid_id, dist) — dist is the exact
     integer-valued quantized squared-L2. The K-row codebook broadcasts;
     the fact side never shuffles."""
     q = vectors.select(
-        F.col(id_col).alias("vec_id"),
+        F.col(ID_COL).alias("vec_id"),
         F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0),
+            F.col(VEC_COL),
+            lambda x: F.round(x.cast("double") * F.lit(float(KMP_SCALE)), 0),
         ).alias("q"),
     )
     return _portable_assign_quantized(q, cents).select(
@@ -1101,8 +1050,6 @@ def kmeans_portable_quantized(
     k: int = 8,
     scale: int = 10000,
     rounds: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_tasks: int = 32,
     compute_stats: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
@@ -1141,16 +1088,16 @@ def kmeans_portable_quantized(
     assign+agg pass halves the most expensive stage).
 
     Seeding contract: initial centroids are the rows with
-    ``id_col < k`` — deterministic (so the generated oracle can state
+    ``ID_COL < k`` — deterministic (so the generated oracle can state
     the same seed) but it REQUIRES ids to be numeric and include
     0..k-1 (dense 0-based, as the driver's embeddings table is).
     Checked loudly below: a filtered corpus or string ids would
     otherwise silently train fewer than k centroids.
     """
     q = vectors.select(
-        F.col(id_col).alias("vec_id"),
+        F.col(ID_COL).alias("vec_id"),
         F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
+            F.col(VEC_COL), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
         ).alias("q"),
     )
     q = q.repartition(n_tasks).localCheckpoint(eager=False)
@@ -1160,7 +1107,7 @@ def kmeans_portable_quantized(
     n_seed = cents.count()
     if n_seed != k:
         raise ValueError(
-            f"kmeans_portable_quantized seeds from rows with {id_col} < "
+            f"kmeans_portable_quantized seeds from rows with {ID_COL} < "
             f"{k} and found {n_seed} — ids must be dense 0-based "
             f"numerics covering 0..{k - 1}"
         )
@@ -1217,8 +1164,6 @@ def ann_topk_ivf_portable(
     nprobe: int = 3,
     scale: int = 10000,
     rounds: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_tasks: int = 32,
 ) -> DataFrame:
     """IVF ANN whose ENTIRE train -> build -> probe path is integer-
@@ -1238,14 +1183,14 @@ def ann_topk_ivf_portable(
     """
     _, cents = kmeans_portable_quantized(
         vectors, k=n_lists, scale=scale, rounds=rounds,
-        id_col=id_col, vec_col=vec_col, n_tasks=n_tasks,
+        n_tasks=n_tasks,
         compute_stats=False,
     )
 
     qv = vectors.select(
-        F.col(id_col).alias("vec_id"),
+        F.col(ID_COL).alias("vec_id"),
         F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
+            F.col(VEC_COL), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
         ).alias("q"),
     ).repartition(n_tasks)
 
@@ -1273,9 +1218,9 @@ def ann_topk_ivf_portable(
 
     # Probe: nprobe nearest lists per query.
     qq = queries.select(
-        F.col(id_col).alias("q_id"),
+        F.col(ID_COL).alias("q_id"),
         F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
+            F.col(VEC_COL), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
         ).alias("qq"),
     )
     pw = Window.partitionBy("q_id").orderBy(
@@ -1300,57 +1245,51 @@ def ann_topk_ivf_portable(
     )
 
 
-def ann_topk_pq_portable(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    m_sub: int = 4,
-    k_codes: int = 8,
-    scale: int = 10000,
-    rounds: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tasks: int = 32,
-) -> DataFrame:
+PQP_M_SUB = 4
+PQP_K_CODES = 8
+PQP_SCALE = 10000
+PQP_ROUNDS = 2
+
+
+def ann_topk_pq_portable(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Product-Quantization ANN whose ENTIRE train -> encode -> ADC
     probe path is integer-exact — the PQ member of the portable family
     (kmeans_portable_quantized / ann_topk_ivf_portable), so unlike
     ann_topk_pq the result carries an exact driver oracle.
 
-    Construction: split the quantized dim-`dim` vectors into `m_sub`
-    subspaces, train a `k_codes`-entry codebook per subspace with
+    Construction: split the quantized `DIM`-dim vectors into `PQP_M_SUB`
+    subspaces, train a `PQP_K_CODES`-entry codebook per subspace with
     kmeans_portable_quantized (scale=1: the sub-vectors are already
     integer-valued doubles, so the inner quantization is the
-    identity), encode every vector as m_sub code ids, then score by
+    identity), encode every vector as PQP_M_SUB code ids, then score by
     ASYMMETRIC DISTANCE: per query, a (m, code) -> squared-distance
-    lookup table (m_sub*k_codes rows, broadcast), candidate score =
+    lookup table (PQP_M_SUB*PQP_K_CODES rows, broadcast), candidate score =
     SUM over subspaces of the LUT entry for the candidate's code —
     PQ's standard full-scan ADC (the IVF composition restricts the
     candidate set; this form scores all N codes rows, which is the
     honest baseline the ADC paper measures).
 
-    Exactness bounds: per-subspace squared distance <= (dim/m_sub) *
-    (2*scale)^2 = 16*4e8 = 6.4e9; the ADC sum over 4 subspaces stays
+    Exactness bounds: per-subspace squared distance <= (DIM/PQP_M_SUB) *
+    (2*PQP_SCALE)^2 = 16*4e8 = 6.4e9; the ADC sum over 4 subspaces stays
     < 2^35, far below 2^53 — every float add is exact in any order.
     Ties break on (adc_dist, vec_id); code assignment ties on
     centroid_id (inherited from the kmeans operator).
 
-    Scale: codes table is N*m_sub narrow rows; the LUT join is a
-    broadcast hash join (LUT = queries * m_sub * k_codes rows); the
+    Scale: codes table is N*PQP_M_SUB narrow rows; the LUT join is a
+    broadcast hash join (LUT = queries * PQP_M_SUB * PQP_K_CODES rows); the
     only wide shuffle is the (q_id, vec_id) partial-aggregable SUM.
     """
-    sub_len = dim // m_sub
+    sub_len = DIM // PQP_M_SUB
     qv = vectors.select(
-        F.col(id_col).alias("vec_id"),
+        F.col(ID_COL).alias("vec_id"),
         F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
+            F.col(VEC_COL), lambda x: F.round(x.cast("double") * F.lit(float(PQP_SCALE)), 0)
         ).alias("q"),
-    ).repartition(n_tasks).localCheckpoint(eager=False)
+    ).repartition(N_TASKS).localCheckpoint(eager=False)
     qq = queries.select(
-        F.col(id_col).alias("q_id"),
+        F.col(ID_COL).alias("q_id"),
         F.transform(
-            F.col(vec_col), lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0)
+            F.col(VEC_COL), lambda x: F.round(x.cast("double") * F.lit(float(PQP_SCALE)), 0)
         ).alias("q"),
     )
 
@@ -1366,13 +1305,13 @@ def ann_topk_pq_portable(
 
     codes = None
     luts = None
-    for m in range(m_sub):
+    for m in range(PQP_M_SUB):
         sub = qv.select(
             "vec_id", F.slice("q", m * sub_len + 1, sub_len).alias("embedding")
         )
         _, cents = kmeans_portable_quantized(
-            sub, k=k_codes, scale=1, rounds=rounds,
-            id_col="vec_id", vec_col="embedding", n_tasks=n_tasks,
+            sub, k=PQP_K_CODES, scale=1, rounds=PQP_ROUNDS,
+            n_tasks=N_TASKS,
             compute_stats=False,
         )
         ew = Window.partitionBy("vec_id").orderBy(
@@ -1429,14 +1368,6 @@ def ann_topk_ivfpq_portable(
     shortlist: int = 50,
     n_lists: int = 8,
     nprobe: int = 3,
-    m_sub: int = 4,
-    k_codes: int = 8,
-    scale: int = 10000,
-    rounds: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tasks: int = 32,
 ) -> DataFrame:
     """FAISS-style IVFADC made integer-exact end to end — the capstone
     of the portable ANN family: coarse inverted lists (integer k-means
@@ -1448,33 +1379,33 @@ def ann_topk_ivfpq_portable(
     the refine stage (pq_rerank) in one deterministic dataflow with a
     driver-exact oracle.
 
-    Bounds: residual elements <= 2*scale so a 16-dim subspace squared
-    distance <= 16*(4*scale)^2 ~ 2.6e10, the 4-way ADC sum < 2^37, and
+    Bounds: residual elements <= 2*PQP_SCALE so a 16-dim subspace squared
+    distance <= 16*(4*PQP_SCALE)^2 ~ 2.6e10, the 4-way ADC sum < 2^37, and
     the exact rerank distance <= 64*(4e4)^2 ~ 1e11 — all far below
     2^53; every float add is exact in any order. Ties break on ids at
     every stage (coarse assign, code assign, probe list choice, ADC
     shortlist, final rerank).
 
-    Plan: codebooks broadcast (n_lists + m_sub*k_codes rows); codes =
-    N*m_sub narrow rows keyed by list; LUTs = queries*nprobe*m_sub*
-    k_codes rows, broadcast; ADC candidates come from the (list_id, m,
+    Plan: codebooks broadcast (n_lists + PQP_M_SUB*PQP_K_CODES rows); codes =
+    N*PQP_M_SUB narrow rows keyed by list; LUTs = queries*nprobe*PQP_M_SUB*
+    PQP_K_CODES rows, broadcast; ADC candidates come from the (list_id, m,
     code) equi-join — per-query work is the probed fraction of the
     corpus, never a scan; rerank joins the `shortlist`-bounded id set
     back to the vectors.
     """
-    sub_len = dim // m_sub
+    sub_len = DIM // PQP_M_SUB
     _, cents = kmeans_portable_quantized(
-        vectors, k=n_lists, scale=scale, rounds=rounds,
-        id_col=id_col, vec_col=vec_col, n_tasks=n_tasks,
+        vectors, k=n_lists, scale=PQP_SCALE, rounds=PQP_ROUNDS,
+        n_tasks=N_TASKS,
         compute_stats=False,
     )
 
     def _quant(df, out_id):
         return df.select(
-            F.col(id_col).alias(out_id),
+            F.col(ID_COL).alias(out_id),
             F.transform(
-                F.col(vec_col),
-                lambda x: F.round(x.cast("double") * F.lit(float(scale)), 0),
+                F.col(VEC_COL),
+                lambda x: F.round(x.cast("double") * F.lit(float(PQP_SCALE)), 0),
             ).alias("q"),
         )
 
@@ -1488,7 +1419,7 @@ def ann_topk_ivfpq_portable(
                           F.lit(0.0), lambda acc, x: acc + x)
         )
 
-    qv = _quant(vectors, "vec_id").repartition(n_tasks).localCheckpoint(
+    qv = _quant(vectors, "vec_id").repartition(N_TASKS).localCheckpoint(
         eager=False
     )
     aw = Window.partitionBy("vec_id").orderBy(
@@ -1510,13 +1441,13 @@ def ann_topk_ivfpq_portable(
 
     codes = None
     pq_cents = {}
-    for m in range(m_sub):
+    for m in range(PQP_M_SUB):
         sub = assign.select(
             "vec_id", F.slice("res", m * sub_len + 1, sub_len).alias("embedding")
         )
         _, cm = kmeans_portable_quantized(
-            sub, k=k_codes, scale=1, rounds=rounds,
-            id_col="vec_id", vec_col="embedding", n_tasks=n_tasks,
+            sub, k=PQP_K_CODES, scale=1, rounds=PQP_ROUNDS,
+            n_tasks=N_TASKS,
             compute_stats=False,
         )
         pq_cents[m] = cm
@@ -1553,7 +1484,7 @@ def ann_topk_ivfpq_portable(
         )
     )
     luts = None
-    for m in range(m_sub):
+    for m in range(PQP_M_SUB):
         lut = (
             probe.select(
                 "q_id",
@@ -1619,21 +1550,14 @@ def ann_topk_ivfpq_portable(
 SEM_STATE_VERSION = "semdedup-hyperplane-splitmix-b6xL10-v1"
 
 
-def _sem_bucket_rows(
-    vectors: DataFrame,
-    n_bands: int = 10,
-    band_planes: int = 6,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def _sem_bucket_rows(vectors: DataFrame) -> DataFrame:
     """Banded hyperplane-LSH rows: one (id, e, nrm, band, bucket) row
-    per band, buckets = sign-bit strings of `band_planes` deterministic
+    per band, buckets = sign-bit strings of `BAND_PLANES` deterministic
     hyperplanes (no RNG — _plane_coeff avalanche, plane index global
     across bands). Banding is what makes the probe RECALL tunable where
     a single wide bucket is not: at cosine s the per-plane collision
-    probability is 1 - arccos(s)/pi, a band collides at p^band_planes
-    and ANY of n_bands bands suffices — at s=0.8, b=6, L=10 that is
+    probability is 1 - arccos(s)/pi, a band collides at p^BAND_PLANES
+    and ANY of N_BANDS bands suffices — at s=0.8, b=6, L=10 that is
     1-(1-0.25)^10 ~ 0.94, and a planted near-copy (s~0.99) collides
     with probability 1 - 1e-8. Zero-norm vectors get NO rows (cosine
     undefined) — callers must pass them through as survivors.
@@ -1645,9 +1569,9 @@ def _sem_bucket_rows(
     walked with transform/aggregate, buckets bit-identical to the
     per-literal form (same _plane_coeff global plane indexing)."""
     coeff = _plane_coeff
-    n_planes = n_bands * band_planes
+    n_planes = N_BANDS * BAND_PLANES
     mat_sql = "array(%s)" % ",".join(
-        "array(%s)" % ",".join(repr(coeff(p, d)) + "D" for d in range(dim))
+        "array(%s)" % ",".join(repr(coeff(p, d)) + "D" for d in range(DIM))
         for p in range(n_planes)
     )
     bits = F.transform(
@@ -1663,7 +1587,7 @@ def _sem_bucket_rows(
         ).otherwise(F.lit("0")),
     )
     v = (
-        vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("e"))
+        vectors.select(F.col(ID_COL), _as_double(F.col(VEC_COL)).alias("e"))
         .withColumn("nrm", l2_norm(F.col("e")))
         .where(F.col("nrm") > 0)
         .withColumn("__bits", bits)
@@ -1672,32 +1596,26 @@ def _sem_bucket_rows(
         F.struct(
             F.lit(band).alias("band"),
             F.concat_ws(
-                "", F.slice(F.col("__bits"), band * band_planes + 1, band_planes)
+                "", F.slice(F.col("__bits"), band * BAND_PLANES + 1, BAND_PLANES)
             ).alias("bucket"),
         )
-        for band in range(n_bands)
+        for band in range(N_BANDS)
     ]
     return v.select(
-        id_col, "e", "nrm", F.explode(F.array(*bands)).alias("bb")
-    ).select(id_col, "e", "nrm", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+        ID_COL, "e", "nrm", F.explode(F.array(*bands)).alias("bb")
+    ).select(ID_COL, "e", "nrm", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
 def _sem_cos(e_a, n_a, e_b, n_b):
     return dot(e_a, e_b) / (n_a * n_b)
 
 
-def semantic_filter_new(
-    spark,
-    batch: DataFrame,
-    state_path: str,
-    threshold: float,
-    n_bands: int = 10,
-    band_planes: int = 6,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_broadcast_rows: int = 4_000_000,
-) -> DataFrame:
+N_BANDS = 10
+BAND_PLANES = 6
+MAX_BROADCAST_ROWS = 4_000_000
+
+
+def semantic_filter_new(spark, batch: DataFrame, state_path: str, threshold: float) -> DataFrame:
     """Incremental SemDeDup, read side: batch vectors with no kept
     near-duplicate (cosine >= threshold) in the persisted representative
     state, with in-batch near-dups collapsed first under the SemDeDup
@@ -1721,17 +1639,17 @@ def semantic_filter_new(
     store with no data — missing, or only the construction marker a
     crash before the first fold-in left — reads as the empty state; a
     marker naming another construction is refused."""
-    rows = _sem_bucket_rows(batch, n_bands, band_planes, dim, id_col, vec_col)
+    rows = _sem_bucket_rows(batch)
     # reused >=3 times below; lazy (r15): the first consumer
     # materializes it in its own job
     rows = rows.localCheckpoint(eager=False)
     # ---- in-batch keeper assignment (min-id representative) ----
     a = rows.select(
-        F.col(id_col).alias("id_a"), F.col("e").alias("e_a"),
+        F.col(ID_COL).alias("id_a"), F.col("e").alias("e_a"),
         F.col("nrm").alias("n_a"), "band", "bucket",
     )
     b = rows.select(
-        F.col(id_col).alias("id_b"), F.col("e").alias("e_b"),
+        F.col(ID_COL).alias("id_b"), F.col("e").alias("e_b"),
         F.col("nrm").alias("n_b"), "band", "bucket",
     )
     cand = (
@@ -1745,10 +1663,10 @@ def semantic_filter_new(
             _sem_cos(F.col("e_a"), F.col("n_a"), F.col("e_b"), F.col("n_b"))
             >= F.lit(threshold)
         )
-        .select(F.col("id_b").alias(id_col))
+        .select(F.col("id_b").alias(ID_COL))
         .distinct()
     )
-    kept = batch.join(dominated, id_col, "left_anti")
+    kept = batch.join(dominated, ID_COL, "left_anti")
     # zero-norm rows never appear in `rows`; they are already inside
     # `kept` (nothing can dominate them) and must skip the state probe.
     check_construction(state_path, SEM_STATE_VERSION, stamp=False)
@@ -1757,10 +1675,10 @@ def semantic_filter_new(
         return kept
     # no broadcast hint on `dominated` (review find): a duplicate-heavy
     # corpus-sized batch makes it unbounded — let AQE pick the strategy.
-    probe = rows.join(dominated, id_col, "left_anti")
+    probe = rows.join(dominated, ID_COL, "left_anti")
     # lazy (r15): the unconditional guard count materializes it
     bb = probe.select("band", "bucket").distinct().localCheckpoint(eager=False)
-    if bb.count() <= max_broadcast_rows:
+    if bb.count() <= MAX_BROADCAST_ROWS:
         state = state.join(F.broadcast(bb), ["band", "bucket"], "left_semi")
     dup_ids = (
         probe.join(
@@ -1774,23 +1692,13 @@ def semantic_filter_new(
             _sem_cos(F.col("e"), F.col("nrm"), F.col("e_s"), F.col("n_s"))
             >= F.lit(threshold)
         )
-        .select(id_col)
+        .select(ID_COL)
         .distinct()
     )
-    return kept.join(dup_ids, id_col, "left_anti")
+    return kept.join(dup_ids, ID_COL, "left_anti")
 
 
-def semantic_state_add(
-    spark,
-    fresh: DataFrame,
-    state_path: str,
-    batch_id: int,
-    n_bands: int = 10,
-    band_planes: int = 6,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
+def semantic_state_add(spark, fresh: DataFrame, state_path: str, batch_id: int) -> None:
     """Incremental SemDeDup, write side: fold the landed batch's bucket
     rows (+vectors — representatives must be retained, cosine needs
     them; unlike the hash families the state is O(kept * d), which IS
@@ -1799,5 +1707,5 @@ def semantic_state_add(
     replayed batch id is skipped). The construction marker is stamped
     before the first fold-in and checked on every later one."""
     check_construction(state_path, SEM_STATE_VERSION, stamp=True)
-    rows = _sem_bucket_rows(fresh, n_bands, band_planes, dim, id_col, vec_col)
+    rows = _sem_bucket_rows(fresh)
     commit_state(spark, state_path, rows, batch_id)

@@ -90,9 +90,11 @@ def _keep_pair(p: Column) -> Column:
     )
 
 
-def html_extract(
-    df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+HTML_COL = "html"
+ID_COL = "doc_id"
+
+
+def html_extract(df: DataFrame) -> DataFrame:
     """Extract main text from a markup column: returns (id, n_blocks,
     n_kept, text_extract) where n_blocks counts blocks with any
     stripped text at all and text_extract joins the kept blocks with
@@ -103,14 +105,14 @@ def html_extract(
     array that every gate reads — Spark performs no common-
     subexpression elimination across higher-order-function lambdas, so
     the naive form re-ran the regex work 3x per block (review find)."""
-    blocks = F.split(F.col(html_col), BLOCK_SPLIT_RE)
+    blocks = F.split(F.col(HTML_COL), BLOCK_SPLIT_RE)
     pairs = F.transform(
         blocks,
         lambda b: F.struct(_stripped(b).alias("s"), _link_len(b).alias("l")),
     )
     kept = F.transform(F.filter(pairs, _keep_pair), lambda p: p["s"])
     return df.select(
-        id_col,
+        ID_COL,
         F.size(
             F.filter(pairs, lambda p: F.length(p["s"]) > 0)
         ).cast("long").alias("n_blocks"),
@@ -119,24 +121,27 @@ def html_extract(
     )
 
 
-def html_wrap(df: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id", par_tokens: int = 25) -> DataFrame:
+TEXT_COL = "text"
+PAR_TOKENS = 25
+
+
+def html_wrap(df: DataFrame) -> DataFrame:
     """Deterministic markup-bearing fixture: wrap each document's text
     in a small page (title head, link-heavy nav, heading, the text as
-    ``par_tokens``-token paragraphs, a short stub, a copyright footer)
+    ``PAR_TOKENS``-token paragraphs, a short stub, a copyright footer)
     so the extractor has real boilerplate classes to drop and the
     oracle can restate the page from the source text."""
-    did = F.col(id_col).cast("string")
-    toks = F.split(F.col(text_col), " ")
-    n_par = (F.greatest(F.size(toks), F.lit(1)) + (par_tokens - 1)).cast(
+    did = F.col(ID_COL).cast("string")
+    toks = F.split(F.col(TEXT_COL), " ")
+    n_par = (F.greatest(F.size(toks), F.lit(1)) + (PAR_TOKENS - 1)).cast(
         "long"
-    ) / par_tokens
+    ) / PAR_TOKENS
     pars = F.array_join(
         F.transform(
             F.sequence(F.lit(0), n_par.cast("long") - 1),
             lambda i: F.concat(
                 F.lit("<p>"),
-                F.array_join(F.slice(toks, i * par_tokens + 1, par_tokens), " "),
+                F.array_join(F.slice(toks, i * PAR_TOKENS + 1, PAR_TOKENS), " "),
                 F.lit("</p>"),
             ),
         ),
@@ -184,23 +189,22 @@ def _keep_sql(b: str) -> str:
     )
 
 
-def html_wrap_sql(text_col: str = "text", id_col: str = "doc_id",
-                  par_tokens: int = 25) -> str:
+def html_wrap_sql() -> str:
     """DuckDB expression rebuilding html_wrap's page from the text."""
-    t = f"string_split({text_col}, ' ')"
-    n_par = f"((greatest(len({t}), 1) + {par_tokens - 1}) // {par_tokens})"
+    t = f"string_split({TEXT_COL}, ' ')"
+    n_par = f"((greatest(len({t}), 1) + {PAR_TOKENS - 1}) // {PAR_TOKENS})"
     pars = (
         "array_to_string(list_transform(generate_series(0, "
         f"CAST({n_par} AS BIGINT) - 1), i -> '<p>' || "
-        f"array_to_string(list_slice({t}, i*{par_tokens}+1, "
-        f"i*{par_tokens}+{par_tokens}), ' ') || '</p>'), '')"
+        f"array_to_string(list_slice({t}, i*{PAR_TOKENS}+1, "
+        f"i*{PAR_TOKENS}+{PAR_TOKENS}), ' ') || '</p>'), '')"
     )
     return (
-        f"'<html><head><title>Doc ' || CAST({id_col} AS VARCHAR) || "
+        f"'<html><head><title>Doc ' || CAST({ID_COL} AS VARCHAR) || "
         "'</title></head><body><div class=\"nav\"><a href=\"/\">Home</a>"
         " | <a href=\"/about\">About</a> | <a href=\"/contact\">Contact"
         '</a></div><h1>Document \' || CAST('
-        f"{id_col} AS VARCHAR) || '</h1>' || {pars} || "
+        f"{ID_COL} AS VARCHAR) || '</h1>' || {pars} || "
         "'<p>Read more</p><div class=\"footer\">Copyright 2024 Example"
         " Corp. All rights reserved.</div></body></html>'"
     )

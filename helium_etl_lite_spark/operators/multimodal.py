@@ -231,10 +231,13 @@ def _png_chunk(ctype: bytes, body: bytes) -> bytes:
     )
 
 
-def encode_png_bytes(plane: bytes, width: int, height: int, channels: int = 3) -> bytes:
+PNG_CHANNELS_RGB = 3
+
+
+def encode_png_bytes(plane: bytes, width: int, height: int) -> bytes:
     """Minimal valid PNG writer: 8-bit, filter 0 on every scanline,
     one zlib IDAT. Any PNG reader (including decode_png) parses it."""
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
+    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[PNG_CHANNELS_RGB]
     import zlib
 
     ihdr = (
@@ -242,7 +245,7 @@ def encode_png_bytes(plane: bytes, width: int, height: int, channels: int = 3) -
         + height.to_bytes(4, "big")
         + bytes([8, color_type, 0, 0, 0])
     )
-    stride = width * channels
+    stride = width * PNG_CHANNELS_RGB
     scanlines = b"".join(
         b"\x00" + plane[y * stride : (y + 1) * stride] for y in range(height)
     )
@@ -318,12 +321,16 @@ def _fan_out_small(docs: DataFrame) -> DataFrame:
     return fan_out_small(docs)
 
 
-def to_binary_assets(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+TEXT_COL = "text"
+ID_COL = "doc_id"
+
+
+def to_binary_assets(docs: DataFrame) -> DataFrame:
     """Model an asset table: id + opaque binary payload + metadata
     struct (mime/size), as a real image/audio table would look."""
-    payload = F.encode(F.col(text_col), "utf-8")
+    payload = F.encode(F.col(TEXT_COL), "utf-8")
     return docs.select(
-        F.col(id_col),
+        F.col(ID_COL),
         payload.alias("payload"),
         F.struct(
             F.lit("application/x-fake").alias("mime"),
@@ -332,8 +339,7 @@ def to_binary_assets(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def encode_ppm(docs: DataFrame, width: int = 24, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def encode_ppm(docs: DataFrame, width: int = 24) -> DataFrame:
     """Render each document's bytes as a real binary PPM (P6) payload:
     fixed width, height = ceil(n_bytes / (3*width)), pixel plane =
     text bytes zero-padded to width*height*3. A deterministic synthetic
@@ -351,10 +357,10 @@ def encode_ppm(docs: DataFrame, width: int = 24, text_col: str = "text",
 
         for pdf in batches:
             yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": pdf[text_col].map(one)}
+                {"doc_id": pdf[ID_COL], "payload": pdf[TEXT_COL].map(one)}
             )
 
-    out = _fan_out_small(docs.select(id_col, text_col)).mapInPandas(encode, schema="doc_id long, payload binary")
+    out = _fan_out_small(docs.select(ID_COL, TEXT_COL)).mapInPandas(encode, schema="doc_id long, payload binary")
     return out.select(
         "doc_id",
         "payload",
@@ -365,10 +371,12 @@ def encode_ppm(docs: DataFrame, width: int = 24, text_col: str = "text",
     )
 
 
-def encode_png(docs: DataFrame, width: int = 24, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+ASSET_WIDTH = 24
+
+
+def encode_png(docs: DataFrame) -> DataFrame:
     """PNG twin of encode_ppm: the SAME deterministic pixel plane (text
-    bytes zero-padded to width*h*3), transported as a real compressed
+    bytes zero-padded to ASSET_WIDTH*h*3), transported as a real compressed
     PNG instead of raw PPM — so decoded geometry/stats must agree with
     the PPM path bit-for-bit while the payload exercises the inflate +
     unfilter lane."""
@@ -376,16 +384,16 @@ def encode_png(docs: DataFrame, width: int = 24, text_col: str = "text",
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def one(text: str) -> bytes:
             raw = text.encode("utf-8")
-            h = max(1, -(-len(raw) // (3 * width)))
-            plane = raw.ljust(width * h * 3, b"\x00")
-            return encode_png_bytes(plane, width, h, channels=3)
+            h = max(1, -(-len(raw) // (3 * ASSET_WIDTH)))
+            plane = raw.ljust(ASSET_WIDTH * h * 3, b"\x00")
+            return encode_png_bytes(plane, ASSET_WIDTH, h)
 
         for pdf in batches:
             yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": pdf[text_col].map(one)}
+                {"doc_id": pdf[ID_COL], "payload": pdf[TEXT_COL].map(one)}
             )
 
-    out = _fan_out_small(docs.select(id_col, text_col)).mapInPandas(encode, schema="doc_id long, payload binary")
+    out = _fan_out_small(docs.select(ID_COL, TEXT_COL)).mapInPandas(encode, schema="doc_id long, payload binary")
     return out.select(
         "doc_id",
         "payload",
@@ -396,8 +404,10 @@ def encode_png(docs: DataFrame, width: int = 24, text_col: str = "text",
     )
 
 
-def encode_jpeg(docs: DataFrame, width: int = 24, text_col: str = "text",
-                id_col: str = "doc_id", subsample_420: bool = True) -> DataFrame:
+SUBSAMPLE_420 = True
+
+
+def encode_jpeg(docs: DataFrame) -> DataFrame:
     """JPEG twin of encode_ppm/encode_png: the same deterministic RGB
     plane, transported as a REAL baseline JPEG (operators/jpeg.py —
     Annex K tables, 4:2:0 by default like real-world encoders). Lossy,
@@ -410,17 +420,17 @@ def encode_jpeg(docs: DataFrame, width: int = 24, text_col: str = "text",
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def one(text: str) -> bytes:
             raw = text.encode("utf-8")
-            h = max(1, -(-len(raw) // (3 * width)))
-            plane = raw.ljust(width * h * 3, b"\x00")
-            px = np.frombuffer(plane, dtype=np.uint8).reshape(h, width, 3)
-            return jpeg_codec.encode_jpeg_bytes(px, subsample_420=subsample_420)
+            h = max(1, -(-len(raw) // (3 * ASSET_WIDTH)))
+            plane = raw.ljust(ASSET_WIDTH * h * 3, b"\x00")
+            px = np.frombuffer(plane, dtype=np.uint8).reshape(h, ASSET_WIDTH, 3)
+            return jpeg_codec.encode_jpeg_bytes(px, subsample_420=SUBSAMPLE_420)
 
         for pdf in batches:
             yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": pdf[text_col].map(one)}
+                {"doc_id": pdf[ID_COL], "payload": pdf[TEXT_COL].map(one)}
             )
 
-    out = _fan_out_small(docs.select(id_col, text_col)).mapInPandas(encode, schema="doc_id long, payload binary")
+    out = _fan_out_small(docs.select(ID_COL, TEXT_COL)).mapInPandas(encode, schema="doc_id long, payload binary")
     return out.select(
         "doc_id",
         "payload",
@@ -516,14 +526,18 @@ def extract_features(assets: DataFrame) -> DataFrame:
     return assets.select("doc_id", "payload").mapInPandas(features, schema=FEATURES_SCHEMA)
 
 
-def resize_assets(decoded: DataFrame, max_w: int = 320, max_h: int = 240) -> DataFrame:
+RESIZE_MAX_W = 320
+RESIZE_MAX_H = 240
+
+
+def resize_assets(decoded: DataFrame) -> DataFrame:
     """Fit-in-box resize of the decoded dimensions: pure column
     arithmetic (no UDF — the geometry math is JVM-side and codegen'd;
     only the pixel resample itself would need a kernel, which is the
     STUB part at this container's library surface)."""
     w = F.greatest(F.col("width"), F.lit(1))
     h = F.greatest(F.col("height"), F.lit(1))
-    scale = F.least(F.lit(1.0), F.lit(float(max_w)) / w, F.lit(float(max_h)) / h)
+    scale = F.least(F.lit(1.0), F.lit(float(RESIZE_MAX_W)) / w, F.lit(float(RESIZE_MAX_H)) / h)
     return decoded.select(
         "doc_id",
         "width",
@@ -534,16 +548,20 @@ def resize_assets(decoded: DataFrame, max_w: int = 320, max_h: int = 240) -> Dat
     )
 
 
-def sample_frames(decoded: DataFrame, every_n: int = 4, fps: float = 24.0) -> DataFrame:
-    """Frame sampling: explode every `every_n`-th frame index of each
+SAMPLE_EVERY_N = 4
+SAMPLE_FPS = 24.0
+
+
+def sample_frames(decoded: DataFrame) -> DataFrame:
+    """Frame sampling: explode every `SAMPLE_EVERY_N`-th frame index of each
     asset into its own row with a timestamp — the generate/UNNEST shape
     (SURVEY E5) applied to media. Row count scales with frames kept,
     not frames decoded; at 100 TB the sampled explode is what keeps the
     downstream decode cost sublinear in video length."""
-    idx = F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
+    idx = F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(SAMPLE_EVERY_N))
     return decoded.select(
         "doc_id", "n_frames", F.explode(idx).alias("frame_idx")
-    ).withColumn("frame_ts", F.round(F.col("frame_idx") / F.lit(fps), 6))
+    ).withColumn("frame_ts", F.round(F.col("frame_idx") / F.lit(SAMPLE_FPS), 6))
 
 
 
@@ -564,24 +582,28 @@ def _pixels_netpbm(data: bytes) -> np.ndarray:
     return img.mean(axis=2)
 
 
-def _dhash_bits(gray: np.ndarray, hash_w: int = 8, hash_h: int = 8) -> int:
-    """Difference hash: area-downsample to (hash_h, hash_w+1) blocks,
+DHASH_W = 8
+DHASH_H = 8
+
+
+def _dhash_bits(gray: np.ndarray) -> int:
+    """Difference hash: area-downsample to (DHASH_H, DHASH_W+1) blocks,
     bit = left block mean < right block mean. 64 bits at the default
     size. Robust to resolution and brightness scaling; one flipped
     source byte moves one block mean epsilon — identical or near-
     identical hashes for near-identical images.
 
-    Degenerate inputs (fewer than hash_h rows and/or hash_w+1 cols) are
+    Degenerate inputs (fewer than DHASH_H rows and/or DHASH_W+1 cols) are
     upsampled by pixel repetition first: array_split on a too-short
     axis yields EMPTY chunks whose mean is NaN, and NaN comparisons
     silently forced those bits to 0 — a height-1 strip kept only 8 of
     64 effective bits, collapsing unrelated short images into one
     perceptual bucket (found in review; regression-tested)."""
     h, w = gray.shape
-    if h < hash_h:
-        gray = np.repeat(gray, -(-hash_h // h), axis=0)
-    if w < hash_w + 1:
-        gray = np.repeat(gray, -(-(hash_w + 1) // w), axis=1)
+    if h < DHASH_H:
+        gray = np.repeat(gray, -(-DHASH_H // h), axis=0)
+    if w < DHASH_W + 1:
+        gray = np.repeat(gray, -(-(DHASH_W + 1) // w), axis=1)
     # r14 (guide §4.2): vectorized block means — the former
     # array_split + per-cell .mean() ran ~72 tiny numpy calls per
     # frame (~0.6 ms/frame, the video-dedup hot spot). reduceat over
@@ -595,12 +617,12 @@ def _dhash_bits(gray: np.ndarray, hash_w: int = 8, hash_h: int = 8) -> int:
         return np.cumsum([0] + [q + 1] * r + [q] * (k - r))
 
     g = np.asarray(gray, dtype=np.float64)
-    ri = _bounds(g.shape[0], hash_h)
-    ci = _bounds(g.shape[1], hash_w + 1)
+    ri = _bounds(g.shape[0], DHASH_H)
+    ci = _bounds(g.shape[1], DHASH_W + 1)
     row_sums = np.add.reduceat(g, ri[:-1], axis=0)
     cell_sums = np.add.reduceat(row_sums, ci[:-1], axis=1)
     cells = cell_sums / np.outer(np.diff(ri), np.diff(ci))
-    bits_mat = cells[:, :hash_w] < cells[:, 1 : hash_w + 1]
+    bits_mat = cells[:, :DHASH_W] < cells[:, 1 : DHASH_W + 1]
     return int.from_bytes(np.packbits(bits_mat.ravel()).tobytes(), "big")
 
 
@@ -658,7 +680,7 @@ def phash_hamming(a, b):
 
 
 def phash_band_neardup(
-    hashed: DataFrame, k: int = 3, id_col: str = "doc_id"
+    hashed: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Image NEAR-dup keeper assignment at hamming distance <= k over
     64-bit perceptual hashes — the upgrade of exact-equality phash
@@ -727,11 +749,11 @@ def phash_band_neardup(
         cand.join(keeper_hash, "__cand")
         .select(
             F.col(id_col),
-            F.when((ham <= k) & (F.col("__cand") != F.col(id_col)), F.col("__cand"))
+            F.when((ham <= PAIR_HAMMING_K) & (F.col("__cand") != F.col(id_col)), F.col("__cand"))
             .otherwise(F.col(id_col))
             .cast("long")
             .alias("keeper_doc_id"),
-            F.when((ham <= k) & (F.col("__cand") != F.col(id_col)), ham)
+            F.when((ham <= PAIR_HAMMING_K) & (F.col("__cand") != F.col(id_col)), ham)
             .otherwise(F.lit(0))
             .cast("int")
             .alias("hamming"),
@@ -811,8 +833,10 @@ def decode_wav(data: bytes) -> dict:
     }
 
 
-def encode_wav(docs: DataFrame, sample_rate: int = 8000,
-               text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+SAMPLE_RATE = 8000
+
+
+def encode_wav(docs: DataFrame) -> DataFrame:
     """Audio twin of encode_ppm: each document's UTF-8 bytes become a
     mono PCM16 WAV (consecutive byte pairs little-endian; odd tails
     dropped; empty text yields one zero sample). Deterministic, so a
@@ -846,14 +870,14 @@ def encode_wav(docs: DataFrame, sample_rate: int = 8000,
                     .astype(np.int32)
                 )
                 samples = (samples[:, 0] + samples[:, 1] * 256).astype("<i2")
-            return encode_wav_bytes(samples, sample_rate)
+            return encode_wav_bytes(samples, SAMPLE_RATE)
 
         for pdf in batches:
             yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": pdf[text_col].map(one)}
+                {"doc_id": pdf[ID_COL], "payload": pdf[TEXT_COL].map(one)}
             )
 
-    out = _fan_out_small(docs.select(id_col, text_col)).mapInPandas(
+    out = _fan_out_small(docs.select(ID_COL, TEXT_COL)).mapInPandas(
         encode, schema="doc_id long, payload binary"
     )
     return out.select(
@@ -866,7 +890,7 @@ def encode_wav(docs: DataFrame, sample_rate: int = 8000,
     )
 
 
-def decode_wav_assets(assets: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def decode_wav_assets(assets: DataFrame) -> DataFrame:
     """Decode WAV payloads to per-asset audio stats: sample counts and
     format fields plus energy (sum of squared samples) and peak — all
     INTEGERS, so a decode query over a deterministic corpus is exact
@@ -876,7 +900,7 @@ def decode_wav_assets(assets: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
+            for did, payload in zip(pdf[ID_COL], pdf["payload"]):
                 d = decode_wav(bytes(payload))
                 s = d["samples"].astype(np.int64)
                 rows.append(
@@ -897,7 +921,7 @@ def decode_wav_assets(assets: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 ],
             )
 
-    return assets.select(id_col, "payload").mapInPandas(
+    return assets.select(ID_COL, "payload").mapInPandas(
         kernel,
         schema=(
             "doc_id long, sample_rate long, n_channels long, "
@@ -945,7 +969,7 @@ SPEC_SIN = {
 # /1024 floor the per-band total stays < 2^62 for any corpus document.
 
 
-def spectrogram_band_energies(samples, bands=SPEC_BANDS) -> dict:
+def spectrogram_band_energies(samples) -> dict:
     """Fixed-point DFT band energies of one int16 sample stream:
     windows of SPEC_WINDOW (last window may be partial), per window
     e_k = (re_k^2 + im_k^2) // SPEC_ENERGY_SHIFT with integer
@@ -961,24 +985,24 @@ def spectrogram_band_energies(samples, bands=SPEC_BANDS) -> dict:
     s = np.asarray(samples, dtype=np.int64)
     n_windows = max(1, (len(s) + SPEC_WINDOW - 1) // SPEC_WINDOW)
     if len(s) == 0:
-        return {"n_windows": n_windows, "energies": {k: 0 for k in bands}}
+        return {"n_windows": n_windows, "energies": {k: 0 for k in SPEC_BANDS}}
     pad = n_windows * SPEC_WINDOW - len(s)
     W = np.concatenate([s, np.zeros(pad, dtype=np.int64)]).reshape(
         n_windows, SPEC_WINDOW
     )
-    C = np.array([SPEC_COS[k] for k in bands], dtype=np.int64).T
-    Sn = np.array([SPEC_SIN[k] for k in bands], dtype=np.int64).T
+    C = np.array([SPEC_COS[k] for k in SPEC_BANDS], dtype=np.int64).T
+    Sn = np.array([SPEC_SIN[k] for k in SPEC_BANDS], dtype=np.int64).T
     re = W @ C
     im = W @ Sn
     e = (re * re + im * im) // SPEC_ENERGY_SHIFT
     tot = e.sum(axis=0)
     return {
         "n_windows": n_windows,
-        "energies": {k: int(tot[j]) for j, k in enumerate(bands)},
+        "energies": {k: int(tot[j]) for j, k in enumerate(SPEC_BANDS)},
     }
 
 
-def audio_spectrogram_assets(assets: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def audio_spectrogram_assets(assets: DataFrame) -> DataFrame:
     """Decode WAV payloads through the REAL RIFF parser, then extract
     fixed-point spectrogram band energies — one narrow Arrow kernel
     (binary in, 6 integer columns out, no shuffle)."""
@@ -987,7 +1011,7 @@ def audio_spectrogram_assets(assets: DataFrame, id_col: str = "doc_id") -> DataF
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
+            for did, payload in zip(pdf[ID_COL], pdf["payload"]):
                 d = decode_wav(bytes(payload))
                 sp = spectrogram_band_energies(d["samples"])
                 rows.append(
@@ -1001,7 +1025,7 @@ def audio_spectrogram_assets(assets: DataFrame, id_col: str = "doc_id") -> DataF
     schema = "doc_id long, n_windows long, " + ", ".join(
         f"{c} long" for c in band_cols
     )
-    return assets.select(id_col, "payload").mapInPandas(kernel, schema=schema)
+    return assets.select(ID_COL, "payload").mapInPandas(kernel, schema=schema)
 
 
 # --- audio fingerprint: band-energy-difference bits (Haitsma-Kalker
@@ -1052,30 +1076,31 @@ def audio_fingerprint(samples) -> tuple:
     return (n_windows, sig)
 
 
-def audio_fingerprint_assets(assets: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def audio_fingerprint_assets(assets: DataFrame) -> DataFrame:
     """Decode WAV payloads and fingerprint — one narrow Arrow kernel."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
+            for did, payload in zip(pdf[ID_COL], pdf["payload"]):
                 d = decode_wav(bytes(payload))
                 nw, sig = audio_fingerprint(d["samples"])
                 rows.append((did, nw, sig))
             yield pd.DataFrame(rows, columns=["doc_id", "n_windows", "sig"])
 
-    return assets.select(id_col, "payload").mapInPandas(
+    return assets.select(ID_COL, "payload").mapInPandas(
         kernel, schema="doc_id long, n_windows long, sig long"
     )
 
 
-def audio_fingerprint_neardup(
-    fps: DataFrame, max_hamming: int = 2, id_col: str = "doc_id"
-) -> DataFrame:
+AUDIO_MAX_HAMMING = 2
+
+
+def audio_fingerprint_neardup(fps: DataFrame) -> DataFrame:
     """Near-duplicate audio pairs by banded hamming join (the
     multimodal_phash_neardup recipe on the 15-bit signature): split
     the signature into 3 five-bit bands — two signatures within
-    hamming `max_hamming` (< 3 bands) MUST agree on some band
+    hamming `AUDIO_MAX_HAMMING` (< 3 bands) MUST agree on some band
     (pigeonhole), so candidate generation is an equi-join on
     (band_idx, band_value), never all-pairs; exact hamming verifies.
     Returns (doc_a, doc_b, hamming), doc_a < doc_b."""
@@ -1083,7 +1108,7 @@ def audio_fingerprint_neardup(
     for b in range(3):
         bands.append(
             fps.select(
-                F.col(id_col).alias("id"),
+                F.col(ID_COL).alias("id"),
                 "sig",
                 F.lit(b).alias("band"),
                 F.shiftright("sig", b * 5).bitwiseAND(F.lit(31)).alias("bval"),
@@ -1110,7 +1135,7 @@ def audio_fingerprint_neardup(
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
         cand.withColumn("hamming", ham.cast("long"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= AUDIO_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )
 
@@ -1140,7 +1165,7 @@ def _riff_list(ltype: bytes, body: bytes) -> bytes:
 
 
 def encode_avi_bytes(
-    frames: list[np.ndarray], fps: int = 8, codec: str = "raw"
+    frames: list[np.ndarray], codec: str = "raw"
 ) -> bytes:
     """Minimal canonical RIFF/AVI writer: hdrl (avih + one vids strl) +
     movi. ``frames`` are (h, w) uint8 grayscale planes, all the same
@@ -1176,8 +1201,8 @@ def encode_avi_bytes(
     max_bytes = max(len(p) for p in payloads)
     avih = struct.pack(
         "<IIIIIIIIII4I",
-        1_000_000 // fps,  # us per frame
-        max_bytes * fps,   # max bytes/sec
+        1_000_000 // VIDEO_FPS,  # us per frame
+        max_bytes * VIDEO_FPS,   # max bytes/sec
         0, 0,              # padding; flags 0 — no idx1 is written, so
         #                    AVIF_HASINDEX (0x10) must NOT be claimed
         #                    (review find: a strict demuxer would seek a
@@ -1187,7 +1212,7 @@ def encode_avi_bytes(
     strh = struct.pack(
         "<4s4sIHHIIIIIIIi4H",
         b"vids", handler, 0, 0, 0, 0,
-        1, fps,            # scale, rate -> fps frames/sec
+        1, VIDEO_FPS,            # scale, rate -> fps frames/sec
         0, len(frames), max_bytes, 0, -1, 0, 0, w, h,
     )
     strf = struct.pack(
@@ -1318,8 +1343,10 @@ VIDEO_W, VIDEO_H = 16, 12
 VIDEO_FRAME_PX = VIDEO_W * VIDEO_H
 
 
-def encode_video(docs: DataFrame, codec: str = "raw", fps: int = 8,
-                 text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+VIDEO_FPS = 8
+
+
+def encode_video(docs: DataFrame, codec: str = "raw") -> DataFrame:
     """Video twin of encode_ppm/encode_wav: each document's bytes
     become the gray pixel stream of a VIDEO_W x VIDEO_H frame sequence
     (frame f = byte slice [f*192, (f+1)*192), zero-padded tail), in a
@@ -1345,14 +1372,14 @@ def encode_video(docs: DataFrame, codec: str = "raw", fps: int = 8,
                 )
                 for f in range(n_frames)
             ]
-            return encode_avi_bytes(frames, fps=fps, codec=codec)
+            return encode_avi_bytes(frames, codec=codec)
 
         for pdf in batches:
             yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "payload": pdf[text_col].map(one)}
+                {"doc_id": pdf[ID_COL], "payload": pdf[TEXT_COL].map(one)}
             )
 
-    out = _fan_out_small(docs.select(id_col, text_col)).mapInPandas(
+    out = _fan_out_small(docs.select(ID_COL, TEXT_COL)).mapInPandas(
         encode, schema="doc_id long, payload binary"
     )
     return out.select(
@@ -1365,21 +1392,19 @@ def encode_video(docs: DataFrame, codec: str = "raw", fps: int = 8,
     )
 
 
-def decode_video_frames(assets: DataFrame, every_n: int = 1,
-                        id_col: str = "doc_id") -> DataFrame:
-    """Decode AVI payloads and explode every ``every_n``-th frame into
+def decode_video_frames(assets: DataFrame) -> DataFrame:
+    """Decode AVI payloads and explode every frame into
     per-frame integer stats (pixel sum / max over the gray plane) —
     all INTEGERS, so a raw-codec corpus restates exactly from source
     text. Narrow Arrow kernel: binary in, scalar rows out, no
-    shuffle; frame sampling happens INSIDE the kernel so unsampled
-    frames never become rows."""
+    shuffle."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
+            for did, payload in zip(pdf[ID_COL], pdf["payload"]):
                 d = decode_avi(bytes(payload))
-                for fi in range(0, d["n_frames"], every_n):
+                for fi in range(d["n_frames"]):
                     plane = d["frames"][fi].astype(np.int64)
                     rows.append(
                         (did, fi, d["width"], d["height"],
@@ -1391,42 +1416,43 @@ def decode_video_frames(assets: DataFrame, every_n: int = 1,
                          "pix_sum", "pix_max"],
             )
 
-    return assets.select(id_col, "payload").mapInPandas(
+    return assets.select(ID_COL, "payload").mapInPandas(
         kernel,
         schema="doc_id long, frame_idx long, width long, height long, "
                "pix_sum long, pix_max long",
     )
 
 
-def video_frame_dhash(assets: DataFrame, every_n: int = 1,
-                      id_col: str = "doc_id") -> DataFrame:
-    """Per-sampled-frame perceptual hash: decode AVI, dHash every
-    ``every_n``-th frame (the image dedup pipeline's front end applied
+def video_frame_dhash(assets: DataFrame) -> DataFrame:
+    """Per-frame perceptual hash: decode AVI, dHash every frame
+    (the image dedup pipeline's front end applied
     to video). Narrow Arrow kernel, no shuffle."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
+            for did, payload in zip(pdf[ID_COL], pdf["payload"]):
                 d = decode_avi(bytes(payload))
-                for fi in range(0, d["n_frames"], every_n):
+                for fi in range(d["n_frames"]):
                     gray = d["frames"][fi].astype(np.float64)
                     rows.append(
                         (did, fi, format(_dhash_bits(gray), "016x"))
                     )
             yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "phash"])
 
-    return assets.select(id_col, "payload").mapInPandas(
+    return assets.select(ID_COL, "payload").mapInPandas(
         kernel, schema="doc_id long, frame_idx long, phash string"
     )
 
 
-def video_keyframes(assets: DataFrame, min_delta: int = 1000,
-                    id_col: str = "doc_id") -> DataFrame:
+KEYFRAME_MIN_DELTA = 1000
+
+
+def video_keyframes(assets: DataFrame) -> DataFrame:
     """Shot-boundary / keyframe detection: per frame, the temporal
     delta energy (sum of absolute per-pixel differences from the
     previous frame; frame 0 diffs against black, so its delta is its
-    own energy) and the keyframe flag ``delta_energy >= min_delta`` —
+    own energy) and the keyframe flag ``delta_energy >= KEYFRAME_MIN_DELTA`` —
     the classic pixel-difference scene-cut detector. All INTEGER, all
     inside one narrow Arrow kernel (the previous frame is adjacent in
     the same payload — no self-join, no window shuffle), so a raw-codec
@@ -1435,20 +1461,20 @@ def video_keyframes(assets: DataFrame, min_delta: int = 1000,
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
+            for did, payload in zip(pdf[ID_COL], pdf["payload"]):
                 d = decode_avi(bytes(payload))
                 prev = np.zeros_like(d["frames"][0], dtype=np.int64)
                 for fi, frame in enumerate(d["frames"]):
                     cur = frame.astype(np.int64)
                     delta = int(np.abs(cur - prev).sum())
-                    rows.append((did, fi, delta, delta >= min_delta))
+                    rows.append((did, fi, delta, delta >= KEYFRAME_MIN_DELTA))
                     prev = cur
             yield pd.DataFrame(
                 rows,
                 columns=["doc_id", "frame_idx", "delta_energy", "is_keyframe"],
             )
 
-    return assets.select(id_col, "payload").mapInPandas(
+    return assets.select(ID_COL, "payload").mapInPandas(
         kernel,
         schema="doc_id long, frame_idx long, delta_energy long, "
                "is_keyframe boolean",
@@ -1460,13 +1486,11 @@ def video_keyframes(assets: DataFrame, min_delta: int = 1000,
 # LAION curation shape.
 
 
-def pair_dedup(
-    pairs: DataFrame,
-    k: int = 3,
-    max_captions: int = 2,
-    id_col: str = "doc_id",
-    caption_col: str = "caption",
-) -> DataFrame:
+PAIR_HAMMING_K = 3
+CAPTION_COL = "caption"
+
+
+def pair_dedup(pairs: DataFrame, max_captions: int = 2, id_col: str = "doc_id") -> DataFrame:
     """Joint keeper policy over (image, caption) pairs — the dedup an
     image-text corpus runs before CLIP-style training (the LAION
     pipeline shape): the SAME image recrawled under different captions
@@ -1478,7 +1502,7 @@ def pair_dedup(
     identical recrawls always land together, and the distinct-hash
     representative set is what near-dup banding then reconciles), then
     dhash band near-dup (phash_band_neardup: pigeonhole bands, exact
-    hamming <= k verify, per-bucket min-id keeper) over the
+    hamming <= PAIR_HAMMING_K verify, per-bucket min-id keeper) over the
     REPRESENTATIVES only. Running the banding on representatives
     instead of members both shrinks the banded join input (a viral
     image is one row, not millions) and removes the one-candidate
@@ -1522,24 +1546,25 @@ def pair_dedup(
     ).localCheckpoint(eager=True)
     reps = hashed.groupBy("phash").agg(F.min(id_col).alias("__rep_id"))
     assign = phash_band_neardup(
-        reps.select(F.col("__rep_id").alias(id_col), "phash"), k=k,
-        id_col=id_col,
+        reps.select(F.col("__rep_id").alias(id_col), "phash"), id_col=id_col,
     ).select(F.col(id_col).alias("__rep_id"), "keeper_doc_id")
     members = hashed.join(reps, "phash").join(
         assign, "__rep_id"
     )
     joined = pairs.select(
-        id_col, F.xxhash64(F.col(caption_col)).alias("caption_hash")
+        id_col, F.xxhash64(F.col(CAPTION_COL)).alias("caption_hash")
     ).join(members.select(id_col, "keeper_doc_id"), id_col)
     return pair_keeper_policy(joined, max_captions=max_captions,
                               id_col=id_col)
+
+
+CLUSTER_COL = "keeper_doc_id"
 
 
 def pair_keeper_policy(
     joined: DataFrame,
     max_captions: int = 2,
     id_col: str = "doc_id",
-    cluster_col: str = "keeper_doc_id",
 ) -> DataFrame:
     """The two-level (image cluster, caption) keeper policy of
     ``pair_dedup``, split out so the SQL-portable twin
@@ -1561,7 +1586,7 @@ def pair_keeper_policy(
     from pyspark.sql import Window as W
 
     per_caption = joined.groupBy(
-        F.col(cluster_col).alias("image_keeper"), "caption_hash"
+        F.col(CLUSTER_COL).alias("image_keeper"), "caption_hash"
     ).agg(
         F.min(id_col).alias("pair_keeper"),
         F.count(F.lit(1)).alias("n_pairs"),

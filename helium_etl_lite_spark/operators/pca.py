@@ -44,7 +44,10 @@ def _moment_batches(vec_col: str):
     return gen
 
 
-def fit_pca(df: DataFrame, vec_col: str = "embedding", k: int = 8):
+VEC_COL = "e"
+
+
+def fit_pca(df: DataFrame, k: int = 8):
     """One-pass covariance + driver eigh. Returns (mean: np.ndarray[d],
     components: np.ndarray[k, d], explained_var: np.ndarray[k]).
 
@@ -54,7 +57,7 @@ def fit_pca(df: DataFrame, vec_col: str = "embedding", k: int = 8):
     scale. Eigenvector signs are canonicalized (largest-|x| component
     positive) so repeated fits on the same data agree.
     """
-    n_total, s, xtx = _moments_of(df, vec_col)
+    n_total, s, xtx = _moments_of(df, VEC_COL)
     mean = s / n_total
     cov = xtx / n_total - np.outer(mean, mean)
     evals, evecs = np.linalg.eigh(cov)  # ascending
@@ -68,14 +71,11 @@ def fit_pca(df: DataFrame, vec_col: str = "embedding", k: int = 8):
     return mean, comps, evals[order]
 
 
-def project(
-    df: DataFrame,
-    mean: np.ndarray,
-    components: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    out_col: str = "pc",
-) -> DataFrame:
+ID_COL = "vec_id"
+OUT_COL = "pc"
+
+
+def project(df: DataFrame, mean: np.ndarray, components: np.ndarray) -> DataFrame:
     """Project each vector onto the fitted components: a narrow
     mapInPandas matmul against the closure-captured (k, d) matrix —
     no shuffle, no join, scales linearly."""
@@ -86,12 +86,12 @@ def project(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf[VEC_COL].to_numpy()).astype(np.float64)
             P = (X - mu) @ W.T
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: list(P)})
+            yield pd.DataFrame({ID_COL: pdf[ID_COL], OUT_COL: list(P)})
 
-    return df.select(id_col, vec_col).mapInPandas(
-        gen, schema=f"{id_col} long, {out_col} array<double>"
+    return df.select(ID_COL, VEC_COL).mapInPandas(
+        gen, schema=f"{ID_COL} long, {OUT_COL} array<double>"
     )
 
 

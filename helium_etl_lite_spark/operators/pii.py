@@ -83,13 +83,16 @@ def pii_redact(text: Column) -> Column:
     return out
 
 
-def pii_wrap(df: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
+TEXT_COL = "text"
+ID_COL = "doc_id"
+
+
+def pii_wrap(df: DataFrame) -> DataFrame:
     """Deterministic PII-bearing fixture: plant an email / phone / IP
     sentence on doc_id residues 3 / 5 / 7 (overlaps exercise
     multi-class docs); other docs keep their text byte-identical."""
-    did = F.col(id_col)
-    out = F.col(text_col)
+    did = F.col(ID_COL)
+    out = F.col(TEXT_COL)
     out = F.when(
         did % 3 == 0,
         F.concat(
@@ -112,7 +115,7 @@ def pii_wrap(df: DataFrame, text_col: str = "text",
             F.lit(".0."), (did % 100).cast("string"),
         ),
     ).otherwise(out)
-    return df.withColumn(text_col, out)
+    return df.withColumn(TEXT_COL, out)
 
 
 # --- oracle side (generated from the SAME constants) ------------------------
@@ -132,20 +135,20 @@ def pii_redact_sql(text: str) -> str:
     return out
 
 
-def pii_wrap_sql(text_col: str = "text", id_col: str = "doc_id") -> str:
+def pii_wrap_sql() -> str:
     email = (
-        f"(CASE WHEN {id_col} % 3 = 0 THEN ' contact user' || "
-        f"CAST({id_col} AS VARCHAR) || '@example.com for details' "
+        f"(CASE WHEN {ID_COL} % 3 = 0 THEN ' contact user' || "
+        f"CAST({ID_COL} AS VARCHAR) || '@example.com for details' "
         f"ELSE '' END)"
     )
     phone = (
-        f"(CASE WHEN {id_col} % 5 = 0 THEN ' call 555-01' || "
-        f"CAST({id_col} % 10 AS VARCHAR) || '-' || "
-        f"lpad(CAST({id_col} % 10000 AS VARCHAR), 4, '0') ELSE '' END)"
+        f"(CASE WHEN {ID_COL} % 5 = 0 THEN ' call 555-01' || "
+        f"CAST({ID_COL} % 10 AS VARCHAR) || '-' || "
+        f"lpad(CAST({ID_COL} % 10000 AS VARCHAR), 4, '0') ELSE '' END)"
     )
     ip = (
-        f"(CASE WHEN {id_col} % 7 = 0 THEN ' served from 10.' || "
-        f"CAST({id_col} % 256 AS VARCHAR) || '.0.' || "
-        f"CAST({id_col} % 100 AS VARCHAR) ELSE '' END)"
+        f"(CASE WHEN {ID_COL} % 7 = 0 THEN ' served from 10.' || "
+        f"CAST({ID_COL} % 256 AS VARCHAR) || '.0.' || "
+        f"CAST({ID_COL} % 100 AS VARCHAR) ELSE '' END)"
     )
-    return f"{text_col} || {email} || {phone} || {ip}"
+    return f"{TEXT_COL} || {email} || {phone} || {ip}"

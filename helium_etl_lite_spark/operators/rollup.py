@@ -47,16 +47,18 @@ def bucket_of(time_col: str, width_sec: int):
     return (F.floor(epoch / F.lit(width_sec)) * width_sec).cast("long")
 
 
+TIME_COL = "ts"
+KEYS = ("event_type",)
+BUCKET_WIDTH_SEC = 3600
+BUCKETS_PER_RANGE = 24
+
+
 def refresh_rollup(
     spark: SparkSession,
     source: DataFrame,
     batch: DataFrame,
     path: str,
-    time_col: str = "ts",
-    keys: tuple[str, ...] = ("event_type",),
     value_col: str = "value",
-    bucket_width_sec: int = 3600,
-    range_size: int = 24,
     distinct_col: str | None = None,
 ) -> list[int]:
     """Refresh the persisted rollup at `path` for every bucket the batch
@@ -68,7 +70,7 @@ def refresh_rollup(
     (binary, Apache DataSketches via hll_sketch_agg) instead of an exact
     COUNT DISTINCT. read_rollup() exposes the estimate.
     """
-    bucket = bucket_of(time_col, bucket_width_sec)
+    bucket = bucket_of(TIME_COL, BUCKET_WIDTH_SEC)
     touched_rows = batch.select(bucket.alias("bucket")).distinct().collect()
     touched = sorted(int(r["bucket"]) for r in touched_rows)
     if not touched:
@@ -92,7 +94,7 @@ def refresh_rollup(
         touched_df = spark.createDataFrame([(b,) for b in touched], "bucket long")
         src = src.join(F.broadcast(touched_df), "bucket", "left_semi")
     recomputed = (
-        src.groupBy("bucket", *keys)
+        src.groupBy("bucket", *KEYS)
         .agg(*aggs)
         .withColumnRenamed("bucket", "block")
     )
@@ -103,7 +105,7 @@ def refresh_rollup(
         path,
         lo=touched[0],
         hi=touched[-1],
-        range_size=range_size * bucket_width_sec,
+        range_size=BUCKETS_PER_RANGE * BUCKET_WIDTH_SEC,
         heights=heights,
     )
     return touched

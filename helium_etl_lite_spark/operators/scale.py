@@ -31,6 +31,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+#: rows a control-plane table may collect to the driver.
+MAX_CONTROL_ROWS = 4_000_000
+
 
 def fan_out_small(df: DataFrame) -> DataFrame:
     """Fan a small scan out to the cluster's parallelism before a
@@ -64,7 +67,7 @@ def distributed_ntile(
     n_tiles: int = 10,
     bucket_width: int = 100_000,
     out_col: str = "tile",
-    max_control_rows: int = 4_000_000,
+    max_control_rows: int = MAX_CONTROL_ROWS,
 ) -> DataFrame:
     """Exact `ntile(n) OVER (ORDER BY value_col, id_col)` without the
     single-task global sort that a partition-less window costs.
@@ -228,7 +231,6 @@ def grouped_row_number(
     bucket_col,
     order_cols: list,
     out_col: str = "rn",
-    max_control_rows: int = 4_000_000,
 ) -> DataFrame:
     """Exact `row_number() OVER (PARTITION BY group_cols ORDER BY
     order_cols)` for LOW-CARDINALITY groups, without per-group
@@ -244,7 +246,7 @@ def grouped_row_number(
 
     1. per-(group, bucket) counts: map-side-combinable hash agg,
        control table bounded by #groups x #buckets regardless of N
-       (guarded by `max_control_rows`).
+       (guarded by `MAX_CONTROL_ROWS`).
     2. a window over the COUNTS table (partition = group, <= #buckets
        rows each) prefix-sums them into exact per-(group, bucket)
        offsets — no driver collect anywhere.
@@ -259,7 +261,7 @@ def grouped_row_number(
     sorts consistently with `order_cols`' null placement (buckets order
     asc_nulls_first).
     """
-    d, off, _ = _grouped_offsets(df, group_cols, bucket_col, max_control_rows)
+    d, off, _ = _grouped_offsets(df, group_cols, bucket_col, MAX_CONTROL_ROWS)
     cond = d["__gb"].eqNullSafe(off["__gb_o"])
     for g in group_cols:
         cond = cond & d[g].eqNullSafe(off[f"__g_{g}"])
@@ -278,7 +280,6 @@ def grouped_ntile(
     order_cols: list,
     n_tiles: int,
     out_col: str = "tile",
-    max_control_rows: int = 4_000_000,
 ) -> DataFrame:
     """Exact `ntile(n) OVER (PARTITION BY group_cols ORDER BY
     order_cols)` on the :func:`grouped_row_number` control plane: the
@@ -288,7 +289,7 @@ def grouped_ntile(
     per row from both. Same `bucket_col` contract as
     grouped_row_number. The companion to :func:`distributed_ntile`
     (which handles the UNPARTITIONED global case)."""
-    d, off, totals = _grouped_offsets(df, group_cols, bucket_col, max_control_rows)
+    d, off, totals = _grouped_offsets(df, group_cols, bucket_col, MAX_CONTROL_ROWS)
     cond = d["__gb"].eqNullSafe(off["__gb_o"])
     for g in group_cols:
         cond = cond & d[g].eqNullSafe(off[f"__g_{g}"])
@@ -327,7 +328,7 @@ def prefix_sum(
     out_col: str = "cumsum",
     bucket_width: int = 100_000,
     super_width: int = 4096,
-    max_control_rows: int = 4_000_000,
+    max_control_rows: int = MAX_CONTROL_ROWS,
 ) -> DataFrame:
     """Exact running total `SUM(value_col) OVER (ORDER BY order_col ROWS
     UNBOUNDED PRECEDING)` without the single-task global-sort window.
@@ -432,7 +433,7 @@ def select_token_budget(
     budget: int,
     out_col: str = "cum_weight",
     bucket_width: int = 100_000,
-    max_control_rows: int = 4_000_000,
+    max_control_rows: int = MAX_CONTROL_ROWS,
 ) -> DataFrame:
     """Greedy data selection under a budget: the rows whose running
     `weight_col` total — accumulated in (score_col DESC NULLS LAST,

@@ -37,17 +37,16 @@ from pyspark.sql import functions as F
 COORD_OFFSET = 1 << 20
 
 
-def grid_radius_self_join(
-    points: DataFrame,
-    radius_q: int,
-    id_col: str = "vec_id",
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
+ID_COL = "vec_id"
+X_COL = "x"
+Y_COL = "y"
+
+
+def grid_radius_self_join(points: DataFrame, radius_q: int) -> DataFrame:
     """All unordered point pairs within `radius_q` (inclusive, squared
     integer metric), as (a_id, b_id, dist_sq_q) with a_id < b_id.
 
-    `points[x_col]`, `points[y_col]` must be integer-valued (quantized)
+    `points[X_COL]`, `points[Y_COL]` must be integer-valued (quantized)
     BIGINTs with |coord| < COORD_OFFSET; `radius_q` the radius in the
     same quantized units. dist_sq_q = dx^2 + dy^2 stays exact for
     coordinates up to ~2^31, far beyond any quantization in use.
@@ -60,11 +59,11 @@ def grid_radius_self_join(
     if radius_q <= 0:
         raise ValueError(f"radius_q must be positive, got {radius_q}")
     q = points.select(
-        F.col(id_col).alias("pid"),
-        F.col(x_col).cast("long").alias("px"),
-        F.col(y_col).cast("long").alias("py"),
-        F.expr(f"({x_col} + {COORD_OFFSET}) div {int(radius_q)}").alias("cx"),
-        F.expr(f"({y_col} + {COORD_OFFSET}) div {int(radius_q)}").alias("cy"),
+        F.col(ID_COL).alias("pid"),
+        F.col(X_COL).cast("long").alias("px"),
+        F.col(Y_COL).cast("long").alias("py"),
+        F.expr(f"({X_COL} + {COORD_OFFSET}) div {int(radius_q)}").alias("cx"),
+        F.expr(f"({Y_COL} + {COORD_OFFSET}) div {int(radius_q)}").alias("cy"),
     )
     neighbors = F.expr(
         "explode(flatten(transform(sequence(-1, 1), dx ->"
@@ -96,12 +95,7 @@ def grid_radius_self_join(
     )
 
 
-def grid_density(
-    points: DataFrame,
-    cell_q: int,
-    x_col: str = "x",
-    y_col: str = "y",
-) -> DataFrame:
+def grid_density(points: DataFrame, cell_q: int) -> DataFrame:
     """Rasterize points into `cell_q`-sided square cells: one row per
     OCCUPIED cell with its point count. One hash agg, map-side
     combinable; output bounded by occupied-cell count, not points."""
@@ -109,8 +103,8 @@ def grid_density(
         raise ValueError(f"cell_q must be positive, got {cell_q}")
     return (
         points.select(
-            F.expr(f"({x_col} + {COORD_OFFSET}) div {int(cell_q)}").alias("cx"),
-            F.expr(f"({y_col} + {COORD_OFFSET}) div {int(cell_q)}").alias("cy"),
+            F.expr(f"({X_COL} + {COORD_OFFSET}) div {int(cell_q)}").alias("cx"),
+            F.expr(f"({Y_COL} + {COORD_OFFSET}) div {int(cell_q)}").alias("cy"),
         )
         .groupBy("cx", "cy")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pts"))

@@ -20,12 +20,16 @@ MOD = 1_000_000_007
 BASE = 31
 
 
-def quality_features(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+TEXT_COL = "text"
+ID_COL = "doc_id"
+
+
+def quality_features(docs: DataFrame) -> DataFrame:
     """Length / stopword-ratio / type-token-ratio features + a composite
     quality score. One projection, no shuffle."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col(TEXT_COL), " ")
     n_tokens = F.size(toks).cast("bigint")
-    n_chars = F.length(F.col(text_col)).cast("bigint")
+    n_chars = F.length(F.col(TEXT_COL)).cast("bigint")
     n_stop = F.size(F.filter(toks, lambda x: x.isin(STOPWORDS))).cast("bigint")
     n_distinct = F.size(F.array_distinct(toks)).cast("bigint")
     stop_ratio = F.round(n_stop.cast("double") / n_tokens, 6)
@@ -40,7 +44,7 @@ def quality_features(docs: DataFrame, text_col: str = "text", id_col: str = "doc
         6,
     )
     return docs.select(
-        F.col(id_col),
+        F.col(ID_COL),
         n_tokens.alias("n_tokens"),
         n_chars.alias("n_chars_computed"),
         stop_ratio.alias("stopword_ratio"),
@@ -52,35 +56,36 @@ def quality_features(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def token_count_regex(
-    docs: DataFrame, pattern: str = "[a-z]+", text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+TOKEN_PATTERN = "[a-z]+"
+
+
+def token_count_regex(docs: DataFrame) -> DataFrame:
     """BPE-ish token counting: whitespace tokens plus regex-piece counts
     (the pre-tokenizer half of a BPE pipeline)."""
     return docs.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), " ")).cast("bigint").alias("ws_tokens"),
-        F.regexp_count(F.col(text_col), F.lit(pattern)).cast("bigint").alias("alpha_pieces"),
-        F.regexp_count(F.col(text_col), F.lit("[0-9]+")).cast("bigint").alias("digit_pieces"),
-        (F.length(F.col(text_col)) - F.length(F.replace(F.col(text_col), F.lit(" "), F.lit(""))))
+        F.col(ID_COL),
+        F.size(F.split(F.col(TEXT_COL), " ")).cast("bigint").alias("ws_tokens"),
+        F.regexp_count(F.col(TEXT_COL), F.lit(TOKEN_PATTERN)).cast("bigint").alias("alpha_pieces"),
+        F.regexp_count(F.col(TEXT_COL), F.lit("[0-9]+")).cast("bigint").alias("digit_pieces"),
+        (F.length(F.col(TEXT_COL)) - F.length(F.replace(F.col(TEXT_COL), F.lit(" "), F.lit(""))))
         .cast("bigint")
         .alias("n_spaces"),
     )
 
 
-def rolling_fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def rolling_fingerprint(docs: DataFrame) -> DataFrame:
     """Polynomial rolling hash over characters, mod 1e9+7 — a
     deterministic document fingerprint computed with a JVM-side
     sequential aggregate (no Python)."""
     # regexp_extract_all('.') yields one element per char in both Spark
     # and DuckDB (split-on-empty-string differs between them).
-    chars = F.regexp_extract_all(F.col(text_col), F.lit("."), 0)
+    chars = F.regexp_extract_all(F.col(TEXT_COL), F.lit("."), 0)
     fp = F.aggregate(
         chars,
         F.lit(0).cast("long"),
         lambda acc, ch: (acc * BASE + F.ascii(ch)) % MOD,
     )
-    return docs.select(F.col(id_col), fp.alias("fingerprint"))
+    return docs.select(F.col(ID_COL), fp.alias("fingerprint"))
 
 
 # Tiny per-language token profiles for the heuristic language scorer.
@@ -95,7 +100,7 @@ LANG_PROFILES = {
 }
 
 
-def lang_id_heuristic(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id_heuristic(docs: DataFrame) -> DataFrame:
     """N-gram/profile language-ID heuristic as an Arrow-batched pandas
     UDF: score = token overlap with each profile + char-bigram evidence;
     deterministic argmax with lexicographic tiebreak."""
@@ -113,16 +118,14 @@ def lang_id_heuristic(docs: DataFrame, text_col: str = "text", id_col: str = "do
 
         return texts.map(score)
 
-    return docs.select(F.col(id_col), detect(F.col(text_col)).alias("lang_pred"))
+    return docs.select(F.col(ID_COL), detect(F.col(TEXT_COL)).alias("lang_pred"))
 
 
-def winnow_gram_table(
-    docs: DataFrame,
-    k: int = 4,
-    w: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+WINNOW_K = 4
+WINNOW_W = 5
+
+
+def winnow_gram_table(docs: DataFrame) -> DataFrame:
     """Per-gram winnowing table (doc_id, i, key, wmin): 4-token gram
     hashes keyed as hash * 2^20 + position (leftmost-wins tie-break;
     docs bounded at 2^20 grams), with the rolling w-window minimum.
@@ -131,10 +134,10 @@ def winnow_gram_table(
     exchange on doc_id for the ordered window."""
     from pyspark.sql import Window as W
 
-    ws = F.split(F.col(text_col), " ")
+    ws = F.split(F.col(TEXT_COL), " ")
     n = F.size(ws)
-    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
-    gram_at = lambda i: F.array_join(F.slice(ws, i + 1, k), " ")  # noqa: E731
+    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(WINNOW_K), F.lit(0)))
+    gram_at = lambda i: F.array_join(F.slice(ws, i + 1, WINNOW_K), " ")  # noqa: E731
     key_at = lambda i: (  # noqa: E731
         F.conv(F.substring(F.md5(gram_at(i)), 1, 8), 16, 10).cast("long")
         * F.lit(1048576)
@@ -153,21 +156,15 @@ def winnow_gram_table(
     # isNotNull filter drops only null-text rows — identical output.
     ex = (
         docs.withColumn("__p", pairs)
-        .select(id_col, F.explode_outer("__p").alias("s"))
+        .select(ID_COL, F.explode_outer("__p").alias("s"))
         .where(F.col("s").isNotNull())
-        .select(id_col, F.col("s.i").alias("i"), F.col("s.key").alias("key"))
+        .select(ID_COL, F.col("s.i").alias("i"), F.col("s.key").alias("key"))
     )
-    win = W.partitionBy(id_col).orderBy("i").rowsBetween(-(w - 1), 0)
+    win = W.partitionBy(ID_COL).orderBy("i").rowsBetween(-(WINNOW_W - 1), 0)
     return ex.withColumn("wmin", F.min("key").over(win))
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 4,
-    w: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """The selected winnowing fingerprints (doc_id, fp_hash, pos):
     distinct full-window minima (Schleimer 2003 guarantee: two docs
     sharing >= w+k-1 consecutive tokens share >= 1 fp_hash); docs with
@@ -183,32 +180,33 @@ def winnow_fingerprints(
     # (hash-partitioning on doc_id already clusters (doc_id, fp_key)).
     from pyspark.sql import Window as W
 
-    g = winnow_gram_table(docs, k, w, text_col, id_col)
-    wp = W.partitionBy(id_col)
+    g = winnow_gram_table(docs)
+    wp = W.partitionBy(ID_COL)
     g2 = g.withColumn("__n", F.count(F.lit(1)).over(wp)).withColumn(
         "__min_key", F.min("key").over(wp)
     )
     fp = (
         g2.select(
-            F.col(id_col),
-            F.when(F.col("__n") < w, F.col("__min_key"))
-            .when(F.col("i") >= w - 1, F.col("wmin"))
+            F.col(ID_COL),
+            F.when(F.col("__n") < WINNOW_W, F.col("__min_key"))
+            .when(F.col("i") >= WINNOW_W - 1, F.col("wmin"))
             .alias("fp_key"),
         )
         .where(F.col("fp_key").isNotNull())
         .distinct()
     )
     return fp.select(
-        F.col(id_col),
+        F.col(ID_COL),
         (F.col("fp_key") / F.lit(1048576)).cast("long").alias("fp_hash"),
         F.pmod(F.col("fp_key"), F.lit(1048576)).cast("long").alias("pos"),
     )
 
 
-def winnow_stopgram_filter(
-    fpd: DataFrame, max_docs_per_fp: int = 64, id_col: str = "doc_id"
-) -> DataFrame:
-    """Drop fingerprint hashes shared by more than `max_docs_per_fp`
+MAX_DOCS_PER_FP = 64
+
+
+def winnow_stopgram_filter(fpd: DataFrame) -> DataFrame:
+    """Drop fingerprint hashes shared by more than `MAX_DOCS_PER_FP`
     documents before any pair join — the fingerprint-domain stop-gram
     rule. A boilerplate gram (license header, nav bar) shared by B docs
     would contribute a B² pair bucket; removing it is standard practice
@@ -229,7 +227,7 @@ def winnow_stopgram_filter(
     # ~n_grams/3 compact rows per doc.
     fpd = fpd.localCheckpoint(eager=False)
     sizes = fpd.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("__n"))
-    hot = sizes.where(F.col("__n") > max_docs_per_fp)
+    hot = sizes.where(F.col("__n") > MAX_DOCS_PER_FP)
     stats = hot.agg(
         F.count(F.lit(1)).alias("n_hot"),
         F.coalesce(F.sum("__n"), F.lit(0)).alias("rows_dropped"),
@@ -239,8 +237,8 @@ def winnow_stopgram_filter(
 
         logging.getLogger("helium_etl_lite_spark").warning(
             f"winnow stop-gram filter: {stats['n_hot']} fingerprint "
-            f"hash(es) shared by > {max_docs_per_fp} docs dropped "
+            f"hash(es) shared by > {MAX_DOCS_PER_FP} docs dropped "
             f"({stats['rows_dropped']} doc-fingerprint rows) — "
-            "boilerplate grams; raise max_docs_per_fp to keep them"
+            "boilerplate grams; raise MAX_DOCS_PER_FP to keep them"
         )
     return fpd.join(hot.select("fp_hash"), "fp_hash", "left_anti")

@@ -70,10 +70,10 @@ _UNK_PENALTY = -100.0
 
 
 def seed_pieces(
-    word_counts: list, max_piece_len: int = 6, seed_size: int = 2000
+    word_counts: list, seed_size: int = 2000
 ) -> dict:
     """Seed vocabulary from the bounded word table: every substring up
-    to `max_piece_len` chars, scored by occurrence count; keep ALL
+    to `MAX_PIECE_LEN` chars, scored by occurrence count; keep ALL
     single characters (so every word stays segmentable) plus the top
     `seed_size` multi-char pieces by (count DESC, piece ASC) — the
     standard 'make a big superset, let EM prune it' seeding (Kudo 2018
@@ -84,7 +84,7 @@ def seed_pieces(
         w = str(word)
         n = len(w)
         for i in range(n):
-            for j in range(i + 1, min(i + max_piece_len, n) + 1):
+            for j in range(i + 1, min(i + MAX_PIECE_LEN, n) + 1):
                 counts[w[i:j]] += int(cnt)
     chars = {p: c for p, c in counts.items() if len(p) == 1}
     multi = sorted(
@@ -176,27 +176,25 @@ def _estep_counts(
     return [(r["piece"], r["cnt"]) for r in agg.collect()]
 
 
-def train_unigram(
-    df: DataFrame,
-    text_col: str = "text",
-    vocab_target: int = 400,
-    seed_size: int = 2000,
-    max_piece_len: int = 6,
-    rounds: int = 3,
-    vocab_limit: int = 100_000,
-) -> dict:
+TEXT_COL = "text"
+MAX_PIECE_LEN = 6
+EM_ROUNDS = 3
+VOCAB_LIMIT = 100_000
+
+
+def train_unigram(df: DataFrame, vocab_target: int = 400, seed_size: int = 2000) -> dict:
     """Train the unigram LM: distributed word counts -> seed ->
-    `rounds` x (distributed Viterbi E-step, driver M-step + prune to
+    `EM_ROUNDS` x (distributed Viterbi E-step, driver M-step + prune to
     `vocab_target`). Returns piece -> logp for encoding."""
-    wc = word_frequencies(df, text_col, vocab_limit)
+    wc = word_frequencies(df, TEXT_COL, VOCAB_LIMIT)
     spark = df.sparkSession
     words_df = spark.createDataFrame(
         [(w, int(c)) for w, c in wc], "w string, c long"
     )
-    counts = seed_pieces(wc, max_piece_len, seed_size)
+    counts = seed_pieces(wc, seed_size)
     logp = _logprobs(counts)
-    for _ in range(rounds):
-        used = dict(_estep_counts(words_df, logp, max_piece_len))
+    for _ in range(EM_ROUNDS):
+        used = dict(_estep_counts(words_df, logp, MAX_PIECE_LEN))
         # M-step + prune: single chars are unprunable (coverage); keep
         # the top multi-char pieces by (used count DESC, piece ASC).
         chars = {p: c for p, c in used.items() if len(p) == 1}
@@ -219,18 +217,15 @@ def train_unigram(
 # --------------------------------------------------------------- encode
 
 
-def unigram_token_counts(
-    df: DataFrame,
-    logp: dict,
-    text_col: str = "text",
-    out_col: str = "n_tokens_unigram",
-    max_piece_len: int = 6,
-) -> DataFrame:
-    """Append the exact unigram-LM token count of `text_col` under the
+OUT_COL = "n_tokens_unigram"
+
+
+def unigram_token_counts(df: DataFrame, logp: dict) -> DataFrame:
+    """Append the exact unigram-LM token count of `TEXT_COL` under the
     trained piece table — the same narrow mapInPandas + per-task word
     memo shape as bpe_token_counts (Zipfian reuse pays Viterbi once per
     distinct word per worker)."""
-    fields = df.schema.fields + [T.StructField(out_col, T.LongType())]
+    fields = df.schema.fields + [T.StructField(OUT_COL, T.LongType())]
     out_schema = T.StructType(fields)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -243,15 +238,15 @@ def unigram_token_counts(
             for w in str(text).split():
                 n = memo.get(w)
                 if n is None:
-                    n = len(viterbi_segment(w, logp, max_piece_len))
+                    n = len(viterbi_segment(w, logp, MAX_PIECE_LEN))
                     memo[w] = n
                 total += n
             return total
 
         for pdf in batches:
             pdf = pdf.copy()
-            pdf[out_col] = [count_tokens(t) for t in pdf[text_col]]
-            pdf[out_col] = pdf[out_col].astype("int64")
+            pdf[OUT_COL] = [count_tokens(t) for t in pdf[TEXT_COL]]
+            pdf[OUT_COL] = pdf[OUT_COL].astype("int64")
             yield pdf
 
     return df.mapInPandas(run, schema=out_schema)

@@ -131,12 +131,15 @@ def host_blocked(host: Column) -> Column:
     return blocked
 
 
-def url_wrap(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+ID_COL = "doc_id"
+
+
+def url_wrap(df: DataFrame) -> DataFrame:
     """Deterministic URL fixture: page identity from doc_id % URL_GROUPS
     (so canonical URLs collide across documents), canonicalization
     noise (case, tracking params, fragments, default ports) from doc_id
     itself (so raw URLs differ within a canonical group)."""
-    did = F.col(id_col)
+    did = F.col(ID_COL)
     k = did % URL_GROUPS
     scheme = F.when(k % 3 == 0, F.lit("http")).otherwise(F.lit("https"))
     scheme = F.when(did % 2 == 0, F.upper(scheme)).otherwise(scheme)
@@ -226,18 +229,18 @@ def host_blocked_sql(host: str) -> str:
     )
 
 
-def url_wrap_sql(id_col: str = "doc_id") -> str:
+def url_wrap_sql() -> str:
     """DuckDB expression rebuilding url_wrap's URL from doc_id."""
-    k = f"({id_col} % {URL_GROUPS})"
+    k = f"({ID_COL} % {URL_GROUPS})"
     hosts = ", ".join(f"'{h}'" for h in FIXTURE_HOSTS)
     scheme_base = f"(CASE WHEN {k} % 3 = 0 THEN 'http' ELSE 'https' END)"
     scheme = (
-        f"(CASE WHEN {id_col} % 2 = 0 THEN upper({scheme_base}) "
+        f"(CASE WHEN {ID_COL} % 2 = 0 THEN upper({scheme_base}) "
         f"ELSE {scheme_base} END)"
     )
     host_base = f"list_extract([{hosts}], CAST({k} % 6 + 1 AS INT))"
     host = (
-        f"(CASE WHEN {id_col} % 3 = 0 THEN upper({host_base}) "
+        f"(CASE WHEN {ID_COL} % 3 = 0 THEN upper({host_base}) "
         f"ELSE {host_base} END)"
     )
     port = f"list_extract([':80', ':443', ':8080', '', ''], CAST({k} % 5 + 1 AS INT))"
@@ -250,8 +253,8 @@ def url_wrap_sql(id_col: str = "doc_id") -> str:
         f"ELSE '' END)"
     )
     track_q = (
-        f"(CASE WHEN {id_col} % 2 = 0 THEN 'utm_source=feed&utm_campaign=c' "
-        f"|| CAST({id_col} % 7 AS VARCHAR) ELSE '' END)"
+        f"(CASE WHEN {ID_COL} % 2 = 0 THEN 'utm_source=feed&utm_campaign=c' "
+        f"|| CAST({ID_COL} % 7 AS VARCHAR) ELSE '' END)"
     )
     qparts = f"list_filter([{real_q}, {track_q}], x -> x != '')"
     query = (
@@ -259,7 +262,7 @@ def url_wrap_sql(id_col: str = "doc_id") -> str:
         f"THEN '?' || array_to_string({qparts}, '&') ELSE '' END)"
     )
     frag = (
-        f"(CASE WHEN {id_col} % 3 = 0 THEN '#sec' || "
-        f"CAST({id_col} % 4 AS VARCHAR) ELSE '' END)"
+        f"(CASE WHEN {ID_COL} % 3 = 0 THEN '#sec' || "
+        f"CAST({ID_COL} % 4 AS VARCHAR) ELSE '' END)"
     )
     return f"{scheme} || '://' || {host} || {port} || {path} || {query} || {frag}"

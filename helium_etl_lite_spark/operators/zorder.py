@@ -20,11 +20,11 @@ from __future__ import annotations
 ZBITS = 16  # bits kept per dimension; zval fits in 32 bits << BIGINT
 
 
-def z_interleave_spark_sql(a_expr: str, b_expr: str, bits: int = ZBITS) -> str:
-    """Spark-SQL expression interleaving the low `bits` of two
+def z_interleave_spark_sql(a_expr: str, b_expr: str) -> str:
+    """Spark-SQL expression interleaving the low `ZBITS` of two
     non-negative integer expressions (a even positions, b odd)."""
     terms = []
-    for i in range(bits):
+    for i in range(ZBITS):
         terms.append(
             f"shiftleft(shiftright(CAST(({a_expr}) AS BIGINT), {i}) & 1, {2 * i})"
         )
@@ -34,19 +34,18 @@ def z_interleave_spark_sql(a_expr: str, b_expr: str, bits: int = ZBITS) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def z_interleave_duckdb_sql(a_expr: str, b_expr: str, bits: int = ZBITS) -> str:
+def z_interleave_duckdb_sql(a_expr: str, b_expr: str) -> str:
     """DuckDB twin of z_interleave_spark_sql — same bit layout, same
     BIGINT result, operator syntax instead of shift functions."""
     terms = []
-    for i in range(bits):
+    for i in range(ZBITS):
         terms.append(f"(((CAST(({a_expr}) AS BIGINT) >> {i}) & 1) << {2 * i})")
         terms.append(f"(((CAST(({b_expr}) AS BIGINT) >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"
 
 
-def minmax_scale_sql(dialect: str, col: str, minv: str, maxv: str,
-                     bits: int = ZBITS) -> str:
-    """Min-max scale an integer expression onto [0, 2^bits), integer
+def minmax_scale_sql(dialect: str, col: str, minv: str, maxv: str) -> str:
+    """Min-max scale an integer expression onto [0, 2^ZBITS), integer
     arithmetic only (exact cross-engine). Z-ordering REQUIRES this
     normalization: raw keys with unequal ranges (say 2000 parts vs 100
     suppliers) make the wide dimension own every high Morton bit, and
@@ -60,7 +59,7 @@ def minmax_scale_sql(dialect: str, col: str, minv: str, maxv: str,
     (full-range keys) — not just the multiply — would wrap silently in
     Spark (non-ANSI) while DuckDB errors, i.e. divergent Morton values
     exactly when the engines disagree."""
-    top = (1 << bits) - 1
+    top = (1 << ZBITS) - 1
     diff = f"(CAST({col} AS BIGINT) - CAST({minv} AS BIGINT))"
     rng = f"GREATEST(CAST({maxv} AS BIGINT) - CAST({minv} AS BIGINT), 1)"
     if dialect == "spark":

@@ -699,24 +699,29 @@ def agg_bloom_filter_probe(spark, sf_dir):
     return stats
 
 
-def _hll_registers(keys, key_col="k", m=64):
+#: the key column and the register count of the portable HLL sketch.
+HLL_KEY_COL = "k"
+HLL_M = 64
+
+
+def _hll_registers(keys):
     """Portable HLL registers (bucket, reg) over a distinct-key frame:
-    h = md5-prefix int, bucket = h % m, rho = 1-based position of the
-    lowest set bit of h//m (trailing-zero variant of the rank function
+    h = md5-prefix int, bucket = h % HLL_M, rho = 1-based position of the
+    lowest set bit of h//HLL_M (trailing-zero variant of the rank function
     — same geometric distribution as Flajolet's leading-zero form, and
     exactly computable cross-engine via length(bin(w & -w)); w = 0 maps
     to the max rank 27). MAX per bucket — a two-phase, map-side-
     combinable hash agg, so per-partition register sets merge by MAX
     exactly like per-corpus sketches do."""
     h = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10
+        F.substring(F.md5(F.col(HLL_KEY_COL).cast("string")), 1, 8), 16, 10
     ).cast("long")
-    w = (h / m).cast("long")
+    w = (h / HLL_M).cast("long")
     rho = F.when(w == 0, F.lit(27)).otherwise(
         F.length(F.conv((w.bitwiseAND(-w)).cast("string"), 10, 2))
     )
     return (
-        keys.select((h % m).alias("bucket"), rho.cast("long").alias("r"))
+        keys.select((h % HLL_M).alias("bucket"), rho.cast("long").alias("r"))
         .groupBy("bucket")
         .agg(F.max("r").alias("reg"))
     )
@@ -724,13 +729,13 @@ def _hll_registers(keys, key_col="k", m=64):
 
 @query(
     "agg_hll_sketch_portable",
-    oracle="""
+    oracle=f"""
     WITH members AS (SELECT DISTINCT o_custkey AS k FROM orders),
     h AS (SELECT k,
                  CAST(('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 8))
                       AS BIGINT) AS hv
           FROM members),
-    parts AS (SELECT k % 2 AS half, hv % 64 AS bucket, hv // 64 AS w FROM h),
+    parts AS (SELECT k % 2 AS half, hv % {HLL_M} AS bucket, hv // {HLL_M} AS w FROM h),
     rho AS (SELECT half, bucket,
                    CASE WHEN w = 0 THEN 27
                         ELSE length(bin(w & -w)) END AS r

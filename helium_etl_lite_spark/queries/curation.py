@@ -1707,7 +1707,7 @@ def pack_concat_chunk(spark, sf_dir):
 @query(
     "text_contamination_substring",
     oracle=f"""
-    WITH {_dedup_ops.anchored_span_oracle_cte(span_len=50, k=4, w=5)},
+    WITH {_dedup_ops.anchored_span_oracle_cte()},
     bench AS (SELECT DISTINCT sh FROM sp WHERE doc_id % 10 = 0),
     corp AS (SELECT * FROM sp WHERE doc_id % 10 <> 0)
     SELECT c.doc_id,
@@ -1740,7 +1740,7 @@ def text_contamination_substring(spark, sf_dir):
     # corpus, so AQE broadcast-plans the bench side from its runtime
     # stats and the corpus side never shuffles for the probe.
     t = Tables(spark, sf_dir)
-    sp = _dedup_ops.anchored_span_table(t.documents, span_len=50, k=4, w=5)
+    sp = _dedup_ops.anchored_span_table(t.documents)
     bench = (
         sp.where(F.col("doc_id") % 10 == 0).select("h").distinct()
     )
@@ -2128,9 +2128,7 @@ def sample_token_budget_unigram(spark, sf_dir):
 
     t = Tables(spark, sf_dir)
     d = t.documents.select("doc_id", "text", "n_chars")
-    logp = unigram.train_unigram(
-        d, vocab_target=400, seed_size=2000, rounds=3
-    )
+    logp = unigram.train_unigram(d, vocab_target=400, seed_size=2000)
     counted = unigram.unigram_token_counts(d, logp).drop("text")
     return select_token_budget(
         counted,

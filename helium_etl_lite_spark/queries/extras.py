@@ -348,7 +348,7 @@ def graph_pagerank_topk(spark, sf_dir):
     edges = trade.select(F.col("cust").alias("src"), F.col("supp").alias("dst")).unionByName(
         trade.select(F.col("supp").alias("src"), F.col("cust").alias("dst"))
     )
-    ranks = pagerank(edges, damping=0.85, iterations=8)
+    ranks = pagerank(edges, iterations=8)
     return (
         ranks.select("node", F.round("rank", 9).alias("rank"))
         .orderBy(F.col("rank").desc(), F.col("node").asc())
@@ -902,9 +902,9 @@ def table_diff_audit(spark, sf_dir):
     )
 
 
+from ..operators.graph import PORTABLE_DAMPING_PCT, PORTABLE_SCALE  # noqa: E402
+
 _PRP_ROUNDS = 4
-_PRP_SCALE = 10**12
-_PRP_DAMP = 85
 _PRP_TOPK = 20
 
 
@@ -953,7 +953,7 @@ def _pagerank_portable_oracle_sql(
 @query(
     "graph_pagerank_portable",
     oracle=_pagerank_portable_oracle_sql(
-        _PRP_ROUNDS, _PRP_SCALE, _PRP_DAMP, _PRP_TOPK
+        _PRP_ROUNDS, PORTABLE_SCALE, PORTABLE_DAMPING_PCT, _PRP_TOPK
     ),
 )
 def graph_pagerank_portable(spark, sf_dir):
@@ -991,12 +991,8 @@ def graph_pagerank_portable(spark, sf_dir):
     ).unionByName(
         trade.select(F.col("supp").alias("src"), F.col("cust").alias("dst"))
     )
-    ranks = pagerank_portable_quantized(
-        edges, rounds=_PRP_ROUNDS, scale=_PRP_SCALE, damping_pct=_PRP_DAMP
-    )
-    return ranks.orderBy(F.col("rank_q").desc(), F.col("node").asc()).limit(
-        _PRP_TOPK
-    )
+    ranks = pagerank_portable_quantized(edges, rounds=_PRP_ROUNDS)
+    return ranks.orderBy(F.col("rank_q").desc(), F.col("node").asc()).limit(_PRP_TOPK)
 
 
 _REACH_HOPS = 3

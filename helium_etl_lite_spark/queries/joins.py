@@ -751,9 +751,7 @@ def join_spatial_grid(spark, sf_dir):
             * F.lit(float(_SPATIAL_SCALE))
         ).cast("long").alias("y"),
     )
-    return grid_radius_self_join(
-        pts, _SPATIAL_RADIUS_Q, id_col="vec_id", x_col="x", y_col="y"
-    ).orderBy("a_id", "b_id")
+    return grid_radius_self_join(pts, _SPATIAL_RADIUS_Q).orderBy("a_id", "b_id")
 
 
 _HOTSPOT_CELL_Q = 500

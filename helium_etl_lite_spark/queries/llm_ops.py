@@ -56,7 +56,7 @@ def text_dedup_minhash(spark, sf_dir):
     # Keeper assignment, not all-pairs: O(N) output, no quadratic
     # candidate blow-up on a self-similar corpus.
     t = Tables(spark, sf_dir)
-    return dedup.minhash_dedup_assign(t.documents, num_perm=16, bands=8, jaccard_threshold=0.7)
+    return dedup.minhash_dedup_assign(t.documents)
 
 
 @query("text_dedup_minhash_incremental")  # rows-only: engine-specific signatures
@@ -78,9 +78,9 @@ def text_dedup_minhash_incremental(spark, sf_dir):
     state = scratch_dir("minhash_incremental") + "/state"
     b1 = t.documents.where(F.col("doc_id") % 2 == 0)
     b2 = t.documents.where(F.col("doc_id") % 2 == 1)
-    f1 = dedup.minhash_filter_new(spark, b1, state, jaccard_threshold=0.7)
+    f1 = dedup.minhash_filter_new(spark, b1, state)
     dedup.minhash_state_add(spark, f1, state, 0)
-    f2 = dedup.minhash_filter_new(spark, b2, state, jaccard_threshold=0.7)
+    f2 = dedup.minhash_filter_new(spark, b2, state)
     return f2.select("doc_id").orderBy("doc_id")
 
 
@@ -114,7 +114,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     # ngram_jaccard_pairs_blas): identical pairs+scores to the JVM
     # array_intersect form (tested), ~25x faster on this bounded-vocab
     # corpus (21s -> 0.8s at sf0.1).
-    return dedup.ngram_jaccard_pairs_blas(t.documents, block_col="lang", threshold=0.85)
+    return dedup.ngram_jaccard_pairs_blas(t.documents)
 
 
 @query(
@@ -429,7 +429,7 @@ def multimodal_png_decode(spark, sf_dir):
     # NOT in the output: it depends on zlib's compressor, which the
     # oracle can't (and shouldn't) model.
     t = Tables(spark, sf_dir)
-    assets = multimodal.encode_png(t.documents, width=24)
+    assets = multimodal.encode_png(t.documents)
     return multimodal.decode_assets(assets).select(
         "doc_id", "fmt", "width", "height", "channels", "maxval", "mean_pixel"
     )
@@ -450,7 +450,7 @@ def multimodal_jpeg_decode(spark, sf_dir):
     # identically) with a pytest gate bounding |decoded - source|
     # per doc and pinning the geometry columns exactly.
     t = Tables(spark, sf_dir)
-    assets = multimodal.encode_jpeg(t.documents, width=24)
+    assets = multimodal.encode_jpeg(t.documents)
     return multimodal.decode_assets(assets).select(
         "doc_id", "fmt", "width", "height", "channels", "maxval", "mean_pixel"
     )
@@ -501,7 +501,7 @@ def multimodal_resize(spark, sf_dir):
     # pixel resample would be a kernel.
     t = Tables(spark, sf_dir)
     decoded = multimodal.decode_assets(multimodal.to_binary_assets(t.documents))
-    return multimodal.resize_assets(decoded, max_w=320, max_h=240)
+    return multimodal.resize_assets(decoded)
 
 
 @query(
@@ -521,7 +521,7 @@ def multimodal_frame_sample(spark, sf_dir):
     # media metadata).
     t = Tables(spark, sf_dir)
     decoded = multimodal.decode_assets(multimodal.to_binary_assets(t.documents))
-    return multimodal.sample_frames(decoded, every_n=4, fps=24.0)
+    return multimodal.sample_frames(decoded)
 
 
 @query(
@@ -700,7 +700,7 @@ def dedup_cluster_components(spark, sf_dir):
     # min-label propagation (driver-controlled loop, lineage truncated
     # per round) — the oracle replays it as a recursive CTE.
     t = Tables(spark, sf_dir)
-    pairs = dedup.ngram_jaccard_pairs_blas(t.documents, block_col="lang", threshold=0.85)
+    pairs = dedup.ngram_jaccard_pairs_blas(t.documents)
     comp = dedup.connected_components(pairs, src_col="doc_a", dst_col="doc_b")
     return comp.select("id", "component")
 
@@ -718,7 +718,7 @@ def dedup_cluster_components_star(spark, sf_dir):
     equal-closure property test on random graphs (incl. a long path,
     propagation's worst case) lives in tests/test_operators.py."""
     t = Tables(spark, sf_dir)
-    pairs = dedup.ngram_jaccard_pairs_blas(t.documents, block_col="lang", threshold=0.85)
+    pairs = dedup.ngram_jaccard_pairs_blas(t.documents)
     comp = dedup.connected_components_star(pairs, src_col="doc_a", dst_col="doc_b")
     return comp.select("id", "component")
 
@@ -1464,9 +1464,7 @@ def dedup_cluster_stats(spark, sf_dir):
     # dedup_cluster_components; two tiny aggs on top (component sizes,
     # then the size histogram — output bounded by max cluster size).
     t = Tables(spark, sf_dir)
-    pairs = dedup.ngram_jaccard_pairs_blas(
-        t.documents, block_col="lang", threshold=0.85
-    )
+    pairs = dedup.ngram_jaccard_pairs_blas(t.documents)
     comp = dedup.connected_components(pairs, src_col="doc_a", dst_col="doc_b")
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size")
@@ -1549,9 +1547,7 @@ def dedup_containment_screened(spark, sf_dir):
     # screened ⊆ exact, measures recall on a planted near-dup fixture,
     # and asserts the verifier input is bounded by the screen.
     t = Tables(spark, sf_dir)
-    pairs = dedup.containment_screened_pairs(
-        t.documents, num_perm=16, bands=8, containment_threshold=0.95
-    )
+    pairs = dedup.containment_screened_pairs(t.documents)
     return pairs.orderBy("doc_src", "doc_sup")
 
 
@@ -1610,10 +1606,7 @@ def vec_ann_pq_rerank(spark, sf_dir):
     t = Tables(spark, sf_dir)
     emb = t.embeddings
     books = knn.pq_train(emb, m=8, k=16)
-    return knn.pq_ann_rerank(
-        emb, emb.where(F.col("vec_id") < 5), books,
-        k_neighbors=10, oversample=4,
-    )
+    return knn.pq_ann_rerank(emb, emb.where(F.col("vec_id") < 5), books)
 
 
 @query("vec_ann_ivfpq")  # rows-only: doubly approximate (list pruning + quantized distances)
@@ -1626,14 +1619,7 @@ def vec_ann_ivfpq(spark, sf_dir):
     t = Tables(spark, sf_dir)
     emb = t.embeddings
     books = knn.pq_train(emb, m=8, k=16)
-    return knn.pq_ann_topk_ivf(
-        emb,
-        emb.where(F.col("vec_id") < 5),
-        books,
-        n_lists=8,
-        nprobe=3,
-        k_neighbors=10,
-    )
+    return knn.pq_ann_topk_ivf(emb, emb.where(F.col("vec_id") < 5), books, n_lists=8, nprobe=3)
 
 
 @query(
@@ -1812,8 +1798,8 @@ def vec_pca_project(spark, sf_dir):
     v = t.embeddings.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
     )
-    mean, comps, _evals = pca.fit_pca(v, vec_col="e", k=8)
-    out = pca.project(v, mean, comps, vec_col="e", id_col="vec_id")
+    mean, comps, _evals = pca.fit_pca(v, k=8)
+    out = pca.project(v, mean, comps)
     # scalar output contract: driver canonicalizer hashes scalars only
     return out.select(
         "vec_id",
@@ -1862,7 +1848,7 @@ def text_span_dedup_overlap(spark, sf_dir):
     # xxhash64(span) like the aligned form (8-byte exchange payload;
     # the string-key oracle diverges only on a 2^-64 collision).
     t = Tables(spark, sf_dir)
-    return dedup.span_dedup_overlap(t.documents, span_len=20, stride=10)
+    return dedup.span_dedup_overlap(t.documents)
 
 
 @query("multimodal_phash_neardup")  # rows-only: binary image decode + banded LSH
@@ -1882,7 +1868,7 @@ def multimodal_phash_neardup(spark, sf_dir):
     t = Tables(spark, sf_dir)
     assets = multimodal.encode_ppm(t.documents, width=24)
     hashed = multimodal.dhash_assets(assets)
-    assign = multimodal.phash_band_neardup(hashed, k=3)
+    assign = multimodal.phash_band_neardup(hashed)
     return (
         assign.groupBy("keeper_doc_id")
         .agg(
@@ -1941,14 +1927,11 @@ def text_fingerprint_winnow(spark, sf_dir):
     # (the rolling min is order-defined), matching every published
     # winnowing implementation.
     t = Tables(spark, sf_dir)
-    k, w = 4, 5
-    r = text.winnow_gram_table(t.documents, k=k, w=w)
-    full_fps = F.count_distinct(
-        F.when(F.col("i") >= w - 1, F.col("wmin"))
-    )
+    r = text.winnow_gram_table(t.documents)
+    full_fps = F.count_distinct(F.when(F.col("i") >= text.WINNOW_W - 1, F.col("wmin")))
     return r.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_grams"),
-        F.when(F.count(F.lit(1)) >= w, full_fps)
+        F.when(F.count(F.lit(1)) >= text.WINNOW_W, full_fps)
         .otherwise(F.lit(1))
         .cast("long")
         .alias("n_fingerprints"),
@@ -2015,10 +1998,9 @@ def text_dedup_winnow(spark, sf_dir):
     # stage is bounded at 64x fan-out per row.
     t = Tables(spark, sf_dir)
     fpd = text.winnow_stopgram_filter(
-        text.winnow_fingerprints(t.documents, k=4, w=5)
+        text.winnow_fingerprints(t.documents)
         .select("doc_id", "fp_hash")
         .distinct(),
-        max_docs_per_fp=64,
     )
     a = fpd.select(F.col("doc_id").alias("doc_a"), "fp_hash")
     b = fpd.select(F.col("doc_id").alias("doc_b"), "fp_hash")
@@ -2031,12 +2013,7 @@ def text_dedup_winnow(spark, sf_dir):
     )
 
 
-@query(
-    "text_dedup_minhash_portable",
-    oracle=dedup.portable_minhash_oracle_sql(
-        num_perm=16, bands=8, jaccard_threshold=0.7
-    ),
-)
+@query("text_dedup_minhash_portable", oracle=dedup.portable_minhash_oracle_sql())
 def text_dedup_minhash_portable(spark, sf_dir):
     # The FULL MinHash->LSH-band->bucket->keeper->verify pipeline,
     # driver-verified EXACT: minhash_dedup_assign_portable swaps the
@@ -2050,14 +2027,12 @@ def text_dedup_minhash_portable(spark, sf_dir):
     # from pytest-only gates into a driver-checked exact verdict, and
     # the generated SQL doubles as the algorithm's cross-engine spec.
     t = Tables(spark, sf_dir)
-    return dedup.minhash_dedup_assign_portable(
-        t.documents, num_perm=16, bands=8, jaccard_threshold=0.7
-    )
+    return dedup.minhash_dedup_assign_portable(t.documents)
 
 
 @query(
     "text_dedup_simhash_portable",
-    oracle=dedup.simhash_portable_oracle_sql(k=3),
+    oracle=dedup.simhash_portable_oracle_sql(),
 )
 def text_dedup_simhash_portable(spark, sf_dir):
     # SimHash near-dup with a fully driver-checked EXACT pipeline —
@@ -2068,26 +2043,30 @@ def text_dedup_simhash_portable(spark, sf_dir):
     # stays on 64-bit xxhash64; this registration is the cross-engine
     # spec plus a driver-exact verdict for the whole family.
     t = Tables(spark, sf_dir)
-    return dedup.simhash_assign_portable(t.documents, k=3)
+    return dedup.simhash_assign_portable(t.documents)
 
 
-def _bitsample_sig_sql(dialect: str, col: str = "embedding", nbits: int = 32) -> str:
+BITSAMPLE_COL = "embedding"
+BITSAMPLE_BITS = 32
+
+
+def _bitsample_sig_sql(dialect: str) -> str:
     """Comparison-coded 32-bit signature of a 64-dim vector, generated
     for both dialects from the same bit layout (bit i set iff element
     2i+1 > element 2i+2, 1-based): pure float COMPARISONS of stored
     values — no arithmetic at all — so the signature is bit-identical
     across engines, unlike any dot-product-based hash."""
     terms = []
-    for i in range(nbits):
+    for i in range(BITSAMPLE_BITS):
         a, b = 2 * i + 1, 2 * i + 2
         if dialect == "spark":
             terms.append(
-                f"shiftleft(CAST((element_at({col}, {a}) > element_at({col}, {b}))"
-                f" AS BIGINT), {i})"
+                f"shiftleft(CAST((element_at({BITSAMPLE_COL}, {a})"
+                f" > element_at({BITSAMPLE_COL}, {b})) AS BIGINT), {i})"
             )
         else:
             terms.append(
-                f"(CAST(({col}[{a}] > {col}[{b}]) AS BIGINT) << {i})"
+                f"(CAST(({BITSAMPLE_COL}[{a}] > {BITSAMPLE_COL}[{b}]) AS BIGINT) << {i})"
             )
     return "(" + " + ".join(terms) + ")"
 
@@ -2326,7 +2305,7 @@ def multimodal_wav_decode(spark, sf_dir):
     exact where lossy JPEG cannot be. Plan: two narrow Arrow
     mapInPandas kernels (encode, decode), zero shuffles."""
     t = Tables(spark, sf_dir)
-    assets = multimodal.encode_wav(t.documents, sample_rate=8000)
+    assets = multimodal.encode_wav(t.documents)
     return multimodal.decode_wav_assets(assets)
 
 
@@ -2432,7 +2411,7 @@ def multimodal_audio_fingerprint(spark, sf_dir):
     published fingerprint's insight); the near-dup pairing over these
     signatures is multimodal_audio_neardup."""
     t = Tables(spark, sf_dir)
-    assets = multimodal.encode_wav(t.documents, sample_rate=8000)
+    assets = multimodal.encode_wav(t.documents)
     return multimodal.audio_fingerprint_assets(assets)
 
 
@@ -2460,9 +2439,9 @@ def multimodal_audio_neardup(spark, sf_dir):
     the one that scales.) Planted near-identical-audio recall is
     pinned in pytest."""
     t = Tables(spark, sf_dir)
-    assets = multimodal.encode_wav(t.documents, sample_rate=8000)
+    assets = multimodal.encode_wav(t.documents)
     fps = multimodal.audio_fingerprint_assets(assets)
-    return multimodal.audio_fingerprint_neardup(fps, max_hamming=2)
+    return multimodal.audio_fingerprint_neardup(fps)
 
 
 _UNIP_MAXW = 12  # portable contract: words longer than this are excluded
@@ -2619,12 +2598,11 @@ def multimodal_audio_spectrogram(spark, sf_dir):
     shuffles; per-doc cost is samples x bands with constant tables —
     embarrassingly parallel at any corpus size."""
     t = Tables(spark, sf_dir)
-    assets = multimodal.encode_wav(t.documents, sample_rate=8000)
+    assets = multimodal.encode_wav(t.documents)
     return multimodal.audio_spectrogram_assets(assets)
 
 
 _KMP_K = 8
-_KMP_SCALE = 10000
 _KMP_ROUNDS = 2
 _KMP_DIM = 64
 
@@ -2693,7 +2671,7 @@ def _kmeans_portable_oracle_sql(k: int, scale: int, rounds: int, dim: int) -> st
 
 @query(
     "vec_kmeans_portable",
-    oracle=_kmeans_portable_oracle_sql(_KMP_K, _KMP_SCALE, _KMP_ROUNDS, _KMP_DIM),
+    oracle=_kmeans_portable_oracle_sql(_KMP_K, knn.KMP_SCALE, _KMP_ROUNDS, _KMP_DIM),
 )
 def vec_kmeans_portable(spark, sf_dir):
     """Distributed Lloyd k-means with a DRIVER-EXACT unrolled oracle —
@@ -2715,7 +2693,7 @@ def vec_kmeans_portable(spark, sf_dir):
 
     t = Tables(spark, sf_dir)
     stats, _cents = kmeans_portable_quantized(
-        t.embeddings, k=_KMP_K, scale=_KMP_SCALE, rounds=_KMP_ROUNDS
+        t.embeddings, k=_KMP_K, scale=knn.KMP_SCALE, rounds=_KMP_ROUNDS
     )
     return stats
 
@@ -2771,7 +2749,7 @@ def _ivf_portable_oracle_sql(
 @query(
     "vec_ann_ivf_portable",
     oracle=_ivf_portable_oracle_sql(
-        _KMP_K, _KMP_SCALE, _KMP_ROUNDS, _KMP_DIM, _IVFP_NQ, _IVFP_NPROBE, _IVFP_TOPK
+        _KMP_K, knn.KMP_SCALE, _KMP_ROUNDS, _KMP_DIM, _IVFP_NQ, _IVFP_NPROBE, _IVFP_TOPK
     ),
 )
 def vec_ann_ivf_portable(spark, sf_dir):
@@ -2799,7 +2777,7 @@ def vec_ann_ivf_portable(spark, sf_dir):
         k=_IVFP_TOPK,
         n_lists=_KMP_K,
         nprobe=_IVFP_NPROBE,
-        scale=_KMP_SCALE,
+        scale=knn.KMP_SCALE,
         rounds=_KMP_ROUNDS,
     )
 
@@ -2807,7 +2785,7 @@ def vec_ann_ivf_portable(spark, sf_dir):
 _CBS_Q = 20
 
 _CBS_ORACLE = (
-    _kmp_cte_prefix(_KMP_K, _KMP_SCALE, _KMP_ROUNDS, _KMP_DIM)
+    _kmp_cte_prefix(_KMP_K, knn.KMP_SCALE, _KMP_ROUNDS, _KMP_DIM)
     + f""",
     final_best AS (
       SELECT vec_id, centroid_id FROM (
@@ -2863,11 +2841,11 @@ def pipeline_cluster_balanced_select(spark, sf_dir):
     _, cents = kmeans_portable_quantized(
         t.embeddings,
         k=_KMP_K,
-        scale=_KMP_SCALE,
+        scale=knn.KMP_SCALE,
         rounds=_KMP_ROUNDS,
         compute_stats=False,
     )
-    asg = kmeans_portable_assign(t.embeddings, cents, scale=_KMP_SCALE).select(
+    asg = kmeans_portable_assign(t.embeddings, cents).select(
         F.col("vec_id").alias("doc_id"), "centroid_id"
     )
     tk = t.documents.select(
@@ -3023,11 +3001,6 @@ def vec_knn_classify(spark, sf_dir):
     ).orderBy("q_id")
 
 
-_PQP_M = 4
-_PQP_KC = 8
-_PQP_SCALE = 10000
-_PQP_ROUNDS = 2
-_PQP_DIM = 64
 _PQP_NQ = 5
 _PQP_K = 10
 
@@ -3105,7 +3078,7 @@ def _pq_portable_oracle_sql(
 @query(
     "vec_ann_pq_portable",
     oracle=_pq_portable_oracle_sql(
-        _PQP_M, _PQP_KC, _PQP_SCALE, _PQP_ROUNDS, _PQP_DIM, _PQP_NQ, _PQP_K
+        knn.PQP_M_SUB, knn.PQP_K_CODES, knn.PQP_SCALE, knn.PQP_ROUNDS, knn.DIM, _PQP_NQ, _PQP_K
     ),
 )
 def vec_ann_pq_portable(spark, sf_dir):
@@ -3121,16 +3094,7 @@ def vec_ann_pq_portable(spark, sf_dir):
     keeps float codebooks; this form proves the machinery exactly."""
     t = Tables(spark, sf_dir)
     emb = t.embeddings
-    return knn.ann_topk_pq_portable(
-        emb,
-        emb.where(F.col("vec_id") < _PQP_NQ),
-        k=_PQP_K,
-        m_sub=_PQP_M,
-        k_codes=_PQP_KC,
-        scale=_PQP_SCALE,
-        rounds=_PQP_ROUNDS,
-        dim=_PQP_DIM,
-    )
+    return knn.ann_topk_pq_portable(emb, emb.where(F.col("vec_id") < _PQP_NQ), k=_PQP_K)
 
 
 _IVFPQ_NL = 8
@@ -3270,8 +3234,8 @@ def _ivfpq_portable_oracle_sql(
 @query(
     "vec_ann_ivfpq_portable",
     oracle=_ivfpq_portable_oracle_sql(
-        _IVFPQ_NL, _IVFPQ_NPROBE, _PQP_M, _PQP_KC, _PQP_SCALE,
-        _PQP_ROUNDS, _PQP_DIM, _PQP_NQ, _IVFPQ_SHORT, _PQP_K,
+        _IVFPQ_NL, _IVFPQ_NPROBE, knn.PQP_M_SUB, knn.PQP_K_CODES, knn.PQP_SCALE,
+        knn.PQP_ROUNDS, knn.DIM, _PQP_NQ, _IVFPQ_SHORT, _PQP_K,
     ),
 )
 def vec_ann_ivfpq_portable(spark, sf_dir):
@@ -3296,11 +3260,6 @@ def vec_ann_ivfpq_portable(spark, sf_dir):
         shortlist=_IVFPQ_SHORT,
         n_lists=_IVFPQ_NL,
         nprobe=_IVFPQ_NPROBE,
-        m_sub=_PQP_M,
-        k_codes=_PQP_KC,
-        scale=_PQP_SCALE,
-        rounds=_PQP_ROUNDS,
-        dim=_PQP_DIM,
     )
 
 
@@ -3903,12 +3862,7 @@ def text_bpe_train_portable(spark, sf_dir):
     return out.orderBy("round")
 
 
-@query(
-    "dedup_containment_screened_portable",
-    oracle=dedup.portable_screened_oracle_sql(
-        num_perm=16, bands=8, containment_threshold=0.95, bucket_cap=256
-    ),
-)
+@query("dedup_containment_screened_portable", oracle=dedup.portable_screened_oracle_sql())
 def dedup_containment_screened_portable(spark, sf_dir):
     """The FULL production near-dup composition — MinHash band screen
     -> deterministic hot-bucket cap with representative routing ->
@@ -3924,13 +3878,7 @@ def dedup_containment_screened_portable(spark, sf_dir):
     arithmetic end to end (operators/dedup.py
     containment_screened_pairs_portable)."""
     t = Tables(spark, sf_dir)
-    return dedup.containment_screened_pairs_portable(
-        t.documents,
-        num_perm=16,
-        bands=8,
-        containment_threshold=0.95,
-        bucket_cap=256,
-    )
+    return dedup.containment_screened_pairs_portable(t.documents)
 
 
 _BPEP_BUDGET = 60_000
@@ -4315,7 +4263,7 @@ def vec_ann_lsh_multiprobe_portable(spark, sf_dir):
 @query(
     "text_dedup_substring_anchor",
     oracle=f"""
-    WITH {dedup.anchored_span_oracle_cte(span_len=50, k=4, w=5)},
+    WITH {dedup.anchored_span_oracle_cte()},
     rr AS (SELECT doc_id, p,
                   row_number() OVER (PARTITION BY sh
                                      ORDER BY doc_id, p) AS rn
@@ -4349,7 +4297,7 @@ def text_dedup_substring_anchor(spark, sf_dir):
     # tie-break — the oracle restates winnow selection + anchored span
     # ranking + token-interval filter verbatim.
     t = Tables(spark, sf_dir)
-    return dedup.substring_anchor_dedup(t.documents, span_len=50, k=4, w=5)
+    return dedup.substring_anchor_dedup(t.documents)
 
 
 _RRF_K = 60  # the lexical arm's terms live in text_bm25_topk (+ oracle)
@@ -4476,7 +4424,7 @@ def retrieval_rrf_hybrid(spark, sf_dir):
 @query(
     "text_dedup_substring_anchor_incremental",
     oracle=f"""
-    WITH {dedup.anchored_span_oracle_cte(span_len=50, k=4, w=5)},
+    WITH {dedup.anchored_span_oracle_cte()},
     odd AS (SELECT doc_id, p, sh,
                    row_number() OVER (PARTITION BY sh
                                       ORDER BY doc_id, p) AS rn
@@ -4522,7 +4470,7 @@ def text_dedup_substring_anchor_incremental(spark, sf_dir):
 @query(
     "stream_substring_dedup",
     oracle=f"""
-    WITH {dedup.anchored_span_oracle_cte(span_len=50, k=4, w=5)},
+    WITH {dedup.anchored_span_oracle_cte()},
     ev AS (SELECT doc_id, p, sh,
                   row_number() OVER (PARTITION BY sh
                                      ORDER BY doc_id, p) AS rn
@@ -4626,9 +4574,7 @@ def text_tokenize_unigram_lm(spark, sf_dir):
 
     t = Tables(spark, sf_dir)
     d = t.documents.select("doc_id", "text")
-    logp = unigram.train_unigram(
-        d, vocab_target=400, seed_size=2000, rounds=3
-    )
+    logp = unigram.train_unigram(d, vocab_target=400, seed_size=2000)
     merges = bpe.train_bpe(d, num_merges=50, vocab_limit=100_000)
     counted = unigram.unigram_token_counts(
         bpe.bpe_token_counts(d, merges), logp
@@ -4792,7 +4738,6 @@ def multimodal_video_neardup(spark, sf_dir):
     )
 
 
-_KEYFRAME_MIN_DELTA = 1000
 _VIDEO_BYTE = (
     "(CASE WHEN {pos} <= n THEN ascii(substr(text, {pos}, 1)) ELSE 0 END)"
 )
@@ -4811,7 +4756,7 @@ d AS (
                      ELSE 0 END))), 'sum') AS BIGINT) AS delta_energy
   FROM fr)
 SELECT doc_id, frame_idx, delta_energy,
-       delta_energy >= {_KEYFRAME_MIN_DELTA} AS is_keyframe
+       delta_energy >= {multimodal.KEYFRAME_MIN_DELTA} AS is_keyframe
 FROM d
 """
 
@@ -4832,7 +4777,7 @@ def multimodal_video_keyframes(spark, sf_dir):
     embarrassingly parallel because temporal adjacency is intra-row."""
     t = Tables(spark, sf_dir)
     assets = multimodal.encode_video(t.documents.select("doc_id", "text"))
-    return multimodal.video_keyframes(assets, min_delta=_KEYFRAME_MIN_DELTA)
+    return multimodal.video_keyframes(assets)
 
 
 # ---------------------------------------------------------------------------
@@ -5874,7 +5819,7 @@ def multimodal_pair_dedup(spark, sf_dir):
     pairs = assets.join(
         docs.select("doc_id", F.col("text").alias("caption")), "doc_id"
     )
-    per_caption = multimodal.pair_dedup(pairs, k=3, max_captions=2)
+    per_caption = multimodal.pair_dedup(pairs, max_captions=2)
     return (
         per_caption.groupBy("image_keeper")
         .agg(

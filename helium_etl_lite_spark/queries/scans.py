@@ -205,7 +205,7 @@ def sink_compact_files(spark, sf_dir):
     load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"
     ).repartition(64).write.mode("overwrite").parquet(small)
-    compact_parquet(spark, small, packed, target_file_bytes=4 * 1024 * 1024)
+    compact_parquet(spark, small, packed)
     return spark.read.parquet(packed)
 
 

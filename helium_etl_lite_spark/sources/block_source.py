@@ -90,6 +90,9 @@ class RpcError(RuntimeError):
     the reference's error enum (src/error.rs:5-15)."""
 
 
+RPC_TIMEOUT_S = 30.0
+
+
 class HttpRpcClient:
     """JSON-RPC 2.0 over HTTP with stdlib urllib only — the production
     implementation of RpcClient (reference src/follower.rs:26 builds the
@@ -101,9 +104,9 @@ class HttpRpcClient:
     ({"height": N} vs N) since node versions differ.
     """
 
-    def __init__(self, node_addr: str, timeout: float = 30.0):
+    def __init__(self, node_addr: str):
         self.url = node_addr if "://" in node_addr else f"http://{node_addr}"
-        self.timeout = timeout
+        self.timeout = RPC_TIMEOUT_S
         self._next_id = 0
 
     def _call(self, method: str, params: dict | None = None):

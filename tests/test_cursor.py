@@ -280,6 +280,57 @@ def test_target_mb_must_be_positive(tmp_path, monkeypatch, capsys, command, flag
         assert "not a positive integer" in capsys.readouterr().err
 
 
+def test_changes_since_must_not_be_negative(tmp_path, monkeypatch, capsys):
+    # read_changes(v_from=0) is the bootstrap feed, so 0 is a valid
+    # --changes-since; a negative version used to start a SparkSession
+    # before read_changes failed looking for its manifest.
+    class Started(Exception):
+        pass
+
+    def no_spark(*args, **kwargs):
+        raise Started
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    out, _ = _two_version_store(tmp_path)
+    cfg = tmp_path / "sql.toml"
+    cfg.write_text(
+        f"out_dir = {json.dumps(out)}\n"
+        f'blocks_path = "{tmp_path}/blocks"\ntxns_path = "{tmp_path}/txns"\n'
+    )
+    argv = ["sql", "--config", str(cfg), "-e", "SELECT 1", "--changes-since"]
+    for bad in ("-1", "ten"):
+        with pytest.raises(SystemExit) as exc:
+            cli.main(argv + [bad])
+        assert exc.value.code == 2
+        assert "not a non-negative integer" in capsys.readouterr().err
+    with pytest.raises(Started):
+        cli.main(argv + ["0"])
+
+
+def test_start_restores_the_sigint_handler(monkeypatch):
+    # cmd_start installs its own SIGINT handler for a graceful stop; once
+    # the loop ends, ctrl-c must reach the caller's handler again, not
+    # set a flag on a finished loop.
+    import signal
+
+    calls = []
+
+    def catch_up(spark, cfg):
+        calls.append(1)
+        if len(calls) == 2:
+            raise KeyboardInterrupt  # a BaseException: leaves the loop
+        return 0, None
+
+    monkeypatch.setattr(cli, "_catch_up", catch_up)
+    before = signal.getsignal(signal.SIGINT)
+    cfg = {"out_dir": "unused", "tick_seconds": 0.01}
+    cli.cmd_start(None, cfg, log=logging.getLogger("t"), max_ticks=1)
+    assert signal.getsignal(signal.SIGINT) is before
+    with pytest.raises(KeyboardInterrupt):
+        cli.cmd_start(None, cfg, log=logging.getLogger("t"))
+    assert signal.getsignal(signal.SIGINT) is before
+
+
 def test_publish_syncs_new_fragments_before_the_manifest(tmp_path, monkeypatch):
     # Spark's parquet writer does not fsync. Unless publish syncs the
     # fragments a version adds (files, their directories and the

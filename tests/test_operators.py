@@ -105,7 +105,7 @@ class TestDedup:
         assert {r["doc_id"] for r in out} == {1}
 
     def test_ngram_jaccard_respects_blocking(self, spark, docs):
-        pairs = dedup.ngram_jaccard_pairs(docs, block_col="lang", threshold=0.1)
+        pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.1)
         got = {(r["doc_a"], r["doc_b"]) for r in pairs.collect()}
         assert (1, 2) in got
         assert not any(5 in p for p in got)  # es doc never pairs with en docs
@@ -377,14 +377,14 @@ class TestMultimodal:
             [(1, 640, 480), (2, 100, 50), (3, 0, 0)],
             "doc_id long, width long, height long",
         )
-        out = {r["doc_id"]: r for r in multimodal.resize_assets(decoded, 320, 240).collect()}
+        out = {r["doc_id"]: r for r in multimodal.resize_assets(decoded).collect()}
         assert (out[1]["out_w"], out[1]["out_h"]) == (320, 240)   # downscale 0.5
         assert (out[2]["out_w"], out[2]["out_h"]) == (100, 50)    # no upscale
         assert out[3]["out_w"] >= 0                               # zero dims safe
 
     def test_frame_sample_strides(self, spark):
         decoded = spark.createDataFrame([(1, 9), (2, 1)], "doc_id long, n_frames long")
-        out = multimodal.sample_frames(decoded, every_n=4).collect()
+        out = multimodal.sample_frames(decoded).collect()
         by_doc: dict[int, list[int]] = {}
         for r in out:
             by_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
@@ -472,8 +472,8 @@ class TestJaccardBlasKernel:
         from helium_etl_lite_spark.tables import Tables
 
         docs = Tables(spark, sf_dir).documents
-        jvm = dedup.ngram_jaccard_pairs(docs, block_col="lang", threshold=0.85)
-        blas = dedup.ngram_jaccard_pairs_blas(docs, block_col="lang", threshold=0.85)
+        jvm = dedup.ngram_jaccard_pairs(docs, threshold=0.85)
+        blas = dedup.ngram_jaccard_pairs_blas(docs)
         assert jvm.exceptAll(blas).count() == 0
         assert blas.exceptAll(jvm).count() == 0
 
@@ -522,7 +522,7 @@ class TestAnnRecall:
         r_default = self._recall(knn.ann_topk_lsh(emb, q, 10).collect(), sets)
         assert r_default >= 0.5, r_default  # measured 0.56 at L=24, b=6
         r_small = self._recall(
-            knn.ann_topk_lsh(emb, q, 10, n_tables=8, bits_per_table=6).collect(),
+            knn.ann_topk_lsh(emb, q, 10, n_tables=8).collect(),
             sets,
         )
         assert r_default > r_small, (r_default, r_small)
@@ -796,16 +796,12 @@ class TestIvfPq:
         }
         nopruning = {
             (r["q_id"], r["vec_id"]): r["adc_dist"]
-            for r in knn.pq_ann_topk_ivf(
-                v, queries, books, n_lists=4, nprobe=4, k_neighbors=10
-            ).collect()
+            for r in knn.pq_ann_topk_ivf(v, queries, books, n_lists=4, nprobe=4).collect()
         }
         assert nopruning == full
         pruned = {
             (r["q_id"], r["vec_id"]): r["adc_dist"]
-            for r in knn.pq_ann_topk_ivf(
-                v, queries, books, n_lists=4, nprobe=1, k_neighbors=10
-            ).collect()
+            for r in knn.pq_ann_topk_ivf(v, queries, books, n_lists=4, nprobe=1).collect()
         }
         # pruned distances agree with the unpruned ADC wherever present
         for key, dist in pruned.items():
@@ -827,7 +823,7 @@ class TestPCA:
         v = Tables(spark, sf_dir).embeddings.select(
             "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
         )
-        mean, comps, evals = pca.fit_pca(v, vec_col="e", k=8)
+        mean, comps, evals = pca.fit_pca(v, k=8)
 
         # ground truth: single-node numpy over the same vectors
         X = np.stack([r["e"] for r in v.collect()]).astype(np.float64)
@@ -842,7 +838,7 @@ class TestPCA:
 
         # projected data is decorrelated with per-component variance = eval
         P = np.stack(
-            [r["pc"] for r in pca.project(v, mean, comps, vec_col="e").collect()]
+            [r["pc"] for r in pca.project(v, mean, comps).collect()]
         )
         pcov = np.cov(P, rowvar=False, bias=True)
         np.testing.assert_allclose(np.diag(pcov), evals, rtol=1e-6)
@@ -859,8 +855,8 @@ class TestPCA:
         v = Tables(spark, sf_dir).embeddings.select(
             "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("e")
         )
-        m1, c1, e1 = pca.fit_pca(v, vec_col="e", k=4)
-        m2, c2, e2 = pca.fit_pca(v.repartition(7), vec_col="e", k=4)
+        m1, c1, e1 = pca.fit_pca(v, k=4)
+        m2, c2, e2 = pca.fit_pca(v.repartition(7), k=4)
         np.testing.assert_allclose(m1, m2, atol=1e-12)
         np.testing.assert_allclose(e1, e2, rtol=1e-9)
         # sign canonicalization makes the component matrices themselves equal
@@ -1187,7 +1183,7 @@ class TestPngCodec:
         from helium_etl_lite_spark.operators import multimodal as mm
 
         plane = bytes(range(256)) * 3 + b"\x00" * (24 * 11 * 3 - 768)
-        data = mm.encode_png_bytes(plane, 24, 11, 3)
+        data = mm.encode_png_bytes(plane, 24, 11)
         img = mm.decode_png(data)
         import numpy as np
 
@@ -1215,7 +1211,7 @@ class TestPngCodec:
 
         from helium_etl_lite_spark.operators import multimodal as mm
 
-        good = mm.encode_png_bytes(bytes(range(72)), 24, 1, 3)
+        good = mm.encode_png_bytes(bytes(range(72)), 24, 1)
         with _pytest.raises(ValueError):
             mm.decode_png(good[: len(good) // 2])  # truncated inside IDAT
         with _pytest.raises(ValueError):
@@ -1302,7 +1298,7 @@ class TestPqRerank:
             (r["q_id"], r["vec_id"])
             for r in knn.pq_ann_topk(v, queries, books, 10).collect()
         }
-        rr = knn.pq_ann_rerank(v, queries, books, k_neighbors=10, oversample=4)
+        rr = knn.pq_ann_rerank(v, queries, books)
         rr_rows = rr.collect()
         rr_pairs = {(r["q_id"], r["vec_id"]) for r in rr_rows}
         assert recall(rr_pairs) >= recall(pq_pairs)
@@ -1651,7 +1647,7 @@ class TestSpanDedupOverlap:
         docs = spark.createDataFrame(
             [(1, toks), (2, toks)], "doc_id long, text string"
         )
-        out = span_dedup_overlap(docs, span_len=20, stride=10)
+        out = span_dedup_overlap(docs)
         rows = {r["doc_id"]: r for r in out.collect()}
         assert rows[1]["n_tokens_kept"] == 40
         assert 2 not in rows  # every token covered by a duplicate span
@@ -1691,7 +1687,7 @@ class TestPhashNearDup:
             (5, format(far, "016x")),
         ]
         hashed = spark.createDataFrame(rows, "doc_id long, phash string")
-        out = {r["doc_id"]: r for r in phash_band_neardup(hashed, k=3).collect()}
+        out = {r["doc_id"]: r for r in phash_band_neardup(hashed).collect()}
         assert out[2]["keeper_doc_id"] == 1 and out[2]["hamming"] == 2
         assert out[4]["keeper_doc_id"] == 3 and out[4]["hamming"] == 3
         for selfkept in (1, 3, 5):
@@ -1716,7 +1712,7 @@ class TestPhashNearDup:
             expected[b_id] = a_id
         hashed = spark.createDataFrame(rows, "doc_id long, phash string")
         out = {r["doc_id"]: r["keeper_doc_id"]
-               for r in phash_band_neardup(hashed, k=3).collect()}
+               for r in phash_band_neardup(hashed).collect()}
         # every planted near pair must collapse (pigeonhole: <=3 flips
         # leave >=1 of 4 bands exact). Random 64-bit bases make cross-
         # pair collisions vanishingly unlikely, so keepers match exactly.
@@ -1814,7 +1810,7 @@ class TestWinnowFingerprints:
             ]
             rows.append((100 + shift, " ".join(b)))
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        fps = winnow_fingerprints(docs, k=4, w=5).collect()
+        fps = winnow_fingerprints(docs).collect()
         by_doc = {}
         for r in fps:
             by_doc.setdefault(r["doc_id"], set()).add(r["fp_hash"])
@@ -1831,7 +1827,7 @@ class TestWinnowFingerprints:
         docs = spark.createDataFrame(
             [(1, text), (2, "only three tokens")], "doc_id long, text string"
         )
-        out = winnow_fingerprints(docs, k=4, w=5).collect()
+        out = winnow_fingerprints(docs).collect()
         n1 = sum(1 for r in out if r["doc_id"] == 1)
         # expected density 2/(w+1) = 1/3 of ~1997 grams; generous band
         assert 0.2 * 1997 < n1 < 0.5 * 1997, n1
@@ -1849,7 +1845,7 @@ class TestWinnowStopgramFilter:
         rows += [(1, 11), (2, 11), (3, 99)]          # small fps survive
         fpd = spark.createDataFrame(rows, "doc_id long, fp_hash long")
         with caplog.at_level(logging.WARNING, logger="helium_etl_lite_spark"):
-            out = winnow_stopgram_filter(fpd, max_docs_per_fp=64).collect()
+            out = winnow_stopgram_filter(fpd).collect()
         hashes = {r["fp_hash"] for r in out}
         assert 7 not in hashes
         assert hashes == {11, 99}
@@ -1862,7 +1858,7 @@ class TestWinnowStopgramFilter:
         fpd = spark.createDataFrame(
             [(1, 5), (2, 5), (3, 6)], "doc_id long, fp_hash long"
         )
-        assert winnow_stopgram_filter(fpd, max_docs_per_fp=64).count() == 3
+        assert winnow_stopgram_filter(fpd).count() == 3
 
 
 class TestPortableMinhash:
@@ -1911,7 +1907,7 @@ class TestPortableHll:
 
         n, m = 5000, 64
         keys = spark.range(n).select((F.col("id") * 7919 + 13).alias("k"))
-        regs = {r["bucket"]: r["reg"] for r in _hll_registers(keys, m=m).collect()}
+        regs = {r["bucket"]: r["reg"] for r in _hll_registers(keys).collect()}
         alpha = 0.709  # alpha_64
         s = sum(2.0 ** -regs.get(b, 0) for b in range(m))
         est = alpha * m * m / s
@@ -1948,7 +1944,7 @@ class TestPortableSimhash:
             (3, " ".join(f"other{i}" for i in range(60))),
         ]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        out = {r["doc_id"]: r for r in dedup.simhash_assign_portable(docs, k=3).collect()}
+        out = {r["doc_id"]: r for r in dedup.simhash_assign_portable(docs).collect()}
         assert out[2]["keeper_doc_id"] == 1 and out[2]["hamming"] == 1
         assert out[1]["keeper_doc_id"] == 1
         assert out[3]["keeper_doc_id"] == 3 and out[3]["hamming"] == 0
@@ -1979,7 +1975,7 @@ class TestPortableSimhash:
             f"CREATE VIEW documents AS SELECT 1::BIGINT AS doc_id, '{text}' AS text"
         )
         row = con.execute(
-            dedup.simhash_portable_oracle_sql(k=3)
+            dedup.simhash_portable_oracle_sql()
         ).fetchall()
         assert row == [(1, 1, 0)]
         sh_sql = con.execute(
@@ -2735,7 +2731,7 @@ class TestContainmentScreenedPortable:
 
         docs = Tables(spark, sf_dir).documents.orderBy("doc_id").limit(60)
         hi = containment_screened_pairs_portable(docs, bucket_cap=10_000)
-        lo = containment_screened_pairs_portable(docs, bucket_cap=256)
+        lo = containment_screened_pairs_portable(docs)
         assert hi.exceptAll(lo).count() == 0
         assert lo.exceptAll(hi).count() == 0
 
@@ -2900,12 +2896,12 @@ class TestSubstringAnchorDedup:
         docs = self._mk(spark, [(1, a_text), (2, b_text)])
 
         grid = {r["doc_id"]: r for r in
-                span_dedup_overlap(docs, span_len=20, stride=10).collect()}
+                span_dedup_overlap(docs).collect()}
         assert grid[2]["text_dedup"] == b_text  # grid: blind
         assert grid[1]["text_dedup"] == a_text
 
         anch = {r["doc_id"]: r for r in
-                substring_anchor_dedup(docs, span_len=50).collect()}
+                substring_anchor_dedup(docs).collect()}
         assert anch[1]["text_dedup"] == a_text  # first occurrence intact
         assert anch[1]["n_tokens_kept"] == 100
         assert anch[2]["n_tokens_kept"] <= 80 - 50  # >= 50 tokens removed
@@ -2929,7 +2925,7 @@ class TestSubstringAnchorDedup:
             rows.append((10 + off, " ".join(b)))
         docs = self._mk(spark, rows)
         out = {r["doc_id"]: r for r in
-               substring_anchor_dedup(docs, span_len=50).collect()}
+               substring_anchor_dedup(docs).collect()}
         assert out[1]["n_tokens_kept"] == 74  # first occurrence intact
         for off in range(10):
             doc_len = off + 54 + 12
@@ -2951,7 +2947,7 @@ class TestSubstringAnchorDedup:
         b = " ".join(shared + [f"b{i}" for i in range(40)])
         docs = self._mk(spark, [(1, a), (2, b)])
         out = {r["doc_id"]: r for r in
-               substring_anchor_dedup(docs, span_len=50).collect()}
+               substring_anchor_dedup(docs).collect()}
         assert out[1]["n_tokens_kept"] == 70
         assert out[2]["n_tokens_kept"] == 70
 
@@ -3303,7 +3299,7 @@ class TestAudioFingerprint:
         )
         pairs = {
             (r.doc_a, r.doc_b)
-            for r in M.audio_fingerprint_neardup(fps, max_hamming=2).collect()
+            for r in M.audio_fingerprint_neardup(fps).collect()
         }
         assert (100, 101) in pairs
 
@@ -3320,7 +3316,7 @@ class TestAudioFingerprint:
         )
         got = {
             (r.doc_a, r.doc_b, r.hamming)
-            for r in M.audio_fingerprint_neardup(fps, max_hamming=2).collect()
+            for r in M.audio_fingerprint_neardup(fps).collect()
         }
         want = set()
         for (i, a), (j, b) in itertools.combinations(sigs, 2):
@@ -3441,7 +3437,7 @@ class TestAviVideo:
         from helium_etl_lite_spark.operators import multimodal as mm
 
         frames = self._frames()
-        d = mm.decode_avi(mm.encode_avi_bytes(frames, fps=8, codec="raw"))
+        d = mm.decode_avi(mm.encode_avi_bytes(frames, codec="raw"))
         assert (d["width"], d["height"], d["n_frames"]) == (16, 12, 3)
         assert d["fps"] == 8.0
         for a, b in zip(frames, d["frames"]):
@@ -3547,7 +3543,7 @@ class TestVideoKeyframes:
         )
         rows = {
             r["frame_idx"]: (r["delta_energy"], r["is_keyframe"])
-            for r in mm.video_keyframes(df, min_delta=1000).collect()
+            for r in mm.video_keyframes(df).collect()
         }
         assert rows[0] == (120 * 192, True)   # vs black
         assert rows[1] == (0, False)          # identical frame
@@ -3832,7 +3828,7 @@ class TestPairDedup:
             [(i, bytearray(p), c) for i, p, c in rows],
             "doc_id long, payload binary, caption string",
         )
-        out = mm.pair_dedup(pairs, k=3, max_captions=2).collect()
+        out = mm.pair_dedup(pairs, max_captions=2).collect()
         by_cap = {(r["image_keeper"], r["caption_hash"]): r for r in out}
         clusters = {r["image_keeper"] for r in out}
         # the far pair is its own cluster; everything else is ONE
@@ -3873,7 +3869,7 @@ class TestPairDedup:
             [(i, bytearray(p), c) for i, p, c in rows],
             "img_id long, payload binary, caption string",
         )
-        out = mm.pair_dedup(pairs, k=3, max_captions=1, id_col="img_id").collect()
+        out = mm.pair_dedup(pairs, max_captions=1, id_col="img_id").collect()
         got = {(r["image_keeper"], r["pair_keeper"]): (r["n_pairs"], r["is_kept"]) for r in out}
         assert got == {(100, 100): (2, True), (100, 102): (1, False)}, got
 

@@ -673,7 +673,7 @@ class TestSubstringAnchorGuarantee:
             [(1, " ".join(a)), (2, " ".join(b))], "doc_id long, text string"
         )
         out = {r["doc_id"]: r for r in
-               substring_anchor_dedup(docs, span_len=50).collect()}
+               substring_anchor_dedup(docs).collect()}
         # first occurrence fully intact (all its spans are rank 1)
         assert out[1]["n_tokens_kept"] == len(a)
         kept_b = out.get(2)
