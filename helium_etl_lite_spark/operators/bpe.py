@@ -102,7 +102,7 @@ def train_merges(word_counts: Iterable[tuple], num_merges: int) -> list:
 TEXT_COL = "text"
 
 
-def train_bpe(df: DataFrame, num_merges: int = 200, vocab_limit: int = 100_000) -> list:
+def train_bpe(df: DataFrame, num_merges: int = 50, vocab_limit: int = 100_000) -> list:
     """Distributed word counts -> driver-side merge learning."""
     return train_merges(word_frequencies(df, TEXT_COL, vocab_limit), num_merges)
 

@@ -368,7 +368,7 @@ def simhash(docs: DataFrame) -> DataFrame:
 PREFIX_BITS = 16
 
 
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = 8) -> DataFrame:
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs: block on 4 disjoint 16-bit chunks of the simhash
     (a pair within hamming<=3 shares at least one chunk exactly when
     hamming < 4 chunks), verify with bit_count(xor)."""
@@ -578,8 +578,8 @@ CC_MAX_ITER = 25
 
 def connected_components(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
+    src_col: str = "doc_a",
+    dst_col: str = "doc_b",
 ) -> DataFrame:
     """Connected components by iterative min-label propagation:
     every node's label converges to the smallest node id reachable from
@@ -666,8 +666,8 @@ STAR_MAX_ITER = 50
 
 def connected_components_star(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
+    src_col: str = "doc_a",
+    dst_col: str = "doc_b",
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al. 2014, "Connected Components in

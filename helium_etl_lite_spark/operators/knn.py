@@ -234,7 +234,7 @@ def ivf_build(vectors: DataFrame, n_lists: int = 8) -> tuple[DataFrame, DataFram
 
 
 def ann_topk_ivf(
-    vectors: DataFrame, queries: DataFrame, k: int, n_lists: int = 8, nprobe: int = 2,
+    vectors: DataFrame, queries: DataFrame, k: int, n_lists: int = 8, nprobe: int = 3,
 ) -> DataFrame:
     """Approximate top-k via IVF probe: score only vectors whose
     inverted list is among the query's `nprobe` nearest centroids.
@@ -853,7 +853,7 @@ def pq_ann_topk_ivf(
     queries: DataFrame,
     codebooks,
     n_lists: int = 8,
-    nprobe: int = 2,
+    nprobe: int = 3,
 ) -> DataFrame:
     """IVF+PQ — the composition FAISS ships as its production index
     (IndexIVFPQ): IVF inverted lists prune WHICH vectors are scored

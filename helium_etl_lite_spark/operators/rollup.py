@@ -58,7 +58,7 @@ def refresh_rollup(
     source: DataFrame,
     batch: DataFrame,
     path: str,
-    value_col: str = "value",
+    value_col: str = "cents",
     distinct_col: str | None = None,
 ) -> list[int]:
     """Refresh the persisted rollup at `path` for every bucket the batch

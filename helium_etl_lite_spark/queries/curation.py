@@ -423,8 +423,8 @@ def sample_token_budget_bpe(spark, sf_dir):
     # tokenizer (public Sennrich-2016 algorithm, operators/bpe.py) is
     # trained on the corpus's own word-frequency table and the budget
     # is enforced on exact BPE token counts instead of whitespace
-    # counts. num_merges=50 leaves frequent words as single tokens and
-    # rare words as multi-subword splits — the shape a production
+    # counts. train_bpe's 50 merges leave frequent words as single
+    # tokens and rare words as multi-subword splits — the shape a production
     # vocabulary has. Fully deterministic (count-desc/lexicographic
     # tie-breaks end-to-end), so repeated driver runs see identical
     # rows; no oracle because the greedy merge recursion is not
@@ -440,7 +440,7 @@ def sample_token_budget_bpe(spark, sf_dir):
 
     t = Tables(spark, sf_dir)
     d = t.documents.select("doc_id", "text", "n_chars")
-    merges = bpe.train_bpe(d, num_merges=50, vocab_limit=100_000)
+    merges = bpe.train_bpe(d, vocab_limit=100_000)
     counted = bpe.bpe_token_counts(d, merges).drop("text")
     return select_token_budget(
         counted,
@@ -1275,8 +1275,7 @@ def pipeline_pretraining_select_bpe(spark, sf_dir):
     from ..operators.scale import select_token_budget
 
     scored = _pretraining_scored(spark, sf_dir, keep_text=True)
-    merges = bpe.train_bpe(scored.select("doc_id", "text"), num_merges=50,
-                           vocab_limit=100_000)
+    merges = bpe.train_bpe(scored.select("doc_id", "text"), vocab_limit=100_000)
     counted = (
         bpe.bpe_token_counts(scored, merges)
         .drop("text", "n_tokens")

@@ -308,9 +308,9 @@ def rollup_incremental_refresh(spark, sf_dir):
     b1 = ev.where(F.col("event_id") % 2 == 0)
     b2 = ev.where(F.col("event_id") % 2 == 1)
     # phase 1: only batch-1 rows have landed
-    refresh_rollup(spark, b1, b1, path, value_col="cents")
+    refresh_rollup(spark, b1, b1, path)
     # phase 2: full source landed; batch 2's buckets refresh from it
-    refresh_rollup(spark, ev, b2, path, value_col="cents")
+    refresh_rollup(spark, ev, b2, path)
     return read_rollup(spark, path).select(
         "bucket", "event_type", "n_events",
         F.col("total_value").cast("long").alias("total_value"),

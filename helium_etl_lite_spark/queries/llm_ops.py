@@ -86,12 +86,13 @@ def text_dedup_minhash_incremental(spark, sf_dir):
 
 @query("text_dedup_simhash")  # rows-only: engine-specific hash bits
 def text_dedup_simhash(spark, sf_dir):
-    # max_hamming=3: on this corpus the pair count grows monotonically
-    # with distance (weakly discriminative small vocab), so a loose
+    # max_hamming 3 (simhash_near_pairs' default): on this corpus the
+    # pair count grows monotonically with distance (weakly
+    # discriminative small vocab), so a loose
     # threshold returns noise, not near-dups (measured: h<=8 matches
     # 31% of ALL pairs at sf0.1, h<=3 about 2%).
     t = Tables(spark, sf_dir)
-    return dedup.simhash_near_pairs(t.documents, max_hamming=3)
+    return dedup.simhash_near_pairs(t.documents)
 
 
 @query(
@@ -207,7 +208,7 @@ def vec_ann_ivf(spark, sf_dir):
     # come from an equi-join on list_id, never a cross join.
     t = Tables(spark, sf_dir)
     emb = t.embeddings
-    return knn.ann_topk_ivf(emb, emb.where(F.col("vec_id") < 5), k=10, n_lists=8, nprobe=3)
+    return knn.ann_topk_ivf(emb, emb.where(F.col("vec_id") < 5), k=10, n_lists=8)
 
 
 @query(
@@ -701,7 +702,7 @@ def dedup_cluster_components(spark, sf_dir):
     # per round) — the oracle replays it as a recursive CTE.
     t = Tables(spark, sf_dir)
     pairs = dedup.ngram_jaccard_pairs_blas(t.documents)
-    comp = dedup.connected_components(pairs, src_col="doc_a", dst_col="doc_b")
+    comp = dedup.connected_components(pairs)
     return comp.select("id", "component")
 
 
@@ -719,7 +720,7 @@ def dedup_cluster_components_star(spark, sf_dir):
     propagation's worst case) lives in tests/test_operators.py."""
     t = Tables(spark, sf_dir)
     pairs = dedup.ngram_jaccard_pairs_blas(t.documents)
-    comp = dedup.connected_components_star(pairs, src_col="doc_a", dst_col="doc_b")
+    comp = dedup.connected_components_star(pairs)
     return comp.select("id", "component")
 
 
@@ -1465,7 +1466,7 @@ def dedup_cluster_stats(spark, sf_dir):
     # then the size histogram — output bounded by max cluster size).
     t = Tables(spark, sf_dir)
     pairs = dedup.ngram_jaccard_pairs_blas(t.documents)
-    comp = dedup.connected_components(pairs, src_col="doc_a", dst_col="doc_b")
+    comp = dedup.connected_components(pairs)
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
@@ -1619,7 +1620,7 @@ def vec_ann_ivfpq(spark, sf_dir):
     t = Tables(spark, sf_dir)
     emb = t.embeddings
     books = knn.pq_train(emb, m=8, k=16)
-    return knn.pq_ann_topk_ivf(emb, emb.where(F.col("vec_id") < 5), books, n_lists=8, nprobe=3)
+    return knn.pq_ann_topk_ivf(emb, emb.where(F.col("vec_id") < 5), books, n_lists=8)
 
 
 @query(
@@ -2452,7 +2453,10 @@ def _unigram_portable_oracle_sql() -> str:
     integer cost table (operators/unigram.py UNIGRAM_PORTABLE_COSTS)
     renders as a VALUES list and the lattice Viterbi unrolls into one
     MIN-aggregation CTE per word position — the kernel and the oracle
-    share every constant, so they cannot drift."""
+    share every constant, so they cannot drift. The position CTEs are
+    MATERIALIZED: each reads up to UNIGRAM_PORTABLE_MAX_PIECE earlier
+    ones, and inlined they make a plan that grows combinatorially with
+    _UNIP_MAXW (DuckDB spilled about 20 GB running it that way)."""
     from ..operators.unigram import (
         UNIGRAM_PORTABLE_COSTS,
         UNIGRAM_PORTABLE_MAX_PIECE,
@@ -2463,7 +2467,7 @@ def _unigram_portable_oracle_sql() -> str:
         f"('{p}', {c})" for p, c in sorted(UNIGRAM_PORTABLE_COSTS.items())
     )
     ctes = [
-        "d0 AS (SELECT word, CAST(0 AS BIGINT) AS v FROM words)"
+        "d0 AS MATERIALIZED (SELECT word, CAST(0 AS BIGINT) AS v FROM words)"
     ]
     for k in range(1, _UNIP_MAXW + 1):
         branches = []
@@ -2476,7 +2480,7 @@ def _unigram_portable_oracle_sql() -> str:
             )
         body = "\n            UNION ALL\n            ".join(branches)
         ctes.append(
-            f"""d{k} AS (
+            f"""d{k} AS MATERIALIZED (
       SELECT word, MIN(v) AS v FROM (
             {body}
       ) GROUP BY word)"""
@@ -4575,7 +4579,7 @@ def text_tokenize_unigram_lm(spark, sf_dir):
     t = Tables(spark, sf_dir)
     d = t.documents.select("doc_id", "text")
     logp = unigram.train_unigram(d, vocab_target=400, seed_size=2000)
-    merges = bpe.train_bpe(d, num_merges=50, vocab_limit=100_000)
+    merges = bpe.train_bpe(d, vocab_limit=100_000)
     counted = unigram.unigram_token_counts(
         bpe.bpe_token_counts(d, merges), logp
     )

@@ -3144,11 +3144,11 @@ class TestStarConnectedComponents:
         edges = spark.createDataFrame(edge_rows, "src long, dst long")
         ref = {
             (r.id, r.component)
-            for r in connected_components(edges).collect()
+            for r in connected_components(edges, "src", "dst").collect()
         }
         star = {
             (r.id, r.component)
-            for r in connected_components_star(edges).collect()
+            for r in connected_components_star(edges, "src", "dst").collect()
         }
         assert star == ref
 
@@ -3178,7 +3178,7 @@ class TestStarConnectedComponents:
         edges = spark.createDataFrame(rows, "src long, dst long")
         got = {
             (r.id, r.component)
-            for r in connected_components_star(edges).collect()
+            for r in connected_components_star(edges, "src", "dst").collect()
         }
         assert got == {(i, 0) for i in range(200)}
 

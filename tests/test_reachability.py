@@ -222,6 +222,16 @@ ONE_VALUE = {
     "etl.fixtures.make_chain.include_unknown_type": "a test adds an unknown "
     "transaction type to reach the enum validation",
     "etl.fixtures.make_chain.seed": "property tests draw chains from other seeds",
+    "operators.bpe.train_bpe.num_merges": "tests set 5 to 30 merges, a vocabulary "
+    "their few-sentence corpora can fill",
+    "operators.dedup.connected_components.dst_col": "equal-closure tests build "
+    "src/dst edge lists",
+    "operators.dedup.connected_components.src_col": "equal-closure tests build "
+    "src/dst edge lists",
+    "operators.dedup.connected_components_star.dst_col": "equal-closure tests build "
+    "src/dst edge lists",
+    "operators.dedup.connected_components_star.src_col": "equal-closure tests build "
+    "src/dst edge lists",
     "operators.dedup.containment_screened_pairs.bucket_cap": "tests set 16 and 64 "
     "to route over-full buckets through the representative, 10**9 to turn it off",
     "operators.dedup.containment_screened_pairs_portable.bucket_cap": "tests set 2 "
@@ -236,10 +246,14 @@ ONE_VALUE = {
     "so their few-token near-dups clear the threshold",
     "operators.dedup.ngram_jaccard_pairs.threshold": "test-only reference: tests run "
     "it at 0.85 against the BLAS form and at 0.1",
+    "operators.dedup.simhash_near_pairs.max_hamming": "a test sets 8, a looser "
+    "threshold than the registry's 3",
     "operators.jpeg.encode_jpeg_bytes.restart_interval": "tests set 1 and 2 to "
     "reach restart-marker coding",
     "operators.knn.ann_topk_ivf_portable.n_tasks": "tests run it over 4 tasks, a "
     "partitioning the program's 32 cannot reach on a few vectors",
+    "operators.knn.ann_topk_ivf.nprobe": "tests set 2: every list of a 2-list "
+    "index, and the recall gate measured at 2 of 8",
     "operators.knn.ann_topk_lsh.n_tables": "a test sets 8 tables to show recall "
     "grows with the table count",
     "operators.knn.cosine_pairs_blocked.n_blocks": "test-only reference: property "
@@ -250,6 +264,8 @@ ONE_VALUE = {
     "compares it with _lsh_table_buckets_np at 6 bits",
     "operators.knn.lsh_table_buckets.n_tables": "test-only reference: a test "
     "compares it with _lsh_table_buckets_np at 4 tables",
+    "operators.knn.pq_ann_topk_ivf.nprobe": "a test sets 4 of 4 lists (no pruning) "
+    "and 1 to compare pruned with unpruned distances",
     "operators.knn.semantic_dedup_pairs.block_target": "a test sets 4 to split a "
     "hot cluster over several block pairs",
     "operators.knn.semantic_dedup_pairs.max_centroid_rows": "a test sets 5 to reach "
@@ -259,6 +275,8 @@ ONE_VALUE = {
     "operators.multimodal.pair_dedup.id_col": "a test keys its pairs by img_id",
     "operators.rollup.refresh_rollup.distinct_col": "a test sets user_id to reach "
     "the distinct-count rollup",
+    "operators.rollup.refresh_rollup.value_col": "the rollup tests' events carry "
+    "their measure in a value column",
     "operators.scale.distributed_ntile.bucket_width": "tests set 1, 3 and 7 to "
     "reach many buckets at test scale",
     "operators.scale.distributed_ntile.max_control_rows": "tests set 3 and 10 to "

@@ -58,7 +58,7 @@ class TestIncrementalRollup:
         landed = None
         for batch in batches:
             landed = batch if landed is None else landed.unionByName(batch)
-            rollup.refresh_rollup(spark, landed, batch, path)
+            rollup.refresh_rollup(spark, landed, batch, path, value_col="value")
         got = _as_set(rollup.read_rollup(spark, path))
         want = _as_set(_full_rollup(landed))
         assert got == want
@@ -70,10 +70,10 @@ class TestIncrementalRollup:
     def test_replay_converges(self, spark, tmp_path):
         path = str(tmp_path / "r2")
         b1 = _events(spark, [(0, 0, "click", 1.0), (1, 70, "view", 2.0)])
-        rollup.refresh_rollup(spark, b1, b1, path)
+        rollup.refresh_rollup(spark, b1, b1, path, value_col="value")
         once = _as_set(rollup.read_rollup(spark, path))
         # replay the same batch (crash-retry / checkpoint replay)
-        rollup.refresh_rollup(spark, b1, b1, path)
+        rollup.refresh_rollup(spark, b1, b1, path, value_col="value")
         assert _as_set(rollup.read_rollup(spark, path)) == once
 
     def test_refresh_scopes_to_touched_buckets(self, spark, tmp_path):
@@ -81,11 +81,11 @@ class TestIncrementalRollup:
         all_events = _events(
             spark, [(0, 0, "click", 1.0), (1, 70, "view", 2.0), (2, 130, "click", 3.0)]
         )
-        rollup.refresh_rollup(spark, all_events, all_events, path)
+        rollup.refresh_rollup(spark, all_events, all_events, path, value_col="value")
         # a batch touching only hour 2 must refresh exactly that bucket
         late = _events(spark, [(3, 135, "click", 7.0)])
         touched = rollup.refresh_rollup(
-            spark, all_events.unionByName(late), late, path
+            spark, all_events.unionByName(late), late, path, value_col="value"
         )
         assert touched == [int(BASE.replace(tzinfo=dt.timezone.utc).timestamp()) + 7200]
         got = _as_set(rollup.read_rollup(spark, path))
@@ -95,10 +95,10 @@ class TestIncrementalRollup:
     def test_empty_batch_is_noop(self, spark, tmp_path):
         path = str(tmp_path / "r4")
         b1 = _events(spark, [(0, 0, "click", 1.0)])
-        rollup.refresh_rollup(spark, b1, b1, path)
+        rollup.refresh_rollup(spark, b1, b1, path, value_col="value")
         before = _as_set(rollup.read_rollup(spark, path))
         empty = _events(spark, [])
-        assert rollup.refresh_rollup(spark, b1, empty, path) == []
+        assert rollup.refresh_rollup(spark, b1, empty, path, value_col="value") == []
         assert _as_set(rollup.read_rollup(spark, path)) == before
 
 
@@ -114,7 +114,7 @@ class TestSketchRollup:
             [(i, BASE + dt.timedelta(minutes=m), t, v, u) for i, m, t, v, u in rows],
             "event_id long, ts timestamp, event_type string, value double, user_id long",
         )
-        rollup.refresh_rollup(spark, src, src, path, distinct_col="user_id")
+        rollup.refresh_rollup(spark, src, src, path, value_col="value", distinct_col="user_id")
         got = rollup.read_rollup(spark, path)
         # per-hour estimates: exact at this cardinality (HLL is exact in
         # sparse mode for small sets)
