@@ -13,13 +13,15 @@ Commands:
             transactions / follower_info — what a reference user does
             with psql against the Postgres tables):
             ... sql --config settings.toml -e "SELECT ..."
-  status    cursor, snapshot version and per-table partition, fragment
-            and file counts (no Spark)
-  compact   merge each block range's fragments (one per tick) and
-            small files into one fragment of a new snapshot version
+  status    cursor, snapshot version and per-table partition, fragment,
+            file and byte counts (no Spark); each commit's fold keeps a
+            range's fragments to a few per size tier
+  compact   the commit's fold over every block range holding more than
+            one fragment: each merges into one fragment of a new
+            snapshot version
   vacuum    delete data no kept snapshot version references — the
-            follower's disk maintenance: a replay or a compaction
-            writes new fragments and keeps the superseded ones for
+            disk maintenance: a replay, a fold or a compaction writes
+            new fragments and keeps the superseded ones for
             older-snapshot readers until vacuum runs
 
 status, compact and vacuum read only out_dir, so they serve every
@@ -298,8 +300,9 @@ def cmd_status(cfg, log=None) -> dict:
     follower_info peek, src/follower.rs:123-142, plus the physical
     inventory an operator actually wants): cursor position, snapshot
     version, and per-table block-range (partition), fragment, file and
-    byte counts, all from the CURRENT manifest. `compact` brings the
-    fragment count back to one per range. Every field but out_dir is
+    byte counts, all from the CURRENT manifest. Each commit folds a
+    range's newest same-size fragments; `compact` brings the fragment
+    count down to one per range. Every field but out_dir is
     None (tables empty) when out_dir holds no snapshot store."""
     from .etl.snapshot import SnapshotStore, fragment_dir, fragments, require_fragments
 
@@ -341,9 +344,9 @@ def cmd_status(cfg, log=None) -> dict:
 
 def cmd_vacuum(cfg, keep_versions: int) -> list[str]:
     """Reclaim disk: delete the data directories no kept snapshot
-    version references. A replay and `compact` leave each superseded
-    fragment in place for older-snapshot readers, so disk use grows
-    until this runs. Needs no SparkSession — pure manifest
+    version references. A replay, a fold and `compact` leave each
+    superseded fragment in place for older-snapshot readers, so disk
+    use grows until this runs. Needs no SparkSession — pure manifest
     bookkeeping."""
     from .etl.snapshot import SnapshotStore
 
@@ -357,22 +360,20 @@ def cmd_vacuum(cfg, keep_versions: int) -> list[str]:
     return removed
 
 
-def cmd_compact(spark, cfg, target_mb: int = 128) -> dict:
-    """Maintenance: merge the fragments the append loop accumulates
-    (one per pass and block range — the parquet analog of the
-    reference's one-INSERT-per-block append, src/reward.rs:38-44) into
-    one fragment per range of a new snapshot version (committed
-    fragments only, readers never torn).
-    The superseded files stay until `vacuum` reclaims them. The config
-    needs only out_dir. Single-writer contract: don't run concurrently
-    with the follower. Returns the published manifest, or {} when
-    nothing needed compaction."""
-    from .etl.compact import compact_snapshot
+def cmd_compact(spark, cfg) -> dict:
+    """Maintenance: the fold each commit runs on its ranges' newest
+    same-size fragments (the parquet analog of the reference's
+    one-INSERT-per-block append, src/reward.rs:38-44, kept bounded),
+    applied to every range holding more than one fragment: each merges
+    into one fragment of a new snapshot version (committed fragments
+    only, readers never torn). The superseded files stay until `vacuum`
+    reclaims them. The config needs only out_dir. Single-writer
+    contract: don't run concurrently with the follower. Returns the
+    published manifest, or {} when nothing needed compaction."""
+    from .etl.snapshot import compact_snapshot
 
     log = setup_logger(cfg)
-    manifest = compact_snapshot(
-        spark, str(cfg["out_dir"]), target_file_bytes=int(target_mb) * 1024 * 1024
-    )
+    manifest = compact_snapshot(spark, str(cfg["out_dir"]))
     if manifest is None:
         log.info("compact: nothing to compact")
         return {}
@@ -407,10 +408,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--keep-versions", type=_positive_int, default=2,
         help="vacuum: snapshot versions to keep (default 2)",
-    )
-    p.add_argument(
-        "--target-mb", type=_positive_int, default=128,
-        help="compact: target output file size in MiB (default 128)",
     )
     args = p.parse_args(argv)
     if not args.config:
@@ -454,7 +451,7 @@ def main(argv: list[str] | None = None) -> int:
                 ),
             )
         elif args.command == "compact":
-            cmd_compact(spark, cfg, args.target_mb)
+            cmd_compact(spark, cfg)
         else:
             cmd_start(spark, cfg)
     finally:

@@ -8,10 +8,13 @@ files a year. Small files poison a 100 TB deployment twice: the
 driver's file listing / split planning grows linearly, and each task
 pays the parquet footer+dictionary open cost for a few KB of rows.
 
-`compact_parquet` rewrites a directory to ~`PACKED_FILE_BYTES` files:
-it sizes the output from the ACTUAL input bytes (not a guessed row
-count), rewrites with a single narrow repartition, and keeps content
-exactly (proven by the `sink_compact_files` oracle).
+`compact_parquet` rewrites a plain parquet directory (the registry
+query `sink_compact_files`) to ~`PACKED_FILE_BYTES` files: it sizes the
+output from the ACTUAL input bytes (not a guessed row count), rewrites
+with a single narrow repartition, and keeps content exactly (proven by
+that query's oracle). A snapshot store never needs it: each commit
+folds its ranges' small fragments, and `cli compact` is the same fold
+over every range (etl/snapshot.py `compact_snapshot`).
 """
 
 from __future__ import annotations
@@ -54,86 +57,3 @@ def compact_parquet(spark: SparkSession, in_path: str, out_path: str) -> int:
     df = spark.read.parquet(in_path)
     df.repartition(n).write.mode("overwrite").parquet(out_path)
     return n
-
-
-def _n_data_files(pdir: str) -> int:
-    return sum(
-        1
-        for f in os.listdir(pdir)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
-
-
-def compact_snapshot(
-    spark: SparkSession,
-    root: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict | None:
-    """Compact a snapshot-manifest store (the follower's sink, and each
-    batch-id store: a streaming consumer's store or an operator state)
-    the lakehouse way: merge each block range's fragments (one per
-    tick, apply or fold-in that landed in it), or a
-    lone fragment holding more files than its size needs, into one
-    fragment of a new version directory, and publish a manifest that
-    remaps them — data files are never mutated, so concurrent snapshot
-    readers are never torn, and a crash before publish leaves an orphan
-    v-dir exactly like a crashed batch (invisible, overwritten by the
-    next commit).
-
-    Only fragments listed in the CURRENT manifest are read or
-    rewritten: uncommitted/orphaned directories (a crashed writer's
-    half batch) are never compacted into the corpus. Old version dirs
-    linger for older-snapshot readers until `vacuum` reclaims them.
-    Do not run concurrently with the follower — both would write the
-    same next-version directory (single-writer contract, as vacuum).
-
-    Returns the published manifest, or None if nothing needed
-    compaction (no new version is published).
-    """
-    from .snapshot import SnapshotStore, fragment_dir, _read_fragments, require_fragments
-
-    store = SnapshotStore(root)
-    m = store.current()
-    if m is None:
-        return None
-    require_fragments(m, root)
-    version = m["version"] + 1
-    new_tables: dict[str, dict] = {}
-    for table, parts in m["tables"].items():
-        new_parts = dict(parts)
-        merge: dict[int, list] = {}
-        for r, frags in parts.items():
-            if len(frags) == 1:
-                pdir = fragment_dir(root, table, int(r), frags[0][0])
-                total = sum(
-                    os.path.getsize(os.path.join(pdir, f))
-                    for f in os.listdir(pdir)
-                    if f.endswith(".parquet")
-                )
-                if _n_data_files(pdir) <= max(1, math.ceil(total / target_file_bytes)):
-                    continue
-            merge[int(r)] = frags
-        if merge:
-            df = _read_fragments(
-                spark, root, table,
-                [(r, frag[0]) for r, frags in merge.items() for frag in frags],
-            )
-            vdir = os.path.join(root, table, f"v={version}")
-            (
-                df.repartition("block_range")
-                .write.mode("overwrite")
-                .partitionBy("block_range")
-                .parquet(vdir)
-            )
-            for r, frags in merge.items():
-                new_parts[str(r)] = [
-                    [version, min(f[1] for f in frags), max(f[2] for f in frags)]
-                ]
-        new_tables[table] = new_parts
-    if new_tables == m["tables"]:
-        return None
-    manifest = dict(m)
-    manifest["version"] = version
-    manifest["tables"] = new_tables
-    store.publish(manifest)
-    return manifest

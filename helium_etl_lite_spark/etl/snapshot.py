@@ -20,12 +20,13 @@ scaled down to exactly what the follower needs:
   previous snapshot are never torn.
 
 - One manifest JSON per version maps each block_range of each table to
-  its list of fragments `[version, block_lo, block_hi]` (the fragment's
-  directory, and the block span it holds rows for), AND carries the
+  its fragments in commit order, `[version, block_lo, block_hi, bytes]`
+  (the fragment's directory, the block span it holds rows for, and the
+  size of its parquet files, recorded when written), AND carries the
   cursor:
       {"version": 7, "height": 1099, "first_block": 1000,
-       "tables": {"rewards": {"0": [[3, 0, 999]],
-                              "1": [[5, 1000, 1029], [7, 1030, 1099]]},
+       "tables": {"rewards": {"0": [[3, 0, 999, 91422]],
+                              "1": [[5, 1000, 1029, 3310], [7, 1030, 1099, 6507]]},
                   ...}}
   `_snapshots/CURRENT` names the live version and is published with
   `durable_replace` (an fsync'd atomic `os.replace`) — the ONLY
@@ -43,6 +44,15 @@ scaled down to exactly what the follower needs:
   later); only fragments that partly overlap the claim are read, and
   their surviving rows merge with the batch into the new fragment.
 
+- The same commit folds: a fragment's size tier is floor(log_K(bytes)),
+  and when the K - 1 newest kept fragments of a touched range share a
+  tier, they join the carry-over read and merge into the commit's new
+  fragment, so CDC sees only the batch. The sizes come from the
+  manifest: an append that does not fold stats no earlier fragment.
+  `compact` folds every range holding more than one fragment, and is
+  the only fold of an entry with no `bytes` (written before sizes were
+  recorded).
+
 - Crash anywhere before the CURRENT swap leaves the previous snapshot
   (data + cursor together) fully intact; the half-written v-dir is
   orphaned, invisible, and overwritten by the replay, which recomputes
@@ -51,17 +61,17 @@ scaled down to exactly what the follower needs:
 Replay convergence, crash atomicity, append-without-reads and
 metadata-deletes are pinned by tests/test_snapshot.py.
 
-Scale posture: the manifest is O(#fragments) (about chain height /
-range_size times the ticks per range; compact_snapshot folds a range's
-fragments back into one), read/written driver-side once per batch —
-control plane, like Delta's log replay. A tick costs O(new blocks): it
-writes only its own rows, with the same partition layout and pushdown as
-a plain partitioned table, and a read lists only the manifest's fragment
-directories. Disk: a tick adds only its own rows; a replay or a
-compaction writes new fragments and keeps the superseded ones for
-older-snapshot readers until vacuum() drops the versions outside its
-keep window (`cli vacuum`, the follower's disk maintenance beside
-`cli compact`, which also merges each range's fragments into one).
+Scale posture: the manifest is O(#fragments), read/written driver-side
+once per batch — control plane, like Delta's log replay. The fold is
+the size-tiered (LSM) policy: no K consecutive fragments of a range
+share a tier, so a range whose fragments grow older and larger (ticks,
+fold-ins) holds at most K - 1 per size tier, O(K log_K(bytes)) in all,
+and a fold costs the size of one tier, never the whole range's. A tick
+costs O(new blocks), with a plain partitioned table's layout and
+pushdown, and a read lists only the manifest's fragment directories.
+Disk: a replay, a fold or a compaction keeps the superseded fragments
+for older-snapshot readers until vacuum() drops the versions outside
+its keep window (`cli vacuum`).
 """
 
 from __future__ import annotations
@@ -376,8 +386,8 @@ def refuse_old_layout(root: str) -> None:
 
 
 def fragments(manifest: dict, table: str) -> list[tuple[int, list[int]]]:
-    """(block_range, [version, block_lo, block_hi]) for every fragment
-    of `table` in `manifest`."""
+    """(block_range, [version, block_lo, block_hi, bytes]) for every
+    fragment of `table` in `manifest`."""
     return [
         (int(r), frag)
         for r, frags in manifest["tables"].get(table, {}).items()
@@ -618,6 +628,52 @@ def pair_updates(feed: DataFrame, key_cols: list[str]) -> DataFrame:
     return pure_ins.unionByName(pure_del).unionByName(pre).unionByName(post)
 
 
+#: the fold's base: a fragment's size tier is floor(log_K(bytes)).
+K = 4
+
+
+def _tier(nbytes: int) -> int:
+    tier = 0
+    while nbytes >= K:
+        nbytes //= K
+        tier += 1
+    return tier
+
+
+def _fold_tail(frags: list[list[int]]) -> list[list[int]]:
+    """The newest K - 1 of a range's `frags` when they all have a size and
+    share its tier, else []."""
+    tail = frags[-(K - 1):]
+    if len(tail) < K - 1 or any(len(f) < 4 for f in tail):
+        return []
+    return tail if len({_tier(f[3]) for f in tail}) == 1 else []
+
+
+def _write_fragments(
+    root: str, table: str, version: int, df: DataFrame, spans: dict, parts: dict
+) -> None:
+    """The one writer of fragments, for a commit and a compaction alike:
+    write `df` (with its `block_range` column) as `table`'s fragments of
+    `version`, one file per range, and enter each range the write
+    produced in `parts` as [version, block_lo, block_hi, bytes], its
+    span from `spans`, which names every range `df` has rows in."""
+    # One range: one file with no shuffle. Several (a backfill pass):
+    # one file set per range.
+    out = df.coalesce(1) if len(spans) == 1 else df.repartition("block_range")
+    vdir = os.path.join(root, table, f"v={version}")
+    # overwrite: a replay after a crash-before-publish recomputes the same
+    # version number and rewrites its orphan directory.
+    out.write.mode("overwrite").partitionBy("block_range").parquet(vdir)
+    # Which ranges did the write actually produce? Directory names are
+    # authoritative (and an empty batch yields none).
+    for d in os.listdir(vdir):
+        if d.startswith("block_range="):
+            r = int(d[len("block_range="):])
+            files = os.scandir(os.path.join(vdir, d))
+            nbytes = sum(f.stat().st_size for f in files if f.name.endswith(".parquet"))
+            parts.setdefault(str(r), []).append([version, *spans[r], nbytes])
+
+
 def commit_batch_atomic(
     spark: SparkSession,
     root: str,
@@ -644,6 +700,8 @@ def commit_batch_atomic(
     - dropped unread when it lies wholly inside a contiguous claim;
     - otherwise read, and its rows the claim does not cover merged with
       the batch into the new fragment, whose span covers both.
+    Then the fold: when the K - 1 newest kept fragments share a size
+    tier, they are read too and merged whole into the new fragment.
 
     ``touched_ranges`` (r15, guide §1.2): when the caller already
     knows the claimed block-range set — it MUST equal the distinct
@@ -697,20 +755,27 @@ def commit_batch_atomic(
             kept = []
             span = (c_lo, c_hi)
             for frag in parts.get(str(r), []):
-                _, f_lo, f_hi = frag
+                f_lo, f_hi = frag[1], frag[2]
                 if f_hi < c_lo or f_lo > c_hi:
                     kept.append(frag)
                 elif claimed is not None or f_lo < c_lo or f_hi > c_hi:
                     to_read.append((r, frag[0]))
                     span = (min(span[0], f_lo), max(span[1], f_hi))
-            parts[str(r)] = kept
+            # The fold: a folded fragment's span misses the claim, so the
+            # carry-over keeps all of its rows.
+            tail = _fold_tail(kept)
+            for frag in tail:
+                to_read.append((r, frag[0]))
+                span = (min(span[0], frag[1]), max(span[1], frag[2]))
+            parts[str(r)] = kept[: len(kept) - len(tail)]
             merged_spans[r] = span
         new = df.withColumn(
             "block_range", F.floor(F.col("block") / F.lit(range_size)).cast("long")
         )
-        # Carry-over: rows of the partly overlapped fragments that the
-        # batch does NOT claim. Read straight from their version dirs —
-        # append-only storage means this never races the write below.
+        # Carry-over: rows of the partly overlapped and the folded
+        # fragments that the batch does NOT claim. Read straight from
+        # their version dirs — append-only storage means this never
+        # races the write below.
         old = _read_fragments(spark, root, table, to_read)
         if old is not None:
             if claimed is None:
@@ -722,20 +787,7 @@ def commit_batch_atomic(
                     "left_anti",
                 )
             new = new.unionByName(survivors.select(*new.columns))
-        # One range: one file with no shuffle. Several (a backfill
-        # pass): one file set per range.
-        out = new.coalesce(1) if len(spans) == 1 else new.repartition("block_range")
-        vdir = os.path.join(root, table, f"v={version}")
-        # overwrite: a replay after a crash-before-publish recomputes
-        # the same version number and rewrites its orphan directory.
-        out.write.mode("overwrite").partitionBy("block_range").parquet(vdir)
-        # Which ranges did the write actually produce? Directory names
-        # are authoritative (and an empty batch yields none).
-        for d in os.listdir(vdir):
-            if d.startswith("block_range="):
-                r = int(d[len("block_range="):])
-                f_lo, f_hi = merged_spans.get(r, (r * range_size, (r + 1) * range_size - 1))
-                parts.setdefault(str(r), []).append([version, f_lo, f_hi])
+        _write_fragments(root, table, version, new, merged_spans, parts)
         new_tables[table] = {r: frags for r, frags in parts.items() if frags}
 
     manifest = {
@@ -748,14 +800,39 @@ def commit_batch_atomic(
     return manifest
 
 
+def compact_snapshot(spark: SparkSession, root: str) -> dict | None:
+    """`cli compact`: the commit's fold applied to every block range
+    holding more than one fragment, whatever their sizes, published as a
+    new version with the cursor unchanged. Only fragments CURRENT names
+    are read, so a crashed writer's orphan directory never joins the
+    corpus. Single writer, as vacuum. Returns the published manifest, or
+    None when no range holds more than one fragment."""
+    store = SnapshotStore(root)
+    m = store.current()
+    if m is None:
+        return None
+    require_fragments(m, root)
+    version = m["version"] + 1
+    tables = {t: dict(parts) for t, parts in m["tables"].items()}
+    for table, parts in tables.items():
+        merge = {int(r): parts.pop(r) for r, frags in m["tables"][table].items() if len(frags) > 1}
+        if merge:
+            frags = [(r, f[0]) for r, fs in merge.items() for f in fs]
+            spans = {r: (min(f[1] for f in fs), max(f[2] for f in fs)) for r, fs in merge.items()}
+            df = _read_fragments(spark, root, table, frags)
+            _write_fragments(root, table, version, df, spans, parts)
+    if tables == m["tables"]:
+        return None
+    manifest = {**m, "version": version, "tables": tables}
+    store.publish(manifest)
+    return manifest
+
+
 # ---------------------------------------------------------------------------
 # Batch-id stores: the store of every streaming consumer and every
 # incremental operator state. The manifest's cursor (`height`) holds the
 # last applied batch id, so the data and the batch id publish in one
 # rename, and a batch id at or below the cursor is a replay.
-
-#: fragments a block range may hold before a commit compacts the store.
-COMPACT_EVERY = 8
 
 #: the table an incremental operator keeps its state rows in.
 STATE = "state"
@@ -781,22 +858,14 @@ def commit_batch(
     heights: DataFrame | None = None,
 ) -> None:
     """Publish `tables` and `batch_id` as the store's cursor in one
-    snapshot version (claim arguments as commit_batch_atomic's), then
-    compact when a block range holds more than COMPACT_EVERY fragments
-    and vacuum the fragments the two newest versions do not name. The
-    manifest's first_block carries nothing for these stores (0)."""
-    from .compact import compact_snapshot
-
-    m = commit_batch_atomic(
+    snapshot version (claim arguments as commit_batch_atomic's, whose
+    fold bounds each range's fragments), then vacuum the fragments the
+    two newest versions do not name. The manifest's first_block carries
+    nothing for these stores (0)."""
+    commit_batch_atomic(
         spark, store_dir, tables, lo, hi, height=batch_id, first_block=0,
         heights=heights,
     )
-    if any(
-        len(frags) > COMPACT_EVERY
-        for parts in m["tables"].values()
-        for frags in parts.values()
-    ):
-        compact_snapshot(spark, store_dir)
     SnapshotStore(store_dir).vacuum(keep_versions=2)
 
 

@@ -15,8 +15,9 @@ because integer addition does.
 O(distinct keys x n_batches) rows of integers (for hashed-bucket
 scorers the key domain is BOUNDED by construction; for n-gram LMs it
 scales with vocab, sublinear in corpus); the landed corpus is never
-re-read. commit_state's automatic compaction merges a block range's
-fragments once it holds more than COMPACT_EVERY of them.
+re-read. Each fold-in's commit folds the newest same-size fragments of
+the state's block range (etl/snapshot.py), so a one-row fold-in never
+rewrites the accumulated state.
 """
 
 from __future__ import annotations

@@ -19,8 +19,8 @@ DELTA is one fragment, committed with the caller's batch_id as the
 manifest cursor, so a crash-replay of the same batch id is skipped —
 replay-idempotent without set semantics (a double append would
 double-count). Reading the current totals is a sum over all fragments —
-at most 65536 x n_batches rows of (long, long, long); the store's
-automatic compaction merges their fragments as they accumulate.
+at most 65536 x n_batches rows of (long, long, long); each commit's
+fold merges their fragments as they accumulate.
 
 100 TB posture: the corpus is never re-read — each batch is scanned
 once to count and once to score; everything else (state read, totals,

@@ -196,8 +196,8 @@ def _fragment_files(root: str, manifest: dict, table: str) -> list[str]:
     never a listing of the table directory, which still holds the
     fragments a replay or compaction superseded until `vacuum`."""
     files = []
-    for r, (version, _lo, _hi) in fragments(manifest, table):
-        d = fragment_dir(root, table, r, version)
+    for r, frag in fragments(manifest, table):
+        d = fragment_dir(root, table, r, frag[0])
         files += sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
     return files
 

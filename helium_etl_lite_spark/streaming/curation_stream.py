@@ -15,7 +15,7 @@ and a replayed batch (the same source version) skips wholesale.
 Both tables are APPEND-ONLY: each row carries its batch id in the
 `block` column the store keys on, so an apply appends one fragment per
 table holding only the batch's fresh rows and reads nothing back;
-compaction and retention are commit_batch's.
+the fold and retention are commit_batch's.
 
 Probe shape at scale: dedup_filter_new's — the state never shuffles:
 the batch's distinct hash fingerprints broadcast into a semi-join

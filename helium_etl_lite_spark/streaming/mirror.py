@@ -31,9 +31,9 @@ blocks above every fragment (a follower's change feed) appends only its
 own rows, and a batch that rewrites old blocks rewrites the fragments
 it overlaps.
 
-After each apply the store stays bounded: commit_batch compacts a block
-range holding more than COMPACT_EVERY fragments, and vacuum keeps the
-fragments of the two newest versions.
+After each apply the store stays bounded: the commit folds each touched
+range's newest same-size fragments (commit_batch_atomic), and vacuum
+keeps the fragments of the two newest versions.
 """
 
 from __future__ import annotations

@@ -148,86 +148,64 @@ def _part_files(tdir):
     return out
 
 
-def _fragment(pdir, n_splits=3):
-    # Content-preserving fragmentation (the small-file state a bulk
-    # import or per-block appender leaves behind): split the partition's
-    # file into row slices. The follower's own sink writes one file per
-    # partition, so tests fabricate the fragmentation to compact.
-    import pyarrow.parquet as pq
-
-    f = next(x for x in sorted(os.listdir(pdir)) if x.endswith(".parquet"))
-    t = pq.read_table(os.path.join(pdir, f))
-    step = max(1, t.num_rows // n_splits)
-    k = 0
-    for i in range(0, t.num_rows, step):
-        pq.write_table(
-            t.slice(i, step), os.path.join(pdir, f"part-frag{k}.parquet")
-        )
-        k += 1
-    os.remove(os.path.join(pdir, f))
-
-
 def test_compact_snapshot_sink(spark, chain_dirs, tmp_path):
-    # compaction publishes a NEW snapshot version mapping
-    # the fragmented partitions to compacted files; committed reads are
-    # unchanged, old version dirs survive for older-snapshot readers
-    # until vacuum, and uncommitted (orphan) directories are untouched.
+    # Passes of 10 blocks leave two fragments in each 20-block range,
+    # too few for a commit's fold. Compaction publishes a NEW snapshot
+    # version mapping each range's fragments to one file; committed
+    # reads and the cursor are unchanged, old version dirs survive for
+    # older-snapshot readers until vacuum, and uncommitted (orphan)
+    # directories are untouched.
     from helium_etl_lite_spark.etl.snapshot import SnapshotStore, read_snapshot
 
     bp, tp, _ = chain_dirs
     out = str(tmp_path / "out")
     cfg = cli.load_config(
         write_config(
-            tmp_path / "s.toml", bp, tp, out, mode="rewards", backfill=True,
-            block_range_size=20,
+            tmp_path / "s.toml", bp, tp, out, mode="full", backfill=True,
+            block_range_size=20, max_blocks_per_batch=10,
         )
     )
     cli.cmd_once(spark, cfg)
     store = SnapshotStore(out)
     m1 = store.current()
-    # fragment every committed partition (bulk-import debris) so the
-    # compaction version supersedes v1 entirely and vacuum can reclaim
-    for frag_range, frags in m1["tables"]["rewards"].items():
-        for frag_ver, _, _ in frags:
-            _fragment(
-                os.path.join(
-                    out, "rewards", f"v={frag_ver}", f"block_range={frag_range}"
-                )
-            )
-    rows_before = sorted(
-        map(tuple, read_snapshot(spark, out, "rewards").collect())
-    )
+    old = m1["tables"]["transactions"]
+    assert old and all(len(frags) == 2 for frags in old.values())
+    rows_before = {
+        t: sorted(map(tuple, read_snapshot(spark, out, t).collect()))
+        for t in ("rewards", "transactions")
+    }
     # an uncommitted orphan partition (crashed writer) must survive
     # untouched and stay out of the compacted corpus
-    orphan = os.path.join(out, "rewards", "v=1", "block_range=9999")
+    orphan = os.path.join(out, "transactions", "v=1", "block_range=9999")
     os.makedirs(orphan)
     open(os.path.join(orphan, "junk.parquet"), "w").write("not parquet")
 
-    got = cli.cmd_compact(spark, {"out_dir": out}, target_mb=128)
+    got = cli.cmd_compact(spark, {"out_dir": out})
     assert got and got["version"] == m1["version"] + 1
     m2 = store.current()
-    assert m2["version"] == m1["version"] + 1
+    assert m2 == got
     assert m2["height"] == m1["height"]  # cursor untouched
-    assert "9999" not in m2["tables"]["rewards"]
+    assert "9999" not in m2["tables"]["transactions"]
     assert os.path.exists(os.path.join(orphan, "junk.parquet"))
-    # committed read identical; compacted partitions now one file each
-    rows_after = sorted(
-        map(tuple, read_snapshot(spark, out, "rewards").collect())
-    )
-    assert rows_after == rows_before
-    vdir = os.path.join(out, "rewards", f"v={m2['version']}")
-    assert _part_files(vdir) and all(
-        n == 1 for n in _part_files(vdir).values()
-    )
+    for t, rows in rows_before.items():
+        assert sorted(map(tuple, read_snapshot(spark, out, t).collect())) == rows
+    # each range now one fragment of the new version, one file
+    assert {r: [f[0] for f in frags] for r, frags in m2["tables"]["transactions"].items()} == {
+        r: [m2["version"]] for r in old
+    }
+    vdir = os.path.join(out, "transactions", f"v={m2['version']}")
+    assert _part_files(vdir) == {f"block_range={r}": 1 for r in old}
     # old version dirs still present until vacuum reclaims them
-    assert os.path.isdir(os.path.join(out, "rewards", f"v={m1['version']}"))
+    old_dirs = {
+        os.path.join(out, "transactions", f"v={f[0]}") for frags in old.values() for f in frags
+    }
+    assert all(os.path.isdir(d) for d in old_dirs)
     removed = cli.cmd_vacuum({"out_dir": out}, keep_versions=1)
-    assert any(f"v={m1['version']}" in p for p in removed)
-    assert sorted(
-        map(tuple, read_snapshot(spark, out, "rewards").collect())
-    ) == rows_before
+    assert old_dirs <= set(removed)
+    for t, rows in rows_before.items():
+        assert sorted(map(tuple, read_snapshot(spark, out, t).collect())) == rows
     # nothing left to compact
-    assert cli.cmd_compact(spark, {"out_dir": out}, target_mb=128) == {}
+    assert cli.cmd_compact(spark, {"out_dir": out}) == {}
 
 
 def test_compact_merges_fragments_to_one_per_range(spark, chain_dirs, tmp_path):
@@ -255,7 +233,7 @@ def test_compact_merges_fragments_to_one_per_range(spark, chain_dirs, tmp_path):
         t: sorted(map(tuple, read_snapshot(spark, out, t).collect()))
         for t in ("rewards", "transactions")
     }
-    assert cli.cmd_compact(spark, {"out_dir": out}, target_mb=128)
+    assert cli.cmd_compact(spark, {"out_dir": out})
     after = cli.cmd_status({"out_dir": out}, log=log)["tables"]
     assert (after["transactions"]["n_partitions"], after["transactions"]["n_fragments"]) == (3, 3)
     for table in ("rewards", "transactions"):

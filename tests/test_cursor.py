@@ -258,24 +258,18 @@ def test_vacuum_keeps_the_live_snapshot(tmp_path, capsys, keep):
     assert _tree(out) == before
 
 
-@pytest.mark.parametrize(
-    "command,flag",
-    [("compact", "--target-mb"), ("sql", "--at-version")],
-    ids=["compact", "sql"],
-)
-def test_target_mb_must_be_positive(tmp_path, monkeypatch, capsys, command, flag):
-    # --target-mb 0 divides by zero when the file count is planned, and
+def test_at_version_must_be_positive(tmp_path, monkeypatch, capsys):
     # manifest versions start at 1, so --at-version 0 names nothing;
-    # argparse refuses either before any Spark session starts.
+    # argparse refuses it before any Spark session starts.
     def no_spark(*args, **kwargs):
         raise AssertionError("a rejected argument must not start Spark")
 
     monkeypatch.setattr(cli, "get_spark", no_spark)
     _, cfg = _two_version_store(tmp_path)
-    argv = [command, "--config", cfg]
+    argv = ["sql", "--config", cfg]
     for bad in ("0", "-3", "ten"):
         with pytest.raises(SystemExit) as exc:
-            cli.main(argv + [flag, bad])
+            cli.main(argv + ["--at-version", bad])
         assert exc.value.code == 2
         assert "not a positive integer" in capsys.readouterr().err
 

@@ -27,6 +27,12 @@ from helium_etl_lite_spark.etl.snapshot import (
 from helium_etl_lite_spark.sources.block_source import LandedBlockSource
 
 
+def _spans(m, table):
+    # each range's fragments as [version, block_lo, block_hi], without
+    # the recorded byte size (test_fold.py checks that)
+    return {r: [f[:3] for f in frags] for r, frags in m["tables"][table].items()}
+
+
 def _df(spark, blocks, v=None):
     return spark.createDataFrame(
         [(b, (v if v is not None else b * 10.0)) for b in blocks], "block long, v double"
@@ -48,7 +54,7 @@ class TestCommitProtocol:
         got = read_snapshot(spark, root, "t")
         assert got.count() == 25
         # untouched ranges keep v1's fragments, the new range gets v2's
-        assert m["tables"]["t"]["0"] == [[1, 0, 9]] and m["tables"]["t"]["2"] == [[2, 20, 24]]
+        assert _spans(m, "t")["0"] == [[1, 0, 9]] and _spans(m, "t")["2"] == [[2, 20, 24]]
 
     def test_replay_overwrites_claimed_blocks(self, spark, tmp_path):
         root = str(tmp_path / "s2")
@@ -180,7 +186,7 @@ class TestCommitProtocol:
             spark, root, {"t": _df(spark, range(20, 25))}, 20, 24, height=24,
             first_block=0, range_size=100,
         )
-        assert m["tables"]["t"] == {"0": [[1, 0, 19], [2, 20, 24]]}
+        assert _spans(m, "t") == {"0": [[1, 0, 19], [2, 20, 24]]}
         os.rename(aside / "v=1", os.path.join(root, "t", "v=1"))
         got = read_snapshot(spark, root, "t")
         assert sorted(r["block"] for r in got.collect()) == list(range(25))
@@ -193,7 +199,7 @@ class TestCommitProtocol:
             spark, root, {"t": _df(spark, range(20, 25), v=-1.0)}, 20, 24, height=24,
             first_block=0, range_size=100,
         )
-        assert m["tables"]["t"] == {"0": [[1, 0, 19], [3, 20, 24]]}
+        assert _spans(m, "t") == {"0": [[1, 0, 19], [3, 20, 24]]}
         for v in ("v=1", "v=2"):
             os.rename(aside / v, os.path.join(root, "t", v))
         got = read_snapshot(spark, root, "t")
@@ -215,7 +221,7 @@ class TestCommitProtocol:
         )
         # [0, 9] is partly overlapped: read, its blocks 0-4 carried into
         # the new fragment; [10, 19] misses the claim and stays
-        assert m["tables"]["t"] == {"0": [[2, 10, 19], [3, 0, 9]]}
+        assert _spans(m, "t") == {"0": [[2, 10, 19], [3, 0, 9]]}
         got = read_snapshot(spark, root, "t")
         assert got.count() == 20
         assert got.where(F.col("v") == -1.0).count() == 5
@@ -611,20 +617,16 @@ def test_compaction_produces_empty_change_feed(spark, tmp_path):
     b = spark.range(0, 200).select(
         F.col("id").alias("block"), (F.col("id") * 1.0).alias("amount")
     )
-    commit_batch_atomic(
-        spark, root, {"rewards": b}, 0, 199, 199, 0,
-        heights=b.select("block"), range_size=50,
-    )
+    # two fragments in each range: its lower half, then its upper half
+    for half in (b.where(F.col("block") % 50 < 25), b.where(F.col("block") % 50 >= 25)):
+        commit_batch_atomic(
+            spark, root, {"rewards": half}, 0, 199, 199, 0,
+            heights=half.select("block"), range_size=50,
+        )
     store = SnapshotStore(root)
+    assert all(len(frags) == 2 for frags in store.current()["tables"]["rewards"].values())
     v1 = store.current_version()
-    # fabricate the small-file debris compaction exists for (the sink
-    # itself writes one file per partition)
-    from tests.test_cli import _fragment
-
-    for r, frags in store.current()["tables"]["rewards"].items():
-        for ver, _, _ in frags:
-            _fragment(f"{root}/rewards/v={ver}/block_range={r}")
-    cli.cmd_compact(spark, {"out_dir": root}, target_mb=128)
+    cli.cmd_compact(spark, {"out_dir": root})
     v2 = SnapshotStore(root).current_version()
     assert v2 == v1 + 1  # compaction published a new version
     feed = read_changes(spark, root, "rewards", v1, v2)

@@ -526,8 +526,11 @@ class TestFollowChanges:
         # Compaction publishes a version whose feed is empty. The cursor
         # must still move to it: once vacuum drops the older manifests,
         # a cursor left behind would name a version that is gone.
-        from helium_etl_lite_spark.etl.compact import compact_snapshot
-        from helium_etl_lite_spark.etl.snapshot import SnapshotStore, read_snapshot
+        from helium_etl_lite_spark.etl.snapshot import (
+            SnapshotStore,
+            compact_snapshot,
+            read_snapshot,
+        )
         from helium_etl_lite_spark.streaming import mirror
 
         root = str(tmp_path / "snap")
@@ -932,39 +935,39 @@ def _fold_dedup_state(batch_df, batch_id, state_dir):
     "apply", ["apply_changes_batch", "apply_changes_batch_keyed", "dedup_state_add"]
 )
 def test_applies_past_the_cap_compact_and_read_every_row(spark, tmp_path, apply):
-    # COMPACT_EVERY + 1 applies append one fragment each to block range 0
-    # (a mirror's rows carry their blocks; an operator state's carry the
-    # batch id), while every other apply also deletes a row of range 1 (a
-    # delete-bearing apply; the set state applies no deletes). The apply
-    # that would leave range 0 above the cap compacts the store: no range
-    # is ever above the cap, the read sees every row the feed leaves,
-    # and vacuum keeps only the version dirs the two newest manifests
-    # name, plus a dir newer than CURRENT (an in-flight writer's).
+    # 2K + 1 applies append one fragment each to block range 0 (a
+    # mirror's rows carry their blocks; an operator state's carry the
+    # batch id), while every other apply also deletes a row of range 1
+    # (a delete-bearing apply; the set state applies no deletes). Each
+    # commit folds range 0's newest same-tier fragments: the range stays
+    # inside the fold's bound, the fold runs, the read sees every row
+    # the feed leaves, and vacuum keeps only the version dirs the two
+    # newest manifests name, plus a dir newer than CURRENT (an in-flight
+    # writer's).
     import hashlib
     import os
 
     from helium_etl_lite_spark.etl.snapshot import (
-        COMPACT_EVERY,
         STATE,
+        K,
         SnapshotStore,
         read_snapshot,
     )
     from helium_etl_lite_spark.streaming import mirror
+    from tests.test_fold import _assert_tiered
 
     is_state = apply == "dedup_state_add"
     apply = _fold_dedup_state if is_state else getattr(mirror, apply)
     table = STATE if is_state else mirror.TABLE
     mdir = str(tmp_path / "m")
-    cap = COMPACT_EVERY
+    n_applies = 2 * K + 1
     want = {(b, float(b)) for b in range(1000, 1020)}
     inserted = set(want)
     assert apply(_feed(spark, [(b, v, "insert") for b, v in sorted(want)]), 0, mdir)
     in_flight = os.path.join(mdir, table, "v=99")
     os.makedirs(in_flight)
-    # range 0's fragment count after each apply: the state's first apply
-    # already landed in range 0 (its block is batch id 0)
-    n_frags = 1 if is_state else 0
-    for bid in range(1, cap + 2):
+    folds = 0
+    for bid in range(1, n_applies + 1):
         rows = [(bid * 10, float(bid), "insert")]
         want.add((bid * 10, float(bid)))
         inserted.add((bid * 10, float(bid)))
@@ -972,11 +975,13 @@ def test_applies_past_the_cap_compact_and_read_every_row(spark, tmp_path, apply)
             rows.append((1000 + bid, float(1000 + bid), "delete"))
             want.discard((1000 + bid, float(1000 + bid)))
         assert apply(_feed(spark, rows), bid, mdir)
-        parts = _mirror_parts(mdir, table)
-        assert max(len(frags) for frags in parts.values()) <= cap, parts
-        n_frags = 1 if n_frags == cap else n_frags + 1
-        assert len(parts["0"]) == n_frags, (bid, parts)
-    assert _batch_id(mdir) == cap + 1
+        frags = _mirror_parts(mdir, table)["0"]
+        _assert_tiered(frags)
+        # each apply adds one block to range 0: a fragment spanning
+        # several was folded
+        folds += frags[-1][1] < frags[-1][2]
+    assert folds
+    assert _batch_id(mdir) == n_applies
     if is_state:
         hashes = {
             r["text_hash"] for r in read_snapshot(spark, mdir, STATE).collect()
