@@ -71,13 +71,11 @@ import sys
 import time
 import tomllib
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+
 from .etl.pipeline import CursorStore, FollowerConfig, IncrementalFollower
-from .etl.schemas import (
-    BLOCK_SCHEMA,
-    REWARDS_OUT_SCHEMA,
-    TRANSACTIONS_OUT_SCHEMA,
-    TXN_SCHEMA,
-)
+from .etl.schemas import FILTERS_ARROW, REWARDS_OUT_SCHEMA, TRANSACTIONS_OUT_SCHEMA
 from .etl.snapshot import RANGE_SIZE
 from .session import get_spark
 from .sources.block_source import HttpRpcClient, LandedBlockSource, RpcBlockSource
@@ -149,12 +147,14 @@ def setup_logger(cfg) -> logging.Logger:
     return logger
 
 
-def _filters(spark, cfg):
+def _filters(cfg) -> pa.Table | None:
+    """The filters table at filters_path (filters mode), read with
+    pyarrow: a driver pass uses it as it is."""
     if cfg.get("mode") != "filters":
         return None
     if "filters_path" not in cfg:
         raise SystemExit("filters mode requires filters_path")
-    return spark.read.parquet(cfg["filters_path"])
+    return pq.read_table(cfg["filters_path"], columns=FILTERS_ARROW.names).cast(FILTERS_ARROW)
 
 
 def _follower_config(cfg) -> FollowerConfig:
@@ -172,22 +172,13 @@ def _follower(spark, cfg) -> IncrementalFollower:
     node_addr is set (reference settings.node_addr, src/settings.rs:33),
     landed block files otherwise."""
     if "node_addr" in cfg:
-        source = RpcBlockSource(spark, HttpRpcClient(str(cfg["node_addr"])))
+        source = RpcBlockSource(HttpRpcClient(str(cfg["node_addr"])))
     else:
         as_json = str(cfg["blocks_path"]).endswith((".json", ".jsonl")) or (
             cfg.get("source_format") == "json"
         )
-
-        def read(schema, path):
-            reader = spark.read.schema(schema)
-            return reader.json(path) if as_json else reader.parquet(path)
-
-        source = LandedBlockSource(
-            read(BLOCK_SCHEMA, cfg["blocks_path"]), read(TXN_SCHEMA, cfg["txns_path"])
-        )
-    return IncrementalFollower(
-        spark, source, _follower_config(cfg), filters=_filters(spark, cfg)
-    )
+        source = LandedBlockSource(str(cfg["blocks_path"]), str(cfg["txns_path"]), as_json)
+    return IncrementalFollower(spark, source, _follower_config(cfg), filters=_filters(cfg))
 
 
 def _catch_up(spark, cfg) -> tuple[int, tuple[int, int] | None]:

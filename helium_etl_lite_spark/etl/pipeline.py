@@ -11,8 +11,22 @@ for the next call, as they wait for the reference's next 10 s tick.
 Differences by design (Spark-first, not a translation):
 - The reference processes ONE block per transaction
   (src/follower.rs:99-112). Here a catch-up pass processes the whole
-  (cursor, tip] range as ONE distributed job — partition pruning on the
-  height predicate keeps it incremental, executors give parallelism.
+  (cursor, tip] range (up to the pass limit) in one commit, on one of
+  two paths, chosen by the pass's length:
+  - a pass of at most RpcBlockSource.PASS_LIMIT (500) blocks, the most
+    the RPC source holds in driver memory, is a DRIVER pass: the
+    source hands Arrow tables, etl/arrow_transforms.py runs the
+    transforms and etl/snapshot.py commit_arrow writes the fragments
+    with pyarrow, with no Spark job. Every near-tip tick, every RPC
+    pass and a short backfill take it. 500 is a memory bound, not the
+    speed crossover: the driver pass is faster than Spark's fixed job
+    cost well past it (CHANGES.md has the measurements);
+  - a longer pass (a landed backfill) is ONE distributed Spark job:
+    etl/transforms.py build_outputs over the source's DataFrames, whose
+    height predicate partition-prunes, and commit_batch_atomic.
+  Both paths give the same rows and the same fail-stop errors, and the
+  Spark transforms are the reference the driver pass is tested against
+  (tests/test_driver_pass.py).
 - Exactly-once: Postgres gives the reference a data+cursor transaction
   (src/follower.rs:100, src/block_processor.rs:44-47). Here every pass
   is one snapshot-manifest commit (etl/snapshot.py): the rewards and
@@ -20,6 +34,9 @@ Differences by design (Spark-first, not a translation):
   visible in the same `CURRENT` rename, so a reader never sees a block
   the cursor has not reached, and a crash before the rename leaves the
   previous snapshot whole. The replay recomputes the same version.
+- Transactions sharing a hash within a pass keep one row (PK(hash),
+  migrations/V3:43), chosen by one rule on both paths: the lowest
+  block, then type, then fields, so a replay stores the same row.
 - The cursor (the reference's one follower_info row) is the manifest's
   (height, first_block); CursorStore reads and publishes it, with no
   Spark job.
@@ -30,20 +47,26 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .arrow_transforms import build_outputs_arrow
 from .schemas import REWARDS_V2_FIELDS_SCHEMA, SENTINEL
 from ..errors import is_path_not_found
+from ..sources.block_source import RpcBlockSource
 from .snapshot import (
     RANGE_SIZE,
     SnapshotStore,
+    commit_arrow,
     commit_batch_atomic,
     refuse_old_layout,
     require_fragments,
 )
-from .transforms import build_outputs
+from .transforms import MODES, build_outputs, dedup_transactions
 
 # Tables keyed by block, written in place: write_block_range_idempotent
 # gives per-block replace semantics on plain partitioned parquet (any
@@ -228,25 +251,25 @@ class FollowerConfig:
     mode: str = "rewards"          # rewards | full | filters
     backfill: bool = False
     out_dir: str = "/tmp/helium_out"
-    # blocks per pass; None = the source's PASS_LIMIT (landed files:
-    # the whole lag in one job; a live node: 500 fetched blocks)
+    # blocks per pass, at most the source's PASS_LIMIT; None = the
+    # source's PASS_LIMIT (landed files: the whole lag in one pass; a
+    # live node: 500 fetched blocks)
     max_blocks_per_batch: int | None = None
     block_range_size: int = RANGE_SIZE   # blocks per output partition directory
 
 
 class IncrementalFollower:
     """E17-E19: cursor init, catch-up loop, cursor advance over a block
-    source (sources/block_source.py: tip, first, range, PASS_LIMIT)."""
+    source (sources/block_source.py: tip, first, range, PASS_LIMIT).
+    `filters` is the filters table (filters mode) as Arrow."""
 
     def __init__(
         self,
         spark: SparkSession,
         source,
         config: FollowerConfig,
-        filters: DataFrame | None = None,
+        filters: pa.Table | None = None,
     ):
-        from .transforms import MODES
-
         if config.mode not in MODES:
             raise ValueError(f"unknown mode {config.mode!r}; expected one of {MODES}")
         if config.mode == "filters" and filters is None:
@@ -267,10 +290,10 @@ class IncrementalFollower:
     # -- catch-up passes (reference src/follower.rs:69-98) --------------
     def catch_up(self) -> int:
         """Process (cursor, tip] in passes of at most max_blocks_per_batch
-        blocks, or the source's PASS_LIMIT when unset (bounded-replay
-        E19), and return the number of blocks loaded. The tip is probed
-        once; newer blocks are left to the next call. Loads nothing
-        while the source has no block."""
+        blocks and the source's PASS_LIMIT (bounded-replay E19), and
+        return the number of blocks loaded. The tip is probed once;
+        newer blocks are left to the next call. Loads nothing while the
+        source has no block."""
         cursor = self.init_cursor()
         if cursor is None:
             return 0
@@ -284,16 +307,39 @@ class IncrementalFollower:
     def _pass(self, height: int, first_block: int, tip: int | None) -> int:
         if tip is None or tip <= height:
             return 0
-        limit = self.config.max_blocks_per_batch or self.source.PASS_LIMIT
-        upper = tip if limit is None else min(tip, height + limit)
+        limits = [n for n in (self.config.max_blocks_per_batch, self.source.PASS_LIMIT) if n]
+        upper = min([tip] + [height + n for n in limits])
         self._commit_range(height + 1, upper, first_block)
         return upper - height
 
     def _commit_range(self, lo: int, hi: int, first_block: int) -> None:
         # E14-E18 as ONE transaction: every output table and the cursor
-        # advance publish together in the manifest swap.
+        # advance publish together in the manifest swap. The path is
+        # chosen by the pass's length (see the module docstring).
+        if hi - lo + 1 <= RpcBlockSource.PASS_LIMIT:
+            self._driver_pass(lo, hi, first_block)
+        else:
+            self._spark_pass(lo, hi, first_block)
+        logging.getLogger("helium_etl_lite_spark").info(f"audit [{lo},{hi}]: {self.last_audit}")
+
+    def _driver_pass(self, lo: int, hi: int, first_block: int) -> None:
         blocks, txns = self.source.range(lo, hi)
-        out = build_outputs(self.config.mode, blocks, txns, self.filters)
+        out = build_outputs_arrow(self.config.mode, blocks, txns, self.filters)
+        rewards = out["rewards"]
+        self.last_audit = {
+            "n_rewards": rewards.num_rows,
+            "amount_total": pc.sum(rewards["amount"]).as_py() or 0,
+            "sentinel_accounts": pc.sum(pc.equal(rewards["account"], SENTINEL)).as_py() or 0,
+        }
+        commit_arrow(
+            self.config.out_dir, out, lo, hi, height=hi, first_block=first_block,
+            range_size=self.config.block_range_size,
+        )
+
+    def _spark_pass(self, lo: int, hi: int, first_block: int) -> None:
+        blocks, txns = self.source.frames(self.spark, lo, hi)
+        filters = None if self.filters is None else self.spark.createDataFrame(self.filters)
+        out = build_outputs(self.config.mode, blocks, txns, filters)
         # Ingest audit: row/amount/sentinel counters of the pass's
         # rewards (the reference has no ingest metrics at all;
         # production followers need them to spot a silently-empty or
@@ -312,8 +358,7 @@ class IncrementalFollower:
             )
         }
         if "transactions" in out:
-            # PK(hash) idempotence (migrations/V3:43)
-            tables["transactions"] = out["transactions"].dropDuplicates(["hash"])
+            tables["transactions"] = dedup_transactions(out["transactions"])
         commit_batch_atomic(
             self.spark,
             self.config.out_dir,
@@ -324,8 +369,13 @@ class IncrementalFollower:
             first_block=first_block,
             range_size=self.config.block_range_size,
         )
-        self.last_audit = audit.get
-        logging.getLogger("helium_etl_lite_spark").info(f"audit [{lo},{hi}]: {self.last_audit}")
+        try:
+            self.last_audit = audit.get
+        except Py4JJavaError:
+            # AQE prunes a plan whose shuffle wrote no rows, and the
+            # observed metrics with it (a pass of no reward rows over
+            # several ranges): the explicit zero.
+            self.last_audit = {"n_rewards": 0, "amount_total": 0, "sentinel_accounts": 0}
 
 
 MAX_HOPS = 1000

@@ -1,10 +1,15 @@
 """Data model of the reference pipeline (SURVEY §1, FIXTURES.md §A).
 
 Spark StructTypes for the block/txn sources and the output tables the
-reference's migrations declare (reference migrations/V1-V5)."""
+reference's migrations declare (reference migrations/V1-V5), and their
+Arrow twins for the driver pass (etl/arrow_transforms.py). An Arrow
+twin has the same names and types with every field nullable: a landed
+file may declare any nullability, and Spark reads a file source as
+nullable too."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 # The 34-label transaction_type enum:
@@ -145,4 +150,31 @@ FOLLOWER_INFO_SCHEMA = T.StructType(
         T.StructField("height", T.LongType(), False),
         T.StructField("first_block", T.LongType(), False),
     ]
+)
+
+
+# Arrow twins (see the module docstring).
+BLOCK_ARROW = pa.schema(
+    [
+        ("height", pa.int64()),
+        ("time", pa.int64()),
+        ("hash", pa.string()),
+        ("transactions", pa.list_(pa.struct([("type", pa.string()), ("hash", pa.string())]))),
+    ]
+)
+TXN_ARROW = pa.schema([("hash", pa.string()), ("type", pa.string()), ("fields", pa.string())])
+FILTERS_ARROW = pa.schema([("type", pa.string()), ("value", pa.string())])
+REWARDS_ARROW = pa.schema(
+    [
+        ("block", pa.int64()),
+        ("transaction_hash", pa.string()),
+        ("time", pa.int64()),
+        ("account", pa.string()),
+        ("gateway", pa.string()),
+        ("amount", pa.int64()),
+        ("type", pa.string()),
+    ]
+)
+TRANSACTIONS_ARROW = pa.schema(
+    [("block", pa.int64()), ("hash", pa.string()), ("type", pa.string()), ("fields", pa.string())]
 )

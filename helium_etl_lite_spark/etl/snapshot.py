@@ -53,10 +53,22 @@ scaled down to exactly what the follower needs:
   the only fold of an entry with no `bytes` (written before sizes were
   recorded).
 
+- One planner, two writers. `_commit` is the claim/fold/manifest
+  planner: it decides per fragment what is kept, dropped or read, has a
+  writer write the new fragments, and publishes. `commit_batch_atomic`
+  writes with Spark (a long follower pass, every batch-id store);
+  `commit_arrow` writes tables held in driver memory with pyarrow (the
+  follower's driver pass), with no Spark job. The Arrow writer clusters
+  `transactions`: each fragment is sorted by (type, block, hash) with
+  one row group per type, so the footer's row-group statistics let a
+  read by type or by hash decode only the matching row groups'
+  `fields` payloads.
+
 - Crash anywhere before the CURRENT swap leaves the previous snapshot
   (data + cursor together) fully intact; the half-written v-dir is
-  orphaned, invisible, and overwritten by the replay, which recomputes
-  the same version number. Crash after the swap is a completed commit.
+  orphaned, invisible, and replaced whole by the replay, which
+  recomputes the same version number (Spark's overwrite mode; the Arrow
+  writer removes it first). Crash after the swap is a completed commit.
 
 Replay convergence, crash atomicity, append-without-reads and
 metadata-deletes are pinned by tests/test_snapshot.py.
@@ -83,9 +95,11 @@ import time
 from functools import reduce
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 # Footer key under which Spark's parquet writer stores the exact Spark
@@ -652,11 +666,10 @@ def _fold_tail(frags: list[list[int]]) -> list[list[int]]:
 def _write_fragments(
     root: str, table: str, version: int, df: DataFrame, spans: dict, parts: dict
 ) -> None:
-    """The one writer of fragments, for a commit and a compaction alike:
-    write `df` (with its `block_range` column) as `table`'s fragments of
-    `version`, one file per range, and enter each range the write
-    produced in `parts` as [version, block_lo, block_hi, bytes], its
-    span from `spans`, which names every range `df` has rows in."""
+    """The Spark writer of fragments, for a commit and a compaction
+    alike: write `df` (with its `block_range` column) as `table`'s
+    fragments of `version`, one file per range, and enter each range
+    the write produced in `parts` (see _enter)."""
     # One range: one file with no shuffle. Several (a backfill pass):
     # one file set per range.
     out = df.coalesce(1) if len(spans) == 1 else df.repartition("block_range")
@@ -668,10 +681,119 @@ def _write_fragments(
     # authoritative (and an empty batch yields none).
     for d in os.listdir(vdir):
         if d.startswith("block_range="):
-            r = int(d[len("block_range="):])
-            files = os.scandir(os.path.join(vdir, d))
-            nbytes = sum(f.stat().st_size for f in files if f.name.endswith(".parquet"))
-            parts.setdefault(str(r), []).append([version, *spans[r], nbytes])
+            _enter(root, table, version, int(d[len("block_range="):]), spans, parts)
+
+
+def _enter(root: str, table: str, version: int, r: int, spans: dict, parts: dict) -> None:
+    """Enter the fragment of range `r` that `version` wrote in `parts`
+    as [version, block_lo, block_hi, bytes], its span from `spans`."""
+    files = os.scandir(fragment_dir(root, table, r, version))
+    nbytes = sum(f.stat().st_size for f in files if f.name.endswith(".parquet"))
+    parts.setdefault(str(r), []).append([version, *spans[r], nbytes])
+
+
+#: Per table, the sort key of the fragments the Arrow writer writes, one
+#: row group per value of its first column: a `transactions` fragment
+#: holds one row group per type, so a by-type read and a by-hash read
+#: decode the payloads of the matching row groups only.
+CLUSTER_BY = {"transactions": ("type", "block", "hash")}
+
+
+def _write_arrow_fragments(
+    root: str, table: str, version: int, new: pa.Table, old: pa.Table | None,
+    range_size: int, spans: dict, parts: dict,
+) -> None:
+    """The Arrow writer of fragments: the rows of `new`, and of `old`
+    (the carry-over), as `table`'s fragments of `version`, one file per
+    range, entered in `parts` as _write_fragments enters them. The
+    footer carries the Spark schema, as a Spark-written one does, so a
+    Spark read infers nothing."""
+    vdir = os.path.join(root, table, f"v={version}")
+    # A crashed attempt's orphan directory: a leftover file of it would
+    # be read as duplicate rows (Spark's overwrite mode does the same).
+    shutil.rmtree(vdir, ignore_errors=True)
+    rows = new if old is None else pa.concat_tables([old.select(new.column_names).cast(new.schema), new])
+    key = CLUSTER_BY.get(table)
+    if key is not None:
+        rows = rows.sort_by([(c, "ascending") for c in key])
+    schema = rows.schema.with_metadata(
+        {_SPARK_SCHEMA_KEY: from_arrow_schema(rows.schema).json()}
+    )
+    ranges = pc.floor(pc.divide(rows["block"].cast(pa.float64()), range_size))
+    for r in spans:
+        part = rows.filter(pc.equal(ranges, r))
+        if not part.num_rows:
+            continue
+        d = fragment_dir(root, table, r, version)
+        os.makedirs(d)
+        with pq.ParquetWriter(os.path.join(d, "part-00000.parquet"), schema) as w:
+            if key is None:
+                w.write_table(part)
+            else:
+                # sorted: a row group per run of one value of key[0]
+                v = part[key[0]].combine_chunks()
+                changes = pc.indices_nonzero(pc.not_equal(v[1:], v[:-1])).to_pylist()
+                starts = [0] + [i + 1 for i in changes]
+                for a, b in zip(starts, starts[1:] + [len(v)]):
+                    w.write_table(part.slice(a, b - a), row_group_size=b - a)
+        _enter(root, table, version, r, spans, parts)
+
+
+def _commit(root: str, height: int, first_block: int, spans: dict, contiguous: bool,
+            tables: list[str], write) -> dict:
+    """The one claim/fold/manifest planner of both writers. Per table and
+    per range of `spans` (range -> claimed span), decide which current
+    fragments are kept, dropped unread or read (see commit_batch_atomic),
+    call `write(table, version, to_read, merged_spans, parts)` to write
+    and enter the new fragments, and publish the manifest. `contiguous`:
+    the claim is the whole span [lo, hi] of each range, so a fragment
+    inside it is dropped unread."""
+    store = SnapshotStore(root)
+    cur = store.current()
+    if cur is not None:
+        require_fragments(cur, root)
+    else:
+        refuse_old_layout(root)
+    version = (cur["version"] + 1) if cur else 1
+    cur_tables: dict[str, dict] = dict(cur["tables"]) if cur else {}
+    new_tables: dict[str, dict] = dict(cur_tables)
+    for table in tables:
+        parts = {r: list(frags) for r, frags in cur_tables.get(table, {}).items()}
+        merged_spans: dict[int, tuple[int, int]] = {}
+        to_read: list[tuple[int, int]] = []
+        for r, (c_lo, c_hi) in spans.items():
+            kept = []
+            span = (c_lo, c_hi)
+            for frag in parts.get(str(r), []):
+                f_lo, f_hi = frag[1], frag[2]
+                if f_hi < c_lo or f_lo > c_hi:
+                    kept.append(frag)
+                elif not contiguous or f_lo < c_lo or f_hi > c_hi:
+                    to_read.append((r, frag[0]))
+                    span = (min(span[0], f_lo), max(span[1], f_hi))
+            # The fold: a folded fragment's span misses the claim, so the
+            # carry-over keeps all of its rows.
+            tail = _fold_tail(kept)
+            for frag in tail:
+                to_read.append((r, frag[0]))
+                span = (min(span[0], frag[1]), max(span[1], frag[2]))
+            parts[str(r)] = kept[: len(kept) - len(tail)]
+            merged_spans[r] = span
+        write(table, version, to_read, merged_spans, parts)
+        new_tables[table] = {r: frags for r, frags in parts.items() if frags}
+
+    manifest = {
+        "version": version,
+        "height": int(height),
+        "first_block": int(first_block),
+        "tables": new_tables,
+    }
+    store.publish(manifest)
+    return manifest
+
+
+def _clip_spans(lo: int, hi: int, range_size: int, ranges) -> dict[int, tuple[int, int]]:
+    return {r: (max(lo, r * range_size), min(hi, (r + 1) * range_size - 1)) for r in ranges}
 
 
 def commit_batch_atomic(
@@ -709,22 +831,11 @@ def commit_batch_atomic(
     the collect job this function otherwise runs to derive it; the
     claim spans are then [lo, hi] clipped to each range.
 
-    Returns the published manifest."""
-    store = SnapshotStore(root)
-    cur = store.current()
-    if cur is not None:
-        require_fragments(cur, root)
-    else:
-        refuse_old_layout(root)
-    version = (cur["version"] + 1) if cur else 1
-    cur_tables: dict[str, dict] = dict(cur["tables"]) if cur else {}
-
-    def clip(r: int) -> tuple[int, int]:
-        return max(lo, r * range_size), min(hi, (r + 1) * range_size - 1)
-
+    The Spark writer; commit_arrow is the Arrow one, under the same
+    planner. Returns the published manifest."""
     claimed = None
     if heights is None:
-        spans = {r: clip(r) for r in range(lo // range_size, hi // range_size + 1)}
+        spans = _clip_spans(lo, hi, range_size, range(lo // range_size, hi // range_size + 1))
     else:
         claimed = heights.select(
             F.col(heights.columns[0]).cast("long").alias("__claimed_block")
@@ -744,32 +855,10 @@ def commit_batch_atomic(
                 .collect()
             }
         else:
-            spans = {r: clip(r) for r in touched_ranges}
+            spans = _clip_spans(lo, hi, range_size, touched_ranges)
 
-    new_tables: dict[str, dict] = dict(cur_tables)
-    for table, df in tables.items():
-        parts = {r: list(frags) for r, frags in cur_tables.get(table, {}).items()}
-        merged_spans: dict[int, tuple[int, int]] = {}
-        to_read: list[tuple[int, int]] = []
-        for r, (c_lo, c_hi) in spans.items():
-            kept = []
-            span = (c_lo, c_hi)
-            for frag in parts.get(str(r), []):
-                f_lo, f_hi = frag[1], frag[2]
-                if f_hi < c_lo or f_lo > c_hi:
-                    kept.append(frag)
-                elif claimed is not None or f_lo < c_lo or f_hi > c_hi:
-                    to_read.append((r, frag[0]))
-                    span = (min(span[0], f_lo), max(span[1], f_hi))
-            # The fold: a folded fragment's span misses the claim, so the
-            # carry-over keeps all of its rows.
-            tail = _fold_tail(kept)
-            for frag in tail:
-                to_read.append((r, frag[0]))
-                span = (min(span[0], frag[1]), max(span[1], frag[2]))
-            parts[str(r)] = kept[: len(kept) - len(tail)]
-            merged_spans[r] = span
-        new = df.withColumn(
+    def write(table, version, to_read, merged_spans, parts):
+        new = tables[table].withColumn(
             "block_range", F.floor(F.col("block") / F.lit(range_size)).cast("long")
         )
         # Carry-over: rows of the partly overlapped and the folded
@@ -788,16 +877,42 @@ def commit_batch_atomic(
                 )
             new = new.unionByName(survivors.select(*new.columns))
         _write_fragments(root, table, version, new, merged_spans, parts)
-        new_tables[table] = {r: frags for r, frags in parts.items() if frags}
 
-    manifest = {
-        "version": version,
-        "height": int(height),
-        "first_block": int(first_block),
-        "tables": new_tables,
-    }
-    store.publish(manifest)
-    return manifest
+    return _commit(root, height, first_block, spans, claimed is None, list(tables), write)
+
+
+def commit_arrow(
+    root: str,
+    tables: dict[str, pa.Table],
+    lo: int,
+    hi: int,
+    height: int,
+    first_block: int,
+    range_size: int,
+) -> dict:
+    """commit_batch_atomic's contiguous claim of [lo, hi] for tables
+    held in driver memory, written with pyarrow: no Spark job. The same
+    planner decides what is kept, dropped and folded; the carry-over is
+    read with pyarrow from the fragments' files. Returns the published
+    manifest."""
+
+    def write(table, version, to_read, merged_spans, parts):
+        old = None
+        files = [
+            os.path.join(d, f)
+            for r, v in sorted(set(to_read))
+            for d in [fragment_dir(root, table, r, v)]
+            for f in sorted(os.listdir(d)) if f.endswith(".parquet")
+        ]
+        if files:
+            old = pa.concat_tables([pq.read_table(f) for f in files], promote_options="permissive")
+            old = old.filter((pc.field("block") < lo) | (pc.field("block") > hi))
+        _write_arrow_fragments(
+            root, table, version, tables[table], old, range_size, merged_spans, parts
+        )
+
+    spans = _clip_spans(lo, hi, range_size, range(lo // range_size, hi // range_size + 1))
+    return _commit(root, height, first_block, spans, True, list(tables), write)
 
 
 def compact_snapshot(spark: SparkSession, root: str) -> dict | None:

@@ -152,6 +152,17 @@ def build_transactions(envelopes: DataFrame, txns: DataFrame) -> DataFrame:
     )
 
 
+def dedup_transactions(txns: DataFrame) -> DataFrame:
+    """PK(hash) idempotence (migrations/V3:43): one row per hash, the
+    row of the lowest block, ties broken by type and then by fields,
+    so a replay stores the row the first pass stored (the driver pass
+    applies the same rule, etl/arrow_transforms.py)."""
+    first = F.min(F.struct("block", "type", "fields")).alias("first")
+    return txns.groupBy("hash").agg(first).select(
+        "first.block", "hash", "first.type", "first.fields"
+    )
+
+
 def build_outputs(
     mode: str, blocks: DataFrame, txns: DataFrame, filters: DataFrame | None = None
 ) -> dict[str, DataFrame]:

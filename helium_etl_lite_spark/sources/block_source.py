@@ -4,28 +4,35 @@ follows.
 The reference pulls blocks over JSON-RPC: a tip probe
 (src/follower.rs:76), a raw-block fetch per height
 (src/block_processor.rs:29) and an N+1 typed-txn fetch per hash
-(:58, :130). A source here answers the three questions the follower's
-one catch-up loop asks (etl/pipeline.py IncrementalFollower), so landed
+(:58, :130). A source here answers the questions the follower's one
+catch-up loop asks (etl/pipeline.py IncrementalFollower), so landed
 files and a live node run through the same loop:
 
   tip()          the newest height (None when there is no block)
   first()        the backfill start (reference get_first_block,
                  src/follower.rs:144-194; None when there is no block)
-  range(lo, hi)  the (blocks, txns) DataFrames for one pass over [lo, hi]
-  PASS_LIMIT     blocks per pass when max_blocks_per_batch is unset
-                 (None: the whole lag in one pass)
+  range(lo, hi)  the (blocks, txns) Arrow tables of one driver pass over
+                 [lo, hi]: the pass's blocks and the payload rows of the
+                 hashes they name (etl/schemas.py BLOCK_ARROW, TXN_ARROW)
+  PASS_LIMIT     blocks per pass at most (None: no bound of its own)
 
 Two implementations:
 
-- LandedBlockSource: block and transaction DataFrames over landed
-  parquet or JSON-lines files (cli.py picks the reader). tip() and
-  first() are one aggregate each; range() is a height predicate that
-  partition-prunes, so the whole lag runs as one distributed job.
+- LandedBlockSource: block and transaction files landed as parquet or
+  JSON-lines. The files are listed once per source, skipping `_`- and
+  `.`-prefixed names as Spark's reader does. tip() and first() read
+  the parquet footers' `height` statistics with pyarrow, and the
+  column itself only where a row group has none (JSON-lines files are
+  parsed), with no Spark job. range() reads only the row groups whose
+  statistics can hold the pass's heights and hashes. frames() is the
+  same pass as Spark DataFrames, for a pass too long for the driver:
+  a height predicate that partition-prunes, so the whole lag runs as
+  one distributed job.
 - RpcBlockSource: driver-side point fetches over an RpcClient — the
   literal reference topology, for near-tip following where only a
   handful of new blocks exist per tick. A pass fetches each block and
-  each transaction once, then hands them to Spark with one
-  createDataFrame per table instead of the reference's per-row INSERTs.
+  each transaction once into Arrow tables, so it holds at most
+  PASS_LIMIT blocks in driver memory and always runs as a driver pass.
 
 RpcClient is a protocol with two implementations: HttpRpcClient (a
 stdlib-urllib JSON-RPC 2.0 client speaking the blockchain-node API the
@@ -36,45 +43,177 @@ local http.server stub).
 
 from __future__ import annotations
 
+import bisect
+import glob
 import json as _json
+import os
 import urllib.request
 from typing import Protocol
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.json as pj
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..etl.schemas import BLOCK_SCHEMA, TXN_SCHEMA
+from ..etl.schemas import BLOCK_ARROW, BLOCK_SCHEMA, TXN_ARROW, TXN_SCHEMA
+
+
+def _landed_files(path: str) -> list[str]:
+    """The files Spark's reader reads at `path` (a file, a directory or
+    a glob): every file under it, skipping `_`- and `.`-prefixed names
+    (`_SUCCESS`, `.crc` checksums, files still being landed under a
+    hidden name). Raises FileNotFoundError when nothing matches `path`,
+    as Spark does."""
+    matches = sorted(glob.glob(path))
+    if not matches:
+        raise FileNotFoundError(f"no landed files at {path}")
+    files = []
+    for m in matches:
+        if os.path.isfile(m):
+            files.append(m)
+            continue
+        for root, dirs, names in os.walk(m):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            files += [os.path.join(root, n) for n in sorted(names) if not n.startswith(("_", "."))]
+    return files
+
+
+class _LandedTable:
+    """One landed table read with pyarrow, in chunks: a parquet row
+    group, or a whole JSON-lines file. The file list and footers are
+    read once per instance."""
+
+    def __init__(self, path: str, schema: pa.Schema, as_json: bool):
+        self.schema, self.as_json = schema, as_json
+        self.files = _landed_files(path)
+        self._loaded: dict[str, object] = {}
+
+    def _load(self, f: str):
+        # JSON-lines: the parsed file; parquet: its footer
+        if f not in self._loaded:
+            if self.as_json:
+                opts = pj.ParseOptions(explicit_schema=self.schema, unexpected_field_behavior="ignore")
+                self._loaded[f] = pj.read_json(f, parse_options=opts)
+            else:
+                self._loaded[f] = pq.read_metadata(f)
+        return self._loaded[f]
+
+    def chunks(self) -> list[tuple[str, int | None]]:
+        out = []
+        for f in self.files:
+            if self.as_json:
+                out.append((f, None))
+            else:
+                md = self._load(f)
+                out += [(f, rg) for rg in range(md.num_row_groups) if md.row_group(rg).num_rows]
+        return out
+
+    def read(self, chunk: tuple[str, int | None], columns: list[str] | None = None) -> pa.Table:
+        f, rg = chunk
+        names = columns or self.schema.names
+        if rg is None:
+            t = self._load(f)
+        else:
+            with pq.ParquetFile(f) as pf:
+                t = pf.read_row_group(rg, columns=names)
+        return t.select(names).cast(pa.schema([self.schema.field(n) for n in names]))
+
+    def stats(self, chunk: tuple[str, int | None], column: str) -> tuple | None:
+        """(min, max) of `column` in `chunk` from the parquet footer, or
+        None when the footer has no statistics for it."""
+        f, rg = chunk
+        if rg is None:
+            return None
+        meta = self._load(f).row_group(rg)
+        for i in range(meta.num_columns):
+            if meta.column(i).path_in_schema == column:
+                st = meta.column(i).statistics
+                return (st.min, st.max) if st is not None and st.has_min_max else None
+        return None
+
+    def bounds(self, column: str) -> list[tuple[tuple, object, object]]:
+        """(chunk, min, max) of `column` for every chunk holding a
+        non-null value: the footer's statistics, else the column
+        itself."""
+        out = []
+        for chunk in self.chunks():
+            mm = self.stats(chunk, column)
+            if mm is None:
+                v = pc.min_max(self.read(chunk, [column])[column])
+                mm = (v["min"].as_py(), v["max"].as_py())
+            if mm[0] is not None:
+                out.append((chunk, *mm))
+        return out
+
+    def rows_with(self, column: str, values: list) -> pa.Table:
+        """The rows whose `column` is in `values`: a chunk whose
+        statistics rule every value out is not read, and a chunk is read
+        whole only when its `column` holds a match."""
+        wanted = sorted(set(values))
+        value_set = pa.array(wanted, type=self.schema.field(column).type)
+        parts = [self.schema.empty_table()]
+        for chunk in self.chunks():
+            mm = self.stats(chunk, column)
+            if mm is not None:
+                i = bisect.bisect_left(wanted, mm[0])
+                if i == len(wanted) or wanted[i] > mm[1]:
+                    continue
+            mask = pc.is_in(self.read(chunk, [column])[column], value_set=value_set)
+            if pc.any(mask).as_py():
+                parts.append(self.read(chunk).filter(mask))
+        return pa.concat_tables(parts)
 
 
 class LandedBlockSource:
-    """Blocks and transactions already landed on storage, as DataFrames
-    (cli.py reads them with an explicit schema: no inference pass)."""
+    """Blocks and transactions landed as parquet or JSON-lines files
+    (`as_json`); see the module docstring."""
 
     PASS_LIMIT = None
 
-    def __init__(self, blocks: DataFrame, txns: DataFrame):
-        self.blocks = blocks
-        self.txns = txns
+    def __init__(self, blocks_path: str, txns_path: str, as_json: bool):
+        self.paths, self.as_json = (blocks_path, txns_path), as_json
+        self.blocks = _LandedTable(blocks_path, BLOCK_ARROW, as_json)
+        self.txns = _LandedTable(txns_path, TXN_ARROW, as_json)
 
     def tip(self) -> int | None:
         # E1: chain-tip probe (reference src/follower.rs:76).
-        return self.blocks.agg(F.max("height")).collect()[0][0]
+        return max((hi for _, _, hi in self.blocks.bounds("height")), default=None)
 
     def first(self) -> int | None:
         """E20: backfill boundary. The reference walks backward, hopping
         whole epochs via rewards_v2.start_epoch pointers, because its
-        source only supports point lookups; landed files support
-        aggregation, so the start is one min(height) aggregate (None
-        when no block has landed yet).
+        source only supports point lookups; landed files carry height
+        statistics, so the start is the least of them (None when no
+        block has landed yet).
         The literal walk stays as the parity reference
         (etl/pipeline.py backfill_epoch_walk)."""
-        return self.blocks.agg(F.min("height")).collect()[0][0]
+        return min((lo for _, lo, _ in self.blocks.bounds("height")), default=None)
 
-    def range(self, lo: int, hi: int) -> tuple[DataFrame, DataFrame]:
-        # The height predicate prunes partitions at the source
-        # (src/follower.rs:86's `h > self.height`, vectorized); the
-        # transforms join the transactions the range's blocks name.
-        return self.blocks.where(F.col("height").between(lo, hi)), self.txns
+    def range(self, lo: int, hi: int) -> tuple[pa.Table, pa.Table]:
+        parts = [self.blocks.schema.empty_table()] + [
+            self.blocks.read(chunk)
+            for chunk, b_lo, b_hi in self.blocks.bounds("height")
+            if b_lo <= hi and b_hi >= lo
+        ]
+        blocks = pa.concat_tables(parts)
+        blocks = blocks.filter((pc.field("height") >= lo) & (pc.field("height") <= hi))
+        refs = pc.list_flatten(blocks["transactions"])
+        hashes = pc.struct_field(refs, "hash").drop_null().to_pylist() if len(refs) else []
+        return blocks, self.txns.rows_with("hash", hashes)
+
+    def frames(self, spark: SparkSession, lo: int, hi: int) -> tuple[DataFrame, DataFrame]:
+        """The pass as DataFrames. The height predicate prunes
+        partitions at the source (src/follower.rs:86's
+        `h > self.height`, vectorized); the transforms join the
+        transactions the range's blocks name."""
+        blocks, txns = (
+            spark.read.schema(schema).json(path) if self.as_json
+            else spark.read.schema(schema).parquet(path)
+            for schema, path in zip((BLOCK_SCHEMA, TXN_SCHEMA), self.paths)
+        )
+        return blocks.where(F.col("height").between(lo, hi)), txns
 
 
 class RpcClient(Protocol):
@@ -160,14 +299,15 @@ class FakeRpcClient:
 
 class RpcBlockSource:
     """Near-tip follower source over a live node: point RPCs on the
-    driver, then DataFrames for the pipeline."""
+    driver into Arrow tables for the driver pass."""
 
-    # Blocks fetched per pass when max_blocks_per_batch is unset: keeps
-    # driver memory flat while catching up from far behind.
+    # Blocks fetched per pass: keeps driver memory flat while catching
+    # up from far behind. A pass of at most this many blocks, from any
+    # source, runs on the driver with no Spark job
+    # (etl/pipeline.py IncrementalFollower).
     PASS_LIMIT = 500
 
-    def __init__(self, spark: SparkSession, client: RpcClient):
-        self.spark = spark
+    def __init__(self, client: RpcClient):
         self.client = client
 
     def tip(self) -> int:
@@ -207,19 +347,20 @@ class RpcBlockSource:
                 return last_safe
         return last_safe
 
-    def range(self, lo: int, hi: int) -> tuple[DataFrame, DataFrame]:
+    def range(self, lo: int, hi: int) -> tuple[pa.Table, pa.Table]:
         # One get_block_raw per height and one get_transaction per hash;
         # the N+1 txn fetches of the reference collapse into this pass.
+        # A failed fetch raises here, before anything is committed.
         blocks, txns = [], {}
         for h in range(lo, hi + 1):
             b = self.client.get_block_raw(h)
             refs = [{"type": t["type"], "hash": t["hash"]} for t in b["transactions"]]
-            blocks.append((b["height"], b["time"], b["hash"], refs))
+            blocks.append({"height": b["height"], "time": b["time"], "hash": b["hash"], "transactions": refs})
             for t in refs:
                 if t["hash"] not in txns:
                     payload = self.client.get_transaction(t["hash"])
-                    txns[t["hash"]] = (t["hash"], t["type"], _json.dumps(payload))
+                    txns[t["hash"]] = {"hash": t["hash"], "type": t["type"], "fields": _json.dumps(payload)}
         return (
-            self.spark.createDataFrame(blocks, BLOCK_SCHEMA),
-            self.spark.createDataFrame(list(txns.values()), TXN_SCHEMA),
+            pa.Table.from_pylist(blocks, schema=BLOCK_ARROW),
+            pa.Table.from_pylist(list(txns.values()), schema=TXN_ARROW),
         )

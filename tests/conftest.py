@@ -51,3 +51,36 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+# -------------------------------------------------------- landed sources
+
+
+@pytest.fixture(scope="session")
+def land():
+    """land(blocks, txns, root, as_json=False): write fixture block and
+    transaction DataFrames under `root` as Spark lands them (with its
+    `_SUCCESS` and `.crc` files), and return the LandedBlockSource over
+    them."""
+    from helium_etl_lite_spark.sources.block_source import LandedBlockSource
+
+    def land(blocks, txns, root, as_json=False):
+        paths = [os.path.join(str(root), d) for d in ("blocks", "txns")]
+        for df, path in zip((blocks, txns), paths):
+            writer = df.write.mode("overwrite")
+            writer.json(path) if as_json else writer.parquet(path)
+        return LandedBlockSource(*paths, as_json)
+
+    return land
+
+
+@pytest.fixture(params=["driver", "spark"])
+def pass_path(request, monkeypatch):
+    """Run the follower's passes on the driver path (the program's
+    bound) or on the Spark path, by lowering the driver pass's bound
+    below every pass."""
+    from helium_etl_lite_spark.sources.block_source import RpcBlockSource
+
+    if request.param == "spark":
+        monkeypatch.setattr(RpcBlockSource, "PASS_LIMIT", 0)
+    return request.param

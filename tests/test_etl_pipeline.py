@@ -23,7 +23,6 @@ from helium_etl_lite_spark.etl.pipeline import (
 )
 from helium_etl_lite_spark.etl.schemas import SENTINEL
 from helium_etl_lite_spark.etl.snapshot import SnapshotStore, read_snapshot
-from helium_etl_lite_spark.sources.block_source import LandedBlockSource
 
 
 @pytest.fixture(scope="module")
@@ -120,10 +119,10 @@ class TestTransforms:
 
 
 class TestFollower:
-    def test_catch_up_and_cursor(self, spark, chain, tmp_path):
+    def test_catch_up_and_cursor(self, spark, chain, land, pass_path, tmp_path):
         blocks, txns = chain
         cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=str(tmp_path / "out"))
-        f = IncrementalFollower(spark, LandedBlockSource(blocks, txns), cfg)
+        f = IncrementalFollower(spark, land(blocks, txns, tmp_path), cfg)
         n = f.catch_up()
         assert n == 120
         height, first = f.cursor.read()
@@ -132,11 +131,11 @@ class TestFollower:
         # second pass is a no-op (cursor at tip)
         assert f.catch_up() == 0
 
-    def test_replay_is_idempotent(self, spark, chain, tmp_path):
+    def test_replay_is_idempotent(self, spark, chain, land, pass_path, tmp_path):
         blocks, txns = chain
         out_dir = str(tmp_path / "out")
         cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir)
-        f = IncrementalFollower(spark, LandedBlockSource(blocks, txns), cfg)
+        f = IncrementalFollower(spark, land(blocks, txns, tmp_path), cfg)
         f.catch_up()
         expected = read_snapshot(spark, out_dir, "rewards").count()
         # rewind the cursor over committed data, rerun
@@ -145,23 +144,23 @@ class TestFollower:
         got = read_snapshot(spark, out_dir, "rewards").count()
         assert got == expected  # replay replaced, never duplicated
 
-    def test_bounded_batches(self, spark, chain, tmp_path):
+    def test_bounded_batches(self, spark, chain, land, pass_path, tmp_path):
         blocks, txns = chain
         cfg = FollowerConfig(
             mode="rewards", backfill=True, out_dir=str(tmp_path / "out"),
             max_blocks_per_batch=50,
         )
-        f = IncrementalFollower(spark, LandedBlockSource(blocks, txns), cfg)
+        f = IncrementalFollower(spark, land(blocks, txns, tmp_path), cfg)
         assert f.catch_up() == 120
         assert f.cursor.read()[0] == 1119
         # one seed publish + ceil(120/50)=3 pass commits
         assert SnapshotStore(cfg.out_dir).current()["version"] == 4
 
-    def test_catch_up_probes_the_tip_once(self, spark, chain, tmp_path):
+    def test_catch_up_probes_the_tip_once(self, spark, chain, land, tmp_path):
         # The source's file listing is fixed for the call, so once a
         # pass reaches the probed tip no further probe can find blocks.
         blocks, txns = chain
-        source = LandedBlockSource(blocks, txns)
+        source = land(blocks, txns, tmp_path)
         probes = []
         tip = source.tip
         source.tip = lambda: probes.append(1) or tip()
@@ -169,16 +168,16 @@ class TestFollower:
         assert IncrementalFollower(spark, source, cfg).catch_up() == 120
         assert len(probes) == 1
 
-    def test_no_backfill_starts_at_tip(self, spark, chain, tmp_path):
+    def test_no_backfill_starts_at_tip(self, spark, chain, land, tmp_path):
         blocks, txns = chain
         cfg = FollowerConfig(mode="rewards", backfill=False, out_dir=str(tmp_path / "out"))
-        f = IncrementalFollower(spark, LandedBlockSource(blocks, txns), cfg)
+        f = IncrementalFollower(spark, land(blocks, txns, tmp_path), cfg)
         height, first = f.init_cursor()
         assert first == 1119 and height == 1118  # cursor = first-1
 
-    def test_backfill_discovery(self, spark, chain):
+    def test_backfill_discovery(self, spark, chain, land, tmp_path):
         blocks, txns = chain
-        assert LandedBlockSource(blocks, txns).first() == 1000
+        assert land(blocks, txns, tmp_path).first() == 1000
         # the literal epoch-hop walk lands at (or before) the first
         # epoch boundary reachable from the tip
         oldest = backfill_epoch_walk(blocks, txns, tip=1119)
@@ -336,7 +335,7 @@ class TestStaleRangeDeletion:
         assert os.path.exists(os.path.join(path, "block_range=1"))
 
 
-def test_ingest_audit_rides_the_landing_action(spark, tmp_path):
+def test_ingest_audit_rides_the_landing_action(spark, land, pass_path, tmp_path):
     # Observation metrics must reflect exactly the landed batch — no
     # extra job, no approximation — including the sentinel-account count
     # (the '1Wh4bh' coalesce, src/reward.rs:22-33).
@@ -349,7 +348,7 @@ def test_ingest_audit_rides_the_landing_action(spark, tmp_path):
         mode="rewards", backfill=True, out_dir=str(tmp_path / "out"),
         block_range_size=20,
     )
-    f = IncrementalFollower(spark, LandedBlockSource(blocks, txns), cfg)
+    f = IncrementalFollower(spark, land(blocks, txns, tmp_path), cfg)
     f.catch_up()
     assert hasattr(f, "last_audit")
     landed = read_snapshot(spark, str(tmp_path / "out"), "rewards")

@@ -9,6 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from helium_etl_lite_spark.etl import fixtures
+from helium_etl_lite_spark.etl.pipeline import FollowerConfig, IncrementalFollower
 from helium_etl_lite_spark.etl.snapshot import (
     STATE,
     K,
@@ -95,3 +97,27 @@ def test_a_follower_range_folds_as_it_fills(spark, tmp_path):
         assert sorted((r["block"], r["_change_type"]) for r in feed) == [
             (b, "insert") for b in range(lo, hi + 1)
         ]
+
+
+def test_a_followed_range_folds_on_either_pass_path(spark, land, pass_path, tmp_path):
+    # 15 four-block passes into one block range, through the follower on
+    # the driver path and on the Spark path: each table's range stays
+    # tiered, some commit folded, and the store holds every row once.
+    from helium_etl_lite_spark.etl.transforms import build_outputs
+
+    blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
+    out = str(tmp_path / "out")
+    f = IncrementalFollower(
+        spark, land(blocks, txns, tmp_path),
+        FollowerConfig(mode="full", out_dir=out, backfill=True, max_blocks_per_batch=4),
+    )
+    assert f.catch_up() == 60
+    frags = SnapshotStore(out).current()["tables"]["transactions"]["1"]
+    _assert_tiered(frags)
+    assert any(hi - lo + 1 > 4 for _, lo, hi, _ in frags), frags
+    want = build_outputs("full", blocks, txns)
+    for table, cols in (("rewards", None), ("transactions", ["hash"])):
+        got = read_snapshot(spark, out, table)
+        expected = want[table] if cols is None else want[table].select(cols).distinct()
+        assert got.count() == expected.count()
+        assert got.select(*(cols or want[table].columns)).exceptAll(expected).count() == 0

@@ -27,7 +27,6 @@ from helium_etl_lite_spark.etl.schemas import (
     TRANSACTIONS_OUT_SCHEMA,
 )
 from helium_etl_lite_spark.etl.snapshot import SnapshotStore, commit_batch_atomic
-from helium_etl_lite_spark.sources.block_source import LandedBlockSource
 
 RANGE = 20
 TIP = 1059  # the follower's tip; the hand-written commit lands above it
@@ -65,11 +64,12 @@ def _commit(spark, out_dir, lo, hi, rewards, transactions):
 
 
 @pytest.fixture(scope="module")
-def store(spark, tmp_path_factory):
-    out_dir = str(tmp_path_factory.mktemp("serving_duckdb") / "out")
+def store(spark, land, tmp_path_factory):
+    root = tmp_path_factory.mktemp("serving_duckdb")
+    out_dir = str(root / "out")
     blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=TIP - 1000 + 1)
     IncrementalFollower(
-        spark, LandedBlockSource(blocks, txns),
+        spark, land(blocks, txns, root),
         FollowerConfig(mode="full", backfill=True, out_dir=out_dir, block_range_size=RANGE),
     ).catch_up()
     _commit(

@@ -25,17 +25,17 @@ from pyspark.sql import functions as F
 from helium_etl_lite_spark.etl import fixtures
 from helium_etl_lite_spark.etl.pipeline import FollowerConfig, IncrementalFollower
 from helium_etl_lite_spark.etl.snapshot import SnapshotStore, commit_batch_atomic, read_snapshot
-from helium_etl_lite_spark.sources.block_source import LandedBlockSource
 
 SENTINEL = "1Wh4bh"
 
 
 @pytest.fixture(scope="module")
-def served(spark, tmp_path_factory):
-    out_dir = str(tmp_path_factory.mktemp("serving") / "out")
+def served(spark, land, tmp_path_factory):
+    root = tmp_path_factory.mktemp("serving")
+    out_dir = str(root / "out")
     blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=120)
     f = IncrementalFollower(
-        spark, LandedBlockSource(blocks, txns),
+        spark, land(blocks, txns, root),
         FollowerConfig(mode="full", backfill=True, out_dir=out_dir),
     )
     f.catch_up()
@@ -170,7 +170,7 @@ class TestServingModule:
             assert views[table].count() == 40
 
 
-def test_register_views_raises_on_corrupt_transactions(spark, tmp_path):
+def test_register_views_raises_on_corrupt_transactions(spark, land, tmp_path):
     # ADVICE r2: only a table absent from the manifest means "mode
     # produced none" — a corrupt committed table must raise, not
     # silently drop the view.
@@ -179,7 +179,7 @@ def test_register_views_raises_on_corrupt_transactions(spark, tmp_path):
     blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
     out_dir = str(tmp_path / "out")
     IncrementalFollower(
-        spark, LandedBlockSource(blocks, txns),
+        spark, land(blocks, txns, tmp_path),
         FollowerConfig(mode="rewards", out_dir=out_dir, backfill=True),
     ).catch_up()
     # rewards-only mode: no transactions table -> view quietly absent

@@ -24,7 +24,6 @@ from helium_etl_lite_spark.etl.snapshot import (
     commit_batch_atomic,
     read_snapshot,
 )
-from helium_etl_lite_spark.sources.block_source import LandedBlockSource
 
 
 def _spans(m, table):
@@ -229,16 +228,16 @@ class TestCommitProtocol:
 
 class TestFollowerAtomic:
     @pytest.mark.parametrize("mode", ["full", "filters"])
-    def test_follower_end_to_end_matches_build_outputs(self, spark, tmp_path, mode):
+    def test_follower_end_to_end_matches_build_outputs(self, spark, land, pass_path, tmp_path, mode):
         from helium_etl_lite_spark.etl.transforms import build_outputs
 
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
         filters = fixtures.make_filters(spark) if mode == "filters" else None
         out_dir = str(tmp_path / "out")
         IncrementalFollower(
-            spark, LandedBlockSource(blocks, txns),
+            spark, land(blocks, txns, tmp_path),
             FollowerConfig(mode=mode, out_dir=out_dir, block_range_size=20, backfill=True),
-            filters=filters,
+            filters=None if filters is None else filters.toArrow(),
         ).catch_up()
         want = build_outputs(mode, blocks, txns, filters)
         key = ["block", "transaction_hash", "gateway", "account", "amount"]
@@ -249,17 +248,17 @@ class TestFollowerAtomic:
         )
         got_txns = read_snapshot(spark, out_dir, "transactions")
         if mode == "full":
-            assert got_txns.count() == want["transactions"].dropDuplicates(["hash"]).count()
+            assert got_txns.count() == want["transactions"].select("hash").distinct().count()
         else:
             assert got_txns is None
         m = SnapshotStore(out_dir).current()
         assert m["height"] == 1059 and m["first_block"] == 1000
 
-    def test_follower_atomic_incremental_batches(self, spark, tmp_path):
+    def test_follower_atomic_incremental_batches(self, spark, land, pass_path, tmp_path):
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
         out_dir = str(tmp_path / "inc")
         f = IncrementalFollower(
-            spark, LandedBlockSource(blocks, txns),
+            spark, land(blocks, txns, tmp_path),
             FollowerConfig(mode="rewards", out_dir=out_dir, block_range_size=20,
                            max_blocks_per_batch=25, backfill=True),
         )
@@ -274,7 +273,7 @@ class TestFollowerAtomic:
         expected = build_outputs("rewards", blocks, txns)["rewards"].count()
         assert got.count() == expected
 
-    def test_audit_observed_on_the_write_matches_read_back(self, spark, tmp_path):
+    def test_audit_observed_on_the_write_matches_read_back(self, spark, land, pass_path, tmp_path):
         # The audit counters come from the rewards write itself; they
         # equal a read-back of the committed slice, and a pass with no
         # reward rows reports explicit zeros.
@@ -283,7 +282,7 @@ class TestFollowerAtomic:
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=90)
         out_dir = str(tmp_path / "audit")
         f = IncrementalFollower(
-            spark, LandedBlockSource(blocks, txns),
+            spark, land(blocks, txns, tmp_path),
             FollowerConfig(mode="full", out_dir=out_dir, block_range_size=20,
                            backfill=True),
         )
@@ -308,13 +307,13 @@ class TestFollowerAtomic:
             assert want["n_rewards"] > 0
             assert f.last_audit == want
 
-    def test_serving_views_read_snapshot(self, spark, tmp_path):
+    def test_serving_views_read_snapshot(self, spark, land, tmp_path):
         from helium_etl_lite_spark import serving
 
         blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=40)
         out_dir = str(tmp_path / "serve")
         IncrementalFollower(
-            spark, LandedBlockSource(blocks, txns),
+            spark, land(blocks, txns, tmp_path),
             FollowerConfig(mode="full", out_dir=out_dir, block_range_size=20,
                            backfill=True),
         ).catch_up()

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import functions as F
 
 from helium_etl_lite_spark.etl import fixtures, transforms
+from helium_etl_lite_spark.etl.arrow_transforms import build_outputs_arrow
 from helium_etl_lite_spark.etl.pipeline import CursorStore, FollowerConfig, IncrementalFollower
 from helium_etl_lite_spark.sources.block_source import FakeRpcClient, RpcBlockSource
 
@@ -73,28 +74,30 @@ class TestSources:
         ).source
         for s in (src, jsrc):
             assert s.tip() == 1039 and s.first() == 1000
-            assert s.range(1010, 1019)[0].count() == 10
-        # identical pipeline output from either source
-        out_p = transforms.build_outputs("rewards", *src.range(1000, 1039))["rewards"]
-        out_j = transforms.build_outputs("rewards", *jsrc.range(1000, 1039))["rewards"]
-        assert out_p.exceptAll(out_j).count() == 0
-        assert out_p.count() == out_j.count()
+            assert s.range(1010, 1019)[0].num_rows == 10
+            assert s.frames(spark, 1010, 1019)[0].count() == 10
+        # identical pipeline output from either source, on either path
+        want = sorted(map(tuple, transforms.build_outputs("rewards", blocks, txns)["rewards"].collect()))
+        for s in (src, jsrc):
+            spark_out = transforms.build_outputs("rewards", *s.frames(spark, 1000, 1039))["rewards"]
+            driver_out = build_outputs_arrow("rewards", *s.range(1000, 1039))["rewards"]
+            assert sorted(map(tuple, spark_out.collect())) == want
+            assert sorted(tuple(r.values()) for r in driver_out.to_pylist()) == want
 
     def test_rpc_source_matches_dataframe_path(self, spark):
         blocks, txns, blocks_by_h, txns_by_hash = _chain_as_dicts(spark)
-        src = RpcBlockSource(spark, FakeRpcClient(blocks_by_h, txns_by_hash))
+        src = RpcBlockSource(FakeRpcClient(blocks_by_h, txns_by_hash))
         assert src.tip() == 1039
-        got = transforms.build_outputs("rewards", *src.range(1000, 1039))["rewards"]
-        want = transforms.build_outputs("rewards", blocks, txns)["rewards"]
-        assert got.count() == want.count()
-        assert got.exceptAll(want).count() == 0
+        got = build_outputs_arrow("rewards", *src.range(1000, 1039))["rewards"].to_pylist()
+        want = transforms.build_outputs("rewards", blocks, txns)["rewards"].collect()
+        assert sorted(tuple(r.values()) for r in got) == sorted(map(tuple, want))
 
     def test_rpc_range_fetches_each_block_and_txn_once(self, spark):
         _, _, blocks_by_h, txns_by_hash = _chain_as_dicts(spark)
         client = _CountingRpcClient(blocks_by_h, txns_by_hash)
-        blocks, txns = RpcBlockSource(spark, client).range(1000, 1039)
-        assert blocks.count() == 40
-        assert txns.count() == len(txns_by_hash)
+        blocks, txns = RpcBlockSource(client).range(1000, 1039)
+        assert blocks.num_rows == 40
+        assert txns.num_rows == len(txns_by_hash)
         assert client.calls["get_block_raw"] == 40
         assert client.calls["get_transaction"] == len(txns_by_hash)
 
@@ -106,7 +109,7 @@ class TestSources:
         out_dir = str(tmp_path / "out")
         CursorStore(out_dir).write(1019, 1000)
         cfg = FollowerConfig(mode="rewards", out_dir=out_dir, max_blocks_per_batch=8)
-        assert IncrementalFollower(spark, RpcBlockSource(spark, client), cfg).catch_up() == 20
+        assert IncrementalFollower(spark, RpcBlockSource(client), cfg).catch_up() == 20
         assert CursorStore(out_dir).read() == (1039, 1000)
         assert client.calls["height"] == 1
         assert client.calls["get_block_raw"] == 20
@@ -170,7 +173,7 @@ class TestHttpRpc:
                 client.get_block_raw(999_999)
             # E20 epoch walk against the live endpoint finds the oldest
             # block the node holds
-            source = RpcBlockSource(spark, client)
+            source = RpcBlockSource(client)
             assert source.first() == 1000
             # full backfill+catch-up through the same follower pipeline:
             # one manifest swap per pass, cursor from the manifest
