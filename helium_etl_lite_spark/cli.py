@@ -5,10 +5,10 @@ src/settings.rs:33-48) re-expressed for the Spark engine.
 Commands:
   migrate   initialize the output layout + schema manifest (the refinery
             migrations analog, reference src/migrate.rs:4-18)
-  once      one catch-up pass: process (cursor, tip] and exit
+  once      one catch-up pass: process (cursor, tip] and exit (no Spark)
   start     follow loop: catch up, then poll every `tick_seconds`
             (reference's 10 s tokio tick, src/main.rs:55-63), ctrl-c to
-            stop gracefully (src/main.rs:48-52)
+            stop gracefully (src/main.rs:48-52) (no Spark)
   sql       run ad-hoc SQL over the serving views (rewards /
             transactions / follower_info — what a reference user does
             with psql against the Postgres tables):
@@ -49,8 +49,8 @@ Config (TOML, reference settings.toml keys where they translate):
   tick_seconds              poll interval for `start`, a positive
                             number (default 10)
   max_blocks_per_batch      blocks per commit, a positive integer
-                            (default: the whole lag from landed files,
-                            500 fetched blocks from a node)
+                            (default and most: 500, etl/pipeline.py
+                            PASS_LIMIT)
   block_range_size          output partition granularity, a positive
                             integer (default 1000)
 
@@ -149,7 +149,7 @@ def setup_logger(cfg) -> logging.Logger:
 
 def _filters(cfg) -> pa.Table | None:
     """The filters table at filters_path (filters mode), read with
-    pyarrow: a driver pass uses it as it is."""
+    pyarrow: the follower's pass uses it as it is."""
     if cfg.get("mode") != "filters":
         return None
     if "filters_path" not in cfg:
@@ -167,7 +167,7 @@ def _follower_config(cfg) -> FollowerConfig:
     )
 
 
-def _follower(spark, cfg) -> IncrementalFollower:
+def _follower(cfg) -> IncrementalFollower:
     """The follower over the configured source: a live node when
     node_addr is set (reference settings.node_addr, src/settings.rs:33),
     landed block files otherwise."""
@@ -178,13 +178,13 @@ def _follower(spark, cfg) -> IncrementalFollower:
             cfg.get("source_format") == "json"
         )
         source = LandedBlockSource(str(cfg["blocks_path"]), str(cfg["txns_path"]), as_json)
-    return IncrementalFollower(spark, source, _follower_config(cfg), filters=_filters(cfg))
+    return IncrementalFollower(source, _follower_config(cfg), filters=_filters(cfg))
 
 
-def _catch_up(spark, cfg) -> tuple[int, tuple[int, int] | None]:
+def _catch_up(cfg) -> tuple[int, tuple[int, int] | None]:
     """Catch up to the configured source's tip. Returns (blocks loaded,
     cursor); the cursor is None while the source has no block."""
-    n = _follower(spark, cfg).catch_up()
+    n = _follower(cfg).catch_up()
     return n, CursorStore(str(cfg["out_dir"])).read()
 
 
@@ -205,7 +205,7 @@ def cmd_migrate(spark, cfg) -> None:
 
 
 def cmd_once(spark, cfg, log=None) -> int:
-    n, cursor = _catch_up(spark, cfg)
+    n, cursor = _catch_up(cfg)
     (log or setup_logger(cfg)).info(
         f"once: loaded {n} blocks; "
         + ("no block at the source yet" if cursor is None
@@ -229,7 +229,7 @@ def cmd_start(spark, cfg, log=None, max_ticks: int | None = None) -> None:
     try:
         while not stop["flag"]:
             try:
-                n, cur = _catch_up(spark, cfg)
+                n, cur = _catch_up(cfg)
             except Exception as exc:
                 # fail-stop per pass, retry next tick (reference logs the
                 # block error and re-polls, src/follower.rs:86-93) — a
@@ -425,12 +425,14 @@ def main(argv: list[str] | None = None) -> int:
             "--key-cols only applies to the --changes-since CDC views; "
             "pass --changes-since N as well"
         )
+    if args.command in ("once", "start"):
+        # the follower's passes start no Spark job (etl/pipeline.py)
+        (cmd_once if args.command == "once" else cmd_start)(None, cfg)
+        return 0
     spark = get_spark(f"helium-cli-{args.command}")
     try:
         if args.command == "migrate":
             cmd_migrate(spark, cfg)
-        elif args.command == "once":
-            cmd_once(spark, cfg)
         elif args.command == "sql":
             cmd_sql(
                 spark, cfg, args.execute, at_version=args.at_version,
@@ -441,10 +443,8 @@ def main(argv: list[str] | None = None) -> int:
                     else None
                 ),
             )
-        elif args.command == "compact":
-            cmd_compact(spark, cfg)
         else:
-            cmd_start(spark, cfg)
+            cmd_compact(spark, cfg)
     finally:
         spark.stop()
     return 0

@@ -1,6 +1,7 @@
-"""The transforms of etl/transforms.py on Arrow tables, for a driver
-pass: a pass short enough to hold in driver memory (etl/pipeline.py
-IncrementalFollower) runs them in-process with no Spark job.
+"""The transforms of etl/transforms.py on Arrow tables, for the
+follower's pass: a pass is short enough to hold in driver memory
+(etl/pipeline.py PASS_LIMIT), so it runs them in-process with no Spark
+job.
 `build_outputs` stays the reference they are tested against
 (tests/test_driver_pass.py): the same rows in all three modes, and the
 same fail-stop errors.
@@ -144,7 +145,7 @@ def _semi_join_filters(rewards: pa.Table, filters: pa.Table) -> pa.Table:
 def dedup_transactions(txns: pa.Table) -> pa.Table:
     """One row per hash (PK(hash), migrations/V3:43): the row of the
     lowest block, ties broken by type and then by fields, the rule
-    etl/transforms.py dedup_transactions applies on Spark."""
+    etl/transforms.py dedup_transactions applies on DataFrames."""
     if txns.num_rows == 0:
         return txns
     order = txns.sort_by([(c, "ascending") for c in ("hash", "block", "type", "fields")])
@@ -156,9 +157,8 @@ def dedup_transactions(txns: pa.Table) -> pa.Table:
 def build_outputs_arrow(
     mode: str, blocks: pa.Table, txns: pa.Table, filters: pa.Table | None = None
 ) -> dict[str, pa.Table]:
-    """E13 on Arrow: build_outputs's tables for one driver pass, with
-    `transactions` deduplicated by hash. `txns` needs to hold only the
-    payload rows of the hashes `blocks` name."""
+    """E13 on Arrow: build_outputs's tables for one pass. `txns` needs to
+    hold only the payload rows of the hashes `blocks` name."""
     if mode not in MODES:
         raise ValueError(f"unknown mode {mode!r}; expected one of {MODES}")
     if mode == "filters" and filters is None:

@@ -1,5 +1,5 @@
 """Batch-incremental follower: the reference's poll/catch-up/commit loop
-(SURVEY §2.1 E16-E20) on Spark.
+(SURVEY §2.1 E16-E20).
 
 One loop, one source interface: IncrementalFollower follows a block
 source (sources/block_source.py) — landed files or a live JSON-RPC
@@ -10,23 +10,15 @@ for the next call, as they wait for the reference's next 10 s tick.
 
 Differences by design (Spark-first, not a translation):
 - The reference processes ONE block per transaction
-  (src/follower.rs:99-112). Here a catch-up pass processes the whole
-  (cursor, tip] range (up to the pass limit) in one commit, on one of
-  two paths, chosen by the pass's length:
-  - a pass of at most RpcBlockSource.PASS_LIMIT (500) blocks, the most
-    the RPC source holds in driver memory, is a DRIVER pass: the
-    source hands Arrow tables, etl/arrow_transforms.py runs the
-    transforms and etl/snapshot.py commit_arrow writes the fragments
-    with pyarrow, with no Spark job. Every near-tip tick, every RPC
-    pass and a short backfill take it. 500 is a memory bound, not the
-    speed crossover: the driver pass is faster than Spark's fixed job
-    cost well past it (CHANGES.md has the measurements);
-  - a longer pass (a landed backfill) is ONE distributed Spark job:
-    etl/transforms.py build_outputs over the source's DataFrames, whose
-    height predicate partition-prunes, and commit_batch_atomic.
-  Both paths give the same rows and the same fail-stop errors, and the
-  Spark transforms are the reference the driver pass is tested against
-  (tests/test_driver_pass.py).
+  (src/follower.rs:99-112). Here a catch-up pass processes up to
+  PASS_LIMIT blocks of (cursor, tip] in one commit, in the driver with
+  no Spark job: the source hands Arrow tables, etl/arrow_transforms.py
+  runs the transforms and etl/snapshot.py commit_arrow writes the
+  fragments with pyarrow. A longer lag, such as a backfill, is a run of
+  such passes. etl/transforms.py build_outputs, the same transforms on
+  DataFrames, is the reference the driver pass is tested against
+  (tests/test_driver_pass.py): the same rows and the same fail-stop
+  errors.
 - Exactly-once: Postgres gives the reference a data+cursor transaction
   (src/follower.rs:100, src/block_processor.rs:44-47). Here every pass
   is one snapshot-manifest commit (etl/snapshot.py): the rewards and
@@ -35,7 +27,7 @@ Differences by design (Spark-first, not a translation):
   the cursor has not reached, and a crash before the rename leaves the
   previous snapshot whole. The replay recomputes the same version.
 - Transactions sharing a hash within a pass keep one row (PK(hash),
-  migrations/V3:43), chosen by one rule on both paths: the lowest
+  migrations/V3:43), chosen by one rule in both transforms: the lowest
   block, then type, then fields, so a replay stores the same row.
 - The cursor (the reference's one follower_info row) is the manifest's
   (height, first_block); CursorStore reads and publishes it, with no
@@ -49,24 +41,21 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .arrow_transforms import build_outputs_arrow
 from .schemas import REWARDS_V2_FIELDS_SCHEMA, SENTINEL
 from ..errors import is_path_not_found
-from ..sources.block_source import RpcBlockSource
 from .snapshot import (
     RANGE_SIZE,
     SnapshotStore,
     commit_arrow,
-    commit_batch_atomic,
     refuse_old_layout,
     require_fragments,
 )
-from .transforms import MODES, build_outputs, dedup_transactions
+from .transforms import MODES
 
 # Tables keyed by block, written in place: write_block_range_idempotent
 # gives per-block replace semantics on plain partitioned parquet (any
@@ -74,7 +63,7 @@ from .transforms import MODES, build_outputs, dedup_transactions
 # duplicating and never clobbering neighbors) by reading back and
 # rewriting every range a batch touches; operators/rollup.py lands its
 # buckets here. The follower's own tables go through the snapshot sink
-# instead (etl/snapshot.py commit_batch_atomic), which has the same
+# instead (etl/snapshot.py commit_arrow), which has the same
 # claim semantics but appends a fragment holding only the batch's rows
 # and reads back only fragments a replay partly overlaps.
 
@@ -244,6 +233,13 @@ def _open_cursor(config: FollowerConfig, probe_first) -> tuple[int, int] | None:
     return first - 1, first
 
 
+#: Blocks per pass at most. A pass holds its source rows and outputs in
+#: driver memory (etl/snapshot.py commit_arrow adds one block range's
+#: carried-over rows at a time), so this bounds the driver's memory. It
+#: was not chosen for speed (README.md has the backfill measurements).
+PASS_LIMIT = 500
+
+
 @dataclass
 class FollowerConfig:
     """settings.toml analog (reference src/settings.rs:33-48)."""
@@ -251,30 +247,21 @@ class FollowerConfig:
     mode: str = "rewards"          # rewards | full | filters
     backfill: bool = False
     out_dir: str = "/tmp/helium_out"
-    # blocks per pass, at most the source's PASS_LIMIT; None = the
-    # source's PASS_LIMIT (landed files: the whole lag in one pass; a
-    # live node: 500 fetched blocks)
+    # blocks per pass, at most PASS_LIMIT; None = PASS_LIMIT
     max_blocks_per_batch: int | None = None
     block_range_size: int = RANGE_SIZE   # blocks per output partition directory
 
 
 class IncrementalFollower:
     """E17-E19: cursor init, catch-up loop, cursor advance over a block
-    source (sources/block_source.py: tip, first, range, PASS_LIMIT).
-    `filters` is the filters table (filters mode) as Arrow."""
+    source (sources/block_source.py: tip, first, range). `filters` is
+    the filters table (filters mode) as Arrow. Starts no Spark job."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        source,
-        config: FollowerConfig,
-        filters: pa.Table | None = None,
-    ):
+    def __init__(self, source, config: FollowerConfig, filters: pa.Table | None = None):
         if config.mode not in MODES:
             raise ValueError(f"unknown mode {config.mode!r}; expected one of {MODES}")
         if config.mode == "filters" and filters is None:
             raise ValueError("filters mode requires the filters table")
-        self.spark = spark
         self.source = source
         self.config = config
         self.filters = filters
@@ -290,10 +277,10 @@ class IncrementalFollower:
     # -- catch-up passes (reference src/follower.rs:69-98) --------------
     def catch_up(self) -> int:
         """Process (cursor, tip] in passes of at most max_blocks_per_batch
-        blocks and the source's PASS_LIMIT (bounded-replay E19), and
-        return the number of blocks loaded. The tip is probed once;
-        newer blocks are left to the next call. Loads nothing while the
-        source has no block."""
+        blocks and PASS_LIMIT (bounded-replay E19), and return the
+        number of blocks loaded. The tip is probed once; newer blocks
+        are left to the next call. Loads nothing while the source has no
+        block."""
         cursor = self.init_cursor()
         if cursor is None:
             return 0
@@ -307,24 +294,21 @@ class IncrementalFollower:
     def _pass(self, height: int, first_block: int, tip: int | None) -> int:
         if tip is None or tip <= height:
             return 0
-        limits = [n for n in (self.config.max_blocks_per_batch, self.source.PASS_LIMIT) if n]
-        upper = min([tip] + [height + n for n in limits])
+        n = min(self.config.max_blocks_per_batch or PASS_LIMIT, PASS_LIMIT)
+        upper = min(tip, height + n)
         self._commit_range(height + 1, upper, first_block)
         return upper - height
 
     def _commit_range(self, lo: int, hi: int, first_block: int) -> None:
         # E14-E18 as ONE transaction: every output table and the cursor
-        # advance publish together in the manifest swap. The path is
-        # chosen by the pass's length (see the module docstring).
-        if hi - lo + 1 <= RpcBlockSource.PASS_LIMIT:
-            self._driver_pass(lo, hi, first_block)
-        else:
-            self._spark_pass(lo, hi, first_block)
-        logging.getLogger("helium_etl_lite_spark").info(f"audit [{lo},{hi}]: {self.last_audit}")
-
-    def _driver_pass(self, lo: int, hi: int, first_block: int) -> None:
+        # advance publish together in the manifest swap.
         blocks, txns = self.source.range(lo, hi)
         out = build_outputs_arrow(self.config.mode, blocks, txns, self.filters)
+        # Ingest audit: row/amount/sentinel counters of the pass's
+        # rewards (the reference has no ingest metrics at all;
+        # production followers need them to spot a silently-empty or
+        # all-null upstream). A pass with no reward rows is an explicit
+        # zero, the signal the audit exists to surface.
         rewards = out["rewards"]
         self.last_audit = {
             "n_rewards": rewards.num_rows,
@@ -335,47 +319,7 @@ class IncrementalFollower:
             self.config.out_dir, out, lo, hi, height=hi, first_block=first_block,
             range_size=self.config.block_range_size,
         )
-
-    def _spark_pass(self, lo: int, hi: int, first_block: int) -> None:
-        blocks, txns = self.source.frames(self.spark, lo, hi)
-        filters = None if self.filters is None else self.spark.createDataFrame(self.filters)
-        out = build_outputs(self.config.mode, blocks, txns, filters)
-        # Ingest audit: row/amount/sentinel counters of the pass's
-        # rewards (the reference has no ingest metrics at all;
-        # production followers need them to spot a silently-empty or
-        # all-null upstream), observed on the rewards write itself: no
-        # read-back, no extra job. A pass with no reward rows is an
-        # explicit zero, the signal the audit exists to surface.
-        audit = Observation(f"audit-{lo}-{hi}")
-        tables = {
-            "rewards": out["rewards"].observe(
-                audit,
-                F.count(F.lit(1)).alias("n_rewards"),
-                F.coalesce(F.sum("amount"), F.lit(0)).alias("amount_total"),
-                F.coalesce(
-                    F.sum(F.when(F.col("account") == SENTINEL, 1).otherwise(0)), F.lit(0)
-                ).alias("sentinel_accounts"),
-            )
-        }
-        if "transactions" in out:
-            tables["transactions"] = dedup_transactions(out["transactions"])
-        commit_batch_atomic(
-            self.spark,
-            self.config.out_dir,
-            tables,
-            lo,
-            hi,
-            height=hi,
-            first_block=first_block,
-            range_size=self.config.block_range_size,
-        )
-        try:
-            self.last_audit = audit.get
-        except Py4JJavaError:
-            # AQE prunes a plan whose shuffle wrote no rows, and the
-            # observed metrics with it (a pass of no reward rows over
-            # several ranges): the explicit zero.
-            self.last_audit = {"n_rewards": 0, "amount_total": 0, "sentinel_accounts": 0}
+        logging.getLogger("helium_etl_lite_spark").info(f"audit [{lo},{hi}]: {self.last_audit}")
 
 
 MAX_HOPS = 1000

@@ -55,14 +55,17 @@ scaled down to exactly what the follower needs:
 
 - One planner, two writers. `_commit` is the claim/fold/manifest
   planner: it decides per fragment what is kept, dropped or read, has a
-  writer write the new fragments, and publishes. `commit_batch_atomic`
-  writes with Spark (a long follower pass, every batch-id store);
-  `commit_arrow` writes tables held in driver memory with pyarrow (the
-  follower's driver pass), with no Spark job. The Arrow writer clusters
-  `transactions`: each fragment is sorted by (type, block, hash) with
-  one row group per type, so the footer's row-group statistics let a
-  read by type or by hash decode only the matching row groups'
-  `fields` payloads.
+  writer write the new fragments, and publishes. `commit_arrow` writes
+  tables held in driver memory with pyarrow, with no Spark job: the
+  follower's pass, which holds at most etl/pipeline.py PASS_LIMIT
+  blocks of rows plus, one range at a time, the rows a fold or a
+  partial overlap carries over (at most one block range's). The Spark
+  writer serves `commit_batch_atomic` (the registry's snapshot-sink
+  queries and every batch-id store) and `compact_snapshot`. Both
+  writers sort a `transactions` fragment by TRANSACTIONS_ORDER, (type,
+  block, hash); the Arrow writer also writes one row group per type, so
+  the footer's row-group statistics let a read by type or by hash
+  decode only the matching row groups' `fields` payloads.
 
 - Crash anywhere before the CURRENT swap leaves the previous snapshot
   (data + cursor together) fully intact; the half-written v-dir is
@@ -670,9 +673,12 @@ def _write_fragments(
     alike: write `df` (with its `block_range` column) as `table`'s
     fragments of `version`, one file per range, and enter each range
     the write produced in `parts` (see _enter)."""
-    # One range: one file with no shuffle. Several (a backfill pass):
-    # one file set per range.
+    # One range: one file with no shuffle. Several: one file set per
+    # range.
     out = df.coalesce(1) if len(spans) == 1 else df.repartition("block_range")
+    if _clustered(table, df.columns):
+        # block_range first: the partitioned write's own required order
+        out = out.sortWithinPartitions("block_range", *TRANSACTIONS_ORDER)
     vdir = os.path.join(root, table, f"v={version}")
     # overwrite: a replay after a crash-before-publish recomputes the same
     # version number and rewrites its orphan directory.
@@ -692,51 +698,34 @@ def _enter(root: str, table: str, version: int, r: int, spans: dict, parts: dict
     parts.setdefault(str(r), []).append([version, *spans[r], nbytes])
 
 
-#: Per table, the sort key of the fragments the Arrow writer writes, one
-#: row group per value of its first column: a `transactions` fragment
-#: holds one row group per type, so a by-type read and a by-hash read
-#: decode the payloads of the matching row groups only.
-CLUSTER_BY = {"transactions": ("type", "block", "hash")}
+#: The order of the rows in a `transactions` fragment, both writers'.
+TRANSACTIONS_ORDER = ("type", "block", "hash")
 
 
-def _write_arrow_fragments(
-    root: str, table: str, version: int, new: pa.Table, old: pa.Table | None,
-    range_size: int, spans: dict, parts: dict,
-) -> None:
-    """The Arrow writer of fragments: the rows of `new`, and of `old`
-    (the carry-over), as `table`'s fragments of `version`, one file per
-    range, entered in `parts` as _write_fragments enters them. The
-    footer carries the Spark schema, as a Spark-written one does, so a
-    Spark read infers nothing."""
-    vdir = os.path.join(root, table, f"v={version}")
-    # A crashed attempt's orphan directory: a leftover file of it would
-    # be read as duplicate rows (Spark's overwrite mode does the same).
-    shutil.rmtree(vdir, ignore_errors=True)
-    rows = new if old is None else pa.concat_tables([old.select(new.column_names).cast(new.schema), new])
-    key = CLUSTER_BY.get(table)
-    if key is not None:
-        rows = rows.sort_by([(c, "ascending") for c in key])
-    schema = rows.schema.with_metadata(
-        {_SPARK_SCHEMA_KEY: from_arrow_schema(rows.schema).json()}
-    )
-    ranges = pc.floor(pc.divide(rows["block"].cast(pa.float64()), range_size))
-    for r in spans:
-        part = rows.filter(pc.equal(ranges, r))
-        if not part.num_rows:
-            continue
-        d = fragment_dir(root, table, r, version)
-        os.makedirs(d)
-        with pq.ParquetWriter(os.path.join(d, "part-00000.parquet"), schema) as w:
-            if key is None:
-                w.write_table(part)
-            else:
-                # sorted: a row group per run of one value of key[0]
-                v = part[key[0]].combine_chunks()
-                changes = pc.indices_nonzero(pc.not_equal(v[1:], v[:-1])).to_pylist()
-                starts = [0] + [i + 1 for i in changes]
-                for a, b in zip(starts, starts[1:] + [len(v)]):
-                    w.write_table(part.slice(a, b - a), row_group_size=b - a)
-        _enter(root, table, version, r, spans, parts)
+def _clustered(table: str, columns: list[str]) -> bool:
+    """True for the follower's `transactions` table: the store takes any
+    table, and one of that name need not hold the order's columns."""
+    return table == "transactions" and set(TRANSACTIONS_ORDER) <= set(columns)
+
+
+def _write_arrow_fragment(root: str, table: str, version: int, r: int, rows: pa.Table) -> None:
+    """Write `rows` as `table`'s fragment of range `r` in `version`: one
+    file, whose footer carries the Spark schema, as a Spark-written one
+    does, so a Spark read infers nothing. A `transactions` fragment is
+    sorted by TRANSACTIONS_ORDER with one row group per type."""
+    schema = rows.schema.with_metadata({_SPARK_SCHEMA_KEY: from_arrow_schema(rows.schema).json()})
+    d = fragment_dir(root, table, r, version)
+    os.makedirs(d)
+    with pq.ParquetWriter(os.path.join(d, "part-00000.parquet"), schema) as w:
+        if not _clustered(table, rows.column_names):
+            w.write_table(rows)
+            return
+        rows = rows.sort_by([(c, "ascending") for c in TRANSACTIONS_ORDER])
+        types = rows["type"].combine_chunks()
+        changes = pc.indices_nonzero(pc.not_equal(types[1:], types[:-1])).to_pylist()
+        starts = [0] + [i + 1 for i in changes]
+        for a, b in zip(starts, starts[1:] + [len(types)]):
+            w.write_table(rows.slice(a, b - a), row_group_size=b - a)
 
 
 def _commit(root: str, height: int, first_block: int, spans: dict, contiguous: bool,
@@ -893,23 +882,32 @@ def commit_arrow(
     """commit_batch_atomic's contiguous claim of [lo, hi] for tables
     held in driver memory, written with pyarrow: no Spark job. The same
     planner decides what is kept, dropped and folded; the carry-over is
-    read with pyarrow from the fragments' files. Returns the published
-    manifest."""
+    read with pyarrow from the fragments' files, one range at a time, so
+    the commit holds at most one range's carried-over rows beside
+    `tables`. Returns the published manifest."""
 
     def write(table, version, to_read, merged_spans, parts):
-        old = None
-        files = [
-            os.path.join(d, f)
-            for r, v in sorted(set(to_read))
-            for d in [fragment_dir(root, table, r, v)]
-            for f in sorted(os.listdir(d)) if f.endswith(".parquet")
-        ]
-        if files:
-            old = pa.concat_tables([pq.read_table(f) for f in files], promote_options="permissive")
-            old = old.filter((pc.field("block") < lo) | (pc.field("block") > hi))
-        _write_arrow_fragments(
-            root, table, version, tables[table], old, range_size, merged_spans, parts
-        )
+        # A crashed attempt's orphan directory: a leftover file of it
+        # would be read as duplicate rows (Spark's overwrite mode
+        # replaces it too).
+        shutil.rmtree(os.path.join(root, table, f"v={version}"), ignore_errors=True)
+        new = tables[table]
+        ranges = pc.floor(pc.divide(new["block"].cast(pa.float64()), range_size))
+        for r in merged_spans:
+            rows = new.filter(pc.equal(ranges, r))
+            files = [
+                os.path.join(d, f)
+                for v in sorted({v for r_, v in to_read if r_ == r})
+                for d in [fragment_dir(root, table, r, v)]
+                for f in sorted(os.listdir(d)) if f.endswith(".parquet")
+            ]
+            if files:
+                old = pa.concat_tables([pq.read_table(f) for f in files], promote_options="permissive")
+                old = old.filter((pc.field("block") < lo) | (pc.field("block") > hi))
+                rows = pa.concat_tables([old.select(new.column_names).cast(new.schema), rows])
+            if rows.num_rows:
+                _write_arrow_fragment(root, table, version, r, rows)
+                _enter(root, table, version, r, merged_spans, parts)
 
     spans = _clip_spans(lo, hi, range_size, range(lo // range_size, hi // range_size + 1))
     return _commit(root, height, first_block, spans, True, list(tables), write)

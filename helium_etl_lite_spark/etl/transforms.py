@@ -155,8 +155,8 @@ def build_transactions(envelopes: DataFrame, txns: DataFrame) -> DataFrame:
 def dedup_transactions(txns: DataFrame) -> DataFrame:
     """PK(hash) idempotence (migrations/V3:43): one row per hash, the
     row of the lowest block, ties broken by type and then by fields,
-    so a replay stores the row the first pass stored (the driver pass
-    applies the same rule, etl/arrow_transforms.py)."""
+    so a replay stores the row the first pass stored (the follower's
+    pass applies the same rule, etl/arrow_transforms.py)."""
     first = F.min(F.struct("block", "type", "fields")).alias("first")
     return txns.groupBy("hash").agg(first).select(
         "first.block", "hash", "first.type", "first.fields"
@@ -170,7 +170,8 @@ def build_outputs(
     src/block_processor.rs:71-121,127-144).
 
     - rewards: rewards table only
-    - full:    rewards table AND all txns (rewards_v2 double-written:
+    - full:    rewards table AND all txns, one row per hash
+               (dedup_transactions; rewards_v2 double-written:
                exploded in rewards + opaque row in transactions,
                src/block_processor.rs:72 + :127-141)
     - filters: rewards restricted by the filter semi-join
@@ -187,5 +188,5 @@ def build_outputs(
     else:
         out["rewards"] = rewards
     if mode == "full":
-        out["transactions"] = build_transactions(envelopes, txns)
+        out["transactions"] = dedup_transactions(build_transactions(envelopes, txns))
     return out

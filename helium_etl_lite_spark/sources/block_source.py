@@ -11,28 +11,28 @@ files and a live node run through the same loop:
   tip()          the newest height (None when there is no block)
   first()        the backfill start (reference get_first_block,
                  src/follower.rs:144-194; None when there is no block)
-  range(lo, hi)  the (blocks, txns) Arrow tables of one driver pass over
+  range(lo, hi)  the (blocks, txns) Arrow tables of one pass over
                  [lo, hi]: the pass's blocks and the payload rows of the
                  hashes they name (etl/schemas.py BLOCK_ARROW, TXN_ARROW)
-  PASS_LIMIT     blocks per pass at most (None: no bound of its own)
+
+The follower asks range() for at most etl/pipeline.py PASS_LIMIT
+blocks, and a source holds no more than that pass in driver memory.
 
 Two implementations:
 
 - LandedBlockSource: block and transaction files landed as parquet or
   JSON-lines. The files are listed once per source, skipping `_`- and
-  `.`-prefixed names as Spark's reader does. tip() and first() read
-  the parquet footers' `height` statistics with pyarrow, and the
-  column itself only where a row group has none (JSON-lines files are
-  parsed), with no Spark job. range() reads only the row groups whose
-  statistics can hold the pass's heights and hashes. frames() is the
-  same pass as Spark DataFrames, for a pass too long for the driver:
-  a height predicate that partition-prunes, so the whole lag runs as
-  one distributed job.
+  `.`-prefixed names as Spark's reader does. With no Spark job:
+  tip() and first() read the parquet footers' `height` statistics, and
+  the column itself only where a row group has none; range() reads
+  only the row groups whose statistics can hold the pass's heights and
+  hashes. A JSON-lines file has no statistics: its height bounds are
+  parsed once per source, and a pass parses every transaction file,
+  keeping only the rows of its hashes.
 - RpcBlockSource: driver-side point fetches over an RpcClient — the
   literal reference topology, for near-tip following where only a
   handful of new blocks exist per tick. A pass fetches each block and
-  each transaction once into Arrow tables, so it holds at most
-  PASS_LIMIT blocks in driver memory and always runs as a driver pass.
+  each transaction once into Arrow tables.
 
 RpcClient is a protocol with two implementations: HttpRpcClient (a
 stdlib-urllib JSON-RPC 2.0 client speaking the blockchain-node API the
@@ -54,10 +54,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.json as pj
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..etl.schemas import BLOCK_ARROW, BLOCK_SCHEMA, TXN_ARROW, TXN_SCHEMA
+from ..etl.schemas import BLOCK_ARROW, TXN_ARROW
 
 
 def _landed_files(path: str) -> list[str]:
@@ -82,39 +80,35 @@ def _landed_files(path: str) -> list[str]:
 
 class _LandedTable:
     """One landed table read with pyarrow, in chunks: a parquet row
-    group, or a whole JSON-lines file. The file list and footers are
-    read once per instance."""
+    group, or a whole JSON-lines file. The file list, the parquet
+    footers and the chunks' bounds are read once per instance; rows are
+    read per call and not kept."""
 
     def __init__(self, path: str, schema: pa.Schema, as_json: bool):
         self.schema, self.as_json = schema, as_json
         self.files = _landed_files(path)
-        self._loaded: dict[str, object] = {}
+        self._footers: dict[str, pq.FileMetaData] = {}
+        self._bounds: dict[str, list] = {}
 
-    def _load(self, f: str):
-        # JSON-lines: the parsed file; parquet: its footer
-        if f not in self._loaded:
-            if self.as_json:
-                opts = pj.ParseOptions(explicit_schema=self.schema, unexpected_field_behavior="ignore")
-                self._loaded[f] = pj.read_json(f, parse_options=opts)
-            else:
-                self._loaded[f] = pq.read_metadata(f)
-        return self._loaded[f]
+    def _footer(self, f: str) -> pq.FileMetaData:
+        if f not in self._footers:
+            self._footers[f] = pq.read_metadata(f)
+        return self._footers[f]
 
     def chunks(self) -> list[tuple[str, int | None]]:
-        out = []
-        for f in self.files:
-            if self.as_json:
-                out.append((f, None))
-            else:
-                md = self._load(f)
-                out += [(f, rg) for rg in range(md.num_row_groups) if md.row_group(rg).num_rows]
-        return out
+        if self.as_json:
+            return [(f, None) for f in self.files]
+        return [
+            (f, rg) for f in self.files
+            for rg in range(self._footer(f).num_row_groups) if self._footer(f).row_group(rg).num_rows
+        ]
 
     def read(self, chunk: tuple[str, int | None], columns: list[str] | None = None) -> pa.Table:
         f, rg = chunk
         names = columns or self.schema.names
         if rg is None:
-            t = self._load(f)
+            opts = pj.ParseOptions(explicit_schema=self.schema, unexpected_field_behavior="ignore")
+            t = pj.read_json(f, parse_options=opts)
         else:
             with pq.ParquetFile(f) as pf:
                 t = pf.read_row_group(rg, columns=names)
@@ -126,7 +120,7 @@ class _LandedTable:
         f, rg = chunk
         if rg is None:
             return None
-        meta = self._load(f).row_group(rg)
+        meta = self._footer(f).row_group(rg)
         for i in range(meta.num_columns):
             if meta.column(i).path_in_schema == column:
                 st = meta.column(i).statistics
@@ -137,20 +131,23 @@ class _LandedTable:
         """(chunk, min, max) of `column` for every chunk holding a
         non-null value: the footer's statistics, else the column
         itself."""
-        out = []
-        for chunk in self.chunks():
-            mm = self.stats(chunk, column)
-            if mm is None:
-                v = pc.min_max(self.read(chunk, [column])[column])
-                mm = (v["min"].as_py(), v["max"].as_py())
-            if mm[0] is not None:
-                out.append((chunk, *mm))
-        return out
+        if column not in self._bounds:
+            out = []
+            for chunk in self.chunks():
+                mm = self.stats(chunk, column)
+                if mm is None:
+                    v = pc.min_max(self.read(chunk, [column])[column])
+                    mm = (v["min"].as_py(), v["max"].as_py())
+                if mm[0] is not None:
+                    out.append((chunk, *mm))
+            self._bounds[column] = out
+        return self._bounds[column]
 
     def rows_with(self, column: str, values: list) -> pa.Table:
         """The rows whose `column` is in `values`: a chunk whose
-        statistics rule every value out is not read, and a chunk is read
-        whole only when its `column` holds a match."""
+        statistics rule every value out is not read, a parquet row group
+        is read whole only when its `column` holds a match, and only the
+        matching rows are kept."""
         wanted = sorted(set(values))
         value_set = pa.array(wanted, type=self.schema.field(column).type)
         parts = [self.schema.empty_table()]
@@ -160,6 +157,10 @@ class _LandedTable:
                 i = bisect.bisect_left(wanted, mm[0])
                 if i == len(wanted) or wanted[i] > mm[1]:
                     continue
+            if self.as_json:
+                t = self.read(chunk)
+                parts.append(t.filter(pc.is_in(t[column], value_set=value_set)))
+                continue
             mask = pc.is_in(self.read(chunk, [column])[column], value_set=value_set)
             if pc.any(mask).as_py():
                 parts.append(self.read(chunk).filter(mask))
@@ -170,10 +171,7 @@ class LandedBlockSource:
     """Blocks and transactions landed as parquet or JSON-lines files
     (`as_json`); see the module docstring."""
 
-    PASS_LIMIT = None
-
     def __init__(self, blocks_path: str, txns_path: str, as_json: bool):
-        self.paths, self.as_json = (blocks_path, txns_path), as_json
         self.blocks = _LandedTable(blocks_path, BLOCK_ARROW, as_json)
         self.txns = _LandedTable(txns_path, TXN_ARROW, as_json)
 
@@ -192,28 +190,15 @@ class LandedBlockSource:
         return min((lo for _, lo, _ in self.blocks.bounds("height")), default=None)
 
     def range(self, lo: int, hi: int) -> tuple[pa.Table, pa.Table]:
-        parts = [self.blocks.schema.empty_table()] + [
-            self.blocks.read(chunk)
+        in_pass = (pc.field("height") >= lo) & (pc.field("height") <= hi)
+        blocks = pa.concat_tables([self.blocks.schema.empty_table()] + [
+            self.blocks.read(chunk).filter(in_pass)
             for chunk, b_lo, b_hi in self.blocks.bounds("height")
             if b_lo <= hi and b_hi >= lo
-        ]
-        blocks = pa.concat_tables(parts)
-        blocks = blocks.filter((pc.field("height") >= lo) & (pc.field("height") <= hi))
+        ])
         refs = pc.list_flatten(blocks["transactions"])
         hashes = pc.struct_field(refs, "hash").drop_null().to_pylist() if len(refs) else []
         return blocks, self.txns.rows_with("hash", hashes)
-
-    def frames(self, spark: SparkSession, lo: int, hi: int) -> tuple[DataFrame, DataFrame]:
-        """The pass as DataFrames. The height predicate prunes
-        partitions at the source (src/follower.rs:86's
-        `h > self.height`, vectorized); the transforms join the
-        transactions the range's blocks name."""
-        blocks, txns = (
-            spark.read.schema(schema).json(path) if self.as_json
-            else spark.read.schema(schema).parquet(path)
-            for schema, path in zip((BLOCK_SCHEMA, TXN_SCHEMA), self.paths)
-        )
-        return blocks.where(F.col("height").between(lo, hi)), txns
 
 
 class RpcClient(Protocol):
@@ -299,13 +284,7 @@ class FakeRpcClient:
 
 class RpcBlockSource:
     """Near-tip follower source over a live node: point RPCs on the
-    driver into Arrow tables for the driver pass."""
-
-    # Blocks fetched per pass: keeps driver memory flat while catching
-    # up from far behind. A pass of at most this many blocks, from any
-    # source, runs on the driver with no Spark job
-    # (etl/pipeline.py IncrementalFollower).
-    PASS_LIMIT = 500
+    driver into Arrow tables for the follower's pass."""
 
     def __init__(self, client: RpcClient):
         self.client = client

@@ -72,15 +72,3 @@ def land():
         return LandedBlockSource(*paths, as_json)
 
     return land
-
-
-@pytest.fixture(params=["driver", "spark"])
-def pass_path(request, monkeypatch):
-    """Run the follower's passes on the driver path (the program's
-    bound) or on the Spark path, by lowering the driver pass's bound
-    below every pass."""
-    from helium_etl_lite_spark.sources.block_source import RpcBlockSource
-
-    if request.param == "spark":
-        monkeypatch.setattr(RpcBlockSource, "PASS_LIMIT", 0)
-    return request.param

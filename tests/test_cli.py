@@ -128,7 +128,7 @@ def test_atomic_once_and_vacuum(spark, chain_dirs, tmp_path):
     assert m is not None and m["height"] == 1059
     rows_before = read_snapshot(spark, out, "rewards").count()
     # replay the whole span: same data, new version owning every range
-    f = cli._follower(spark, cfg)
+    f = cli._follower(cfg)
     f._commit_range(1000, 1059, m["first_block"])
     assert store.current()["version"] == m["version"] + 1
     removed = cli.cmd_vacuum({"out_dir": out}, keep_versions=1)
@@ -259,7 +259,7 @@ def test_sql_at_version_time_travels_atomic_sink(spark, chain_dirs, tmp_path, ca
     cli.cmd_once(spark, cfg)
     v1 = SnapshotStore(out).current()["version"]
     n_v1 = cli.cmd_sql(spark, cfg, "SELECT COUNT(*) AS n FROM rewards")
-    f = cli._follower(spark, cfg)
+    f = cli._follower(cfg)
     f._commit_range(1000, 1059, SnapshotStore(out).current()["first_block"])
     capsys.readouterr()
     n_tt = cli.cmd_sql(

@@ -144,7 +144,7 @@ def test_manifest_from_before_fragment_commits_is_refused(tmp_path):
 
         first = tip
 
-    follower = IncrementalFollower(None, NoSource(), FollowerConfig(out_dir=out, backfill=True))
+    follower = IncrementalFollower(NoSource(), FollowerConfig(out_dir=out, backfill=True))
     for call in (
         follower.catch_up,
         lambda: serving.register_views(None, out),
@@ -309,7 +309,7 @@ def test_start_restores_the_sigint_handler(monkeypatch):
 
     calls = []
 
-    def catch_up(spark, cfg):
+    def catch_up(cfg):
         calls.append(1)
         if len(calls) == 2:
             raise KeyboardInterrupt  # a BaseException: leaves the loop

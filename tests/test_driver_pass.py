@@ -1,9 +1,9 @@
-"""The driver pass (etl/pipeline.py): a pass of at most
-RpcBlockSource.PASS_LIMIT blocks reads the landed files with pyarrow,
-runs etl/arrow_transforms.py and commits through etl/snapshot.py
-commit_arrow, with no Spark job. It must store what the Spark pass
-(build_outputs plus commit_batch_atomic) stores: the same rows, audit
-and manifest spans, and fail with the same errors (fast lane)."""
+"""The follower's pass (etl/pipeline.py): it reads the landed files with
+pyarrow, runs etl/arrow_transforms.py and commits through
+etl/snapshot.py commit_arrow, with no Spark job. It must store what the
+Spark reference (build_outputs over Spark's read of the same files,
+committed by commit_batch_atomic) stores: the same rows, audit and
+manifest spans, and fail with the same errors (fast lane)."""
 
 from __future__ import annotations
 
@@ -13,12 +13,14 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from helium_etl_lite_spark import serving
 from helium_etl_lite_spark.etl import fixtures, snapshot
-from helium_etl_lite_spark.etl.pipeline import FollowerConfig, IncrementalFollower
-from helium_etl_lite_spark.etl.schemas import BLOCK_ARROW, TXN_ARROW
-from helium_etl_lite_spark.etl.snapshot import SnapshotStore
+from helium_etl_lite_spark.etl.pipeline import CursorStore, FollowerConfig, IncrementalFollower
+from helium_etl_lite_spark.etl.schemas import BLOCK_ARROW, BLOCK_SCHEMA, SENTINEL, TXN_ARROW, TXN_SCHEMA
+from helium_etl_lite_spark.etl.snapshot import SnapshotStore, commit_batch_atomic
+from helium_etl_lite_spark.etl.transforms import build_outputs
 from helium_etl_lite_spark.sources.block_source import (
     FakeRpcClient,
     LandedBlockSource,
@@ -65,34 +67,56 @@ def _stored(out):
     return rows, spans, (m["height"], m["first_block"])
 
 
-def _follow(spark, source, out, mode, path, filters=None, passes=None, **cfg):
-    """Commit `passes` ([(lo, hi)], else one catch_up) on `path`; return
-    the audit of each pass."""
+def _follow(source, out, mode, passes, filters=None, **cfg):
+    """Commit each (lo, hi) of `passes` through the follower; return the
+    audit of each pass."""
     f = IncrementalFollower(
-        spark, source, FollowerConfig(mode=mode, out_dir=out, backfill=True, **cfg),
-        filters=filters,
+        source, FollowerConfig(mode=mode, out_dir=out, backfill=True, **cfg), filters=filters,
     )
-    limit = RpcBlockSource.PASS_LIMIT
-    RpcBlockSource.PASS_LIMIT = limit if path == "driver" else 0
-    try:
-        if passes is None:
-            f.catch_up()
-            return [f.last_audit]
-        first = f.init_cursor()[1]
-        audits = []
-        for lo, hi in passes:
-            f._commit_range(lo, hi, first)
-            audits.append(f.last_audit)
-        return audits
-    finally:
-        RpcBlockSource.PASS_LIMIT = limit
+    first = f.init_cursor()[1]
+    audits = []
+    for lo, hi in passes:
+        f._commit_range(lo, hi, first)
+        audits.append(f.last_audit)
+    return audits
 
 
-def _both(spark, tmp_path, source, mode, **kw):
+def _reference(spark, root, out, mode, passes, as_json=False, filters=None, block_range_size=1000):
+    """The Spark reference of _follow over the files landed under `root`:
+    each pass is build_outputs over Spark's read of them, committed by
+    commit_batch_atomic; return the audit of each pass."""
+    def read(schema, sub):
+        reader = spark.read.schema(schema)
+        path = os.path.join(str(root), sub)
+        return reader.json(path) if as_json else reader.parquet(path)
+
+    first = CursorStore(out).read()[1]
+    filters = None if filters is None else spark.createDataFrame(filters)
+    audits = []
+    for lo, hi in passes:
+        blocks = read(BLOCK_SCHEMA, "blocks").where(F.col("height").between(lo, hi))
+        tables = build_outputs(mode, blocks, read(TXN_SCHEMA, "txns"), filters)
+        commit_batch_atomic(spark, out, tables, lo, hi, height=hi, first_block=first,
+                            range_size=block_range_size)
+        audits.append(tables["rewards"].agg(
+            F.count(F.lit(1)).alias("n_rewards"),
+            F.coalesce(F.sum("amount"), F.lit(0)).alias("amount_total"),
+            F.coalesce(F.sum(F.when(F.col("account") == SENTINEL, 1).otherwise(0)), F.lit(0))
+            .alias("sentinel_accounts"),
+        ).first().asDict())
+    return audits
+
+
+def _both(spark, tmp_path, source, mode, passes, as_json=False, **kw):
+    """{"driver": ..., "spark": ...}: (audits, rows, spans, cursor) of the
+    follower and of the reference, each from the same seeded cursor."""
     got = {}
-    for path in ("driver", "spark"):
+    for path, run in (("driver", lambda out: _follow(source, out, mode, passes, **kw)),
+                      ("spark", lambda out: _reference(spark, tmp_path, out, mode, passes,
+                                                       as_json=as_json, **kw))):
         out = str(tmp_path / f"out-{path}-{mode}")
-        got[path] = (_follow(spark, source, out, mode, path, **kw), *_stored(out))
+        CursorStore(out).write(passes[0][0] - 1, passes[0][0])
+        got[path] = (run(out), *_stored(out))
     return got
 
 
@@ -155,7 +179,7 @@ def test_a_failed_rpc_fetch_fails_the_pass_before_any_commit(tmp_path):
     blocks = {h: _block(h, [("payment_v2", f"p-{h}")]) for h in range(1, 6)}
     txns = {f"p-{h}": {"amount": h} for h in range(1, 6) if h != 4}
     out = str(tmp_path / "out")
-    f = IncrementalFollower(None, RpcBlockSource(FakeRpcClient(blocks, txns)),
+    f = IncrementalFollower(RpcBlockSource(FakeRpcClient(blocks, txns)),
                             FollowerConfig(mode="full", out_dir=out))
     SnapshotStore(out).publish({"version": 1, "height": 1, "first_block": 1, "tables": {}})
     with pytest.raises(KeyError, match="p-4"):
@@ -164,19 +188,20 @@ def test_a_failed_rpc_fetch_fails_the_pass_before_any_commit(tmp_path):
     assert not os.path.exists(os.path.join(out, "transactions"))
 
 
-# ------------------------------------------------ driver pass vs Spark
+# ------------------------------------------- the pass vs the Spark reference
 
 
 @pytest.mark.parametrize("as_json", [False, True], ids=["parquet", "json"])
 @pytest.mark.parametrize("mode", MODES)
-def test_fixture_chain_matches_the_spark_pass(spark, tmp_path, chain, mode, as_json):
+def test_fixture_chain_matches_the_spark_reference(spark, tmp_path, chain, mode, as_json):
     # 15-block passes into 40-block ranges: every range takes at most
     # two fragments, so no fold decision (which reads each writer's own
-    # byte sizes) can tell the paths apart.
+    # byte sizes) can tell the writers apart.
     blocks, txns, filters = chain
     source = _land(tmp_path, blocks, txns, as_json)
-    got = _both(spark, tmp_path, source, mode, filters=filters if mode == "filters" else None,
-                max_blocks_per_batch=15, block_range_size=40)
+    got = _both(spark, tmp_path, source, mode, [(lo, lo + 14) for lo in range(1000, 1060, 15)],
+                as_json=as_json, filters=filters if mode == "filters" else None,
+                block_range_size=40)
     assert got["driver"] == got["spark"]
     audit, rows, spans, cursor = got["driver"]
     assert rows["rewards"] and cursor == (1059, 1000)
@@ -223,11 +248,11 @@ EDGE_BLOCKS = [
 
 
 @pytest.mark.parametrize("mode", MODES)
-def test_edge_payloads_match_the_spark_pass(spark, tmp_path, mode):
+def test_edge_payloads_match_the_spark_reference(spark, tmp_path, mode):
     source = _land(tmp_path, EDGE_BLOCKS, EDGE_TXNS)
     filters = pa.table({"type": ["account", "gateway", "account"], "value": ["a1", "g1", None]})
-    got = _both(spark, tmp_path, source, mode, filters=filters if mode == "filters" else None,
-                passes=[(2000, 2007), (2008, 2009)])
+    got = _both(spark, tmp_path, source, mode, [(2000, 2007), (2008, 2009)],
+                filters=filters if mode == "filters" else None)
     assert got["driver"] == got["spark"]
     audits, rows = got["driver"][:2]
     # the second pass has no reward rows: an explicit zero audit
@@ -257,16 +282,18 @@ def test_edge_payloads_match_the_spark_pass(spark, tmp_path, mode):
     ],
     ids=["unknown-type", "no-payload", "blank-payload", "no-payment-payload"],
 )
-def test_errors_match_the_spark_pass(spark, tmp_path, mode, blocks, txns, error):
+def test_errors_match_the_spark_reference(spark, tmp_path, mode, blocks, txns, error):
     source = _land(tmp_path, blocks, txns)
-    filters = pa.table({"type": ["account"], "value": ["a1"]})
+    filters = pa.table({"type": ["account"], "value": ["a1"]}) if mode == "filters" else None
     # a missing non-reward payload fails only the full mode, which stores it
     fails = mode == "full" or "missing payload" not in error
     for path in ("driver", "spark"):
         out = str(tmp_path / f"out-{path}")
-        SnapshotStore(out).publish({"version": 1, "height": 0, "first_block": 1, "tables": {}})
-        run = lambda: _follow(spark, source, out, mode, path,  # noqa: E731
-                              filters=filters if mode == "filters" else None)
+        CursorStore(out).write(0, 1)
+        if path == "driver":
+            run = lambda: _follow(source, out, mode, [(1, 1)], filters=filters)  # noqa: E731
+        else:
+            run = lambda: _reference(spark, tmp_path, out, mode, [(1, 1)], filters=filters)  # noqa: E731
         if fails:
             with pytest.raises(Exception, match=error):
                 run()
@@ -276,13 +303,13 @@ def test_errors_match_the_spark_pass(spark, tmp_path, mode, blocks, txns, error)
             assert SnapshotStore(out).current()["height"] == 1
 
 
-# ------------------------------------------------------ the Arrow writer
+# ------------------------------------------------------------ the writers
 
 
 def test_transactions_fragments_cluster_by_type(tmp_path):
     source = _land(tmp_path, EDGE_BLOCKS[4:], EDGE_TXNS)
     out = str(tmp_path / "out")
-    _follow(None, source, out, "full", "driver")
+    _follow(source, out, "full", [(2004, 2009)])
     m = SnapshotStore(out).current()
     (f,) = serving._fragment_files(out, m, "transactions")
     meta = pq.read_metadata(f)
@@ -304,7 +331,7 @@ def test_a_crash_between_write_and_publish_leaves_the_snapshot_whole(tmp_path, m
     txns = [_txn(f"p-{h}", "payment_v2", {"amount": h}) for h in range(1, 21)]
     source = _land(tmp_path, blocks, txns)
     out = str(tmp_path / "out")
-    _follow(None, source, out, "full", "driver", passes=[(1, 10)])
+    _follow(source, out, "full", [(1, 10)])
     before = _stored(out)
 
     def crash(self, manifest):
@@ -313,7 +340,7 @@ def test_a_crash_between_write_and_publish_leaves_the_snapshot_whole(tmp_path, m
     with monkeypatch.context() as m:
         m.setattr(SnapshotStore, "publish", crash)
         with pytest.raises(OSError, match="crash"):
-            _follow(None, source, out, "full", "driver", passes=[(11, 20)])
+            _follow(source, out, "full", [(11, 20)])
     # the attempt's fragment is on disk, unpublished
     orphan = os.path.join(out, "transactions", "v=3", "block_range=0")
     assert os.listdir(orphan)
@@ -321,15 +348,63 @@ def test_a_crash_between_write_and_publish_leaves_the_snapshot_whole(tmp_path, m
     # a leftover file of a crashed attempt must not be read as rows
     pq.write_table(pq.read_table(os.path.join(orphan, os.listdir(orphan)[0])),
                    os.path.join(orphan, "part-stray.parquet"))
-    _follow(None, source, out, "full", "driver", passes=[(11, 20)])
+    _follow(source, out, "full", [(11, 20)])
     rows = _stored(out)[0]
     assert [r[2] for r in rows["transactions"]] == sorted(f"p-{h}" for h in range(1, 21))
     assert os.listdir(orphan) == ["part-00000.parquet"]
 
 
-def test_the_driver_pass_starts_no_spark_job(tmp_path):
-    # spark=None: any Spark call on the pass would raise
-    source = _land(tmp_path, EDGE_BLOCKS, EDGE_TXNS)
+def test_a_compacted_transactions_fragment_keeps_the_order(spark, tmp_path):
+    # The Spark writer (compaction, batch-id stores) sorts a transactions
+    # fragment as the Arrow writer does; two passes' fragments
+    # concatenated would not be sorted by type.
+    source = _land(tmp_path, EDGE_BLOCKS[4:], EDGE_TXNS)
     out = str(tmp_path / "out")
-    assert IncrementalFollower(None, source, FollowerConfig(mode="full", out_dir=out, backfill=True)).catch_up() == 10
+    _follow(source, out, "full", [(2004, 2006), (2007, 2009)])
+    m = snapshot.compact_snapshot(spark, out)
+    assert [f[1:3] for f in m["tables"]["transactions"]["2"]] == [[2004, 2009]]
+    order = [(c, "ascending") for c in snapshot.TRANSACTIONS_ORDER]
+    for f in serving._fragment_files(out, m, "transactions"):
+        t = pq.read_table(f)
+        assert t.num_rows and t.to_pylist() == t.sort_by(order).to_pylist()
+
+
+def test_a_json_pass_keeps_only_the_rows_of_its_hashes(tmp_path):
+    # A JSON-lines file has no statistics to skip it by: the pass parses
+    # every transaction file, but holds no parsed file after the call.
+    blocks = [_block(h, [("payment_v2", f"p-{h}")]) for h in range(1, 2001)]
+    txns = [_txn(f"p-{h}", "payment_v2", {"memo": "x" * 1000}) for h in range(1, 2001)]
+    source = _land(tmp_path, blocks, txns, as_json=True)
+    assert source.tip() == 2000
+    base = pa.total_allocated_bytes()
+    got_blocks, got_txns = source.range(5, 6)
+    assert got_blocks["height"].to_pylist() == [5, 6]
+    assert got_txns["hash"].to_pylist() == ["p-5", "p-6"]
+    # the landed payloads are about 2 MB
+    assert pa.total_allocated_bytes() - base < 100_000
+
+
+def test_cli_once_starts_no_spark_session_and_no_job(spark, tmp_path, monkeypatch):
+    # `cli once` opens no session, and its passes run no job on the
+    # session the process already has.
+    from helium_etl_lite_spark import cli
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("once started a SparkSession")
+
+    monkeypatch.setattr(cli, "get_spark", no_session)
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(), default=-1)
+
+    spark.range(1).count()
+    before = last_job()
+    _land(tmp_path, EDGE_BLOCKS, EDGE_TXNS)
+    out = str(tmp_path / "out")
+    cfg = tmp_path / "s.toml"
+    cfg.write_text(f'blocks_path = "{tmp_path / "blocks"}"\ntxns_path = "{tmp_path / "txns"}"\n'
+                   f'out_dir = "{out}"\nmode = "full"\nbackfill = true\n')
+    assert cli.main(["once", "--config", str(cfg)]) == 0
     assert SnapshotStore(out).current()["height"] == 2009
+    assert last_job() == before

@@ -119,10 +119,10 @@ class TestTransforms:
 
 
 class TestFollower:
-    def test_catch_up_and_cursor(self, spark, chain, land, pass_path, tmp_path):
+    def test_catch_up_and_cursor(self, spark, chain, land, tmp_path):
         blocks, txns = chain
         cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=str(tmp_path / "out"))
-        f = IncrementalFollower(spark, land(blocks, txns, tmp_path), cfg)
+        f = IncrementalFollower(land(blocks, txns, tmp_path), cfg)
         n = f.catch_up()
         assert n == 120
         height, first = f.cursor.read()
@@ -131,11 +131,11 @@ class TestFollower:
         # second pass is a no-op (cursor at tip)
         assert f.catch_up() == 0
 
-    def test_replay_is_idempotent(self, spark, chain, land, pass_path, tmp_path):
+    def test_replay_is_idempotent(self, spark, chain, land, tmp_path):
         blocks, txns = chain
         out_dir = str(tmp_path / "out")
         cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir)
-        f = IncrementalFollower(spark, land(blocks, txns, tmp_path), cfg)
+        f = IncrementalFollower(land(blocks, txns, tmp_path), cfg)
         f.catch_up()
         expected = read_snapshot(spark, out_dir, "rewards").count()
         # rewind the cursor over committed data, rerun
@@ -144,13 +144,13 @@ class TestFollower:
         got = read_snapshot(spark, out_dir, "rewards").count()
         assert got == expected  # replay replaced, never duplicated
 
-    def test_bounded_batches(self, spark, chain, land, pass_path, tmp_path):
+    def test_bounded_batches(self, spark, chain, land, tmp_path):
         blocks, txns = chain
         cfg = FollowerConfig(
             mode="rewards", backfill=True, out_dir=str(tmp_path / "out"),
             max_blocks_per_batch=50,
         )
-        f = IncrementalFollower(spark, land(blocks, txns, tmp_path), cfg)
+        f = IncrementalFollower(land(blocks, txns, tmp_path), cfg)
         assert f.catch_up() == 120
         assert f.cursor.read()[0] == 1119
         # one seed publish + ceil(120/50)=3 pass commits
@@ -165,13 +165,13 @@ class TestFollower:
         tip = source.tip
         source.tip = lambda: probes.append(1) or tip()
         cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=str(tmp_path / "out"))
-        assert IncrementalFollower(spark, source, cfg).catch_up() == 120
+        assert IncrementalFollower(source, cfg).catch_up() == 120
         assert len(probes) == 1
 
     def test_no_backfill_starts_at_tip(self, spark, chain, land, tmp_path):
         blocks, txns = chain
         cfg = FollowerConfig(mode="rewards", backfill=False, out_dir=str(tmp_path / "out"))
-        f = IncrementalFollower(spark, land(blocks, txns, tmp_path), cfg)
+        f = IncrementalFollower(land(blocks, txns, tmp_path), cfg)
         height, first = f.init_cursor()
         assert first == 1119 and height == 1118  # cursor = first-1
 
@@ -335,10 +335,10 @@ class TestStaleRangeDeletion:
         assert os.path.exists(os.path.join(path, "block_range=1"))
 
 
-def test_ingest_audit_rides_the_landing_action(spark, land, pass_path, tmp_path):
-    # Observation metrics must reflect exactly the landed batch — no
-    # extra job, no approximation — including the sentinel-account count
-    # (the '1Wh4bh' coalesce, src/reward.rs:22-33).
+def test_ingest_audit_rides_the_landing_action(spark, land, tmp_path):
+    # The audit counters must reflect exactly the landed batch — no
+    # approximation — including the sentinel-account count (the
+    # '1Wh4bh' coalesce, src/reward.rs:22-33).
     from helium_etl_lite_spark.etl import fixtures
     from helium_etl_lite_spark.etl.pipeline import FollowerConfig, IncrementalFollower
     from helium_etl_lite_spark.etl.schemas import SENTINEL
@@ -348,11 +348,11 @@ def test_ingest_audit_rides_the_landing_action(spark, land, pass_path, tmp_path)
         mode="rewards", backfill=True, out_dir=str(tmp_path / "out"),
         block_range_size=20,
     )
-    f = IncrementalFollower(spark, land(blocks, txns, tmp_path), cfg)
+    f = IncrementalFollower(land(blocks, txns, tmp_path), cfg)
     f.catch_up()
     assert hasattr(f, "last_audit")
     landed = read_snapshot(spark, str(tmp_path / "out"), "rewards")
-    # the whole chain lands as ONE range batch here, so the audit must
+    # the whole chain lands as ONE pass here, so the audit must
     # equal the landed totals exactly
     assert f.last_audit["n_rewards"] == landed.count()
     assert f.last_audit["amount_total"] == (

@@ -99,16 +99,16 @@ def test_a_follower_range_folds_as_it_fills(spark, tmp_path):
         ]
 
 
-def test_a_followed_range_folds_on_either_pass_path(spark, land, pass_path, tmp_path):
-    # 15 four-block passes into one block range, through the follower on
-    # the driver path and on the Spark path: each table's range stays
-    # tiered, some commit folded, and the store holds every row once.
+def test_a_followed_range_folds(spark, land, tmp_path):
+    # 15 four-block passes into one block range, through the follower:
+    # each table's range stays tiered, some commit folded, and the store
+    # holds build_outputs's rows once.
     from helium_etl_lite_spark.etl.transforms import build_outputs
 
     blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
     out = str(tmp_path / "out")
     f = IncrementalFollower(
-        spark, land(blocks, txns, tmp_path),
+        land(blocks, txns, tmp_path),
         FollowerConfig(mode="full", out_dir=out, backfill=True, max_blocks_per_batch=4),
     )
     assert f.catch_up() == 60
@@ -116,8 +116,7 @@ def test_a_followed_range_folds_on_either_pass_path(spark, land, pass_path, tmp_
     _assert_tiered(frags)
     assert any(hi - lo + 1 > 4 for _, lo, hi, _ in frags), frags
     want = build_outputs("full", blocks, txns)
-    for table, cols in (("rewards", None), ("transactions", ["hash"])):
-        got = read_snapshot(spark, out, table)
-        expected = want[table] if cols is None else want[table].select(cols).distinct()
-        assert got.count() == expected.count()
-        assert got.select(*(cols or want[table].columns)).exceptAll(expected).count() == 0
+    for table in ("rewards", "transactions"):
+        got = read_snapshot(spark, out, table).select(*want[table].columns)
+        assert got.count() == want[table].count()
+        assert got.exceptAll(want[table]).count() == 0

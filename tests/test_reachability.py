@@ -222,6 +222,11 @@ ONE_VALUE = {
     "etl.fixtures.make_chain.include_unknown_type": "a test adds an unknown "
     "transaction type to reach the enum validation",
     "etl.fixtures.make_chain.seed": "property tests draw chains from other seeds",
+    "etl.snapshot.commit_batch_atomic.range_size": "tests set 10 to 100 blocks "
+    "so a few rows span several block ranges",
+    "etl.transforms.build_outputs.filters": "the Spark reference of the follower's "
+    "transforms: tests set it to check filters mode against the follower; its "
+    "program caller, the perfbench transforms probe, runs full mode",
     "operators.bpe.train_bpe.num_merges": "tests set 5 to 30 merges, a vocabulary "
     "their few-sentence corpora can fill",
     "operators.dedup.connected_components.dst_col": "equal-closure tests build "

@@ -69,7 +69,7 @@ def store(spark, land, tmp_path_factory):
     out_dir = str(root / "out")
     blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=TIP - 1000 + 1)
     IncrementalFollower(
-        spark, land(blocks, txns, root),
+        land(blocks, txns, root),
         FollowerConfig(mode="full", backfill=True, out_dir=out_dir, block_range_size=RANGE),
     ).catch_up()
     _commit(

@@ -35,7 +35,7 @@ def served(spark, land, tmp_path_factory):
     out_dir = str(root / "out")
     blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=120)
     f = IncrementalFollower(
-        spark, land(blocks, txns, root),
+        land(blocks, txns, root),
         FollowerConfig(mode="full", backfill=True, out_dir=out_dir),
     )
     f.catch_up()
@@ -179,7 +179,7 @@ def test_register_views_raises_on_corrupt_transactions(spark, land, tmp_path):
     blocks, txns = fixtures.make_chain(spark, first_block=1000, n_blocks=60)
     out_dir = str(tmp_path / "out")
     IncrementalFollower(
-        spark, land(blocks, txns, tmp_path),
+        land(blocks, txns, tmp_path),
         FollowerConfig(mode="rewards", out_dir=out_dir, backfill=True),
     ).catch_up()
     # rewards-only mode: no transactions table -> view quietly absent

@@ -67,22 +67,18 @@ class TestSources:
         blocks.write.mode("overwrite").json(bj)
         txns.write.mode("overwrite").json(tj)
         out = str(tmp_path / "out")
-        src = cli._follower(spark, {"blocks_path": bp, "txns_path": tp, "out_dir": out}).source
+        src = cli._follower({"blocks_path": bp, "txns_path": tp, "out_dir": out}).source
         jsrc = cli._follower(
-            spark,
             {"blocks_path": bj, "txns_path": tj, "out_dir": out, "source_format": "json"},
         ).source
         for s in (src, jsrc):
             assert s.tip() == 1039 and s.first() == 1000
             assert s.range(1010, 1019)[0].num_rows == 10
-            assert s.frames(spark, 1010, 1019)[0].count() == 10
-        # identical pipeline output from either source, on either path
+        # identical pipeline output from either source
         want = sorted(map(tuple, transforms.build_outputs("rewards", blocks, txns)["rewards"].collect()))
         for s in (src, jsrc):
-            spark_out = transforms.build_outputs("rewards", *s.frames(spark, 1000, 1039))["rewards"]
-            driver_out = build_outputs_arrow("rewards", *s.range(1000, 1039))["rewards"]
-            assert sorted(map(tuple, spark_out.collect())) == want
-            assert sorted(tuple(r.values()) for r in driver_out.to_pylist()) == want
+            got = build_outputs_arrow("rewards", *s.range(1000, 1039))["rewards"]
+            assert sorted(tuple(r.values()) for r in got.to_pylist()) == want
 
     def test_rpc_source_matches_dataframe_path(self, spark):
         blocks, txns, blocks_by_h, txns_by_hash = _chain_as_dicts(spark)
@@ -109,7 +105,7 @@ class TestSources:
         out_dir = str(tmp_path / "out")
         CursorStore(out_dir).write(1019, 1000)
         cfg = FollowerConfig(mode="rewards", out_dir=out_dir, max_blocks_per_batch=8)
-        assert IncrementalFollower(spark, RpcBlockSource(client), cfg).catch_up() == 20
+        assert IncrementalFollower(RpcBlockSource(client), cfg).catch_up() == 20
         assert CursorStore(out_dir).read() == (1039, 1000)
         assert client.calls["height"] == 1
         assert client.calls["get_block_raw"] == 20
@@ -181,14 +177,14 @@ class TestHttpRpc:
 
             out_dir = str(tmp_path / "rpc_out")
             cfg = FollowerConfig(mode="rewards", backfill=True, out_dir=out_dir)
-            assert IncrementalFollower(spark, source, cfg).catch_up() == 40
+            assert IncrementalFollower(source, cfg).catch_up() == 40
             m = SnapshotStore(out_dir).current()
             assert m["height"] == 1039 and m["first_block"] == 1000
             want = transforms.build_outputs("rewards", blocks, txns)["rewards"]
             got = read_snapshot(spark, out_dir, "rewards")
             assert got.count() == want.count()
             assert got.select(*want.columns).exceptAll(want).count() == 0
-            assert IncrementalFollower(spark, source, cfg).catch_up() == 0  # at tip: no-op
+            assert IncrementalFollower(source, cfg).catch_up() == 0  # at tip: no-op
         finally:
             srv.shutdown()
 

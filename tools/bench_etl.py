@@ -13,7 +13,8 @@ iteration with 1 + N_txn JSON-RPC round trips and 2 Postgres round
 trips per reward row, single-threaded (reference src/block_processor.rs:29,58,130,
 src/reward.rs:20,38) — structurally bounded to ~10 blocks/s even on a
 zero-latency network, and ~1 block/s at realistic RPC latency. The
-Spark pipeline ingests the whole lagging range as one distributed job.
+follower ingests the lagging range in passes of up to 500 blocks, each
+one Arrow transform in the driver and one commit, with no Spark job.
 """
 
 from __future__ import annotations
@@ -49,9 +50,7 @@ def main():
             mode=mode, out_dir=f"{work}/out", backfill=True, max_blocks_per_batch=None
         )
         filters = fixtures.make_filters(spark).toArrow() if mode == "filters" else None
-        follower = IncrementalFollower(
-            spark, LandedBlockSource(bp, tp, False), cfg, filters=filters
-        )
+        follower = IncrementalFollower(LandedBlockSource(bp, tp, False), cfg, filters=filters)
         t0 = time.perf_counter()
         n = follower.catch_up()
         elapsed = time.perf_counter() - t0
